@@ -70,7 +70,8 @@ object GraftSession {
     // NDV stats), and a pre-aggregate keyed on a unique column reduces
     // nothing — declaring the PKs lets the rule decline those provably
     // useless fires (q12 measured 3.44→4.16 s before this existed,
-    // ProbeEagerRel). Users override per session; empty disables.
+    // PERF.md "Round-10: eager aggregation"). Users override per
+    // session; empty disables.
     .config("spark.graft.eagerAggregation.uniqueKeys",
       "orders.o_orderkey,customer.c_custkey,part.p_partkey," +
         "supplier.s_suppkey,nation.n_nationkey,region.r_regionkey," +

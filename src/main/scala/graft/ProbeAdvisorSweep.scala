@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
   * 17-query q* suite to LayoutAdvisor as its corpus, stage exactly what
   * it advises, redirect the engine's table resolution at the staged
   * layouts (Tables.redirect — zero query changes), and run all 17 over
-  * them. This replaces the per-shape hand-staged probes (ProbeBucketedJoin,
-  * ProbeCustLayout) with the product path a user would actually run:
+  * them. This replaces the per-shape hand-staged layouts (PERF.md
+  * "Round-8: layout experiments" and "Round-9: the sorted co-located
+  * layout") with the product path a user would actually run:
   * advise(corpus) → stage → query.
   *
   * Staging is one-time: a fresh JVM re-ATTACHES the already-written

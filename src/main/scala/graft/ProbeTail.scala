@@ -20,6 +20,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   *   - `post`   — last job end → timed end: noop commit + action
   *                teardown.
   *
+  * Kept as the reference that `perfbench/probetail_check.py` checks the
+  * benchmark tracer's per-query split against.
+  *
   * Usage: runMain graft.ProbeTail [names] [sfDir] [reps]
   */
 object ProbeTail {

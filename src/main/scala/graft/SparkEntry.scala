@@ -2327,9 +2327,10 @@ object SparkEntry {
     },
     "join_bucketed_fact" -> { (s, d) =>
       // co-located FACT⋈FACT join (q9/q12's named blocker was the
-      // orderkey exchange of BOTH sides — ProbeRel measured blooms and
-      // pre-aggregation strictly worse): lineitem AND orders bucketed
-      // on the order key at write time, dims broadcast onto the
+      // orderkey exchange of BOTH sides — PERF.md "Round-8: layout
+      // experiments" measured blooms and pre-aggregation strictly
+      // worse): lineitem AND orders bucketed on the order key at write
+      // time, dims broadcast onto the
       // bucketed scan (preserving its distribution), so the line⋈order
       // join plans with NO exchange. Measured at x200: q12-shape
       // 3.35→1.88 s, q9-shape 5.72→2.83 s (PERF.md). PlanShapeSpec
@@ -2441,9 +2442,10 @@ object SparkEntry {
       // old single-projection form referenced `toks` three times
       // (detok, and size twice) and Catalyst inlined the BpeEncode call
       // into every use — the gate measured 3× the encode cost (31.8 vs
-      // 11.4 s at x200, ProbeBpe decomposition). Multi-referenced
-      // non-cheap aliases survive CollapseProject (SPARK-36718), so
-      // each stage below evaluates its expensive column exactly once.
+      // 11.4 s at x200; PERF.md "Round-8: regression scorecard").
+      // Multi-referenced non-cheap aliases survive CollapseProject
+      // (SPARK-36718), so each stage below evaluates its expensive
+      // column exactly once.
       val nWords = size(filter(split(col("text"), " "), w => length(w) > 0))
       // NULL text: concat_ws would mask it to '' (oracle says NULL) and a
       // coalesce-to-true would silently pass the bound on the one row

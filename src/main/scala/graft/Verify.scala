@@ -28,13 +28,26 @@ object Verify {
         org.apache.spark.sql.functions.col(f.name).cast(swap(f.dataType))))
   }
 
+  /** Usage: runMain graft.Verify <sfDir> <outDir> [name,name,...]
+    * A name list dumps only those queries and their oracle SQL, so
+    * `scripts/check.py` compares just the queries under iteration; an
+    * unknown name fails before Spark starts. */
   def main(args: Array[String]): Unit = {
-    require(args.length == 2, "usage: Verify <sfDir> <outDir>")
-    val Array(sfDir, outDir) = args
+    require(args.length == 2 || args.length == 3,
+      "usage: Verify <sfDir> <outDir> [name,name,...]")
+    val sfDir = args(0)
+    val outDir = args(1)
+    val only = args.lift(2).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    only.foreach { names =>
+      require(names.nonEmpty, "empty query list")
+      val unknown = names.filterNot(SparkEntry.queries.contains)
+      require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    }
+    def wanted(name: String): Boolean = only.forall(_.contains(name))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.local(cpus)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    SparkEntry.queries.filter(kv => wanted(kv._1)).foreach { case (name, fn) =>
       try naiveTs(fn(spark, sfDir)).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -44,7 +57,7 @@ object Verify {
       // otherwise slows the tail of the 170+ query run
       GraftSession.clearSessionState(spark)
     }
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter(kv => wanted(kv._1))
       .map { case (k, v) => s"${JsonOut.q(k)}: ${JsonOut.q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -51,7 +51,7 @@ object Graph {
     // The equivalent self-join formulation costs two extra full
     // shuffles of the (basket, item) relation (distinct + join),
     // measured 1.3× slower end-to-end at x200.
-    // CANONICAL-HALF dedup (round-12, ProbePageRank): pairs are
+    // CANONICAL-HALF dedup (PERF.md "Round-12: graph_pagerank"): pairs are
     // symmetric by construction, so distinct runs on the (src < dst)
     // half ONLY — half the rows through the dominant exchange — and the
     // mirror is re-emitted map-side after. Measured at x200: 21.2 s

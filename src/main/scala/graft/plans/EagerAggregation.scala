@@ -91,10 +91,11 @@ object EagerAggregation extends Rule[LogicalPlan] with PredicateHelper {
     * statistics exist), and a pre-aggregate whose keys contain a unique
     * key of its table reduces NOTHING — every group is a singleton, so
     * the fire is pure cost (measured: q12's orders-by-o_orderkey
-    * pre-agg, 3.44 → 4.16 s at x200, ProbeEagerRel). This conf is the
-    * informational-PK surface a real catalog would provide (ANSI
-    * RELY-style): declaring `orders.o_orderkey` tells the rule that
-    * grouping orders by o_orderkey cannot reduce, so both arms decline.
+    * pre-agg, 3.44 → 4.16 s at x200, PERF.md "Round-10: eager
+    * aggregation"). This conf is the informational-PK surface a real
+    * catalog would provide (ANSI RELY-style): declaring
+    * `orders.o_orderkey` tells the rule that grouping orders by
+    * o_orderkey cannot reduce, so both arms decline.
     * A declared table matches exactly, or as the base of an advised
     * layout name (`adv_<kind>_<table>[_suffix]`) so staged projections
     * inherit their base table's constraints — NOT by bare substring,
@@ -114,9 +115,9 @@ object EagerAggregation extends Rule[LogicalPlan] with PredicateHelper {
     * ≈unique on it (a superset of a unique key is still unique).
     * MEASURED first — when a [[TableStats]] record exists for the
     * leaf's identity (read path or catalog table name), NDV ≥
-    * factor × rowCount blocks; the declared-PK conf is the no-stats
-    * fallback and user override. Multi-leaf subtrees (joins) never
-    * block — a join output has no uniqueness either way. */
+    * 0.9 × rowCount blocks (`Stats.uniqueish`); the declared-PK conf
+    * is the no-stats fallback and user override. Multi-leaf subtrees
+    * (joins) never block — a join output has no uniqueness either way. */
   private def uniqueKeyBlocks(side: LogicalPlan, keys: Seq[Attribute]): Boolean = {
     side.collectLeaves() match {
       case Seq(lr: org.apache.spark.sql.execution.datasources.LogicalRelation) =>
@@ -128,8 +129,6 @@ object EagerAggregation extends Rule[LogicalPlan] with PredicateHelper {
             case _ => Nil
           })
         val wh = conf.getConfString("spark.sql.warehouse.dir", "")
-        val factor = conf.getConfString(
-          "spark.graft.stats.uniqueishFactor", "0.9").toDouble
         // freshness (round-12): a measurement recorded over DIFFERENT
         // base files than the live leaf is ignored — the grown table's
         // uniqueness may have flipped either way; fall back to the
@@ -147,7 +146,7 @@ object EagerAggregation extends Rule[LogicalPlan] with PredicateHelper {
           case Some(st) if keyNames.exists(c => st.ndv.contains(c)) =>
             // measurement decides both ways: a measured NON-unique key
             // is allowed to fire even if the conf would have blocked it
-            keyNames.exists(c => st.uniqueish(c, factor))
+            keyNames.exists(c => st.uniqueish(c))
           case _ =>
             val declared = declaredUnique
             if (declared.isEmpty) return false

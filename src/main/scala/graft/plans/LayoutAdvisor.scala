@@ -319,9 +319,10 @@ object LayoutAdvisor {
   /** Multi-projection advice: up to `perTable` bucketed projections
     * PER TABLE, one per hot key (the column-store projection idea —
     * a fact table queried by order key AND by customer key carries
-    * one sorted co-located projection per class; ProbeCustLayout
-    * measured the custkey class at 2× beside the orderkey class's
-    * wins). Differences from [[advise]], deliberately:
+    * one sorted co-located projection per class; PERF.md "Round-9:
+    * the sorted co-located layout re-runs the whole relational probe
+    * set" measured the custkey class at 2× beside the orderkey
+    * class's wins). Differences from [[advise]], deliberately:
     *
     *  - columns are attributed PER KEY — a projection carries the
     *    pruned union of the queries that hit ITS key, not everything

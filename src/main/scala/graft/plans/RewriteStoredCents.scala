@@ -17,7 +17,8 @@ import org.apache.spark.sql.types.LongType
   * stores the cents at WRITE time removes both: this rule rewrites the
   * expression to the stored `<col>_cents` column, and Catalyst's column
   * pruning then drops the raw double from the scan entirely. Measured
-  * x200 (ProbeCentsLayout, same-window DuckDB pairs): q1 2.0×,
+  * x200 (PERF.md "Round-10: stored integer cents", same-window
+  * DuckDB pairs): q1 2.0×,
   * q6 1.48×, q14 1.57×, q15 1.50× — the class lands at/under 2× for
   * the first time.
   *

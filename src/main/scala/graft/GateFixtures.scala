@@ -386,7 +386,7 @@ private[graft] object GateFixtures {
     // fresh staging above and the memoized same-JVM re-entry
     val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     graft.plans.MaterializedJoins.metaFromSidecar(
-      name, java.nio.file.Paths.get(wh, name).toString)
+      name, java.nio.file.Paths.get(wh, name).toString)._1
   }
 
   /** MATERIALIZED AGGREGATE rollup for the layout_agg_* gates (round-12

@@ -421,7 +421,6 @@ object ProbeAdvisorSweep {
       // table properties live in the catalog the attach just
       // recreated, not in the files — re-mark or the rule stays off
       if (cents.nonEmpty) {
-        graft.plans.LayoutAdvisor.markDerived(spark, t, cents)
         // the decimal-idiom rewrite additionally needs the finiteness
         // proof; files staged before the audit existed self-heal with
         // one narrow scan of the base columns + a sidecar write
@@ -433,8 +432,7 @@ object ProbeAdvisorSweep {
             println(s"[advise] $t: finite audit self-healed (${f.mkString(",")})")
             f
           }
-        if (finite.nonEmpty)
-          graft.plans.LayoutAdvisor.markDerivedFinite(spark, t, finite)
+        graft.plans.LayoutAdvisor.markDerived(spark, t, cents, finite)
       }
       println(f"[advise] attached $t (${(System.nanoTime() - t0) / 1e9}%.1f s)")
     } else {

@@ -74,10 +74,4 @@ object BlockDedup {
       .select(col("block"), explode(col("__rows")).as("r"))
       .select(col("block"), col("r.ord").as(ordName), col("r.val").as(k))
   }
-
-  /** Exact row-level deduplication (the `tf.unique` analog in the lookup
-    * path, reference: embedding/sharding.py:186-187): distinct over key
-    * columns. Restore-by-join is the inverse gather. */
-  def distinctRows(df: DataFrame, keyCols: Seq[String]): DataFrame =
-    df.dropDuplicates(keyCols)
 }

@@ -112,16 +112,18 @@ object Freshness {
 
   /** Record `basePath` (+ live fingerprint) beside catalog table
     * `table`'s files. */
-  def writeBase(spark: SparkSession, table: String, basePath: String): Unit = {
+  def writeBase(spark: SparkSession, table: String, basePath: String): Unit =
+    writeSidecar(spark, table, BaseSidecar, s"base $basePath ${ofPath(spark, basePath)}\n")
+
+  /** Write `body` as sidecar file `file` beside catalog table `table`'s
+    * files — every staged layout's sidecars land through here. */
+  private[plans] def writeSidecar(spark: SparkSession, table: String,
+      file: String, body: String): Unit = {
     val loc = spark.sessionState.catalog.getTableMetadata(
       org.apache.spark.sql.catalyst.TableIdentifier(table)).location
-    writeBaseAt(java.nio.file.Paths.get(loc.getPath), basePath,
-      ofPath(spark, basePath))
+    java.nio.file.Files.write(java.nio.file.Paths.get(loc.getPath, file),
+      body.getBytes("UTF-8"))
   }
-
-  def writeBaseAt(dir: java.nio.file.Path, basePath: String, fp: String): Unit =
-    java.nio.file.Files.write(dir.resolve(BaseSidecar),
-      s"base $basePath $fp\n".getBytes("UTF-8"))
 
   /** The `(basePath, fingerprint)` a layout at `dir` records, if any. */
   def readBaseAt(dir: java.nio.file.Path): Option[(String, String)] = {

@@ -886,53 +886,18 @@ object LayoutAdvisor {
     * on `sortCol` when advised, and the table property set so the rule
     * (and only it) treats the stored columns as authoritative. */
   def stageDerived(spark: SparkSession, spec: DerivedSpec, name: String): Unit = {
-    import org.apache.spark.sql.functions.{col, isnan, lit, max, round, when}
+    import org.apache.spark.sql.functions.col
     val base = spark.read.parquet(spec.path.split(',').toIndexedSeq: _*)
-    // finiteness audit FIRST (one narrow scan): cents are staged ONLY
-    // for NaN/Inf-free columns. A non-finite money column cannot carry
-    // either rewrite exactly (the DECIMAL cast NULLs/errors on NaN
-    // while round(NaN*100)→long stores 0 — or throws outright under
-    // ANSI, which would also kill this write) — decline it loudly and
-    // stage the clean rest.
-    // decline a cents column whose derived name is ALREADY a real base
-    // column — withColumn would silently overwrite it (same loud-decline
-    // discipline as the denorm stager's cross-table disjointness check)
-    val (collided, srcCols) = spec.sourceCols
-      .partition(c => base.columns.map(_.toLowerCase).contains(c.toLowerCase + "_cents"))
-    if (collided.nonEmpty) System.err.println(s"[advise] stageDerived($name): " +
-      s"declining cents for ${collided.mkString(", ")} — the base table " +
-      "already has a column with the derived name")
-    val finite = {
-      val flags = srcCols.map(c => max(when(
-        isnan(col(c)) || col(c) === lit(Double.PositiveInfinity) ||
-          col(c) === lit(Double.NegativeInfinity), 1).otherwise(0)).as(c))
-      val row = base.select(flags: _*).collect()(0)
-      srcCols.zipWithIndex.collect {
-        case (c, i) if row.isNullAt(i) || row.getInt(i) == 0 => c
+    val finite = stageCents(spark, name, base, spec.sourceCols) { withCents =>
+      val shaped = spec.sortCol match {
+        case Some(sc) => withCents
+          .repartitionByRange(spec.numFiles, col(sc)).sortWithinPartitions(sc)
+        case None => withCents
       }
+      shaped.write.mode("overwrite").saveAsTable(name)
     }
-    val dropped = srcCols.filterNot(finite.contains)
-    if (dropped.nonEmpty) System.err.println(s"[advise] stageDerived($name): " +
-      s"declining non-finite money column(s) ${dropped.mkString(", ")} — " +
-      "no cents stored for them")
-    val withCents = finite.foldLeft(base)((df, c) =>
-      df.withColumn(c + "_cents", round(col(c) * 100).cast("long")))
-    val shaped = spec.sortCol match {
-      case Some(sc) => withCents
-        .repartitionByRange(spec.numFiles, col(sc)).sortWithinPartitions(sc)
-      case None => withCents
-    }
-    shaped.write.mode("overwrite").saveAsTable(name)
-    if (finite.nonEmpty) {
-      markDerived(spark, name, finite)
-      markDerivedFinite(spark, name, finite)
-    }
-    val loc = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(name)).location
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(loc.getPath, DerivedSidecar),
-      (derivedSidecarBody(spec) + s"finite ${finite.sorted.mkString(",")}\n")
-        .getBytes("UTF-8"))
+    Freshness.writeSidecar(spark, name, DerivedSidecar,
+      derivedSidecarBody(spec) + s"finite ${finite.sorted.mkString(",")}\n")
     Freshness.writeBase(spark, name, spec.path)
   }
 
@@ -956,14 +921,8 @@ object LayoutAdvisor {
     // what was STAGED is what the sidecar's finite line says (the
     // stage-time audit is physical — it was measured over these files,
     // and only verified-finite columns got cents stored at all)
-    val finite = body.split("\n").collectFirst {
-      case l if l.startsWith("finite ") => l.stripPrefix("finite ")
-        .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    }.getOrElse(Nil)
-    if (finite.nonEmpty) {
-      markDerived(spark, name, finite)
-      markDerivedFinite(spark, name, finite)
-    }
+    val finite = readFiniteSidecar(path).getOrElse(Nil)
+    if (finite.nonEmpty) markDerived(spark, name, finite, finite)
   }
 
   /** Stage a BUCKETED advice that also CARRIES stored cents columns —
@@ -976,31 +935,48 @@ object LayoutAdvisor {
     * a column the class never reads would be dead weight). */
   def stageWithDerived(spark: SparkSession, spec: LayoutSpec,
       derivedCols: Seq[String], name: String): Unit = {
-    import org.apache.spark.sql.functions.{col, round}
-    // same derived-name collision decline as stageDerived/stageDenorm
-    val (collided, keep0) = derivedCols.filter(spec.columns.contains)
-      .partition(c => spec.columns.map(_.toLowerCase).contains(c.toLowerCase + "_cents"))
-    if (collided.nonEmpty) System.err.println(s"[advise] stageWithDerived($name): " +
-      s"declining cents for ${collided.mkString(", ")} — a carried column " +
-      "already uses the derived name")
+    import org.apache.spark.sql.functions.col
     val base = spark.read.parquet(spec.path.split(',').toIndexedSeq: _*)
       .select(spec.columns.map(col): _*)
-    // same finiteness discipline as stageDerived: only NaN/Inf-free
-    // columns get cents (the decimal rewrite needs the proof, and ANSI
-    // would kill the write on a NaN anyway)
-    val keep = auditFinite(base, keep0)
-    if (keep != keep0) System.err.println(s"[advise] stageWithDerived($name): " +
-      s"declining non-finite money column(s) ${keep0.diff(keep).mkString(", ")}")
-    val withCents = keep.foldLeft(base)((df, c) =>
-      df.withColumn(c + "_cents", round(col(c) * 100).cast("long")))
-    graft.sources.TabularWriter.toBucketedTable(
-      withCents, name, spec.key, spec.buckets, sorted = true)
-    if (keep.nonEmpty) {
-      markDerived(spark, name, keep)
-      markDerivedFinite(spark, name, keep)
-      writeFiniteSidecar(spark, name, keep)
+    val keep = stageCents(spark, name, base,
+        derivedCols.filter(spec.columns.contains)) { withCents =>
+      graft.sources.TabularWriter.toBucketedTable(
+        withCents, name, spec.key, spec.buckets, sorted = true)
     }
+    if (keep.nonEmpty) writeFiniteSidecar(spark, name, keep)
     Freshness.writeBase(spark, name, spec.path)
+  }
+
+  /** The one stored-cents staging path every cents stager shares
+    * ([[stageDerived]], [[stageWithDerived]],
+    * [[MaterializedJoins.stageDenorm]]): of the money columns `cols` of
+    * `df`,
+    *  1. decline (loudly) any whose `<col>_cents` name `df` already
+    *     carries — withColumn would silently overwrite real data;
+    *  2. decline any the [[auditFinite]] NaN/±Inf audit rejects — a
+    *     non-finite column cannot carry either rewrite exactly (the
+    *     DECIMAL cast NULLs/errors on NaN while round(NaN*100)→long
+    *     stores 0, or throws under ANSI and kills the write);
+    *  3. add `<col>_cents = cast(round(col * 100) as bigint)` for the
+    *     rest and hand the widened frame to `write`, which creates
+    *     catalog table `name`;
+    *  4. mark `name` with both cents properties ([[markDerived]]).
+    * Returns the columns that got stored cents. */
+  private[plans] def stageCents(spark: SparkSession, name: String, df: DataFrame,
+      cols: Seq[String])(write: DataFrame => Unit): Seq[String] = {
+    import org.apache.spark.sql.functions.{col, round}
+    val present = df.columns.map(_.toLowerCase).toSet
+    val (collided, candidates) = cols.partition(c => present(c.toLowerCase + "_cents"))
+    if (collided.nonEmpty) System.err.println(s"[advise] $name: declining cents " +
+      s"for ${collided.mkString(", ")} — a column already uses the derived name")
+    val finite = auditFinite(df, candidates)
+    if (finite != candidates) System.err.println(s"[advise] $name: declining " +
+      s"non-finite money column(s) ${candidates.diff(finite).mkString(", ")} — " +
+      "no cents stored for them")
+    write(finite.foldLeft(df)((d, c) =>
+      d.withColumn(c + "_cents", round(col(c) * 100).cast("long"))))
+    if (finite.nonEmpty) markDerived(spark, name, finite, finite)
+    finite
   }
 
   /** The NaN/±Inf audit behind [[RewriteStoredCents.FiniteProperty]]:
@@ -1023,13 +999,9 @@ object LayoutAdvisor {
     * without re-scanning (sort/cols lines are `-`: the bucket sidecar
     * `_graft_buckets` owns the layout identity for these tables). */
   private[graft] def writeFiniteSidecar(spark: SparkSession, table: String,
-      finite: Seq[String]): Unit = {
-    val loc = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table)).location
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(loc.getPath, DerivedSidecar),
-      s"sort -\ncols -\nfinite ${finite.sorted.mkString(",")}\n".getBytes("UTF-8"))
-  }
+      finite: Seq[String]): Unit =
+    Freshness.writeSidecar(spark, table, DerivedSidecar,
+      s"sort -\ncols -\nfinite ${finite.sorted.mkString(",")}\n")
 
   /** Read a [[DerivedSidecar]]'s finite line at `path` (None when the
     * sidecar or line is absent — e.g. files staged before the audit
@@ -1044,19 +1016,17 @@ object LayoutAdvisor {
       }
   }
 
-  /** Set the [[RewriteStoredCents]] authority property on `table` —
-    * needed both at stage time and after a fresh-catalog re-`attach`
-    * (table properties live in the catalog, not the files). */
-  def markDerived(spark: SparkSession, table: String, sourceCols: Seq[String]): Unit =
+  /** Set both [[RewriteStoredCents]] properties on `table`: `cents`
+    * names the source columns whose stored `<col>_cents` the rule treats
+    * as authoritative, `finite` the subset whose stage-time finiteness
+    * audit passed ([[RewriteStoredCents.FiniteProperty]]). Needed both
+    * at stage time and after a fresh-catalog re-attach (table
+    * properties live in the catalog, not the files). */
+  def markDerived(spark: SparkSession, table: String, cents: Seq[String],
+      finite: Seq[String]): Unit =
     spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES " +
-      s"('${RewriteStoredCents.Property}' = '${sourceCols.mkString(",")}')")
-
-  /** Record the stage-time finiteness audit (see
-    * [[RewriteStoredCents.FiniteProperty]]). */
-  def markDerivedFinite(spark: SparkSession, table: String,
-      finiteCols: Seq[String]): Unit =
-    spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES " +
-      s"('${RewriteStoredCents.FiniteProperty}' = '${finiteCols.mkString(",")}')")
+      s"('${RewriteStoredCents.Property}' = '${cents.mkString(",")}', " +
+      s"'${RewriteStoredCents.FiniteProperty}' = '${finite.mkString(",")}')")
 
   /** One dim of a denormalized (pre-joined) advice: joined to
     * `parentTable` on `parentKey = dimKey`. */

@@ -97,7 +97,7 @@ import org.apache.spark.sql.types.LongType
   * like every staged layout: base fingerprints at stage time, verified
   * at attach and at every rewrite, loud decline on drift.
   */
-object MaterializedAggs {
+object MaterializedAggs extends LayoutRegistry {
 
   /** One staged measure: column `name` of the rollup holds `agg`
     * (aggregate-function SQL over the fact schema) evaluated per key.
@@ -113,42 +113,14 @@ object MaterializedAggs {
   case class Meta(catalogTable: String, fact: String, factPath: String,
       keys: Seq[String], measures: Seq[Measure], fingerprint: String = "")
 
-  private val registry =
-    new java.util.concurrent.ConcurrentHashMap[String, Meta]()
+  protected def tableOf(meta: Meta): String = meta.catalogTable
+  protected val flag = "spark.graft.materializedAgg.enabled"
 
-  def register(meta: Meta): Unit = registry.put(meta.catalogTable, meta)
-  def deregister(catalogTable: String): Unit = {
-    registry.remove(catalogTable)
+  /** Deregistering also drops the rewrite's parsed-measure cache. */
+  override def deregister(catalogTable: String): Unit = {
+    super.deregister(catalogTable)
     RewriteMaterializedAgg.invalidate(catalogTable)
   }
-  def clear(): Unit = { registry.clear(); RewriteMaterializedAgg.invalidateAll() }
-  def all: Seq[Meta] =
-    registry.values.toArray(Array.empty[Meta]).toSeq.sortBy(_.catalogTable)
-
-  /** Scoped registration for gate closures (see
-    * [[MaterializedJoins.withRegistered]] — same contract: force the
-    * optimization while the metas are live). */
-  def withRegistered(metas: Seq[Meta])(
-      build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    metas.foreach(register)
-    try {
-      val df = build
-      df.queryExecution.optimizedPlan
-      df
-    } finally metas.foreach(m => deregister(m.catalogTable))
-  }
-
-  /** True iff `df`'s optimized plan reads the rollup — the
-    * "did the rewrite fire" probe gates and specs pin on. */
-  def fired(df: org.apache.spark.sql.DataFrame, catalogTable: String): Boolean =
-    df.queryExecution.optimizedPlan.collectFirst {
-      case lr: LogicalRelation
-          if lr.catalogTable.exists(_.identifier.table == catalogTable) => lr
-    }.nonEmpty
-
-  private val Flag = "spark.graft.materializedAgg.enabled"
-  private[plans] def enabled(conf: org.apache.spark.sql.internal.SQLConf): Boolean =
-    conf.getConfString(Flag, "true") == "true"
 
   /** Sidecar written beside a staged rollup's files — everything a
     * fresh JVM needs to re-[[attachRollup]] without re-aggregating. */
@@ -180,7 +152,11 @@ object MaterializedAggs {
       }
   }
 
-  private def parseSidecar(catalogTable: String, path: String): Meta = {
+  /** Parse a staged rollup's sidecar at `path` into the [[Meta]] it
+    * records (no registration, no validation — the durable Meta form
+    * for same-JVM memoized fixtures; [[attachRollup]] adds the drift
+    * and freshness guards). */
+  def metaFromSidecar(catalogTable: String, path: String): Meta = {
     val sidecar = java.nio.file.Paths.get(path, RollupSidecar)
     require(java.nio.file.Files.exists(sidecar),
       s"rollup sidecar $sidecar missing — re-stage")
@@ -203,13 +179,6 @@ object MaterializedAggs {
       line("key").split(",").toSeq.filter(_.nonEmpty), measures, line("fp"))
   }
 
-  /** Parse a staged rollup's sidecar at `path` into the [[Meta]] it
-    * records (no registration, no validation — the durable Meta form
-    * for same-JVM memoized fixtures; [[attachRollup]] adds the drift
-    * and freshness guards). */
-  def metaFromSidecar(catalogTable: String, path: String): Meta =
-    parseSidecar(catalogTable, path)
-
   /** Stage `spec` as bucketed catalog table `name`: ONE aggregate over
     * the fact (`GROUP BY key` with every advised measure), written
     * bucketed+sorted on the key, base fingerprinted, stats measured
@@ -220,40 +189,27 @@ object MaterializedAggs {
     * aggregate over the fact and a previously registered overlapping
     * rollup must not serve it. */
   def stageRollup(spark: SparkSession, spec: LayoutAdvisor.RollupSpec,
-      name: String): Meta = {
+      name: String): Meta = withRuleOff(spark) {
     import org.apache.spark.sql.functions.{col, expr}
-    val saved = spark.conf.getOption(Flag)
-    spark.conf.set(Flag, "false")
-    try {
-      val fact = spark.read.parquet(spec.factPath.split(',').toIndexedSeq: _*)
-      val inventory = Freshness.entriesOfPath(spark, spec.factPath)
-      val fp = Freshness.ofEntries(inventory)
-      val aggs = spec.measures.map(m => expr(m.agg).as(m.name))
-      require(aggs.nonEmpty, s"stageRollup($name): no measures advised")
-      require(spec.keys.nonEmpty, s"stageRollup($name): no keys advised")
-      val rolled = fact.groupBy(spec.keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
-      graft.sources.TabularWriter.toBucketedTable(
-        rolled, name, spec.keys.head, spec.buckets, sorted = true)
-      // stats as product: rowCount + per-column NDV of the rollup keys
-      // (a single key is unique by construction — the measurement
-      // proves it to EagerAggregation; composite key columns measure
-      // low individually and claim nothing)
-      TableStats.analyze(spark, spark.table(name), name, spec.keys)
-      val meta = Meta(name, spec.fact, spec.factPath,
-        spec.keys.map(_.toLowerCase), spec.measures, fp)
-      val loc = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(name)).location
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(loc.getPath, RollupSidecar),
-        sidecarBody(meta, inventory).getBytes("UTF-8"))
-      register(meta)
-      meta
-    } finally {
-      saved match {
-        case Some(v) => spark.conf.set(Flag, v)
-        case None => spark.conf.unset(Flag)
-      }
-    }
+    val fact = spark.read.parquet(spec.factPath.split(',').toIndexedSeq: _*)
+    val inventory = Freshness.entriesOfPath(spark, spec.factPath)
+    val fp = Freshness.ofEntries(inventory)
+    val aggs = spec.measures.map(m => expr(m.agg).as(m.name))
+    require(aggs.nonEmpty, s"stageRollup($name): no measures advised")
+    require(spec.keys.nonEmpty, s"stageRollup($name): no keys advised")
+    val rolled = fact.groupBy(spec.keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+    graft.sources.TabularWriter.toBucketedTable(
+      rolled, name, spec.keys.head, spec.buckets, sorted = true)
+    // stats as product: rowCount + per-column NDV of the rollup keys
+    // (a single key is unique by construction — the measurement
+    // proves it to EagerAggregation; composite key columns measure
+    // low individually and claim nothing)
+    TableStats.analyze(spark, spark.table(name), name, spec.keys)
+    val meta = Meta(name, spec.fact, spec.factPath,
+      spec.keys.map(_.toLowerCase), spec.measures, fp)
+    Freshness.writeSidecar(spark, name, RollupSidecar, sidecarBody(meta, inventory))
+    register(meta)
+    meta
   }
 
   /** Fresh-JVM re-attach of an already-staged rollup at `path` as
@@ -264,7 +220,7 @@ object MaterializedAggs {
     * re-stage is the recovery. */
   def attachRollup(spark: SparkSession, spec: LayoutAdvisor.RollupSpec,
       name: String, path: String): Meta = {
-    val recorded = parseSidecar(name, path)
+    val recorded = metaFromSidecar(name, path)
     require(recorded.fact == spec.fact && recorded.factPath == spec.factPath &&
       recorded.keys == spec.keys.map(_.toLowerCase) &&
       recorded.measures.toSet == spec.measures.toSet,
@@ -303,23 +259,21 @@ object MaterializedAggs {
     * Meta; a no-op when the base is unchanged. */
   def refreshRollup(spark: SparkSession, meta: Meta): Meta = {
     import org.apache.spark.sql.functions.{col, expr, max, min, sum}
-    val saved = spark.conf.getOption(Flag)
-    spark.conf.set(Flag, "false")
-    try {
-      val ident = org.apache.spark.sql.catalyst.TableIdentifier(meta.catalogTable)
-      val cat = spark.sessionState.catalog.getTableMetadata(ident)
-      val dir = java.nio.file.Paths.get(cat.location.getPath)
-      val staged = stagedInventory(dir)
-      require(staged.nonEmpty,
-        s"refreshRollup(${meta.catalogTable}): sidecar records no file " +
-          "inventory (pre-refresh staging) — re-stage")
-      val live = Freshness.entriesOfPath(spark, meta.factPath)
-      if (staged.toSet == live.toSet) return meta // fresh — no-op
-      val missing = staged.toSet -- live.toSet
-      require(missing.isEmpty,
-        s"refreshRollup(${meta.catalogTable}): base files changed or " +
-          s"disappeared (${missing.take(3).mkString("; ")}) — growth is not " +
-          "append-only, re-stage")
+    val ident = org.apache.spark.sql.catalyst.TableIdentifier(meta.catalogTable)
+    val cat = spark.sessionState.catalog.getTableMetadata(ident)
+    val staged = stagedInventory(java.nio.file.Paths.get(cat.location.getPath))
+    require(staged.nonEmpty,
+      s"refreshRollup(${meta.catalogTable}): sidecar records no file " +
+        "inventory (pre-refresh staging) — re-stage")
+    val live = Freshness.entriesOfPath(spark, meta.factPath)
+    if (staged.toSet == live.toSet) return meta // fresh — no-op
+    val missing = staged.toSet -- live.toSet
+    require(missing.isEmpty,
+      s"refreshRollup(${meta.catalogTable}): base files changed or " +
+        s"disappeared (${missing.take(3).mkString("; ")}) — growth is not " +
+        "append-only, re-stage")
+    // the merge plans below must not be served by a registered rollup
+    withRuleOff(spark) {
       val factDf = spark.read.parquet(meta.factPath.split(',').toIndexedSeq: _*)
       val kinds: Seq[(Measure, String)] = meta.measures.map { ms =>
         ms -> mergeKind(factDf, ms.agg).getOrElse(
@@ -371,20 +325,13 @@ object MaterializedAggs {
       spark.sql(s"ALTER TABLE `$tmp` RENAME TO `${meta.catalogTable}`")
       spark.sql(s"DROP TABLE `$aside`")
       val fresh = meta.copy(fingerprint = Freshness.ofEntries(live))
-      val newLoc = spark.sessionState.catalog.getTableMetadata(ident).location
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(newLoc.getPath, RollupSidecar),
-        sidecarBody(fresh, live).getBytes("UTF-8"))
+      Freshness.writeSidecar(spark, meta.catalogTable, RollupSidecar,
+        sidecarBody(fresh, live))
       TableStats.analyze(spark, spark.table(meta.catalogTable),
         meta.catalogTable, meta.keys)
       RewriteMaterializedAgg.invalidate(meta.catalogTable)
       register(fresh)
       fresh
-    } finally {
-      saved match {
-        case Some(v) => spark.conf.set(Flag, v)
-        case None => spark.conf.unset(Flag)
-      }
     }
   }
 
@@ -532,7 +479,6 @@ object RewriteMaterializedAgg extends Rule[LogicalPlan] with PredicateHelper {
 
   private[plans] def invalidate(catalogTable: String): Unit =
     cache.remove(catalogTable)
-  private[plans] def invalidateAll(): Unit = cache.clear()
 
   /** True while a measure parse is in flight on this thread. The parse
     * itself runs optimizer passes (a GLOBAL aggregate per measure, a

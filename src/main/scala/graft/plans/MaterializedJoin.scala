@@ -68,7 +68,7 @@ import org.apache.spark.sql.types.LongType
   * disk (dim columns repeat per fact row — RLE/dictionary encoding
   * absorbs most of it), paid once at stage time.
   */
-object MaterializedJoins {
+object MaterializedJoins extends LayoutRegistry {
 
   /** One dim of a staged denorm: joined to `parentTable` (the fact or
     * an earlier dim) on `parentKey = dimKey`. `lossless` = stage-time
@@ -93,14 +93,208 @@ object MaterializedJoins {
       dims: Seq[DimMeta], columns: Set[String], cents: Set[String],
       finite: Set[String], fingerprints: Map[String, String] = Map.empty)
 
+  protected def tableOf(meta: Meta): String = meta.catalogTable
+  protected val flag = "spark.graft.materializedJoin.enabled"
+
+  /** The (comma-joined) root path of `df`'s single file scan — the
+    * identity [[Meta.factPath]]/[[DimMeta.path]] match against. */
+  def leafPath(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.optimizedPlan.collectFirst {
+      case lr: LogicalRelation if lr.relation.isInstanceOf[HadoopFsRelation] =>
+        lr.relation.asInstanceOf[HadoopFsRelation]
+          .location.rootPaths.map(_.toString).mkString(",")
+    }.getOrElse(sys.error("MaterializedJoins.leafPath: no file scan in plan"))
+
+  /** Sidecar written beside a staged denorm's files: everything a fresh
+    * JVM needs to re-[[attachDenorm]] and re-[[register]] without
+    * re-running the join or the audits. */
+  val DenormSidecar = "_graft_denorm"
+
+  private def sidecarBody(spec: LayoutAdvisor.DenormSpec, meta: Meta): String = {
+    val dimLines = meta.dims.map(d =>
+      s"dim ${d.table} ${d.path} ${d.parentTable} ${d.parentKey} ${d.dimKey} ${d.lossless}")
+    val fpLines = meta.fingerprints.toSeq.sortBy(_._1).map { case (p, h) => s"fp $p $h" }
+    (Seq(
+      s"fact ${spec.fact} ${spec.factPath}",
+      s"bucket ${spec.bucketKey.getOrElse("-")} ${spec.buckets}",
+      s"columns ${meta.columns.toSeq.sorted.mkString(",")}",
+      s"cents ${meta.cents.toSeq.sorted.mkString(",")}",
+      s"finite ${meta.finite.toSeq.sorted.mkString(",")}") ++ dimLines ++ fpLines)
+      .mkString("", "\n", "\n")
+  }
+
+  /** Stage `spec` as bucketed catalog table `name`: run the inner
+    * equi-join chain over the base paths, carry exactly the advised
+    * columns plus stored `<col>_cents` for the advised money columns
+    * ([[LayoutAdvisor.stageCents]] — the same declines and audit as
+    * every cents stager), bucket+sort on the advised key,
+    * and AUDIT each dim's losslessness:
+    *  - unique: max per-key multiplicity of `dimKey` in the dim is 1;
+    *  - total: zero parent rows whose `parentKey` misses the dim
+    *    (an anti-join count — NULL foreign keys can never match, so
+    *    they fail totality and correctly mark the dim lossy).
+    * Both audits are one aggregate each over narrow columns. A lossy
+    * dim stays usable for queries that join it themselves; only
+    * subset rewrites need the proof. Returns the registered [[Meta]].
+    *
+    * The rewrite rule is DISABLED for the duration of the staging
+    * write — the staging query is itself a fact⋈dims join and a
+    * previously registered overlapping denorm must not serve it. */
+  def stageDenorm(spark: SparkSession, spec: LayoutAdvisor.DenormSpec,
+      name: String): Meta = withRuleOff(spark) {
+    import org.apache.spark.sql.functions.{col, count, lit, max}
+    def read(path: String) = spark.read.parquet(path.split(',').toIndexedSeq: _*)
+    val tables: Map[String, org.apache.spark.sql.DataFrame] =
+      (Seq(spec.fact -> spec.factPath) ++ spec.dims.map(d => d.table -> d.path))
+        .map { case (t, p) => t -> read(p) }.toMap
+    // column-name disjointness: the rewrite maps attributes by NAME,
+    // so a collision across members would be ambiguous — decline loudly
+    val allCols = tables.toSeq.sortBy(_._1).flatMap { case (t, df) =>
+      df.columns.map(c => c.toLowerCase -> t)
+    }
+    val dup = allCols.groupBy(_._1).filter(_._2.map(_._2).distinct.size > 1)
+    require(dup.isEmpty, s"stageDenorm($name): column name(s) " +
+      s"${dup.keys.toSeq.sorted.mkString(", ")} appear in several member tables")
+
+    // audits per dim (narrow scans, before the wide write)
+    val audited = spec.dims.map { d =>
+      val dim = tables(d.table)
+      val parent = tables(d.parentTable)
+      val unique = dim.groupBy(col(d.dimKey)).agg(count(lit(1)).as("n"))
+        .agg(max(col("n")).as("m")).collect()(0) match {
+        case r if r.isNullAt(0) => true // empty dim is vacuously unique
+        case r => r.getLong(0) <= 1L
+      }
+      val total = parent.select(col(d.parentKey))
+        .join(dim.select(col(d.dimKey)),
+          col(d.parentKey) === col(d.dimKey), "left_anti")
+        .limit(1).count() == 0L
+      DimMeta(d.table, d.path, d.parentTable, d.parentKey, d.dimKey,
+        lossless = unique && total)
+    }
+
+    val joined = spec.dims.foldLeft(tables(spec.fact)) { (acc, d) =>
+      acc.join(tables(d.table), col(d.parentKey) === col(d.dimKey), "inner")
+    }
+    val carried = spec.columns.map(_.toLowerCase)
+    val finite = LayoutAdvisor.stageCents(spark, name,
+        joined.select(carried.map(col): _*),
+        spec.centsCols.map(_.toLowerCase).filter(carried.contains)) { withCents =>
+      spec.bucketKey match {
+        case Some(k) =>
+          graft.sources.TabularWriter.toBucketedTable(
+            withCents, name, k, spec.buckets, sorted = true)
+        case None => withCents.write.mode("overwrite").saveAsTable(name)
+      }
+    }
+    // freshness: fingerprint every member's base files AS STAGED —
+    // the audits and the join itself are only valid for these bytes
+    val fps = (Seq(spec.factPath) ++ spec.dims.map(_.path)).distinct
+      .map(p => p -> Freshness.ofPath(spark, p)).toMap
+    val meta = Meta(name, spec.fact, spec.factPath, audited,
+      carried.toSet, finite.toSet, finite.toSet, fps)
+    Freshness.writeSidecar(spark, name, DenormSidecar, sidecarBody(spec, meta))
+    register(meta)
+    meta
+  }
+
+  /** Parse a staged denorm's sidecar at `path` into the [[Meta]] it
+    * records, plus the bucket key it was staged with (`-` = none). No
+    * registration, no validation — [[attachDenorm]] adds the
+    * advice-drift and freshness guards. */
+  def metaFromSidecar(catalogTable: String, path: String): (Meta, String) = {
+    def bad(what: String) = new IllegalArgumentException(
+      s"$catalogTable: denorm sidecar $what — re-stage")
+    val sidecar = java.nio.file.Paths.get(path, DenormSidecar)
+    if (!java.nio.file.Files.exists(sidecar)) throw bad(s"$sidecar missing")
+    val lines = new String(java.nio.file.Files.readAllBytes(sidecar), "UTF-8")
+      .split("\n").toSeq
+    def line(prefix: String): String = lines.collectFirst {
+      case l if l.startsWith(prefix + " ") => l.stripPrefix(prefix + " ")
+    }.getOrElse(throw bad(s"missing '$prefix' line"))
+    def csv(s: String): Set[String] =
+      s.split(",").map(_.trim).filter(_.nonEmpty).toSet
+    def fields(prefix: String): Seq[Array[String]] = lines
+      .filter(_.startsWith(prefix + " ")).map(_.stripPrefix(prefix + " ").split("\\s+"))
+    val factLine = line("fact").split("\\s+")
+    if (factLine.length != 2) throw bad(s"malformed fact line '${line("fact")}'")
+    val dims = fields("dim").map {
+      case Array(t, p, pt, pk, dk, ll) => DimMeta(t, p, pt, pk, dk, ll.toBoolean)
+      case other => throw bad(s"malformed dim line '${other.mkString(" ")}'")
+    }
+    val fps = fields("fp").map {
+      case Array(p, h) => p -> h
+      case other => throw bad(s"malformed fp line '${other.mkString(" ")}'")
+    }.toMap
+    (Meta(catalogTable, factLine(0), factLine(1), dims, csv(line("columns")),
+      csv(line("cents")), csv(line("finite")), fps),
+      line("bucket").split("\\s+")(0))
+  }
+
+  /** Fresh-JVM re-attach of already-staged denorm files at `path` as
+    * catalog table `name` (the local stand-in for a persistent
+    * metastore): the sidecar must prove the files were staged from the
+    * SAME spec — fact path, dim chain and bucket key — or we re-stage
+    * rather than silently serve a drifted projection. Returns the
+    * re-registered [[Meta]]. */
+  def attachDenorm(spark: SparkSession, spec: LayoutAdvisor.DenormSpec,
+      name: String, path: String): Meta = {
+    val (meta, bucketKey) = metaFromSidecar(name, path)
+    require(meta.fact == spec.fact && meta.factPath == spec.factPath &&
+      bucketKey == spec.bucketKey.getOrElse("-") &&
+      meta.dims.map(d => (d.table, d.path, d.parentTable, d.parentKey, d.dimKey)) ==
+        spec.dims.map(d => (d.table, d.path, d.parentTable, d.parentKey, d.dimKey)),
+      s"attachDenorm($name): sidecar does not match this session's advice — re-stage")
+    // FRESHNESS: every member's base files must still be the bytes the
+    // layout (and its lossless audits) were staged from — a base table
+    // that grew since staging would be silently served pre-append rows.
+    // ALL members are checked here (the rewrite can only re-check the
+    // ones present in a query; an omitted dim's audit rots invisibly).
+    (Seq(spec.factPath) ++ spec.dims.map(_.path)).distinct.foreach { p =>
+      meta.fingerprints.get(p).foreach { staged =>
+        val live = Freshness.ofPath(spark, p)
+        require(live == staged,
+          s"attachDenorm($name): base data at $p drifted since staging " +
+            s"(staged=$staged live=$live) — re-stage")
+      }
+    }
+    spec.bucketKey match {
+      case Some(k) =>
+        graft.sources.TabularWriter.attach(spark, name, path, k, spec.buckets)
+      case None =>
+        val schema = spark.read.parquet(path).schema.toDDL
+        spark.sql(s"CREATE TABLE `$name` ($schema) USING parquet LOCATION '$path'")
+    }
+    if (meta.finite.nonEmpty) {
+      val finite = meta.finite.toSeq.sorted
+      LayoutAdvisor.markDerived(spark, name, finite, finite)
+    }
+    register(meta)
+    meta
+  }
+}
+
+/** What every staged-layout kind ([[MaterializedJoins]],
+  * [[MaterializedAggs]]) shares: the process-wide registry of the
+  * tables its rewrite may serve, keyed by catalog table, and the
+  * session flag that switches that rewrite off. */
+private[plans] trait LayoutRegistry {
+  type Meta
+  protected def tableOf(meta: Meta): String
+  protected def flag: String
+
   private val registry =
     new java.util.concurrent.ConcurrentHashMap[String, Meta]()
 
-  def register(meta: Meta): Unit = registry.put(meta.catalogTable, meta)
+  def register(meta: Meta): Unit = registry.put(tableOf(meta), meta)
   def deregister(catalogTable: String): Unit = registry.remove(catalogTable)
-  def clear(): Unit = registry.clear()
-  def all: Seq[Meta] =
-    registry.values.toArray(Array.empty[Meta]).toSeq.sortBy(_.catalogTable)
+  def all: Seq[Meta] = {
+    import scala.jdk.CollectionConverters._
+    registry.values.asScala.toSeq.sortBy(tableOf)
+  }
+
+  private[plans] def enabled(conf: org.apache.spark.sql.internal.SQLConf): Boolean =
+    conf.getConfString(flag, "true") == "true"
 
   /** Scoped registration for gate closures: register, build (and
     * FORCE-OPTIMIZE — the plan must be rewritten while the metas are
@@ -115,270 +309,28 @@ object MaterializedJoins {
       val df = build
       df.queryExecution.optimizedPlan // force while registered
       df
-    } finally metas.foreach(m => deregister(m.catalogTable))
+    } finally metas.foreach(m => deregister(tableOf(m)))
   }
 
-  /** The (comma-joined) root path of `df`'s single file scan — the
-    * identity [[Meta.factPath]]/[[DimMeta.path]] match against. */
-  def leafPath(df: org.apache.spark.sql.DataFrame): String =
-    df.queryExecution.optimizedPlan.collectFirst {
-      case lr: LogicalRelation if lr.relation.isInstanceOf[HadoopFsRelation] =>
-        lr.relation.asInstanceOf[HadoopFsRelation]
-          .location.rootPaths.map(_.toString).mkString(",")
-    }.getOrElse(sys.error("MaterializedJoins.leafPath: no file scan in plan"))
-
-  /** True iff `df`'s optimized plan reads the materialized table —
-    * the "did the rewrite fire" probe gates and specs pin on. */
+  /** True iff `df`'s optimized plan reads catalog table `catalogTable`
+    * — the "did the rewrite fire" probe gates and specs pin on. */
   def fired(df: org.apache.spark.sql.DataFrame, catalogTable: String): Boolean =
     df.queryExecution.optimizedPlan.collectFirst {
       case lr: LogicalRelation
           if lr.catalogTable.exists(_.identifier.table == catalogTable) => lr
     }.nonEmpty
 
-  private val Flag = "spark.graft.materializedJoin.enabled"
-  private[plans] def enabled(conf: org.apache.spark.sql.internal.SQLConf): Boolean =
-    conf.getConfString(Flag, "true") == "true"
-
-  /** Conf for the `dim ⋉ fact` SEMI-SUBSUMPTION arm — default OFF.
-    * Measured at x200 (binding protocol, round 11): the subsumed q4
-    * plan is the ideal shape (one bucketed scan, zero joins,
-    * exchange-free dedup aggregate) yet runs 3.7 s vs ~3.3 s for the
-    * routed co-located pair and ~3.6 s flat — the dim's columns decode
-    * at FACT grain (120M o_orderpriority strings instead of 30M), and
-    * that buys back everything the removed exchange saved. The arm
-    * stays correct and tested; enable it per session on topologies
-    * where the probe-side exchange dominates decode (wide clusters,
-    * remote storage), the same measured-decline discipline as
-    * routeAll's tiering. */
-  private[plans] val SemiFlag = "spark.graft.materializedJoin.subsumeSemi"
-  private[plans] def semiEnabled(conf: org.apache.spark.sql.internal.SQLConf): Boolean =
-    conf.getConfString(SemiFlag, "false") == "true"
-
-  /** Sidecar written beside a staged denorm's files: everything a fresh
-    * JVM needs to re-[[attachDenorm]] and re-[[register]] without
-    * re-running the join or the audits. */
-  val DenormSidecar = "_graft_denorm"
-
-  private def sidecarBody(spec: LayoutAdvisor.DenormSpec, dims: Seq[DimMeta],
-      columns: Seq[String], cents: Seq[String], finite: Seq[String],
-      fingerprints: Map[String, String]): String = {
-    val dimLines = dims.map(d =>
-      s"dim ${d.table} ${d.path} ${d.parentTable} ${d.parentKey} ${d.dimKey} ${d.lossless}")
-    val fpLines = fingerprints.toSeq.sortBy(_._1).map { case (p, h) => s"fp $p $h" }
-    (Seq(
-      s"fact ${spec.fact} ${spec.factPath}",
-      s"bucket ${spec.bucketKey.getOrElse("-")} ${spec.buckets}",
-      s"columns ${columns.sorted.mkString(",")}",
-      s"cents ${cents.sorted.mkString(",")}",
-      s"finite ${finite.sorted.mkString(",")}") ++ dimLines ++ fpLines)
-      .mkString("", "\n", "\n")
-  }
-
-  private def parseFingerprints(lines: Seq[String]): Map[String, String] =
-    lines.filter(_.startsWith("fp ")).map { l =>
-      l.stripPrefix("fp ").split("\\s+") match {
-        case Array(p, h) => p -> h
-        case other => throw new IllegalArgumentException(
-          s"malformed fp line '${other.mkString(" ")}'")
-      }
-    }.toMap
-
-  /** Stage `spec` as bucketed catalog table `name`: run the inner
-    * equi-join chain over the base paths, carry exactly the advised
-    * columns plus stored `<col>_cents` for the advised money columns
-    * (finiteness-audited, same discipline as
-    * [[LayoutAdvisor.stageDerived]]), bucket+sort on the advised key,
-    * and AUDIT each dim's losslessness:
-    *  - unique: max per-key multiplicity of `dimKey` in the dim is 1;
-    *  - total: zero parent rows whose `parentKey` misses the dim
-    *    (an anti-join count — NULL foreign keys can never match, so
-    *    they fail totality and correctly mark the dim lossy).
-    * Both audits are one aggregate each over narrow columns. A lossy
-    * dim stays usable for queries that join it themselves; only
-    * subset rewrites need the proof. Returns the registered [[Meta]].
-    *
-    * The rewrite rule is DISABLED for the duration of the staging
-    * write — the staging query is itself a fact⋈dims join and a
-    * previously registered overlapping denorm must not serve it. */
-  def stageDenorm(spark: SparkSession, spec: LayoutAdvisor.DenormSpec,
-      name: String): Meta = {
-    import org.apache.spark.sql.functions.{col, countDistinct, count, lit, max, round}
-    val saved = spark.conf.getOption(Flag)
-    spark.conf.set(Flag, "false")
-    try {
-      def read(path: String) = spark.read.parquet(path.split(',').toIndexedSeq: _*)
-      val tables: Map[String, org.apache.spark.sql.DataFrame] =
-        (Seq(spec.fact -> spec.factPath) ++ spec.dims.map(d => d.table -> d.path))
-          .map { case (t, p) => t -> read(p) }.toMap
-      // column-name disjointness: the rewrite maps attributes by NAME,
-      // so a collision across members would be ambiguous — decline loudly
-      val allCols = tables.toSeq.sortBy(_._1).flatMap { case (t, df) =>
-        df.columns.map(c => c.toLowerCase -> t)
-      }
-      val dup = allCols.groupBy(_._1).filter(_._2.map(_._2).distinct.size > 1)
-      require(dup.isEmpty, s"stageDenorm($name): column name(s) " +
-        s"${dup.keys.toSeq.sorted.mkString(", ")} appear in several member tables")
-
-      // audits per dim (narrow scans, before the wide write)
-      val audited = spec.dims.map { d =>
-        val dim = tables(d.table)
-        val parent = tables(d.parentTable)
-        val unique = dim.groupBy(col(d.dimKey)).agg(count(lit(1)).as("n"))
-          .agg(max(col("n")).as("m")).collect()(0) match {
-          case r if r.isNullAt(0) => true // empty dim is vacuously unique
-          case r => r.getLong(0) <= 1L
-        }
-        val total = parent.select(col(d.parentKey))
-          .join(dim.select(col(d.dimKey)),
-            col(d.parentKey) === col(d.dimKey), "left_anti")
-          .limit(1).count() == 0L
-        DimMeta(d.table, d.path, d.parentTable, d.parentKey, d.dimKey,
-          lossless = unique && total)
-      }
-
-      val joined = spec.dims.foldLeft(tables(spec.fact)) { (acc, d) =>
-        acc.join(tables(d.table), col(d.parentKey) === col(d.dimKey), "inner")
-      }
-      val carried = spec.columns.map(_.toLowerCase)
-      val projected = joined.select(carried.map(col): _*)
-      // a member table that ALREADY has a literal `<col>_cents` column
-      // would be silently overwritten by the derived withColumn below —
-      // decline that cents column loudly instead (the stored values
-      // must never shadow real data)
-      val (collided, cents1) = spec.centsCols.map(_.toLowerCase)
-        .filter(carried.contains).partition(c => carried.contains(c + "_cents"))
-      if (collided.nonEmpty) System.err.println(s"[advise] stageDenorm($name): " +
-        s"declining cents for ${collided.mkString(", ")} — a carried column " +
-        "already uses the derived name")
-      val cents0 = cents1
-      val finite = LayoutAdvisor.auditFinite(projected, cents0)
-      if (finite != cents0) System.err.println(s"[advise] stageDenorm($name): " +
-        s"declining non-finite money column(s) ${cents0.diff(finite).mkString(", ")}")
-      val withCents = finite.foldLeft(projected)((df, c) =>
-        df.withColumn(c + "_cents", round(col(c) * 100).cast("long")))
-      spec.bucketKey match {
-        case Some(k) =>
-          graft.sources.TabularWriter.toBucketedTable(
-            withCents, name, k, spec.buckets, sorted = true)
-        case None => withCents.write.mode("overwrite").saveAsTable(name)
-      }
-      if (finite.nonEmpty) {
-        LayoutAdvisor.markDerived(spark, name, finite)
-        LayoutAdvisor.markDerivedFinite(spark, name, finite)
-      }
-      // freshness: fingerprint every member's base files AS STAGED —
-      // the audits and the join itself are only valid for these bytes
-      val fps = (Seq(spec.factPath) ++ spec.dims.map(_.path)).distinct
-        .map(p => p -> Freshness.ofPath(spark, p)).toMap
-      val loc = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(name)).location
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(loc.getPath, DenormSidecar),
-        sidecarBody(spec, audited, carried, finite, finite, fps).getBytes("UTF-8"))
-      val meta = Meta(name, spec.fact, spec.factPath, audited,
-        carried.toSet, finite.toSet, finite.toSet, fps)
-      register(meta)
-      meta
-    } finally {
-      saved match {
-        case Some(v) => spark.conf.set(Flag, v)
-        case None => spark.conf.unset(Flag)
-      }
+  /** Run a staging write with this kind's rewrite switched off: the
+    * staging query is itself a shape the rewrite serves, and a
+    * previously registered overlapping layout must not serve it. */
+  protected def withRuleOff[T](spark: SparkSession)(body: => T): T = {
+    val saved = spark.conf.getOption(flag)
+    spark.conf.set(flag, "false")
+    try body
+    finally saved match {
+      case Some(v) => spark.conf.set(flag, v)
+      case None => spark.conf.unset(flag)
     }
-  }
-
-  /** Parse a staged denorm's sidecar at `path` into the [[Meta]] it
-    * records (no registration, no validation — callers that need the
-    * advice-drift guard use [[attachDenorm]]). */
-  def metaFromSidecar(catalogTable: String, path: String): Meta = {
-    val sidecar = java.nio.file.Paths.get(path, DenormSidecar)
-    require(java.nio.file.Files.exists(sidecar),
-      s"metaFromSidecar($catalogTable): sidecar $sidecar missing")
-    val lines = new String(java.nio.file.Files.readAllBytes(sidecar), "UTF-8")
-      .split("\n").toSeq
-    def line(prefix: String): String = lines.collectFirst {
-      case l if l.startsWith(prefix + " ") => l.stripPrefix(prefix + " ")
-    }.getOrElse(throw new IllegalArgumentException(
-      s"metaFromSidecar($catalogTable): sidecar missing '$prefix' line"))
-    def csv(s: String): Seq[String] =
-      s.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val factLine = line("fact").split("\\s+")
-    val dims = lines.filter(_.startsWith("dim ")).map { l =>
-      l.stripPrefix("dim ").split("\\s+") match {
-        case Array(t, p, pt, pk, dk, ll) => DimMeta(t, p, pt, pk, dk, ll.toBoolean)
-        case other => throw new IllegalArgumentException(
-          s"metaFromSidecar($catalogTable): malformed dim line '${other.mkString(" ")}'")
-      }
-    }
-    Meta(catalogTable, factLine(0), factLine(1), dims,
-      csv(line("columns")).toSet, csv(line("cents")).toSet,
-      csv(line("finite")).toSet, parseFingerprints(lines))
-  }
-
-  /** Fresh-JVM re-attach of already-staged denorm files at `path` as
-    * catalog table `name` (the local stand-in for a persistent
-    * metastore): the sidecar must prove the files were staged from the
-    * SAME spec — fact path, dim chain and bucket key — or we re-stage
-    * rather than silently serve a drifted projection. Returns the
-    * re-registered [[Meta]]. */
-  def attachDenorm(spark: SparkSession, spec: LayoutAdvisor.DenormSpec,
-      name: String, path: String): Meta = {
-    val sidecar = java.nio.file.Paths.get(path, DenormSidecar)
-    require(java.nio.file.Files.exists(sidecar),
-      s"attachDenorm($name): sidecar $sidecar missing — re-stage")
-    val lines = new String(java.nio.file.Files.readAllBytes(sidecar), "UTF-8")
-      .split("\n").toSeq
-    def line(prefix: String): String = lines.collectFirst {
-      case l if l.startsWith(prefix + " ") => l.stripPrefix(prefix + " ")
-    }.getOrElse(throw new IllegalArgumentException(
-      s"attachDenorm($name): sidecar missing '$prefix' line — re-stage"))
-    def csv(s: String): Seq[String] =
-      s.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val factLine = line("fact").split("\\s+")
-    val bucketLine = line("bucket").split("\\s+")
-    val dims = lines.filter(_.startsWith("dim ")).map { l =>
-      l.stripPrefix("dim ").split("\\s+") match {
-        case Array(t, p, pt, pk, dk, ll) => DimMeta(t, p, pt, pk, dk, ll.toBoolean)
-        case other => throw new IllegalArgumentException(
-          s"attachDenorm($name): malformed dim line '${other.mkString(" ")}'")
-      }
-    }
-    require(factLine.length == 2 && factLine(0) == spec.fact &&
-      factLine(1) == spec.factPath &&
-      bucketLine(0) == spec.bucketKey.getOrElse("-") &&
-      dims.map(d => (d.table, d.path, d.parentTable, d.parentKey, d.dimKey)) ==
-        spec.dims.map(d => (d.table, d.path, d.parentTable, d.parentKey, d.dimKey)),
-      s"attachDenorm($name): sidecar does not match this session's advice — re-stage")
-    // FRESHNESS: every member's base files must still be the bytes the
-    // layout (and its lossless audits) were staged from — a base table
-    // that grew since staging would be silently served pre-append rows.
-    // ALL members are checked here (the rewrite can only re-check the
-    // ones present in a query; an omitted dim's audit rots invisibly).
-    val fps = parseFingerprints(lines)
-    (Seq(spec.factPath) ++ spec.dims.map(_.path)).distinct.foreach { p =>
-      fps.get(p).foreach { staged =>
-        val live = Freshness.ofPath(spark, p)
-        require(live == staged,
-          s"attachDenorm($name): base data at $p drifted since staging " +
-            s"(staged=$staged live=$live) — re-stage")
-      }
-    }
-    spec.bucketKey match {
-      case Some(k) =>
-        graft.sources.TabularWriter.attach(spark, name, path, k, spec.buckets)
-      case None =>
-        val schema = spark.read.parquet(path).schema.toDDL
-        spark.sql(s"CREATE TABLE `$name` ($schema) USING parquet LOCATION '$path'")
-    }
-    val finite = csv(line("finite"))
-    if (finite.nonEmpty) {
-      LayoutAdvisor.markDerived(spark, name, finite)
-      LayoutAdvisor.markDerivedFinite(spark, name, finite)
-    }
-    val meta = Meta(name, spec.fact, spec.factPath, dims,
-      csv(line("columns")).toSet, csv(line("cents")).toSet, finite.toSet, fps)
-    register(meta)
-    meta
   }
 }
 
@@ -400,12 +352,6 @@ object RewriteMaterializedJoin extends Rule[LogicalPlan] with PredicateHelper {
     val substituted = plan.transformDown {
       case j @ Join(_, _, Inner, _, _) =>
         tryRewrite(spark, j, metas, centsMap) match {
-          case Some(n) => fired = true; n
-          case None => j
-        }
-      case j @ Join(_, _, org.apache.spark.sql.catalyst.plans.LeftSemi, Some(_), _)
-          if MaterializedJoins.semiEnabled(conf) =>
-        trySemiSubsume(spark, j, metas) match {
           case Some(n) => fired = true; n
           case None => j
         }
@@ -680,113 +626,6 @@ object RewriteMaterializedJoin extends Rule[LogicalPlan] with PredicateHelper {
     }
     if (pending.nonEmpty) return None
     Some(tree)
-  }
-
-  // --------------------------------------------- semi-join subsumption
-
-  /** `dim ⋉ parent` (EXISTS) served from the denorm as one grouped
-    * scan — the q4 shape: `orders ⋉ lineitem(filtered)` is every order
-    * with at least one qualifying line, which in the pre-joined table
-    * is exactly `denorm WHERE <probe filters> GROUP BY <key>` with the
-    * dim's columns emitted (constant per group because the stage-time
-    * audit proved the dim key UNIQUE). Grouping includes the PROBE-side
-    * (fact-grain) key attribute, so a denorm bucketed on it aggregates
-    * exchange-free — q4 becomes scan+agg, zero joins, zero shuffles.
-    *
-    * Exactness requires: the semi's two leaves are adjacent members
-    * joined on exactly the recorded key pair (extra conjuncts become
-    * row filters — EXISTS with a compound predicate filters the paired
-    * rows first); the LEFT side is a DIM with a lossless audit (unique
-    * key ⇒ one output row per left row — the binding half; the left
-    * rows the materialized join drops are exactly those with no fact
-    * match, which the semi drops anyway); the PROBE side is the FACT —
-    * every fact row is represented in the denorm when the other dims
-    * are lossless (also required), whereas a non-fact probe row with
-    * zero fact matches has no denorm row and its EXISTS witness would
-    * be silently lost. LeftAnti is NOT served: an anti row with zero
-    * matches has no denorm row to represent it. */
-  private def trySemiSubsume(spark: SparkSession, j: Join,
-      metas: Seq[MaterializedJoins.Meta]): Option[LogicalPlan] = {
-    val left = peel(j.left, None)
-    val probe = peel(j.right, None)
-    if (left.path.isEmpty || probe.path.isEmpty) return None
-    if (left.wrappers.nonEmpty || probe.wrappers.nonEmpty) return None
-    val conds = j.condition.toSeq.flatMap(splitConjunctivePredicates)
-    if (conds.exists(!_.deterministic)) return None
-    metas.view.flatMap { m =>
-      if (!spark.catalog.tableExists(m.catalogTable)) None
-      else {
-        // the left leaf must be a LOSSLESS dim whose recorded partner
-        // (parent: the fact or an earlier dim) is the probe leaf
-        val memberPath: Map[String, String] =
-          ((m.fact -> m.factPath) +: m.dims.map(d => d.table -> d.path)).toMap
-        m.dims.filter(_.lossless)
-          // the probe must be the FACT: only fact rows are guaranteed
-          // represented in the denorm (given lossless others below) —
-          // a non-fact probe row with zero fact matches has no denorm
-          // row, and its EXISTS witness would be silently lost
-          .filter(d => d.parentTable == m.fact &&
-            left.path.contains(d.path) && probe.path.contains(m.factPath))
-          .flatMap { d =>
-            val others = m.dims.filterNot(_.table == d.table)
-            if (!others.forall(_.lossless)) None
-            else if (!Seq(left, probe).forall(p => (p.path, p.leafIndex) match {
-              case (Some(path), Some(idx)) => Freshness.check(
-                s"${m.catalogTable}:$path", m.fingerprints.getOrElse(path, ""), idx)
-              case _ => true
-            })) None
-            else {
-              val keyEq = conds.collectFirst {
-                case eq @ EqualTo(a: AttributeReference, b: AttributeReference)
-                    if (left.leafByName.get(d.dimKey.toLowerCase).exists(_.exprId == a.exprId) &&
-                         probe.leafByName.get(d.parentKey.toLowerCase).exists(_.exprId == b.exprId)) ||
-                       (left.leafByName.get(d.dimKey.toLowerCase).exists(_.exprId == b.exprId) &&
-                         probe.leafByName.get(d.parentKey.toLowerCase).exists(_.exprId == a.exprId)) => eq
-              }
-              keyEq.flatMap { eq =>
-                val extra = conds.filterNot(_ == eq)
-                val leafAttrs = AttributeSet(
-                  left.leafByName.values.toSeq ++ probe.leafByName.values.toSeq)
-                if (!extra.forall(_.references.subsetOf(leafAttrs))) None
-                else {
-                  val probeKeyAttr = probe.leafByName(d.parentKey.toLowerCase)
-                  val exposed = (left.outputs ++ left.filterRefs ++
-                    Seq(probeKeyAttr) ++ probe.filterRefs ++
-                    extra.flatMap(_.references))
-                    .groupBy(_.exprId).map(_._2.head).toSeq
-                  if (!exposed.forall(a => m.columns.contains(a.name.toLowerCase))) None
-                  else {
-                    val scan = EliminateSubqueryAliases(
-                      spark.table(m.catalogTable).queryExecution.analyzed)
-                    val byName = scan.output.map(a => a.name.toLowerCase -> a).toMap
-                    if (!exposed.forall(a => byName.contains(a.name.toLowerCase))) None
-                    else if (exposed.map(_.name.toLowerCase).distinct.size != exposed.size) None
-                    else {
-                      val aliases: Seq[NamedExpression] = exposed.map(a =>
-                        Alias(byName(a.name.toLowerCase), a.name)(exprId = a.exprId))
-                      var node: LogicalPlan = Project(aliases, scan)
-                      val filters = left.filters ++ probe.filters ++ extra
-                      if (filters.nonEmpty) node = Filter(filters.reduce(And), node)
-                      // group by the fact-grain key (bucket-aligned) +
-                      // the semi's output attrs, which pass through the
-                      // grouping with their exprIds intact. Filter-only
-                      // columns stay OUT of the grouping: the key is the
-                      // unique dim key's fact-grain twin, so every other
-                      // dim column is constant per group anyway and
-                      // widening the hash keys buys nothing
-                      val grouping: Seq[Expression] =
-                        (probeKeyAttr +: left.outputs)
-                          .groupBy { case a: Attribute => a.exprId }.map(_._2.head).toSeq
-                      Some(org.apache.spark.sql.catalyst.plans.logical.Aggregate(
-                        grouping, left.outputs.map(a => a: NamedExpression), node))
-                    }
-                  }
-                }
-              }
-            }
-          }.headOption
-      }
-    }.headOption
   }
 
   // ------------------------------------------- ancestors' money idioms

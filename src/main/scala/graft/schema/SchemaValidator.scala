@@ -21,10 +21,6 @@ object SchemaValidator {
 
   final case class Mismatch(path: String, detail: String)
 
-  /** Infer FieldSpecs from a file footer (no data read). */
-  def inferFields(spark: SparkSession, path: String, format: String = "parquet"): Seq[FieldSpec] =
-    FieldSpec.fromSchema(spark.read.format(format).load(path).schema)
-
   /** Reference semantics: duplicate column names are an error
     * (common/arrow.cc:186-189). */
   def requireDistinctNames(schema: StructType, caseInsensitive: Boolean = false): Unit = {

@@ -280,6 +280,21 @@ class MaterializedAggSpec extends GraftSpec {
     }
     val name2 = staged.catalogTable + "2"
     if (spark.catalog.tableExists(name2)) spark.sql(s"DROP TABLE `$name2`")
+    // a corrupt sidecar (a mangled measure line) fails with the same
+    // re-stage diagnostic as the other validations; restoring the
+    // sidecar restores attach
+    val sidecar = aside.resolve(MaterializedAggs.RollupSidecar)
+    val saved = new String(java.nio.file.Files.readAllBytes(sidecar), "UTF-8")
+    try {
+      val junk = saved.split("\n").toSeq
+        .map(l => if (l.startsWith("measure\t")) "measure\tm_broken" else l)
+      java.nio.file.Files.write(sidecar, junk.mkString("", "\n", "\n").getBytes("UTF-8"))
+      val e = intercept[IllegalArgumentException] {
+        MaterializedAggs.attachRollup(spark, advisedSpec, name2, aside.toString)
+      }
+      assert(e.getMessage.contains("re-stage"), e.getMessage)
+      assert(!spark.catalog.tableExists(name2))
+    } finally java.nio.file.Files.write(sidecar, saved.getBytes("UTF-8"))
     val attached = MaterializedAggs.attachRollup(
       spark, advisedSpec, name2, aside.toString)
     MaterializedAggs.deregister(name2)

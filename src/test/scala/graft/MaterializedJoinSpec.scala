@@ -168,51 +168,33 @@ class MaterializedJoinSpec extends GraftSpec {
     sameOnOff(q)
   }
 
-  /** The semi arm is measured-off by default (see SemiFlag scaladoc);
-    * its exactness tests flip it on. */
-  private def withSemiArm[T](f: => T): T = {
-    spark.conf.set("spark.graft.materializedJoin.subsumeSemi", "true")
-    try f finally spark.conf.set("spark.graft.materializedJoin.subsumeSemi", "false")
-  }
-
   test("semi subsumption is measured-off by default") {
+    // dim ⋉ fact is never served from the denorm: subsuming it decodes
+    // the dim's columns at fact grain, which measured slower at x200
+    // than the plain semi join (PERF.md "Two measured lessons" #2)
     def q = Tables.orders(spark, sf)
       .join(Tables.lineitem(spark, sf), col("o_orderkey") === col("l_orderkey"),
         "left_semi")
       .groupBy(col("o_orderpriority")).agg(count(lit(1)).as("n"))
-    withMeta(meta)(assert(!fired(q), "default-off per the x200 measurement"))
-  }
-
-  test("semi subsumption: dim ⋉ fact becomes one grouped denorm scan (q4 shape)") {
-    def q = Tables.orders(spark, sf)
+    // the q4 shape: filtered probe, filtered dim
+    def q4 = Tables.orders(spark, sf)
       .filter(col("o_orderpriority") =!= "1-URGENT")
       .join(Tables.lineitem(spark, sf).filter(col("l_returnflag") === "R")
           .select(col("l_orderkey")),
         col("o_orderkey") === col("l_orderkey"), "left_semi")
       .groupBy(col("o_orderpriority")).agg(count(lit(1)).as("n"))
-    withSemiArm {
-      withMeta(meta) {
-        assert(fired(q), s"semi must subsume:\n${q.queryExecution.optimizedPlan}")
-        // the rewritten plan has NO join at all — scan + aggregates only
-        val joins = q.queryExecution.optimizedPlan.collect {
-          case jn: org.apache.spark.sql.catalyst.plans.logical.Join => jn
-        }
-        assert(joins.isEmpty, s"q4 shape must be join-free:\n${q.queryExecution.optimizedPlan}")
-      }
-      sameOnOff(q)
-    }
-  }
-
-  test("semi subsumption: extra predicate conjuncts filter the paired rows") {
-    def q = Tables.orders(spark, sf)
+    // extra predicate conjuncts on the semi condition
+    def extraConjunct = Tables.orders(spark, sf)
       .join(Tables.lineitem(spark, sf),
         col("o_orderkey") === col("l_orderkey") &&
           col("l_shipdate") > col("o_orderdate"),
         "left_semi")
       .groupBy(col("o_orderpriority")).agg(count(lit(1)).as("n"))
-    withSemiArm {
-      withMeta(meta)(assert(fired(q)))
-      sameOnOff(q)
+    withMeta(meta)(assert(!fired(q), "default-off per the x200 measurement"))
+    for (shape <- Seq(() => q4, () => extraConjunct)) {
+      withMeta(meta)(assert(!fired(shape()),
+        s"semi joins are not subsumed:\n${shape().queryExecution.optimizedPlan}"))
+      sameOnOff(shape())
     }
   }
 
@@ -231,18 +213,16 @@ class MaterializedJoinSpec extends GraftSpec {
       .join(Tables.orders(spark, sf), col("c_custkey") === col("o_custkey"),
         "left_semi")
       .groupBy(col("c_mktsegment")).agg(count(lit(1)).as("n"))
-    withSemiArm {
-      withMeta(lossy)(assert(!fired(semi), "non-unique dim key cannot subsume"))
-      // anti: an order with zero lines has no denorm row to represent it
-      withMeta(meta)(assert(!fired(anti), "anti joins are never subsumed"))
-      // non-fact probe: an order with zero lines is absent from the
-      // denorm, so customer ⋉ orders cannot be served by it
-      withMeta(meta)(assert(!fired(nonFactProbe),
-        "only the fact's rows are all guaranteed represented"))
-      sameOnOff(semi)
-      sameOnOff(anti)
-      sameOnOff(nonFactProbe)
-    }
+    withMeta(lossy)(assert(!fired(semi), "non-unique dim key cannot subsume"))
+    // anti: an order with zero lines has no denorm row to represent it
+    withMeta(meta)(assert(!fired(anti), "anti joins are never subsumed"))
+    // non-fact probe: an order with zero lines is absent from the
+    // denorm, so customer ⋉ orders cannot be served by it
+    withMeta(meta)(assert(!fired(nonFactProbe),
+      "only the fact's rows are all guaranteed represented"))
+    sameOnOff(semi)
+    sameOnOff(anti)
+    sameOnOff(nonFactProbe)
   }
 
   test("declines: non-deterministic predicates are never absorbed (round-12)") {
@@ -310,10 +290,28 @@ class MaterializedJoinSpec extends GraftSpec {
     val m = MaterializedJoins.stageDenorm(spark, spec, name)
     MaterializedJoins.deregister(name)
     assert(m.cents.isEmpty, "x must be declined — x_cents is a real column")
-    // the REAL x_cents values survive untouched
-    val served = spark.table(name).select(col("k"), col("x_cents"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(served(5L) === 5000L, s"real x_cents must not be overwritten: $served")
+    // the other two cents stagers share the decline: neither stages
+    // cents for x over the same fact
+    val derived = name + "_derived"
+    val bucketed = name + "_bucketed"
+    for (t <- Seq(derived, bucketed)) {
+      GateFixtures.deleteRecursively(java.nio.file.Paths.get(wh, t))
+      if (spark.catalog.tableExists(t)) spark.sql(s"DROP TABLE `$t`")
+    }
+    LayoutAdvisor.stageDerived(spark, LayoutAdvisor.DerivedSpec(
+      fPath, "f", Seq("x"), sortCol = None, numFiles = 1, hits = 1), derived)
+    LayoutAdvisor.stageWithDerived(spark, LayoutAdvisor.LayoutSpec(
+      fPath, "f", "k", 4, Seq("k", "x", "x_cents"), hits = 1), Seq("x"), bucketed)
+    for (t <- Seq(name, derived, bucketed)) {
+      val props = spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(t)).properties
+      assert(!props.contains(graft.plans.RewriteStoredCents.Property),
+        s"$t: x must be declined — x_cents is a real column: $props")
+      // the REAL x_cents values survive untouched
+      val served = spark.table(t).select(col("k"), col("x_cents"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(served(5L) === 5000L, s"$t: real x_cents must not be overwritten: $served")
+    }
   }
 
   test("a non-member table re-joins above the rewritten scan") {
@@ -460,6 +458,23 @@ class MaterializedJoinSpec extends GraftSpec {
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
     if (spark.catalog.tableExists(name + "2")) spark.sql(s"DROP TABLE `${name}2`")
+    // a corrupt sidecar (a dropped line, a mangled dim line) fails with
+    // the same re-stage diagnostic as the other validations; restoring
+    // the sidecar restores attach
+    val sidecar = aside.resolve(MaterializedJoins.DenormSidecar)
+    val saved = new String(java.nio.file.Files.readAllBytes(sidecar), "UTF-8")
+    try {
+      val lines = saved.split("\n").toSeq
+      for (junk <- Seq(lines.filterNot(_.startsWith("finite ")),
+          lines.map(l => if (l.startsWith("dim ")) "dim orders l_orderkey" else l))) {
+        java.nio.file.Files.write(sidecar, junk.mkString("", "\n", "\n").getBytes("UTF-8"))
+        val e = intercept[IllegalArgumentException] {
+          MaterializedJoins.attachDenorm(spark, spec, name + "2", aside.toString)
+        }
+        assert(e.getMessage.contains("re-stage"), e.getMessage)
+        assert(!spark.catalog.tableExists(name + "2"))
+      }
+    } finally java.nio.file.Files.write(sidecar, saved.getBytes("UTF-8"))
     val attached = MaterializedJoins.attachDenorm(
       spark, spec, name + "2", aside.toString)
     MaterializedJoins.deregister(name + "2")

@@ -162,7 +162,7 @@ private[graft] object GateFixtures {
       val srcDir = root.resolve("src").toString
       li.where(col("l_orderkey") % 3 === 0).repartition(2)
         .write.mode("overwrite").parquet(srcDir)
-      val stream = s.readStream.schema(s.read.parquet(srcDir).schema)
+      val stream = s.readStream.schema(graft.sources.FileSchemas.read(s, Seq(srcDir)).schema)
         .option("maxFilesPerTrigger", "1").parquet(srcDir)
       val q = graft.streaming.StreamingLayout.intoBucketedTable(
         stream, name, root.resolve("commits").toString,

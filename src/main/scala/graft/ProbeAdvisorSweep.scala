@@ -427,7 +427,7 @@ object ProbeAdvisorSweep {
         val finite = graft.plans.LayoutAdvisor.readFiniteSidecar(loc.toString)
           .getOrElse {
             val f = graft.plans.LayoutAdvisor.auditFinite(
-              spark.read.parquet(spec.path.split(',').toIndexedSeq: _*), cents)
+              graft.sources.FileSchemas.read(spark, spec.path.split(',').toIndexedSeq), cents)
             graft.plans.LayoutAdvisor.writeFiniteSidecar(spark, t, f)
             println(s"[advise] $t: finite audit self-healed (${f.mkString(",")})")
             f

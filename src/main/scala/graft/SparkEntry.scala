@@ -4,7 +4,7 @@ import graft.functions.{Metrics, Sketches, TextFunctions}
 import graft.operators.{Ann, AsofJoin, BlockDedup, Categorical, Classifier, Contamination, DedupClusters, EmbeddingLookup, FeatureScale, FuzzyJoin, Fusion, Gram, Graph, Importance, Ivf, Multimodal, NearDup, Partitioners, Pipelines, Pq, Profile, Ragged, RangeClip, RangeJoin, Rolling, Sampling, SeqPack, Sessionize, SkewJoin, TermStats, Upsert, WebCuration}
 import graft.streaming.StreamingOps
 import graft.schema.FieldSpec
-import graft.sources.{TabularReader, TabularWriter, TfRecordSource, TypedParquet}
+import graft.sources.{FileSchemas, TabularReader, TabularWriter, TfRecordSource, TypedParquet}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -1134,7 +1134,7 @@ object SparkEntry {
         stage(docs.where(col("doc_id") < 250), "b0", 120000L)
         stage(docs.where(col("doc_id") >= 250), "b1", 60000L)
       }
-      val schema = s.read.parquet(dir).schema
+      val schema = FileSchemas.read(s, Seq(dir)).schema
       val name = "gate_lsh_dedup_" + math.abs(dir.hashCode)
       val prev = s.conf.get("spark.sql.shuffle.partitions")
       try {
@@ -1157,7 +1157,7 @@ object SparkEntry {
         // still crosses a boundary
         Tables.events(s, d).select("event_id").repartition(2).write.mode("overwrite").parquet(target)
       }
-      val schema = s.read.parquet(dir).schema
+      val schema = FileSchemas.read(s, Seq(dir)).schema
       val name = "gate_dedup_" + math.abs(dir.hashCode)
       // keyed state opens one state store per shuffle partition per
       // micro-batch; narrow the width for this small stateful query
@@ -1196,7 +1196,7 @@ object SparkEntry {
         stage(e.filter(col("event_id") <= mid), "b0", 120000L)
         stage(e.filter(col("event_id") > mid), "b1", 60000L)
       }
-      val schema = s.read.parquet(dir).schema
+      val schema = FileSchemas.read(s, Seq(dir)).schema
       val snap = java.nio.file.Files.createTempDirectory("graft_snap").toString
       val prev = s.conf.get("spark.sql.shuffle.partitions")
       try {
@@ -1223,7 +1223,7 @@ object SparkEntry {
         Tables.events(s, d).select(col("user_id"), col("ts"))
           .repartition(2).write.mode("overwrite").parquet(target)
       }
-      val schema = s.read.parquet(dir).schema
+      val schema = FileSchemas.read(s, Seq(dir)).schema
       val name = "gate_wmdedup_" + math.abs(dir.hashCode)
       val prev = s.conf.get("spark.sql.shuffle.partitions")
       try {
@@ -1247,7 +1247,7 @@ object SparkEntry {
         Tables.events(s, d).select(col("user_id"), col("ts"))
           .repartition(2).write.mode("overwrite").parquet(target)
       }
-      val schema = s.read.parquet(dir).schema
+      val schema = FileSchemas.read(s, Seq(dir)).schema
       val name = "gate_sess_" + math.abs(dir.hashCode)
       val prev = s.conf.get("spark.sql.shuffle.partitions")
       try {
@@ -1275,7 +1275,7 @@ object SparkEntry {
         Tables.events(s, d).select(col("event_id"), col("event_type"), col("value"))
           .repartition(2).write.mode("overwrite").parquet(target)
       }
-      val schema = s.read.parquet(dir).schema
+      val schema = FileSchemas.read(s, Seq(dir)).schema
       val name = "gate_streamauc_" + math.abs(dir.hashCode)
       val prev = s.conf.get("spark.sql.shuffle.partitions")
       try {
@@ -1329,7 +1329,7 @@ object SparkEntry {
             col("value"), col("event_type")),
           target, Seq("event_type"))
       }
-      s.read.parquet(dir)
+      FileSchemas.read(s, Seq(dir))
         .where(col("event_type") === "click")
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
     },
@@ -1389,7 +1389,7 @@ object SparkEntry {
           Tables.events(s, d).select(col("event_id"), col("user_id"), col("value")),
           target, Seq("user_id"), numFiles = 8)
       }
-      s.read.parquet(dir)
+      FileSchemas.read(s, Seq(dir))
         .where(col("user_id") >= 40 && col("user_id") < 80)
         .select(col("event_id"), col("user_id"), col("value"))
     },
@@ -1404,7 +1404,7 @@ object SparkEntry {
             col("l_partkey"), col("l_suppkey")),
           target, "l_partkey", "l_suppkey", numFiles = 8)
       }
-      s.read.parquet(dir)
+      FileSchemas.read(s, Seq(dir))
         .where(col("l_partkey").between(100, 300) &&
           col("l_suppkey").between(20, 60))
         .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
@@ -1429,8 +1429,8 @@ object SparkEntry {
           .select(col("event_id"), col("user_id"), col("ts"))
           .repartition(2).write.mode("overwrite").parquet(target + "/purchases")
       }
-      val vSchema = s.read.parquet(dir + "/views").schema
-      val pSchema = s.read.parquet(dir + "/purchases").schema
+      val vSchema = FileSchemas.read(s, Seq(dir + "/views")).schema
+      val pSchema = FileSchemas.read(s, Seq(dir + "/purchases")).schema
       val name = "gate_ssj_" + math.abs(dir.hashCode)
       val prev = s.conf.get("spark.sql.shuffle.partitions")
       try {
@@ -1461,7 +1461,7 @@ object SparkEntry {
         val srcDir = target + "/src"
         Tables.events(s, d).select("event_id", "user_id", "value")
           .repartition(2).write.mode("overwrite").parquet(srcDir)
-        val schema = s.read.parquet(srcDir).schema
+        val schema = FileSchemas.read(s, Seq(srcDir)).schema
         val q = StreamingOps.fileStream(s, srcDir, schema)
           .writeStream.format("parquet")
           .option("path", target + "/sink")
@@ -1469,7 +1469,7 @@ object SparkEntry {
           .outputMode("append").start()
         drain(q)
       }
-      s.read.parquet(dir + "/sink")
+      FileSchemas.read(s, Seq(dir + "/sink"))
     },
 
     // ---- stream-static enrichment join (streaming embedding lookup) ----
@@ -1481,7 +1481,7 @@ object SparkEntry {
         Tables.events(s, d).select("event_id", "user_id")
           .repartition(2).write.mode("overwrite").parquet(target)
       }
-      val schema = s.read.parquet(dir).schema
+      val schema = FileSchemas.read(s, Seq(dir)).schema
       val name = "gate_enrich_" + math.abs(dir.hashCode)
       val prev = s.conf.get("spark.sql.shuffle.partitions")
       try {
@@ -2262,7 +2262,7 @@ object SparkEntry {
       // files via footer stats (AdvisorSpec asserts strictly-fewer
       // files touched) — the sorted-layout analogue of hive
       // partitioning for continuous keys at 100 TB.
-      s.read.parquet(GateFixtures.advisorSortedOrders(s, d))
+      FileSchemas.read(s, Seq(GateFixtures.advisorSortedOrders(s, d)))
         .where(col("o_orderdate").between(lit("1996-01-01"), lit("1996-12-31")))
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n"),

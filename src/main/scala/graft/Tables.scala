@@ -23,28 +23,36 @@ object Tables {
 
   /** Freshness guard on the serving path (round-12): a staged layout
     * records its base path+fingerprint in a `_graft_base` sidecar
-    * (graft.plans.Freshness); the FIRST time a (dir, table, layout)
-    * triple is served this session, the recorded base is re-
-    * fingerprinted and a drifted base THROWS instead of silently
-    * serving pre-append rows — re-stage is the recovery. Verified
-    * triples are cached (one directory listing per layout per JVM);
-    * layouts without the sidecar (fixtures, pre-round-12 files) are
-    * unchecked by contract. */
-  private val verifiedRedirects =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String, String)]()
+    * (graft.plans.Freshness); the first time a (dir, table, layout)
+    * triple is served, the recorded base is re-fingerprinted and a
+    * drifted base THROWS instead of silently serving pre-append rows —
+    * re-stage is the recovery. A verified triple keeps the base's
+    * listing digest (`FileSchemas.digest`, one listing, no job) and is
+    * verified again whenever that digest changes, so an append after
+    * the first serve is caught too. Layouts without the sidecar
+    * (fixtures, pre-round-12 files) are unchecked by contract. */
+  private val verifiedRedirects = new java.util.concurrent.ConcurrentHashMap[
+    (String, String, String), Option[(Seq[String], Option[String])]]()
 
   private def verifyRedirect(spark: SparkSession, sfDir: String, name: String,
       table: String): Unit = {
-    if (verifiedRedirects.contains((sfDir, name, table))) return
-    val loc = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table)).location
-    if (!graft.plans.Freshness.verifyBaseAt(
-        spark, java.nio.file.Paths.get(loc.getPath)))
+    val seen = verifiedRedirects.get((sfDir, name, table))
+    if (seen != null && seen.forall { case (base, d) =>
+        graft.sources.FileSchemas.digest(spark, base) == d }) return
+    val loc = java.nio.file.Paths.get(spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(table)).location.getPath)
+    // digest first: a change between it and the check leaves a stale
+    // digest, which the next serve re-verifies
+    val base = graft.plans.Freshness.readBaseAt(loc).map { case (p, _) =>
+      val roots = p.split(',').toIndexedSeq
+      roots -> graft.sources.FileSchemas.digest(spark, roots)
+    }
+    if (!graft.plans.Freshness.verifyBaseAt(spark, loc))
       throw new IllegalStateException(
         s"Tables.redirect($sfDir, $name -> $table): base data drifted since " +
           "the layout was staged — re-stage the layout (serving it would " +
           "silently return pre-append rows)")
-    verifiedRedirects.add((sfDir, name, table))
+    verifiedRedirects.put((sfDir, name, table), base)
   }
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
@@ -52,12 +60,12 @@ object Tables {
     if (redirected != null) verifyRedirect(spark, sfDir, name, redirected)
     // redirected layouts get the SAME normalization as the flat path:
     // a layout staged from a raw parquet read (stage/stageSorted read
-    // spark.read.parquet directly) carries the un-normalized schema,
+    // the base files directly) carries the un-normalized schema,
     // and serving it raw would silently hand a query long nanos where
     // the flat path hands TimestampType (both transforms below are
     // no-ops on already-normalized schemas)
     val raw = if (redirected != null) spark.table(redirected)
-      else spark.read.parquet(s"$sfDir/$name.parquet")
+      else graft.sources.FileSchemas.read(spark, Seq(s"$sfDir/$name.parquet"))
     // TIMESTAMP(NANOS) columns arrive as long nanos (nanosAsLong); convert
     // to TimestampType at µs precision — identical to DuckDB's ns→µs
     // truncation, keeping oracle parity. `div` (integer division —

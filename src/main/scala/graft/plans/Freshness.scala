@@ -1,5 +1,6 @@
 package graft.plans
 
+import graft.sources.FileSchemas
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 
@@ -29,8 +30,9 @@ import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, 
   *    rewrite time (the leaf's FileIndex is already in hand — no extra
   *    filesystem call) and decline with one logged warning on drift;
   *  - bucketed/derived stagings record the base fp in a `_graft_base`
-  *    sidecar; [[graft.Tables.redirect]]'s serving path verifies once
-  *    per (dir, table, layout) and throws on drift instead of silently
+  *    sidecar; [[graft.Tables.redirect]]'s serving path verifies each
+  *    (dir, table, layout) on first serve and again whenever the base's
+  *    listing digest changes, and throws on drift instead of silently
   *    redirecting a query at pre-append rows;
   *  - [[TableStats.analyze]] stamps the measured identity, so a
   *    measured-unique decline is ignored once the table grew past its
@@ -69,7 +71,7 @@ object Freshness {
   /** Inventory lines of a parquet read of `path` (same strings the
     * fingerprint hashes — `sha1(lines.mkString("\n")) == ofPath`). */
   def entriesOfPath(spark: SparkSession, path: String): Seq[String] =
-    spark.read.parquet(path.split(',').toIndexedSeq: _*)
+    FileSchemas.read(spark, path.split(',').toIndexedSeq)
       .queryExecution.analyzed.collect {
         case lr: LogicalRelation if lr.relation.isInstanceOf[HadoopFsRelation] =>
           lr.relation.asInstanceOf[HadoopFsRelation].location
@@ -101,7 +103,7 @@ object Freshness {
     * layout sidecars' member identity). Costs one footer-less directory
     * listing; used at stage/attach time, never per query. */
   def ofPath(spark: SparkSession, path: String): String =
-    ofLeaf(spark.read.parquet(path.split(',').toIndexedSeq: _*))
+    ofLeaf(FileSchemas.read(spark, path.split(',').toIndexedSeq))
       .getOrElse(sys.error(s"Freshness.ofPath($path): no single file scan"))
 
   /** Sidecar a bucketed/derived staging writes beside its files,

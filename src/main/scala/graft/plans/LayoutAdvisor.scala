@@ -1,5 +1,6 @@
 package graft.plans
 
+import graft.sources.FileSchemas
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, BinaryComparison, Cast, Contains, EndsWith, EqualNullSafe, EqualTo, Expression, In, IsNotNull, IsNull, Not, Or, StartsWith}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, LogicalPlan}
@@ -661,7 +662,7 @@ object LayoutAdvisor {
     // spec.path is the comma-joined root list of the advised relation:
     // a multi-directory table stages ALL its roots, not just the first
     graft.sources.TabularWriter.toBucketedTable(
-      spark.read.parquet(spec.path.split(',').toIndexedSeq: _*)
+      FileSchemas.read(spark, spec.path.split(',').toIndexedSeq)
         .select(spec.columns.map(col): _*),
       name, spec.key, spec.buckets, sorted = true)
     Freshness.writeBase(spark, name, spec.path)
@@ -775,7 +776,7 @@ object LayoutAdvisor {
     * file/row-group pruning from the footer stats (PruningSpec). */
   def stageSorted(spark: SparkSession, spec: SortedSpec, outPath: String): Unit = {
     import org.apache.spark.sql.functions.col
-    val df = spark.read.parquet(spec.paths: _*).select(spec.columns.map(col): _*)
+    val df = FileSchemas.read(spark, spec.paths).select(spec.columns.map(col): _*)
     spec.sortCols match {
       case Seq(c) =>
         graft.sources.TabularWriter.toRangeSorted(df, outPath, Seq(c), spec.numFiles)
@@ -887,7 +888,7 @@ object LayoutAdvisor {
     * (and only it) treats the stored columns as authoritative. */
   def stageDerived(spark: SparkSession, spec: DerivedSpec, name: String): Unit = {
     import org.apache.spark.sql.functions.col
-    val base = spark.read.parquet(spec.path.split(',').toIndexedSeq: _*)
+    val base = FileSchemas.read(spark, spec.path.split(',').toIndexedSeq)
     val finite = stageCents(spark, name, base, spec.sourceCols) { withCents =>
       val shaped = spec.sortCol match {
         case Some(sc) => withCents
@@ -916,7 +917,7 @@ object LayoutAdvisor {
       s"attachDerived($name): sidecar $sidecar missing or advice drifted — re-stage")
     require(Freshness.verifyBaseAt(spark, java.nio.file.Paths.get(path)),
       s"attachDerived($name): base data drifted since staging — re-stage")
-    val schema = spark.read.parquet(path).schema.toDDL
+    val schema = FileSchemas.read(spark, Seq(path)).schema.toDDL
     spark.sql(s"CREATE TABLE `$name` ($schema) USING parquet LOCATION '$path'")
     // what was STAGED is what the sidecar's finite line says (the
     // stage-time audit is physical — it was measured over these files,
@@ -936,7 +937,7 @@ object LayoutAdvisor {
   def stageWithDerived(spark: SparkSession, spec: LayoutSpec,
       derivedCols: Seq[String], name: String): Unit = {
     import org.apache.spark.sql.functions.col
-    val base = spark.read.parquet(spec.path.split(',').toIndexedSeq: _*)
+    val base = FileSchemas.read(spark, spec.path.split(',').toIndexedSeq)
       .select(spec.columns.map(col): _*)
     val keep = stageCents(spark, name, base,
         derivedCols.filter(spec.columns.contains)) { withCents =>

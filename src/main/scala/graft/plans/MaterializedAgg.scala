@@ -1,5 +1,6 @@
 package graft.plans
 
+import graft.sources.FileSchemas
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.EliminateSubqueryAliases
 import org.apache.spark.sql.catalyst.expressions._
@@ -191,7 +192,7 @@ object MaterializedAggs extends LayoutRegistry {
   def stageRollup(spark: SparkSession, spec: LayoutAdvisor.RollupSpec,
       name: String): Meta = withRuleOff(spark) {
     import org.apache.spark.sql.functions.{col, expr}
-    val fact = spark.read.parquet(spec.factPath.split(',').toIndexedSeq: _*)
+    val fact = FileSchemas.read(spark, spec.factPath.split(',').toIndexedSeq)
     val inventory = Freshness.entriesOfPath(spark, spec.factPath)
     val fp = Freshness.ofEntries(inventory)
     val aggs = spec.measures.map(m => expr(m.agg).as(m.name))
@@ -274,7 +275,7 @@ object MaterializedAggs extends LayoutRegistry {
         "append-only, re-stage")
     // the merge plans below must not be served by a registered rollup
     withRuleOff(spark) {
-      val factDf = spark.read.parquet(meta.factPath.split(',').toIndexedSeq: _*)
+      val factDf = FileSchemas.read(spark, meta.factPath.split(',').toIndexedSeq)
       val kinds: Seq[(Measure, String)] = meta.measures.map { ms =>
         ms -> mergeKind(factDf, ms.agg).getOrElse(
           throw new IllegalArgumentException(
@@ -497,7 +498,7 @@ object RewriteMaterializedAgg extends Rule[LogicalPlan] with PredicateHelper {
       if (inParse.get()) return None
       inParse.set(java.lang.Boolean.TRUE)
       try {
-        val df = spark.read.parquet(m.factPath.split(',').toIndexedSeq: _*)
+        val df = FileSchemas.read(spark, m.factPath.split(',').toIndexedSeq)
         val leafName: Map[Long, String] = df.queryExecution.analyzed.collect {
           case lr: LogicalRelation => lr.output
         }.flatten.map(a => a.exprId.id -> a.name.toLowerCase).toMap

@@ -1,5 +1,6 @@
 package graft.plans
 
+import graft.sources.FileSchemas
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.EliminateSubqueryAliases
 import org.apache.spark.sql.catalyst.expressions._
@@ -143,7 +144,7 @@ object MaterializedJoins extends LayoutRegistry {
   def stageDenorm(spark: SparkSession, spec: LayoutAdvisor.DenormSpec,
       name: String): Meta = withRuleOff(spark) {
     import org.apache.spark.sql.functions.{col, count, lit, max}
-    def read(path: String) = spark.read.parquet(path.split(',').toIndexedSeq: _*)
+    def read(path: String) = FileSchemas.read(spark, path.split(',').toIndexedSeq)
     val tables: Map[String, org.apache.spark.sql.DataFrame] =
       (Seq(spec.fact -> spec.factPath) ++ spec.dims.map(d => d.table -> d.path))
         .map { case (t, p) => t -> read(p) }.toMap
@@ -262,7 +263,7 @@ object MaterializedJoins extends LayoutRegistry {
       case Some(k) =>
         graft.sources.TabularWriter.attach(spark, name, path, k, spec.buckets)
       case None =>
-        val schema = spark.read.parquet(path).schema.toDDL
+        val schema = FileSchemas.read(spark, Seq(path)).schema.toDDL
         spark.sql(s"CREATE TABLE `$name` ($schema) USING parquet LOCATION '$path'")
     }
     if (meta.finite.nonEmpty) {

@@ -1,5 +1,6 @@
 package graft.plans
 
+import graft.sources.FileSchemas
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 
@@ -117,7 +118,7 @@ object TableStats {
     val existing = if (refresh) None else lookup(warehouseOf(spark), path)
     existing.filter(st => cols.forall(st.ndv.contains)).getOrElse {
       val merged = existing.map(_.ndv.keys.toSeq).getOrElse(Nil) ++ cols
-      analyze(spark, spark.read.parquet(path.split(',').toIndexedSeq: _*),
+      analyze(spark, FileSchemas.read(spark, path.split(',').toIndexedSeq),
         path, merged.distinct)
     }
   }

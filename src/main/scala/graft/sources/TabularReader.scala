@@ -116,13 +116,14 @@ object TabularReader {
         s"(parquet or orc); format '$format' does not support row-range scans")
     require(!opts.mergeSchema || format == "parquet" || format == "orc",
       s"mergeSchema reconciles file footers; format '$format' has none")
-    val reader = spark.read
-      .format(format)
-      .options(extraOptions)
-      .option("ignoreCorruptFiles", opts.skipCorrupted.toString)
-    if (opts.mergeSchema) reader.option("mergeSchema", "true")
-    userSchema.foreach(reader.schema)
-    val loaded = reader.load(paths: _*)
+    val readerOptions = extraOptions + ("ignoreCorruptFiles" -> opts.skipCorrupted.toString) ++
+      (if (opts.mergeSchema) Map("mergeSchema" -> "true") else Map.empty)
+    // footer formats without a declared schema go through the schema
+    // cache; a declared schema (JSON, CSV) is read as given
+    val loaded = userSchema match {
+      case Some(s) => spark.read.format(format).options(readerOptions).schema(s).load(paths: _*)
+      case None => FileSchemas.read(spark, paths, format, readerOptions)
+    }
 
     // row-range scan: filter on the scan's per-file row position. For
     // parquet this is a narrow post-scan predicate over the generated

@@ -257,7 +257,7 @@ object TabularWriter {
           s"hashed on `${tokens(1)}` (sidecar $BucketSidecar) — bucket " +
           "membership is physical; attach with the staged key")
     }
-    val schema = spark.read.parquet(path).schema.toDDL
+    val schema = FileSchemas.read(spark, Seq(path)).schema.toDDL
     val sortClause = if (sorted) s"SORTED BY (`$key` ASC) " else ""
     spark.sql(
       s"CREATE TABLE `$table` ($schema) USING parquet " +
@@ -392,7 +392,7 @@ object TabularWriter {
       if (visible(st.getPath)) bytes += st.getLen
     }
     val files = math.max(1, ((bytes + targetBytes - 1) / targetBytes).toInt)
-    val df = spark.read.parquet(srcDir)
+    val df = FileSchemas.read(spark, Seq(srcDir))
     // coalesce can only REDUCE partition count; when the target exceeds
     // what the scan yields (few huge input files), fall through to a
     // repartition or the "~targetBytes-sized" contract silently becomes

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.FileSchemas
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -182,7 +183,7 @@ object StreamingOps {
           fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS"))
       }
       .sortBy(_._1).lastOption
-      .map { case (_, p) => spark.read.parquet(p.toString) }
+      .map { case (_, p) => FileSchemas.read(spark, Seq(p.toString)) }
   }
 
   /** Watermark-bounded streaming dedup (`dropDuplicatesWithinWatermark`):

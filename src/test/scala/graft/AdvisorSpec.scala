@@ -660,6 +660,12 @@ class AdvisorSpec extends GraftSpec {
         Tables(spark, dir.toString, "t").count()
       }
       assert(e.getMessage.contains("drifted"), e.getMessage)
+      // the triple verified before the append must refuse as well
+      Tables.redirect(dir.toString, "t", "adv_fresh_a")
+      val again = intercept[IllegalStateException] {
+        Tables(spark, dir.toString, "t").count()
+      }
+      assert(again.getMessage.contains("drifted"), again.getMessage)
     } finally {
       Tables.clearRedirects()
       spark.sql("DROP TABLE IF EXISTS adv_fresh_a")

@@ -10,13 +10,17 @@ import org.apache.spark.sql.SparkSession
   * 0.3–5.6 s spread) and for quick A/Bs while iterating.
   *
   * Usage: runMain graft.BenchOne <name,name,...> [sfDir] [reps]
+  * Bad arguments (no names, an unknown name, reps < 1) fail before
+  * Spark starts.
   */
 object BenchOne {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: BenchOne <name,name,...> [sfDir] [reps]")
-    val names = args(0).split(",").toSeq
+    val names = args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    require(names.nonEmpty, "empty query list")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
+    require(reps >= 1, s"reps must be at least 1, got $reps")
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))

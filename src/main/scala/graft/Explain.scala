@@ -12,6 +12,7 @@ package graft
   * many exchanges survive AQE?
   *
   * Usage: runMain graft.Explain <sfDir> [queryName ...] [--run]
+  * An unknown name fails before Spark starts.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -20,6 +21,8 @@ object Explain {
     require(rest.nonEmpty, "usage: Explain <sfDir> [queryName ...] [--run]")
     val sfDir = rest(0)
     val names = if (rest.length > 1) rest.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     names.foreach { n =>
       println(s"\n===== $n =====")

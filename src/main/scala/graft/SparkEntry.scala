@@ -1,57 +1,13 @@
 package graft
 
-import graft.functions.{Metrics, Sketches, TextFunctions}
-import graft.operators.{Ann, AsofJoin, BlockDedup, Categorical, Classifier, Contamination, DedupClusters, EmbeddingLookup, FeatureScale, FuzzyJoin, Fusion, Gram, Graph, Importance, Ivf, Multimodal, NearDup, Partitioners, Pipelines, Pq, Profile, Ragged, RangeClip, RangeJoin, Rolling, Sampling, SeqPack, Sessionize, SkewJoin, TermStats, Upsert, WebCuration}
-import graft.streaming.StreamingOps
-import graft.schema.FieldSpec
-import graft.sources.{FileSchemas, TabularReader, TabularWriter, TfRecordSource, TypedParquet}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import graft.gates._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * Numeric discipline for oracle parity: money/quantity sums are
-  * accumulated in DECIMAL (exact, order-independent) and cast to DOUBLE
-  * in the final projection, so Spark and DuckDB produce bit-identical
-  * results regardless of aggregation order. Every computed column is
-  * aliased identically in the Spark plan and the oracle SQL.
+/** Driver contract — see SURVEY.md §7. Each query and the oracle SQL
+  * that checks it are declared once, as one [[graft.gates.Gate]] in its
+  * family's file under `gates/`; both maps below derive from that list.
   */
 object SparkEntry {
-
-  /** Driver-checkable serialization of numeric array columns: the gate's
-    * pandas checker cannot sort ndarray cells, so every gated query's
-    * final projection must be scalar. Float→string formatting differs
-    * between engines, but `round(x*1e6)` in double math is bit-identical
-    * on both sides (IEEE widening + multiply + half-away-from-zero
-    * round), so arrays of floats/doubles travel as CSV of micro-scaled
-    * integers. Array-typed forms stay available via the operators and
-    * are covered by ScalaTest specs. */
-  /** Run a started streaming query to completion and ALWAYS stop it — a
-    * throwing processAllAvailable must not leak an active query (state
-    * stores + memory sink) into the rest of a multi-gate session. */
-  private def drain(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    try q.processAllAvailable() finally q.stop()
-
-  /** (media_id, bytes) frame of synthesized payloads for the
-    * multimodal gates — one payload per document id. `cap` bounds the
-    * fixture-sized gates; None = whole corpus (the bulk-decode shape),
-    * spread across cores first since synthesis+decode is CPU-bound. */
-  private def packedMedia(s: SparkSession, d: String, cap: Option[Long])(
-      gen: Long => Array[Byte]): DataFrame = {
-    import s.implicits._
-    val ids0 = Tables.documents(s, d).select(col("doc_id"))
-    val ids = cap.fold(graft.operators.Parallelism.ensureDefault(ids0))(
-      c => ids0.filter(col("doc_id") < c))
-    ids.as[Long].mapPartitions(_.map(id => (id, gen(id)))).toDF("media_id", "bytes")
-  }
-
-  private def numCsv(arr: Column): Column =
-    graft.functions.expressions.GraftExpressions.micro_csv(arr)
-
-  /** CSV of an integer/string array (formatting is engine-invariant). */
-  private def rawCsv(arr: Column): Column =
-    graft.functions.expressions.GraftExpressions.raw_csv(arr)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The Taobao-shaped pipeline is the reference's canonical workload:
@@ -60,4146 +16,16 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("pipeline_taobao_shaped")(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    baseQueries ++ Relational.queries
+  private[graft] val gates: Seq[Gate] = Gate.unique(
+    RelationalGates.gates ++ ScanGates.gates ++ AggGates.gates ++
+      DedupGates.gates ++ TextGates.gates ++ LayoutGates.gates ++
+      MetricGates.gates ++ StreamGates.gates ++ SampleGates.gates ++
+      VectorGates.gates ++ MultimodalGates.gates ++ FeatureGates.gates)
 
-  private def baseQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_pricing_summary" -> { (s, d) =>
-      val li = Tables.lineitem(s, d)
-      val dec = (c: String) => col(c).cast(DecimalType(12, 2))
-      li.filter(col("l_shipdate") <= lit("1998-09-01").cast(TimestampType))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          sum(dec("l_quantity")).cast(DoubleType).as("sum_qty"),
-          sum(dec("l_extendedprice")).cast(DoubleType).as("sum_base_price"),
-          sum(dec("l_extendedprice") * (lit(1).cast(DecimalType(4, 2)) - dec("l_discount")))
-            .cast(DoubleType).as("sum_disc_price"),
-          count(lit(1)).as("count_order"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    },
-    "q1_pricing_summary_cents" -> { (s, d) =>
-      // q1 with fixed-point long accumulation: money/quantity are 2-dp
-      // values, so summing them as integer cents is exact and ~2× faster
-      // than Spark's Decimal partial aggregation (boxed Decimal math vs
-      // primitive longs in codegen). Overflow envelope: the widest term,
-      // Σ price_cents·(100−disc_cents) per group, stays under 2^63 up to
-      // ~9×10⁹ max-price rows per group (≈ TB-scale lineitem); ANSI mode
-      // throws rather than silently wrapping beyond it. The DECIMAL form
-      // (q1_pricing_summary) remains the unbounded-scale path; both
-      // hash-match the same DECIMAL oracle.
-      val li = Tables.lineitem(s, d)
-      val cents = (c: String) => round(col(c) * 100).cast("long")
-      li.filter(col("l_shipdate") <= lit("1998-09-01").cast(TimestampType))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          (sum(cents("l_quantity")).cast(DoubleType) / 100.0).as("sum_qty"),
-          (sum(cents("l_extendedprice")).cast(DoubleType) / 100.0).as("sum_base_price"),
-          (sum(cents("l_extendedprice") * (lit(100L) - cents("l_discount"))).cast(DoubleType) / 10000.0)
-            .as("sum_disc_price"),
-          count(lit(1)).as("count_order"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    },
-    "scan_full_width" -> { (s, d) =>
-      // the reference's benchmark shape: full-width columnar scan
-      Tables.lineitem(s, d)
-    },
-    "metric_mean_aggregator" -> { (s, d) =>
-      // the typed Aggregator surface (reference's streaming mean
-      // metric-variable form) through the gate
-      val agg = udaf(new Metrics.MeanAggregator)
-      Tables.lineitem(s, d)
-        .agg(round(agg(col("l_quantity"), col("l_discount")), 9).as("wmean"))
-    },
-    "stream_sliding_counts" -> { (s, d) =>
-      // sliding event-time windows (1h window, 30m slide): each event
-      // lands in two windows
-      Tables.events(s, d)
-        .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("window.start").as("window_start"), col("event_type"), col("n"))
-    },
-    "scan_projection_defaults" -> { (s, d) =>
-      // TabularReader: projection + missing-field default population
-      // (reference: populate_defaults, dataframe.py:458-501).
-      val fields = Seq(
-        FieldSpec("l_orderkey", LongType),
-        FieldSpec("l_linenumber", IntegerType),
-        FieldSpec("l_quantity", DoubleType),
-        FieldSpec("missing_feat", LongType, defaultValue = Some(42L)))
-      TabularReader.fromParquet(s, Seq(s"$d/lineitem.parquet"),
-        TabularReader.Options(fields = fields))
-    },
-    "join_orders_customer" -> { (s, d) =>
-      // Embedding-lookup-shaped equi-join: fact ids x dim table
-      // (reference: embedding/sharding.py:168-205 — semantically a
-      // distributed hash equi-join preserving input multiplicity).
-      val o = Tables.orders(s, d)
-      val c = Tables.customer(s, d)
-      o.join(c, o("o_custkey") === c("c_custkey"), "inner")
-        .select(
-          col("o_orderkey"), col("o_custkey"), col("c_name"),
-          col("c_mktsegment"), col("o_totalprice"))
-    },
-
-    "q3_shipping_priority" -> { (s, d) =>
-      // TPC-H Q3 shape: 3-way join + filtered agg + ordered top-k
-      val c = Tables.customer(s, d).filter(col("c_mktsegment") === "BUILDING")
-      val o = Tables.orders(s, d)
-      val l = Tables.lineitem(s, d)
-      // integer-cents accumulation (q1_pricing_summary_cents discipline):
-      // exact, primitive-long codegen, same result as the DECIMAL oracle.
-      // The aggregation is pushed BELOW the join: the group key equals the
-      // join key, and the customer-segment predicate filters whole orders,
-      // so per-order revenue is reduced first and joined to the
-      // segment-filtered orders after — the join probes order-grained
-      // rows, not line-grained (4× less at TPC-H line fan-out).
-      val cts = (n: String) => round(col(n) * 100).cast("long")
-      val bldgOrders = o.join(broadcast(c), o("o_custkey") === c("c_custkey"), "left_semi")
-      // runtime bloom semi-reduction on the fact side: Spark's own
-      // InjectRuntimeFilter rejects this shape (the selective predicate
-      // sits across the semi join from the creation key's lineage), so
-      // inject the identical machinery by hand — at ~20% segment
-      // selectivity the per-order aggregate and its exchange shrink 5×;
-      // the false positives the bloom lets through are removed by the
-      // exact join below (BloomReduce scaladoc has the full story)
-      val lBldg = operators.BloomReduce.semiReduce(
-        l, col("l_orderkey"), bldgOrders.select(col("o_orderkey")),
-        col("o_orderkey"))
-      // bloom survivors still carry ~7M spread order groups — shuffle the
-      // raw rows first so the aggregate's first pass actually reduces
-      // (operators.Aggregates scaladoc has the measured trade-off)
-      val revPerOrder = operators.Aggregates.byShuffledKey(lBldg, col("l_orderkey"))
-        .agg((sum(cts("l_extendedprice") * (lit(100L) - cts("l_discount")))
-          .cast(DoubleType) / 10000.0).as("revenue"))
-      revPerOrder.join(bldgOrders, col("l_orderkey") === col("o_orderkey"))
-        .select(col("l_orderkey"), col("revenue"))
-        .orderBy(col("revenue").desc, col("l_orderkey"))
-        .limit(10)
-    },
-    "topk_orders" -> { (s, d) =>
-      Tables.orders(s, d)
-        .select(col("o_orderkey"), col("o_totalprice"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        .limit(10)
-    },
-    "agg_distinct_parts" -> { (s, d) =>
-      Tables.lineitem(s, d)
-        .groupBy(col("l_returnflag"))
-        .agg(countDistinct(col("l_partkey")).as("n_parts"),
-          count(lit(1)).as("n_rows"))
-    },
-    "join_full_outer" -> { (s, d) =>
-      val users = Tables.events(s, d).select(col("user_id")).distinct()
-      val vecs = Tables.embeddings(s, d).filter(col("vec_id") < 30)
-        .select(col("vec_id"))
-      users.join(vecs, users("user_id") === vecs("vec_id"), "full_outer")
-        .select(col("user_id"), col("vec_id"))
-    },
-    "window_topn_per_user" -> { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("value").desc, col("event_id"))
-      Tables.events(s, d)
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .filter(col("rn") <= 3)
-        .select(col("user_id"), col("event_id"), col("value"), col("rn"))
-    },
-
-    "q6_forecast_revenue" -> { (s, d) =>
-      // TPC-H Q6 shape: multi-predicate filtered aggregate — all three
-      // predicates must reach the parquet scan
-      Tables.lineitem(s, d)
-        .filter(col("l_discount").between(0.02, 0.04) && col("l_quantity") < 20)
-        .agg(sum(col("l_extendedprice").cast(DecimalType(12, 2))
-          * col("l_discount").cast(DecimalType(12, 2)))
-          .cast(DoubleType).as("revenue"))
-    },
-    "q14_promo_share" -> { (s, d) =>
-      // TPC-H Q14 shape: join + conditional aggregation (CASE inside SUM)
-      val p = Tables.part(s, d)
-      val l = Tables.lineitem(s, d)
-      // integer-cents accumulation; the /10000.0 on each sum mirrors the
-      // oracle's per-sum decimal→double cast before the share division
-      val cts = (n: String) => round(col(n) * 100).cast("long")
-      val revE4 = cts("l_extendedprice") * (lit(100L) - cts("l_discount"))
-      l.join(broadcast(p), l("l_partkey") === p("p_partkey"))
-        .agg(((sum(when(col("p_type") === "PROMO", revE4).otherwise(lit(0L)))
-          .cast(DoubleType) / 10000.0) * 100.0
-          / (sum(revE4).cast(DoubleType) / 10000.0)).as("promo_share"))
-    },
-    "scalar_strings" -> { (s, d) =>
-      Tables.part(s, d).select(
-        col("p_partkey"),
-        upper(col("p_name")).as("uname"),
-        substring(col("p_name"), 1, 3).as("prefix"),
-        concat_ws("|", col("p_brand"), col("p_type")).as("tag"),
-        length(col("p_name")).cast("long").as("name_len"),
-        col("p_name").like("%widget%").as("is_widget"),
-        replace(col("p_name"), lit(" "), lit("_")).as("snake"))
-    },
-    "scalar_arrays" -> { (s, d) =>
-      Tables.embeddings(s, d).select(
-        col("vec_id"),
-        array_max(col("embedding")).as("vmax"),
-        array_min(col("embedding")).as("vmin"),
-        size(col("embedding")).cast("long").as("dim"),
-        element_at(col("embedding"), 1).as("first"),
-        numCsv(slice(col("embedding"), 1, 4)).as("head4"),
-        array_contains(col("embedding"), lit(0.0f)).as("has_zero"))
-    },
-
-    // ---- block dedup (reference §2.4) ----------------------------------
-    "dedup_block_roundtrip" -> { (s, d) =>
-      val compressed = BlockDedup.compress(
-        Tables.events(s, d), col("user_id"), col("event_id"), Seq("event_type"))
-      BlockDedup.restore(compressed, "event_type")
-        .select(col("__ord").as("event_id"), col("event_type"))
-    },
-    "dedup_block_compressed" -> { (s, d) =>
-      BlockDedup.compress(
-        Tables.events(s, d), col("user_id"), col("event_id"), Seq("event_type"))
-        .select(col("block"),
-          rawCsv(col("event_type_uniq")).as("event_type_uniq"),
-          rawCsv(col("event_type_idx")).as("event_type_idx"))
-    },
-
-    // ---- partition / exchange (reference §2.5) -------------------------
-    "partition_modulo_shards" -> { (s, d) =>
-      Tables.events(s, d)
-        .groupBy(Partitioners.shardId(col("user_id"), 8).as("shard"))
-        .agg(count(lit(1)).as("n"))
-    },
-    "partition_dual_modulo" -> { (s, d) =>
-      val (node, dev) = Partitioners.dualModuloShard(col("user_id"), 4, 2)
-      Tables.events(s, d)
-        .groupBy(node.as("node"), dev.as("dev"))
-        .agg(count(lit(1)).as("n"))
-    },
-    "shuffle_batch_permutation" -> { (s, d) =>
-      // seeded shuffle must be a permutation of the input rows
-      Partitioners.shuffleRows(Tables.events(s, d), seed = 42L)
-        .select(col("event_id"))
-    },
-    "even_splits_count" -> { (s, d) =>
-      Partitioners.evenSplits(Tables.events(s, d), 7).agg(count(lit(1)).as("n"))
-    },
-
-    // ---- embedding lookup joins (reference §2.6) -----------------------
-    "lookup_join" -> { (s, d) =>
-      EmbeddingLookup.lookup(
-        Tables.events(s, d).select(col("event_id"), col("user_id")),
-        "user_id", Tables.embeddings(s, d), "vec_id", Seq("label"),
-        broadcastDim = true)
-    },
-    "lookup_dedup_join" -> { (s, d) =>
-      EmbeddingLookup.lookupDedup(
-        Tables.events(s, d).select(col("event_id"), col("user_id")),
-        "user_id", Tables.embeddings(s, d), "vec_id", Seq("label"))
-    },
-    "lookup_cache_miss" -> { (s, d) =>
-      val cache = Tables.embeddings(s, d).filter(col("vec_id") < 50)
-      val (_, misses) = EmbeddingLookup.cacheSplit(
-        Tables.events(s, d).select(col("event_id"), col("user_id")),
-        "user_id", cache, "vec_id")
-      misses
-    },
-    "input_layer_assemble" -> { (s, d) =>
-      // the reference's embedding-column input layer (hb.dense_features,
-      // docs/high_level_api.md:76-100) as engine-side data prep: two
-      // categorical id columns — an id bucket and a hashed string
-      // feature (Categorical.featureHash) — looked up in the embeddings
-      // table via broadcast joins, lookup misses zero-filled (both paths
-      // real at sf0.01: 500 vectors vs 1024/512 buckets), concatenated
-      // with the scaled dense features into one array<double> tensor per
-      // example
-      // gate contract: no non-scalar output columns (the driver's row
-      // sorter can't order arrays) — serialize the tensor via the
-      // micro-int CSV convention, mirrored in the oracle
-      EmbeddingLookup.inputLayer(
-        Tables.events(s, d),
-        col("event_id"),
-        numerics = Seq(
-          round(col("value") / 200.0, 9),
-          round(log(lit(1.0) + abs(col("value"))), 9)),
-        cats = Seq(
-          pmod(col("user_id"), lit(1024L)),
-          Categorical.featureHash(col("event_type"), 512)),
-        table = Tables.embeddings(s, d), keyCol = "vec_id", vecCol = "embedding")
-        .select(col("id"), numCsv(col("features")).as("features"))
-    },
-
-    "join_salted_skew" -> { (s, d) =>
-      // skew-mitigated equi-join: result set identical to the plain join
-      val dim = Tables.embeddings(s, d).select(col("vec_id").as("user_id"), col("label"))
-      SkewJoin.salted(
-        Tables.events(s, d).select(col("event_id"), col("user_id")),
-        dim, "user_id", saltFactor = 8, saltBy = Seq("event_id"))
-    },
-
-    // ---- ordered collect / range clip (reference §2.7-2.8) -------------
-    "groupby_collect_sorted" -> { (s, d) =>
-      RangeClip.collectHistory(
-        Tables.events(s, d), col("user_id"), col("event_id"), col("event_type"))
-        .select(col("key"), rawCsv(col("history")).as("history"))
-    },
-    "range_clip_window" -> { (s, d) =>
-      val e = Tables.events(s, d).withColumn("tsec", col("ts").cast("long"))
-      val w = RangeClip.recentWindow(col("user_id"), col("tsec"), 3600L)
-      e.select(
-        col("event_id"),
-        count(lit(1)).over(w).as("n_recent"),
-        numCsv(sort_array(collect_list(col("value")).over(w))).as("recent_vals"))
-    },
-
-    // ---- metrics (reference §2.7) --------------------------------------
-    "metric_weighted_mean" -> { (s, d) =>
-      // weighted mean in exact decimal arithmetic for oracle parity
-      val dec = (c: String) => col(c).cast(DecimalType(12, 2))
-      Tables.lineitem(s, d).agg(
-        (sum(dec("l_quantity") * dec("l_discount")).cast(DoubleType)
-          / sum(dec("l_discount")).cast(DoubleType)).as("wmean"))
-    },
-    "metric_accuracy" -> { (s, d) =>
-      Tables.events(s, d).agg(
-        Metrics.accuracy(col("event_type") === "error", col("value") > 100.0)
-          .as("accuracy"))
-    },
-    "metric_auc" -> { (s, d) =>
-      Metrics.aucExact(Tables.events(s, d), col("event_type") === "error", col("value"))
-    },
-    "metric_gauc" -> { (s, d) =>
-      Metrics.gauc(Tables.events(s, d), col("user_id"), col("event_type") === "error", col("value"))
-        .select(round(col("gauc"), 9).as("gauc"))
-    },
-    "metric_gauc_sorted" -> { (s, d) =>
-      // the sorted-scan per-group kernel (reference gauc.cc design) —
-      // same oracle as metric_gauc: results are bit-identical
-      Metrics.gaucSorted(Tables.events(s, d), col("user_id"), col("event_type") === "error", col("value"))
-        .select(round(col("gauc"), 9).as("gauc"))
-    },
-    "metric_gauc_per_group" -> { (s, d) =>
-      Metrics.gaucPerGroup(
-        Tables.events(s, d), col("user_id"), col("event_type") === "error", col("value"))
-    },
-    "metric_ndcg" -> { (s, d) =>
-      // graded-relevance ranking quality per user: purchase(3) > click(2)
-      // > view(1) > error(0), model order = value desc, NDCG@10
-      val rel = when(col("event_type") === "purchase", 3)
-        .when(col("event_type") === "click", 2)
-        .when(col("event_type") === "view", 1).otherwise(0)
-      Metrics.ndcgAtK(Tables.events(s, d), col("user_id"), rel,
-        col("value"), col("event_id"), k = 10)
-    },
-    "metric_mrr" -> { (s, d) =>
-      // where does the first purchase land in each user's value-ranked
-      // feed? (mean reciprocal rank@10)
-      Metrics.mrrAtK(Tables.events(s, d), col("user_id"),
-        col("event_type") === "purchase", col("value"), col("event_id"), k = 10)
-    },
-    "metric_calibration" -> { (s, d) =>
-      // is value/200 an honest error-probability? 10-bin ECE. value is
-      // pre-filtered for null/NaN BEFORE the least() clamp so the gate
-      // mirrors the oracle's WHERE even on dirty data (Spark's least()
-      // would otherwise skip NULL and clamp NaN to 1.0)
-      Metrics.calibrationError(
-        Tables.events(s, d).filter(col("value").isNotNull && !isnan(col("value"))),
-        col("event_type") === "error", least(col("value") / 200.0, lit(1.0)), bins = 10)
-    },
-
-    // ---- text analysis (training-data pipeline ops) --------------------
-    "text_stats" -> { (s, d) =>
-      val toks = TextFunctions.tokenize(col("text"))
-      Tables.documents(s, d).select(
-        col("doc_id"),
-        size(toks).cast("long").as("n_tokens"),
-        size(array_distinct(toks)).cast("long").as("n_uniq_tokens"),
-        TextFunctions.regexTokenCount(col("text")).cast("long").as("n_regex_tokens"),
-        (TextFunctions.stopwordCount(toks).cast("double") / size(toks)).as("stopword_ratio"),
-        TextFunctions.punctRatio(col("text")).as("punct_ratio"))
-    },
-    "text_quality" -> { (s, d) =>
-      Tables.documents(s, d).select(
-        col("doc_id"), TextFunctions.qualityScore(col("text")).as("quality"))
-    },
-    "text_langid" -> { (s, d) =>
-      Tables.documents(s, d).select(
-        col("doc_id"), TextFunctions.languageId(col("text")).as("lang_pred"))
-    },
-    "text_tfidf_topk" -> { (s, d) =>
-      TermStats.tfIdfTopTerms(Tables.documents(s, d), col("doc_id"), col("text"), k = 5)
-    },
-    "text_lm_score" -> { (s, d) =>
-      // in-domain bigram-LM cross-entropy per document (train = score =
-      // the corpus): low = boilerplate, high = surprising text
-      val docs = Tables.documents(s, d)
-      TermStats.bigramCrossEntropy(docs, docs, col("doc_id"), col("text"))
-    },
-    "text_vocab_topn" -> { (s, d) =>
-      // vocabulary build: corpus-wide term frequencies, top-100 with a
-      // deterministic tie-break — explode + map-side-combinable count +
-      // TakeOrderedAndProject (per-partition top-k, only fragments travel)
-      Tables.documents(s, d)
-        .select(explode(TextFunctions.tokenize(col("text"))).as("term"))
-        .groupBy(col("term")).agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("term")).limit(100)
-    },
-    "text_quality_filter" -> { (s, d) =>
-      // corpus-quantile curation cut: drop the worst quartile
-      TermStats.qualityFilter(
-        Tables.documents(s, d).select("doc_id", "text"), col("text"), 0.25)
-        .select("doc_id", "quality")
-    },
-    "text_fingerprint" -> { (s, d) =>
-      Tables.documents(s, d).select(
-        col("doc_id"), TextFunctions.fingerprint(col("text")).as("fp"))
-    },
-
-    // ---- deduplication suite -------------------------------------------
-    "dedup_exact_groups" -> { (s, d) =>
-      NearDup.exactGroups(Tables.documents(s, d), col("doc_id"), col("text"))
-    },
-    "dedup_span_coverage" -> { (s, d) =>
-      // span-granular (substring-level) duplication: exact token
-      // coverage of 5-grams shared across documents
-      NearDup.duplicatedSpans(Tables.documents(s, d), col("doc_id"),
-        col("text"), n = 5)
-    },
-    "dedup_span_removal" -> { (s, d) =>
-      // the excision transform: duplicated passages removed everywhere
-      // but their minimum-id holder, text rebuilt by the native kernel
-      NearDup.removeDuplicatedSpans(Tables.documents(s, d), col("doc_id"),
-        col("text"), n = 5)
-    },
-    "dedup_line_level" -> { (s, d) =>
-      // C4-style boilerplate-line removal: "lines" are disjoint 10-token
-      // segments (the corpus stores single-line token streams; real
-      // crawl text would pass split(text, "\n")); a line shared across
-      // documents survives only in its minimum-id holder
-      val toks = TextFunctions.tokenize(col("text"))
-      val nL = ceil(size(toks) / 10.0).cast("int")
-      val lines = when(size(toks) === 0, array().cast("array<string>"))
-        .otherwise(transform(sequence(lit(0), nL - 1),
-          i => array_join(slice(toks, i * 10 + 1, lit(10)), " ")))
-      NearDup.removeDuplicateLines(
-        Tables.documents(s, d).select(col("doc_id"), lines.as("lines")),
-        col("doc_id"), col("lines"))
-    },
-    "dedup_ngram_jaccard" -> { (s, d) =>
-      // dfCap = 20: stop-shingles (df > 20) are dropped before the
-      // self-join — bounds the join fanout to df² ≤ 400 rows per shingle
-      NearDup.jaccardPairs(Tables.documents(s, d), col("doc_id"), col("text"),
-        n = 3, threshold = 0.5, dfCap = 20)
-    },
-    "dedup_minhash_lsh" -> { (s, d) =>
-      NearDup.minHashNearDups(Tables.documents(s, d), col("doc_id"), col("text"),
-        n = 3, k = 16, bands = 4, threshold = 0.5)
-    },
-    "dedup_incremental_pairs" -> { (s, d) =>
-      // incremental-ingestion dedup: a 1-in-5 "arriving batch" matched
-      // against the remaining 4/5 "canonical corpus" — new-vs-corpus
-      // band join only, never corpus-vs-corpus
-      val docs = Tables.documents(s, d)
-      NearDup.minHashNearDupsAgainst(
-        docs.filter(pmod(col("doc_id"), lit(5)) === 0),
-        docs.filter(pmod(col("doc_id"), lit(5)) =!= 0),
-        col("doc_id"), col("text"), n = 3, k = 16, bands = 4, threshold = 0.5)
-    },
-    "dedup_ingest_novel" -> { (s, d) =>
-      // the ingest filter: new-batch docs that survive (near-dup nothing
-      // in the corpus) — what actually gets appended
-      val docs = Tables.documents(s, d)
-      NearDup.ingestNovel(
-        docs.filter(pmod(col("doc_id"), lit(5)) === 0),
-        docs.filter(pmod(col("doc_id"), lit(5)) =!= 0),
-        col("doc_id"), col("text"), n = 3, k = 16, bands = 4, threshold = 0.5)
-        .select(col("doc_id"), col("source"))
-    },
-    "dedup_cluster_components" -> { (s, d) =>
-      // pairs -> transitive duplicate clusters (large-star/small-star CC)
-      val pairs = NearDup.minHashNearDups(Tables.documents(s, d),
-        col("doc_id"), col("text"), n = 3, k = 16, bands = 4, threshold = 0.5)
-      DedupClusters.connectedComponents(pairs, col("doc_a"), col("doc_b"))
-    },
-    "dedup_corpus_canonical" -> { (s, d) =>
-      // the full corpus-dedup pipeline: detect pairs -> cluster -> keep
-      // one (min-id) representative per cluster
-      val docs = Tables.documents(s, d)
-      val pairs = NearDup.minHashNearDups(docs, col("doc_id"), col("text"),
-        n = 3, k = 16, bands = 4, threshold = 0.5)
-      DedupClusters.canonicalize(
-        docs.select("doc_id", "lang", "source", "n_chars"),
-        col("doc_id"), pairs, col("doc_a"), col("doc_b"))
-    },
-    "dedup_canonical_quality" -> { (s, d) =>
-      // quality-aware canonicalization: each duplicate cluster keeps its
-      // BEST-quality member (ties -> smallest id), not the min-id one —
-      // scores rounded to 9 decimals so tie detection is engine-invariant
-      val docs = Tables.documents(s, d)
-      val pairs = NearDup.minHashNearDups(docs, col("doc_id"), col("text"),
-        n = 3, k = 16, bands = 4, threshold = 0.5)
-      DedupClusters.canonicalizeBy(
-        docs.select(col("doc_id"), col("text"), col("source")),
-        col("doc_id"), round(TextFunctions.qualityScore(col("text")), 9),
-        pairs, col("doc_a"), col("doc_b"))
-        .select(col("doc_id"), col("source"))
-    },
-    "dedup_simhash" -> { (s, d) =>
-      NearDup.simHash(Tables.documents(s, d), col("doc_id"), col("text"))
-    },
-    "dedup_simhash_pairs" -> { (s, d) =>
-      // doc_id bound keeps the bench predictable: the synthetic corpus's
-      // tiny vocabulary makes hamming<=2 pairs genuinely dense (~5% of
-      // all pairs), so the full-corpus pair set grows quadratically
-      NearDup.simHashNearDups(
-        Tables.documents(s, d).filter(col("doc_id") < 2000),
-        col("doc_id"), col("text"), maxHamming = 2)
-    },
-    "dedup_simhash_pairs_full" -> { (s, d) =>
-      // the unbounded form: full-corpus banded pairs. At gate scale it
-      // covers the same 500 docs as the bounded query; at bench scale
-      // (replicated corpora) it is the one that actually scales with the
-      // data — the bounded variant above exists because the SYNTHETIC
-      // sf0.1 corpus's tiny vocabulary makes hamming<=2 pairs ~5% dense
-      val docs = Tables.documents(s, d)
-      NearDup.simHashNearDups(docs, col("doc_id"), col("text"), maxHamming = 2)
-    },
-    "dedup_embedding_neardup" -> { (s, d) =>
-      Ann.cosineNearDups(
-        Tables.embeddings(s, d).select(col("vec_id").as("id"), col("embedding").as("vec")),
-        threshold = 0.3, bits = 8)
-    },
-
-    "graph_pagerank" -> { (s, d) =>
-      // item centrality over the co-purchase graph: parts sharing an
-      // order are linked (both directions); 3 integer-nano PageRank
-      // sweeps, bit-reproduced by the oracle's unrolled SQL
-      val edges = Graph.coOccurrenceEdges(Tables.lineitem(s, d),
-        col("l_orderkey"), col("l_partkey"))
-      Graph.pageRankNano(edges, iters = 3)
-        .select(col("id").as("part_id"), col("rank").as("rank_nano"))
-    },
-    "dedup_semantic_prune" -> { (s, d) =>
-      // SemDeDup-shaped cluster-then-prune: trained k-means cells, then
-      // within-cell smaller-id-neighbor pruning at cosine >= 0.3 —
-      // survivors with their cell ids. The oracle RE-TRAINS the model
-      // from scratch (integer-grid k-means is bit-reproducible).
-      Ivf.semanticPrune(
-        Tables.embeddings(s, d).select(col("vec_id").as("id"), col("embedding").as("vec")),
-        threshold = 0.3, k = 8, iters = 2, scale = 1000.0)
-    },
-    "dedup_embedding_neardup_wide" -> { (s, d) =>
-      // the scale knob demonstrated: 12 sign bits -> 4096 buckets. Within-
-      // bucket pair volume shrinks ~16x vs bits=8 (recall trades away
-      // cross-bucket pairs); at 400k vectors this is the setting that
-      // keeps the all-pairs block per bucket dense-BLAS-sized
-      Ann.cosineNearDups(
-        Tables.embeddings(s, d).select(col("vec_id").as("id"), col("embedding").as("vec")),
-        threshold = 0.3, bits = 12)
-    },
-
-    // ---- similarity search ---------------------------------------------
-    "ann_topk_brute" -> { (s, d) =>
-      val emb = Tables.embeddings(s, d).select(col("vec_id").as("id"), col("embedding").as("vec"))
-      Ann.bruteForceTopK(emb.filter(col("id") < 16), emb, k = 5)
-    },
-    "ann_topk_bucketed" -> { (s, d) =>
-      val emb = Tables.embeddings(s, d).select(col("vec_id").as("id"), col("embedding").as("vec"))
-      Ann.bucketedTopK(emb.filter(col("id") < 16), emb, k = 5, bits = 6)
-    },
-    "ann_topk_multiprobe" -> { (s, d) =>
-      val emb = Tables.embeddings(s, d).select(col("vec_id").as("id"), col("embedding").as("vec"))
-      Ann.bucketedTopKMultiProbe(emb.filter(col("id") < 16), emb, k = 5, bits = 6, probes = 3)
-    },
-    "ann_recall_ivf" -> { (s, d) =>
-      // recall-GRADED ANN: the quality/speed trade the exact-shape ANN
-      // gates can't see. IVF at nprobe=4 of 8 cells (half the corpus
-      // cells scanned) must keep recall@5 ≥ 0.6 against the exact
-      // brute-force top-k over a 1-in-50 query sample (measured 0.70 at
-      // sf0.01 / 0.725 at sf0.1 — PERF.md r9). The invariant is
-      // integer-exact (hits·10 ≥ total·6, k-means training is
-      // bit-reproducible), so the oracle checks the SAME row: ok=1 plus
-      // the brute pair count it recomputes in SQL — recall below the
-      // bound flips ok to 0 and hash-fails the gate.
-      //
-      // ORACLE CONTRACT — deliberately ONE-SIDED on the hit count: the
-      // numerator (|IVF pairs ∩ brute pairs|) exists only by running
-      // IVF — its k-means cell assignment has no SQL oracle form — so
-      // DuckDB recomputes the DENOMINATOR exactly (n_brute, both
-      // engines' brute top-5 over the same sample) and pins
-      // recall_ok=1; the Spark side alone grades the numerator against
-      // the bound. What the gate therefore proves: the brute baseline
-      // is bit-identical across engines, and IVF's recall never drops
-      // below 0.6 without hash-failing. What it cannot prove: that the
-      // hit count itself wasn't miscounted by a bug that keeps it
-      // above the bound (that join is pinned by IvfSpec instead).
-      val emb = Tables.embeddings(s, d).select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val q = emb.filter(pmod(col("id"), lit(50)) === 0)
-      val brute = Ann.bruteForceTopK(q, emb, k = 5).select(col("q_id"), col("n_id"))
-      val ivf = Ivf.topK(q, emb, k = 5,
-          nClusters = 8, iters = 2, nprobe = 4, scale = 1000.0)
-        .select(col("q_id"), col("n_id"))
-      val hits = ivf.join(brute, Seq("q_id", "n_id"), "left_semi")
-        .agg(count(lit(1)).as("hits"))
-      val tot = brute.agg(count(lit(1)).as("n_brute"))
-      hits.crossJoin(broadcast(tot))
-        .select(when(col("hits") * 10 >= col("n_brute") * 6, 1L).otherwise(0L)
-          .as("recall_ok"), col("n_brute"))
-    },
-    "ann_hard_negatives" -> { (s, d) =>
-      // contrastive-training hard-negative mining: most-similar
-      // same-bucket vectors with a DIFFERENT label
-      val emb = Tables.embeddings(s, d).select(col("vec_id").as("id"),
-        col("embedding").as("vec"), col("label"))
-      Ann.hardNegatives(emb.filter(col("id") < 16), emb, k = 5, bits = 6)
-    },
-    "multimodal_image_decode" -> { (s, d) =>
-      // REAL image decode (javax.imageio — the JDK ships the codec):
-      // deterministic PNGs encoded per doc id, decoded distributed in
-      // per-partition batches, exact per-channel pixel sums checked
-      // against the oracle's closed form (PNG is lossless)
-      Multimodal.decodeImageStats(s,
-        packedMedia(s, d, Some(200L))(Multimodal.synthImagePng(_)))
-    },
-    "multimodal_image_resize" -> { (s, d) =>
-      // decode + nearest-neighbor thumbnail (8x8 -> 4x4) in one batch
-      // pass; resized channel sums vs the closed form (source pixel
-      // (2x, 2y) — integer indexing, no blending, exact)
-      Multimodal.resizeImageStats(s,
-        packedMedia(s, d, Some(200L))(Multimodal.synthImagePng(_)), tw = 4, th = 4)
-    },
-    "multimodal_audio_decode" -> { (s, d) =>
-      // REAL audio decode (javax.sound.sampled — WAV/PCM ships with the
-      // JDK): 256-sample PCM clips per id, decoded distributed,
-      // length/energy features vs the closed form (PCM is lossless)
-      Multimodal.decodeAudioStats(s,
-        packedMedia(s, d, Some(200L))(Multimodal.synthWav(_)))
-    },
-    "multimodal_frame_sample" -> { (s, d) =>
-      // REAL frame sampling over the JDK's multi-frame codec (GIF, the
-      // video stand-in): 6-frame clips per id, every 2nd frame decoded,
-      // per-frame channel sums vs the closed form (<=64 colors/frame,
-      // far under GIF's palette — lossless)
-      Multimodal.sampleFrameStats(s,
-        packedMedia(s, d, Some(100L))(Multimodal.synthGif(_, frames = 6)), stride = 2)
-    },
-    "multimodal_image_decode_bulk" -> { (s, d) =>
-      // corpus-scale decode shape: ONE synthesized PNG per document (no
-      // id cap — encode+decode work scales with the corpus, unlike the
-      // fixture-bounded gates above); the closed-form oracle covers
-      // every row, so the gate stays exact at any sf
-      Multimodal.decodeImageStats(s,
-        packedMedia(s, d, None)(Multimodal.synthImagePng(_)))
-    },
-    "multimodal_image_neardup" -> { (s, d) =>
-      // perceptual-hash image dedup: REAL PNG decode -> 64-bit dHash ->
-      // banded Hamming pairs (exact recall by pigeonhole); the fixture
-      // images come in groups of 4 (exact + 1-bit-near duplicates, no
-      // cross-group noise) and the oracle re-derives every fingerprint
-      // from the pixel closed form
-      Multimodal.imageNearDupPairs(s,
-        packedMedia(s, d, Some(200L))(Multimodal.synthImageSeries(_)), maxHamming = 2)
-    },
-    "multimodal_audio_neardup" -> { (s, d) =>
-      // perceptual audio dedup: REAL WAV decode -> 63-bit energy-profile
-      // fingerprint -> banded Hamming pairs; clips come in groups of 4
-      // (exact + 1-bit-near duplicates, zero cross-group noise) and the
-      // oracle re-derives every fingerprint from the sample closed form
-      Multimodal.audioNearDupPairs(s,
-        packedMedia(s, d, Some(200L))(Multimodal.synthWavSeries(_)), maxHamming = 2)
-    },
-    "sketch_kmv_overlap" -> { (s, d) =>
-      // contamination screening sketch: how much of corpus B's content
-      // already appears in corpus A, estimated from two O(64) KMV
-      // sketches over text fingerprints — the oracle reproduces the
-      // estimate bit-for-bit from the same mod-P hashes
-      val docs = Tables.documents(s, d)
-      Sketches.kmvOverlap(
-        docs.filter(col("doc_id") % 2 === 0), TextFunctions.polyHash(col("text")),
-        docs.filter(col("doc_id") % 3 === 0), TextFunctions.polyHash(col("text")),
-        k = 64, seed = 17L)
-    },
-    "sample_dsir_topn" -> { (s, d) =>
-      // DSIR importance resampling (data selection for pretraining):
-      // hashed-unigram bucket log-likelihood ratios of target (English
-      // docs) vs raw score every raw doc; keep the 50 most target-like.
-      // Nano-integer weights make every cross-row aggregate order-free.
-      val docs = Tables.documents(s, d)
-      Importance.resampleTopN(
-        docs, docs.filter(col("lang") === "en"),
-        col("doc_id"), col("text"), buckets = 512, n = 50)
-    },
-    "text_bm25_topk" -> { (s, d) =>
-      // lexical retrieval: three keyword queries over the corpus,
-      // BM25-ranked (nano-integer scores — order-free float parity)
-      import s.implicits._
-      val queries = Seq((0L, "spark"), (0L, "join"), (1L, "hash"),
-        (1L, "table"), (2L, "window"), (2L, "sort"), (2L, "merge"))
-        .toDF("query_id", "term")
-      TermStats.bm25TopK(Tables.documents(s, d), col("doc_id"), col("text"),
-        queries, k = 10)
-    },
-    "ordinal_stable_ids" -> { (s, d) =>
-      // contiguous global ordinals by (n_chars, doc_id) WITHOUT a
-      // single-partition sort: two-phase bucketed ranks (the
-      // PlanShapeSpec unpartitioned-window guard holds for this gate
-      // like every other — the naive row_number form would trip it)
-      Partitioners.stableIds(
-        Tables.documents(s, d).select(col("doc_id"), col("n_chars")),
-        col("n_chars"), Seq(col("doc_id")))
-        .select(col("doc_id"), col("n_chars"), col("ordinal"))
-    },
-    "encode_categorical" -> { (s, d) =>
-      // dictionary + hashing-trick encodings side by side: lang has
-      // distinct frequencies, source is an all-ties dictionary (index
-      // falls to the value tiebreak)
-      val docs = Tables.documents(s, d)
-      val langDict = Categorical.stringIndex(docs, col("lang"))
-      val srcDict = Categorical.stringIndex(docs, col("source"))
-      val out = Categorical.indexApply(
-        Categorical.indexApply(docs.select(col("doc_id"), col("lang"), col("source")),
-          "lang", langDict, "lang_idx"),
-        "source", srcDict, "source_idx")
-      out.select(col("doc_id"), col("lang_idx"), col("source_idx"),
-        Categorical.featureHash(col("lang"), 1024).as("lang_hash"),
-        Categorical.featureHash(col("source"), 1024).as("source_hash"))
-    },
-    "encode_target_loo" -> { (s, d) =>
-      // leave-one-out smoothed target encoding of event_type against the
-      // value label (m=10): per-row feature excluding the row's own
-      // label, exact integer-cents sums (2-dp labels; == the DECIMAL
-      // path, spec-asserted), single-member categories -> prior
-      Categorical.targetEncodeLoo(
-        Tables.events(s, d).select(col("event_id"), col("event_type"), col("value")),
-        col("event_type"), col("value"), smoothing = 10L, labelCents = true)
-        .select(col("event_id"), col("event_type"), col("target_enc"))
-    },
-    "feature_quantile_bin" -> { (s, d) =>
-      // equal-mass deciles of event value by exact global rank (ties
-      // share a bin); distributed rank via the bucketed prefix-sum, no
-      // global window
-      FeatureScale.quantileBin(
-        Tables.events(s, d), col("event_id"), col("value"), bins = 10)
-        .select(col("id").as("event_id"), col("v").as("value"), col("bin"))
-    },
-    "hybrid_rrf_fusion" -> { (s, d) =>
-      // the full hybrid-retrieval composition: BM25 lexical top-20 +
-      // bucketed-ANN dense top-20, fused by reciprocal rank (K=60).
-      // doc_id and vec_id share the id space in the synthetic corpus,
-      // and query ids 0-2 name both a keyword set and a query vector.
-      import s.implicits._
-      val queries = Seq((0L, "spark"), (0L, "join"), (1L, "hash"),
-        (1L, "table"), (2L, "window"), (2L, "sort"), (2L, "merge"))
-        .toDF("query_id", "term")
-      val lex = TermStats.bm25TopK(Tables.documents(s, d), col("doc_id"),
-        col("text"), queries, k = 20)
-        .select(col("query_id"), col("doc_id"), col("rn"))
-      val emb = Tables.embeddings(s, d)
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val dense = Ann.bucketedTopK(emb.filter(col("id") < 3), emb, k = 20, bits = 6)
-        .select(col("q_id").as("query_id"), col("n_id").as("doc_id"), col("rn"))
-      Fusion.rrf(lex, dense, k = 10)
-    },
-    "hybrid_search_rerank" -> { (s, d) =>
-      // the full retrieval workflow users compose: ANN candidate
-      // generation (bucketed, top-20) -> join candidate docs -> language
-      // filter -> re-rank by cosine x quality -> top-5 per query.
-      // doc_id and vec_id share the id space in the synthetic corpus.
-      import org.apache.spark.sql.expressions.Window
-      val emb = Tables.embeddings(s, d).select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val cands = Ann.bucketedTopK(emb.filter(col("id") < 8), emb, k = 20, bits = 6)
-        .select(col("q_id"), col("n_id"), col("cosine"))
-      val scored = cands
-        .join(Tables.documents(s, d), cands("n_id") === col("doc_id"))
-        .filter(TextFunctions.languageId(col("text")) === "en")
-        .select(col("q_id"), col("doc_id"),
-          round(col("cosine") * TextFunctions.qualityScore(col("text")), 9).as("score"))
-      val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("doc_id"))
-      scored.withColumn("rn", row_number().over(w).cast("long")).filter(col("rn") <= 5)
-    },
-    "ivf_kmeans_clusters" -> { (s, d) =>
-      // trained IVF coarse quantizer: integer k-means (k=8, 2 Lloyd
-      // iterations) + cell occupancy — the oracle re-trains the same
-      // centroids from scratch (training is FP-free, see Ivf)
-      val emb = Tables.embeddings(s, d).select(col("vec_id").as("id"), col("embedding").as("vec"))
-      Ivf.clusterSummary(emb, col("id"), col("vec"), k = 8, iters = 2, scale = 1000.0)
-        .select(col("cluster_id"), col("n_vectors"), rawCsv(col("centroid")).as("centroid"))
-    },
-    "ann_topk_ivf" -> { (s, d) =>
-      // IVF probe search: each query scans only its 2 nearest trained
-      // cells (vs the data-oblivious sign buckets of ann_topk_bucketed)
-      val emb = Tables.embeddings(s, d).select(col("vec_id").as("id"), col("embedding").as("vec"))
-      Ivf.topK(emb.filter(col("id") < 16), emb, k = 5,
-        nClusters = 8, iters = 2, nprobe = 2, scale = 1000.0)
-    },
-    "embedding_quantize_int8" -> { (s, d) =>
-      // symmetric int8 compression: 4x smaller vectors + dequant scale
-      val emb = Tables.embeddings(s, d).select(col("vec_id").as("id"), col("embedding").as("vec"))
-      Ivf.quantizeInt8(emb, col("id"), col("vec"))
-        .select(col("id").as("vec_id"), rawCsv(col("codes")).as("codes"), col("scale"))
-    },
-    "ann_topk_int8" -> { (s, d) =>
-      // ANN over int8 codes ranked by EXACT integer dot product — the
-      // FP-free fast path over compressed vectors
-      val emb = Tables.embeddings(s, d).select(col("vec_id").as("id"), col("embedding").as("vec"))
-      Ivf.topKInt8(emb.filter(col("id") < 16), emb, k = 5)
-    },
-    "pq_codebooks" -> { (s, d) =>
-      // product-quantization codebooks: 4 subspaces x 4 centroids over
-      // the 64-dim embeddings (integer k-means per subspace, 2 Lloyd
-      // sweeps) + per-cell occupancy — the oracle re-trains every
-      // codebook from scratch (training is FP-free, see Pq)
-      val emb = Tables.embeddings(s, d).select(col("vec_id").as("id"), col("embedding").as("vec"))
-      Pq.codebookSummary(emb, col("id"), col("vec"),
-        m = 4, ksub = 4, iters = 2, scale = 1000.0, dim = 64)
-    },
-    "ann_topk_pq" -> { (s, d) =>
-      // PQ asymmetric-distance search: corpus stored as 4 codes/vector
-      // (16x smaller than the floats), each query ranks by m BIGINT
-      // table lookups per neighbor — the compressed-storage ANN path,
-      // bit-exact end to end (no FP anywhere)
-      val emb = Tables.embeddings(s, d).select(col("vec_id").as("id"), col("embedding").as("vec"))
-      Pq.adcTopK(emb.filter(col("id") < 16), emb, k = 5,
-        m = 4, ksub = 4, iters = 2, scale = 1000.0, dim = 64)
-    },
-    "classifier_train_lr" -> { (s, d) =>
-      // distributed full-batch GD on hard-sigmoid logistic loss (the
-      // corpus-curation quality-classifier loop) — pure fixed-point:
-      // one d-long Aggregator buffer per iteration, driver holds only
-      // weights; the oracle re-trains bit-for-bit
-      val feats = Classifier.embeddingFeatures(Tables.embeddings(s, d),
-        col("vec_id"), col("embedding"), col("label") < 5, scale = 1000.0)
-      Classifier.weightsFrame(feats, d = 65, iters = 3, lrMilli = 4000L)
-    },
-    "classifier_lr_confusion" -> { (s, d) =>
-      // the trained model applied back over the corpus: confusion
-      // matrix of [p >= 1/2] vs the weak label — one narrow map over a
-      // weight literal + a 4-group aggregate
-      val feats = Classifier.embeddingFeatures(Tables.embeddings(s, d),
-        col("vec_id"), col("embedding"), col("label") < 5, scale = 1000.0)
-      Classifier.confusion(feats, d = 65, iters = 3, lrMilli = 4000L)
-    },
-    "embedding_gram_matrix" -> { (s, d) =>
-      // distributed Gram matrix (PCA/whitening sufficient statistic) on
-      // the floor(v*1000) integer grid — exact BIGINT pair sums via one
-      // in-place Aggregator buffer; the oracle recomputes the full
-      // unnest×unnest relational formulation
-      Gram.upperGram(s, Tables.embeddings(s, d), col("embedding"), d = 64)
-    },
-    "q5_local_supplier" -> { (s, d) =>
-      // TPC-H Q5 shape: 6-way join chain + filtered agg; exercises
-      // Catalyst join ordering + broadcast selection across dims
-      val r = Tables.region(s, d).filter(col("r_name") === "ASIA")
-      // Selective-first join order (what a stats-fed CBO would pick):
-      // region→nation→customer reduce orders to the ASIA slice BEFORE
-      // the fact join, so the one non-broadcast join builds the
-      // 1/|regions| orders slice as a shuffle_hash (no SMJ fact sort).
-      val asiaNations = Tables.nation(s, d)
-        .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-      val custAsia = Tables.customer(s, d)
-        .join(broadcast(asiaNations), col("c_nationkey") === col("n_nationkey"))
-      // no broadcast hint on the customer slice: AQE broadcasts it at
-      // bench proportions from stats; at cluster scale it's a shuffle
-      // join at orders grain (25× smaller than line grain)
-      // NOT bloom-reduced, deliberately: unlike q3 (where pruning feeds
-      // a 30M-group reducing aggregate), the pruned fact here feeds a
-      // JOIN, so the saved exchange bytes equal the bloom's build+probe
-      // cost — measured at x200: 7.4 s plain vs 7.8–8.9 s across three
-      // bloom/checkpoint variants. The fact exchange is the floor.
-      val ordersAsia = Tables.orders(s, d)
-        .join(custAsia.select(col("c_custkey"), col("c_nationkey"), col("n_name")),
-          col("o_custkey") === col("c_custkey"))
-      val cts = (n: String) => round(col(n) * 100).cast("long")
-      Tables.lineitem(s, d)
-        .join(ordersAsia.hint("shuffle_hash"), col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(Tables.supplier(s, d)),
-          col("l_suppkey") === col("s_suppkey") && col("c_nationkey") === col("s_nationkey"))
-        .groupBy(col("n_name"))
-        .agg((sum(cts("l_extendedprice") * (lit(100L) - cts("l_discount")))
-          .cast(DoubleType) / 10000.0).as("revenue"))
-        .orderBy(col("revenue").desc)
-    },
-
-    // ---- window functions / sorts (reference §2.8 + superset) ----------
-    "window_rank_lag" -> { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      val e = Tables.events(s, d).withColumn("tsec", col("ts").cast("long"))
-      val w = Window.partitionBy(col("user_id")).orderBy(col("tsec"), col("event_id"))
-      e.select(
-        col("event_id"),
-        row_number().over(w).cast("long").as("rn"),
-        lag(col("value"), 1).over(w).as("prev_value"),
-        sum(col("value").cast(DecimalType(12, 2)))
-          .over(w.rowsBetween(Window.unboundedPreceding, 0))
-          .cast(DoubleType).as("run_sum"))
-    },
-    "sessionize_batch" -> { (s, d) =>
-      val e = Tables.events(s, d).withColumn("tsec", col("ts").cast("long"))
-      Sessionize.sessionCounts(e, col("user_id"),
-        col("tsec"), struct(col("tsec"), col("event_id")), gapSeconds = 1800L)
-    },
-    "session_window_agg" -> { (s, d) =>
-      // native session windows (the construct that runs unchanged under
-      // Structured Streaming with a watermark — StreamingSpec proves
-      // streaming==batch): per-user 30-min-gap sessions with start/end
-      // bounds. ts truncated to whole seconds so the gap comparison is
-      // mirrored exactly by the second-granularity oracle; the window is
-      // GAP-INCLUSIVE (an event exactly `gap` after the previous one
-      // still merges — verified against a real 1800 s gap at sf0.1), so
-      // the oracle's new-session predicate is diff > gap, not >=.
-      Tables.events(s, d)
-        .withColumn("tss", timestamp_seconds(col("ts").cast("long")))
-        .groupBy(col("user_id"), session_window(col("tss"), "30 minutes"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("user_id"),
-          col("session_window.start").cast("long").as("session_start"),
-          col("session_window.end").cast("long").as("session_end"), col("n"))
-    },
-
-    "sessionize_bounds_sorted" -> { (s, d) =>
-      // the sorted-kernel batch path for session bounds: one narrow
-      // (key, ts) exchange + one in-partition sort + a streaming
-      // gaps-and-islands pass — identical rows to session_window_agg
-      // (SessionizeSpec proves it) without the per-row window structs
-      // and MergingSessions machinery. x200: 5.1 → ~2 s (PERF.md r9).
-      Sessionize.sessionBoundsSorted(Tables.events(s, d),
-        col("user_id"), col("ts").cast("long"), gapSeconds = 1800L)
-        .withColumnRenamed("key", "user_id")
-    },
-
-    // ---- set operations (reference §2.9, superset) ---------------------
-    "setop_users" -> { (s, d) =>
-      val e = Tables.events(s, d)
-      val err = e.filter(col("event_type") === "error").select(col("user_id")).distinct()
-      val pur = e.filter(col("event_type") === "purchase").select(col("user_id")).distinct()
-      err.intersect(pur).withColumn("op", lit("both"))
-        .unionAll(err.except(pur).withColumn("op", lit("error_only")))
-    },
-
-    // ---- grouping sets / rollup / cube (superset) ----------------------
-    "agg_rollup" -> { (s, d) =>
-      Tables.events(s, d)
-        .rollup(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast(DecimalType(12, 2))).cast(DoubleType).as("sum_value"))
-    },
-    "agg_cube" -> { (s, d) =>
-      Tables.events(s, d)
-        .cube(col("event_type"), pmod(col("user_id"), lit(2)).as("par"))
-        .agg(count(lit(1)).as("n"))
-    },
-
-    // ---- scalar function families (reference §2.10) --------------------
-    "scalar_funcs" -> { (s, d) =>
-      Tables.lineitem(s, d).select(
-        col("l_orderkey"),
-        col("l_linenumber").cast("long").as("ln"),
-        pmod(col("l_orderkey"), lit(7)).as("pm"),
-        expr("l_orderkey div 7").as("dv"),
-        round(log(lit(1.0) + col("l_extendedprice")), 9).as("log_price"),
-        (col("l_extendedprice") / 32.0).as("price_norm"),
-        rawCsv(sequence(lit(1L), col("l_linenumber").cast("long"))).as("seq"),
-        rawCsv(array_repeat(col("l_linenumber").cast("long"), 3)).as("rep"),
-        element_at(sequence(lit(1L), col("l_linenumber").cast("long")), 1).as("first_elem"))
-    },
-
-    "scalar_json" -> { (s, d) =>
-      // JSON column extraction (superset; reference stores plain columns)
-      Tables.events(s, d).select(
-        col("event_id"),
-        get_json_object(col("props"), "$.k").as("k_str"),
-        get_json_object(col("props"), "$.k").cast("long").as("k_num"))
-    },
-    "scalar_dates" -> { (s, d) =>
-      Tables.orders(s, d).select(
-        col("o_orderkey"),
-        year(col("o_orderdate")).cast("long").as("y"),
-        month(col("o_orderdate")).cast("long").as("m"),
-        dayofmonth(col("o_orderdate")).cast("long").as("dom"),
-        trunc(col("o_orderdate"), "month").as("month_start")) // DateType
-    },
-    "agg_percentiles" -> { (s, d) =>
-      // exact interpolated percentiles (median etc.)
-      Tables.lineitem(s, d).groupBy(col("l_returnflag")).agg(
-        round(expr("percentile(l_quantity, 0.5)"), 9).as("p50"),
-        round(expr("percentile(l_quantity, 0.9)"), 9).as("p90"))
-    },
-
-    // ---- streaming-shaped windowed aggregation (reference §2.11) -------
-    "stream_window_counts" -> { (s, d) =>
-      StreamingOps.windowedCounts(Tables.events(s, d), "1 hour")
-    },
-
-    // ---- ragged structural conversions (reference to_sparse, §1.1) -----
-    "ragged_to_coo" -> { (s, d) =>
-      Ragged.toCoo(Tables.documents(s, d), col("doc_id"),
-        TextFunctions.tokenize(col("text")))
-        .select(col("key").as("doc_id"), col("pos").cast("long").as("pos"),
-          col("value").as("token"))
-    },
-
-    // ---- reference-exact consecutive GAUC (gauc.cc:100-116) ------------
-    "metric_gauc_consecutive" -> { (s, d) =>
-      // run-detection needs a GLOBAL order (single-partition window by
-      // design — the documented reference-exact mode; gauc/gaucSorted
-      // are the scale paths), so the gate evaluates it on a bounded
-      // slice: a no-op at gate scale (sf0.01 has 10k events) that stops
-      // the one legitimately-serial mode from serializing a 100x bench
-      Metrics.gaucConsecutive(
-        Tables.events(s, d).filter(col("event_id") < 50000),
-        col("event_id"), col("user_id"),
-        col("event_type") === "error", col("value"))
-    },
-
-    // ---- Criteo-shaped wide frame: defaults + norm/log + dim lookup ----
-    "pipeline_criteo_shaped" -> { (s, d) =>
-      val fields = Seq(
-        FieldSpec("l_orderkey", LongType),
-        FieldSpec("l_partkey", LongType),
-        FieldSpec("l_quantity", DoubleType),
-        FieldSpec("l_extendedprice", DoubleType),
-        FieldSpec("l_returnflag", StringType),
-        FieldSpec("if13", LongType, defaultValue = Some(0L))) // missing -> default
-      val li = TabularReader.fromParquet(s, Seq(s"$d/lineitem.parquet"),
-        TabularReader.Options(fields = fields))
-        .select(
-          col("l_orderkey"), col("l_partkey"),
-          when(col("l_returnflag") === "R", 1L).otherwise(0L).as("label"),
-          round(log(lit(1.0) + col("l_quantity")), 9).as("qty_log"),
-          (col("l_extendedprice") / 65536.0).as("price_norm"),
-          col("if13"))
-      val dim = Tables.part(s, d).select(col("p_partkey"), col("p_brand"))
-      li.join(broadcast(dim), li("l_partkey") === dim("p_partkey"), "left")
-        .drop("p_partkey")
-    },
-
-    // ---- dense padding (reference to_dense, §2.2) ----------------------
-    "scan_to_dense" -> { (s, d) =>
-      val fields = Seq(
-        FieldSpec("vec_id", LongType),
-        FieldSpec("embedding", FloatType, shape = Seq(100)))
-      TabularReader.fromParquet(s, Seq(s"$d/embeddings.parquet"),
-        TabularReader.Options(fields = fields, toDense = true, denseDefault = 0.0f))
-        .select(col("vec_id"), numCsv(col("embedding")).as("embedding"))
-    },
-
-    // ---- reference-shaped integration pipeline (§6) --------------------
-    "pipeline_taobao_shaped" -> { (s, d) =>
-      Pipelines.taobaoShaped(Tables.events(s, d), "purchase", windowSec = 3600L)
-        .select(col("event_id"), col("user_id"), col("n_hist"),
-          numCsv(col("recent_vals")).as("recent_vals"))
-    },
-
-    // ---- streaming thresholded AUC (reference metrics/auc.py) ----------
-    "metric_auc_thresholded" -> { (s, d) =>
-      val agg = udaf(new Metrics.ThresholdedAuc(200))
-      Tables.events(s, d)
-        .select(
-          when(col("event_type") === "error", 1.0).otherwise(0.0).as("y"),
-          least(col("value") / 200.0, lit(1.0)).as("p"))
-        .agg(round(agg(col("y"), col("p")), 9).as("auc"))
-    },
-
-    // ---- ORC scan path through the gate --------------------------------
-    "scan_orc_roundtrip" -> { (s, d) =>
-      // stage the events table as ORC (once per data dir), read it back
-      // through the ORC reader surface — same rows as the parquet original
-      val dir = GateFixtures.dir("orc", d) { target =>
-        TabularWriter.toOrc(Tables.events(s, d)
-          .select(col("event_id"), col("user_id"), col("event_type"), col("value")), target)
-      }
-      TabularReader.fromOrc(s, Seq(dir))
-    },
-
-    // ---- real Structured Streaming through the gate --------------------
-    "stream_minhash_dedup" -> { (s, d) =>
-      // streaming content dedup: docs arrive in doc_id order across a
-      // micro-batch boundary; a doc is dropped iff any of its LSH band
-      // buckets was already claimed by an earlier doc. Two ordered
-      // files -> 2 micro-batches (bucket state must carry across).
-      val dir = GateFixtures.dir("stream_lsh", d) { target =>
-        val docs = Tables.documents(s, d).select("doc_id", "text")
-        def stage(part: DataFrame, name: String, age: Long): Unit = {
-          val tmp = target + "_" + name
-          part.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val src = new java.io.File(tmp).listFiles()
-            .find(_.getName.endsWith(".parquet")).get
-          val dst = new java.io.File(target, name + ".parquet")
-          dst.getParentFile.mkdirs()
-          java.nio.file.Files.move(src.toPath, dst.toPath)
-          // arrival order must equal doc_id order: FileStreamSource
-          // schedules by modification time, so age the first half more
-          dst.setLastModified(System.currentTimeMillis() - age)
-          GateFixtures.deleteRecursively(new java.io.File(tmp).toPath)
-        }
-        stage(docs.where(col("doc_id") < 250), "b0", 120000L)
-        stage(docs.where(col("doc_id") >= 250), "b1", 60000L)
-      }
-      val schema = FileSchemas.read(s, Seq(dir)).schema
-      val name = "gate_lsh_dedup_" + math.abs(dir.hashCode)
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        val q = StreamingOps.lshStreamClaims(s,
-            s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(dir))
-          .toDF("doc_id", "preceded")
-          .writeStream.outputMode("append").format("memory").queryName(name).start()
-        drain(q)
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      StreamingOps.lshStreamSurvivors(s.table(name))
-    },
-    "stream_dedup_ids" -> { (s, d) =>
-      import s.implicits._
-      val dir = GateFixtures.dir("stream", d) { target =>
-        // exactly 2 files -> 2 micro-batches: state must carry across a
-        // batch boundary (the cross-batch SEMANTICS are spec'd with
-        // overlapping ids in StreamingSpec); each extra micro-batch costs
-        // ~0.6s of spin-up, so the volume gate keeps the minimum that
-        // still crosses a boundary
-        Tables.events(s, d).select("event_id").repartition(2).write.mode("overwrite").parquet(target)
-      }
-      val schema = FileSchemas.read(s, Seq(dir)).schema
-      val name = "gate_dedup_" + math.abs(dir.hashCode)
-      // keyed state opens one state store per shuffle partition per
-      // micro-batch; narrow the width for this small stateful query
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        val q = StreamingOps.statefulDedup(s,
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(dir).as[Long])
-          .toDF("event_id")
-          .writeStream.outputMode("append").format("memory").queryName(name).start()
-        drain(q)
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(name)
-    },
-
-    "stream_upsert_apply" -> { (s, d) =>
-      // streaming CDC apply: two ordered micro-batches of events MERGE
-      // into a versioned parquet snapshot (latest-per-key per batch,
-      // then Upsert.merge) — the warehouse MERGE-INTO-from-CDC loop.
-      // Files split on the order column with staggered mtimes, so the
-      // final snapshot is exactly latest-event-per-user (the oracle).
-      val dir = GateFixtures.dir("stream_ups", d) { target =>
-        val e = Tables.events(s, d).select(col("event_id"), col("user_id"), col("value"))
-        val mid = e.agg(max(col("event_id"))).head.getLong(0) / 2
-        def stage(part: DataFrame, name: String, age: Long): Unit = {
-          val tmp = target + "_" + name
-          part.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val src = new java.io.File(tmp).listFiles()
-            .find(_.getName.endsWith(".parquet")).get
-          val dst = new java.io.File(target, name + ".parquet")
-          dst.getParentFile.mkdirs()
-          java.nio.file.Files.move(src.toPath, dst.toPath)
-          dst.setLastModified(System.currentTimeMillis() - age)
-          GateFixtures.deleteRecursively(new java.io.File(tmp).toPath)
-        }
-        stage(e.filter(col("event_id") <= mid), "b0", 120000L)
-        stage(e.filter(col("event_id") > mid), "b1", 60000L)
-      }
-      val schema = FileSchemas.read(s, Seq(dir)).schema
-      val snap = java.nio.file.Files.createTempDirectory("graft_snap").toString
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        val q = StreamingOps.upsertApply(
-            s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(dir),
-            snap, Seq("user_id"), "event_id")
-          .option("checkpointLocation", snap + "_ck")
-          .start()
-        drain(q)
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      StreamingOps.latestSnapshot(s, snap).get
-        .select(col("user_id"), col("event_id"), col("value"))
-    },
-    "stream_dedup_watermark" -> { (s, d) =>
-      // dropDuplicatesWithinWatermark under a REAL 2-micro-batch stream:
-      // per-key state expires with the watermark (bounded state — the
-      // production dedup for bounded-lateness duplicates). The delay is
-      // set far past the data span so no row is late-dropped and the
-      // output is exactly the distinct key set; only the key is emitted,
-      // so which duplicate survives (arrival-order-dependent) cannot
-      // affect the gate.
-      val dir = GateFixtures.dir("stream_wm", d) { target =>
-        Tables.events(s, d).select(col("user_id"), col("ts"))
-          .repartition(2).write.mode("overwrite").parquet(target)
-      }
-      val schema = FileSchemas.read(s, Seq(dir)).schema
-      val name = "gate_wmdedup_" + math.abs(dir.hashCode)
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        val q = StreamingOps.watermarkDedup(
-            s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(dir),
-            Seq("user_id"), "3650 days")
-          .select(col("user_id"))
-          .writeStream.outputMode("append").format("memory").queryName(name).start()
-        drain(q)
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(name)
-    },
-
-    "stream_session_windows" -> { (s, d) =>
-      // native session_window executed under a REAL 2-micro-batch file
-      // stream — sessions must merge across the batch boundary through
-      // the session state store; oracle = batch gaps-and-islands SQL
-      // (same as session_window_agg's, proving streaming==batch==oracle)
-      val dir = GateFixtures.dir("stream_sess", d) { target =>
-        Tables.events(s, d).select(col("user_id"), col("ts"))
-          .repartition(2).write.mode("overwrite").parquet(target)
-      }
-      val schema = FileSchemas.read(s, Seq(dir)).schema
-      val name = "gate_sess_" + math.abs(dir.hashCode)
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        val q = s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(dir)
-          .withColumn("tss", timestamp_seconds(col("ts").cast("long")))
-          .groupBy(col("user_id"), session_window(col("tss"), "30 minutes"))
-          .agg(count(lit(1)).as("n"))
-          .select(col("user_id"),
-            col("session_window.start").cast("long").as("session_start"),
-            col("session_window.end").cast("long").as("session_end"), col("n"))
-          .writeStream.outputMode("complete").format("memory").queryName(name).start()
-        drain(q)
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(name)
-    },
-    "stream_metric_auc" -> { (s, d) =>
-      // the §2.7 thresholded-AUC Aggregator under a REAL 2-micro-batch
-      // file stream in complete mode: the 402-long confusion-matrix
-      // buffer merges across micro-batches through the streaming state
-      // store — the metric-accumulation loop the reference runs inside
-      // its training session (metrics/auc.py:38-185), matching the batch
-      // oracle bit-for-bit
-      val dir = GateFixtures.dir("stream_auc", d) { target =>
-        Tables.events(s, d).select(col("event_id"), col("event_type"), col("value"))
-          .repartition(2).write.mode("overwrite").parquet(target)
-      }
-      val schema = FileSchemas.read(s, Seq(dir)).schema
-      val name = "gate_streamauc_" + math.abs(dir.hashCode)
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        val agg = udaf(new Metrics.ThresholdedAuc(200))
-        val q = s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(dir)
-          .select(
-            when(col("event_type") === "error", 1.0).otherwise(0.0).as("y"),
-            least(col("value") / 200.0, lit(1.0)).as("p"))
-          .agg(round(agg(col("y"), col("p")), 9).as("auc"))
-          .writeStream.outputMode("complete").format("memory").queryName(name).start()
-        drain(q)
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(name)
-    },
-
-    // ---- ZSTD sink round-trip (reference SNAPPY/ZSTD sink options) -----
-    "scan_zstd_roundtrip" -> { (s, d) =>
-      // events written through TabularWriter with ZSTD, read back — the
-      // codec path of the sink surface (SNAPPY is exercised by every
-      // other staged fixture)
-      val dir = GateFixtures.dir("zstd", d) { target =>
-        TabularWriter.toParquet(Tables.events(s, d)
-          .select(col("event_id"), col("user_id"), col("event_type"), col("value")),
-          target, compression = "zstd")
-      }
-      TabularReader.fromParquet(s, Seq(dir))
-    },
-
-    "sink_compacted_roundtrip" -> { (s, d) =>
-      // small-files compaction: events scattered into 64 tiny files,
-      // compacted back to ~target-sized files, read round-trip. The
-      // compaction must be a pure rewrite (same rows, fewer files).
-      val dir = GateFixtures.dir("compact", d) { target =>
-        val scattered = target + "_scattered"
-        Tables.events(s, d)
-          .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-          .repartition(64).write.parquet(scattered)
-        TabularWriter.compact(s, scattered, target, targetBytes = 8L * 1024 * 1024)
-        GateFixtures.deleteRecursively(new java.io.File(scattered).toPath)
-      }
-      TabularReader.fromParquet(s, Seq(dir))
-    },
-    "scan_partitioned_pruned" -> { (s, d) =>
-      // hive-layout partitioned write + partition-pruned read: the
-      // filter never opens non-matching partition directories
-      // (PartitionFilters plan proof in PruningSpec)
-      val dir = GateFixtures.dir("hivepart", d) { target =>
-        TabularWriter.toPartitioned(
-          Tables.events(s, d).select(col("event_id"), col("user_id"),
-            col("value"), col("event_type")),
-          target, Seq("event_type"))
-      }
-      FileSchemas.read(s, Seq(dir))
-        .where(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-    },
-    "scan_multifile_union" -> { (s, d) =>
-      // multi-path composition (reference: dataset over a file LIST):
-      // events split across two directory trees, one read — Spark's
-      // multi-path load plans ONE scan over both file sets
-      val root = GateFixtures.dir("multifile", d) { target =>
-        val e = Tables.events(s, d)
-          .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-        e.filter(pmod(col("event_id"), lit(2)) === 0).write.parquet(target + "/even")
-        e.filter(pmod(col("event_id"), lit(2)) =!= 0).write.parquet(target + "/odd")
-      }
-      TabularReader.fromParquet(s, Seq(root + "/even", root + "/odd"))
-    },
-    "scan_schema_evolution" -> { (s, d) =>
-      // schema evolution across files: half the corpus was written
-      // before `value` existed; mergeSchema reconciles the footers and
-      // the declared default fills the old files' rows, while new
-      // files' real values pass through untouched
-      val root = GateFixtures.dir("evolve", d) { target =>
-        val e = Tables.events(s, d)
-        e.filter(pmod(col("event_id"), lit(2)) === 0)
-          .select(col("event_id"), col("user_id"))
-          .write.parquet(target + "/v1")
-        e.filter(pmod(col("event_id"), lit(2)) =!= 0)
-          .select(col("event_id"), col("user_id"), col("value"))
-          .write.parquet(target + "/v2")
-      }
-      TabularReader.fromParquet(s, Seq(root + "/v1", root + "/v2"),
-        TabularReader.Options(mergeSchema = true, fields = Seq(
-          FieldSpec("event_id", LongType),
-          FieldSpec("user_id", LongType),
-          FieldSpec("value", DoubleType, defaultValue = Some(-1.0d)))))
-    },
-    "scan_corrupt_skip" -> { (s, d) =>
-      // corrupt-data skip (reference dataset.cc:263-267): a junk file
-      // sits inside the directory; skipCorrupted reads past it and
-      // yields exactly the intact rows
-      val dir = GateFixtures.dir("corrupt", d) { target =>
-        Tables.events(s, d)
-          .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-          .write.parquet(target)
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(target, "part-junk.parquet"),
-          Array.fill[Byte](4096)(0x5A))
-      }
-      TabularReader.fromParquet(s, Seq(dir),
-        TabularReader.Options(skipCorrupted = true))
-    },
-    "scan_sorted_layout" -> { (s, d) =>
-      // sort-clustered layout for a high-cardinality key: each file
-      // covers a disjoint user_id range (footer-stat disjointness proved
-      // in PruningSpec), so this range predicate prunes whole files
-      val dir = GateFixtures.dir("rangesorted", d) { target =>
-        TabularWriter.toRangeSorted(
-          Tables.events(s, d).select(col("event_id"), col("user_id"), col("value")),
-          target, Seq("user_id"), numFiles = 8)
-      }
-      FileSchemas.read(s, Seq(dir))
-        .where(col("user_id") >= 40 && col("user_id") < 80)
-        .select(col("event_id"), col("user_id"), col("value"))
-    },
-    "scan_zorder_layout" -> { (s, d) =>
-      // Morton-curve layout on (l_partkey, l_suppkey): one sort key
-      // clusters BOTH dimensions, so the box predicate prunes files via
-      // footer stats on either key (bounding-box narrowness proved in
-      // PruningSpec); the gate also checks the z arithmetic itself
-      val dir = GateFixtures.dir("zordered", d) { target =>
-        TabularWriter.toZOrdered(
-          Tables.lineitem(s, d).select(col("l_orderkey"), col("l_linenumber"),
-            col("l_partkey"), col("l_suppkey")),
-          target, "l_partkey", "l_suppkey", numFiles = 8)
-      }
-      FileSchemas.read(s, Seq(dir))
-        .where(col("l_partkey").between(100, 300) &&
-          col("l_suppkey").between(20, 60))
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-          col("l_suppkey"),
-          graft.functions.expressions.GraftExpressions.z_order(
-            col("l_partkey").cast("long"), col("l_suppkey").cast("long")).as("zval"))
-    },
-
-    // ---- stream-stream event-time interval join ------------------------
-    "stream_stream_join" -> { (s, d) =>
-      // TRUE two-stream join: views and purchases arrive as independent
-      // file streams (2 micro-batches each, cross-batch matches must come
-      // from buffered state); a purchase attributes to every view by the
-      // same user within the prior 4 hours. The replay-spanning watermark
-      // makes the result exactly the batch inequality join.
-      val dir = GateFixtures.dir("stream_ssj", d) { target =>
-        val ev = Tables.events(s, d)
-        ev.filter(col("event_type") === "view")
-          .select(col("event_id"), col("user_id"), col("ts"))
-          .repartition(2).write.mode("overwrite").parquet(target + "/views")
-        ev.filter(col("event_type") === "purchase")
-          .select(col("event_id"), col("user_id"), col("ts"))
-          .repartition(2).write.mode("overwrite").parquet(target + "/purchases")
-      }
-      val vSchema = FileSchemas.read(s, Seq(dir + "/views")).schema
-      val pSchema = FileSchemas.read(s, Seq(dir + "/purchases")).schema
-      val name = "gate_ssj_" + math.abs(dir.hashCode)
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        val q = StreamingOps.intervalJoin(
-            StreamingOps.fileStream(s, dir + "/views", vSchema),
-            StreamingOps.fileStream(s, dir + "/purchases", pSchema),
-            "user_id", "4 hours", "35 days")
-          .select(col("l.event_id").as("view_id"), col("r.event_id").as("purchase_id"),
-            col("l.user_id").as("user_id"),
-            expr("(unix_micros(r.ts) - unix_micros(l.ts)) div 1000000").as("secs_after"))
-          .writeStream.outputMode("append").format("memory").queryName(name).start()
-        drain(q)
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(name)
-    },
-
-    // ---- exactly-once streaming FILE sink ------------------------------
-    "stream_file_sink" -> { (s, d) =>
-      // the durable-sink surface (every other streaming gate uses the
-      // memory sink): events stream micro-batch-by-micro-batch into a
-      // parquet directory with a checkpoint; the _spark_metadata commit
-      // log is what makes failed/duplicate attempts invisible to
-      // readers (exactly-once). The sink is written ONCE at fixture
-      // staging; the gate result is the committed read-back, which must
-      // be the identity of the batch table.
-      val dir = GateFixtures.dir("stream_sink", d) { target =>
-        val srcDir = target + "/src"
-        Tables.events(s, d).select("event_id", "user_id", "value")
-          .repartition(2).write.mode("overwrite").parquet(srcDir)
-        val schema = FileSchemas.read(s, Seq(srcDir)).schema
-        val q = StreamingOps.fileStream(s, srcDir, schema)
-          .writeStream.format("parquet")
-          .option("path", target + "/sink")
-          .option("checkpointLocation", target + "/ckpt")
-          .outputMode("append").start()
-        drain(q)
-      }
-      FileSchemas.read(s, Seq(dir + "/sink"))
-    },
-
-    // ---- stream-static enrichment join (streaming embedding lookup) ----
-    "stream_enrich_join" -> { (s, d) =>
-      // real readStream (2 files -> 2 micro-batches) left-joined per
-      // batch against the broadcast embeddings dim — the streaming form
-      // of lookup_join; result must equal the batch join exactly
-      val dir = GateFixtures.dir("stream_enrich", d) { target =>
-        Tables.events(s, d).select("event_id", "user_id")
-          .repartition(2).write.mode("overwrite").parquet(target)
-      }
-      val schema = FileSchemas.read(s, Seq(dir)).schema
-      val name = "gate_enrich_" + math.abs(dir.hashCode)
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        val q = StreamingOps.enrich(
-          StreamingOps.fileStream(s, dir, schema),
-          Tables.embeddings(s, d), "user_id", "vec_id", Seq("label"))
-          .writeStream.outputMode("append").format("memory").queryName(name).start()
-        drain(q)
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(name)
-    },
-
-    // ---- dedup restore at the scan (reference deduplicate/dataset.py) --
-    "scan_dedup_restore" -> { (s, d) =>
-      // stage a block-compressed fixture, then restore it at parse time
-      // through TabularReader ALONE (no BlockDedup.restore) — the shape of
-      // reference data/tests/parquet_dataset_deduplicate_test.py:38-92
-      val dir = GateFixtures.dir("restore", d) { target =>
-        TabularWriter.toParquet(BlockDedup.compress(
-          Tables.events(s, d), col("user_id"), col("event_id"), Seq("event_type")), target)
-      }
-      TabularReader.fromParquet(s, Seq(dir), TabularReader.Options(
-        restore = Seq(TabularReader.RestoreSpec("event_type_uniq", "event_type_idx", "event_type")),
-        restoreOrdField = Some("__ord_list"),
-        restoreOrdAs = Some("event_id")))
-        .select(col("event_id"), col("event_type"))
-    },
-
-    // ---- row-range scan (reference parquet.cc:46-64 `?start=&end=`) ----
-    "scan_row_range" -> { (s, d) =>
-      TabularReader.fromParquet(s, Seq(s"$d/lineitem.parquet"),
-        TabularReader.Options(rowStart = Some(1000L), rowEnd = Some(2000L)))
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-    },
-
-    // ---- ORC row-range (reference orc.cc:118-120 Count/Seek) -----------
-    "scan_orc_row_range" -> { (s, d) =>
-      // single-file ORC staged in the parquet original's row order
-      // (coalesce(1) pins write order), then rows [1000, 2000) read back
-      // through the per-split offset pass — same semantics as the
-      // parquet row_index path, ORC-native positions
-      val dir = GateFixtures.dir("orc_rr", d) { target =>
-        TabularWriter.toOrc(Tables.events(s, d)
-          .select(col("event_id"), col("user_id"), col("value")).coalesce(1), target)
-      }
-      TabularReader.fromOrc(s, Seq(dir),
-        TabularReader.Options(rowStart = Some(1000L), rowEnd = Some(2000L)))
-    },
-
-    // ---- exotic physical types (reference arrow.cc:48-73) ---------------
-    "scan_float16" -> { (s, d) =>
-      // fp16 parquet staged by a non-Spark writer (parquet-java FLBA(2),
-      // the FLOAT16 physical layout), read through the float16 dtype
-      // mapping: binary file column declared FloatType -> native half
-      // decode. Values are exact in fp16 (<= 999.5, 0.5 steps) so the
-      // round-trip is bit-exact and the oracle recomputes them directly.
-      val dir = GateFixtures.dir("fp16", d) { target =>
-        TypedParquet.Fp16Fixture.write(s"$target/part-00000.parquet")
-      }
-      TabularReader.fromParquet(s, Seq(dir), TabularReader.Options(fields = Seq(
-        FieldSpec("id", LongType),
-        FieldSpec("half_val", FloatType))))
-        .select(col("id"), col("half_val").cast("double").as("half_val"))
-    },
-    "scan_uint64" -> { (s, d) =>
-      // uint64 parquet (INT64 logical INTEGER(64,false)) staged by
-      // parquet-java; Spark's vectorized reader maps it to DECIMAL(20,0)
-      // natively — exactly FieldSpec.dtypeMapping's declared uint64
-      // mapping — with values above Long.MaxValue intact (fixture stores
-      // 2^63 + id). Projected to string for an engine-neutral compare.
-      val dir = GateFixtures.dir("uint64", d) { target =>
-        TypedParquet.U64Fixture.write(s"$target/part-00000.parquet")
-      }
-      TabularReader.fromParquet(s, Seq(dir), TabularReader.Options(fields = Seq(
-        FieldSpec("id", LongType),
-        FieldSpec("u", DecimalType(20, 0)))))
-        .select(col("id"), col("u").cast("string").as("u"))
-    },
-    "scan_tfrecord_roundtrip" -> { (s, d) =>
-      // TFRecord source (reference benchmarks/data_benchmark_tfrecord.py,
-      // tutorial to_tfrecord.py): events staged once as sharded TFRecord
-      // through our own writer, read back — must reproduce the parquet
-      // original (value stored as float32, tf.train.Example's only
-      // floating kind; the oracle casts identically)
-      val dir = GateFixtures.dir("tfrecord", d) { target =>
-        TfRecordSource.write(
-          Tables.events(s, d).select(col("event_id"), col("user_id"),
-            col("event_type"), col("value").cast("float").as("value_f32"))
-            .repartition(8),
-          target)
-      }
-      TfRecordSource.read(s, Seq(dir), Seq(
-        FieldSpec("event_id", LongType), FieldSpec("user_id", LongType),
-        FieldSpec("event_type", StringType), FieldSpec("value_f32", FloatType)))
-    },
-    "scan_csv_roundtrip" -> { (s, d) =>
-      // CSV source (reference benchmarks/data_benchmark_csv.py): events
-      // staged once as CSV, read back with a declared schema — must
-      // reproduce the parquet original bit-for-bit (doubles survive via
-      // Java's shortest-round-trip formatting; JSON props via quoting)
-      val cols = Seq("event_id", "user_id", "event_type", "value", "props")
-      val dir = GateFixtures.dir("csv", d) { target =>
-        Tables.events(s, d).select(cols.map(col): _*)
-          .write.option("header", "true").csv(target)
-      }
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("user_id", LongType),
-        StructField("event_type", StringType), StructField("value", DoubleType),
-        StructField("props", StringType)))
-      TabularReader.fromCsv(s, Seq(dir), schema)
-    },
-    "scan_jsonl_roundtrip" -> { (s, d) =>
-      // JSONL source (the LLM-corpus interchange format): documents
-      // staged once as JSON Lines, read back with a declared schema —
-      // must reproduce the parquet original bit-for-bit (strings
-      // survive via JSON escaping; longs are exact in JSON)
-      val dir = GateFixtures.dir("jsonl", d) { target =>
-        Tables.documents(s, d).write.json(target)
-      }
-      TabularReader.fromJsonLines(s, Seq(dir), StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType),
-        StructField("lang", StringType), StructField("source", StringType),
-        StructField("n_chars", LongType))))
-    },
-
-    // ---- reproducible sampling ------------------------------------------
-    "sample_bernoulli" -> { (s, d) =>
-      Sampling.bernoulliByKeyModP(Tables.events(s, d), col("event_id"),
-        fraction = 0.5, seed = 42L)
-        .select(col("event_id"), col("user_id"), col("event_type"))
-    },
-    "sample_stratified" -> { (s, d) =>
-      // negative-downsampling shape: keep 25% of clicks, 50% of views,
-      // everything else intact
-      Sampling.stratifiedModP(Tables.events(s, d), col("event_type"), col("event_id"),
-        Map("click" -> 0.25, "view" -> 0.5), seed = 7L)
-        .select(col("event_id"), col("event_type"))
-    },
-    "sample_negatives" -> { (s, d) =>
-      // sampled-softmax negative generation: 3 deterministic draws per
-      // event from a 1000-item domain; positive = user_id mod 1000
-      Sampling.negativesPerKey(Tables.events(s, d),
-        col("event_id"), pmod(col("user_id"), lit(1000L)),
-        k = 3, itemCount = 1000L, seed = 77L)
-    },
-    "sample_per_group" -> { (s, d) =>
-      // deterministic reservoir: exactly 50 events per event_type,
-      // chosen by smallest portable key hash — layout-invariant,
-      // downward-consistent eval-set sampling
-      Sampling.perGroupSample(Tables.events(s, d), col("event_type"),
-        col("event_id"), k = 50, seed = 13L)
-        .select(col("event_id"), col("event_type"), col("sample_rank"))
-    },
-    "sketch_kmv_distinct" -> { (s, d) =>
-      // portable KMV cardinality sketch over event users: O(k) state,
-      // TakeOrderedAndProject top-k of an 8-byte hash — the estimate is
-      // reproduced bit-for-bit by the oracle from the same hash
-      Sketches.kmvDistinct(Tables.events(s, d), col("user_id"), k = 64, seed = 11L)
-    },
-    "sketch_kmv_per_group" -> { (s, d) =>
-      // one O(k) KMV sketch per event type (k=64 < the 150 distinct
-      // users, so the estimator path — not the exact-count shortcut —
-      // is what the oracle must reproduce)
-      Sketches.kmvDistinctPerGroup(Tables.events(s, d),
-        col("event_type"), col("user_id"), k = 64, seed = 17L)
-        .withColumnRenamed("grp", "event_type")
-    },
-    "agg_grid_quantiles" -> { (s, d) =>
-      // deterministic two-pass grid quantiles over event values: exact
-      // min/max/count, 256-cell integer occupancy, midpoint read-out —
-      // the mergeable, engine-portable alternative to approx_percentile
-      Sketches.gridQuantiles(Tables.events(s, d), col("value"),
-        buckets = 256, qs = Seq(0.5, 0.9, 0.99))
-    },
-    "agg_fixedstep_quantiles" -> { (s, d) =>
-      // ONE-pass quantiles on a fixed-point grid: cell(v)=floor(v/2),
-      // so occupancy is a single map-combinable scan and min/max never
-      // gates a second pass (the scale path beside the exact two-pass
-      // gridQuantiles — see Sketches scaladoc for the contract trade).
-      // step=2 is a power of two: (cell+0.5)*2 is exact binary, so the
-      // DuckDB mirror is bit-identical.
-      Sketches.fixedStepQuantiles(Tables.events(s, d), col("value"),
-        step = 2.0, qs = Seq(0.5, 0.9, 0.99))
-    },
-    "sketch_cms_heavy_hitters" -> { (s, d) =>
-      // count-min-sketch frequent terms: 3x512 counters of bounded state
-      // regardless of corpus size; heavy = estimate >= 1/200 of all
-      // occurrences (integer comparison, no FP); exact counts ride
-      // along as gate instrumentation proving estimate >= exact
-      Sketches.cmsHeavyHitters(
-        Tables.documents(s, d)
-          .select(explode(TextFunctions.tokenize(col("text"))).as("term")),
-        col("term"), width = 512, hhDenom = 200)
-    },
-    "text_classifier_score" -> { (s, d) =>
-      // model-based quality scoring (fastText-shaped): hashed
-      // unigram+bigram features -> fixed pseudo-weights -> exact integer
-      // logit -> sigmoid of the mean weight; one native kernel pass per
-      // doc, zero shuffle (the weight table is a deterministic
-      // arithmetic stand-in; the scoring plumbing is the real path)
-      val nf = (TextFunctions.tokenCount(col("text")).cast("long") * 2 - 1)
-      Tables.documents(s, d)
-        .select(col("doc_id"),
-          TextFunctions.classifierLogitMilli(col("text"), buckets = 1 << 20)
-            .as("logit_milli"),
-          nf.as("nf"))
-        .select(col("doc_id"), col("logit_milli"),
-          round(lit(1.0) / (lit(1.0) +
-            exp(-(col("logit_milli").cast("double") /
-              (lit(1000.0) * col("nf").cast("double"))))), 9).as("score"))
-    },
-    "pipeline_corpus_curation" -> { (s, d) =>
-      // the end-to-end curation recipe a crawl corpus goes through
-      // before training: canonical host -> blocklist (broadcast anti
-      // join) -> language filter -> quality floor -> per-host cap ->
-      // deterministic train/val/test split. Every stage is a gated
-      // operator elsewhere; this gates their composition.
-      import s.implicits._
-      val docs = Tables.documents(s, d)
-      val url = concat(lit("https://Host"), pmod(col("doc_id"), lit(23)).cast("string"),
-        lit(".Example.com/Doc/"), col("doc_id").cast("string"))
-      val blocked = Seq("host3.example.com", "host10.example.com", "host17.example.com")
-        .toDF("host")
-      val kept = WebCuration.blocklistFilter(
-        docs.select(col("doc_id"), col("text"), url.as("url"))
-          .withColumn("host",
-            graft.functions.WebFunctions.host(
-              graft.functions.WebFunctions.normalizeUrl(col("url")))),
-        col("host"), blocked)
-        .filter(TextFunctions.languageId(col("text")) === "en")
-        .withColumn("quality", TextFunctions.qualityScore(col("text")))
-        .filter(col("quality") >= 0.38)
-      val capped = WebCuration.hostCap(
-        kept.select(col("doc_id"), col("quality"), col("url")),
-        col("url"), n = 5, order = Seq(col("quality").desc, col("doc_id").asc))
-      Sampling.splitAssign(capped, col("doc_id"),
-        Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05), seed = 7L)
-        .select(col("doc_id"), col("host"), round(col("quality"), 9).as("quality"),
-          col("split"))
-    },
-    "sample_mixture" -> { (s, d) =>
-      // data-mixing recipe: resample three sources to exact 50/30/20
-      // proportions (largest feasible N, per-stratum hash reservoirs)
-      Sampling.rebalanceToMix(
-        Tables.documents(s, d).select(col("doc_id"), col("source")),
-        col("source"), col("doc_id"),
-        Map("src0" -> 0.5, "src1" -> 0.3, "src2" -> 0.2), seed = 21L)
-    },
-
-    // ---- profiling / snapshot maintenance ------------------------------
-    "profile_summary" -> { (s, d) =>
-      // one-pass per-column data-quality profile (exact-DECIMAL means)
-      Profile.summary(Tables.events(s, d), Seq("event_id", "user_id", "value"))
-    },
-    "profile_histogram" -> { (s, d) =>
-      // 20-bin equi-width histogram of event values over the observed
-      // range; range derived lazily and broadcast, never collected
-      Profile.histogram(Tables.events(s, d), col("value"), bins = 20)
-    },
-    "profile_expectations" -> { (s, d) =>
-      // snapshot-commit gate: four expectations in ONE scan — a pass, a
-      // ppm-tolerated check, and (deliberately) failing checks so both
-      // verdicts are real; null predicate counts as violation
-      Profile.expect(Tables.events(s, d), Seq(
-        Profile.Expectation("ids_present", col("event_id").isNotNull && col("user_id").isNotNull),
-        Profile.Expectation("known_type",
-          col("event_type").isin("view", "click", "purchase", "error", "login", "logout")),
-        Profile.Expectation("value_in_range", col("value") >= 0 && col("value") < 150,
-          maxPpm = 50000L),
-        Profile.Expectation("value_small", col("value") < 1.0)))
-    },
-    "upsert_merge" -> { (s, d) =>
-      // SCD-1 snapshot merge: every 10th event re-arrives mutated, every
-      // 17th re-arrives under a fresh key; updates win wholesale
-      val base = Tables.events(s, d)
-        .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-      val updates = base.filter(pmod(col("event_id"), lit(10)) === 0)
-        .select(col("event_id"), col("user_id"),
-          lit("updated").as("event_type"), (col("value") * 2).as("value"))
-        .unionAll(base.filter(pmod(col("event_id"), lit(17)) === 0)
-          .select((col("event_id") + 10000000L).as("event_id"), col("user_id"),
-            lit("new").as("event_type"), col("value")))
-      Upsert.merge(base, updates, Seq("event_id"))
-    },
-    "agg_incremental_merge" -> { (s, d) =>
-      // materialized-view maintenance: the corpus arrives as two batches
-      // (even/odd event ids), each aggregated independently, partials
-      // merged with mergeAggState — the oracle aggregates everything at
-      // once, so the gate IS the incremental==full proof. Sums in exact
-      // integer cents (2-dp values).
-      val e = Tables.events(s, d).select(col("event_id"), col("event_type"),
-        round(col("value") * 100).cast("long").as("cents"))
-      def aggOf(df: DataFrame) = df.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("cnt"), sum(col("cents")).as("sum_cents"))
-      Upsert.mergeAggState(
-        aggOf(e.filter(pmod(col("event_id"), lit(2)) === 0)),
-        aggOf(e.filter(pmod(col("event_id"), lit(2)) === 1)),
-        Seq("event_type"))
-    },
-
-    // ---- LLM training-data prep: packing / chunking / redaction --------
-    "pack_sequences" -> { (s, d) =>
-      // contiguous token-budget packing in corpus order: distributed
-      // two-phase prefix sum (range-bucketed windows + broadcast bucket
-      // offsets) — no global window (PlanShapeSpec guards)
-      SeqPack.packContiguous(Tables.documents(s, d), col("doc_id"),
-        TextFunctions.tokenCount(col("text")), budget = 512L)
-        .select(col("k").as("doc_id"), col("n_tokens"), col("chunk_id"))
-    },
-    "pack_manifest" -> { (s, d) =>
-      // chunk-level rollup the downstream tokenizer/writer consumes
-      SeqPack.chunkManifest(
-        SeqPack.packContiguous(Tables.documents(s, d), col("doc_id"),
-          TextFunctions.tokenCount(col("text")), budget = 512L))
-    },
-    "pack_render" -> { (s, d) =>
-      // the materialized training chunks: packed assignment joined back
-      // to the corpus, text rendered in corpus order
-      val docs = Tables.documents(s, d)
-      SeqPack.renderChunks(docs,
-        SeqPack.packContiguous(docs, col("doc_id"),
-          TextFunctions.tokenCount(col("text")), budget = 512L),
-        col("doc_id"), col("text"))
-    },
-    "sample_split" -> { (s, d) =>
-      // deterministic train/val/test assignment (90/5/5): pure function
-      // of the key hash — stable under corpus growth, layout-invariant
-      Sampling.splitAssign(Tables.documents(s, d).select(col("doc_id")),
-        col("doc_id"), Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05), seed = 7L)
-    },
-    "sample_split_grouped" -> { (s, d) =>
-      // leakage-safe eval split: assignment keyed on the GROUP (source —
-      // the host/domain analog), so every doc of a source lands in ONE
-      // split and within-source near-dups can never straddle train/test
-      // (the group-holdout discipline crawl corpora need)
-      Sampling.splitAssign(
-        Tables.documents(s, d).select(col("doc_id"), col("source")),
-        TextFunctions.polyHash(col("source")),
-        Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05), seed = 7L)
-    },
-    "sample_weighted" -> { (s, d) =>
-      // quality-weighted curation: each doc survives with probability
-      // equal to its quality score (portable coin, oracle mirrors the
-      // score expression bit-for-bit)
-      Sampling.weightedByKeyModP(
-        Tables.documents(s, d).select(col("doc_id"), col("text")),
-        col("doc_id"), TextFunctions.qualityScore(col("text")), seed = 33L)
-        .select(col("doc_id"))
-    },
-    "text_chunk_overlap" -> { (s, d) =>
-      // overlapping token windows (W=32, stride=24) for embedding/RAG
-      // prep; final window clamps to cover the tail. Row-local explode,
-      // no shuffle.
-      val spans = TextFunctions.chunkSpans(size(col("toks")), window = 32, stride = 24)
-      Tables.documents(s, d)
-        .select(col("doc_id"), TextFunctions.tokenize(col("text")).as("toks"))
-        .select(col("doc_id"), col("toks"), explode(spans).as("span"))
-        .select(col("doc_id"),
-          col("span.chunk_idx").cast("long").as("chunk_idx"),
-          col("span.chunk_start").cast("long").as("chunk_start"),
-          array_join(slice(col("toks"), col("span.chunk_start"), lit(32)), " ").as("chunk_text"))
-    },
-    "text_redact_pii" -> { (s, d) =>
-      // the corpus has no PII, so the gate injects synthetic
-      // email/phone/IP spans (a pure function of doc_id, mirrored in
-      // the oracle) and verifies the scrub end-to-end
-      val aug = concat(col("text"),
-        lit(" contact user"), col("doc_id").cast("string"),
-        lit("@example.com or +1-555-01"), col("doc_id").cast("string"),
-        lit(" ip 10.0."), pmod(col("doc_id"), lit(256)).cast("string"), lit(".7 end"))
-      Tables.documents(s, d).select(col("doc_id"),
-        TextFunctions.redactPii(aug).as("redacted"),
-        graft.functions.expressions.GraftExpressions.email_count(aug)
-          .cast("long").as("n_emails"))
-    },
-    "web_url_normalize" -> { (s, d) =>
-      // URL canonicalization: the corpus has no URL column, so the gate
-      // generates deterministic crawl-shaped URLs from doc_id (mixed-case
-      // scheme/host, default ports, tracking fragments, bare-authority
-      // forms — generation mirrored verbatim in the oracle) and verifies
-      // normalize + host extraction row-for-row
-      val url = concat(
-        when(pmod(col("doc_id"), lit(2)) === 0, lit("HTTP://WWW.Site"))
-          .otherwise(lit("https://CDN.Site")),
-        pmod(col("doc_id"), lit(997)).cast("string"),
-        lit(".Example.COM"),
-        when(pmod(col("doc_id"), lit(2)) === 0, lit(":80")).otherwise(lit(":443")),
-        when(pmod(col("doc_id"), lit(5)) === 0, lit(""))
-          .otherwise(concat(lit("/Page/"), col("doc_id").cast("string"), lit("?Q=a"))),
-        when(pmod(col("doc_id"), lit(3)) === 0, lit("#Sec")).otherwise(lit("")))
-      Tables.documents(s, d).select(col("doc_id"), url.as("url"))
-        .select(col("doc_id"),
-          graft.functions.WebFunctions.normalizeUrl(col("url")).as("url_norm"))
-        .withColumn("host", graft.functions.WebFunctions.host(col("url_norm")))
-    },
-    "web_host_cap" -> { (s, d) =>
-      // per-host document cap (the C4/RefinedWeb-style domain cap): the
-      // corpus has no URL column, so hosts are generated from doc_id
-      // (mod 23 — coarse enough that the cap binds at every SF); keep
-      // the 5 longest docs per host, doc_id tiebreak for determinism
-      val url = concat(lit("https://Host"), pmod(col("doc_id"), lit(23)).cast("string"),
-        lit(".Example.com/Doc/"), col("doc_id").cast("string"))
-      WebCuration.hostCap(
-        Tables.documents(s, d).select(col("doc_id"), col("n_chars"), url.as("url")),
-        col("url"), n = 5, order = Seq(col("n_chars").desc, col("doc_id").asc))
-        .select(col("doc_id"), col("host"), col("host_rank").cast("long").as("host_rank"),
-          col("n_chars"))
-    },
-
-    // ---- nested-ragged (rank-2) scan -------------------------------------
-    "scan_ragged_nested" -> { (s, d) =>
-      // rank-2 fixture (token chunks of 3) staged to parquet, read back
-      // through TabularReader with a declared raggedRank=2 field, then
-      // flattened to COO — reference parquet_dataset_ragged_nested_test.py
-      val toks = TextFunctions.tokenize(col("text"))
-      val nested = Tables.documents(s, d).select(col("doc_id"),
-        transform(sequence(lit(0L), floor((size(toks) + 2) / 3).cast("long") - 1),
-          i => slice(toks, (i * 3 + 1).cast("int"), lit(3))).as("tok_chunks"))
-      val dir = GateFixtures.dir("ragged", d) { target =>
-        TabularWriter.toParquet(nested, target)
-      }
-      val read = TabularReader.fromParquet(s, Seq(dir), TabularReader.Options(fields = Seq(
-        FieldSpec("doc_id", LongType),
-        FieldSpec("tok_chunks", StringType, raggedRank = 2))))
-      Ragged.toCoo2(read, col("doc_id"), col("tok_chunks"))
-        .select(col("key").as("doc_id"), col("pos0").cast("long").as("pos0"),
-          col("pos1").cast("long").as("pos1"), col("value").as("token"))
-    },
-
-    // ---- as-of / range joins (time-series superset) --------------------
-    "asof_join_attribution" -> { (s, d) =>
-      // each event attributed to the user's most recent purchase at or
-      // before it (AsofJoin: one exchange + one sort, never a range join)
-      val ev = Tables.events(s, d).select(
-        col("event_id"), col("user_id"), col("ts"))
-      val purchases = Tables.events(s, d)
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("event_id"))
-      AsofJoin.backward(ev, purchases, Seq("user_id"), "ts", "ts",
-        joinType = "inner", matchedAs = "m")
-        .select(col("event_id"), col("m.event_id").as("purchase_id"),
-          (unix_micros(col("ts")) - unix_micros(col("m.ts"))).as("micros_since"))
-    },
-    "asof_join_forward" -> { (s, d) =>
-      // the forward direction: each event's NEXT purchase (>= ts)
-      val ev = Tables.events(s, d).select(
-        col("event_id"), col("user_id"), col("ts"))
-      val purchases = Tables.events(s, d)
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("event_id"))
-      AsofJoin.forward(ev, purchases, Seq("user_id"), "ts", "ts",
-        joinType = "inner", matchedAs = "m")
-        .select(col("event_id"), col("m.event_id").as("next_purchase_id"))
-    },
-    "range_join_purchase_window" -> { (s, d) =>
-      // keyless interval join: views landing in the hour before ANY
-      // purchase, binned to an equi-join (RangeJoin — no nested loop),
-      // then aggregated per purchase; zero-view purchases kept via the
-      // final left join
-      val ev = Tables.events(s, d)
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("event_id").as("view_id"), col("ts").as("v_ts"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"),
-          (col("ts") - expr("INTERVAL 1 HOUR")).as("lo"), col("ts").as("hi"))
-      val pairs = RangeJoin.pointsInIntervals(
-        views, purchases, "v_ts", "lo", "hi", binWidthMicros = 3600L * 1000000L)
-      val agg = pairs.groupBy(col("purchase_id"))
-        .agg(count(lit(1)).as("n_views"), min(col("view_id")).as("first_view"))
-      purchases.select(col("purchase_id")).join(agg, Seq("purchase_id"), "left")
-        .select(col("purchase_id"),
-          coalesce(col("n_views"), lit(0L)).as("n_views"), col("first_view"))
-    },
-
-    // ---- benchmark contamination / repetition quality ------------------
-    "text_contamination" -> { (s, d) =>
-      // benchmark slice = every 20th doc; the training side's shingles
-      // are checked against the (broadcast) benchmark shingle universe
-      val docs = Tables.documents(s, d)
-      Contamination.overlap(
-        docs.filter(pmod(col("doc_id"), lit(20)) =!= 0),
-        docs.filter(pmod(col("doc_id"), lit(20)) === 0),
-        col("doc_id"), col("text"), n = 3)
-    },
-    "text_repetition" -> { (s, d) =>
-      // one native kernel call per doc (token-count filter + fused
-      // repetition struct); subexpression elimination keeps the struct
-      // evaluated once for both output fields
-      Tables.documents(s, d)
-        .filter(TextFunctions.tokenCount(col("text")) >= 2)
-        .select(col("doc_id"),
-          TextFunctions.repetitionStats(col("text")).as("r"))
-        .select(col("doc_id"),
-          col("r").getField("dup_token_frac").as("dup_token_frac"),
-          col("r").getField("top_bigram_frac").as("top_bigram_frac"))
-    },
-
-    // ---- bucketed co-located join (persistent partition_by_modulo) -----
-    "join_bucketed_colocated" -> { (s, d) =>
-      // both sides pre-shuffled into 8 buckets on the join key at WRITE
-      // time, so the repeated join plans with no exchange (BucketingSpec
-      // asserts the plan shape) — the durable co-location answer at
-      // 100 TB. Tables staged once per (session, data dir).
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      val (ot, ct) = (s"b_orders$tag", s"b_customer$tag")
-      if (!s.catalog.tableExists(ot)) {
-        // the warehouse dir outlives the JVM but the in-memory catalog
-        // doesn't: clear any stale location or saveAsTable refuses CREATE
-        val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-        Seq(ot, ct).foreach(t =>
-          GateFixtures.deleteRecursively(java.nio.file.Paths.get(wh, t)))
-        Tables.orders(s, d).write.mode("overwrite")
-          .bucketBy(8, "o_custkey").sortBy("o_custkey").saveAsTable(ot)
-        Tables.customer(s, d).write.mode("overwrite")
-          .bucketBy(8, "c_custkey").sortBy("c_custkey").saveAsTable(ct)
-      }
-      s.table(ot).join(s.table(ct), col("o_custkey") === col("c_custkey"))
-        .select(col("o_orderkey"), col("o_custkey"), col("c_name"),
-          col("c_mktsegment"))
-    },
-    "agg_bucketed_pergroup" -> { (s, d) =>
-      // the layout answer to the spread high-cardinality aggregate
-      // (q18/q21's named blocker — PERF.md): lineitem pre-bucketed on
-      // l_orderkey at WRITE time, so the per-order rollup plans with NO
-      // exchange at all — reduction happens where the key already
-      // lives, the durable 100 TB form of Aggregates.byShuffledKey
-      // (reference analog: the id-partitioned embedding layout,
-      // embedding/sharding.py:168-205). PlanShapeSpec asserts the
-      // exchange-free plan; this gates the values. Measured at x200:
-      // 11.7 s plain / 7.8 s shuffle-first / 3.8 s bucketed (PERF.md).
-      s.table(GateFixtures.bucketedLineitem(s, d))
-        .groupBy(col("l_orderkey").as("b_orderkey"))
-        .agg(sum(round(col("l_quantity") * 100).cast("long")).as("b_qty_cents"))
-        .filter(col("b_qty_cents") > 150L * 100)
-        .select(col("b_orderkey"), col("b_qty_cents"))
-    },
-    "agg_bucketed_sortstream" -> { (s, d) =>
-      // the STREAMING upgrade of agg_bucketed_pergroup: lineitem
-      // bucketed AND sorted on l_orderkey at write time, one file per
-      // bucket (TabularWriter.toBucketedTable sorted=true), so the
-      // per-order rollup plans as a complete-mode SortAggregate
-      // straight over the scan — no exchange, no sort, and ONE group's
-      // state at a time instead of a groups-sized hash table (the
-      // reference's streaming per-shard reduction,
-      // embedding/sharding.py:186-195). PlanShapeSpec asserts
-      // SortAggregate + zero Exchange; x200: 2.4→1.6 s (PERF.md r9).
-      s.table(GateFixtures.bucketedLineitemSorted(s, d))
-        .groupBy(col("l_orderkey").as("b_orderkey"))
-        .agg(sum(round(col("l_quantity") * 100).cast("long")).as("b_qty_cents"))
-        .filter(col("b_qty_cents") > 150L * 100)
-        .select(col("b_orderkey"), col("b_qty_cents"))
-    },
-    "layout_advisor_agg" -> { (s, d) =>
-      // layout selection as product, not hand-staging: the
-      // LayoutAdvisor derives (lineitem, l_orderkey, pruned columns,
-      // buckets) from a two-query corpus and stages it itself
-      // (GateFixtures.advisorLineitem); this per-order revenue rollup
-      // then reads ONLY advisor-carried columns off the advised table
-      // — a column outside the advice would fail analysis loudly, the
-      // enforced form of r8's "carry only what the query class needs".
-      // PlanShapeSpec asserts the streaming exchange-free plan.
-      s.table(GateFixtures.advisorLineitem(s, d))
-        .groupBy(col("l_orderkey").as("a_orderkey"))
-        .agg(sum(round(col("l_extendedprice") * 100).cast("long")).as("a_price_cents"))
-        .filter(col("a_price_cents") > 30000L * 100)
-        .select(col("a_orderkey"), col("a_price_cents"))
-    },
-    "layout_advisor_join" -> { (s, d) =>
-      // the advisor's JOIN-alignment productized end-to-end: both fact
-      // tables staged by LayoutAdvisor from one corpus, bucket counts
-      // aligned by its union-find class (lineitem's size-derived count
-      // would otherwise differ from orders' and silently re-shuffle a
-      // side), so the co-located per-priority rollup joins with no
-      // exchange below the join (PlanShapeSpec).
-      val (lt, ot) = GateFixtures.advisorPair(s, d)
-      s.table(lt).join(s.table(ot), col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_orderpriority"))
-        .agg(sum(round(col("l_quantity") * 100).cast("long")).as("qty_cents"),
-          count(lit(1)).as("n"))
-        .orderBy(col("o_orderpriority"))
-    },
-    "layout_routed_projection" -> { (s, d) =>
-      // PROJECTION ROUTING as product: adviseProjections stages one
-      // projection per hot key of orders (custkey aggregates vs
-      // orderkey joins — the single-layout trade PERF.md round-10
-      // measured), and LayoutAdvisor.route picks per QUERY; the fixture
-      // REQUIREs this per-custkey rollup routed to the custkey
-      // projection, and the oracle checks its rows against whole-table
-      // orders — a projection that lost/duplicated rows hash-fails.
-      s.table(GateFixtures.routedProjection(s, d))
-        .groupBy(col("o_custkey").as("rp_custkey"))
-        .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("rp_price_cents"))
-        .filter(col("rp_price_cents") > 2000000L * 100)
-        .select(col("rp_custkey"), col("rp_price_cents"))
-    },
-    "layout_routed_cents" -> { (s, d) =>
-      // CROSS-KIND routing as product: the candidate set holds a
-      // bucketed projection AND the shipdate-clustered stored-cents
-      // projection; routeAll sends this q15-shaped money/range query to
-      // the cents one (GateFixtures.routedCentsLineitem REQUIREs the
-      // route — round-10's bucketed-only router was why q6/q14/q15 sat
-      // at 2.5–4.1× in-sweep while their proven ≤1.6× layout existed).
-      // Arithmetic is VERBATIM engine style — the long-cents idiom AND
-      // the q6-shaped DECIMAL idiom — so the gate also pins
-      // RewriteStoredCents's MakeDecimal rewrite (stage-time-verified
-      // finite columns) against an oracle computed from raw doubles.
-      val cents = (c: String) => round(col(c) * 100).cast("long")
-      s.table(GateFixtures.routedCentsLineitem(s, d))
-        .filter(col("l_shipdate") >= lit("1996-01-01").cast(TimestampType) &&
-          col("l_shipdate") < lit("1996-04-01").cast(TimestampType))
-        .groupBy(col("l_suppkey").as("rc_suppkey"))
-        .agg(
-          (sum(cents("l_extendedprice") * (lit(100L) - cents("l_discount")))
-            .cast(DoubleType) / 10000.0).as("rc_revenue"),
-          sum(col("l_extendedprice").cast(DecimalType(12, 2))
-            * col("l_discount").cast(DecimalType(12, 2)))
-            .cast(DoubleType).as("rc_disc_rev"))
-    },
-    "layout_denorm_star" -> { (s, d) =>
-      // MATERIALIZED JOIN as product (round-11): adviseDenormalized
-      // derived the lineitem⋈orders⋈customer star from a corpus,
-      // stageDenorm wrote it pre-joined (audited lossless dims, stored
-      // cents, bucketed on l_orderkey — GateFixtures.denormStar), and
-      // this query KEEPS its three-table join verbatim:
-      // RewriteMaterializedJoin swaps the whole join subtree for the
-      // staged scan (exprId-aliased, filters re-applied) and the money
-      // idiom reads the stored cents through the rewrite. The require
-      // pins the firing; the oracle — the plain three-table join over
-      // the RAW tables — pins exactness: a row dropped, duplicated or
-      // mis-joined by the substitution hash-fails. Reference analog:
-      // prep_3_merge.py:41-48 (the reference pre-joins at prep time).
-      val meta = GateFixtures.denormStar(s, d)
-      graft.plans.MaterializedJoins.withRegistered(Seq(meta)) {
-        val cents = (c: String) => round(col(c) * 100).cast("long")
-        val df = Tables.lineitem(s, d).filter(col("l_returnflag") === "R")
-          .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-          .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-          .groupBy(col("c_custkey").as("dn_custkey"),
-            col("c_mktsegment").as("dn_segment"))
-          .agg((sum(cents("l_extendedprice") * (lit(100L) - cents("l_discount")))
-            .cast(DoubleType) / 10000.0).as("dn_revenue"),
-            count(lit(1)).as("dn_lines"))
-        require(graft.plans.MaterializedJoins.fired(df, meta.catalogTable),
-          s"layout_denorm_star: rewrite must serve the star join:\n" +
-            df.queryExecution.optimizedPlan)
-        df
-      }
-    },
-    "layout_denorm_subset" -> { (s, d) =>
-      // the SUBSET contract: this query joins lineitem⋈orders ONLY, yet
-      // reads the three-table star — valid because the stage-time audit
-      // proved customer LOSSLESS (c_custkey unique + every o_custkey
-      // present), so the omitted join neither dropped nor duplicated
-      // rows. The require pins both the audit outcome and the firing;
-      // the oracle over the raw two-table join pins exactness.
-      val meta = GateFixtures.denormStar(s, d)
-      require(meta.dims.forall(_.lossless),
-        s"layout_denorm_subset: dims must audit lossless: ${meta.dims}")
-      graft.plans.MaterializedJoins.withRegistered(Seq(meta)) {
-        val cents = (c: String) => round(col(c) * 100).cast("long")
-        val df = Tables.lineitem(s, d)
-          .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-          .filter(col("l_quantity") > 25)
-          .groupBy(col("o_orderpriority").as("dn_priority"))
-          .agg(sum(cents("l_quantity")).as("dn_qty_cents"),
-            count(lit(1)).as("dn_lines"))
-        require(graft.plans.MaterializedJoins.fired(df, meta.catalogTable),
-          s"layout_denorm_subset: rewrite must serve the subset join:\n" +
-            df.queryExecution.optimizedPlan)
-        df
-      }
-    },
-    "layout_agg_rollup" -> { (s, d) =>
-      // MATERIALIZED AGGREGATE as product (round-12): adviseAggRollups
-      // derived the per-orderkey rollup (sum of quantity cents + line
-      // count, stored as FINAL values) from a corpus, stageRollup wrote
-      // it bucketed+sorted on the key with the base fingerprint
-      // (GateFixtures.aggRollup), and this query KEEPS its fact-grain
-      // aggregate verbatim: RewriteMaterializedAgg swaps the Aggregate
-      // for a Project over the |orders|-row rollup — 4× fewer rows at
-      // TPC-H fan-out before the query starts, zero re-aggregation.
-      // The require pins the firing; the oracle — the plain GROUP BY /
-      // HAVING over the RAW table — pins exactness. Reference analog:
-      // prep_2_bahavior.py:50-53 (the reference materializes its
-      // groupby aggregate at prep time and every stage consumes it).
-      val meta = GateFixtures.aggRollup(s, d)
-      graft.plans.MaterializedAggs.withRegistered(Seq(meta)) {
-        val cents = (c: String) => round(col(c) * 100).cast("long")
-        val df = Tables.lineitem(s, d)
-          .groupBy(col("l_orderkey").as("ar_orderkey"))
-          .agg(sum(cents("l_quantity")).as("ar_qty_cents"),
-            count(lit(1)).as("ar_lines"))
-          .filter(col("ar_qty_cents") > 5000L)
-        require(graft.plans.MaterializedAggs.fired(df, meta.catalogTable),
-          s"layout_agg_rollup: rewrite must serve the aggregate:\n" +
-            df.queryExecution.optimizedPlan)
-        df
-      }
-    },
-    "layout_agg_exists" -> { (s, d) =>
-      // the KEY-SET contract (q4's shape at order grain): EXISTS over
-      // the filtered fact is exactly "conditional count > 0" on the
-      // rollup — the probe side reads |orders| rows instead of
-      // |lineitem|, sidestepping the fact-grain decode that measured
-      // round-11's semi arm off. The require pins the firing; the
-      // oracle EXISTS over the raw tables pins exactness (a key
-      // wrongly included or excluded from the set hash-fails).
-      val meta = GateFixtures.aggRollup(s, d)
-      graft.plans.MaterializedAggs.withRegistered(Seq(meta)) {
-        val df = Tables.orders(s, d)
-          .join(Tables.lineitem(s, d).filter(col("l_returnflag") === "R")
-              .select(col("l_orderkey")),
-            col("o_orderkey") === col("l_orderkey"), "left_semi")
-          .groupBy(col("o_orderpriority").as("ae_priority"))
-          .agg(count(lit(1)).as("ae_orders"))
-        require(graft.plans.MaterializedAggs.fired(df, meta.catalogTable),
-          s"layout_agg_exists: rewrite must serve the EXISTS probe:\n" +
-            df.queryExecution.optimizedPlan)
-        df
-      }
-    },
-    "layout_agg_reagg" -> { (s, d) =>
-      // COARSER-GRAIN rollup serve (round-12b — the classic
-      // materialized-view rewrite): the staged rollup is keyed
-      // (l_returnflag, l_linestatus, l_discount) — the advisor folded
-      // the query's FILTER column into the key — and this q1-shaped
-      // query groups a strict SUBSET of those keys. The rewrite
-      // re-applies the discount bound on the rollup's key column and
-      // RE-AGGREGATES the stored partials (sum→sum, count→sum), so the
-      // aggregate runs over ~|distinct (flag,status,discount)| rows
-      // instead of the fact. The require pins the firing; the oracle
-      // over the RAW table pins exactness (a partial double-counted or
-      // a group dropped by the predicate re-application hash-fails).
-      val metas = GateFixtures.aggReagg(s, d)
-      graft.plans.MaterializedAggs.withRegistered(metas) {
-        val cents = (c: String) => round(col(c) * 100).cast("long")
-        val df = Tables.lineitem(s, d)
-          .filter(col("l_discount") <= 0.04)
-          .groupBy(col("l_returnflag").as("rg_flag"),
-            col("l_linestatus").as("rg_status"))
-          .agg((sum(cents("l_extendedprice")).cast(DoubleType) / 100.0).as("rg_base"),
-            count(lit(1)).as("rg_lines"))
-        require(graft.plans.MaterializedAggs.fired(df, metas.head.catalogTable),
-          s"layout_agg_reagg: coarser-grain serve must fire:\n" +
-            df.queryExecution.optimizedPlan)
-        df
-      }
-    },
-    "layout_agg_filtergrain" -> { (s, d) =>
-      // the GLOBAL variant (q6's shape): no grouping at all — every
-      // predicate references rollup key columns, so the whole query
-      // becomes one sum over the filtered ≤|key-combo| rollup rows.
-      // Note the predicates at the rewrite differ in FORM from the
-      // advice-time corpus (any key-column predicate re-applies, seen
-      // or not). Oracle over the raw table pins exactness.
-      val metas = GateFixtures.aggReagg(s, d)
-      graft.plans.MaterializedAggs.withRegistered(metas) {
-        val cents = (c: String) => round(col(c) * 100).cast("long")
-        val df = Tables.lineitem(s, d)
-          .filter(col("l_discount").between(0.02, 0.04) && col("l_quantity") < 20)
-          .agg((sum(cents("l_extendedprice") * cents("l_discount"))
-            .cast(DoubleType) / 1e8).as("fg_rev"),
-            count(lit(1)).as("fg_lines"))
-        require(graft.plans.MaterializedAggs.fired(df, metas(1).catalogTable),
-          s"layout_agg_filtergrain: global coarser serve must fire:\n" +
-            df.queryExecution.optimizedPlan)
-        df
-      }
-    },
-    "layout_advisor_sorted" -> { (s, d) =>
-      // the advisor's PREDICATE-side advice end-to-end: adviseSorted
-      // derived (orders, o_orderdate, pruned columns, file count) from
-      // a range-filter corpus and staged the range-clustered layout
-      // (GateFixtures.advisorSortedOrders); this date-banded rollup
-      // reads it and must equal the whole-orders oracle. The files
-      // cover disjoint date ranges, so the predicate prunes whole
-      // files via footer stats (AdvisorSpec asserts strictly-fewer
-      // files touched) — the sorted-layout analogue of hive
-      // partitioning for continuous keys at 100 TB.
-      FileSchemas.read(s, Seq(GateFixtures.advisorSortedOrders(s, d)))
-        .where(col("o_orderdate").between(lit("1996-01-01"), lit("1996-12-31")))
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"),
-          sum(round(col("o_totalprice") * 100).cast("long")).as("price_cents"))
-        .orderBy(col("o_orderpriority"))
-    },
-    "layout_derived_cents" -> { (s, d) =>
-      // the decode-constant class's layout answer as PRODUCT: the gate
-      // is q1's exact-money arithmetic VERBATIM (round(x*100) longs)
-      // over an advisor-staged derived projection
-      // (GateFixtures.derivedCentsLineitem) — RewriteStoredCents swaps
-      // each round-expression for the stored cents column at
-      // optimization time and pruning drops the raw doubles from the
-      // scan (AdvisorSpec asserts the plan; x200: q1 2.0×, q6 1.48×,
-      // q14 1.57×, q15 1.50× vs DuckDB where the flat class sat at
-      // 3.3–4.5× — PERF.md round-10). Values vs the whole-table oracle
-      // computed from the raw doubles: a stored column that drifted
-      // from cast(round(x*100) as long) by one cent hash-fails.
-      val cents = (c: String) => round(col(c) * 100).cast("long")
-      s.table(GateFixtures.derivedCentsLineitem(s, d))
-        .filter(col("l_shipdate") <= lit("1998-09-01").cast(TimestampType))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          (sum(cents("l_quantity")).cast(DoubleType) / 100.0).as("sum_qty"),
-          (sum(cents("l_extendedprice")).cast(DoubleType) / 100.0).as("sum_base_price"),
-          (sum(cents("l_extendedprice") * (lit(100L) - cents("l_discount"))).cast(DoubleType) / 10000.0)
-            .as("sum_disc_price"),
-          count(lit(1)).as("count_order"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    },
-    "layout_append_compact" -> { (s, d) =>
-      // a bucketed fact table that GREW: created sorted from 5/6 of
-      // lineitem, the rest appended (appendToBucketedTable — same
-      // bucket function, so co-location survives the append), then
-      // compactBuckets to merge each bucket back to one sorted file
-      // (GateFixtures.appendCompactLineitem). This per-order rollup
-      // over the post-lifecycle table must equal the whole-table
-      // oracle — a lost/duplicated/mis-bucketed appended row
-      // hash-fails — and BucketingSpec pins the plan at each stage
-      // (append: zero-Exchange HashAggregate; compacted: streaming
-      // SortAggregate, zero Exchange, zero Sort).
-      s.table(GateFixtures.appendCompactLineitem(s, d))
-        .groupBy(col("l_orderkey").as("ac_orderkey"))
-        .agg(sum(round(col("l_quantity") * 100).cast("long")).as("ac_qty_cents"))
-        .filter(col("ac_qty_cents") > 150L * 100)
-        .select(col("ac_orderkey"), col("ac_qty_cents"))
-    },
-    "layout_stream_ingest" -> { (s, d) =>
-      // a bucketed fact table fed by a STREAM: created sorted from
-      // 2/3 of lineitem, the rest arriving as a 2-batch file stream
-      // appended through StreamingLayout.intoBucketedTable (idempotent
-      // per batch id; the final batch triggers compactBuckets). This
-      // per-order rollup over the post-ingest table must equal the
-      // whole-table oracle — a lost batch, a replay-duplicated batch,
-      // or a mis-bucketed row hash-fails — and BucketingSpec drives
-      // the replay + the plan at each lifecycle stage.
-      s.table(GateFixtures.streamIngestLineitem(s, d))
-        .groupBy(col("l_orderkey").as("si_orderkey"))
-        .agg(sum(round(col("l_extendedprice") * 100).cast("long")).as("si_price_cents"))
-        .filter(col("si_price_cents") > 200000L * 100)
-        .select(col("si_orderkey"), col("si_price_cents"))
-    },
-    "join_bucketed_fact" -> { (s, d) =>
-      // co-located FACT⋈FACT join (q9/q12's named blocker was the
-      // orderkey exchange of BOTH sides — PERF.md "Round-8: layout
-      // experiments" measured blooms and pre-aggregation strictly
-      // worse): lineitem AND orders bucketed on the order key at write
-      // time, dims broadcast onto the
-      // bucketed scan (preserving its distribution), so the line⋈order
-      // join plans with NO exchange. Measured at x200: q12-shape
-      // 3.35→1.88 s, q9-shape 5.72→2.83 s (PERF.md). PlanShapeSpec
-      // asserts the exchange-free join.
-      val high = col("o_orderpriority") === "1-URGENT" || col("o_orderpriority") === "2-HIGH"
-      s.table(GateFixtures.bucketedLineitem(s, d))
-        .join(s.table(GateFixtures.bucketedOrders(s, d)),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("l_linestatus"))
-        .agg(sum(when(high, 1L).otherwise(0L)).as("high_line_count"),
-          sum(when(high, 0L).otherwise(1L)).as("low_line_count"),
-          sum(round(col("l_quantity") * 100).cast("long")).as("qty_cents"))
-        .orderBy(col("l_linestatus"))
-    },
-
-    "upsert_scd2" -> { (s, d) =>
-      // SCD-2 history merge: open rows of matched keys close at the
-      // update timestamp, updates append as new open rows, closed
-      // history is immutable (Upsert.scd2; one key shuffle + union)
-      val ts = (x: String) => lit(x).cast(TimestampType)
-      val c = Tables.customer(s, d)
-      val open = c.select(col("c_custkey"), col("c_name"), col("c_acctbal"),
-        ts("2020-01-01").as("valid_from"),
-        lit(null).cast(TimestampType).as("valid_to"))
-      val closedOld = c.filter(col("c_custkey") % 13 === 0)
-        .select(col("c_custkey"), col("c_name"),
-          (col("c_acctbal") * 0.5).as("c_acctbal"),
-          ts("2018-01-01").as("valid_from"), ts("2020-01-01").as("valid_to"))
-      val hist = closedOld.unionByName(open)
-      val upd = c.filter(col("c_custkey") % 7 === 0)
-        .select(col("c_custkey"), col("c_name"),
-          (col("c_acctbal") + 100.0).as("c_acctbal"),
-          ts("2024-06-01").as("ts"))
-      Upsert.scd2(hist, upd, Seq("c_custkey"), "ts")
-    },
-    "snapshot_diff" -> { (s, d) =>
-      // reconciliation: classify keys of two snapshots added / removed /
-      // changed (NULL-safe attr compare), unchanged dropped
-      val a = Tables.customer(s, d).select(col("c_custkey"), col("c_name"), col("c_acctbal"))
-      val b = a.filter(col("c_custkey") % 97 =!= 0)
-        .withColumn("c_acctbal",
-          when(col("c_custkey") % 89 === 0, col("c_acctbal") + 50.0)
-            .otherwise(col("c_acctbal")))
-        .unionByName(a.filter(col("c_custkey") % 101 === 0)
-          .select((col("c_custkey") + 1000000L).as("c_custkey"),
-            col("c_name"), col("c_acctbal")))
-      Upsert.snapshotDiff(a, b, Seq("c_custkey"))
-    },
-    "fuzzy_join_lev1" -> { (s, d) =>
-      // SymSpell deletion-neighborhood fuzzy self-join: equi-join over
-      // single-deletion variants finds EVERY Levenshtein<=1 pair (exact
-      // recall, proof in FuzzyJoin scaladoc); the oracle is the O(n²)
-      // all-pairs semantic definition. Customer names are 9-digit-coded,
-      // so one-digit-apart keys form a real fuzzy population.
-      FuzzyJoin.selfJoinLev1(Tables.customer(s, d), col("c_custkey"), col("c_name"))
-    },
-    "embedding_pca_project" -> { (s, d) =>
-      // PCA top-4 projection via the distributed Gram sufficient
-      // statistic + driver Jacobi (FeatureScale.pcaProject). The
-      // iterative eigensolve has no SQL formulation, so the oracle
-      // asserts the projection's PROVABLE invariants as booleans it
-      // expects literally true: per-row Bessel (‖proj‖² ≤ ‖x−μ‖²),
-      // per-component global centering (Σ proj_c = 0), and descending
-      // component variances (they are the top eigenvalues). A wrong
-      // eigensolve/projection flips one of these and hash-fails; exact
-      // eigens-golden + layout invariance stay spec-asserted (MiscSpec).
-      val p = FeatureScale.pcaProject(s, Tables.embeddings(s, d),
-        col("vec_id"), col("embedding"), d = 64, k = 4)
-      val dim = (i: Int) => element_at(col("proj"), i)
-      val p2 = (1 to 4).map(i => dim(i) * dim(i)).reduce(_ + _)
-      val perRow = p.select(col("id").as("vec_id"),
-        (p2 <= col("center_norm2") * lit(1 + 1e-9) + lit(1e-3)).as("bessel_ok"))
-      val inv = p.agg(
-        count(lit(1)).as("n"),
-        ((1 to 4).map(i => sum(dim(i)).as(s"s$i")) ++
-          (1 to 4).map(i => sum(dim(i) * dim(i)).as(s"ss$i"))): _*)
-        .select(
-          (1 to 4).map(i => (abs(col(s"s$i")) < col("n") * lit(1e-3)))
-            .reduce(_ && _).as("centered_ok"),
-          (1 to 3).map { i =>
-            val v = (j: Int) => col(s"ss$j") / col("n") -
-              (col(s"s$j") / col("n")) * (col(s"s$j") / col("n"))
-            v(i) >= v(i + 1) - lit(1e-3)
-          }.reduce(_ && _).as("var_ordered_ok"))
-      perRow.crossJoin(broadcast(inv))
-    },
-    "text_clean" -> { (s, d) =>
-      // native one-pass scrub vs DuckDB's nfc_normalize + regex chain:
-      // deterministic dirt (combining accent, BEL, TAB, pad runs) is
-      // injected around the clean corpus text so every stage of the
-      // kernel is exercised and hash-checked
-      val dirty = concat(lit("  e\u0301x\u0007y\t"), col("text"), lit("  tail  "))
-      Tables.documents(s, d).select(col("doc_id"),
-        TextFunctions.cleanText(dirty).as("clean"))
-    },
-    "text_bpe_tokens" -> { (s, d) =>
-      // Real BPE tokenization (operators.Bpe): 40 merges trained on the
-      // corpus itself (one distributed word-freq aggregation + driver
-      // merge loop over the bounded dictionary), then the codegen'd
-      // greedy-rank encode. The oracle checks end-to-end LOSSLESSNESS:
-      // detokenization must reproduce the text minus the space
-      // delimiters (pure SQL), and the token count must sit inside its
-      // provable bounds [n_words, n_chars] (the oracle asserts the
-      // boolean; a miscount on the Spark side flips it and hash-fails).
-      // Merge-rank semantics and goldens stay spec-asserted (LlmPrepSpec).
-      val docs = Tables.documents(s, d)
-      val merges = operators.Bpe.train(docs, col("text"), numMerges = 40)
-      // STAGED projections so the encode kernel runs ONCE per row: the
-      // old single-projection form referenced `toks` three times
-      // (detok, and size twice) and Catalyst inlined the BpeEncode call
-      // into every use — the gate measured 3× the encode cost (31.8 vs
-      // 11.4 s at x200; PERF.md "Round-8: regression scorecard").
-      // Multi-referenced non-cheap aliases survive CollapseProject
-      // (SPARK-36718), so each stage below evaluates its expensive
-      // column exactly once.
-      val nWords = size(filter(split(col("text"), " "), w => length(w) > 0))
-      // NULL text: concat_ws would mask it to '' (oracle says NULL) and a
-      // coalesce-to-true would silently pass the bound on the one row
-      // where it can't be evaluated — mirror NULL explicitly instead.
-      docs.select(col("doc_id"), col("text"),
-          operators.Bpe.encode(col("text"), merges).as("toks"))
-        .select(col("doc_id"), col("text"), size(col("toks")).as("ntok"),
-          concat_ws("", col("toks")).as("detok0"))
-        .select(col("doc_id"),
-          when(col("text").isNotNull, col("detok0")).as("detok"),
-          when(col("text").isNotNull,
-            col("ntok") <= length(col("detok0")) && col("ntok") >= nWords)
-            .as("n_tokens_bounded"))
-    },
-    "window_trailing_range" -> { (s, d) =>
-      // Trailing event-time RANGE window: per-user count + exact sum
-      // over the last hour at every event — the point-in-time feature
-      // primitive (operators.Rolling).
-      Rolling.trailingSumCount(Tables.events(s, d),
-          col("user_id"), col("ts"), col("value"), 3600L * 1000000L)
-        .select(col("event_id"), col("user_id"),
-          col("trailing_cnt"), col("trailing_sum"))
-    },
-    "embedding_standardize" -> { (s, d) =>
-      // Per-dimension standardization on the micro-integer grid
-      // (operators.FeatureScale): exact integer Σx/Σx² per dim, one-row
-      // broadcast back, row-local z-transform.
-      val z = FeatureScale.standardize(
-        Tables.embeddings(s, d), col("vec_id"), col("embedding"))
-      z.select(col("id").as("vec_id"), numCsv(col("z")).as("z"))
-    },
-
-    // ---- multimodal binary plumbing ------------------------------------
-    "multimodal_features" -> { (s, d) =>
-      val packed = Multimodal.packBinary(
-        Tables.documents(s, d), col("doc_id"), col("text"), "text/plain")
-      packed.select(
-        col("media_id"),
-        col("meta.byte_len").cast("long").as("byte_len"),
-        numCsv(Multimodal.asciiFeatures(decode(col("bytes"), "UTF-8"), 8)).as("features"))
-    },
-  )
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    gates.map(g => g.name -> g.build).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = oracleSqlBase ++ Relational.oracleSql ++ Map(
-    // plan variants share their base query's oracle: results must be
-    // bit-identical, only the physical strategy differs
-    "q1_pricing_summary_cents" -> oracleSqlBase("q1_pricing_summary"),
-    // the derived-cents layout gate must equal the same q1 oracle
-    // computed from the RAW doubles — the stored cents column is the
-    // thing under test
-    "layout_derived_cents" -> oracleSqlBase("q1_pricing_summary"),
-    // cross-kind routed projection: oracle from the RAW doubles over
-    // whole-table lineitem — both the stored-cents rewrite (long idiom)
-    // and the MakeDecimal rewrite (decimal idiom) must reproduce it
-    // materialized-join gates: oracles are the PLAIN joins over the RAW
-    // tables — the pre-joined projection and its rewrite are the thing
-    // under test; any row the substitution drops/duplicates hash-fails
-    "layout_denorm_star" ->
-      """SELECT c_custkey AS dn_custkey, c_mktsegment AS dn_segment,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-        |    * (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE)
-        |    AS dn_revenue,
-        |  count(*) AS dn_lines
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE l_returnflag = 'R'
-        |GROUP BY 1, 2""".stripMargin,
-    "layout_denorm_subset" ->
-      """SELECT o_orderpriority AS dn_priority,
-        |  CAST(SUM(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) AS dn_qty_cents,
-        |  count(*) AS dn_lines
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |WHERE l_quantity > 25
-        |GROUP BY 1""".stripMargin,
-    // materialized-aggregate gates: oracles are the plain aggregates
-    // over the RAW table — the rollup and its rewrite are under test;
-    // a group dropped, duplicated or mis-valued by the serve hash-fails
-    "layout_agg_rollup" ->
-      """SELECT l_orderkey AS ar_orderkey,
-        |  CAST(SUM(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) AS ar_qty_cents,
-        |  count(*) AS ar_lines
-        |FROM lineitem
-        |GROUP BY 1
-        |HAVING CAST(SUM(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) > 5000""".stripMargin,
-    "layout_agg_exists" ->
-      """SELECT o_orderpriority AS ae_priority, count(*) AS ae_orders
-        |FROM orders
-        |WHERE EXISTS (SELECT 1 FROM lineitem
-        |              WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
-        |GROUP BY 1""".stripMargin,
-    "layout_agg_reagg" ->
-      """SELECT l_returnflag AS rg_flag, l_linestatus AS rg_status,
-        |  CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS DOUBLE) / 100.0
-        |    AS rg_base,
-        |  count(*) AS rg_lines
-        |FROM lineitem
-        |WHERE l_discount <= 0.04
-        |GROUP BY 1, 2""".stripMargin,
-    "layout_agg_filtergrain" ->
-      """SELECT CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT)
-        |    * CAST(round(l_discount * 100) AS BIGINT)) AS DOUBLE) / 100000000.0
-        |    AS fg_rev,
-        |  count(*) AS fg_lines
-        |FROM lineitem
-        |WHERE l_discount BETWEEN 0.02 AND 0.04 AND l_quantity < 20""".stripMargin,
-    "layout_routed_cents" ->
-      """SELECT l_suppkey AS rc_suppkey,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-        |    * (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE)
-        |    AS rc_revenue,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-        |    * CAST(l_discount AS DECIMAL(12,2))) AS DOUBLE) AS rc_disc_rev
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1996-04-01'
-        |GROUP BY l_suppkey""".stripMargin,
-    "metric_gauc_sorted" -> oracleSqlBase("metric_gauc"))
-
-  /** Quality-score SQL expression over a `t(doc_id, toks)` CTE —
-    * mirrors TextFunctions.qualityScore; shared by the score and
-    * quantile-filter gates. */
-  private def qualityExprSql: String =
-    s"""(CAST(len(list_distinct(toks)) AS DOUBLE) / CAST(len(toks) AS DOUBLE)) * 0.4
-       |  + (CAST(len(list_filter(toks, x -> x IN ${OracleFragments.stopwordListSql})) AS DOUBLE)
-       |     / CAST(len(toks) AS DOUBLE)) * 0.3
-       |  + least(1.0, CAST(len(toks) AS DOUBLE) / 100.0) * 0.3""".stripMargin
-
-  /** MinHash+LSH near-dup pair oracle — shared by the pair gate and the
-    * two clustering gates built on its pair set. */
-  private def minHashLshOracle: String =
-    s"""WITH ${OracleFragments.shingleCtes(3)},
-       |${OracleFragments.minHashSigSql(16)},
-       |${OracleFragments.lshCandidateSql(4, 4)},
-       |${OracleFragments.jaccardVerifySql(0.5)}""".stripMargin
-
-  /** Cross-corpus (incremental-ingestion) MinHash oracle: same CTEs as
-    * [[minHashLshOracle]] but candidates pair the 1-in-5 "new batch"
-    * against the 4-in-5 "corpus" only; `finalSelect` picks the pair list
-    * or the novelty anti-join over the shared `j` CTE. */
-  private def incrementalDedupOracle(finalSelect: String): String =
-    s"""WITH ${OracleFragments.shingleCtes(3)},
-       |${OracleFragments.minHashSigSql(16)},
-       |${OracleFragments.lshCrossCandidateSql(4, 4,
-          "a.doc_id % 5 = 0", "b.doc_id % 5 <> 0")},
-       |${OracleFragments.jaccardJoinCtes}
-       |$finalSelect""".stripMargin
-
-  /** BM25 oracle CTE chain, final CTE `lex(query_id, doc_id,
-    * score_nano, rn)` capped at k — shared by the BM25 gate and the
-    * RRF fusion gate. Constants interpolate from the same Scala
-    * doubles the Spark side uses (Double.toString round-trips
-    * exactly); idf is rounded to 9 decimals before the product and
-    * contributions sum as nano BIGINTs. */
-  private def bm25OracleCtes(k: Int): String = {
-    val (k1, b) = (1.2, 0.75)
-    s"""tok AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-       |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-       |  FROM (SELECT doc_id, unnest(toks) AS term FROM tok) GROUP BY doc_id, term),
-       |dlt AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM tok),
-       |q(query_id, term) AS (VALUES (CAST(0 AS BIGINT), 'spark'), (0, 'join'),
-       |  (1, 'hash'), (1, 'table'), (2, 'window'), (2, 'sort'), (2, 'merge')),
-       |dfq AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf
-       |  WHERE term IN (SELECT DISTINCT term FROM q) GROUP BY term),
-       |st AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(len(toks)) AS BIGINT) AS sdl FROM tok),
-       |sc AS (SELECT q.query_id, tf.doc_id,
-       |    CAST(round(round(ln((n - df + 0.5) / (df + 0.5) + 1.0), 9)
-       |      * ((tf * ${k1 + 1.0}) / (tf + $k1 * (${1.0 - b} + $b * dl / (CAST(sdl AS DOUBLE) / n))))
-       |      * 1e9) AS BIGINT) AS nano
-       |  FROM tf JOIN q USING (term) JOIN dfq USING (term) JOIN dlt USING (doc_id) CROSS JOIN st),
-       |ag AS (SELECT query_id, doc_id, CAST(sum(nano) AS BIGINT) AS score_nano FROM sc GROUP BY 1, 2),
-       |lex AS (SELECT query_id, doc_id, score_nano,
-       |  CAST(row_number() OVER (PARTITION BY query_id
-       |    ORDER BY score_nano DESC, doc_id) AS BIGINT) AS rn
-       |  FROM ag QUALIFY rn <= $k)""".stripMargin
-  }
-
-  /** Shared brute-force hamming<=2 oracle for the bounded and full
-    * simhash-pairs gates (one template, one place to change). */
-  private def simHashPairsOracle(docFilter: String): String =
-    s"""WITH ${OracleFragments.simHashCtes(NearDup.SimHashBits).replace(
-           "FROM documents", s"FROM documents$docFilter")}
-       |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       |  CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-       |FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-       |WHERE bit_count(xor(a.simhash, b.simhash)) <= 2""".stripMargin
-
-  /** Thresholded-AUC oracle (tf.metrics.auc threshold layout) — shared by
-    * the batch and streaming gates, which must agree bit-for-bit. */
-  private def thresholdedAucOracle: String =
-    """WITH base AS (
-      |  SELECT CASE WHEN event_type = 'error' THEN 1 ELSE 0 END AS y,
-      |         least(value / 200.0, 1.0) AS p
-      |  FROM events),
-      |th AS (
-      |  SELECT i, CASE WHEN i = 0 THEN -0.0000001
-      |                 WHEN i = 199 THEN 1.0000001
-      |                 ELSE i / 199.0 END AS t
-      |  FROM range(200) r(i)),
-      |cm AS (
-      |  SELECT i,
-      |    SUM(CASE WHEN p > t AND y = 1 THEN 1 ELSE 0 END) AS tp,
-      |    SUM(CASE WHEN p > t AND y = 0 THEN 1 ELSE 0 END) AS fp
-      |  FROM th CROSS JOIN base GROUP BY i),
-      |tot AS (SELECT SUM(y) AS pos, SUM(1 - y) AS neg FROM base),
-      |seg AS (
-      |  SELECT i,
-      |    tp / CAST(pos AS DOUBLE) AS tpr, fp / CAST(neg AS DOUBLE) AS fpr,
-      |    lead(tp) OVER (ORDER BY i) / CAST(pos AS DOUBLE) AS tprN,
-      |    lead(fp) OVER (ORDER BY i) / CAST(neg AS DOUBLE) AS fprN
-      |  FROM cm, tot)
-      |SELECT ROUND(SUM((fpr - fprN) * (tpr + tprN) / 2.0), 9) AS auc
-      |FROM seg WHERE i < 199""".stripMargin
-
-  private def oracleSqlBase: Map[String, String] = Map(
-    "q1_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_base_price,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS sum_disc_price,
-        |  COUNT(*) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '1998-09-01'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "scan_full_width" ->
-      "SELECT * FROM lineitem",
-    "metric_mean_aggregator" ->
-      """SELECT round(SUM(l_quantity * l_discount) / SUM(l_discount), 9) AS wmean
-        |FROM lineitem""".stripMargin,
-    "stream_sliding_counts" ->
-      """WITH e AS (
-        |  SELECT event_type,
-        |    unnest([time_bucket(INTERVAL '30 minutes', ts),
-        |            time_bucket(INTERVAL '30 minutes', ts) - INTERVAL '30 minutes']) AS window_start,
-        |    ts
-        |  FROM events)
-        |SELECT window_start, event_type, COUNT(*) AS n
-        |FROM e
-        |WHERE ts >= window_start AND ts < window_start + INTERVAL '1 hour'
-        |GROUP BY window_start, event_type""".stripMargin,
-    "scan_projection_defaults" ->
-      "SELECT l_orderkey, l_linenumber, l_quantity, CAST(42 AS BIGINT) AS missing_feat FROM lineitem",
-    "join_orders_customer" ->
-      """SELECT o_orderkey, o_custkey, c_name, c_mktsegment, o_totalprice
-        |FROM orders JOIN customer ON o_custkey = c_custkey""".stripMargin,
-    "q3_shipping_priority" ->
-      """SELECT l_orderkey,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-        |    * (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |GROUP BY l_orderkey
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-    "topk_orders" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin,
-    "agg_distinct_parts" ->
-      """SELECT l_returnflag, COUNT(DISTINCT l_partkey) AS n_parts, COUNT(*) AS n_rows
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "join_full_outer" ->
-      """SELECT user_id, vec_id
-        |FROM (SELECT DISTINCT user_id FROM events) u
-        |FULL OUTER JOIN (SELECT vec_id FROM embeddings WHERE vec_id < 30) v
-        |ON user_id = vec_id""".stripMargin,
-    "window_topn_per_user" ->
-      """SELECT user_id, event_id, value,
-        |  CAST(row_number() OVER (PARTITION BY user_id ORDER BY value DESC, event_id) AS BIGINT) AS rn
-        |FROM events
-        |QUALIFY rn <= 3""".stripMargin,
-    "q6_forecast_revenue" ->
-      """SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-        |  * CAST(l_discount AS DECIMAL(12,2))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |WHERE l_discount BETWEEN 0.02 AND 0.04 AND l_quantity < 20""".stripMargin,
-    "q14_promo_share" ->
-      """SELECT CAST(SUM(CASE WHEN p_type = 'PROMO'
-        |    THEN CAST(l_extendedprice AS DECIMAL(12,2))
-        |         * (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(12,2)))
-        |    ELSE CAST(0 AS DECIMAL(12,2)) END) AS DOUBLE) * 100.0
-        |  / CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-        |    * (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE)
-        |  AS promo_share
-        |FROM lineitem JOIN part ON l_partkey = p_partkey""".stripMargin,
-    "scalar_strings" ->
-      """SELECT p_partkey,
-        |  upper(p_name) AS uname,
-        |  substr(p_name, 1, 3) AS prefix,
-        |  concat_ws('|', p_brand, p_type) AS tag,
-        |  CAST(strlen(p_name) AS BIGINT) AS name_len,
-        |  p_name LIKE '%widget%' AS is_widget,
-        |  replace(p_name, ' ', '_') AS snake
-        |FROM part""".stripMargin,
-    "scalar_arrays" ->
-      """SELECT vec_id,
-        |  list_max(embedding) AS vmax,
-        |  list_min(embedding) AS vmin,
-        |  CAST(len(embedding) AS BIGINT) AS dim,
-        |  embedding[1] AS first,
-        |  array_to_string(list_transform(embedding[1:4],
-        |    x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT)), ',') AS head4,
-        |  list_contains(embedding, CAST(0.0 AS FLOAT)) AS has_zero
-        |FROM embeddings""".stripMargin,
-    "dedup_block_roundtrip" ->
-      "SELECT event_id, event_type FROM events",
-    "dedup_block_compressed" ->
-      """WITH g AS (
-        |  SELECT user_id AS block, list(event_type ORDER BY event_id) AS ordered
-        |  FROM events GROUP BY user_id)
-        |SELECT block,
-        |  array_to_string(list_sort(list_distinct(ordered)), ',') AS event_type_uniq,
-        |  array_to_string(list_transform(ordered,
-        |    x -> CAST(list_position(list_sort(list_distinct(ordered)), x) - 1 AS BIGINT)), ',') AS event_type_idx
-        |FROM g""".stripMargin,
-    "partition_modulo_shards" ->
-      "SELECT user_id % 8 AS shard, COUNT(*) AS n FROM events GROUP BY shard",
-    "partition_dual_modulo" ->
-      """SELECT (user_id % 8) % 4 AS node, (user_id % 8) // 4 AS dev, COUNT(*) AS n
-        |FROM events GROUP BY node, dev""".stripMargin,
-    "shuffle_batch_permutation" ->
-      "SELECT event_id FROM events",
-    "even_splits_count" ->
-      "SELECT COUNT(*) AS n FROM events",
-    "lookup_join" ->
-      """SELECT event_id, user_id, label
-        |FROM events LEFT JOIN embeddings ON user_id = vec_id""".stripMargin,
-    "lookup_dedup_join" ->
-      """SELECT event_id, user_id, label
-        |FROM events LEFT JOIN embeddings ON user_id = vec_id""".stripMargin,
-    "lookup_cache_miss" ->
-      """SELECT event_id, user_id FROM events
-        |WHERE user_id NOT IN (SELECT vec_id FROM embeddings WHERE vec_id < 50)""".stripMargin,
-    "input_layer_assemble" ->
-      s"""WITH dim AS (SELECT vec_id,
-         |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         |z AS (SELECT list_transform(range(MIN(len(embedding))), x -> 0.0) AS zv
-         |  FROM embeddings),
-         |e AS (SELECT event_id,
-         |  round(value / 200.0, 9) AS n0,
-         |  round(ln(1 + abs(value)), 9) AS n1,
-         |  ((user_id % 1024) + 1024) % 1024 AS c0,
-         |  ${OracleFragments.polyHashSql("event_type")} % 512 AS c1
-         |  FROM events)
-         |SELECT e.event_id AS id,
-         |  array_to_string(list_transform(
-         |    [e.n0, e.n1] || COALESCE(l0.v, z.zv) || COALESCE(l1.v, z.zv),
-         |    x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT)), ',') AS features
-         |FROM e CROSS JOIN z
-         |LEFT JOIN dim l0 ON e.c0 = l0.vec_id
-         |LEFT JOIN dim l1 ON e.c1 = l1.vec_id""".stripMargin,
-    "join_salted_skew" ->
-      """SELECT user_id, event_id, label
-        |FROM events JOIN embeddings ON user_id = vec_id""".stripMargin,
-    "groupby_collect_sorted" ->
-      """SELECT user_id AS key,
-        |  array_to_string(list(event_type ORDER BY event_id), ',') AS history
-        |FROM events GROUP BY user_id""".stripMargin,
-    "range_clip_window" ->
-      """SELECT event_id,
-        |  COUNT(*) OVER w AS n_recent,
-        |  COALESCE(array_to_string(list_transform(list_sort(COALESCE(list(value) OVER w, [])),
-        |    x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT)), ','), '') AS recent_vals
-        |FROM (SELECT event_id, user_id, value,
-        |        CAST(floor(epoch_ms(ts)/1000) AS BIGINT) AS tsec FROM events)
-        |WINDOW w AS (PARTITION BY user_id ORDER BY tsec
-        |             RANGE BETWEEN 3600 PRECEDING AND 1 PRECEDING)""".stripMargin,
-    "metric_weighted_mean" ->
-      """SELECT CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_discount AS DECIMAL(12,2))) AS DOUBLE)
-        |     / CAST(SUM(CAST(l_discount AS DECIMAL(12,2))) AS DOUBLE) AS wmean
-        |FROM lineitem""".stripMargin,
-    "metric_accuracy" ->
-      """SELECT CAST(SUM(CASE WHEN (event_type = 'error') = (value > 100) THEN 1 ELSE 0 END) AS DOUBLE)
-        |     / COUNT(*) AS accuracy FROM events""".stripMargin,
-    "metric_auc" ->
-      """WITH g AS (
-        |  SELECT value AS s, COUNT(*) AS cnt,
-        |         SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS pos
-        |  FROM events GROUP BY value),
-        |r AS (
-        |  SELECT pos, cnt,
-        |         COALESCE(SUM(cnt) OVER (ORDER BY s ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cumBefore
-        |  FROM g)
-        |SELECT (SUM(pos * (cumBefore + (cnt + 1) / 2.0)) - SUM(pos) * (SUM(pos) + 1) / 2.0)
-        |     / (CAST(SUM(pos) AS DOUBLE) * SUM(cnt - pos)) AS auc
-        |FROM r""".stripMargin,
-    "metric_gauc" ->
-      s"""WITH ${OracleFragments.gaucCtes},
-         |pa AS (
-         |  SELECT g, (posRankSum - p * (p + 1) / 2.0) / (CAST(p AS DOUBLE) * n) AS auc, cnt
-         |  FROM pg WHERE p > 0 AND n > 0)
-         |SELECT ROUND(SUM(auc * cnt) / SUM(cnt), 9) AS gauc FROM pa""".stripMargin,
-    "metric_gauc_per_group" ->
-      s"""WITH ${OracleFragments.gaucCtes}
-         |SELECT g AS "group",
-         |       (posRankSum - p * (p + 1) / 2.0) / (CAST(p AS DOUBLE) * n) AS auc, cnt
-         |FROM pg WHERE p > 0 AND n > 0""".stripMargin,
-    "text_stats" ->
-      s"""WITH t AS (SELECT doc_id, text, string_split(text,' ') AS toks FROM documents)
-         |SELECT doc_id,
-         |  CAST(len(toks) AS BIGINT) AS n_tokens,
-         |  CAST(len(list_distinct(toks)) AS BIGINT) AS n_uniq_tokens,
-         |  CAST(len(regexp_extract_all(text, '[a-z]+')) AS BIGINT) AS n_regex_tokens,
-         |  CAST(len(list_filter(toks, x -> x IN ${OracleFragments.stopwordListSql})) AS DOUBLE)
-         |    / len(toks) AS stopword_ratio,
-         |  CAST(len(regexp_replace(text, '[a-z0-9 ]', '', 'g')) AS DOUBLE) / len(text) AS punct_ratio
-         |FROM t""".stripMargin,
-    "text_quality" ->
-      s"""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents)
-         |SELECT doc_id, $qualityExprSql AS quality
-         |FROM t""".stripMargin,
-    "text_quality_filter" ->
-      s"""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-         |q AS (SELECT doc_id, round($qualityExprSql, 9) AS quality FROM t),
-         |thr AS (SELECT round(quantile_cont(quality, 0.25), 9) AS thr FROM q)
-         |SELECT doc_id, quality FROM q CROSS JOIN thr WHERE quality >= thr""".stripMargin,
-    "text_bm25_topk" ->
-      s"""WITH ${bm25OracleCtes(10)}
-         |SELECT query_id, doc_id, score_nano, rn FROM lex""".stripMargin,
-    "ordinal_stable_ids" ->
-      """SELECT doc_id, n_chars,
-        |  CAST(row_number() OVER (ORDER BY n_chars, doc_id) AS BIGINT) AS ordinal
-        |FROM documents""".stripMargin,
-    "encode_categorical" ->
-      s"""WITH ld AS (SELECT lang AS v, count(*) AS c FROM documents GROUP BY lang),
-         |li AS (SELECT v, CAST(row_number() OVER (ORDER BY c DESC, v) - 1 AS BIGINT) AS idx FROM ld),
-         |sd AS (SELECT source AS v, count(*) AS c FROM documents GROUP BY source),
-         |si AS (SELECT v, CAST(row_number() OVER (ORDER BY c DESC, v) - 1 AS BIGINT) AS idx FROM sd)
-         |SELECT doc_id, li.idx AS lang_idx, si.idx AS source_idx,
-         |  ${OracleFragments.polyHashSql("lang")} % 1024 AS lang_hash,
-         |  ${OracleFragments.polyHashSql("source")} % 1024 AS source_hash
-         |FROM documents JOIN li ON lang = li.v JOIN si ON source = si.v""".stripMargin,
-    "encode_target_loo" ->
-      """WITH s AS (SELECT event_type,
-        |    SUM(CAST(value AS DECIMAL(12,2))) AS sm, COUNT(*) AS cnt
-        |  FROM events GROUP BY event_type),
-        |p AS (SELECT CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) / COUNT(*) AS prior
-        |  FROM events)
-        |SELECT event_id, e.event_type,
-        |  round((CAST(s.sm AS DOUBLE) - CAST(CAST(e.value AS DECIMAL(12,2)) AS DOUBLE)
-        |      + 10 * p.prior) / (s.cnt - 1 + 10), 9) AS target_enc
-        |FROM events e JOIN s ON e.event_type = s.event_type CROSS JOIN p""".stripMargin,
-    "feature_quantile_bin" ->
-      """WITH v AS (SELECT event_id, CAST(value AS DOUBLE) AS value FROM events
-        |  WHERE value IS NOT NULL)
-        |SELECT event_id, value,
-        |  ((rank() OVER (ORDER BY value) - 1) * 10) // COUNT(*) OVER () AS bin
-        |FROM v""".stripMargin,
-    "hybrid_rrf_fusion" ->
-      s"""WITH ${bm25OracleCtes(20)},
-         |${OracleFragments.vectorCtes},
-         |bkt AS (SELECT vec_id, v, nrm, ${OracleFragments.signBucketSql(6)} AS bucket FROM nv),
-         |pann AS (SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-         |  ${OracleFragments.cosineSql("q", "c")} AS cosine
-         |  FROM bkt q JOIN bkt c ON c.bucket = q.bucket AND c.vec_id != q.vec_id
-         |  WHERE q.vec_id < 3),
-         |ann AS (SELECT q_id AS query_id, n_id AS doc_id,
-         |  CAST(row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, n_id) AS BIGINT) AS rn
-         |  FROM pann QUALIFY rn <= 20),
-         |f AS (SELECT coalesce(l.query_id, a.query_id) AS query_id,
-         |  coalesce(l.doc_id, a.doc_id) AS doc_id,
-         |  coalesce(CAST(1 AS DOUBLE) / (60 + l.rn), 0) +
-         |    coalesce(CAST(1 AS DOUBLE) / (60 + a.rn), 0) AS rrf_score
-         |  FROM lex l FULL OUTER JOIN ann a
-         |    ON l.query_id = a.query_id AND l.doc_id = a.doc_id)
-         |SELECT query_id, doc_id, rrf_score,
-         |  CAST(row_number() OVER (PARTITION BY query_id
-         |    ORDER BY rrf_score DESC, doc_id) AS BIGINT) AS fused_rank
-         |FROM f QUALIFY fused_rank <= 10""".stripMargin,
-    "text_tfidf_topk" ->
-      """WITH toks AS (SELECT doc_id, unnest(string_split(text,' ')) AS term FROM documents),
-        |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY doc_id, term),
-        |dft AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
-        |n AS (SELECT COUNT(DISTINCT doc_id) AS n_docs FROM documents),
-        |scored AS (SELECT doc_id, tf.term AS term,
-        |    round(tf * ln(CAST(n_docs AS DOUBLE) / df), 9) AS tfidf
-        |  FROM tf JOIN dft ON tf.term = dft.term CROSS JOIN n)
-        |SELECT doc_id, term, tfidf,
-        |  CAST(row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term) AS BIGINT) AS rn
-        |FROM scored QUALIFY rn <= 5""".stripMargin,
-    "text_lm_score" ->
-      s"""WITH tok AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-         |bg AS (SELECT doc_id,
-         |  unnest(list_transform(range(1, len(toks)),
-         |    i -> ${OracleFragments.polyHashSql("toks[i]")})) AS h1,
-         |  unnest(list_transform(range(1, len(toks)),
-         |    i -> ${OracleFragments.polyHashSql("array_to_string(toks[i:i+1], ' ')")})) AS h2
-         |  FROM tok),
-         |cb AS (SELECT h2, COUNT(*) AS c2 FROM bg GROUP BY h2),
-         |cp AS (SELECT h1, COUNT(*) AS c1 FROM bg GROUP BY h1),
-         |s AS (SELECT b.doc_id,
-         |  SUM(CAST(round(ln(CAST(cb.c2 AS DOUBLE) / cp.c1) * 1e9) AS BIGINT)) AS slog,
-         |  COUNT(*) AS nb
-         |  FROM bg b JOIN cb ON cb.h2 = b.h2 JOIN cp ON cp.h1 = b.h1
-         |  GROUP BY b.doc_id)
-         |SELECT doc_id, CAST(nb AS BIGINT) AS n_bigrams,
-         |  -(CAST(slog AS DOUBLE) / (1e9 * nb)) AS cross_entropy
-         |FROM s""".stripMargin,
-    // losslessness oracle: BPE merges only ever concatenate adjacent
-    // in-word symbols, so detokenization is the text minus the space
-    // delimiters; the count-bound boolean is asserted literally true
-    // (a Spark-side miscount flips it -> hash fail)
-    "text_bpe_tokens" ->
-      """SELECT doc_id, replace(text, ' ', '') AS detok,
-        |  CASE WHEN text IS NOT NULL THEN true END AS n_tokens_bounded
-        |FROM documents""".stripMargin,
-    "text_langid" ->
-      s"""SELECT doc_id,
-         |  CASE WHEN len(list_filter(string_split(text,' '),
-         |    x -> x IN ${OracleFragments.stopwordListSql})) > 0
-         |  THEN 'en' ELSE 'und' END AS lang_pred
-         |FROM documents""".stripMargin,
-    "text_fingerprint" ->
-      s"SELECT doc_id, ${OracleFragments.polyHashSql("text")} AS fp FROM documents",
-    "dedup_exact_groups" ->
-      "SELECT text, COUNT(*) AS n, MIN(doc_id) AS keeper FROM documents GROUP BY text",
-    // layout-invariant scan + closed-form Morton interleave of the two
-    // masked 31-bit keys (mirrors VecUtil.interleaveBits bit-for-bit)
-    "scan_zorder_layout" ->
-      s"""SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
-         |  CAST(list_sum(list_transform(range(0, 31),
-         |    i -> ((((l_partkey & 2147483647) >> i) & 1) << (2*i))
-         |       + ((((l_suppkey & 2147483647) >> i) & 1) << (2*i+1)))) AS BIGINT) AS zval
-         |FROM lineitem
-         |WHERE l_partkey BETWEEN 100 AND 300 AND l_suppkey BETWEEN 20 AND 60""".stripMargin,
-    // same gram/dup CTEs as dedup_span_coverage plus the min-holder
-    // exemption, island merge, and a NOT-EXISTS rebuild; empty results
-    // coalesce to '' (fully-excised docs must keep their row)
-    "dedup_span_removal" ->
-      s"""WITH tok AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-         |g AS (SELECT doc_id, unnest(list_transform(range(1, len(toks)-3),
-         |    i -> struct_pack(pos := i,
-         |      h := ${OracleFragments.polyHashSql("array_to_string(toks[i:i+4], ' ')")}))) AS ph
-         |  FROM tok WHERE len(toks) >= 5),
-         |e AS (SELECT doc_id, ph.pos AS pos, ph.h AS h FROM g),
-         |dup AS (SELECT h, min(doc_id) AS mn FROM e GROUP BY h
-         |  HAVING min(doc_id) <> max(doc_id)),
-         |rem AS (SELECT e.doc_id, e.pos FROM e JOIN dup USING (h) WHERE e.doc_id <> dup.mn),
-         |isl AS (SELECT doc_id, pos, max(pos + 5) OVER (PARTITION BY doc_id ORDER BY pos
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pend FROM rem),
-         |isl2 AS (SELECT doc_id, pos, sum(CASE WHEN pend IS NULL OR pos > pend THEN 1 ELSE 0 END)
-         |    OVER (PARTITION BY doc_id ORDER BY pos
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS grp FROM isl),
-         |iv AS (SELECT doc_id, grp, min(pos) AS s, max(pos) + 5 AS e FROM isl2 GROUP BY doc_id, grp),
-         |tokidx AS (SELECT doc_id, unnest(range(1, len(toks)+1)) AS i,
-         |    unnest(toks) AS tk FROM tok),
-         |keep AS (SELECT t.doc_id, t.i, t.tk FROM tokidx t
-         |  WHERE NOT EXISTS (SELECT 1 FROM iv
-         |    WHERE iv.doc_id = t.doc_id AND t.i >= iv.s AND t.i < iv.e)),
-         |built AS (SELECT doc_id, string_agg(tk, ' ' ORDER BY i) AS ct FROM keep GROUP BY doc_id)
-         |SELECT tok.doc_id, coalesce(b.ct, '') AS clean_text
-         |FROM tok LEFT JOIN built b USING (doc_id)""".stripMargin,
-    // same min-holder-keeps rule at LINE granularity; lines group by the
-    // same poly-hash the engine exchanges, so collisions merge identically
-    "dedup_line_level" ->
-      s"""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-         |b AS (SELECT doc_id, CAST(ceil(len(toks)/10.0) AS BIGINT) AS n_lines FROM t),
-         |l0 AS (SELECT doc_id, toks,
-         |    unnest(range(0, CAST(ceil(len(toks)/10.0) AS BIGINT))) AS pos FROM t),
-         |l AS (SELECT doc_id, CAST(pos AS BIGINT) AS pos,
-         |    array_to_string(list_slice(toks, pos*10+1, pos*10+10), ' ') AS line FROM l0),
-         |lh AS (SELECT doc_id, pos, line, ${OracleFragments.polyHashSql("line")} AS h FROM l),
-         |m AS (SELECT h, min(doc_id) AS mn, max(doc_id) AS mx FROM lh GROUP BY h),
-         |k AS (SELECT lh.doc_id, lh.pos, lh.line FROM lh JOIN m USING (h)
-         |  WHERE m.mn = m.mx OR lh.doc_id = m.mn),
-         |r AS (SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS clean_text,
-         |    CAST(count(*) AS BIGINT) AS n_kept FROM k GROUP BY doc_id)
-         |SELECT b.doc_id, coalesce(r.clean_text, '') AS clean_text, b.n_lines,
-         |  coalesce(r.n_kept, CAST(0 AS BIGINT)) AS n_kept
-         |FROM b LEFT JOIN r USING (doc_id)""".stripMargin,
-    // positions are 1-based here vs 0-based in Spark; the union LENGTH
-    // of [pos, pos+5) intervals is shift-invariant so the aggregates
-    // agree exactly
-    "dedup_span_coverage" ->
-      s"""WITH tok AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-         |g AS (SELECT doc_id, unnest(list_transform(range(1, len(toks)-3),
-         |    i -> struct_pack(pos := i,
-         |      h := ${OracleFragments.polyHashSql("array_to_string(toks[i:i+4], ' ')")}))) AS ph
-         |  FROM tok WHERE len(toks) >= 5),
-         |e AS (SELECT doc_id, ph.pos AS pos, ph.h AS h FROM g),
-         |dup AS (SELECT h FROM e GROUP BY h HAVING min(doc_id) <> max(doc_id)),
-         |hit AS (SELECT e.doc_id, e.pos FROM e JOIN dup USING (h)),
-         |iv AS (SELECT doc_id, pos, max(pos + 5) OVER (PARTITION BY doc_id ORDER BY pos
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pend FROM hit),
-         |cov AS (SELECT doc_id, sum(greatest(0, pos + 5 - greatest(pos, coalesce(pend, 0)))) AS c
-         |  FROM iv GROUP BY doc_id),
-         |nt AS (SELECT doc_id, CAST(len(string_split(text,' ')) AS BIGINT) AS n_tokens FROM documents)
-         |SELECT nt.doc_id, n_tokens, CAST(coalesce(c, 0) AS BIGINT) AS dup_span_tokens,
-         |  CAST(coalesce(c, 0) AS DOUBLE) / n_tokens AS dup_span_frac
-         |FROM nt LEFT JOIN cov USING (doc_id)""".stripMargin,
-    "dedup_ngram_jaccard" ->
-      s"""WITH ${OracleFragments.shingleCtes(3)},
-         |${OracleFragments.cappedJaccardSql(20, 0.5)}""".stripMargin,
-    "dedup_minhash_lsh" -> minHashLshOracle,
-    "dedup_incremental_pairs" -> incrementalDedupOracle(
-      "SELECT doc_a, doc_b, CAST(shared AS DOUBLE)/(na + nb - shared) AS jaccard\n" +
-        "FROM j WHERE CAST(shared AS DOUBLE)/(na + nb - shared) >= 0.5"),
-    "dedup_ingest_novel" -> incrementalDedupOracle(
-      "SELECT doc_id, source FROM documents WHERE doc_id % 5 = 0 AND doc_id NOT IN\n" +
-        "  (SELECT doc_a FROM j WHERE CAST(shared AS DOUBLE)/(na + nb - shared) >= 0.5)"),
-    "dedup_cluster_components" ->
-      s"""WITH RECURSIVE pairs AS (
-         |$minHashLshOracle
-         |),
-         |${OracleFragments.connectedComponentsCtes}
-         |SELECT id, component FROM comp""".stripMargin,
-    "dedup_corpus_canonical" ->
-      s"""WITH RECURSIVE pairs AS (
-         |$minHashLshOracle
-         |),
-         |${OracleFragments.connectedComponentsCtes}
-         |SELECT doc_id, lang, source, n_chars FROM documents
-         |WHERE doc_id NOT IN (SELECT id FROM comp WHERE id != component)""".stripMargin,
-    "dedup_canonical_quality" ->
-      s"""WITH RECURSIVE pairs AS (
-         |$minHashLshOracle
-         |),
-         |${OracleFragments.connectedComponentsCtes},
-         |t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-         |q AS (SELECT doc_id, round($qualityExprSql, 9) AS score FROM t),
-         |r AS (SELECT comp.id, comp.component, q.score,
-         |  row_number() OVER (PARTITION BY comp.component
-         |    ORDER BY q.score DESC, comp.id) AS rn
-         |  FROM comp JOIN q ON q.doc_id = comp.id)
-         |SELECT d.doc_id, d.source FROM documents d
-         |WHERE d.doc_id NOT IN (SELECT id FROM r WHERE rn > 1)""".stripMargin,
-    "dedup_simhash" ->
-      s"""WITH ${OracleFragments.simHashCtes(NearDup.SimHashBits)}
-         |SELECT doc_id, simhash FROM fp""".stripMargin,
-    "dedup_simhash_pairs" ->
-      // brute-force hamming definition: the banded engine pipeline must
-      // reproduce it exactly (pigeonhole recall guarantee)
-      simHashPairsOracle(" WHERE doc_id < 2000"),
-    "dedup_simhash_pairs_full" -> simHashPairsOracle(""),
-    "dedup_embedding_neardup" ->
-      s"""WITH ${OracleFragments.vectorCtes},
-         |bkt AS (SELECT vec_id, v, nrm, ${OracleFragments.signBucketSql(8)} AS bucket FROM nv)
-         |SELECT * FROM (
-         |  SELECT a.vec_id AS id_a, c.vec_id AS id_b,
-         |    ${OracleFragments.cosineSql("a", "c")} AS cosine
-         |  FROM bkt a JOIN bkt c ON a.bucket = c.bucket AND a.vec_id < c.vec_id)
-         |WHERE cosine >= 0.3""".stripMargin,
-    "dedup_embedding_neardup_wide" ->
-      s"""WITH ${OracleFragments.vectorCtes},
-         |bkt AS (SELECT vec_id, v, nrm, ${OracleFragments.signBucketSql(12)} AS bucket FROM nv)
-         |SELECT * FROM (
-         |  SELECT a.vec_id AS id_a, c.vec_id AS id_b,
-         |    ${OracleFragments.cosineSql("a", "c")} AS cosine
-         |  FROM bkt a JOIN bkt c ON a.bucket = c.bucket AND a.vec_id < c.vec_id)
-         |WHERE cosine >= 0.3""".stripMargin,
-    "ann_topk_brute" ->
-      s"""WITH ${OracleFragments.vectorCtes},
-         |p AS (SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-         |  ${OracleFragments.cosineSql("q", "c")} AS cosine
-         |  FROM nv q JOIN nv c ON c.vec_id != q.vec_id WHERE q.vec_id < 16)
-         |${OracleFragments.annTopkSelectSql(5)}""".stripMargin,
-    "ann_topk_bucketed" ->
-      s"""WITH ${OracleFragments.vectorCtes},
-         |bkt AS (SELECT vec_id, v, nrm, ${OracleFragments.signBucketSql(6)} AS bucket FROM nv),
-         |p AS (SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-         |  ${OracleFragments.cosineSql("q", "c")} AS cosine
-         |  FROM bkt q JOIN bkt c ON c.bucket = q.bucket AND c.vec_id != q.vec_id
-         |  WHERE q.vec_id < 16)
-         |${OracleFragments.annTopkSelectSql(5)}""".stripMargin,
-    // one-sided by contract (see the queries entry): n_brute recomputed
-    // exactly; recall_ok pinned to 1 — DuckDB cannot rerun IVF's k-means
-    "ann_recall_ivf" ->
-      s"""WITH ${OracleFragments.vectorCtes},
-         |p AS (SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-         |  ${OracleFragments.cosineSql("q", "c")} AS cosine
-         |  FROM nv q JOIN nv c ON c.vec_id != q.vec_id WHERE q.vec_id % 50 = 0),
-         |topk AS (${OracleFragments.annTopkSelectSql(5)})
-         |SELECT CAST(1 AS BIGINT) AS recall_ok,
-         |  (SELECT CAST(COUNT(*) AS BIGINT) FROM topk) AS n_brute""".stripMargin,
-    "ann_hard_negatives" ->
-      s"""WITH ${OracleFragments.vectorCtes},
-         |bkt AS (SELECT nv.vec_id, v, nrm, emb.label,
-         |  ${OracleFragments.signBucketSql(6)} AS bucket
-         |  FROM nv JOIN embeddings emb ON emb.vec_id = nv.vec_id),
-         |p AS (SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-         |  ${OracleFragments.cosineSql("q", "c")} AS cosine
-         |  FROM bkt q JOIN bkt c ON c.bucket = q.bucket AND c.vec_id != q.vec_id
-         |    AND c.label != q.label
-         |  WHERE q.vec_id < 16)
-         |${OracleFragments.annTopkSelectSql(5)}""".stripMargin,
-    "multimodal_image_decode" ->
-      """WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 200),
-        |px AS (SELECT doc_id, r1.x, r2.y
-        |  FROM ids CROSS JOIN range(8) r1(x) CROSS JOIN range(8) r2(y))
-        |SELECT doc_id AS media_id, 8 AS width, 8 AS height,
-        |  CAST(SUM((doc_id*7 + x*3 + y*5) % 256) AS BIGINT) AS sum_r,
-        |  CAST(SUM((doc_id*11 + x) % 256) AS BIGINT) AS sum_g,
-        |  CAST(SUM((doc_id*13 + y) % 256) AS BIGINT) AS sum_b
-        |FROM px GROUP BY doc_id""".stripMargin,
-    "multimodal_frame_sample" ->
-      """WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 100),
-        |fr AS (SELECT doc_id, rf.k * 2 AS f FROM ids CROSS JOIN range(3) rf(k)),
-        |px AS (SELECT doc_id, f, r1.x, r2.y
-        |  FROM fr CROSS JOIN range(8) r1(x) CROSS JOIN range(8) r2(y))
-        |SELECT doc_id AS media_id, CAST(f AS BIGINT) AS frame_idx,
-        |  CAST(SUM((doc_id*7 + f*17 + x*3 + y*5) % 256) AS BIGINT) AS sum_r,
-        |  CAST(SUM((doc_id*11 + f*19 + x) % 256) AS BIGINT) AS sum_g,
-        |  CAST(SUM((doc_id*13 + f*23 + y) % 256) AS BIGINT) AS sum_b
-        |FROM px GROUP BY doc_id, f""".stripMargin,
-    "multimodal_image_resize" ->
-      """WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 200),
-        |px AS (SELECT doc_id, r1.x, r2.y
-        |  FROM ids CROSS JOIN range(4) r1(x) CROSS JOIN range(4) r2(y))
-        |SELECT doc_id AS media_id, 4 AS width, 4 AS height,
-        |  CAST(SUM((doc_id*7 + 2*x*3 + 2*y*5) % 256) AS BIGINT) AS sum_r,
-        |  CAST(SUM((doc_id*11 + 2*x) % 256) AS BIGINT) AS sum_g,
-        |  CAST(SUM((doc_id*13 + 2*y) % 256) AS BIGINT) AS sum_b
-        |FROM px GROUP BY doc_id""".stripMargin,
-    "multimodal_image_decode_bulk" ->
-      """WITH px AS (SELECT doc_id, r1.x, r2.y
-        |  FROM documents CROSS JOIN range(8) r1(x) CROSS JOIN range(8) r2(y))
-        |SELECT doc_id AS media_id, 8 AS width, 8 AS height,
-        |  CAST(SUM((doc_id*7 + x*3 + y*5) % 256) AS BIGINT) AS sum_r,
-        |  CAST(SUM((doc_id*11 + x) % 256) AS BIGINT) AS sum_g,
-        |  CAST(SUM((doc_id*13 + y) % 256) AS BIGINT) AS sum_b
-        |FROM px GROUP BY doc_id""".stripMargin,
-    "multimodal_image_neardup" ->
-      """WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 200),
-        |px AS (SELECT doc_id, doc_id // 4 AS s, doc_id % 4 AS tw, r1.x, r2.y,
-        |  CAST(r2.y*9 + r1.x + 1 AS BIGINT) AS i
-        |  FROM ids CROSS JOIN range(9) r1(x) CROSS JOIN range(8) r2(y)),
-        |v AS (SELECT doc_id, x, y,
-        |  ((i*i*(s+7) + i*(s*s+13)) % 1009
-        |   + CASE WHEN x = 0 AND y = 0 THEN tw*8 ELSE 0 END) % 256 AS v FROM px),
-        |g AS (SELECT doc_id, x, y,
-        |  299*v + 587*((v+85)%256) + 114*((v+170)%256) AS gm FROM v),
-        |fp AS (SELECT a.doc_id,
-        |  CAST(COALESCE(SUM(CASE WHEN b.gm <= a.gm THEN 0
-        |    WHEN a.y*8 + a.x = 63 THEN CAST(-9223372036854775808 AS BIGINT)
-        |    ELSE CAST(1 AS BIGINT) << (a.y*8 + a.x) END), 0) AS BIGINT) AS dh
-        |  FROM g a JOIN g b ON b.doc_id = a.doc_id AND b.y = a.y AND b.x = a.x + 1
-        |  WHERE a.x < 8 GROUP BY a.doc_id)
-        |SELECT a.doc_id AS media_a, b.doc_id AS media_b,
-        |  CAST(bit_count(xor(a.dh, b.dh)) AS BIGINT) AS hamming
-        |FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.dh, b.dh)) <= 2""".stripMargin,
-    "multimodal_audio_neardup" ->
-      """WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 200),
-        |smp AS (SELECT doc_id, r.i,
-        |  ((r.i*r.i*((doc_id // 4)+7) + r.i*((doc_id // 4)*(doc_id // 4)+13)
-        |    + CASE WHEN r.i = 0 THEN (doc_id % 4)*977 ELSE 0 END)
-        |   % 65543) % 65536 - 32768 AS v
-        |  FROM ids CROSS JOIN range(256) r(i)),
-        |en AS (SELECT doc_id, i // 4 AS w, SUM(ABS(v)) AS e
-        |  FROM smp GROUP BY doc_id, i // 4),
-        |fp AS (SELECT a.doc_id,
-        |  CAST(COALESCE(SUM(CASE WHEN b.e > a.e
-        |    THEN CAST(1 AS BIGINT) << CAST(a.w AS INTEGER) ELSE 0 END), 0) AS BIGINT) AS fh
-        |  FROM en a JOIN en b ON b.doc_id = a.doc_id AND b.w = a.w + 1
-        |  GROUP BY a.doc_id)
-        |SELECT a.doc_id AS media_a, b.doc_id AS media_b,
-        |  CAST(bit_count(xor(a.fh, b.fh)) AS BIGINT) AS hamming
-        |FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.fh, b.fh)) <= 2""".stripMargin,
-    "sketch_kmv_overlap" ->
-      s"""WITH ka AS (SELECT DISTINCT ${OracleFragments.modPHashSql(
-            s"(${OracleFragments.polyHashSql("text")})", 17L)} AS h
-         |  FROM documents WHERE doc_id % 2 = 0 ORDER BY h LIMIT 64),
-         |kb AS (SELECT DISTINCT ${OracleFragments.modPHashSql(
-            s"(${OracleFragments.polyHashSql("text")})", 17L)} AS h
-         |  FROM documents WHERE doc_id % 3 = 0 ORDER BY h LIMIT 64),
-         |ku AS (SELECT DISTINCT h FROM (SELECT h FROM ka UNION ALL SELECT h FROM kb)
-         |  ORDER BY h LIMIT 64),
-         |fl AS (SELECT h,
-         |  CASE WHEN h IN (SELECT h FROM ka) AND h IN (SELECT h FROM kb)
-         |    THEN 1 ELSE 0 END AS inboth FROM ku)
-         |SELECT CAST(count(*) AS BIGINT) AS n_union_kept,
-         |  CAST(COALESCE(SUM(inboth), 0) AS BIGINT) AS n_both,
-         |  CASE WHEN count(*) = 0 THEN 0.0
-         |    ELSE CAST(COALESCE(SUM(inboth), 0) AS DOUBLE) / count(*)
-         |  END AS jaccard_est,
-         |  CASE WHEN count(*) < 64 THEN CAST(count(*) AS DOUBLE)
-         |    ELSE 63.0 * 1000000007 / MAX(h) END AS union_est
-         |FROM fl""".stripMargin,
-    "sample_dsir_topn" ->
-      s"""WITH tb AS (SELECT doc_id, lang,
-         |  (${OracleFragments.polyHashSql("t")}) % 512 AS b
-         |  FROM (SELECT doc_id, lang, unnest(string_split(text,' ')) AS t FROM documents)),
-         |ct AS (SELECT b, CAST(count(*) AS BIGINT) AS ct FROM tb WHERE lang = 'en' GROUP BY b),
-         |cr AS (SELECT b, CAST(count(*) AS BIGINT) AS cr FROM tb GROUP BY b),
-         |nt AS (SELECT CAST(sum(ct) AS BIGINT) AS nt FROM ct),
-         |nr AS (SELECT CAST(sum(cr) AS BIGINT) AS nr FROM cr),
-         |w AS (SELECT cr.b,
-         |  CAST(round(ln(CAST(COALESCE(ct.ct, 0) + 1 AS DOUBLE) / (nt + 512)) * 1e9) AS BIGINT)
-         |  - CAST(round(ln(CAST(cr.cr + 1 AS DOUBLE) / (nr + 512)) * 1e9) AS BIGINT) AS w_nano
-         |  FROM cr LEFT JOIN ct USING (b) CROSS JOIN nt CROSS JOIN nr)
-         |SELECT tb.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         |  CAST(SUM(w.w_nano) AS BIGINT) AS score_nano
-         |FROM tb JOIN w USING (b) GROUP BY tb.doc_id
-         |ORDER BY score_nano DESC, doc_id LIMIT 50""".stripMargin,
-    "multimodal_audio_decode" ->
-      """WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 200),
-        |smp AS (SELECT doc_id, ((doc_id*31 + r.i*7) % 65536) - 32768 AS v
-        |  FROM ids CROSS JOIN range(256) r(i))
-        |SELECT doc_id AS media_id, CAST(256 AS BIGINT) AS n_samples,
-        |  CAST(SUM(v) AS BIGINT) AS sum_val,
-        |  CAST(SUM(ABS(v)) AS BIGINT) AS sum_abs
-        |FROM smp GROUP BY doc_id""".stripMargin,
-    "hybrid_search_rerank" ->
-      s"""WITH ${OracleFragments.vectorCtes},
-         |bkt AS (SELECT vec_id, v, nrm, ${OracleFragments.signBucketSql(6)} AS bucket FROM nv),
-         |p AS (SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-         |  ${OracleFragments.cosineSql("q", "c")} AS cosine
-         |  FROM bkt q JOIN bkt c ON c.bucket = q.bucket AND c.vec_id != q.vec_id
-         |  WHERE q.vec_id < 8),
-         |cand AS (SELECT q_id, n_id, cosine,
-         |  row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, n_id) AS crn
-         |  FROM p QUALIFY crn <= 20),
-         |t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-         |f AS (SELECT c.q_id, t.doc_id, round(c.cosine * ($qualityExprSql), 9) AS score
-         |  FROM cand c JOIN t ON t.doc_id = c.n_id
-         |  WHERE len(list_filter(toks, x -> x IN ${OracleFragments.stopwordListSql})) > 0)
-         |SELECT q_id, doc_id, score,
-         |  CAST(row_number() OVER (PARTITION BY q_id ORDER BY score DESC, doc_id) AS BIGINT) AS rn
-         |FROM f QUALIFY rn <= 5""".stripMargin,
-    "ivf_kmeans_clusters" ->
-      s"""WITH ${OracleFragments.vectorCtes},
-         |${OracleFragments.quantizeCte(1000.0)},
-         |${OracleFragments.kmeansCtes(8, 2)},
-         |${OracleFragments.ivfAssignCte},
-         |cnt AS (SELECT cid, CAST(COUNT(*) AS BIGINT) AS n FROM asg GROUP BY cid)
-         |SELECT c.cid AS cluster_id, CAST(COALESCE(cnt.n, 0) AS BIGINT) AS n_vectors,
-         |  array_to_string(c.cent, ',') AS centroid
-         |FROM cents c LEFT JOIN cnt ON cnt.cid = c.cid""".stripMargin,
-    "graph_pagerank" ->
-      s"""WITH li AS (SELECT DISTINCT l_orderkey AS bk, l_partkey AS it FROM lineitem),
-         |e AS (SELECT DISTINCT a.it AS src, b.it AS dst
-         |  FROM li a JOIN li b ON a.bk = b.bk AND a.it <> b.it),
-         |${OracleFragments.pageRankCtes(3)}
-         |SELECT id AS part_id, pr AS rank_nano FROM r3""".stripMargin,
-    // same re-trained model as ivf_kmeans_clusters, then within-cell
-    // smaller-id near-dup pruning (the SemDeDup keep-one rule)
-    "dedup_semantic_prune" ->
-      s"""WITH ${OracleFragments.vectorCtes},
-         |${OracleFragments.quantizeCte(1000.0)},
-         |${OracleFragments.kmeansCtes(8, 2)},
-         |${OracleFragments.ivfAssignCte},
-         |nva AS (SELECT nv.vec_id, nv.v, nv.nrm, asg.cid
-         |  FROM nv JOIN asg ON asg.vec_id = nv.vec_id),
-         |dropped AS (SELECT DISTINCT b.vec_id FROM nva a JOIN nva b
-         |  ON a.cid = b.cid AND a.vec_id < b.vec_id
-         |  WHERE ${OracleFragments.cosineSql("a", "b")} >= 0.3)
-         |SELECT vec_id AS id, CAST(cid AS BIGINT) AS cluster_id FROM nva
-         |WHERE vec_id NOT IN (SELECT vec_id FROM dropped)""".stripMargin,
-    "ann_topk_ivf" ->
-      s"""WITH ${OracleFragments.vectorCtes},
-         |${OracleFragments.quantizeCte(1000.0)},
-         |${OracleFragments.kmeansCtes(8, 2)},
-         |${OracleFragments.ivfAssignCte},
-         |prb AS (SELECT vec_id AS q_id, cid FROM (
-         |  SELECT t.vec_id, c.cid,
-         |    row_number() OVER (PARTITION BY t.vec_id
-         |      ORDER BY ${OracleFragments.sqDistSql("t.q", "c.cent")}, c.cid) AS rn
-         |  FROM iq t CROSS JOIN cents c WHERE t.vec_id < 16) WHERE rn <= 2),
-         |p AS (SELECT pr.q_id, a.vec_id AS n_id, ${OracleFragments.cosineSql("q", "c")} AS cosine
-         |  FROM prb pr JOIN asg a ON a.cid = pr.cid AND a.vec_id != pr.q_id
-         |  JOIN nv q ON q.vec_id = pr.q_id JOIN nv c ON c.vec_id = a.vec_id)
-         |${OracleFragments.annTopkSelectSql(5)}""".stripMargin,
-    "pq_codebooks" ->
-      s"""WITH ${OracleFragments.vectorCtes},
-         |${OracleFragments.quantizeCte(1000.0)},
-         |${OracleFragments.pqSubCte(4, 16)},
-         |${OracleFragments.pqKmeansCtes(4, 2)},
-         |${OracleFragments.pqCodesCte},
-         |occ AS (SELECT sub, cid, CAST(COUNT(*) AS BIGINT) AS n FROM pcodes GROUP BY sub, cid)
-         |SELECT c.sub, c.cid AS cluster_id, CAST(COALESCE(occ.n, 0) AS BIGINT) AS n_vectors,
-         |  array_to_string(c.cent, ',') AS centroid
-         |FROM pcents c LEFT JOIN occ ON occ.sub = c.sub AND occ.cid = c.cid""".stripMargin,
-    "ann_topk_pq" ->
-      s"""WITH ${OracleFragments.vectorCtes},
-         |${OracleFragments.quantizeCte(1000.0)},
-         |${OracleFragments.pqSubCte(4, 16)},
-         |${OracleFragments.pqKmeansCtes(4, 2)},
-         |${OracleFragments.pqCodesCte},
-         |lut AS (SELECT q.vec_id AS q_id, c.sub, c.cid,
-         |  ${OracleFragments.sqDistSql("q.sv", "c.cent")} AS d
-         |  FROM sq q JOIN pcents c ON c.sub = q.sub WHERE q.vec_id < 16),
-         |pr AS (SELECT l.q_id, p.vec_id AS n_id, CAST(SUM(l.d) AS BIGINT) AS adist
-         |  FROM pcodes p JOIN lut l ON l.sub = p.sub AND l.cid = p.cid AND p.vec_id != l.q_id
-         |  GROUP BY l.q_id, p.vec_id)
-         |SELECT q_id, n_id, adist,
-         |  CAST(row_number() OVER (PARTITION BY q_id ORDER BY adist ASC, n_id ASC) AS BIGINT) AS rn
-         |FROM pr QUALIFY rn <= 5""".stripMargin,
-    "classifier_train_lr" ->
-      s"""WITH ${OracleFragments.lrCtes(65, 3, 4000L, "label < 5")}
-         |SELECT j, w AS w_nano FROM w3""".stripMargin,
-    "classifier_lr_confusion" ->
-      s"""WITH ${OracleFragments.lrCtes(65, 3, 4000L, "label < 5")},
-         |zf AS (SELECT xj.vec_id, xj.y, CAST(SUM(xj.xv * w.w) AS BIGINT) // 1000 AS zn
-         |  FROM xj JOIN w3 w ON w.j = xj.j GROUP BY xj.vec_id, xj.y)
-         |SELECT y, CASE WHEN GREATEST(CAST(0 AS BIGINT), LEAST(CAST(1000000000 AS BIGINT),
-         |    500000000 + zn // 4)) >= 500000000
-         |  THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END AS pred,
-         |  CAST(count(*) AS BIGINT) AS n
-         |FROM zf GROUP BY y, pred""".stripMargin,
-    "embedding_quantize_int8" ->
-      """WITH m AS (SELECT vec_id, embedding,
-        |  CAST(list_max(list_transform(embedding, x -> abs(x))) AS DOUBLE) AS mx
-        |  FROM embeddings)
-        |SELECT vec_id,
-        |  array_to_string(list_transform(embedding, x -> CASE WHEN mx = 0 THEN CAST(0 AS BIGINT)
-        |    ELSE CAST(floor(CAST(x AS DOUBLE) * (127.0 / mx)) AS BIGINT) END), ',') AS codes,
-        |  mx / 127.0 AS scale
-        |FROM m""".stripMargin,
-    "ann_topk_int8" ->
-      """WITH m AS (SELECT vec_id, embedding,
-        |  CAST(list_max(list_transform(embedding, x -> abs(x))) AS DOUBLE) AS mx
-        |  FROM embeddings),
-        |qc AS (SELECT vec_id,
-        |  list_transform(embedding, x -> CASE WHEN mx = 0 THEN CAST(0 AS BIGINT)
-        |    ELSE CAST(floor(CAST(x AS DOUBLE) * (127.0 / mx)) AS BIGINT) END) AS c,
-        |  CAST(round(mx / 127.0 * 1000000000) AS BIGINT) AS nscale_nano FROM m),
-        |p AS (SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-        |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |    list_transform(list_zip(q.c, c.c), z -> z[1]*z[2])), (p,x) -> p+x) AS qdot,
-        |  c.nscale_nano AS ns
-        |  FROM qc q JOIN qc c ON c.vec_id != q.vec_id WHERE q.vec_id < 16)
-        |SELECT q_id, n_id, qdot,
-        |  CAST(row_number() OVER (PARTITION BY q_id
-        |    ORDER BY qdot * ns DESC, n_id) AS BIGINT) AS rn
-        |FROM p QUALIFY rn <= 5""".stripMargin,
-    // the relational (unnest×unnest) formulation of the same integer-grid
-    // pair sums — the brute-force semantic definition of the Gram matrix
-    "embedding_gram_matrix" ->
-      """WITH q AS (SELECT list_transform(embedding,
-        |    x -> CAST(floor(CAST(x AS DOUBLE) * 1000.0) AS BIGINT)) AS qv
-        |  FROM embeddings)
-        |SELECT i, j, CAST(SUM(qv[i+1] * qv[j+1]) AS BIGINT) AS gram_q
-        |FROM q, range(0, 64) r1(i), range(0, 64) r2(j)
-        |WHERE j >= i GROUP BY 1, 2""".stripMargin,
-    "window_rank_lag" ->
-      """WITH e AS (SELECT event_id, user_id, value,
-        |  CAST(floor(epoch_ms(ts)/1000) AS BIGINT) AS tsec FROM events)
-        |SELECT event_id,
-        |  CAST(row_number() OVER w AS BIGINT) AS rn,
-        |  lag(value, 1) OVER w AS prev_value,
-        |  CAST(SUM(CAST(value AS DECIMAL(12,2))) OVER
-        |    (PARTITION BY user_id ORDER BY tsec, event_id
-        |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS run_sum
-        |FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tsec, event_id)""".stripMargin,
-    "metric_ndcg" ->
-      """WITH e AS (SELECT user_id AS g,
-        |    CAST(CASE WHEN event_type = 'purchase' THEN 3
-        |         WHEN event_type = 'click' THEN 2
-        |         WHEN event_type = 'view' THEN 1 ELSE 0 END AS DOUBLE) AS r,
-        |    value, event_id FROM events),
-        |p AS (SELECT g, r,
-        |    row_number() OVER (PARTITION BY g ORDER BY value DESC, event_id) AS pos,
-        |    row_number() OVER (PARTITION BY g ORDER BY r DESC, event_id) AS ipos
-        |  FROM e),
-        |d AS (SELECT g,
-        |    SUM(CASE WHEN pos <= 10 THEN (pow(2, r) - 1) / log2(pos + 1) ELSE 0 END) AS dcg,
-        |    SUM(CASE WHEN ipos <= 10 THEN (pow(2, r) - 1) / log2(ipos + 1) ELSE 0 END) AS idcg
-        |  FROM p GROUP BY g)
-        |SELECT g AS "group", round(dcg / idcg, 9) AS ndcg FROM d WHERE idcg > 0""".stripMargin,
-    "metric_mrr" ->
-      """WITH p AS (SELECT user_id AS g,
-        |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY value DESC, event_id) AS pos
-        |  FROM events),
-        |f AS (SELECT g, MIN(CASE WHEN y = 1 AND pos <= 10 THEN pos END) AS firstRel
-        |  FROM p GROUP BY g)
-        |SELECT round(AVG(COALESCE(CAST(1 AS DOUBLE) / firstRel, 0.0)), 9) AS mrr,
-        |  CAST(COUNT(*) AS BIGINT) AS n_groups FROM f""".stripMargin,
-    "metric_calibration" ->
-      """WITH b AS (SELECT CASE WHEN event_type = 'error' THEN 1 ELSE 0 END AS y,
-        |    least(value / 200.0, 1.0) AS p FROM events
-        |    WHERE value IS NOT NULL AND NOT isnan(value)),
-        |bb AS (SELECT LEAST(GREATEST(CAST(FLOOR(p * 10) AS BIGINT), 0), 9) AS bin,
-        |    p, y FROM b),
-        |agg AS (SELECT bin, COUNT(*) AS nb, SUM(p) AS sp, SUM(y) AS sy
-        |  FROM bb GROUP BY bin)
-        |SELECT round(SUM(abs(sp / nb - CAST(sy AS DOUBLE) / nb) * nb) / SUM(nb), 9) AS ece,
-        |  CAST(SUM(nb) AS BIGINT) AS n
-        |FROM agg""".stripMargin,
-    "text_vocab_topn" ->
-      """SELECT term, CAST(COUNT(*) AS BIGINT) AS n
-        |FROM (SELECT unnest(string_split(text,' ')) AS term FROM documents) t
-        |GROUP BY term ORDER BY n DESC, term LIMIT 100""".stripMargin,
-    "session_window_agg" ->
-      """WITH e AS (SELECT user_id, event_id,
-        |  CAST(floor(epoch_ms(ts)/1000) AS BIGINT) AS tsec FROM events),
-        |s AS (SELECT user_id, event_id, tsec,
-        |  CASE WHEN lag(tsec) OVER w IS NULL OR tsec - lag(tsec) OVER w > 1800
-        |       THEN 1 ELSE 0 END AS is_new
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tsec, event_id)),
-        |g AS (SELECT user_id, tsec,
-        |  SUM(is_new) OVER (PARTITION BY user_id ORDER BY tsec, event_id
-        |    ROWS UNBOUNDED PRECEDING) AS sess
-        |  FROM s)
-        |SELECT user_id, MIN(tsec) AS session_start, MAX(tsec) + 1800 AS session_end,
-        |  CAST(COUNT(*) AS BIGINT) AS n
-        |FROM g GROUP BY user_id, sess""".stripMargin,
-    "sessionize_bounds_sorted" ->
-      """WITH e AS (SELECT user_id, event_id,
-        |  CAST(floor(epoch_ms(ts)/1000) AS BIGINT) AS tsec FROM events),
-        |s AS (SELECT user_id, event_id, tsec,
-        |  CASE WHEN lag(tsec) OVER w IS NULL OR tsec - lag(tsec) OVER w > 1800
-        |       THEN 1 ELSE 0 END AS is_new
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tsec, event_id)),
-        |g AS (SELECT user_id, tsec,
-        |  SUM(is_new) OVER (PARTITION BY user_id ORDER BY tsec, event_id
-        |    ROWS UNBOUNDED PRECEDING) AS sess
-        |  FROM s)
-        |SELECT user_id, MIN(tsec) AS session_start, MAX(tsec) + 1800 AS session_end,
-        |  CAST(COUNT(*) AS BIGINT) AS n
-        |FROM g GROUP BY user_id, sess""".stripMargin,
-    "sessionize_batch" ->
-      """WITH e AS (SELECT user_id, event_id, value,
-        |  CAST(floor(epoch_ms(ts)/1000) AS BIGINT) AS tsec FROM events),
-        |s AS (SELECT user_id,
-        |  CASE WHEN lag(tsec) OVER w IS NULL OR tsec - lag(tsec) OVER w > 1800
-        |       THEN 1 ELSE 0 END AS is_new
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tsec, event_id))
-        |SELECT user_id AS key, CAST(SUM(is_new) AS BIGINT) AS n_sessions,
-        |  COUNT(*) AS n_events
-        |FROM s GROUP BY user_id""".stripMargin,
-    "setop_users" ->
-      """SELECT user_id, 'both' AS op FROM (
-        |  SELECT DISTINCT user_id FROM events WHERE event_type = 'error'
-        |  INTERSECT
-        |  SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase')
-        |UNION ALL
-        |SELECT user_id, 'error_only' AS op FROM (
-        |  SELECT DISTINCT user_id FROM events WHERE event_type = 'error'
-        |  EXCEPT
-        |  SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase')""".stripMargin,
-    "agg_rollup" ->
-      """SELECT event_type, COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY ROLLUP(event_type)""".stripMargin,
-    "agg_cube" ->
-      """SELECT event_type, user_id % 2 AS par, COUNT(*) AS n
-        |FROM events GROUP BY CUBE(event_type, user_id % 2)""".stripMargin,
-    "scalar_funcs" ->
-      """SELECT l_orderkey,
-        |  CAST(l_linenumber AS BIGINT) AS ln,
-        |  l_orderkey % 7 AS pm,
-        |  l_orderkey // 7 AS dv,
-        |  round(ln(1.0 + l_extendedprice), 9) AS log_price,
-        |  l_extendedprice / 32.0 AS price_norm,
-        |  array_to_string(range(1, CAST(l_linenumber AS BIGINT) + 1), ',') AS seq,
-        |  array_to_string([CAST(l_linenumber AS BIGINT), CAST(l_linenumber AS BIGINT),
-        |   CAST(l_linenumber AS BIGINT)], ',') AS rep,
-        |  range(1, CAST(l_linenumber AS BIGINT) + 1)[1] AS first_elem
-        |FROM lineitem""".stripMargin,
-    "scalar_json" ->
-      """SELECT event_id,
-        |  json_extract_string(props, '$.k') AS k_str,
-        |  CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_num
-        |FROM events""".stripMargin,
-    "scalar_dates" ->
-      """SELECT o_orderkey,
-        |  CAST(year(o_orderdate) AS BIGINT) AS y,
-        |  CAST(month(o_orderdate) AS BIGINT) AS m,
-        |  CAST(day(o_orderdate) AS BIGINT) AS dom,
-        |  CAST(date_trunc('month', o_orderdate) AS DATE) AS month_start
-        |FROM orders""".stripMargin,
-    "agg_percentiles" ->
-      """SELECT l_returnflag,
-        |  round(quantile_cont(l_quantity, 0.5), 9) AS p50,
-        |  round(quantile_cont(l_quantity, 0.9), 9) AS p90
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "stream_window_counts" ->
-      """SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start, event_type,
-        |  COUNT(*) AS n
-        |FROM events GROUP BY 1, 2""".stripMargin,
-    "metric_auc_thresholded" -> thresholdedAucOracle,
-    // identical accumulation, streamed over 2 micro-batches — the gate
-    // proves streaming==batch==oracle for the Aggregator path
-    "stream_metric_auc" -> thresholdedAucOracle,
-    "ragged_to_coo" ->
-      """SELECT doc_id,
-        |  generate_subscripts(string_split(text,' '), 1) - 1 AS pos,
-        |  unnest(string_split(text,' ')) AS token
-        |FROM documents""".stripMargin,
-    "metric_gauc_consecutive" ->
-      """WITH base AS (
-        |  SELECT event_id AS o, user_id AS ind, value AS s,
-        |         CASE WHEN event_type = 'error' THEN 1 ELSE 0 END AS y
-        |  FROM events WHERE event_id < 50000),
-        |runs AS (
-        |  SELECT *, CASE WHEN lag(ind) OVER (ORDER BY o) IS NULL
-        |                   OR lag(ind) OVER (ORDER BY o) != ind THEN 1 ELSE 0 END AS isNew
-        |  FROM base),
-        |grps AS (
-        |  SELECT *, SUM(isNew) OVER (ORDER BY o ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS grp
-        |  FROM runs),
-        |ranked AS (
-        |  SELECT grp, y,
-        |         rank() OVER (PARTITION BY grp ORDER BY s)
-        |           + (COUNT(*) OVER (PARTITION BY grp, s) - 1) / 2.0 AS avgRank
-        |  FROM grps WHERE grp > 1),
-        |pg AS (
-        |  SELECT grp, SUM(CASE WHEN y = 1 THEN avgRank ELSE 0 END) AS posRankSum,
-        |         SUM(y) AS p, SUM(1 - y) AS n, COUNT(*) AS cnt
-        |  FROM ranked GROUP BY grp),
-        |pa AS (
-        |  SELECT (posRankSum - p * (p + 1) / 2.0) / (CAST(p AS DOUBLE) * n) AS auc, cnt
-        |  FROM pg WHERE p > 0 AND n > 0)
-        |SELECT ROUND(SUM(auc * cnt) / SUM(cnt), 9) AS gauc FROM pa""".stripMargin,
-    "pipeline_criteo_shaped" ->
-      """SELECT l_orderkey, l_partkey,
-        |  CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS label,
-        |  round(ln(1.0 + l_quantity), 9) AS qty_log,
-        |  l_extendedprice / 65536.0 AS price_norm,
-        |  CAST(0 AS BIGINT) AS if13,
-        |  p_brand
-        |FROM lineitem LEFT JOIN part ON l_partkey = p_partkey""".stripMargin,
-    "scan_to_dense" ->
-      """SELECT vec_id,
-        |  array_to_string(list_transform(
-        |    (embedding || [CAST(0.0 AS FLOAT) FOR i IN range(greatest(0, 100 - len(embedding)))])[1:100],
-        |    x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT)), ',') AS embedding
-        |FROM embeddings""".stripMargin,
-    "pipeline_taobao_shaped" ->
-      """WITH e AS (SELECT event_id, user_id, event_type, value,
-        |  CAST(floor(epoch_ms(ts)/1000) AS BIGINT) AS tsec FROM events),
-        |h AS (SELECT user_id,
-        |  list(struct_pack(t := tsec, eid := event_id, v := value)
-        |       ORDER BY tsec, event_id) AS hist
-        |  FROM e GROUP BY user_id)
-        |SELECT c.event_id, c.user_id,
-        |  CAST(len(list_filter(h.hist,
-        |    s -> s.t >= c.tsec - 3600 AND s.t < c.tsec)) AS BIGINT) AS n_hist,
-        |  COALESCE(array_to_string(list_transform(list_filter(h.hist,
-        |    s -> s.t >= c.tsec - 3600 AND s.t < c.tsec),
-        |    s -> CAST(round(CAST(s.v AS DOUBLE) * 1000000) AS BIGINT)), ','), '') AS recent_vals
-        |FROM e c JOIN h USING (user_id) WHERE c.event_type = 'purchase'""".stripMargin,
-    "scan_orc_roundtrip" ->
-      "SELECT event_id, user_id, event_type, value FROM events",
-    "scan_zstd_roundtrip" ->
-      "SELECT event_id, user_id, event_type, value FROM events",
-    "sink_compacted_roundtrip" ->
-      "SELECT event_id, user_id, event_type, value FROM events",
-    "scan_partitioned_pruned" ->
-      """SELECT event_id, user_id, value, event_type
-        |FROM events WHERE event_type = 'click'""".stripMargin,
-    "scan_sorted_layout" ->
-      """SELECT event_id, user_id, value
-        |FROM events WHERE user_id >= 40 AND user_id < 80""".stripMargin,
-    "scan_multifile_union" ->
-      "SELECT event_id, user_id, event_type, value FROM events",
-    "scan_schema_evolution" ->
-      """SELECT event_id, user_id,
-        |  CASE WHEN event_id % 2 = 0 THEN -1.0 ELSE value END AS value
-        |FROM events""".stripMargin,
-    "scan_corrupt_skip" ->
-      "SELECT event_id, user_id, event_type, value FROM events",
-    "scan_dedup_restore" ->
-      "SELECT event_id, event_type FROM events",
-    "scan_row_range" ->
-      // physical rows [1000, 2000) of the single parquet file; DuckDB
-      // preserves file order for a plain scan (preserve_insertion_order)
-      "SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem LIMIT 1000 OFFSET 1000",
-    "scan_orc_row_range" ->
-      // physical rows [1000, 2000) of the single ORC file, which holds
-      // the events table in original parquet order (as scan_row_range)
-      "SELECT event_id, user_id, value FROM events LIMIT 1000 OFFSET 1000",
-    "scan_float16" ->
-      // mirrors TypedParquet.Fp16Fixture.value — exact in binary16
-      """SELECT i AS id, CAST((i % 2000) / 2.0 AS DOUBLE) AS half_val
-        |FROM range(10000) r(i)""".stripMargin,
-    "scan_uint64" ->
-      // mirrors TypedParquet.U64Fixture — 2^63 + i, above BIGINT range
-      """SELECT i AS id, CAST(CAST(9223372036854775808 AS HUGEINT) + i AS VARCHAR) AS u
-        |FROM range(10000) r(i)""".stripMargin,
-    "scan_csv_roundtrip" ->
-      "SELECT event_id, user_id, event_type, value, props FROM events",
-    "scan_jsonl_roundtrip" ->
-      "SELECT doc_id, text, lang, source, n_chars FROM documents",
-    "scan_tfrecord_roundtrip" ->
-      """SELECT event_id, user_id, event_type,
-        |  CAST(value AS FLOAT) AS value_f32 FROM events""".stripMargin,
-    "sample_bernoulli" ->
-      s"""SELECT event_id, user_id, event_type FROM events
-         |WHERE (${OracleFragments.modPHashSql("event_id", 42L)}) % 1000000 < 500000""".stripMargin,
-    "sample_stratified" ->
-      s"""SELECT event_id, event_type FROM events
-         |WHERE CAST((${OracleFragments.modPHashSql("event_id", 7L)}) % 1000000 AS DOUBLE)
-         |  < (CASE WHEN event_type = 'click' THEN 0.25
-         |          WHEN event_type = 'view' THEN 0.5 ELSE 1.0 END) * 1000000.0""".stripMargin,
-    "sample_negatives" ->
-      s"""WITH g AS (SELECT event_id AS key, user_id % 1000 AS pos, i AS draw_idx,
-         |  (${OracleFragments.modPHashSql("(event_id * 3 + i)", 77L)}) % 1000 AS raw
-         |  FROM events CROSS JOIN range(3) r(i))
-         |SELECT key, pos, draw_idx,
-         |  CASE WHEN raw = pos THEN (raw + 1) % 1000 ELSE raw END AS neg
-         |FROM g""".stripMargin,
-    "sample_per_group" ->
-      s"""SELECT event_id, event_type, sample_rank FROM (
-         |  SELECT event_id, event_type,
-         |    CAST(row_number() OVER (PARTITION BY event_type
-         |      ORDER BY ${OracleFragments.modPHashSql("event_id", 13L)}, event_id) AS BIGINT)
-         |      AS sample_rank
-         |  FROM events) t WHERE sample_rank <= 50""".stripMargin,
-    "sketch_kmv_distinct" ->
-      s"""WITH h AS (SELECT DISTINCT ${OracleFragments.modPHashSql("user_id", 11L)} AS h FROM events),
-         |k AS (SELECT h FROM h ORDER BY h LIMIT 64),
-         |s AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_hashes_kept, MAX(h) AS hk FROM k)
-         |SELECT CASE WHEN n_hashes_kept < 64 THEN CAST(n_hashes_kept AS DOUBLE)
-         |       ELSE 63.0 * ${TextFunctions.P} / hk END AS kmv_estimate, n_hashes_kept
-         |FROM s""".stripMargin,
-    "sketch_kmv_per_group" ->
-      s"""WITH h AS (SELECT DISTINCT event_type,
-         |    ${OracleFragments.modPHashSql("user_id", 17L)} AS h FROM events),
-         |r AS (SELECT event_type, h,
-         |    row_number() OVER (PARTITION BY event_type ORDER BY h) AS rn FROM h),
-         |k AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_hashes_kept, max(h) AS hk
-         |  FROM r WHERE rn <= 64 GROUP BY event_type)
-         |SELECT event_type,
-         |  CASE WHEN n_hashes_kept < 64 THEN CAST(n_hashes_kept AS DOUBLE)
-         |       ELSE 63.0 * ${TextFunctions.P} / hk END AS kmv_estimate,
-         |  n_hashes_kept
-         |FROM k""".stripMargin,
-    // grid math mirrored term-for-term: same bucket expression, same
-    // ceil(q*n) target rank, same midpoint read-out
-    // isfinite mirrors the Spark side's finite-domain filter (NULL, NaN
-    // and ±Inf all dropped on BOTH sides), and the LEFT join mirrors its
-    // left-join read-out: an empty domain still yields one row per q
-    // (NULL quantile, n = 0) — the two engines agree on ALL inputs, not
-    // just the current events data
-    "agg_fixedstep_quantiles" ->
-      """WITH v AS (SELECT CAST(value AS DOUBLE) AS v FROM events
-        |  WHERE value IS NOT NULL AND isfinite(CAST(value AS DOUBLE))),
-        |c AS (SELECT CAST(floor(v / 2.0) AS BIGINT) AS cell, CAST(count(*) AS BIGINT) AS c
-        |  FROM v GROUP BY 1),
-        |n AS (SELECT CAST(coalesce(SUM(c), 0) AS BIGINT) AS n FROM c),
-        |cum AS (SELECT a.cell, SUM(x.c) AS cum FROM c a JOIN c x ON x.cell <= a.cell
-        |  GROUP BY a.cell),
-        |qs AS (SELECT CAST(unnest([0.5, 0.9, 0.99]) AS DOUBLE) AS q),
-        |t AS (SELECT q, n, greatest(1, CAST(ceil(q * n) AS BIGINT)) AS tgt FROM qs, n),
-        |m AS (SELECT t.q, t.n, min(cum.cell) AS mc
-        |  FROM t LEFT JOIN cum ON cum.cum >= t.tgt GROUP BY t.q, t.n)
-        |SELECT q, round((CAST(mc AS DOUBLE) + 0.5) * 2.0, 9) AS fixed_quantile, n
-        |FROM m""".stripMargin,
-    "agg_grid_quantiles" ->
-      """WITH v AS (SELECT CAST(value AS DOUBLE) AS v FROM events WHERE value IS NOT NULL),
-        |mm AS (SELECT min(v) AS lo, max(v) AS hi, CAST(count(*) AS BIGINT) AS n FROM v),
-        |b AS (SELECT CASE WHEN hi = lo THEN 0
-        |    ELSE least(255, CAST(floor((v - lo) / ((hi - lo) / 256)) AS INT)) END AS b
-        |  FROM v, mm),
-        |c AS (SELECT b, CAST(count(*) AS BIGINT) AS c FROM b GROUP BY b),
-        |cum AS (SELECT a.b, SUM(x.c) AS cum FROM c a JOIN c x ON x.b <= a.b GROUP BY a.b),
-        |qs AS (SELECT CAST(unnest([0.5, 0.9, 0.99]) AS DOUBLE) AS q),
-        |t AS (SELECT q, lo, hi, n,
-        |    greatest(1, CAST(ceil(q * n) AS BIGINT)) AS tgt FROM qs, mm),
-        |m AS (SELECT t.q, t.lo, t.hi, t.n, min(cum.b) AS mb
-        |  FROM t JOIN cum ON cum.cum >= t.tgt GROUP BY t.q, t.lo, t.hi, t.n)
-        |SELECT q, round(lo + (CAST(mb AS DOUBLE) + 0.5) * ((hi - lo) / 256), 9)
-        |    AS grid_quantile, n
-        |FROM m""".stripMargin,
-    // the oracle rebuilds the same 3x512 sketch from the same hash
-    // families (CmsMults) and takes the same min-over-rows estimate
-    "sketch_cms_heavy_hitters" -> {
-      val rows = graft.functions.Sketches.CmsMults.zipWithIndex.map { case (m, i) =>
-        s"SELECT term, $i AS r, (${OracleFragments.polyHashSql("term", m)}) % 512 AS b FROM ex"
-      }.mkString("\n  UNION ALL ")
-      s"""WITH ex AS (SELECT unnest(string_split(text, ' ')) AS term FROM documents),
-         |hb AS (
-         |  $rows),
-         |cms AS (SELECT r, b, COUNT(*) AS c FROM hb GROUP BY r, b),
-         |cand AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS exact_n FROM ex GROUP BY term),
-         |cb AS (SELECT DISTINCT term, r, b FROM hb),
-         |est AS (SELECT cb.term, CAST(MIN(c.c) AS BIGINT) AS cms_est
-         |  FROM cb JOIN cms c USING (r, b) GROUP BY cb.term)
-         |SELECT e.term, e.cms_est, t.exact_n
-         |FROM est e JOIN cand t USING (term)
-         |WHERE e.cms_est * 200 >= (SELECT COUNT(*) FROM ex)""".stripMargin
-    },
-    // same bucket arithmetic (polyHash of token / of "w1 w2"), same
-    // pseudo-weight formula, exact integer sum, sigmoid at the end
-    "text_classifier_score" ->
-      s"""WITH tok AS (SELECT doc_id, string_split(text,' ') AS t FROM documents),
-         |uni AS (SELECT doc_id, unnest(t) AS g FROM tok),
-         |bi AS (SELECT doc_id,
-         |  unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS g
-         |  FROM tok WHERE len(t) >= 2),
-         |feats AS (SELECT doc_id, g FROM uni UNION ALL SELECT doc_id, g FROM bi),
-         |w AS (SELECT doc_id,
-         |  ((((${OracleFragments.polyHashSql("g")}) % ${1 << 20}) * 2654435761 + 40503)
-         |    % 2001) - 1000 AS wt FROM feats),
-         |agg AS (SELECT doc_id, CAST(SUM(wt) AS BIGINT) AS logit_milli,
-         |  COUNT(*) AS nf FROM w GROUP BY doc_id)
-         |SELECT doc_id, logit_milli,
-         |  round(1.0 / (1.0 + exp(-(CAST(logit_milli AS DOUBLE) / (1000.0 * nf)))), 9)
-         |    AS score
-         |FROM agg""".stripMargin,
-    // every stage mirrored from its own gate's oracle: host generation
-    // (web_host_cap), blocklist NOT IN, langid (text_langid), quality
-    // expression + 0.38 floor, host cap rank, split thresholds
-    "pipeline_corpus_curation" -> {
-      val Seq(c1, c2, _) = graft.operators.Sampling.splitThresholds(
-        Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05))
-      s"""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks,
-         |    'host' || (doc_id % 23) || '.example.com' AS host FROM documents),
-         |f AS (SELECT doc_id, host, ($qualityExprSql) AS quality FROM t
-         |  WHERE host NOT IN ('host3.example.com','host10.example.com','host17.example.com')
-         |    AND len(list_filter(toks, x -> x IN ${OracleFragments.stopwordListSql})) > 0
-         |    AND ($qualityExprSql) >= 0.38),
-         |r AS (SELECT doc_id, host, quality,
-         |  row_number() OVER (PARTITION BY host ORDER BY quality DESC, doc_id) AS host_rank
-         |  FROM f),
-         |c AS (SELECT doc_id, host, quality,
-         |  (${OracleFragments.modPHashSql("doc_id", 7L)}) % 1000000 AS h6
-         |  FROM r WHERE host_rank <= 5)
-         |SELECT doc_id, host, round(quality, 9) AS quality,
-         |  CASE WHEN h6 < $c1 THEN 'train' WHEN h6 < $c2 THEN 'val' ELSE 'test' END AS split
-         |FROM c""".stripMargin
-    },
-    "profile_summary" ->
-      """SELECT 'event_id' AS "column", COUNT(*) AS n,
-        |  COUNT(*) - COUNT(event_id) AS n_null,
-        |  CAST(MIN(event_id) AS DOUBLE) AS min, CAST(MAX(event_id) AS DOUBLE) AS max,
-        |  CAST(SUM(CAST(event_id AS DECIMAL(30,10))) AS DOUBLE) / COUNT(event_id) AS mean
-        |FROM events
-        |UNION ALL
-        |SELECT 'user_id', COUNT(*), COUNT(*) - COUNT(user_id),
-        |  CAST(MIN(user_id) AS DOUBLE), CAST(MAX(user_id) AS DOUBLE),
-        |  CAST(SUM(CAST(user_id AS DECIMAL(30,10))) AS DOUBLE) / COUNT(user_id)
-        |FROM events
-        |UNION ALL
-        |SELECT 'value', COUNT(*), COUNT(*) - COUNT(value),
-        |  CAST(MIN(value) AS DOUBLE), CAST(MAX(value) AS DOUBLE),
-        |  CAST(SUM(CAST(value AS DECIMAL(30,10))) AS DOUBLE) / COUNT(value)
-        |FROM events""".stripMargin,
-    "profile_histogram" ->
-      """WITH v AS (SELECT CAST(value AS DOUBLE) AS v FROM events
-        |  WHERE value IS NOT NULL AND NOT isnan(value)),
-        |s AS (SELECT MIN(v) AS lo, MAX(v) AS hi FROM v),
-        |binned AS (SELECT CASE WHEN hi <= lo THEN 0
-        |    ELSE LEAST(CAST(FLOOR((v - lo) / (hi - lo) * 20) AS BIGINT), 19) END AS bin,
-        |  lo AS glo, hi AS ghi FROM v CROSS JOIN s)
-        |SELECT bin, glo + bin * (ghi - glo) / 20 AS lo,
-        |  glo + (bin + 1) * (ghi - glo) / 20 AS hi,
-        |  CAST(COUNT(*) AS BIGINT) AS n
-        |FROM binned GROUP BY bin, glo, ghi""".stripMargin,
-    "upsert_merge" ->
-      """WITH b AS (SELECT event_id, user_id, event_type, value FROM events),
-        |u AS (SELECT event_id, user_id, 'updated' AS event_type, value * 2 AS value
-        |    FROM b WHERE event_id % 10 = 0
-        |  UNION ALL
-        |  SELECT event_id + 10000000, user_id, 'new', value
-        |    FROM b WHERE event_id % 17 = 0)
-        |SELECT COALESCE(u.event_id, b.event_id) AS event_id,
-        |  CASE WHEN u.event_id IS NOT NULL THEN u.user_id ELSE b.user_id END AS user_id,
-        |  CASE WHEN u.event_id IS NOT NULL THEN u.event_type ELSE b.event_type END AS event_type,
-        |  CASE WHEN u.event_id IS NOT NULL THEN u.value ELSE b.value END AS value
-        |FROM b FULL OUTER JOIN u ON b.event_id = u.event_id""".stripMargin,
-    "agg_incremental_merge" ->
-      // outer CAST: DuckDB types integer SUM as HUGEINT, which the
-      // driver's pandas bridge degrades to float64 and hash-diverges
-      // from Spark's int64 on identical values
-      """SELECT event_type, COUNT(*) AS cnt,
-        |  CAST(SUM(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS sum_cents
-        |FROM events GROUP BY event_type""".stripMargin,
-    "profile_expectations" ->
-      // CASTs on the SUMs: avoid DuckDB HUGEINT (see agg_incremental_merge)
-      """WITH a AS (SELECT COUNT(*) AS n,
-        |  CAST(SUM(CASE WHEN COALESCE(event_id IS NOT NULL AND user_id IS NOT NULL, false) THEN 0 ELSE 1 END) AS BIGINT) AS v0,
-        |  CAST(SUM(CASE WHEN COALESCE(event_type IN ('view','click','purchase','error','login','logout'), false) THEN 0 ELSE 1 END) AS BIGINT) AS v1,
-        |  CAST(SUM(CASE WHEN COALESCE(value >= 0 AND value < 150, false) THEN 0 ELSE 1 END) AS BIGINT) AS v2,
-        |  CAST(SUM(CASE WHEN COALESCE(value < 1.0, false) THEN 0 ELSE 1 END) AS BIGINT) AS v3
-        |  FROM events)
-        |SELECT 'ids_present' AS name, v0 AS violations, n AS n_rows, v0 * 1000000 <= 0 * n AS pass FROM a
-        |UNION ALL SELECT 'known_type', v1, n, v1 * 1000000 <= 0 * n FROM a
-        |UNION ALL SELECT 'value_in_range', v2, n, v2 * 1000000 <= 50000 * n FROM a
-        |UNION ALL SELECT 'value_small', v3, n, v3 * 1000000 <= 0 * n FROM a""".stripMargin,
-    "sample_mixture" ->
-      // N derives from the RECIPE left-joined to observed counts (an
-      // absent stratum contributes cnt=0 -> N=0 -> empty output),
-      // mirroring rebalanceToMix's infeasible-mixture semantics exactly
-      s"""WITH recipe(source, sh) AS (VALUES
-         |    ('src0', CAST(0.5 AS DOUBLE)), ('src1', CAST(0.3 AS DOUBLE)),
-         |    ('src2', CAST(0.2 AS DOUBLE))),
-         |d AS (SELECT doc_id, source FROM documents
-         |  WHERE source IN ('src0','src1','src2')),
-         |c0 AS (SELECT source, COUNT(*) AS cnt FROM d GROUP BY source),
-         |c AS (SELECT r.source, COALESCE(c0.cnt, 0) AS cnt, r.sh
-         |  FROM recipe r LEFT JOIN c0 ON r.source = c0.source),
-         |n AS (SELECT MIN(cnt / sh) AS N FROM c),
-         |q AS (SELECT source, CAST(FLOOR(sh * N) AS BIGINT) AS quota
-         |  FROM c CROSS JOIN n),
-         |r AS (SELECT doc_id, source, row_number() OVER (PARTITION BY source
-         |    ORDER BY ${OracleFragments.modPHashSql("doc_id", 21L)}, doc_id) AS rn
-         |  FROM d)
-         |SELECT r.doc_id, r.source FROM r JOIN q ON r.source = q.source
-         |WHERE rn <= quota""".stripMargin,
-    "pack_sequences" ->
-      """WITH t AS (SELECT doc_id,
-        |  CAST(len(string_split(text,' ')) AS BIGINT) AS n_tokens FROM documents),
-        |c AS (SELECT doc_id, n_tokens,
-        |  CAST(COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cumb
-        |  FROM t)
-        |SELECT doc_id, n_tokens, cumb // 512 AS chunk_id FROM c""".stripMargin,
-    "pack_manifest" ->
-      """WITH t AS (SELECT doc_id,
-        |  CAST(len(string_split(text,' ')) AS BIGINT) AS n_tokens FROM documents),
-        |c AS (SELECT doc_id, n_tokens,
-        |  CAST(COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cumb
-        |  FROM t)
-        |SELECT cumb // 512 AS chunk_id, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(n_tokens) AS BIGINT) AS n_tokens
-        |FROM c GROUP BY 1""".stripMargin,
-    "pack_render" ->
-      """WITH t AS (SELECT doc_id,
-        |  CAST(len(string_split(text,' ')) AS BIGINT) AS n_tokens FROM documents),
-        |c AS (SELECT doc_id, n_tokens,
-        |  CAST(COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cumb
-        |  FROM t),
-        |p AS (SELECT doc_id, n_tokens, cumb // 512 AS chunk_id FROM c)
-        |SELECT chunk_id, string_agg(d.text, ' ' ORDER BY p.doc_id) AS chunk_text,
-        |  CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(SUM(p.n_tokens) AS BIGINT) AS n_tokens
-        |FROM p JOIN documents d ON p.doc_id = d.doc_id GROUP BY chunk_id""".stripMargin,
-    "sample_split" -> {
-      val Seq(c1, c2, _) = graft.operators.Sampling.splitThresholds(
-        Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05))
-      s"""SELECT doc_id,
-         |  CASE WHEN h6 < $c1 THEN 'train' WHEN h6 < $c2 THEN 'val' ELSE 'test' END AS split
-         |FROM (SELECT doc_id,
-         |  (${OracleFragments.modPHashSql("doc_id", 7L)}) % 1000000 AS h6 FROM documents)""".stripMargin
-    },
-    "sample_split_grouped" -> {
-      val Seq(c1, c2, _) = graft.operators.Sampling.splitThresholds(
-        Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05))
-      s"""SELECT doc_id, source,
-         |  CASE WHEN h6 < $c1 THEN 'train' WHEN h6 < $c2 THEN 'val' ELSE 'test' END AS split
-         |FROM (SELECT doc_id, source,
-         |  (${OracleFragments.modPHashSql(
-              s"(${OracleFragments.polyHashSql("source")})", 7L)}) % 1000000 AS h6
-         |  FROM documents)""".stripMargin
-    },
-    "sample_weighted" ->
-      s"""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-         |q AS (SELECT doc_id, ($qualityExprSql) AS w FROM t)
-         |SELECT doc_id FROM q
-         |WHERE CAST((${OracleFragments.modPHashSql("doc_id", 33L)}) % 1000000 AS DOUBLE)
-         |  < LEAST(GREATEST(w, 0.0), 1.0) * 1000000.0""".stripMargin,
-    "text_chunk_overlap" ->
-      """WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-        |p AS (SELECT doc_id, toks, len(toks) AS n,
-        |  1 + CAST(ceil(GREATEST(0, len(toks) - 32) / 24.0) AS BIGINT) AS n_chunks FROM t),
-        |e AS (SELECT doc_id, toks, n, unnest(range(0, n_chunks)) AS i FROM p),
-        |c AS (SELECT doc_id, i, LEAST(i*24 + 1, GREATEST(1, n - 31)) AS st, toks FROM e)
-        |SELECT doc_id, CAST(i AS BIGINT) AS chunk_idx, CAST(st AS BIGINT) AS chunk_start,
-        |  array_to_string(toks[st:st+31], ' ') AS chunk_text
-        |FROM c""".stripMargin,
-    "text_redact_pii" ->
-      s"""WITH a AS (SELECT doc_id, text || ' contact user' || doc_id
-         |  || '@example.com or +1-555-01' || doc_id
-         |  || ' ip 10.0.' || (doc_id % 256) || '.7 end' AS aug FROM documents)
-         |SELECT doc_id,
-         |  regexp_replace(regexp_replace(regexp_replace(aug,
-         |    '${TextFunctions.EmailRe}', '<EMAIL>', 'g'),
-         |    '${TextFunctions.Ipv4Re}', '<IP>', 'g'),
-         |    '${TextFunctions.PhoneRe}', '<PHONE>', 'g') AS redacted,
-         |  CAST(len(regexp_extract_all(aug, '${TextFunctions.EmailRe}')) AS BIGINT) AS n_emails
-         |FROM a""".stripMargin,
-    // same generation, then the same prefix/rest normalization steps
-    // (no replacement backreferences — substr recombination is the
-    // Java/RE2-portable form)
-    "web_url_normalize" ->
-      """WITH gen AS (SELECT doc_id,
-        |  (CASE WHEN doc_id % 2 = 0 THEN 'HTTP://WWW.Site' ELSE 'https://CDN.Site' END)
-        |  || (doc_id % 997) || '.Example.COM'
-        |  || (CASE WHEN doc_id % 2 = 0 THEN ':80' ELSE ':443' END)
-        |  || (CASE WHEN doc_id % 5 = 0 THEN '' ELSE '/Page/' || doc_id || '?Q=a' END)
-        |  || (CASE WHEN doc_id % 3 = 0 THEN '#Sec' ELSE '' END) AS url FROM documents),
-        |nf AS (SELECT doc_id, regexp_replace(url, '#.*$', '') AS u FROM gen),
-        |pr AS (SELECT doc_id, u,
-        |  regexp_extract(u, '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*', 0) AS rawpre FROM nf),
-        |pa AS (SELECT doc_id, lower(rawpre) AS pre, substr(u, len(rawpre)+1) AS rest FROM pr),
-        |pb AS (SELECT doc_id,
-        |  CASE WHEN pre LIKE 'http://%' AND pre LIKE '%:80' THEN substr(pre, 1, len(pre)-3)
-        |       WHEN pre LIKE 'https://%' AND pre LIKE '%:443' THEN substr(pre, 1, len(pre)-4)
-        |       ELSE pre END AS pre2, rest FROM pa),
-        |n AS (SELECT doc_id,
-        |  CASE WHEN pre2 <> '' AND rest = '' THEN pre2 || '/' ELSE pre2 || rest END AS url_norm
-        |  FROM pb)
-        |SELECT doc_id, url_norm,
-        |  lower(regexp_extract(url_norm, '//([^/:?#]*)', 1)) AS host FROM n""".stripMargin,
-    // same host generation (already-canonical form, so the normalize
-    // chain is the identity and the cap semantics are what's gated)
-    "web_host_cap" ->
-      """WITH gen AS (SELECT doc_id, n_chars,
-        |  'host' || (doc_id % 23) || '.example.com' AS host FROM documents),
-        |r AS (SELECT doc_id, host, n_chars,
-        |  CAST(row_number() OVER (PARTITION BY host
-        |    ORDER BY n_chars DESC, doc_id) AS BIGINT) AS host_rank FROM gen)
-        |SELECT doc_id, host, host_rank, n_chars FROM r WHERE host_rank <= 5""".stripMargin,
-    "scan_ragged_nested" ->
-      """WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-        |ch AS (SELECT doc_id, list_transform(range(0, CAST(ceil(len(toks)/3.0) AS BIGINT)),
-        |  i -> toks[i*3+1:i*3+3]) AS chunks FROM t),
-        |o AS (SELECT doc_id, generate_subscripts(chunks,1) - 1 AS pos0,
-        |  unnest(chunks) AS chunk FROM ch)
-        |SELECT doc_id, CAST(pos0 AS BIGINT) AS pos0,
-        |  CAST(generate_subscripts(chunk,1) - 1 AS BIGINT) AS pos1,
-        |  unnest(chunk) AS token
-        |FROM o""".stripMargin,
-    "stream_dedup_ids" ->
-      "SELECT DISTINCT event_id FROM events",
-    "stream_dedup_watermark" ->
-      "SELECT DISTINCT user_id FROM events",
-    "stream_upsert_apply" ->
-      """SELECT user_id, event_id, value FROM events
-        |QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) = 1""".stripMargin,
-    "upsert_scd2" ->
-      """WITH open AS (
-        |  SELECT c_custkey, c_name, c_acctbal,
-        |    TIMESTAMP '2020-01-01' AS valid_from, CAST(NULL AS TIMESTAMP) AS valid_to
-        |  FROM customer),
-        |closedOld AS (
-        |  SELECT c_custkey, c_name, c_acctbal * 0.5 AS c_acctbal,
-        |    TIMESTAMP '2018-01-01' AS valid_from, TIMESTAMP '2020-01-01' AS valid_to
-        |  FROM customer WHERE c_custkey % 13 = 0),
-        |hist AS (SELECT * FROM closedOld UNION ALL SELECT * FROM open),
-        |upd AS (
-        |  SELECT c_custkey, c_name, c_acctbal + 100.0 AS c_acctbal,
-        |    TIMESTAMP '2024-06-01' AS uts
-        |  FROM customer WHERE c_custkey % 7 = 0)
-        |SELECT h.c_custkey, h.c_name, h.c_acctbal, h.valid_from,
-        |  CASE WHEN h.valid_to IS NULL AND u.c_custkey IS NOT NULL
-        |       THEN u.uts ELSE h.valid_to END AS valid_to
-        |FROM hist h LEFT JOIN upd u ON h.c_custkey = u.c_custkey
-        |UNION ALL
-        |SELECT c_custkey, c_name, c_acctbal, uts AS valid_from,
-        |  CAST(NULL AS TIMESTAMP) AS valid_to
-        |FROM upd""".stripMargin,
-    "snapshot_diff" ->
-      """WITH a AS (SELECT c_custkey, c_name, c_acctbal FROM customer),
-        |b AS (
-        |  SELECT c_custkey, c_name,
-        |    CASE WHEN c_custkey % 89 = 0 THEN c_acctbal + 50.0 ELSE c_acctbal END AS c_acctbal
-        |  FROM a WHERE c_custkey % 97 <> 0
-        |  UNION ALL
-        |  SELECT c_custkey + 1000000, c_name, c_acctbal FROM a WHERE c_custkey % 101 = 0),
-        |j AS (
-        |  SELECT coalesce(a.c_custkey, b.c_custkey) AS c_custkey,
-        |    CASE WHEN a.c_custkey IS NULL THEN 'added'
-        |         WHEN b.c_custkey IS NULL THEN 'removed'
-        |         WHEN a.c_name IS DISTINCT FROM b.c_name
-        |           OR a.c_acctbal IS DISTINCT FROM b.c_acctbal THEN 'changed'
-        |    END AS status
-        |  FROM a FULL OUTER JOIN b ON a.c_custkey = b.c_custkey)
-        |SELECT c_custkey, status FROM j WHERE status IS NOT NULL""".stripMargin,
-    "fuzzy_join_lev1" ->
-      """SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
-        |  CAST(levenshtein(a.c_name, b.c_name) AS BIGINT) AS dist
-        |FROM customer a JOIN customer b ON a.c_custkey < b.c_custkey
-        |WHERE levenshtein(a.c_name, b.c_name) <= 1""".stripMargin,
-    "text_clean" ->
-      """SELECT doc_id,
-        |  trim(regexp_replace(regexp_replace(
-        |    nfc_normalize('  e' || chr(769) || 'x' || chr(7) || 'y' || chr(9)
-        |      || text || '  tail  '),
-        |    '[\x00-\x1F\x7F]', ' ', 'g'), ' +', ' ', 'g')) AS clean
-        |FROM documents""".stripMargin,
-    "stream_session_windows" ->
-      """WITH e AS (SELECT user_id, event_id,
-        |  CAST(floor(epoch_ms(ts)/1000) AS BIGINT) AS tsec FROM events),
-        |s AS (SELECT user_id, event_id, tsec,
-        |  CASE WHEN lag(tsec) OVER w IS NULL OR tsec - lag(tsec) OVER w > 1800
-        |       THEN 1 ELSE 0 END AS is_new
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tsec, event_id)),
-        |g AS (SELECT user_id, tsec,
-        |  SUM(is_new) OVER (PARTITION BY user_id ORDER BY tsec, event_id
-        |    ROWS UNBOUNDED PRECEDING) AS sess
-        |  FROM s)
-        |SELECT user_id, MIN(tsec) AS session_start, MAX(tsec) + 1800 AS session_end,
-        |  CAST(COUNT(*) AS BIGINT) AS n
-        |FROM g GROUP BY user_id, sess""".stripMargin,
-    "stream_minhash_dedup" ->
-      // batch mirror of the streaming claim semantics: kept docs = those
-      // never preceded in ANY of their band buckets by a smaller doc_id
-      s"""WITH ${OracleFragments.shingleCtes(3)},
-         |${OracleFragments.minHashSigSql(16)},
-         |${OracleFragments.lshCandidateSql(4, 4)},
-         |pre AS (SELECT DISTINCT a.doc_id FROM bands a JOIN bands b
-         |  ON a.band = b.band AND a.bh = b.bh AND b.doc_id < a.doc_id)
-         |SELECT doc_id FROM sig WHERE doc_id NOT IN (SELECT doc_id FROM pre)""".stripMargin,
-    "stream_enrich_join" ->
-      """SELECT event_id, user_id, label
-        |FROM events LEFT JOIN embeddings ON user_id = vec_id""".stripMargin,
-    // the streamed-through-sink rows must be exactly the batch table
-    "stream_file_sink" ->
-      "SELECT event_id, user_id, value FROM events",
-    // batch mirror of the stream-stream interval join (the gate's
-    // replay-spanning watermark drops nothing, so equality is exact)
-    "stream_stream_join" ->
-      """SELECT v.event_id AS view_id, p.event_id AS purchase_id, v.user_id,
-        |  (epoch_us(p.ts) - epoch_us(v.ts)) // 1000000 AS secs_after
-        |FROM events v JOIN events p ON p.user_id = v.user_id
-        |WHERE v.event_type = 'view' AND p.event_type = 'purchase'
-        |  AND p.ts >= v.ts AND p.ts <= v.ts + INTERVAL 4 HOUR""".stripMargin,
-    "ann_topk_multiprobe" ->
-      s"""WITH ${OracleFragments.vectorCtes},
-         |bkt AS (SELECT vec_id, v, nrm, ${OracleFragments.signBucketSql(6)} AS bucket FROM nv),
-         |qp AS (SELECT vec_id, v, nrm,
-         |  unnest([bucket, xor(bucket, 1), xor(bucket, 2), xor(bucket, 4)]) AS bucket
-         |  FROM bkt WHERE vec_id < 16),
-         |p AS (SELECT DISTINCT q.vec_id AS q_id, c.vec_id AS n_id,
-         |  ${OracleFragments.cosineSql("q", "c")} AS cosine
-         |  FROM qp q JOIN bkt c ON c.bucket = q.bucket AND c.vec_id != q.vec_id)
-         |${OracleFragments.annTopkSelectSql(5)}""".stripMargin,
-    "q5_local_supplier" ->
-      """SELECT n_name,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-        |    * (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |GROUP BY n_name ORDER BY revenue DESC""".stripMargin,
-    "multimodal_features" ->
-      """SELECT doc_id AS media_id, CAST(strlen(text) AS BIGINT) AS byte_len,
-        |  array_to_string(list_transform(
-        |    list_filter(string_to_array(substr(text,1,8),''), c -> len(c) > 0),
-        |    c -> CAST(round(CAST(ascii(c) / 255.0 AS DOUBLE) * 1000000) AS BIGINT)), ',') AS features
-        |FROM documents""".stripMargin,
-    "asof_join_attribution" ->
-      """SELECT e.event_id, p.event_id AS purchase_id,
-        |  epoch_us(e.ts) - epoch_us(p.ts) AS micros_since
-        |FROM events e ASOF JOIN (
-        |  SELECT user_id, ts, event_id FROM events WHERE event_type = 'purchase') p
-        |ON e.user_id = p.user_id AND e.ts >= p.ts""".stripMargin,
-    "asof_join_forward" ->
-      """SELECT e.event_id, p.event_id AS next_purchase_id
-        |FROM events e ASOF JOIN (
-        |  SELECT user_id, ts, event_id FROM events WHERE event_type = 'purchase') p
-        |ON e.user_id = p.user_id AND e.ts <= p.ts""".stripMargin,
-    "range_join_purchase_window" ->
-      """WITH v AS (SELECT event_id AS view_id, ts FROM events WHERE event_type = 'view'),
-        |p AS (SELECT event_id AS purchase_id, ts FROM events WHERE event_type = 'purchase'),
-        |j AS (SELECT p.purchase_id, v.view_id FROM p JOIN v
-        |  ON v.ts >= p.ts - INTERVAL 1 HOUR AND v.ts < p.ts),
-        |a AS (SELECT purchase_id, count(*) AS n, min(view_id) AS fv FROM j GROUP BY 1)
-        |SELECT p.purchase_id, CAST(coalesce(a.n, 0) AS BIGINT) AS n_views,
-        |  a.fv AS first_view
-        |FROM p LEFT JOIN a USING (purchase_id)""".stripMargin,
-    "text_contamination" ->
-      s"""WITH ${OracleFragments.shingleCtes(3)},
-         |shh AS (SELECT doc_id,
-         |  list_distinct(list_transform(shingles, g -> ${OracleFragments.polyHashSql("g")})) AS hsh
-         |  FROM sh),
-         |bench AS (SELECT DISTINCT unnest(hsh) AS s FROM shh WHERE doc_id % 20 = 0),
-         |tr AS (SELECT doc_id, CAST(len(hsh) AS BIGINT) AS tot, unnest(hsh) AS s
-         |  FROM shh WHERE doc_id % 20 <> 0),
-         |hits AS (SELECT tr.doc_id, tr.tot, count(*) AS hit
-         |  FROM tr JOIN bench USING (s) GROUP BY 1, 2)
-         |SELECT doc_id, hit, tot, CAST(hit AS DOUBLE) / tot AS contamination
-         |FROM hits""".stripMargin,
-    "text_repetition" ->
-      s"""WITH tok AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-         |bg AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n,
-         |  CAST(len(list_distinct(toks)) AS BIGINT) AS nd,
-         |  list_transform(range(1, len(toks)),
-         |    i -> ${OracleFragments.polyHashSql("array_to_string(toks[i:i+1], ' ')")}) AS bgh
-         |  FROM tok WHERE len(toks) >= 2),
-         |e AS (SELECT doc_id, n, nd, CAST(len(bgh) AS BIGINT) AS nb, unnest(bgh) AS h FROM bg),
-         |c AS (SELECT doc_id, n, nd, nb, h, count(*) AS c FROM e GROUP BY 1, 2, 3, 4, 5)
-         |SELECT doc_id, CAST(n - nd AS DOUBLE) / n AS dup_token_frac,
-         |  CAST(max(c) AS DOUBLE) / nb AS top_bigram_frac
-         |FROM c GROUP BY doc_id, n, nd, nb""".stripMargin,
-    "join_bucketed_colocated" ->
-      """SELECT o_orderkey, o_custkey, c_name, c_mktsegment
-        |FROM orders JOIN customer ON o_custkey = c_custkey""".stripMargin,
-    "agg_bucketed_pergroup" ->
-      """SELECT l_orderkey AS b_orderkey,
-        |  CAST(SUM(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) AS b_qty_cents
-        |FROM lineitem GROUP BY 1 HAVING b_qty_cents > 15000""".stripMargin,
-    "layout_advisor_agg" ->
-      """SELECT l_orderkey AS a_orderkey,
-        |  CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS a_price_cents
-        |FROM lineitem GROUP BY 1 HAVING a_price_cents > 3000000""".stripMargin,
-    "layout_routed_projection" ->
-      """SELECT o_custkey AS rp_custkey,
-        |  CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS rp_price_cents
-        |FROM orders GROUP BY 1 HAVING rp_price_cents > 200000000""".stripMargin,
-    "layout_advisor_join" ->
-      """SELECT o_orderpriority,
-        |  CAST(SUM(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) AS qty_cents,
-        |  CAST(COUNT(*) AS BIGINT) AS n
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "layout_advisor_sorted" ->
-      """SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS price_cents
-        |FROM orders
-        |WHERE o_orderdate BETWEEN DATE '1996-01-01' AND DATE '1996-12-31'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "layout_append_compact" ->
-      """SELECT l_orderkey AS ac_orderkey,
-        |  CAST(SUM(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) AS ac_qty_cents
-        |FROM lineitem GROUP BY 1 HAVING ac_qty_cents > 15000""".stripMargin,
-    "layout_stream_ingest" ->
-      """SELECT l_orderkey AS si_orderkey,
-        |  CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS si_price_cents
-        |FROM lineitem GROUP BY 1 HAVING si_price_cents > 20000000""".stripMargin,
-    "agg_bucketed_sortstream" ->
-      """SELECT l_orderkey AS b_orderkey,
-        |  CAST(SUM(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) AS b_qty_cents
-        |FROM lineitem GROUP BY 1 HAVING b_qty_cents > 15000""".stripMargin,
-    "join_bucketed_fact" ->
-      """SELECT l_linestatus,
-        |  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
-        |    THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count,
-        |  CAST(SUM(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) AS qty_cents
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "window_trailing_range" ->
-      """SELECT event_id, user_id,
-        |  CAST(count(*) OVER w AS BIGINT) AS trailing_cnt,
-        |  CAST(SUM(CAST(value AS DECIMAL(12,2))) OVER w AS DOUBLE) AS trailing_sum
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-        |  RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)""".stripMargin,
-    "embedding_standardize" ->
-      """WITH x AS (SELECT vec_id, unnest(range(1, len(embedding)+1)) AS p, embedding
-        |  FROM embeddings),
-        |xm AS (SELECT vec_id, p - 1 AS pos,
-        |  CAST(round(CAST(embedding[p] AS DOUBLE) * 1e6) AS BIGINT) AS xm FROM x),
-        |st AS (SELECT pos, SUM(xm) AS s, SUM(xm * xm) AS ss, COUNT(*) AS n
-        |  FROM xm GROUP BY pos),
-        |z AS (SELECT vec_id, pos,
-        |    (CAST(xm AS DOUBLE) - CAST(s AS DOUBLE) / n)
-        |      / sqrt(CAST(ss AS DOUBLE) / n
-        |             - (CAST(s AS DOUBLE) / n) * (CAST(s AS DOUBLE) / n)) AS zv
-        |  FROM xm JOIN st USING (pos))
-        |SELECT vec_id,
-        |  string_agg(CAST(CAST(round(zv * 1e6) AS BIGINT) AS VARCHAR), ',' ORDER BY pos) AS z
-        |FROM z GROUP BY vec_id""".stripMargin,
-    // the Jacobi eigensolve has no SQL formulation; the oracle asserts
-    // the projection's provable invariants (Bessel / centering /
-    // variance ordering) as literally-true booleans over the full id set
-    "embedding_pca_project" ->
-      """SELECT vec_id, true AS bessel_ok, true AS centered_ok,
-        |  true AS var_ordered_ok
-        |FROM embeddings""".stripMargin,
-  )
+    * the same parquet tables. */
+  val oracleSql: Map[String, String] = gates.map(g => g.name -> g.oracleSql).toMap
 }

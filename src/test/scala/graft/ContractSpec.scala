@@ -1,27 +1,26 @@
 package graft
 
+import graft.gates.Gate
+
 /** Guards on the driver contract itself: every query entry must be
-  * runnable and every oracle key must reference an existing query — a
-  * stray key would silently weaken (or break) the driver's correctness
-  * gate. */
+  * runnable, and the two driver maps must hold exactly the declared
+  * gates — a gate lost or doubled would silently weaken (or break) the
+  * driver's correctness gate. */
 class ContractSpec extends GraftSpec {
 
-  /** Queries the driver checks rows-only BY DESIGN. As of round 7 the
-    * set is EMPTY: the two former members (BPE training, Jacobi
-    * eigensolve — iterative, no ANSI-SQL expression) now gate their
-    * SQL-provable invariants instead (detok losslessness / Bessel +
-    * centering + variance ordering), with merge-rank / eigens goldens
-    * spec-asserted (LlmPrepSpec / MiscSpec). Additions here need an
-    * is-not-SQL-expressible justification — an oracle-able query must
-    * stay oracled. */
-  private val rowsOnlyByDesign = Set.empty[String]
-
-  test("every oracle key has a query; every query has an oracle") {
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert((o -- q).isEmpty, s"oracle keys without a query: ${o -- q}")
-    assert((q -- o) == rowsOnlyByDesign,
-      s"queries without an oracle beyond the documented rows-only set: ${q -- o -- rowsOnlyByDesign}")
+  test("gate names are distinct; queries and oracleSql hold one entry per gate") {
+    val all = SparkEntry.gates
+    val names = all.map(_.name)
+    assert(names.distinct == names, s"duplicate gate names: ${names.diff(names.distinct)}")
+    assert(SparkEntry.queries.size == all.size && SparkEntry.oracleSql.size == all.size)
+    all.foreach { g =>
+      assert(SparkEntry.queries(g.name) eq g.build, g.name)
+      assert(SparkEntry.oracleSql(g.name) == g.oracleSql, g.name)
+    }
+    // a name-keyed map would keep only the last of two equal names
+    val twice = Seq(all.head, all.head.copy(oracleSql = "SELECT 1"))
+    val e = intercept[IllegalArgumentException](Gate.unique(twice))
+    assert(e.getMessage.contains(all.head.name))
   }
 
   test("entry() returns rows (driver smoke contract)") {

@@ -57,7 +57,7 @@ def main():
         spark_cmd = ["sbt", "-batch", f"runMain graft.ProbeAdvisorSweep {big_dir} 1 layout"]
         duck_names = "rel"
     elif mode == "routed":
-        # per-query projection routing (LayoutAdvisor.route over
+        # per-query projection routing (LayoutAdvisor.routeAll over
         # adviseProjections' one-projection-per-hot-key staging)
         spark_cmd = ["sbt", "-batch", f"runMain graft.ProbeAdvisorSweep {big_dir} 1 routed"]
         duck_names = "rel"

@@ -21,8 +21,7 @@ object BenchOne {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
     require(reps >= 1, s"reps must be at least 1, got $reps")
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    SparkEntry.requireKnown(names)
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
 
     def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =

@@ -21,8 +21,7 @@ object Explain {
     require(rest.nonEmpty, "usage: Explain <sfDir> [queryName ...] [--run]")
     val sfDir = rest(0)
     val names = if (rest.length > 1) rest.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    SparkEntry.requireKnown(names)
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     names.foreach { n =>
       println(s"\n===== $n =====")

@@ -173,7 +173,7 @@ private[graft] object GateFixtures {
   /** PROJECTION ROUTING end-to-end: adviseProjections derives TWO
     * orders projections from a two-class corpus (per-custkey
     * aggregates; a per-orderkey join), both are staged, and
-    * LayoutAdvisor.route picks the projection for the GATE's own query
+    * LayoutAdvisor.routeAll picks the projection for the GATE's own query
     * — a per-custkey rollup, which must route to the custkey
     * projection. The REQUIRE pins the routing decision itself (either
     * projection would return correct rows — what the oracle checks is
@@ -203,7 +203,8 @@ private[graft] object GateFixtures {
     }
     val gateQuery = Tables.orders(s, d).groupBy(col("o_custkey"))
       .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("rp_price_cents"))
-    val routes = graft.plans.LayoutAdvisor.route(gateQuery, staged)
+    val routes = graft.plans.LayoutAdvisor.routeAll(gateQuery,
+      staged.map { case (sp, c) => graft.plans.LayoutAdvisor.Projection.bucketed(sp, c) })
     val ck = staged.find(_._1.key == "o_custkey").get._2
     require(routes.get("orders").contains(ck),
       s"routedProjection: the per-custkey query must route to the custkey " +

@@ -168,7 +168,7 @@ object ProbeAdvisorSweep {
     }
     if (mode == "layout") ensureAdvised(spark, d)
     // routed: one projection per hot key staged; each query's redirects
-    // come from ITS OWN plan (LayoutAdvisor.route) — computed once here
+    // come from ITS OWN plan (LayoutAdvisor.routeAll) — computed once here
     // on the flat plans, installed per query inside the timing loop
     val routeOf: Map[String, Map[String, String]] = if (mode == "routed") {
       val staged = ensureProjections(spark, d)

@@ -28,4 +28,11 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. */
   val oracleSql: Map[String, String] = gates.map(g => g.name -> g.oracleSql).toMap
+
+  /** Fails, naming every unknown query (sorted), unless all `names`
+    * are declared — the dev mains call it before they start Spark. */
+  def requireKnown(names: Iterable[String]): Unit = {
+    val unknown = names.filterNot(queries.contains).toSeq.sorted
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+  }
 }

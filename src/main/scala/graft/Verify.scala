@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -40,8 +39,7 @@ object Verify {
     val only = args.lift(2).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     only.foreach { names =>
       require(names.nonEmpty, "empty query list")
-      val unknown = names.filterNot(SparkEntry.queries.contains)
-      require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+      SparkEntry.requireKnown(names)
     }
     def wanted(name: String): Boolean = only.forall(_.contains(name))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")

@@ -5,6 +5,7 @@ import graft.operators.Partitioners
 import graft.sources.FileSchemas
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import Shared.cents
 
 /** Layout gates: partitioning, bucketed tables, and the staged
   * layouts (sorted, derived cents, projections, materialized joins and
@@ -132,7 +133,7 @@ object LayoutGates {
       // PROJECTION ROUTING as product: adviseProjections stages one
       // projection per hot key of orders (custkey aggregates vs
       // orderkey joins — the single-layout trade PERF.md round-10
-      // measured), and LayoutAdvisor.route picks per QUERY; the fixture
+      // measured), and LayoutAdvisor.routeAll picks per QUERY; the fixture
       // REQUIREs this per-custkey rollup routed to the custkey
       // projection, and the oracle checks its rows against whole-table
       // orders — a projection that lost/duplicated rows hash-fails.
@@ -155,7 +156,6 @@ object LayoutGates {
       // the q6-shaped DECIMAL idiom — so the gate also pins
       // RewriteStoredCents's MakeDecimal rewrite (stage-time-verified
       // finite columns) against an oracle computed from raw doubles.
-      val cents = (c: String) => round(col(c) * 100).cast("long")
       s.table(GateFixtures.routedCentsLineitem(s, d))
         .filter(col("l_shipdate") >= lit("1996-01-01").cast(TimestampType) &&
           col("l_shipdate") < lit("1996-04-01").cast(TimestampType))
@@ -194,7 +194,6 @@ object LayoutGates {
       // prep_3_merge.py:41-48 (the reference pre-joins at prep time).
       val meta = GateFixtures.denormStar(s, d)
       graft.plans.MaterializedJoins.withRegistered(Seq(meta)) {
-        val cents = (c: String) => round(col(c) * 100).cast("long")
         val df = Tables.lineitem(s, d).filter(col("l_returnflag") === "R")
           .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
           .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
@@ -233,7 +232,6 @@ object LayoutGates {
       require(meta.dims.forall(_.lossless),
         s"layout_denorm_subset: dims must audit lossless: ${meta.dims}")
       graft.plans.MaterializedJoins.withRegistered(Seq(meta)) {
-        val cents = (c: String) => round(col(c) * 100).cast("long")
         val df = Tables.lineitem(s, d)
           .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
           .filter(col("l_quantity") > 25)
@@ -267,7 +265,6 @@ object LayoutGates {
       // groupby aggregate at prep time and every stage consumes it).
       val meta = GateFixtures.aggRollup(s, d)
       graft.plans.MaterializedAggs.withRegistered(Seq(meta)) {
-        val cents = (c: String) => round(col(c) * 100).cast("long")
         val df = Tables.lineitem(s, d)
           .groupBy(col("l_orderkey").as("ar_orderkey"))
           .agg(sum(cents("l_quantity")).as("ar_qty_cents"),
@@ -328,7 +325,6 @@ object LayoutGates {
       // a group dropped by the predicate re-application hash-fails).
       val metas = GateFixtures.aggReagg(s, d)
       graft.plans.MaterializedAggs.withRegistered(metas) {
-        val cents = (c: String) => round(col(c) * 100).cast("long")
         val df = Tables.lineitem(s, d)
           .filter(col("l_discount") <= 0.04)
           .groupBy(col("l_returnflag").as("rg_flag"),
@@ -356,7 +352,6 @@ object LayoutGates {
       // or not). Oracle over the raw table pins exactness.
       val metas = GateFixtures.aggReagg(s, d)
       graft.plans.MaterializedAggs.withRegistered(metas) {
-        val cents = (c: String) => round(col(c) * 100).cast("long")
         val df = Tables.lineitem(s, d)
           .filter(col("l_discount").between(0.02, 0.04) && col("l_quantity") < 20)
           .agg((sum(cents("l_extendedprice") * cents("l_discount"))
@@ -406,7 +401,6 @@ object LayoutGates {
       // 3.3–4.5× — PERF.md round-10). Values vs the whole-table oracle
       // computed from the raw doubles: a stored column that drifted
       // from cast(round(x*100) as long) by one cent hash-fails.
-      val cents = (c: String) => round(col(c) * 100).cast("long")
       s.table(GateFixtures.derivedCentsLineitem(s, d))
         .filter(col("l_shipdate") <= lit("1998-09-01").cast(TimestampType))
         .groupBy(col("l_returnflag"), col("l_linestatus"))

@@ -46,15 +46,6 @@ object RelationalGates {
 
   private val D12 = DecimalType(12, 2)
   private def dec(c: String): Column = col(c).cast(D12)
-  /** 2-dp money as exact integer cents — the q1_pricing_summary_cents
-    * accumulation discipline: primitive-long partial aggregation in
-    * codegen (~2.5× the boxed Decimal path on wide scans) with the SAME
-    * bit-exact result as the DECIMAL oracle (both are exact integer
-    * arithmetic; the one double division at the end mirrors the oracle's
-    * decimal→double cast). Overflow envelope as documented on q1_cents:
-    * Σ price_cents·(100−disc_cents) stays under 2^63 to ~9×10⁹ max-price
-    * rows per group; ANSI mode throws beyond it rather than wrapping. */
-  private def cents(c: String): Column = round(col(c) * 100).cast("long")
   /** Σ extendedprice·(1−discount) in 1e-4 dollar units. */
   private def revCentsE4: Column =
     sum(cents("l_extendedprice") * (lit(100L) - cents("l_discount")))
@@ -104,7 +95,6 @@ object RelationalGates {
       // (q1_pricing_summary) remains the unbounded-scale path; both
       // hash-match the same DECIMAL oracle.
       val li = Tables.lineitem(s, d)
-      val cents = (c: String) => round(col(c) * 100).cast("long")
       li.filter(col("l_shipdate") <= lit("1998-09-01").cast(TimestampType))
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(

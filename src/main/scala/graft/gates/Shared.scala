@@ -2,9 +2,11 @@ package graft
 package gates
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{col, round}
 
 /** Helpers used by gates of more than one family: the array
-  * serializations on the query side, shared oracle SQL on the other. */
+  * serializations and the money idiom on the query side, shared oracle
+  * SQL on the other. */
 object Shared {
 
   /** Driver-checkable serialization of numeric array columns: the gate's
@@ -21,6 +23,18 @@ object Shared {
   /** CSV of an integer/string array (formatting is engine-invariant). */
   private[gates] def rawCsv(arr: Column): Column =
     graft.functions.expressions.GraftExpressions.raw_csv(arr)
+
+  /** 2-dp money as exact integer cents — the q1_pricing_summary_cents
+    * accumulation discipline: primitive-long partial aggregation in
+    * codegen (~2.5× the boxed Decimal path on wide scans) with the SAME
+    * bit-exact result as the DECIMAL oracle (both are exact integer
+    * arithmetic; the one double division at the end mirrors the oracle's
+    * decimal→double cast). Overflow envelope as documented on q1_cents:
+    * Σ price_cents·(100−disc_cents) stays under 2^63 to ~9×10⁹ max-price
+    * rows per group; ANSI mode throws beyond it rather than wrapping.
+    * It is the expression [[graft.plans.RewriteStoredCents.moneyIdiom]]
+    * matches, so a stored-cents layout serves it. */
+  private[gates] def cents(c: String): Column = round(col(c) * 100).cast("long")
 
   /** Quality-score SQL expression over a `t(doc_id, toks)` CTE —
     * mirrors TextFunctions.qualityScore; shared by the score and

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.VectorFunctions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 

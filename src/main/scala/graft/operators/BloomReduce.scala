@@ -83,13 +83,10 @@ object BloomReduce {
     // 30M-row build side dominated a query whose aggregate had become
     // a 30M-row scan. Still fires on flat facts with no rollup.
     val rollupServed = Aggregates.leafColumnsOf(fact, Seq(factKey)).exists {
-      case (lr, leafName) => lr.relation match {
-        case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-          val path = fs.location.rootPaths.map(_.toString).mkString(",")
-          graft.plans.MaterializedAggs.all.exists(m =>
-            m.factPath == path && m.keys == Seq(leafName))
-        case _ => false
-      }
+      case (graft.plans.FileLeaf(_, _, path), leafName) =>
+        graft.plans.MaterializedAggs.all.exists(m =>
+          m.factPath == path && m.keys == Seq(leafName))
+      case _ => false
     }
     if (rollupServed) return fact
     // XxHash64 is type-sensitive (hash(42: Int) != hash(42L)), while the

@@ -122,23 +122,15 @@ object EagerAggregation extends Rule[LogicalPlan] with PredicateHelper {
     side.collectLeaves() match {
       case Seq(lr: org.apache.spark.sql.execution.datasources.LogicalRelation) =>
         val keyNames = keys.map(_.name).toSet
-        val identities = lr.catalogTable.map(_.identifier.table).toSeq ++
-          (lr.relation match {
-            case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              Seq(fs.location.rootPaths.map(_.toString).mkString(","))
-            case _ => Nil
-          })
+        val file = FileLeaf.unapply(lr)
+        val identities = lr.catalogTable.map(_.identifier.table).toSeq ++ file.map(_._3)
         val wh = conf.getConfString("spark.sql.warehouse.dir", "")
         // freshness (round-12): a measurement recorded over DIFFERENT
         // base files than the live leaf is ignored — the grown table's
         // uniqueness may have flipped either way; fall back to the
         // declared conf (records without a fingerprint — aliased staged
         // tables, pre-round-12 files — stay advisory-unchecked)
-        val liveFp = lr.relation match {
-          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            Some(Freshness.ofIndex(fs.location))
-          case _ => None
-        }
+        val liveFp = file.map(f => Freshness.ofIndex(f._2.location))
         val measured = identities.flatMap(id => TableStats.lookup(wh, id))
           .headOption.filter(st => st.fingerprint.isEmpty ||
             liveFp.isEmpty || st.fingerprint == liveFp)
@@ -151,11 +143,11 @@ object EagerAggregation extends Rule[LogicalPlan] with PredicateHelper {
             val declared = declaredUnique
             if (declared.isEmpty) return false
             val table = lr.catalogTable.map(_.identifier.table).getOrElse {
-              lr.relation match {
-                case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+              file match {
+                case Some((_, fs, _)) =>
                   val base = fs.location.rootPaths.head.getName
                   if (base.endsWith(".parquet")) base.dropRight(".parquet".length) else base
-                case _ => return false
+                case None => return false
               }
             }
             def tableMatches(t: String): Boolean = table == t ||

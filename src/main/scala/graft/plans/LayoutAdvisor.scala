@@ -2,9 +2,9 @@ package graft.plans
 
 import graft.sources.FileSchemas
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, BinaryComparison, Cast, Contains, EndsWith, EqualNullSafe, EqualTo, Expression, In, IsNotNull, IsNull, Not, Or, StartsWith}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, BinaryComparison, Cast, Contains, EndsWith, EqualNullSafe, EqualTo, Expression, In, IsNotNull, IsNull, Not, Or, StartsWith}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, LogicalPlan}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 
 /** Write-time layout selection for a query corpus.
   *
@@ -90,6 +90,18 @@ object LayoutAdvisor {
     case other => Seq(other)
   }
 
+  private def stripCast(e: Expression): Expression = e match {
+    case c: Cast => stripCast(c.child)
+    case other => other
+  }
+
+  private def bump(m: scala.collection.mutable.Map[(String, String), Int])(
+      pc: (String, String)): Unit = m(pc) = m.getOrElse(pc, 0) + 1
+
+  /** An equi-join edge between two (path, column) pairs, in one order. */
+  private def edge(a: (String, String), b: (String, String)) =
+    if (a.toString < b.toString) (a, b) else (b, a)
+
   /** Propagate leaf attributions through RENAME chains: a grouping or
     * join key that reaches the operator via `select(col("x").as("k"))`
     * carries the Alias's exprId, not the leaf's — without this the
@@ -114,6 +126,98 @@ object LayoutAdvisor {
       }
     }
   }
+
+  /** One query's file leaves, read once — the index every advisor walk
+    * starts from. `byId` maps each leaf attribute id to its (table,
+    * column), renames resolved through [[resolveAliases]]; per table
+    * ([[FileLeaf]]'s joined-roots key) it records the columns this plan
+    * `used`, the relation's `bytes` and its read `roots`.
+    *
+    * "What this query reads" is leaf output ∩ plan references: the v1
+    * leaf keeps its full-width output in the logical plan (column
+    * pruning lands in the Project above / the physical ReadSchema), and
+    * leaves are excluded from the references (a LogicalRelation's own
+    * output attributes count as its expressions and would mark every
+    * column used). A bare scan references nothing above the leaf: full
+    * width. */
+  private final class Leaves(df: DataFrame) {
+    val plan: LogicalPlan = df.queryExecution.optimizedPlan
+    val byId = scala.collection.mutable.Map.empty[Long, (String, String)]
+    val used = scala.collection.mutable.Map.empty[String, Set[String]]
+    val bytes = scala.collection.mutable.Map.empty[String, Long]
+    val roots = scala.collection.mutable.Map.empty[String, Seq[String]]
+    private val refIds = plan.collect {
+      case n if n.children.nonEmpty => n.expressions.flatMap(_.references.toSeq)
+    }.flatten.map(_.exprId.id).toSet
+    plan.foreach {
+      case FileLeaf(lr, fs, path) =>
+        lr.output.foreach(a => byId(a.exprId.id) = (path, a.name))
+        val read = lr.output.filter(a => refIds(a.exprId.id))
+        used(path) = used.getOrElse(path, Set.empty) ++
+          (if (read.isEmpty) lr.output else read).map(_.name)
+        bytes.getOrElseUpdate(path, fs.sizeInBytes)
+        roots.getOrElseUpdate(path, fs.location.rootPaths.map(_.toString))
+      case _ =>
+    }
+    resolveAliases(plan, byId)
+
+    /** [[reachFraction]] of the leaf at `path` at operator `at`, NDVs
+      * measured where [[TableStats]] has them; 1.0 when not under `at`. */
+    def reach(at: LogicalPlan, path: String): Double =
+      reachFraction(at, path, ndvResolver(df.sparkSession, path)).getOrElse(1.0)
+
+    /** The per-key operators: every bare grouping attribute of an
+      * [[Aggregate]] that resolves to a leaf column (`group`), and every
+      * attribute equi-join conjunct with both sides resolved where they
+      * can be (`equi`). */
+    def keyOps(group: ((String, String), LogicalPlan) => Unit,
+        equi: (Option[(String, String)], Option[(String, String)], Join) => Unit): Unit =
+      plan.foreach {
+        case agg: Aggregate => agg.groupingExpressions.foreach {
+          case ar: AttributeReference => byId.get(ar.exprId.id).foreach(group(_, agg))
+          case _ =>
+        }
+        case j: Join => j.condition.toSeq.flatMap(conjuncts).foreach {
+          case EqualTo(l: AttributeReference, r: AttributeReference) =>
+            equi(byId.get(l.exprId.id), byId.get(r.exprId.id), j)
+          case _ =>
+        }
+        case _ =>
+      }
+
+    /** Every Filter conjunct comparing a leaf column against a foldable
+      * value (>, >=, <, <=, =; casts unwrapped): one hit per conjunct. */
+    def filterHits(hit: ((String, String)) => Unit): Unit = plan.foreach {
+      case f: Filter => conjuncts(f.condition).foreach {
+        case cmp: BinaryComparison =>
+          ((stripCast(cmp.left), stripCast(cmp.right)) match {
+            case (a: AttributeReference, r) if r.foldable => Some(a)
+            case (l, a: AttributeReference) if l.foldable => Some(a)
+            case _ => None
+          }).flatMap(a => byId.get(a.exprId.id)).foreach(hit)
+        case _ =>
+      }
+      case _ =>
+    }
+
+    /** Every money idiom over a leaf column: ONE matcher, shared with
+      * the rewrite rule — advice must count exactly the expressions
+      * [[RewriteStoredCents]] will rewrite, or it stages columns the
+      * rule never reads (both the long-cents idiom and the q6-shaped
+      * decimal idiom). */
+    def centsHits(hit: ((String, String)) => Unit): Unit =
+      plan.foreach(n => n.expressions.foreach(_.foreach { e =>
+        RewriteStoredCents.moneyIdiom(e).flatMap(a => byId.get(a.exprId.id)).foreach(hit)
+      }))
+  }
+
+  /** Per table over a corpus: the first-seen value (bytes, roots). */
+  private def firstSeen[V](per: Seq[scala.collection.Map[String, V]]): Map[String, V] =
+    per.reverseIterator.flatMap(_.iterator).toMap
+
+  /** Per table over a corpus: the union of every query's used columns. */
+  private def usedBy(leaves: Seq[Leaves]): Map[String, Set[String]] =
+    leaves.flatMap(_.used).groupMapReduce(_._1)(_._2)(_ ++ _)
 
   /** Selectivity guess for a filter predicate. MEASURED where stats
     * exist ([[TableStats]] — stats as product): an equality/IN against
@@ -175,12 +279,7 @@ object LayoutAdvisor {
     * stage/don't-stage threshold, not an exact cost model). */
   private def reachFraction(n: LogicalPlan, leafPath: String,
       ndvOf: String => Option[Long] = _ => None): Option[Double] = n match {
-    case lr: LogicalRelation => lr.relation match {
-      case fs: HadoopFsRelation
-          if fs.location.rootPaths.map(_.toString).mkString(",") == leafPath =>
-        Some(1.0)
-      case _ => None
-    }
+    case FileLeaf(_, _, path) if path == leafPath => Some(1.0)
     case f: Filter => reachFraction(f.child, leafPath, ndvOf)
       .map(_ * selectivity(f.condition, ndvOf))
     case other => other.children.flatMap(c => reachFraction(c, leafPath, ndvOf)).headOption
@@ -216,105 +315,8 @@ object LayoutAdvisor {
   def advise(corpus: Seq[DataFrame], targetBucketBytes: Long = 1L << 30,
       minHits: Int = 1, minBenefitFraction: Double = 0.0): Seq[LayoutSpec] = {
     require(corpus.nonEmpty, "LayoutAdvisor.advise: empty corpus")
-    // (path, keyColumn) -> hit count; path -> (bytes, union of pruned columns)
-    val hits = scala.collection.mutable.Map.empty[(String, String), Int]
-    // (path, keyColumn) -> summed reach fractions (the benefit signal)
-    val weight = scala.collection.mutable.Map.empty[(String, String), Double]
-    val tables = scala.collection.mutable.Map.empty[String, (Long, Set[String])]
-    // equi-join edges between (path, column) pairs, for bucket alignment
-    val joinEdges = scala.collection.mutable.Set.empty[((String, String), (String, String))]
-    corpus.foreach { df =>
-      val plan = df.queryExecution.optimizedPlan
-      // attributes referenced by ANY operator in the plan — the v1
-      // leaf keeps its full-width output in the logical plan (column
-      // pruning lands in the Project above / the physical ReadSchema),
-      // so "what this query reads" is leaf output ∩ plan references
-      // (leaves excluded: a LogicalRelation's own output attributes
-      // count as its expressions and would mark every column used)
-      val refIds = plan.collect {
-        case n if n.children.nonEmpty => n.expressions.flatMap(_.references.toSeq)
-      }.flatten.map(_.exprId.id).toSet
-      // leaf attribute id -> (path, column name)
-      val byId = scala.collection.mutable.Map.empty[Long, (String, String)]
-      plan.foreach {
-        case lr: LogicalRelation if lr.relation.isInstanceOf[HadoopFsRelation] =>
-          val fs = lr.relation.asInstanceOf[HadoopFsRelation]
-          val path = fs.location.rootPaths.map(_.toString).mkString(",")
-          lr.output.foreach(a => byId(a.exprId.id) = (path, a.name))
-          val used = lr.output.filter(a => refIds(a.exprId.id))
-          // a bare scan references nothing above the leaf: full width
-          val cols = if (used.isEmpty) lr.output else used
-          val (bytes, prev) = tables.getOrElse(path, (fs.sizeInBytes, Set.empty[String]))
-          tables(path) = (bytes, prev ++ cols.map(_.name))
-        case _ =>
-      }
-      resolveAliases(plan, byId)
-      def hit(a: Attribute, at: LogicalPlan): Unit =
-        byId.get(a.exprId.id).foreach { pc =>
-          hits(pc) = hits.getOrElse(pc, 0) + 1
-          weight(pc) = weight.getOrElse(pc, 0.0) +
-            reachFraction(at, pc._1, ndvResolver(df.sparkSession, pc._1))
-              .getOrElse(1.0)
-        }
-      plan.foreach {
-        case agg: Aggregate =>
-          agg.groupingExpressions.foreach {
-            case ar: AttributeReference => hit(ar, agg)
-            case _ =>
-          }
-        case j: Join =>
-          j.condition.toSeq.flatMap(conjuncts).foreach {
-            case EqualTo(l: AttributeReference, r: AttributeReference) =>
-              hit(l, j); hit(r, j)
-              for (lp <- byId.get(l.exprId.id); rp <- byId.get(r.exprId.id))
-                if (lp != rp) joinEdges += (if (lp.toString < rp.toString) (lp, rp) else (rp, lp))
-            case _ =>
-          }
-        case _ =>
-      }
-    }
-    // per-table key choice: most hits wins; ties prefer a key that
-    // participates in an equi-join (co-location pays on the join AND
-    // every downstream per-key agg, where a tied agg-only key pays
-    // once), then the lexicographically FIRST name for determinism —
-    // the same rule adviseProjections applies, so the two entry points
-    // rank identical corpora identically
-    val joinKeyset: Set[(String, String)] =
-      joinEdges.flatMap(e => Seq(e._1, e._2)).toSet
-    val chosen = hits.groupBy(_._1._1).toSeq.flatMap { case (path, keyed) =>
-      val ((_, key), n) = keyed.toSeq
-        .sortBy { case ((p, k), c) => (-c, !joinKeyset((p, k)), k) }.head
-      val frac = weight.getOrElse((path, key), n.toDouble)
-      if (n < minHits || frac < minBenefitFraction) None
-      else Some((path, key, n, frac))
-    }
-    // alignment classes: union-find over join edges between CHOSEN
-    // (path, key) pairs; every class member gets the class max buckets
-    val parent = scala.collection.mutable.Map.empty[(String, String), (String, String)]
-    def find(x: (String, String)): (String, String) = {
-      val p = parent.getOrElse(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
-    }
-    val chosenSet = chosen.map(c => (c._1, c._2)).toSet
-    joinEdges.foreach { case (a, b) =>
-      if (chosenSet(a) && chosenSet(b)) parent(find(a)) = find(b)
-    }
-    val floor = parallelismFloor(corpus)
-    val ownBuckets = chosen.map { case (path, key, _, _) =>
-      (path, key) -> bucketsFor(tables(path)._1, targetBucketBytes, floor)
-    }.toMap
-    val classMax = ownBuckets.keys.groupBy(find).map { case (root, members) =>
-      root -> members.map(ownBuckets).max
-    }
-    chosen.map { case (path, key, n, frac) =>
-      val (bytes, cols) = tables(path)
-      LayoutSpec(path, tableName(path), key,
-        classMax(find((path, key))),
-        // key first, then the rest of the observed pruned union in
-        // stable order
-        (key +: cols.toSeq.filter(_ != key).sorted).distinct, n,
-        benefitBytes = (frac * bytes).toLong)
-    }.sortBy(s => (-s.hits, s.table))
+    adviseKeys(corpus, 1, targetBucketBytes, minHits, minBenefitFraction,
+      perKeyColumns = false).sortBy(s => (-s.hits, s.table))
   }
 
   /** Multi-projection advice: up to `perTable` bucketed projections
@@ -323,7 +325,8 @@ object LayoutAdvisor {
     * one sorted co-located projection per class; PERF.md "Round-9:
     * the sorted co-located layout re-runs the whole relational probe
     * set" measured the custkey class at 2× beside the orderkey
-    * class's wins). Differences from [[advise]], deliberately:
+    * class's wins). [[advise]] is the `perTable = 1` case with one
+    * deliberate difference:
     *
     *  - columns are attributed PER KEY — a projection carries the
     *    pruned union of the queries that hit ITS key, not everything
@@ -331,68 +334,59 @@ object LayoutAdvisor {
     *    serve their own class narrowly; advise()'s table-wide union
     *    stays the right contract when one staged table must replace
     *    the flat read for every query);
-    *  - a table can appear in several alignment classes — each
+    *  - so a table can appear in several alignment classes — each
     *    projection aligns its bucket count within its own join class.
     */
   def adviseProjections(corpus: Seq[DataFrame], perTable: Int,
       targetBucketBytes: Long = 1L << 30, minHits: Int = 1,
       minBenefitFraction: Double = 0.0): Seq[LayoutSpec] = {
     require(perTable > 0, s"adviseProjections: perTable must be positive, got $perTable")
-    val hitAgg = scala.collection.mutable.Map.empty[(String, String), (Int, Set[String])]
+    adviseKeys(corpus, perTable, targetBucketBytes, minHits, minBenefitFraction,
+      perKeyColumns = true).sortBy(s => (-s.hits, s.table, s.key))
+  }
+
+  /** The selection behind [[advise]] and [[adviseProjections]]: the
+    * `perTable` hottest keys per table, carrying the per-key pruned
+    * union (`perKeyColumns`) or the table-wide one. */
+  private def adviseKeys(corpus: Seq[DataFrame], perTable: Int,
+      targetBucketBytes: Long, minHits: Int, minBenefitFraction: Double,
+      perKeyColumns: Boolean): Seq[LayoutSpec] = {
+    // (path, keyColumn) -> hit count, summed reach fractions (the
+    // benefit signal), union of the hitting queries' pruned columns
+    val hits = scala.collection.mutable.Map.empty[(String, String), Int]
     val weight = scala.collection.mutable.Map.empty[(String, String), Double]
-    val bytesOf = scala.collection.mutable.Map.empty[String, Long]
+    val keyCols = scala.collection.mutable.Map.empty[(String, String), Set[String]]
+    // equi-join edges between (path, column) pairs, for bucket alignment
     val joinEdges = scala.collection.mutable.Set.empty[((String, String), (String, String))]
-    corpus.foreach { df =>
-      val plan = df.queryExecution.optimizedPlan
-      val refIds = plan.collect {
-        case n if n.children.nonEmpty => n.expressions.flatMap(_.references.toSeq)
-      }.flatten.map(_.exprId.id).toSet
-      val byId = scala.collection.mutable.Map.empty[Long, (String, String)]
-      val usedByPath = scala.collection.mutable.Map.empty[String, Set[String]]
-      plan.foreach {
-        case lr: LogicalRelation if lr.relation.isInstanceOf[HadoopFsRelation] =>
-          val fs = lr.relation.asInstanceOf[HadoopFsRelation]
-          val path = fs.location.rootPaths.map(_.toString).mkString(",")
-          lr.output.foreach(a => byId(a.exprId.id) = (path, a.name))
-          val used = lr.output.filter(a => refIds(a.exprId.id))
-          usedByPath(path) = usedByPath.getOrElse(path, Set.empty) ++
-            (if (used.isEmpty) lr.output else used).map(_.name)
-          bytesOf.getOrElseUpdate(path, fs.sizeInBytes)
-        case _ =>
+    val leaves = corpus.map(new Leaves(_))
+    leaves.foreach { l =>
+      def hit(pc: (String, String), at: LogicalPlan): Unit = {
+        hits(pc) = hits.getOrElse(pc, 0) + 1
+        keyCols(pc) = keyCols.getOrElse(pc, Set.empty) ++ l.used.getOrElse(pc._1, Set.empty)
+        weight(pc) = weight.getOrElse(pc, 0.0) + l.reach(at, pc._1)
       }
-      resolveAliases(plan, byId)
-      def hit(a: Attribute, at: LogicalPlan): Unit =
-        byId.get(a.exprId.id).foreach { case pc @ (p, _) =>
-          val (c, cols) = hitAgg.getOrElse(pc, (0, Set.empty[String]))
-          hitAgg(pc) = (c + 1, cols ++ usedByPath.getOrElse(p, Set.empty))
-          weight(pc) = weight.getOrElse(pc, 0.0) +
-            reachFraction(at, p, ndvResolver(df.sparkSession, p)).getOrElse(1.0)
-        }
-      plan.foreach {
-        case agg: Aggregate => agg.groupingExpressions.foreach {
-          case ar: AttributeReference => hit(ar, agg)
-          case _ =>
-        }
-        case j: Join => j.condition.toSeq.flatMap(conjuncts).foreach {
-          case EqualTo(l: AttributeReference, r: AttributeReference) =>
-            hit(l, j); hit(r, j)
-            for (lp <- byId.get(l.exprId.id); rp <- byId.get(r.exprId.id))
-              if (lp != rp) joinEdges += (if (lp.toString < rp.toString) (lp, rp) else (rp, lp))
-          case _ =>
-        }
-        case _ =>
-      }
+      l.keyOps(hit, { (lp, rp, j) =>
+        lp.foreach(hit(_, j)); rp.foreach(hit(_, j))
+        for (a <- lp; b <- rp) if (a != b) joinEdges += edge(a, b)
+      })
     }
+    val bytesOf = firstSeen(leaves.map(_.bytes))
+    val tableCols = usedBy(leaves)
+    // per-table key choice: most hits wins; ties prefer a key that
+    // participates in an equi-join (co-location pays on the join AND
+    // every downstream per-key agg, where a tied agg-only key pays
+    // once), then the lexicographically FIRST name for determinism
     val joinKeyset: Set[(String, String)] = joinEdges.flatMap(e => Seq(e._1, e._2)).toSet
-    val chosen = hitAgg.groupBy(_._1._1).toSeq.flatMap { case (_, keyed) =>
+    val chosen = hits.groupBy(_._1._1).toSeq.flatMap { case (_, keyed) =>
       keyed.toSeq
-        .sortBy { case ((p, k), (c, _)) => (-c, !joinKeyset((p, k)), k) }
+        .sortBy { case ((p, k), c) => (-c, !joinKeyset((p, k)), k) }
         .take(perTable)
-        .filter { case (pc @ (_, _), (c, _)) =>
-          c >= minHits &&
-            weight.getOrElse(pc, c.toDouble) >= minBenefitFraction
+        .filter { case (pc, c) =>
+          c >= minHits && weight.getOrElse(pc, c.toDouble) >= minBenefitFraction
         }
     }
+    // alignment classes: union-find over join edges between CHOSEN
+    // (path, key) pairs; every class member gets the class max buckets
     val parent = scala.collection.mutable.Map.empty[(String, String), (String, String)]
     def find(x: (String, String)): (String, String) = {
       val p = parent.getOrElse(x, x)
@@ -407,11 +401,13 @@ object LayoutAdvisor {
       pc -> bucketsFor(bytesOf(p), targetBucketBytes, floor)
     }.toMap
     val classMax = own.keys.groupBy(find).map { case (root, ms) => root -> ms.map(own).max }
-    chosen.map { case (pc @ (p, k), (c, cols)) =>
+    chosen.map { case (pc @ (p, k), c) =>
+      val cols = if (perKeyColumns) keyCols(pc) else tableCols(p)
       LayoutSpec(p, tableName(p), k, classMax(find(pc)),
+        // key first, then the rest of the pruned union in stable order
         (k +: cols.toSeq.filter(_ != k).sorted).distinct, c,
         benefitBytes = (weight.getOrElse(pc, c.toDouble) * bytesOf(p)).toLong)
-    }.sortBy(s => (-s.hits, s.table, s.key))
+    }
   }
 
   /** A STAGED physical projection of one base table, any layout KIND,
@@ -491,71 +487,36 @@ object LayoutAdvisor {
     * per (table, staged candidate). */
   private def scoreAll(query: DataFrame, staged: Seq[Projection]): Seq[RouteScore] = {
     val spark = query.sparkSession
-    val plan = query.queryExecution.optimizedPlan
-    val refIds = plan.collect {
-      case n if n.children.nonEmpty => n.expressions.flatMap(_.references.toSeq)
-    }.flatten.map(_.exprId.id).toSet
-    val byId = scala.collection.mutable.Map.empty[Long, (String, String)]
-    val usedByPath = scala.collection.mutable.Map.empty[String, Set[String]]
-    val bytesOf = scala.collection.mutable.Map.empty[String, Long]
-    plan.foreach {
-      case lr: LogicalRelation if lr.relation.isInstanceOf[HadoopFsRelation] =>
-        val fs = lr.relation.asInstanceOf[HadoopFsRelation]
-        val path = fs.location.rootPaths.map(_.toString).mkString(",")
-        lr.output.foreach(a => byId(a.exprId.id) = (path, a.name))
-        val used = lr.output.filter(a => refIds(a.exprId.id))
-        usedByPath(path) = usedByPath.getOrElse(path, Set.empty) ++
-          (if (used.isEmpty) lr.output else used).map(_.name)
-        bytesOf.getOrElseUpdate(path, fs.sizeInBytes)
-      case _ =>
-    }
-    resolveAliases(plan, byId)
+    val leaves = new Leaves(query)
+    val (usedByPath, bytesOf) = (leaves.used, leaves.bytes)
     val broadcastThreshold = spark.sessionState.conf.autoBroadcastJoinThreshold
 
     // bucket-key benefit: bytes of avoided exchange per (path, key)
     val keyBytes = scala.collection.mutable.Map.empty[(String, String), Double]
-    def keyHit(a: Attribute, at: LogicalPlan): Unit =
-      byId.get(a.exprId.id).foreach { case pc @ (p, _) =>
-        val w = reachFraction(at, p, ndvResolver(spark, p)).getOrElse(1.0)
-        keyBytes(pc) = keyBytes.getOrElse(pc, 0.0) + w * bytesOf.getOrElse(p, 0L)
-      }
-    plan.foreach {
-      case agg: Aggregate => agg.groupingExpressions.foreach {
-        case ar: AttributeReference => keyHit(ar, agg)
-        case _ =>
-      }
-      case j: Join => j.condition.toSeq.flatMap(conjuncts).foreach {
-        case EqualTo(l: AttributeReference, r: AttributeReference) =>
-          // the join only shuffles when NEITHER side fits the broadcast
-          // threshold — a broadcast join has no exchange for bucketing
-          // to remove, on either side
-          def big(side: LogicalPlan): Boolean =
-            broadcastThreshold <= 0 || side.stats.sizeInBytes > broadcastThreshold
-          if (big(j.left) && big(j.right)) { keyHit(l, j); keyHit(r, j) }
-        case _ =>
-      }
-      case _ =>
-    }
+    def keyHit(pc: (String, String), at: LogicalPlan): Unit =
+      keyBytes(pc) = keyBytes.getOrElse(pc, 0.0) +
+        leaves.reach(at, pc._1) * bytesOf.getOrElse(pc._1, 0L)
+    leaves.keyOps(keyHit, { (l, r, j) =>
+      // the join only shuffles when NEITHER side fits the broadcast
+      // threshold — a broadcast join has no exchange for bucketing
+      // to remove, on either side
+      def big(side: LogicalPlan): Boolean =
+        broadcastThreshold <= 0 || side.stats.sizeInBytes > broadcastThreshold
+      if (big(j.left) && big(j.right)) { l.foreach(keyHit(_, j)); r.foreach(keyHit(_, j)) }
+    })
 
     // stored-cents benefit: money-idiom hits per (path, source column)
     val centsHits = scala.collection.mutable.Map.empty[(String, String), Int]
-    plan.foreach(n => n.expressions.foreach(_.foreach { e =>
-      RewriteStoredCents.moneyIdiom(e).flatMap(a => byId.get(a.exprId.id))
-        .foreach(pc => centsHits(pc) = centsHits.getOrElse(pc, 0) + 1)
-    }))
+    leaves.centsHits(bump(centsHits))
 
     // pushdown-position predicates: Filter directly above each scan
     val predsByPath = scala.collection.mutable.Map.empty[String, Seq[Expression]]
     def scanPath(n: LogicalPlan): Option[String] = n match {
-      case lr: LogicalRelation => lr.relation match {
-        case fs: HadoopFsRelation =>
-          Some(fs.location.rootPaths.map(_.toString).mkString(","))
-        case _ => None
-      }
+      case FileLeaf(_, _, path) => Some(path)
       case p: org.apache.spark.sql.catalyst.plans.logical.Project => scanPath(p.child)
       case _ => None
     }
-    plan.foreach {
+    leaves.plan.foreach {
       case f: Filter => scanPath(f.child).foreach { p =>
         predsByPath(p) = predsByPath.getOrElse(p, Nil) ++ conjuncts(f.condition)
       }
@@ -647,12 +608,6 @@ object LayoutAdvisor {
     * the table's bytes (see [[routeAll]]'s scoring note). */
   val CentsHitWeight = 0.1
 
-  /** Bucketed-only routing (the round-10 surface, kept for callers
-    * holding `(LayoutSpec, table)` pairs): delegates to [[routeAll]]. */
-  def route(query: DataFrame,
-      staged: Seq[(LayoutSpec, String)]): Map[String, String] =
-    routeAll(query, staged.map { case (spec, cat) => Projection.bucketed(spec, cat) })
-
   /** Stage one advised layout as catalog table `name` (parquet read of
     * spec.path → exactly spec.columns → bucketed+sorted on spec.key).
     * The write is the only shuffle this table's per-key query class
@@ -704,47 +659,12 @@ object LayoutAdvisor {
       minHits: Int = 1, exclude: Set[String] = Set.empty): Seq[SortedSpec] = {
     require(corpus.nonEmpty, "LayoutAdvisor.adviseSorted: empty corpus")
     val hits = scala.collection.mutable.Map.empty[(String, String), Int]
-    val tables = scala.collection.mutable.Map.empty[String, (Seq[String], Long, Set[String])]
-    corpus.foreach { df =>
-      val plan = df.queryExecution.optimizedPlan
-      val refIds = plan.collect {
-        case n if n.children.nonEmpty => n.expressions.flatMap(_.references.toSeq)
-      }.flatten.map(_.exprId.id).toSet
-      val byId = scala.collection.mutable.Map.empty[Long, (String, String)]
-      plan.foreach {
-        case lr: LogicalRelation if lr.relation.isInstanceOf[HadoopFsRelation] =>
-          val fs = lr.relation.asInstanceOf[HadoopFsRelation]
-          val roots = fs.location.rootPaths.map(_.toString)
-          val key = roots.mkString(",")
-          lr.output.foreach(a => byId(a.exprId.id) = (key, a.name))
-          val used = lr.output.filter(a => refIds(a.exprId.id))
-          val cols = if (used.isEmpty) lr.output else used
-          val (_, bytes, prev) = tables.getOrElse(key, (roots, fs.sizeInBytes, Set.empty[String]))
-          tables(key) = (roots, bytes, prev ++ cols.map(_.name))
-        case _ =>
-      }
-      resolveAliases(plan, byId)
-      def stripCast(e: Expression): Expression = e match {
-        case c: Cast => stripCast(c.child)
-        case other => other
-      }
-      plan.foreach {
-        case f: Filter => conjuncts(f.condition).foreach {
-          case cmp: BinaryComparison =>
-            val attr = (stripCast(cmp.left), stripCast(cmp.right)) match {
-              case (a: AttributeReference, r) if r.foldable => Some(a)
-              case (l, a: AttributeReference) if l.foldable => Some(a)
-              case _ => None
-            }
-            attr.flatMap(a => byId.get(a.exprId.id))
-              .foreach(pc => hits(pc) = hits.getOrElse(pc, 0) + 1)
-          case _ =>
-        }
-        case _ =>
-      }
-    }
+    val leaves = corpus.map(new Leaves(_))
+    leaves.foreach(_.filterHits(bump(hits)))
+    val (rootsOf, bytesOf, usedOf) =
+      (firstSeen(leaves.map(_.roots)), firstSeen(leaves.map(_.bytes)), usedBy(leaves))
     hits.groupBy(_._1._1).toSeq.flatMap { case (key, keyed) =>
-      val (roots, bytes, cols) = tables(key)
+      val (roots, bytes, cols) = (rootsOf(key), bytesOf(key), usedOf(key))
       val table = tableName(roots.head)
       if (exclude(table)) None
       else {
@@ -808,63 +728,20 @@ object LayoutAdvisor {
   def adviseDerivedCents(corpus: Seq[DataFrame], targetFileBytes: Long = 256L << 20,
       minHits: Int = 1): Seq[DerivedSpec] = {
     require(corpus.nonEmpty, "LayoutAdvisor.adviseDerivedCents: empty corpus")
-    import org.apache.spark.sql.types.LongType
     val centsHits = scala.collection.mutable.Map.empty[(String, String), Int]
     val filterHits = scala.collection.mutable.Map.empty[(String, String), Int]
-    val meta = scala.collection.mutable.Map.empty[String, (String, Long)] // pathKey -> (joined roots, bytes)
-    corpus.foreach { df =>
-      val plan = df.queryExecution.optimizedPlan
-      val byId = scala.collection.mutable.Map.empty[Long, (String, String)]
-      plan.foreach {
-        case lr: LogicalRelation if lr.relation.isInstanceOf[HadoopFsRelation] =>
-          val fs = lr.relation.asInstanceOf[HadoopFsRelation]
-          val roots = fs.location.rootPaths.map(_.toString)
-          val key = roots.mkString(",")
-          lr.output.foreach(a => byId(a.exprId.id) = (key, a.name))
-          meta.getOrElseUpdate(key, (roots.mkString(","), fs.sizeInBytes))
-        case _ =>
-      }
-      resolveAliases(plan, byId)
-      def stripCast(e: Expression): Expression = e match {
-        case c: Cast => stripCast(c.child)
-        case other => other
-      }
-      plan.foreach { node =>
-        // ONE matcher, shared with the rewrite rule: the advice must
-        // count exactly the expressions RewriteStoredCents will
-        // rewrite, or it stages columns the rule never reads (both the
-        // long-cents idiom and the q6-shaped decimal idiom)
-        node.expressions.foreach(_.foreach { e =>
-          RewriteStoredCents.moneyIdiom(e)
-            .flatMap(a => byId.get(a.exprId.id))
-            .foreach(pc => centsHits(pc) = centsHits.getOrElse(pc, 0) + 1)
-        })
-        node match {
-          case f: Filter => conjuncts(f.condition).foreach {
-            case cmp: BinaryComparison =>
-              val attr = (stripCast(cmp.left), stripCast(cmp.right)) match {
-                case (a: AttributeReference, rhs) if rhs.foldable => Some(a)
-                case (lhs, a: AttributeReference) if lhs.foldable => Some(a)
-                case _ => None
-              }
-              attr.flatMap(a => byId.get(a.exprId.id))
-                .foreach(pc => filterHits(pc) = filterHits.getOrElse(pc, 0) + 1)
-            case _ =>
-          }
-          case _ =>
-        }
-      }
-    }
-    centsHits.groupBy(_._1._1).toSeq.flatMap { case (key, keyed) =>
+    val leaves = corpus.map(new Leaves(_))
+    leaves.foreach { l => l.centsHits(bump(centsHits)); l.filterHits(bump(filterHits)) }
+    val bytesOf = firstSeen(leaves.map(_.bytes))
+    centsHits.groupBy(_._1._1).toSeq.flatMap { case (path, keyed) =>
       val cols = keyed.toSeq.filter(_._2 >= minHits)
         .sortBy { case ((_, c), n) => (-n, c) }.map(_._1._2)
       if (cols.isEmpty) None
       else {
-        val (headPath, bytes) = meta(key)
-        val sortCol = filterHits.toSeq.filter(_._1._1 == key)
+        val sortCol = filterHits.toSeq.filter(_._1._1 == path)
           .sortBy { case ((_, c), n) => (-n, c) }.headOption.map(_._1._2)
-        Some(DerivedSpec(headPath, tableName(headPath), cols, sortCol,
-          filesFor(bytes, targetFileBytes), keyed.map(_._2).sum))
+        Some(DerivedSpec(path, tableName(path), cols, sortCol,
+          filesFor(bytesOf(path), targetFileBytes), keyed.map(_._2).sum))
       }
     }.sortBy(s => (-s.hits, s.table))
   }
@@ -1076,52 +953,21 @@ object LayoutAdvisor {
       targetBucketBytes: Long = 1L << 30, minHits: Int = 2,
       minDimBytes: Long = 16L << 20, maxDims: Int = 4): Seq[DenormSpec] = {
     require(corpus.nonEmpty, "LayoutAdvisor.adviseDenormalized: empty corpus")
-    val bytesOf = scala.collection.mutable.Map.empty[String, Long]
-    val usedByPath = scala.collection.mutable.Map.empty[String, Set[String]]
     val edgeHits = scala.collection.mutable.Map.empty[((String, String), (String, String)), Int]
     val groupHits = scala.collection.mutable.Map.empty[(String, String), Int]
     val centsHits = scala.collection.mutable.Map.empty[(String, String), Int]
-    corpus.foreach { df =>
-      val plan = df.queryExecution.optimizedPlan
-      val refIds = plan.collect {
-        case n if n.children.nonEmpty => n.expressions.flatMap(_.references.toSeq)
-      }.flatten.map(_.exprId.id).toSet
-      val byId = scala.collection.mutable.Map.empty[Long, (String, String)]
-      plan.foreach {
-        case lr: LogicalRelation if lr.relation.isInstanceOf[HadoopFsRelation] =>
-          val fs = lr.relation.asInstanceOf[HadoopFsRelation]
-          val path = fs.location.rootPaths.map(_.toString).mkString(",")
-          lr.output.foreach(a => byId(a.exprId.id) = (path, a.name))
-          val used = lr.output.filter(a => refIds(a.exprId.id))
-          usedByPath(path) = usedByPath.getOrElse(path, Set.empty) ++
-            (if (used.isEmpty) lr.output else used).map(_.name)
-          bytesOf.getOrElseUpdate(path, fs.sizeInBytes)
-        case _ =>
-      }
-      resolveAliases(plan, byId)
-      plan.foreach {
-        case j: Join if j.joinType == org.apache.spark.sql.catalyst.plans.Inner =>
-          j.condition.toSeq.flatMap(conjuncts).foreach {
-            case EqualTo(l: AttributeReference, r: AttributeReference) =>
-              for (lp <- byId.get(l.exprId.id); rp <- byId.get(r.exprId.id))
-                if (lp._1 != rp._1) {
-                  val e = if (lp.toString < rp.toString) (lp, rp) else (rp, lp)
-                  edgeHits(e) = edgeHits.getOrElse(e, 0) + 1
-                }
-            case _ =>
+    val leaves = corpus.map(new Leaves(_))
+    leaves.foreach { l =>
+      l.keyOps((pc, _) => bump(groupHits)(pc), { (lp, rp, j) =>
+        if (j.joinType == org.apache.spark.sql.catalyst.plans.Inner)
+          for (a <- lp; b <- rp) if (a._1 != b._1) {
+            val e = edge(a, b)
+            edgeHits(e) = edgeHits.getOrElse(e, 0) + 1
           }
-        case agg: Aggregate => agg.groupingExpressions.foreach {
-          case ar: AttributeReference => byId.get(ar.exprId.id)
-            .foreach(pc => groupHits(pc) = groupHits.getOrElse(pc, 0) + 1)
-          case _ =>
-        }
-        case _ =>
-      }
-      plan.foreach(n => n.expressions.foreach(_.foreach { e =>
-        RewriteStoredCents.moneyIdiom(e).flatMap(a => byId.get(a.exprId.id))
-          .foreach(pc => centsHits(pc) = centsHits.getOrElse(pc, 0) + 1)
-      }))
+      })
+      l.centsHits(bump(centsHits))
     }
+    val (bytesOf, usedByPath) = (firstSeen(leaves.map(_.bytes)), usedBy(leaves))
     if (bytesOf.isEmpty) return Nil
     val factPath = bytesOf.toSeq.maxBy(p => (p._2, p._1))._1
     val factBytes = bytesOf(factPath)

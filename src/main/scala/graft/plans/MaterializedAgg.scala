@@ -395,9 +395,8 @@ object MaterializedAggs extends LayoutRegistry {
   private[plans] def peelFact(p: LogicalPlan): Option[PeeledFact] = {
     val subst = scala.collection.mutable.Map.empty[Long, Expression]
     val filters = scala.collection.mutable.ArrayBuffer.empty[Expression]
-    def walk(p: LogicalPlan): Option[LogicalRelation] = p match {
-      case lr: LogicalRelation if lr.relation.isInstanceOf[HadoopFsRelation] =>
-        Some(lr)
+    def walk(p: LogicalPlan): Option[(LogicalRelation, String)] = p match {
+      case FileLeaf(lr, _, path) => Some((lr, path))
       case prj: Project =>
         prj.projectList.foreach {
           case al: Alias => subst(al.exprId.id) = al.child
@@ -411,11 +410,7 @@ object MaterializedAggs extends LayoutRegistry {
       case s: Sort => walk(s.child)
       case _ => None
     }
-    walk(p).map { lr =>
-      val path = lr.relation.asInstanceOf[HadoopFsRelation]
-        .location.rootPaths.map(_.toString).mkString(",")
-      PeeledFact(lr, path, filters.toSeq, subst.toMap)
-    }
+    walk(p).map { case (lr, path) => PeeledFact(lr, path, filters.toSeq, subst.toMap) }
   }
 
   /** Normalize an expression over leaf attributes into a comparable

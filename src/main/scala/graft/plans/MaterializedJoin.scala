@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, JoinHint, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.types.LongType
 
 /** MATERIALIZED JOIN PROJECTIONS — the pre-joined (denormalized) star
@@ -100,11 +100,8 @@ object MaterializedJoins extends LayoutRegistry {
   /** The (comma-joined) root path of `df`'s single file scan — the
     * identity [[Meta.factPath]]/[[DimMeta.path]] match against. */
   def leafPath(df: org.apache.spark.sql.DataFrame): String =
-    df.queryExecution.optimizedPlan.collectFirst {
-      case lr: LogicalRelation if lr.relation.isInstanceOf[HadoopFsRelation] =>
-        lr.relation.asInstanceOf[HadoopFsRelation]
-          .location.rootPaths.map(_.toString).mkString(",")
-    }.getOrElse(sys.error("MaterializedJoins.leafPath: no file scan in plan"))
+    df.queryExecution.optimizedPlan.collectFirst { case FileLeaf(_, _, path) => path }
+      .getOrElse(sys.error("MaterializedJoins.leafPath: no file scan in plan"))
 
   /** Sidecar written beside a staged denorm's files: everything a fresh
     * JVM needs to re-[[attachDenorm]] and re-[[register]] without
@@ -447,8 +444,7 @@ object RewriteMaterializedJoin extends Rule[LogicalPlan] with PredicateHelper {
     import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
     def walk(p: LogicalPlan, filters: Seq[Expression], wrappers: Seq[SemiWrapper])
         : Option[(LogicalRelation, Seq[Expression], Seq[SemiWrapper])] = p match {
-      case lr: LogicalRelation if lr.relation.isInstanceOf[HadoopFsRelation] =>
-        Some((lr, filters, wrappers))
+      case FileLeaf(lr, _, _) => Some((lr, filters, wrappers))
       case f: Filter if f.condition.deterministic =>
         // non-det leaf filters (rand() sampling, input_file_name())
         // must evaluate once per MEMBER row over the member's files;
@@ -465,9 +461,7 @@ object RewriteMaterializedJoin extends Rule[LogicalPlan] with PredicateHelper {
       case _ => None
     }
     walk(input, Nil, Nil) match {
-      case Some((lr, filters, wrappers)) =>
-        val path = lr.relation.asInstanceOf[HadoopFsRelation]
-          .location.rootPaths.map(_.toString).mkString(",")
+      case Some((lr @ FileLeaf(_, fs, path), filters, wrappers)) =>
         val leafOut = lr.outputSet
         // wrapper conditions read member columns too — they must be
         // carried and aliased like the plain filters' references
@@ -477,8 +471,8 @@ object RewriteMaterializedJoin extends Rule[LogicalPlan] with PredicateHelper {
           filters, wrappers,
           (filters.flatMap(_.references) ++ wrapperRefs).distinct,
           lr.output.map(a => a.name.toLowerCase -> a).toMap, hint,
-          Some(lr.relation.asInstanceOf[HadoopFsRelation].location))
-      case None => Peeled(input, None, input.output, Nil, Nil, Nil, Map.empty, hint)
+          Some(fs.location))
+      case _ => Peeled(input, None, input.output, Nil, Nil, Nil, Map.empty, hint)
     }
   }
 

@@ -217,7 +217,6 @@ object TabularReader {
       loaded: DataFrame,
       start: Long,
       end: Long): DataFrame = {
-    import org.apache.spark.sql.Row
     val dataCols = loaded.columns.toSeq
     val meta = loaded.select(
       col("_metadata.file_path").as("__file") +:

@@ -321,7 +321,7 @@ object TabularWriter {
     * schema is unchanged. */
   def toZOrdered(df: DataFrame, path: String, xCol: String, yCol: String,
       numFiles: Int, compression: String = "snappy"): Unit = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit, max, min}
+    import org.apache.spark.sql.functions.{broadcast, col, max, min}
     // normalize both keys to equal-width 15-bit buckets first: raw
     // interleave of unequal domains degenerates to a single-key sort
     // (the wider key owns every leading bit). Equi-width is the shared

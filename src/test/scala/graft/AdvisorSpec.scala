@@ -193,6 +193,30 @@ class AdvisorSpec extends GraftSpec {
       li.groupBy(col("l_partkey")).agg(count(lit(1)).as("n")))
     assert(LayoutAdvisor.advise(corpus).head.key === "l_orderkey")
     assert(LayoutAdvisor.adviseProjections(corpus, perTable = 1).head.key === "l_orderkey")
+    // advise IS the perTable = 1 case: same choice, hits, buckets and
+    // benefit; only the columns differ (table-wide union ⊇ per-key
+    // union). The join corpus makes the difference observable: orders'
+    // join key wins, but its table-wide union also carries the
+    // o_custkey class's columns.
+    val or = Tables.orders(spark, sf)
+    val join = Seq(
+      li.join(or, col("l_orderkey") === col("o_orderkey"))
+        .groupBy(col("o_orderpriority")).agg(count(lit(1)).as("n")),
+      or.groupBy(col("o_custkey")).agg(sum(col("o_totalprice")).as("v")))
+    for (c <- Seq(corpus, join)) {
+      val whole = LayoutAdvisor.advise(c)
+      val perKey = LayoutAdvisor.adviseProjections(c, perTable = 1)
+      def choice(ss: Seq[LayoutAdvisor.LayoutSpec]) =
+        ss.map(s => (s.path, s.table, s.key, s.buckets, s.hits, s.benefitBytes))
+      assert(choice(whole) === choice(perKey))
+      whole.zip(perKey).foreach { case (w, k) =>
+        assert(k.columns.toSet.subsetOf(w.columns.toSet), s"$w vs $k")
+      }
+    }
+    val orders = LayoutAdvisor.advise(join).find(_.table == "orders").get
+    assert(orders.key === "o_orderkey" && orders.columns.contains("o_totalprice"))
+    assert(!LayoutAdvisor.adviseProjections(join, perTable = 1)
+      .find(_.table == "orders").get.columns.contains("o_totalprice"))
   }
 
   test("adviseSorted: hottest filter column range-sorts; a second hot column z-orders") {
@@ -280,10 +304,10 @@ class AdvisorSpec extends GraftSpec {
       val staged = orProj.map { s =>
         val name = if (s.key == "o_custkey") "route_ck" else "route_ok"
         LayoutAdvisor.stage(spark, s, name)
-        s -> name
+        LayoutAdvisor.Projection.bucketed(s, name)
       }
       // a custkey-grouping query routes to the custkey projection...
-      val byCust = LayoutAdvisor.route(
+      val byCust = LayoutAdvisor.routeAll(
         or.groupBy(col("o_custkey")).agg(count(lit(1)).as("n")), staged)
       assert(byCust === Map("orders" -> "route_ck"))
       // ...an orderkey-join query to the orderkey projection — but only
@@ -292,24 +316,24 @@ class AdvisorSpec extends GraftSpec {
       // the threshold) the router must leave the query flat
       def ordQ = li.join(or, col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_orderpriority")).agg(count(lit(1)).as("n"))
-      assert(!LayoutAdvisor.route(ordQ, staged).contains("orders"),
+      assert(!LayoutAdvisor.routeAll(ordQ, staged).contains("orders"),
         "a broadcastable join side must not attract a bucket route")
       val thr = "spark.sql.autoBroadcastJoinThreshold"
       val savedThr = spark.conf.get(thr)
       val byOrd = try {
         spark.conf.set(thr, "-1")
-        LayoutAdvisor.route(ordQ, staged)
+        LayoutAdvisor.routeAll(ordQ, staged)
       } finally spark.conf.set(thr, savedThr)
       assert(byOrd.get("orders") === Some("route_ok"))
       // a query reading a column NO projection carries stays flat
       // (the corpus never read o_orderdate, so neither projection has it)
-      val wide = LayoutAdvisor.route(
+      val wide = LayoutAdvisor.routeAll(
         or.groupBy(col("o_custkey"))
           .agg(max(col("o_orderdate")).as("m")), staged)
       assert(!wide.contains("orders"),
         s"projection lacking o_orderdate must not serve the query: $wide")
       // a query with no per-key operator on orders stays flat too
-      val noKey = LayoutAdvisor.route(
+      val noKey = LayoutAdvisor.routeAll(
         or.select(col("o_totalprice")).filter(col("o_totalprice") > 100.0), staged)
       assert(!noKey.contains("orders"))
       // routed result == flat result through the actual redirect machinery

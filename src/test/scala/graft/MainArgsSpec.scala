@@ -21,6 +21,17 @@ class MainArgsSpec extends GraftSpec {
     assert(printed.isEmpty, printed)
   }
 
+  test("Verify rejects unknown names, listed sorted, before running any query") {
+    val out = java.nio.file.Files.createTempDirectory("verify_args")
+    try {
+      val (msg, printed) = rejected(Verify.main(Array(sf, out.toString,
+        "zz_no_such_query, metric_mrr ,aa_no_such_query")))
+      assert(msg.contains("unknown queries: aa_no_such_query, zz_no_such_query"), msg)
+      assert(printed.isEmpty, printed)
+      assert(out.toFile.list().isEmpty, "nothing may be written before the check")
+    } finally GateFixtures.deleteRecursively(out)
+  }
+
   test("BenchOne rejects reps < 1 before running any query") {
     val (msg, printed) = rejected(BenchOne.main(Array("metric_mrr", sf, "0")))
     assert(msg.contains("reps"))

@@ -30,11 +30,11 @@ private[graft] object GateFixtures {
     * layout the bucketed gates read (PERF.md round-8: the exchange-free
     * answer to the per-order aggregate/join class). Staged once per
     * (session catalog, data dir); the warehouse dir outlives the JVM
-    * but the in-memory catalog doesn't, so stale locations are cleared
-    * before CREATE (same discipline as join_bucketed_colocated). The
-    * bf_ prefix avoids colliding with join_bucketed_colocated's own
-    * b_orders$tag table (bucketed on o_custkey — reusing it here would
-    * silently lose the o_orderkey distribution). */
+    * but the in-memory catalog doesn't, so [[bucketedTable]] clears
+    * stale locations before CREATE. The bf_ prefix avoids colliding
+    * with join_bucketed_colocated's own b_orders$tag table (bucketed on
+    * o_custkey — reusing it here would silently lose the o_orderkey
+    * distribution). */
   def bucketedLineitem(s: org.apache.spark.sql.SparkSession, d: String): String =
     bucketedTable(s, d, "bf_lineitem") { name =>
       import org.apache.spark.sql.functions.col
@@ -385,9 +385,7 @@ private[graft] object GateFixtures {
     }
     // the sidecar is the Meta's durable form — works for both the
     // fresh staging above and the memoized same-JVM re-entry
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    graft.plans.MaterializedJoins.metaFromSidecar(
-      name, java.nio.file.Paths.get(wh, name).toString)._1
+    graft.plans.MaterializedJoins.metaFromSidecar(name, warehousePath(s, name))._1
   }
 
   /** MATERIALIZED AGGREGATE rollup for the layout_agg_* gates (round-12
@@ -423,9 +421,7 @@ private[graft] object GateFixtures {
       graft.plans.MaterializedAggs.stageRollup(s, spec, n)
       graft.plans.MaterializedAggs.deregister(n) // gates scope their own
     }
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    graft.plans.MaterializedAggs.metaFromSidecar(
-      name, java.nio.file.Paths.get(wh, name).toString)
+    graft.plans.MaterializedAggs.metaFromSidecar(name, warehousePath(s, name))
   }
 
   /** COMPOSITE-KEY rollups for the layout_agg_reagg/filtergrain gates
@@ -461,15 +457,13 @@ private[graft] object GateFixtures {
     val wanted = Seq(
       "ar_reagg1" -> Seq("l_returnflag", "l_linestatus", "l_discount"),
       "ar_reagg6" -> Seq("l_discount", "l_quantity"))
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     wanted.map { case (base, keys) =>
       val name = bucketedTable(s, d, base) { n =>
         graft.plans.MaterializedAggs.stageRollup(s,
           specs.find(_.keys == keys).get, n)
         graft.plans.MaterializedAggs.deregister(n) // gates scope their own
       }
-      graft.plans.MaterializedAggs.metaFromSidecar(
-        name, java.nio.file.Paths.get(wh, name).toString)
+      graft.plans.MaterializedAggs.metaFromSidecar(name, warehousePath(s, name))
     }
   }
 
@@ -481,16 +475,23 @@ private[graft] object GateFixtures {
         .write.mode("overwrite").bucketBy(8, "o_orderkey").saveAsTable(name)
     }
 
-  private def bucketedTable(s: org.apache.spark.sql.SparkSession, d: String,
+  /** Catalog table `base` + the data dir's tag, created by `write` on
+    * first use per (session catalog, data dir) — after clearing any
+    * location a previous JVM left at that name
+    * ([[graft.sources.TabularWriter.clearStale]]). */
+  private[graft] def bucketedTable(s: org.apache.spark.sql.SparkSession, d: String,
       base: String)(write: String => Unit): String = {
     val name = base + d.replaceAll("[^A-Za-z0-9]", "_")
     if (!s.catalog.tableExists(name)) {
-      val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-      deleteRecursively(java.nio.file.Paths.get(wh, name))
+      graft.sources.TabularWriter.clearStale(s, name)
       write(name)
     }
     name
   }
+
+  /** Where catalog table `name`'s files live in the warehouse. */
+  private def warehousePath(s: org.apache.spark.sql.SparkSession, name: String): String =
+    java.nio.file.Paths.get(graft.plans.TableStats.warehouseOf(s), name).toString
 
   private[graft] def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {

@@ -260,36 +260,16 @@ object ProbeAdvisorSweep {
     val specs = graft.plans.LayoutAdvisor.adviseDenormalized(corpus,
       targetBucketBytes = 64L << 20, minHits = 2)
     val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     specs.map { spec =>
       val t = s"adv_denorm_${spec.fact}$tag"
       println(s"[advise] denorm ${spec.fact} + ${spec.dims.map(_.table).mkString("+")} " +
         s"bucket=${spec.bucketKey.getOrElse("-")}/${spec.buckets} " +
         s"cols=${spec.columns.size} cents=${spec.centsCols.mkString(",")} hits=${spec.hits}")
-      graft.plans.MaterializedJoins.all.find(_.catalogTable == t).getOrElse {
-        val loc = java.nio.file.Paths.get(wh, t)
-        val t0 = System.nanoTime()
-        val attached =
-          if (java.nio.file.Files.exists(loc.resolve("_SUCCESS")) &&
-              !spark.catalog.tableExists(t)) {
-            try {
-              val m = graft.plans.MaterializedJoins.attachDenorm(spark, spec, t, loc.toString)
-              println(f"[advise] attached $t (${(System.nanoTime() - t0) / 1e9}%.1f s)")
-              Some(m)
-            } catch {
-              case e: IllegalArgumentException =>
-                println(s"[advise] $t sidecar mismatch (${e.getMessage.take(80)}…) — re-staging")
-                None
-            }
-          } else None
-        attached.getOrElse {
-          if (spark.catalog.tableExists(t)) spark.sql(s"DROP TABLE `$t`")
-          GateFixtures.deleteRecursively(loc)
-          val m = graft.plans.MaterializedJoins.stageDenorm(spark, spec, t)
-          println(f"[advise] staged $t (one-time write, ${(System.nanoTime() - t0) / 1e9}%.1f s) " +
-            s"lossless=${m.dims.map(dd => s"${dd.table}:${dd.lossless}").mkString(",")}")
-          m
-        }
+      stageOrAttach(spark, t, graft.plans.MaterializedJoins.all.find(_.catalogTable == t))(
+        graft.plans.MaterializedJoins.attachDenorm(spark, spec, t, _)) {
+        val m = graft.plans.MaterializedJoins.stageDenorm(spark, spec, t)
+        println(s"[advise] $t lossless=${m.dims.map(dd => s"${dd.table}:${dd.lossless}").mkString(",")}")
+        m
       }
     }
   }
@@ -309,35 +289,13 @@ object ProbeAdvisorSweep {
     val specs = graft.plans.LayoutAdvisor.adviseAggRollups(corpus,
       targetBucketBytes = 64L << 20, minHits = 1)
     val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     specs.map { spec =>
       val t = s"adv_rollup_${spec.fact}_${spec.keys.mkString("_")}$tag"
       println(s"[advise] rollup ${spec.fact}.(${spec.keys.mkString(",")}) buckets=${spec.buckets} " +
         s"hits=${spec.hits} measures=${spec.measures.map(_.name).mkString(",")}")
-      graft.plans.MaterializedAggs.all.find(_.catalogTable == t).getOrElse {
-        val loc = java.nio.file.Paths.get(wh, t)
-        val t0 = System.nanoTime()
-        val attached =
-          if (java.nio.file.Files.exists(loc.resolve("_SUCCESS")) &&
-              !spark.catalog.tableExists(t)) {
-            try {
-              val m = graft.plans.MaterializedAggs.attachRollup(spark, spec, t, loc.toString)
-              println(f"[advise] attached $t (${(System.nanoTime() - t0) / 1e9}%.1f s)")
-              Some(m)
-            } catch {
-              case e: IllegalArgumentException =>
-                println(s"[advise] $t sidecar mismatch (${e.getMessage.take(80)}…) — re-staging")
-                None
-            }
-          } else None
-        attached.getOrElse {
-          if (spark.catalog.tableExists(t)) spark.sql(s"DROP TABLE `$t`")
-          GateFixtures.deleteRecursively(loc)
-          val m = graft.plans.MaterializedAggs.stageRollup(spark, spec, t)
-          println(f"[advise] staged $t (one-time write, ${(System.nanoTime() - t0) / 1e9}%.1f s)")
-          m
-        }
-      }
+      stageOrAttach(spark, t, graft.plans.MaterializedAggs.all.find(_.catalogTable == t))(
+        graft.plans.MaterializedAggs.attachRollup(spark, spec, t, _))(
+        graft.plans.MaterializedAggs.stageRollup(spark, spec, t))
     }
   }
 
@@ -361,7 +319,6 @@ object ProbeAdvisorSweep {
     specs.foreach(s => println(
       s"[advise] ${s.table} key=${s.key} buckets=${s.buckets} hits=${s.hits} " +
         s"cols=${s.columns.size} cents=${derived.getOrElse(s.table, Nil).mkString(",")}"))
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     // dir-tagged names (GateFixtures discipline): the same JVM-spanning
     // warehouse serves several data dirs — an untagged name would
     // silently serve sf0.1's staging to an x200 run
@@ -369,79 +326,30 @@ object ProbeAdvisorSweep {
     specs.map { spec =>
       val t = s"adv_sweep_${spec.table}$tag"
       val cents = derived.getOrElse(spec.table, Nil).filter(spec.columns.contains)
-      stageOrAttach(spark, spec, cents, t)
+      ensureBucketed(spark, spec, cents, t)
       Tables.redirect(d, spec.table, t)
       spec.table -> t
     }
   }
 
-  /** Stage (or re-attach) `spec` as catalog table `t`, composing stored
-    * cents. Bucket membership is PHYSICAL, and the advisor's input is
-    * the OPTIMIZED plan — an engine rule change can shift the advised
-    * key or count between sessions (observed round 10: the unique-key
-    * constraints removed some eager pre-aggregates from the corpus
-    * plans and flipped orders' advised key from o_orderkey/34 to
-    * o_custkey/32). Attach ONLY when the sidecar proves the staged spec
-    * matches this session's advice; otherwise re-stage (legacy
-    * sidecar-less dirs re-stage too — nothing proves their key). */
-  private def stageOrAttach(spark: org.apache.spark.sql.SparkSession,
-      spec: graft.plans.LayoutAdvisor.LayoutSpec, cents: Seq[String],
-      t: String): Unit = {
-    if (spark.catalog.tableExists(t)) return
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    // stats as product: measure (rowCount, NDV per advised column) of
-    // the base table once — EagerAggregation's unique-key declines and
-    // the advisor's equality selectivity then come from MEASUREMENT on
-    // both the flat path and (via the alias) the staged catalog table
-    val stats = graft.plans.TableStats.analyzePathIfMissing(
-      spark, spec.path, spec.key +: spec.columns)
-    graft.plans.TableStats.alias(wh, stats, t)
-    println(s"[stats] ${spec.table}: rows=${stats.rowCount} " +
-      stats.ndv.toSeq.sortBy(_._1).map { case (c, n) => s"$c=$n" }.mkString(" "))
-    val loc = java.nio.file.Paths.get(wh, t)
-    val sidecar = loc.resolve(graft.sources.TabularWriter.BucketSidecar)
-    val sidecarMatches = java.nio.file.Files.exists(sidecar) && {
-      val tokens = new String(java.nio.file.Files.readAllBytes(sidecar),
-        "UTF-8").trim.split("\\s+")
-      // corrupt/truncated sidecar = "does not match" → re-stage, never throw
-      tokens.length > 1 && tokens.head.nonEmpty &&
-        tokens.head.forall(_.isDigit) && tokens.head.toInt == spec.buckets &&
-        tokens(1).equalsIgnoreCase(spec.key)
+  /** Stage (or re-attach, [[graft.plans.LayoutAdvisor.attach]]) `spec`
+    * as catalog table `t`, composing stored cents. */
+  private def ensureBucketed(spark: org.apache.spark.sql.SparkSession,
+      spec: graft.plans.LayoutAdvisor.LayoutSpec, cents: Seq[String], t: String): Unit =
+    if (!spark.catalog.tableExists(t)) {
+      // stats as product: measure (rowCount, NDV per advised column) of
+      // the base table once — EagerAggregation's unique-key declines and
+      // the advisor's equality selectivity then come from MEASUREMENT on
+      // both the flat path and (via the alias) the staged catalog table
+      val stats = graft.plans.TableStats.analyzePathIfMissing(
+        spark, spec.path, spec.key +: spec.columns)
+      graft.plans.TableStats.alias(graft.plans.TableStats.warehouseOf(spark), stats, t)
+      println(s"[stats] ${spec.table}: rows=${stats.rowCount} " +
+        stats.ndv.toSeq.sortBy(_._1).map { case (c, n) => s"$c=$n" }.mkString(" "))
+      stageOrAttach(spark, t, None)(
+        graft.plans.LayoutAdvisor.attach(spark, spec, cents, t, _))(
+        graft.plans.LayoutAdvisor.stageWithDerived(spark, spec, cents, t))
     }
-    // freshness (round-12): attach only when the recorded base still
-    // fingerprints identically — a base that grew since staging means
-    // the layout is stale and must re-stage (sidecar-less legacy dirs
-    // re-stage too via sidecarMatches)
-    val baseFresh = graft.plans.Freshness.verifyBaseAt(spark, loc)
-    if (!baseFresh) println(s"[advise] $t: base data drifted since staging — re-staging")
-    if (java.nio.file.Files.exists(loc.resolve("_SUCCESS")) && sidecarMatches && baseFresh) {
-      val t0 = System.nanoTime()
-      graft.sources.TabularWriter.attach(
-        spark, t, loc.toString, spec.key, spec.buckets)
-      // table properties live in the catalog the attach just
-      // recreated, not in the files — re-mark or the rule stays off
-      if (cents.nonEmpty) {
-        // the decimal-idiom rewrite additionally needs the finiteness
-        // proof; files staged before the audit existed self-heal with
-        // one narrow scan of the base columns + a sidecar write
-        val finite = graft.plans.LayoutAdvisor.readFiniteSidecar(loc.toString)
-          .getOrElse {
-            val f = graft.plans.LayoutAdvisor.auditFinite(
-              graft.sources.FileSchemas.read(spark, spec.path.split(',').toIndexedSeq), cents)
-            graft.plans.LayoutAdvisor.writeFiniteSidecar(spark, t, f)
-            println(s"[advise] $t: finite audit self-healed (${f.mkString(",")})")
-            f
-          }
-        graft.plans.LayoutAdvisor.markDerived(spark, t, cents, finite)
-      }
-      println(f"[advise] attached $t (${(System.nanoTime() - t0) / 1e9}%.1f s)")
-    } else {
-      GateFixtures.deleteRecursively(loc)
-      val t0 = System.nanoTime()
-      graft.plans.LayoutAdvisor.stageWithDerived(spark, spec, cents, t)
-      println(f"[advise] staged $t (one-time write, ${(System.nanoTime() - t0) / 1e9}%.1f s)")
-    }
-  }
 
   /** One projection per ACCESS PATTERN per table: the bucketed hot-key
     * projections (adviseProjections, perTable=2, cents composed) PLUS
@@ -466,40 +374,54 @@ object ProbeAdvisorSweep {
       println(s"[advise] projection ${spec.table}.${spec.key} buckets=${spec.buckets} " +
         s"hits=${spec.hits} cols=${spec.columns.size}")
       val cents = derived.getOrElse(spec.table, Nil).filter(spec.columns.contains)
-      stageOrAttach(spark, spec, cents, t)
+      ensureBucketed(spark, spec, cents, t)
       graft.plans.LayoutAdvisor.Projection.bucketed(spec, t, cents)
     }
     val clustered = derivedSpecs.map { ds =>
       val t = s"adv_cents_${ds.table}$tag"
       println(s"[advise] cents projection ${ds.table} sort=${ds.sortCol.getOrElse("-")} " +
         s"cols=${ds.sourceCols.mkString(",")} hits=${ds.hits}")
-      stageOrAttachDerived(spark, ds, t)
+      stageOrAttach(spark, t, Option.when(spark.catalog.tableExists(t))(()))(
+        graft.plans.LayoutAdvisor.attachDerived(spark, ds, t, _))(
+        graft.plans.LayoutAdvisor.stageDerived(spark, ds, t))
       graft.plans.LayoutAdvisor.Projection.derived(ds, t)
     }
     bucketed ++ clustered
   }
 
-  /** Stage (or fresh-JVM re-attach) one derived-cents projection; the
-    * `_graft_derived` sidecar provides the same drift detection the
-    * bucketed path gets from `_graft_buckets`. */
-  private def stageOrAttachDerived(spark: org.apache.spark.sql.SparkSession,
-      spec: graft.plans.LayoutAdvisor.DerivedSpec, t: String): Unit = {
-    if (spark.catalog.tableExists(t)) return
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    val loc = java.nio.file.Paths.get(wh, t)
+  /** The one attach-or-restage path every staged layout kind shares.
+    * A layout already `present` in this session is returned as is.
+    * Otherwise, when a previous JVM's staging is on disk at `t`'s
+    * warehouse location (the in-memory catalog forgot it, the files
+    * live on), `attach` re-registers it — each kind's attach checks its
+    * own sidecars against THIS session's advice and base data, and
+    * throws IllegalArgumentException on any mismatch (a drifted
+    * advice, a base that grew, a sidecar staged before a line existed).
+    * Everything else clears the stale table and location and stages
+    * from scratch: re-staging is the one recovery. */
+  private def stageOrAttach[A](spark: org.apache.spark.sql.SparkSession, t: String,
+      present: => Option[A])(attach: String => A)(stage: => A): A = present.getOrElse {
+    val loc = java.nio.file.Paths.get(graft.plans.TableStats.warehouseOf(spark), t)
     val t0 = System.nanoTime()
-    if (java.nio.file.Files.exists(loc.resolve("_SUCCESS"))) {
-      try {
-        graft.plans.LayoutAdvisor.attachDerived(spark, spec, t, loc.toString)
-        println(f"[advise] attached $t (${(System.nanoTime() - t0) / 1e9}%.1f s)")
-        return
-      } catch {
-        case e: IllegalArgumentException =>
-          println(s"[advise] $t sidecar mismatch (${e.getMessage.take(80)}…) — re-staging")
-      }
+    def secs = (System.nanoTime() - t0) / 1e9
+    val attached =
+      if (java.nio.file.Files.exists(loc.resolve("_SUCCESS")) &&
+          !spark.catalog.tableExists(t)) {
+        try {
+          val a = attach(loc.toString)
+          println(f"[advise] attached $t ($secs%.1f s)")
+          Some(a)
+        } catch {
+          case e: IllegalArgumentException =>
+            println(s"[advise] $t sidecar mismatch (${e.getMessage.take(80)}…) — re-staging")
+            None
+        }
+      } else None
+    attached.getOrElse {
+      graft.sources.TabularWriter.clearStale(spark, t)
+      val a = stage
+      println(f"[advise] staged $t (one-time write, $secs%.1f s)")
+      a
     }
-    GateFixtures.deleteRecursively(loc)
-    graft.plans.LayoutAdvisor.stageDerived(spark, spec, t)
-    println(f"[advise] staged $t (one-time write, ${(System.nanoTime() - t0) / 1e9}%.1f s)")
   }
 }

@@ -40,19 +40,10 @@ object LayoutGates {
       // time, so the repeated join plans with no exchange (BucketingSpec
       // asserts the plan shape) — the durable co-location answer at
       // 100 TB. Tables staged once per (session, data dir).
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      val (ot, ct) = (s"b_orders$tag", s"b_customer$tag")
-      if (!s.catalog.tableExists(ot)) {
-        // the warehouse dir outlives the JVM but the in-memory catalog
-        // doesn't: clear any stale location or saveAsTable refuses CREATE
-        val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-        Seq(ot, ct).foreach(t =>
-          GateFixtures.deleteRecursively(java.nio.file.Paths.get(wh, t)))
-        Tables.orders(s, d).write.mode("overwrite")
-          .bucketBy(8, "o_custkey").sortBy("o_custkey").saveAsTable(ot)
-        Tables.customer(s, d).write.mode("overwrite")
-          .bucketBy(8, "c_custkey").sortBy("c_custkey").saveAsTable(ct)
-      }
+      val ot = GateFixtures.bucketedTable(s, d, "b_orders")(Tables.orders(s, d)
+        .write.mode("overwrite").bucketBy(8, "o_custkey").sortBy("o_custkey").saveAsTable(_))
+      val ct = GateFixtures.bucketedTable(s, d, "b_customer")(Tables.customer(s, d)
+        .write.mode("overwrite").bucketBy(8, "c_custkey").sortBy("c_custkey").saveAsTable(_))
       s.table(ot).join(s.table(ct), col("o_custkey") === col("c_custkey"))
         .select(col("o_orderkey"), col("o_custkey"), col("c_name"),
           col("c_mktsegment"))

@@ -122,15 +122,20 @@ object Freshness {
       body.getBytes("UTF-8"))
   }
 
-  /** The `(basePath, fingerprint)` a layout at `dir` records, if any. */
-  def readBaseAt(dir: java.nio.file.Path): Option[(String, String)] = {
-    val f = dir.resolve(BaseSidecar)
+  /** The lines of sidecar file `file` beside the files at `dir` (None
+    * when it is absent) — every line-prefixed sidecar
+    * [[writeSidecar]] writes is read back through here. */
+  private[plans] def readSidecar(dir: String, file: String): Option[Seq[String]] = {
+    val f = java.nio.file.Paths.get(dir, file)
     if (!java.nio.file.Files.exists(f)) None
-    else new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-      .split("\n").collectFirst {
-        case l if l.startsWith("base ") => l.stripPrefix("base ").split("\\s+")
-      }.collect { case Array(p, h) => (p, h) }
+    else Some(new String(java.nio.file.Files.readAllBytes(f), "UTF-8").split("\n").toSeq)
   }
+
+  /** The `(basePath, fingerprint)` a layout at `dir` records, if any. */
+  def readBaseAt(dir: java.nio.file.Path): Option[(String, String)] =
+    readSidecar(dir.toString, BaseSidecar).flatMap(_.collectFirst {
+      case l if l.startsWith("base ") => l.stripPrefix("base ").split("\\s+")
+    }).collect { case Array(p, h) => (p, h) }
 
   /** True iff the layout at `dir` has no recorded base (pre-round-12
     * files, fixture tables) or its recorded base still fingerprints

@@ -314,7 +314,6 @@ object LayoutAdvisor {
     * would silently re-shuffle one side at every query. */
   def advise(corpus: Seq[DataFrame], targetBucketBytes: Long = 1L << 30,
       minHits: Int = 1, minBenefitFraction: Double = 0.0): Seq[LayoutSpec] = {
-    require(corpus.nonEmpty, "LayoutAdvisor.advise: empty corpus")
     adviseKeys(corpus, 1, targetBucketBytes, minHits, minBenefitFraction,
       perKeyColumns = false).sortBy(s => (-s.hits, s.table))
   }
@@ -351,6 +350,7 @@ object LayoutAdvisor {
   private def adviseKeys(corpus: Seq[DataFrame], perTable: Int,
       targetBucketBytes: Long, minHits: Int, minBenefitFraction: Double,
       perKeyColumns: Boolean): Seq[LayoutSpec] = {
+    require(corpus.nonEmpty, "LayoutAdvisor.advise/adviseProjections: empty corpus")
     // (path, keyColumn) -> hit count, summed reach fractions (the
     // benefit signal), union of the hitting queries' pruned columns
     val hits = scala.collection.mutable.Map.empty[(String, String), Int]
@@ -623,6 +623,27 @@ object LayoutAdvisor {
     Freshness.writeBase(spark, name, spec.path)
   }
 
+  /** Re-register an already-[[stage]]d / [[stageWithDerived]] layout at
+    * `path` as external catalog table `name` (fresh-JVM path). Requires
+    * the `_graft_buckets` sidecar (nothing else proves the hash key;
+    * [[graft.sources.TabularWriter.attach]] checks count and key against
+    * `spec`), a fresh `_graft_base`, and the `finite` line when `cents`
+    * is non-empty (table properties live in the catalog, not the files).
+    * Any refusal is an IllegalArgumentException: re-stage. */
+  def attach(spark: SparkSession, spec: LayoutSpec, cents: Seq[String],
+      name: String, path: String): Unit = {
+    val sidecar = graft.sources.TabularWriter.BucketSidecar
+    require(java.nio.file.Files.exists(java.nio.file.Paths.get(path, sidecar)),
+      s"attach($name): no $sidecar under $path — re-stage")
+    require(Freshness.verifyBaseAt(spark, java.nio.file.Paths.get(path)),
+      s"attach($name): base data drifted since staging — re-stage")
+    val finite = readFiniteSidecar(path)
+    require(cents.isEmpty || finite.isDefined,
+      s"attach($name): no finite audit recorded for cents — re-stage")
+    graft.sources.TabularWriter.attach(spark, name, path, spec.key, spec.buckets)
+    if (cents.nonEmpty) markDerived(spark, name, cents, finite.get)
+  }
+
   /** One recommended SORT-clustered layout: rewrite `columns` of the
     * table read at `paths`, clustered on `sortCols` — one column →
     * [[graft.sources.TabularWriter.toRangeSorted]] (perfect single-key
@@ -755,8 +776,8 @@ object LayoutAdvisor {
     * expression the stored longs were computed with). */
   val DerivedSidecar = "_graft_derived"
 
-  private def derivedSidecarBody(spec: DerivedSpec): String =
-    s"sort ${spec.sortCol.getOrElse("-")}\ncols ${spec.sourceCols.sorted.mkString(",")}\n"
+  private def derivedSidecarLines(spec: DerivedSpec): Seq[String] =
+    Seq(s"sort ${spec.sortCol.getOrElse("-")}", s"cols ${spec.sourceCols.sorted.mkString(",")}")
 
   /** Stage one derived-cents projection as catalog table `name`: the
     * FULL source schema plus `<col>_cents` longs computed with the
@@ -775,7 +796,8 @@ object LayoutAdvisor {
       shaped.write.mode("overwrite").saveAsTable(name)
     }
     Freshness.writeSidecar(spark, name, DerivedSidecar,
-      derivedSidecarBody(spec) + s"finite ${finite.sorted.mkString(",")}\n")
+      (derivedSidecarLines(spec) :+ s"finite ${finite.sorted.mkString(",")}")
+        .mkString("", "\n", "\n"))
     Freshness.writeBase(spark, name, spec.path)
   }
 
@@ -787,11 +809,10 @@ object LayoutAdvisor {
     * this session's advice would silently serve the wrong projection. */
   def attachDerived(spark: SparkSession, spec: DerivedSpec, name: String,
       path: String): Unit = {
-    val sidecar = java.nio.file.Paths.get(path, DerivedSidecar)
-    val body = if (java.nio.file.Files.exists(sidecar))
-      new String(java.nio.file.Files.readAllBytes(sidecar), "UTF-8") else ""
-    require(body.startsWith(derivedSidecarBody(spec)),
-      s"attachDerived($name): sidecar $sidecar missing or advice drifted — re-stage")
+    require(Freshness.readSidecar(path, DerivedSidecar)
+        .exists(_.startsWith(derivedSidecarLines(spec))),
+      s"attachDerived($name): sidecar $DerivedSidecar under $path missing or " +
+        "advice drifted — re-stage")
     require(Freshness.verifyBaseAt(spark, java.nio.file.Paths.get(path)),
       s"attachDerived($name): base data drifted since staging — re-stage")
     val schema = FileSchemas.read(spark, Seq(path)).schema.toDDL
@@ -816,12 +837,15 @@ object LayoutAdvisor {
     import org.apache.spark.sql.functions.col
     val base = FileSchemas.read(spark, spec.path.split(',').toIndexedSeq)
       .select(spec.columns.map(col): _*)
-    val keep = stageCents(spark, name, base,
-        derivedCols.filter(spec.columns.contains)) { withCents =>
+    val cents = derivedCols.filter(spec.columns.contains)
+    val keep = stageCents(spark, name, base, cents) { withCents =>
       graft.sources.TabularWriter.toBucketedTable(
         withCents, name, spec.key, spec.buckets, sorted = true)
     }
-    if (keep.nonEmpty) writeFiniteSidecar(spark, name, keep)
+    // the finite audit, for [[attach]]'s re-mark (written even when it
+    // declined every column); `_graft_buckets` owns the layout identity
+    if (cents.nonEmpty) Freshness.writeSidecar(spark, name, DerivedSidecar,
+      s"sort -\ncols -\nfinite ${keep.sorted.mkString(",")}\n")
     Freshness.writeBase(spark, name, spec.path)
   }
 
@@ -860,7 +884,7 @@ object LayoutAdvisor {
   /** The NaN/±Inf audit behind [[RewriteStoredCents.FiniteProperty]]:
     * returns the subset of `cols` with no non-finite value (one narrow
     * aggregate pass; an empty table is vacuously finite). */
-  private[graft] def auditFinite(df: DataFrame, cols: Seq[String]): Seq[String] = {
+  private def auditFinite(df: DataFrame, cols: Seq[String]): Seq[String] = {
     import org.apache.spark.sql.functions.{col, isnan, lit, max, when}
     if (cols.isEmpty) return cols
     val flags = cols.map(c => max(when(
@@ -872,27 +896,14 @@ object LayoutAdvisor {
     }
   }
 
-  /** Persist the finite audit beside a bucketed+cents table's files so
-    * a fresh-JVM re-attach restores [[RewriteStoredCents.FiniteProperty]]
-    * without re-scanning (sort/cols lines are `-`: the bucket sidecar
-    * `_graft_buckets` owns the layout identity for these tables). */
-  private[graft] def writeFiniteSidecar(spark: SparkSession, table: String,
-      finite: Seq[String]): Unit =
-    Freshness.writeSidecar(spark, table, DerivedSidecar,
-      s"sort -\ncols -\nfinite ${finite.sorted.mkString(",")}\n")
-
   /** Read a [[DerivedSidecar]]'s finite line at `path` (None when the
     * sidecar or line is absent — e.g. files staged before the audit
-    * existed, which then must re-audit or stay decimal-rewrite-free). */
-  private[graft] def readFiniteSidecar(path: String): Option[Seq[String]] = {
-    val sidecar = java.nio.file.Paths.get(path, DerivedSidecar)
-    if (!java.nio.file.Files.exists(sidecar)) None
-    else new String(java.nio.file.Files.readAllBytes(sidecar), "UTF-8")
-      .split("\n").collectFirst {
-        case l if l.startsWith("finite ") => l.stripPrefix("finite ")
-          .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      }
-  }
+    * existed, which then re-stage). */
+  private def readFiniteSidecar(path: String): Option[Seq[String]] =
+    Freshness.readSidecar(path, DerivedSidecar).flatMap(_.collectFirst {
+      case l if l.startsWith("finite ") => l.stripPrefix("finite ")
+        .split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    })
 
   /** Set both [[RewriteStoredCents]] properties on `table`: `cents`
     * names the source columns whose stored `<col>_cents` the rule treats

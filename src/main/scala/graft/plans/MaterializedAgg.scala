@@ -142,27 +142,15 @@ object MaterializedAggs extends LayoutRegistry {
       .mkString("", "\n", "\n")
   }
 
-  /** The staged base-file inventory a rollup sidecar records (empty for
-    * pre-refresh sidecars — refresh then declines to full re-stage). */
-  private def stagedInventory(dir: java.nio.file.Path): Seq[String] = {
-    val sidecar = dir.resolve(RollupSidecar)
-    if (!java.nio.file.Files.exists(sidecar)) Nil
-    else new String(java.nio.file.Files.readAllBytes(sidecar), "UTF-8")
-      .split("\n").toSeq.collect {
-        case l if l.startsWith("file\t") => l.stripPrefix("file\t")
-      }
-  }
-
   /** Parse a staged rollup's sidecar at `path` into the [[Meta]] it
     * records (no registration, no validation — the durable Meta form
     * for same-JVM memoized fixtures; [[attachRollup]] adds the drift
     * and freshness guards). */
   def metaFromSidecar(catalogTable: String, path: String): Meta = {
-    val sidecar = java.nio.file.Paths.get(path, RollupSidecar)
-    require(java.nio.file.Files.exists(sidecar),
-      s"rollup sidecar $sidecar missing — re-stage")
-    val lines = new String(java.nio.file.Files.readAllBytes(sidecar), "UTF-8")
-      .split("\n").toSeq.filter(_.nonEmpty)
+    val lines = Freshness.readSidecar(path, RollupSidecar).getOrElse(
+      throw new IllegalArgumentException(
+        s"rollup sidecar ${java.nio.file.Paths.get(path, RollupSidecar)} missing — re-stage"))
+      .filter(_.nonEmpty)
     def line(prefix: String): String = lines.collectFirst {
       case l if l.startsWith(prefix + " ") => l.stripPrefix(prefix + " ")
     }.getOrElse(throw new IllegalArgumentException(
@@ -251,10 +239,10 @@ object MaterializedAggs extends LayoutRegistry {
     * any non-append drift (a staged file missing or resized — the
     * delta is then not well-defined).
     *
-    * The swap mirrors [[graft.sources.TabularWriter.compactBuckets]]'s
-    * rename-aside discipline: every crash window keeps both copies on
-    * disk, and the post-swap window before the new sidecar lands is
-    * safe by construction — the registered fingerprint no longer
+    * The swap is [[graft.sources.TabularWriter.swap]]'s rename-aside
+    * (`__refreshing`/`__prerefresh`): every crash window keeps both
+    * copies on disk, and the post-swap window before the new sidecar
+    * lands is safe by construction — the registered fingerprint no longer
     * matches the live base, so the rewrite declines rather than serve
     * a half-refreshed table. Returns (and registers) the refreshed
     * Meta; a no-op when the base is unchanged. */
@@ -262,7 +250,9 @@ object MaterializedAggs extends LayoutRegistry {
     import org.apache.spark.sql.functions.{col, expr, max, min, sum}
     val ident = org.apache.spark.sql.catalyst.TableIdentifier(meta.catalogTable)
     val cat = spark.sessionState.catalog.getTableMetadata(ident)
-    val staged = stagedInventory(java.nio.file.Paths.get(cat.location.getPath))
+    // the staged base-file inventory (absent in pre-refresh sidecars)
+    val staged = Freshness.readSidecar(cat.location.getPath, RollupSidecar)
+      .getOrElse(Nil).collect { case l if l.startsWith("file\t") => l.stripPrefix("file\t") }
     require(staged.nonEmpty,
       s"refreshRollup(${meta.catalogTable}): sidecar records no file " +
         "inventory (pre-refresh staging) — re-stage")
@@ -306,25 +296,11 @@ object MaterializedAggs extends LayoutRegistry {
         .select(orderedCols: _*)
       val spec = cat.bucketSpec.getOrElse(sys.error(
         s"refreshRollup(${meta.catalogTable}): not a bucketed table"))
-      val tmp = meta.catalogTable + "__refreshing"
-      spark.sql(s"DROP TABLE IF EXISTS `$tmp`")
-      val hconf = spark.sparkContext.hadoopConfiguration
-      val tmpLoc = new org.apache.hadoop.fs.Path(
-        spark.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(tmp)))
-      val fs = tmpLoc.getFileSystem(hconf)
-      if (fs.exists(tmpLoc)) fs.delete(tmpLoc, true)
-      graft.sources.TabularWriter.toBucketedTable(
-        merged, tmp, spec.bucketColumnNames.head, spec.numBuckets, sorted = true)
-      val aside = meta.catalogTable + "__prerefresh"
-      spark.sql(s"DROP TABLE IF EXISTS `$aside`")
-      val asideLoc = new org.apache.hadoop.fs.Path(
-        spark.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(aside)))
-      if (fs.exists(asideLoc)) fs.delete(asideLoc, true)
-      spark.sql(s"ALTER TABLE `${meta.catalogTable}` RENAME TO `$aside`")
-      spark.sql(s"ALTER TABLE `$tmp` RENAME TO `${meta.catalogTable}`")
-      spark.sql(s"DROP TABLE `$aside`")
+      graft.sources.TabularWriter.swap(spark, meta.catalogTable,
+          "__refreshing", "__prerefresh") { tmp =>
+        graft.sources.TabularWriter.toBucketedTable(
+          merged, tmp, spec.bucketColumnNames.head, spec.numBuckets, sorted = true)
+      }
       val fresh = meta.copy(fingerprint = Freshness.ofEntries(live))
       Freshness.writeSidecar(spark, meta.catalogTable, RollupSidecar,
         sidecarBody(fresh, live))

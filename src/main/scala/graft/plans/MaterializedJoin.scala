@@ -203,10 +203,8 @@ object MaterializedJoins extends LayoutRegistry {
   def metaFromSidecar(catalogTable: String, path: String): (Meta, String) = {
     def bad(what: String) = new IllegalArgumentException(
       s"$catalogTable: denorm sidecar $what — re-stage")
-    val sidecar = java.nio.file.Paths.get(path, DenormSidecar)
-    if (!java.nio.file.Files.exists(sidecar)) throw bad(s"$sidecar missing")
-    val lines = new String(java.nio.file.Files.readAllBytes(sidecar), "UTF-8")
-      .split("\n").toSeq
+    val lines = Freshness.readSidecar(path, DenormSidecar).getOrElse(
+      throw bad(s"${java.nio.file.Paths.get(path, DenormSidecar)} missing"))
     def line(prefix: String): String = lines.collectFirst {
       case l if l.startsWith(prefix + " ") => l.stripPrefix(prefix + " ")
     }.getOrElse(throw bad(s"missing '$prefix' line"))

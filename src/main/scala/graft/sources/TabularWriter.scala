@@ -133,71 +133,74 @@ object TabularWriter {
     * restoring the streaming SortAggregate / no-query-time-sort plans
     * after [[appendToBucketedTable]] calls have accumulated files. The
     * rewrite is a single data pass with NO exchange on the read side
-    * (the scan is already bucketed) and lands via a RENAME-ASIDE swap
-    * (table → `__precompact`, compacted → table, drop aside): every
-    * crash window keeps BOTH copies on disk — the worst outcome is a
-    * missing table name, recoverable by renaming the aside copy back —
-    * unlike a drop-then-rename, whose managed-table DROP would delete
-    * the only committed copy before the rename ran.
+    * (the scan is already bucketed) and lands via [[swap]] (table →
+    * `__precompact`, compacted `__compacting` → table, drop aside).
     * Cost model at 100 TB: one sequential rewrite of the table — the
     * same price as the original layout write — amortized over every
     * append since the last compaction (LSM economics). */
   def compactBuckets(spark: SparkSession, table: String): Unit = {
-    import org.apache.spark.sql.catalyst.TableIdentifier
     val spec = bucketSpecOf(spark, table)
     val key = spec.bucketColumnNames.head
-    val tmp = table + "__compacting"
-    // clear BOTH the catalog entry and any stale on-disk location a
-    // crashed previous compaction left behind (the warehouse dir
-    // outlives the catalog; CREATE fails on a dead location otherwise)
-    spark.sql(s"DROP TABLE IF EXISTS `$tmp`")
-    val tmpLoc = new Path(spark.sessionState.catalog
-      .defaultTablePath(TableIdentifier(tmp)))
-    val fs = tmpLoc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(tmpLoc)) fs.delete(tmpLoc, true)
-    // Force the BUCKETED scan for the rewrite. A V1 write declares no
-    // distribution requirement, so DisableUnnecessaryBucketedScan would
-    // plan a per-FILE scan — while the repartition inside
-    // toBucketedTable is simultaneously elided because the logical
-    // relation reports the matching hash partitioning — and each
-    // file-task would write its own per-bucket file: the compaction
-    // would REPRODUCE the multi-file state it exists to fix (observed,
-    // not hypothetical). With the bucketed scan pinned on, the plan is
-    // one task per bucket merging that bucket's files: a single pass,
-    // ZERO exchange — compaction costs IO, not a shuffle.
-    val auto = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prev = spark.conf.get(auto)
-    spark.conf.set(auto, "false")
-    try toBucketedTable(spark.table(table), tmp, key, spec.numBuckets, sorted = true)
-    finally spark.conf.set(auto, prev)
-    // swap via rename-aside, NOT drop-then-rename: a managed-table DROP
-    // deletes its data, so a crash between DROP and RENAME would leave
-    // the compacted copy as the ONLY copy under the wrong name. With
-    // rename-aside every crash window keeps BOTH copies on disk — the
-    // worst outcome is a missing table name recoverable by renaming
-    // `table__precompact` (or `table__compacting`) back.
-    // RECOVERY RUNBOOK (a crash between the two renames leaves no table
-    // under `table`, but BOTH copies on disk): `ALTER TABLE
-    // `<table>__precompact` RENAME TO `<table>`` restores the
-    // pre-compaction original; the compacted copy under
-    // `<table>__compacting` can then be dropped or swapped in manually.
-    // BucketingSpec drives exactly this crash (via compactCrashHook)
-    // and proves the recovery.
-    val old = table + "__precompact"
-    spark.sql(s"DROP TABLE IF EXISTS `$old`")
-    val oldLoc = new Path(spark.sessionState.catalog
-      .defaultTablePath(TableIdentifier(old)))
-    if (fs.exists(oldLoc)) fs.delete(oldLoc, true)
-    spark.sql(s"ALTER TABLE `$table` RENAME TO `$old`")
-    compactCrashHook()
-    spark.sql(s"ALTER TABLE `$tmp` RENAME TO `$table`")
-    spark.sql(s"DROP TABLE `$old`")
+    swap(spark, table, "__compacting", "__precompact") { tmp =>
+      // Force the BUCKETED scan for the rewrite. A V1 write declares no
+      // distribution requirement, so DisableUnnecessaryBucketedScan would
+      // plan a per-FILE scan — while the repartition inside
+      // toBucketedTable is simultaneously elided because the logical
+      // relation reports the matching hash partitioning — and each
+      // file-task would write its own per-bucket file: the compaction
+      // would REPRODUCE the multi-file state it exists to fix (observed,
+      // not hypothetical). With the bucketed scan pinned on, the plan is
+      // one task per bucket merging that bucket's files: a single pass,
+      // ZERO exchange — compaction costs IO, not a shuffle.
+      val auto = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+      val prev = spark.conf.get(auto)
+      spark.conf.set(auto, "false")
+      try toBucketedTable(spark.table(table), tmp, key, spec.numBuckets, sorted = true)
+      finally spark.conf.set(auto, prev)
+    }
   }
 
-  /** Test-only injection point: invoked between [[compactBuckets]]'s
-    * two renames — the widest crash window the swap has. Production
-    * no-op. */
+  /** Replace catalog table `table` in place with what `write` creates
+    * under `table + tmpSuffix` — the one RENAME-ASIDE swap
+    * ([[compactBuckets]], `MaterializedAggs.refreshRollup`): clear a
+    * stale tmp, write tmp, clear a stale aside, rename `table` aside,
+    * rename tmp in, drop the aside copy. Not drop-then-rename: a
+    * managed-table DROP deletes its data, so a crash between the two
+    * would leave the new copy as the ONLY copy under the wrong name;
+    * here every crash window keeps BOTH copies on disk.
+    * RECOVERY RUNBOOK (a crash between the renames leaves no `table`):
+    * `ALTER TABLE `<table><asideSuffix>` RENAME TO `<table>`` restores
+    * the original; the new copy under `<table><tmpSuffix>` can be
+    * dropped or swapped in by hand, and the next swap clears it anyway.
+    * [[compactCrashHook]] fires in that window — BucketingSpec
+    * (compaction) and MaterializedAggSpec (refresh) prove the recovery. */
+  private[graft] def swap(spark: SparkSession, table: String, tmpSuffix: String,
+      asideSuffix: String)(write: String => Unit): Unit = {
+    val (tmp, aside) = (table + tmpSuffix, table + asideSuffix)
+    clearStale(spark, tmp)
+    write(tmp)
+    clearStale(spark, aside)
+    spark.sql(s"ALTER TABLE `$table` RENAME TO `$aside`")
+    compactCrashHook()
+    spark.sql(s"ALTER TABLE `$tmp` RENAME TO `$table`")
+    spark.sql(s"DROP TABLE `$aside`")
+  }
+
+  /** Test-only injection point: invoked between [[swap]]'s two renames
+    * — the widest crash window the swap has. Production no-op. */
   private[graft] var compactCrashHook: () => Unit = () => ()
+
+  /** Drop catalog table `table` if registered and delete its default
+    * warehouse location: the warehouse outlives the in-memory catalog,
+    * and CREATE / saveAsTable refuse a location a previous JVM or a
+    * crashed swap left behind. */
+  private[graft] def clearStale(spark: SparkSession, table: String): Unit = {
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    spark.sql(s"DROP TABLE IF EXISTS `$table`")
+    val loc = new Path(spark.sessionState.catalog.defaultTablePath(TableIdentifier(table)))
+    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(loc)) fs.delete(loc, true)
+  }
 
   /** Register ALREADY-STAGED bucketed data (written by a previous
     * session's [[toBucketedTable]]) as an EXTERNAL catalog table — no
@@ -220,10 +223,7 @@ object TabularWriter {
     // parallelism floor and attaching the old files with the new count)
     val loc = new Path(path)
     val pfs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bucketId = "_(\\d{5})\\.".r
-    val ids = pfs.listStatus(loc).map(_.getPath.getName)
-      .filter(n => !n.startsWith("_") && !n.startsWith("."))
-      .flatMap(n => bucketId.findFirstMatchIn(n).map(_.group(1).toInt))
+    val ids = bucketIds(spark, loc)
     require(ids.nonEmpty,
       s"attach($table): no bucketed data files under $path")
     require(ids.max < buckets,
@@ -273,19 +273,23 @@ object TabularWriter {
       s"$table is not a bucketed table (use toBucketedTable to create one)"))
   }
 
-  /** Asserts every bucket of `table` is one data file — the physical
-    * precondition for the scan to report its per-bucket sort order.
-    * One directory listing; bucket ids parsed from the writer's
-    * `part-NNNNN-<uuid>_<bucketId>.c000…` naming. */
-  private[graft] def assertOneFilePerBucket(spark: SparkSession, table: String): Unit = {
-    import org.apache.spark.sql.catalyst.TableIdentifier
-    val loc = new Path(spark.sessionState.catalog
-      .getTableMetadata(TableIdentifier(table)).location)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** Bucket id of every data file directly under `loc` (one listing;
+    * ids parsed from the writer's `part-NNNNN-<uuid>_<bucketId>.c000…`
+    * naming, `_`/`.`-prefixed entries skipped like the scan skips them). */
+  private def bucketIds(spark: SparkSession, loc: Path): Seq[Int] = {
     val bucketId = "_(\\d{5})\\.".r
-    val ids = fs.listStatus(loc).map(_.getPath.getName)
+    loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(loc).toSeq.map(_.getPath.getName)
       .filter(n => !n.startsWith("_") && !n.startsWith("."))
       .flatMap(n => bucketId.findFirstMatchIn(n).map(_.group(1).toInt))
+  }
+
+  /** Asserts every bucket of `table` is one data file — the physical
+    * precondition for the scan to report its per-bucket sort order. */
+  private[graft] def assertOneFilePerBucket(spark: SparkSession, table: String): Unit = {
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    val ids = bucketIds(spark, new Path(spark.sessionState.catalog
+      .getTableMetadata(TableIdentifier(table)).location))
     val dup = ids.groupBy(identity).collect { case (id, fs) if fs.length > 1 => id }
     require(dup.isEmpty,
       s"toBucketedTable($table): bucket(s) ${dup.toSeq.sorted.mkString(",")} have " +

@@ -219,6 +219,21 @@ class AdvisorSpec extends GraftSpec {
       .find(_.table == "orders").get.columns.contains("o_totalprice"))
   }
 
+  test("every advise entry point rejects an empty corpus with an explanatory message") {
+    val none = Seq.empty[org.apache.spark.sql.DataFrame]
+    val calls: Seq[(String, () => Any)] = Seq(
+      "advise" -> (() => LayoutAdvisor.advise(none)),
+      "adviseProjections" -> (() => LayoutAdvisor.adviseProjections(none, perTable = 2)),
+      "adviseSorted" -> (() => LayoutAdvisor.adviseSorted(none)),
+      "adviseDerivedCents" -> (() => LayoutAdvisor.adviseDerivedCents(none)),
+      "adviseDenormalized" -> (() => LayoutAdvisor.adviseDenormalized(none)),
+      "adviseAggRollups" -> (() => LayoutAdvisor.adviseAggRollups(none)))
+    for ((name, call) <- calls) {
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("empty corpus"), s"$name: ${e.getMessage}")
+    }
+  }
+
   test("adviseSorted: hottest filter column range-sorts; a second hot column z-orders") {
     val or = Tables.orders(spark, sf)
     // o_orderdate: 2 range hits; o_totalprice: 1 — date wins slot one

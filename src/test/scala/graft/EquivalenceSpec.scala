@@ -31,7 +31,6 @@ class EquivalenceSpec extends GraftSpec {
   }
 
   test("dualModuloShard is a bijection onto (node, device) pairs") {
-    import spark.implicits._
     val (node, dev) = Partitioners.dualModuloShard(col("id"), 4, 2)
     val got = spark.range(0, 16).toDF("id")
       .select(col("id"), node.as("n"), dev.as("d"))

@@ -124,7 +124,6 @@ class LlmPrepSpec extends GraftSpec {
   }
 
   test("kmvOverlap: exact when k covers the union; inside the envelope when sketched") {
-    import spark.implicits._
     // A = [0, 600), B = [400, 1000): |A∩B| = 200, |A∪B| = 1000, J = 0.2
     val a = spark.range(0, 600).toDF("k")
     val b = spark.range(400, 1000).toDF("k")

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
-import graft.plans.{LayoutAdvisor, MaterializedAggs}
+import graft.plans.{FileLeaf, LayoutAdvisor, MaterializedAggs}
 
 /** [[graft.plans.RewriteMaterializedAgg]]: a staged per-key rollup must
   * serve every covered aggregate/key-set shape EXACTLY — firing tests
@@ -89,12 +89,7 @@ class MaterializedAggSpec extends GraftSpec {
       assert(fired(q), s"rollup must serve:\n${q.queryExecution.optimizedPlan}")
       // the replaced subtree reads NO fact-grain lineitem at all
       val readsFact = q.queryExecution.optimizedPlan.collectFirst {
-        case lr: org.apache.spark.sql.execution.datasources.LogicalRelation
-            if lr.relation.isInstanceOf[
-              org.apache.spark.sql.execution.datasources.HadoopFsRelation] &&
-              lr.relation.asInstanceOf[
-                org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-                .location.rootPaths.map(_.toString).mkString(",") == liPath => lr
+        case FileLeaf(lr, _, key) if key == liPath => lr
       }
       assert(readsFact.isEmpty, "fact-grain read must be gone")
     }
@@ -337,7 +332,6 @@ class MaterializedAggSpec extends GraftSpec {
     * first, predicate columns appended sorted) so the predicates
     * become key-only at rewrite time. */
   private lazy val compositeMetas: Seq[MaterializedAggs.Meta] = {
-    import org.apache.spark.sql.types.TimestampType
     val li = Tables.lineitem(spark, sf)
     val corpus = Seq(
       // q1 shape: two-column grouping + a discount bound (11 distinct
@@ -382,12 +376,7 @@ class MaterializedAggSpec extends GraftSpec {
         s"coarser-grain serve must fire:\n${q.queryExecution.optimizedPlan}")
       // the served plan reads NO fact-grain lineitem
       val readsFact = q.queryExecution.optimizedPlan.exists {
-        case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          lr.relation.isInstanceOf[
-            org.apache.spark.sql.execution.datasources.HadoopFsRelation] &&
-          lr.relation.asInstanceOf[
-            org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-            .location.rootPaths.map(_.toString).mkString(",") == liPath
+        case FileLeaf(_, _, key) => key == liPath
         case _ => false
       }
       assert(!readsFact, "fact-grain read must be gone")
@@ -530,6 +519,49 @@ class MaterializedAggSpec extends GraftSpec {
     spark.catalog.refreshByPath(base)
     intercept[IllegalArgumentException] {
       MaterializedAggs.refreshRollup(spark, fresh)
+    }
+  }
+
+  test("refreshRollup crash window: both copies survive, the rewrite declines, the aside copy restores") {
+    import graft.sources.TabularWriter
+    val dir = java.nio.file.Files.createTempDirectory("maspec_refresh_crash")
+    sys.addShutdownHook(GateFixtures.deleteRecursively(dir))
+    val base = dir.resolve("fact").toString
+    Tables.lineitem(spark, sf).limit(500).write.mode("overwrite").parquet(base)
+    def corpusQ = spark.read.parquet(base).groupBy(col("l_orderkey"))
+      .agg(sum(cents("l_quantity")).as("qty"))
+    val spec = LayoutAdvisor.adviseAggRollups(Seq(corpusQ), minHits = 1).head
+    val name = "maspec_refresh_crash"
+    val names = Seq(name, name + "__refreshing", name + "__prerefresh")
+    names.foreach(TabularWriter.clearStale(spark, _))
+    val m = MaterializedAggs.stageRollup(spark, spec, name)
+    MaterializedAggs.deregister(name)
+    val before = rows(spark.table(name))
+    Tables.lineitem(spark, sf).limit(800).write.mode("append").parquet(base)
+    spark.catalog.refreshByPath(base)
+    try {
+      // crash in the WIDEST window: the staged rollup renamed aside,
+      // the merged copy not yet under its name
+      TabularWriter.compactCrashHook = () => throw new RuntimeException("injected crash")
+      val e = intercept[RuntimeException](MaterializedAggs.refreshRollup(spark, m))
+      assert(e.getMessage === "injected crash")
+      TabularWriter.compactCrashHook = () => ()
+      assert(!spark.catalog.tableExists(name))
+      assert(spark.catalog.tableExists(s"${name}__prerefresh"))
+      assert(spark.catalog.tableExists(s"${name}__refreshing"))
+      // the registered meta still carries the pre-append fingerprint:
+      // the rewrite declines on drift, before it looks for the table
+      withMeta(m)(assert(!MaterializedAggs.fired(corpusQ, name),
+        s"a crashed refresh must not serve:\n${corpusQ.queryExecution.optimizedPlan}"))
+      // the documented recovery restores the exact pre-refresh rows
+      spark.sql(s"ALTER TABLE `${name}__prerefresh` RENAME TO `$name`")
+      assert(rows(spark.table(name)) === before)
+      withMeta(m)(assert(!MaterializedAggs.fired(corpusQ, name),
+        "the restored pre-refresh rollup is still stale and must decline"))
+    } finally {
+      TabularWriter.compactCrashHook = () => ()
+      MaterializedAggs.deregister(name)
+      names.foreach(TabularWriter.clearStale(spark, _))
     }
   }
 

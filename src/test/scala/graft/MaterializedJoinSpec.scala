@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.plans.{LayoutAdvisor, MaterializedJoins, RewriteMaterializedJoin}
-import graft.plans.MaterializedJoins.{DimMeta, Meta}
+import graft.plans.{LayoutAdvisor, MaterializedJoins}
+import graft.plans.MaterializedJoins.Meta
 
 /** [[graft.plans.RewriteMaterializedJoin]]: the pre-joined projection
   * must serve every covered join subtree EXACTLY — every firing test

@@ -8,7 +8,6 @@ class OperatorsSpec extends GraftSpec {
   lazy val events = Tables.events(spark, sf)
 
   test("partitionByModulo co-locates each shard in one partition") {
-    import spark.implicits._
     val parted = Partitioners.partitionByModulo(events, col("user_id"), 8)
     val placement = parted
       .select(Partitioners.shardId(col("user_id"), 8).as("shard"))

@@ -23,7 +23,6 @@ class SamplingSpec extends GraftSpec {
   }
 
   test("splitAssign partitions exactly, near the fractions, stable under growth") {
-    import spark.implicits._
     val docs = Tables.documents(spark, sf)
     val fr = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)
     val out = Sampling.splitAssign(docs.select(col("doc_id")), col("doc_id"), fr, 7L)

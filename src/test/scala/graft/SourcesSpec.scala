@@ -122,7 +122,6 @@ class SourcesSpec extends GraftSpec {
     // append rejected), so the FileOutputCommitter v1 task-commit +
     // job-commit rename chain and the Hive-layout partitioned write run
     // against object-store behavior end-to-end.
-    import spark.implicits._
     import graft.sources.{TabularReader, TabularWriter}
     spark.sparkContext.hadoopConfiguration
       .set("fs.graftoss.impl", classOf[GraftObjectStoreFs].getName)
@@ -188,7 +187,6 @@ class SourcesSpec extends GraftSpec {
   }
 
   test("validateFiles reports a duplicate-name file as ITS mismatch, not a crash") {
-    import spark.implicits._
     val dir = Files.createTempDirectory("graft_dupcols").toString
     spark.range(1).select(lit(1L).as("a"), lit(2L).as("x")).write.parquet(dir + "/ok")
     // writing case-colliding columns needs case-sensitive resolution on

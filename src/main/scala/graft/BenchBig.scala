@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Headline benches over the [[MakeBigData]] layout, measured the same
@@ -63,38 +64,48 @@ object BenchBig {
       }
       else Headline
     val reps = if (args.length > 2) args(2).toInt else 3
+    require(reps >= 1, s"reps must be at least 1, got $reps")
+    SparkEntry.requireKnown(names)
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    try {
+      val best = bestOf(names, reps)(n => timeReduced(spark)(SparkEntry.queries(n)(spark, dir)))
+      println(s"""{"metric":"big","queries":${json(best)},"sf":${JsonOut.q(dir)}}""")
+    } finally spark.stop()
+  }
 
-    def once(name: String): Double = {
-      val t0 = System.nanoTime()
-      val df = SparkEntry.queries(name)(spark, dir)
-      // double sum: overflow-free on both engines (DuckDB's integer sum
-      // widens to HUGEINT; Spark's long sum would throw under ANSI)
-      df.select(sum(xxhash64(df.columns.map(col): _*).cast("double")).as("h"))
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+  /** Seconds to build `df` and reduce its full output engine-side to one
+    * `sum(xxhash64(row))` row into the `noop` sink, followed by UNTIMED
+    * session hygiene: the llm/rel lists include localCheckpoint-ing
+    * queries (clustering, pagerank, IVF, tf-idf) whose checkpoint blocks
+    * would otherwise accumulate across ~190 executions at 50-200x data
+    * scale and steal unified memory from late-alphabet measurements (the
+    * exact distortion GraftSession.clearSessionState documents). */
+  def timeReduced(spark: SparkSession)(df: => DataFrame): Double = {
+    val t0 = System.nanoTime()
+    val built = df
+    // double sum: overflow-free on both engines (DuckDB's integer sum
+    // widens to HUGEINT; Spark's long sum would throw under ANSI)
+    built.select(sum(xxhash64(built.columns.map(col): _*).cast("double")).as("h"))
+      .write.format("noop").mode("overwrite").save()
+    val dt = (System.nanoTime() - t0) / 1e9
+    GraftSession.clearSessionState(spark)
+    dt
+  }
 
-    // UNTIMED session hygiene between runs: the llm/rel lists include
-    // localCheckpoint-ing queries (clustering, pagerank, IVF, tf-idf)
-    // whose checkpoint blocks would otherwise accumulate across ~190
-    // executions at 50-200x data scale and steal unified memory from
-    // late-alphabet measurements (the exact distortion
-    // GraftSession.clearSessionState documents)
-    def clean(name: String): Double = {
-      val dt = once(name)
-      GraftSession.clearSessionState(spark)
-      dt
-    }
-    names.foreach(clean) // warm-up: JVM/codegen + page cache
-    val all = names.map(n => n -> (1 to reps).map(_ => clean(n)))
-    val results = all.map { case (k, v) => k -> v.min }
-    val qs = results.map { case (k, v) => JsonOut.q(k) + ":" + v }.mkString("{", ",", "}")
-    println(s"""{"metric":"big","queries":$qs,"sf":${JsonOut.q(dir)}}""")
+  /** One untimed warm-up pass over `names` (JVM/codegen + page cache),
+    * then the best of `reps` runs of each; every rep goes to stderr as
+    * one `{"reps":{name:[s,...]}}` line. */
+  def bestOf(names: Seq[String], reps: Int)(run: String => Double): Seq[(String, Double)] = {
+    names.foreach(run)
+    val all = names.map(n => n -> (1 to reps).map(_ => run(n)))
     val rs = all.map { case (k, v) =>
       JsonOut.q(k) + ":" + v.map(t => f"$t%.3f").mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     System.err.println(s"""{"reps":$rs}""")
-    spark.stop()
+    all.map { case (k, v) => k -> v.min }
   }
+
+  /** `{name:seconds,...}` in `best`'s order. */
+  def json(best: Seq[(String, Double)]): String =
+    best.map { case (k, v) => JsonOut.q(k) + ":" + v }.mkString("{", ",", "}")
 }

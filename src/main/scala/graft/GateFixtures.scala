@@ -4,6 +4,8 @@ import java.nio.file.{Files, Path}
 import java.util.Comparator
 import java.util.concurrent.ConcurrentHashMap
 
+import graft.gates.Shared.cents
+
 /** One-time staging of derived gate fixtures (ORC/compressed/nested
   * copies of the test tables). Gate queries are (SparkSession, dir) =>
   * DataFrame functions invoked repeatedly — by Verify, by every Bench
@@ -249,10 +251,9 @@ private[graft] object GateFixtures {
     * whole-table oracle computed from the raw doubles. */
   def derivedCentsLineitem(s: org.apache.spark.sql.SparkSession, d: String): String =
     bucketedTable(s, d, "dc_lineitem") { name =>
-      import org.apache.spark.sql.functions.{broadcast, col, lit, round, sum, when}
+      import org.apache.spark.sql.functions.{broadcast, col, lit, sum, when}
       import org.apache.spark.sql.types.{DoubleType, TimestampType}
       val li = Tables.lineitem(s, d)
-      val cents = (c: String) => round(col(c) * 100).cast("long")
       val revE4 = cents("l_extendedprice") * (lit(100L) - cents("l_discount"))
       val corpus = Seq(
         li.filter(col("l_shipdate") <= lit("1998-09-01").cast(TimestampType))
@@ -284,9 +285,8 @@ private[graft] object GateFixtures {
     * bucket to remove). All three REQUIREs pin the router; the gate's
     * oracle pins the data. Returns the cents catalog table. */
   def routedCentsLineitem(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    import org.apache.spark.sql.functions.{col, count, lit, round, sum}
+    import org.apache.spark.sql.functions.{col, count, lit, sum}
     import org.apache.spark.sql.types.{DoubleType, TimestampType}
-    val cents = (c: String) => round(col(c) * 100).cast("long")
     val ts = (x: String) => lit(x).cast(TimestampType)
     def q15ish = Tables.lineitem(s, d)
       .filter(col("l_shipdate") >= ts("1996-01-01") && col("l_shipdate") < ts("1996-04-01"))
@@ -348,12 +348,11 @@ private[graft] object GateFixtures {
     * would silently rewrite every other gate over these base paths). */
   def denormStar(s: org.apache.spark.sql.SparkSession, d: String)
       : graft.plans.MaterializedJoins.Meta = {
-    import org.apache.spark.sql.functions.{col, count, lit, round, sum}
+    import org.apache.spark.sql.functions.{col, count, lit, sum}
     val li = Tables.lineitem(s, d)
     val o = Tables.orders(s, d)
     val c = Tables.customer(s, d)
     lazy val spec = {
-      val cents = (n: String) => round(col(n) * 100).cast("long")
       val corpus = Seq(
         li.join(o, col("l_orderkey") === col("o_orderkey"))
           .groupBy(col("l_orderkey"))
@@ -398,9 +397,8 @@ private[graft] object GateFixtures {
     * MaterializedAggs.withRegistered. */
   def aggRollup(s: org.apache.spark.sql.SparkSession, d: String)
       : graft.plans.MaterializedAggs.Meta = {
-    import org.apache.spark.sql.functions.{col, count, lit, round, sum}
+    import org.apache.spark.sql.functions.{col, count, lit, sum}
     lazy val spec = {
-      val cents = (n: String) => round(col(n) * 100).cast("long")
       val li = Tables.lineitem(s, d)
       val o = Tables.orders(s, d)
       val corpus = Seq(
@@ -433,9 +431,8 @@ private[graft] object GateFixtures {
     * grain. REQUIREs pin the advised key sets. */
   def aggReagg(s: org.apache.spark.sql.SparkSession, d: String)
       : Seq[graft.plans.MaterializedAggs.Meta] = {
-    import org.apache.spark.sql.functions.{col, count, lit, round, sum}
+    import org.apache.spark.sql.functions.{col, count, lit, sum}
     lazy val specs = {
-      val cents = (n: String) => round(col(n) * 100).cast("long")
       val li = Tables.lineitem(s, d)
       val corpus = Seq(
         // the folded filter column is l_discount (11 distinct at every

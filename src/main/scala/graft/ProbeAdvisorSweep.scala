@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.functions._
+import graft.plans.{LayoutAdvisor, MaterializedAggs, MaterializedJoins}
+import org.apache.spark.sql.SparkSession
 
 /** The advisor END-TO-END relational sweep (round-10): feed the FULL
   * 17-query q* suite to LayoutAdvisor as its corpus, stage exactly what
@@ -17,209 +18,172 @@ import org.apache.spark.sql.functions._
   * process-interleaved protocol runs (fresh JVM per rep) don't re-pay
   * the layout write.
   *
-  * Usage: runMain graft.ProbeAdvisorSweep [dataDir] [reps] [layout|flat|check] [names]
-  * Prints one BenchBig-shaped JSON line; `flat` runs the identical
-  * suite without redirects (the A/B control in the same harness);
-  * `check` runs every query BOTH ways and asserts row-identical
-  * results (the rel suite is integer-exact by construction, so exact
-  * equality is the contract, not a tolerance).
+  * Usage: runMain graft.ProbeAdvisorSweep [dataDir] [reps] [mode] [names]
+  * A mode is a layout setup × an action ([[Modes]]); unknown modes and
+  * names and `reps < 1` fail before Spark starts.
   */
 object ProbeAdvisorSweep {
 
+  /** One sweep invocation's arguments and session. */
+  private[graft] final case class Run(spark: SparkSession, d: String, mode: String,
+      names: Seq[String], reps: Int)
+
+  /** A staged layout under test. `routes(n)` computes query `n`'s
+    * redirects on its flat plan; `metas`/`rollups` are the materialized
+    * tables registered for the whole run, which the flat control steps
+    * out of. */
+  private[graft] final case class Setup(d: String,
+      routes: String => Map[String, String],
+      metas: Seq[MaterializedJoins.Meta] = Nil,
+      rollups: Seq[MaterializedAggs.Meta] = Nil) {
+    def routeAll(names: Seq[String]): Map[String, Map[String, String]] =
+      names.map { n => Tables.clearRedirects(); n -> routes(n) }.toMap
+
+    def serve(redirects: Map[String, String]): Unit = {
+      Tables.clearRedirects()
+      redirects.foreach { case (t, ct) => Tables.redirect(d, t, ct) }
+    }
+
+    /** No redirects and nothing of this setup registered. */
+    def release(): Unit = {
+      Tables.clearRedirects()
+      metas.foreach(m => MaterializedJoins.deregister(m.catalogTable))
+      rollups.foreach(m => MaterializedAggs.deregister(m.catalogTable))
+    }
+
+    /** `body` over the flat tables, then re-register. */
+    def flat[A](body: => A): A = {
+      release()
+      try body finally {
+        metas.foreach(MaterializedJoins.register)
+        rollups.foreach(MaterializedAggs.register)
+      }
+    }
+  }
+
+  /** `flat`: nothing staged (the A/B control in the same harness). */
+  private def flatLayout(r: Run): Setup = Setup(r.d, _ => Map.empty)
+
+  /** `advised`: [[ensureAdvised]]'s redirects, the same for every query. */
+  private def advisedLayout(r: Run): Setup = {
+    val redirects = ensureAdvised(r.spark, r.d).toMap
+    Setup(r.d, _ => redirects)
+  }
+
+  /** `routed`: one projection per hot key staged; each query's
+    * redirects come from ITS OWN flat plan (LayoutAdvisor.routeAll). */
+  private def routedLayout(r: Run): Setup = {
+    val staged = ensureProjections(r.spark, r.d)
+    Setup(r.d, { n =>
+      val routes = LayoutAdvisor.routeAll(SparkEntry.queries(n)(r.spark, r.d), staged)
+      println(s"[route] $n -> ${routes.map { case (t, c) => s"$t=$c" }.mkString(" ")}")
+      routes
+    })
+  }
+
+  /** `denorm`: BOTH materialized registries are live for the whole run
+    * (RewriteMaterializedJoin serves the join regions,
+    * RewriteMaterializedAgg the aggregate-form and key-set shapes), and
+    * projection routing covers the rest ([[denormAwareRoutes]]). */
+  private def denormLayout(r: Run): Setup = {
+    val staged = ensureProjections(r.spark, r.d)
+    val metas = ensureDenorm(r.spark, r.d)
+    val rollups = ensureRollups(r.spark, r.d)
+    Setup(r.d, denormAwareRoutes(r.spark, r.d, _, staged, metas, rollups), metas, rollups)
+  }
+
+  /** Time every query over the setup (the [[BenchBig]] loop); print one
+    * BenchBig-shaped `advisor_sweep` line. */
+  private def time(r: Run, s: Setup): Unit = println(
+    s"""{"metric":"advisor_sweep","mode":${JsonOut.q(r.mode)},""" +
+      s""""queries":${BenchBig.json(timed(r, s, r.reps))},"sf":${JsonOut.q(r.d)}}""")
+
+  private def timed(r: Run, s: Setup, reps: Int): Seq[(String, Double)] = {
+    val routes = s.routeAll(r.names)
+    BenchBig.bestOf(r.names, reps) { n =>
+      s.serve(routes(n))
+      BenchBig.timeReduced(r.spark)(SparkEntry.queries(n)(r.spark, r.d))
+    }
+  }
+
+  /** Run every query BOTH ways and require row-identical results (the
+    * rel suite is integer-exact by construction, so exact equality is
+    * the contract, not a tolerance). Throws when any query differs. */
+  private def check(r: Run, s: Setup): Unit = {
+    def rows(n: String): Seq[String] =
+      SparkEntry.queries(n)(r.spark, r.d).collect().map(_.toString).sorted.toSeq
+    val routes = s.routeAll(r.names)
+    val bad = r.names.count { n =>
+      s.serve(routes(n))
+      val served = rows(n)
+      val flat = s.flat(rows(n))
+      println(s"[check] $n: ${if (served == flat) "IDENTICAL"
+        else s"MISMATCH (${served.size} vs ${flat.size} rows)"}")
+      served != flat
+    }
+    println(s"""{"metric":"advisor_check","bad":$bad,"n":${r.names.size}}""")
+    if (bad > 0) throw new IllegalStateException(
+      s"$bad of ${r.names.size} queries differ from the flat tables")
+  }
+
+  /** Plan audit over the setup (e.g. q8: every dim must BROADCAST onto
+    * the bucketed fact join — a dim that sort-merges would re-shuffle
+    * the fact side and void the layout). */
+  private def explain(r: Run, s: Setup): Unit = {
+    val routes = s.routeAll(r.names)
+    r.names.foreach { n =>
+      s.serve(routes(n))
+      println(s"===== $n (${r.mode}) =====")
+      SparkEntry.queries(n)(r.spark, r.d).explain("formatted")
+    }
+  }
+
+  /** SAME-STATE A/B: the setup WITH its aggregate rollups registered vs
+    * WITHOUT (routes recomputed, everything else identical, same session,
+    * same page cache) — the honest decomposition of what the rollups
+    * alone buy. */
+  private def rollupAb(r: Run, s: Setup): Unit = {
+    val reps = math.max(r.reps, 2)
+    val on = timed(r, s, reps).toMap
+    s.rollups.foreach(m => MaterializedAggs.deregister(m.catalogTable))
+    val off = try timed(r, s, reps).toMap finally s.rollups.foreach(MaterializedAggs.register)
+    val qs = r.names.map(n => JsonOut.q(n) +
+      s""":{"on":${on(n)},"off":${off(n)}}""").mkString("{", ",", "}")
+    println(s"""{"metric":"rollup_ab","queries":$qs,"sf":${JsonOut.q(r.d)}}""")
+  }
+
+  /** Every mode: a layout setup and the action run over it.
+    *  - `flat`, `layout`, `routed`, `denorm`: time each setup;
+    *  - `check`, `routedcheck`, `denormcheck`: rows vs the flat tables;
+    *  - `explain`, `denormexplain`: print each query's formatted plan;
+    *  - `rollupab`: time `denorm` with its rollups on, then off. */
+  private[graft] val Modes: Map[String, (Run => Setup, (Run, Setup) => Unit)] = Map(
+    "flat" -> (flatLayout _, time _),
+    "layout" -> (advisedLayout _, time _),
+    "routed" -> (routedLayout _, time _),
+    "denorm" -> (denormLayout _, time _),
+    "check" -> (advisedLayout _, check _),
+    "routedcheck" -> (routedLayout _, check _),
+    "denormcheck" -> (denormLayout _, check _),
+    "explain" -> (advisedLayout _, explain _),
+    "denormexplain" -> (denormLayout _, explain _),
+    "rollupab" -> (denormLayout _, rollupAb _))
+
   def main(args: Array[String]): Unit = {
-    val d = args.headOption.getOrElse("/root/repo/benchdata/x200")
+    val d = args.headOption.getOrElse("benchdata/x200")
     val reps = if (args.length > 1) args(1).toInt else 1
     val mode = if (args.length > 2) args(2) else "layout"
     val names = if (args.length > 3) args(3).split(",").toSeq else BenchBig.Rel
+    require(reps >= 1, s"reps must be at least 1, got $reps")
+    val (layout, action) = Modes.getOrElse(mode, throw new IllegalArgumentException(
+      s"unknown mode $mode (one of ${Modes.keys.toSeq.sorted.mkString(", ")})"))
+    SparkEntry.requireKnown(names)
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-
-    if (mode == "check") {
-      val redirects = ensureAdvised(spark, d)
-      def rows(n: String): Seq[String] =
-        SparkEntry.queries(n)(spark, d).collect().map(_.toString).sorted.toSeq
-      var bad = 0
-      names.foreach { n =>
-        redirects.foreach { case (t, ct) => Tables.redirect(d, t, ct) }
-        val layout = rows(n)
-        Tables.clearRedirects()
-        val flat = rows(n)
-        val ok = layout == flat
-        if (!ok) bad += 1
-        println(s"[check] $n: ${if (ok) "IDENTICAL" else s"MISMATCH (${layout.size} vs ${flat.size} rows)"}")
-      }
-      println(s"""{"metric":"advisor_check","bad":$bad,"n":${names.size}}""")
-      spark.stop()
-      if (bad > 0) sys.exit(1)
-      return
-    }
-    if (mode == "explain") {
-      // plan audit over the advised layouts (e.g. q8: every dim must
-      // BROADCAST onto the bucketed fact join — a dim that sort-merges
-      // would re-shuffle the fact side and void the layout)
-      ensureAdvised(spark, d)
-      names.foreach { n =>
-        println(s"===== $n (advisor layouts) =====")
-        SparkEntry.queries(n)(spark, d).explain("formatted")
-      }
-      spark.stop()
-      return
-    }
-    if (mode == "routedcheck") {
-      val staged = ensureProjections(spark, d)
-      def rows(n: String): Seq[String] =
-        SparkEntry.queries(n)(spark, d).collect().map(_.toString).sorted.toSeq
-      var bad = 0
-      names.foreach { n =>
-        Tables.clearRedirects()
-        val routes = graft.plans.LayoutAdvisor.routeAll(
-          SparkEntry.queries(n)(spark, d), staged)
-        routes.foreach { case (t, ct) => Tables.redirect(d, t, ct) }
-        val routed = rows(n)
-        Tables.clearRedirects()
-        val flat = rows(n)
-        val ok = routed == flat
-        if (!ok) bad += 1
-        println(s"[check] $n -> ${routes.values.mkString(",")}: " +
-          s"${if (ok) "IDENTICAL" else s"MISMATCH (${routed.size} vs ${flat.size} rows)"}")
-      }
-      println(s"""{"metric":"advisor_check","bad":$bad,"n":${names.size}}""")
-      spark.stop()
-      if (bad > 0) sys.exit(1)
-      return
-    }
-    if (mode == "denormexplain") {
-      val staged = ensureProjections(spark, d)
-      val metas = ensureDenorm(spark, d)
-      val rollups = ensureRollups(spark, d)
-      names.foreach { n =>
-        Tables.clearRedirects()
-        val routes = denormAwareRoutes(spark, d, n, staged, metas, rollups)
-        routes.foreach { case (t, ct) => Tables.redirect(d, t, ct) }
-        println(s"===== $n (denorm + rollup + routed) =====")
-        SparkEntry.queries(n)(spark, d).explain("formatted")
-      }
-      spark.stop()
-      return
-    }
-    if (mode == "denormcheck") {
-      val staged = ensureProjections(spark, d)
-      val metas = ensureDenorm(spark, d) // registered process-wide
-      val rollups = ensureRollups(spark, d)
-      def rows(n: String): Seq[String] =
-        SparkEntry.queries(n)(spark, d).collect().map(_.toString).sorted.toSeq
-      var bad = 0
-      names.foreach { n =>
-        Tables.clearRedirects()
-        val routes = denormAwareRoutes(spark, d, n, staged, metas, rollups)
-        routes.foreach { case (t, ct) => Tables.redirect(d, t, ct) }
-        val served = rows(n)
-        Tables.clearRedirects()
-        metas.foreach(m => graft.plans.MaterializedJoins.deregister(m.catalogTable))
-        rollups.foreach(m => graft.plans.MaterializedAggs.deregister(m.catalogTable))
-        val flat = try rows(n) finally {
-          metas.foreach(graft.plans.MaterializedJoins.register)
-          rollups.foreach(graft.plans.MaterializedAggs.register)
-        }
-        val ok = served == flat
-        if (!ok) bad += 1
-        println(s"[check] $n: ${if (ok) "IDENTICAL" else s"MISMATCH (${served.size} vs ${flat.size} rows)"}")
-      }
-      println(s"""{"metric":"advisor_check","bad":$bad,"n":${names.size}}""")
-      spark.stop()
-      if (bad > 0) sys.exit(1)
-      return
-    }
-    if (mode == "rollupab") {
-      // SAME-STATE A/B: the full denorm+routing composition WITH the
-      // aggregate rollups registered vs WITHOUT (everything else
-      // identical, same session, same page cache) — the honest
-      // decomposition of what the rollups alone buy
-      val staged = ensureProjections(spark, d)
-      val metas = ensureDenorm(spark, d)
-      val rollups = ensureRollups(spark, d)
-      def side(tag: String): Map[String, Double] = {
-        val routeOf = names.map { n =>
-          Tables.clearRedirects()
-          n -> denormAwareRoutes(spark, d, n, staged, metas, rollups)
-        }.toMap
-        def once(n: String): Double = {
-          Tables.clearRedirects()
-          routeOf(n).foreach { case (t, ct) => Tables.redirect(d, t, ct) }
-          val t0 = System.nanoTime()
-          val df = SparkEntry.queries(n)(spark, d)
-          df.select(sum(xxhash64(df.columns.map(col): _*).cast("double")).as("h"))
-            .write.format("noop").mode("overwrite").save()
-          val dt = (System.nanoTime() - t0) / 1e9
-          GraftSession.clearSessionState(spark)
-          dt
-        }
-        names.foreach(once) // warm-up
-        names.map(n => n -> (1 to math.max(reps, 2)).map(_ => once(n)).min).toMap
-      }
-      val on = side("on")
-      rollups.foreach(m => graft.plans.MaterializedAggs.deregister(m.catalogTable))
-      val off = side("off")
-      rollups.foreach(graft.plans.MaterializedAggs.register)
-      val qs = names.map(n => JsonOut.q(n) +
-        s""":{"on":${on(n)},"off":${off(n)}}""").mkString("{", ",", "}")
-      println(s"""{"metric":"rollup_ab","queries":$qs,"sf":${JsonOut.q(d)}}""")
-      spark.stop()
-      return
-    }
-    if (mode == "layout") ensureAdvised(spark, d)
-    // routed: one projection per hot key staged; each query's redirects
-    // come from ITS OWN plan (LayoutAdvisor.routeAll) — computed once here
-    // on the flat plans, installed per query inside the timing loop
-    val routeOf: Map[String, Map[String, String]] = if (mode == "routed") {
-      val staged = ensureProjections(spark, d)
-      Tables.clearRedirects()
-      names.map { n =>
-        val r = graft.plans.LayoutAdvisor.routeAll(
-          SparkEntry.queries(n)(spark, d), staged)
-        println(s"[route] $n -> ${r.map { case (t, c) => s"$t=$c" }.mkString(" ") }")
-        n -> r
-      }.toMap
-    } else if (mode == "denorm") {
-      // denorm: BOTH materialized registries are live for the whole run
-      // (RewriteMaterializedJoin serves the join regions,
-      // RewriteMaterializedAgg the aggregate-form and key-set shapes),
-      // and projection routing covers the rest — EXCEPT the member
-      // tables of a query a rewrite fires on: redirecting those would
-      // point the fact leaf at a projection and void the match
-      val staged = ensureProjections(spark, d)
-      val metas = ensureDenorm(spark, d)
-      val rollups = ensureRollups(spark, d)
-      names.map { n =>
-        Tables.clearRedirects()
-        n -> denormAwareRoutes(spark, d, n, staged, metas, rollups)
-      }.toMap
-    } else Map.empty
-
-    def once(name: String): Double = {
-      if (mode == "routed" || mode == "denorm") {
-        Tables.clearRedirects()
-        routeOf(name).foreach { case (t, ct) => Tables.redirect(d, t, ct) }
-      }
-      val t0 = System.nanoTime()
-      val df = SparkEntry.queries(name)(spark, d)
-      df.select(sum(xxhash64(df.columns.map(col): _*).cast("double")).as("h"))
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    def clean(name: String): Double = {
-      val dt = once(name)
-      GraftSession.clearSessionState(spark)
-      dt
-    }
-    names.foreach(clean) // warm-up pass (JIT/codegen + page cache)
-    val all = names.map(n => n -> (1 to reps).map(_ => clean(n)))
-    val qs = all.map { case (k, v) => JsonOut.q(k) + ":" + v.min }.mkString("{", ",", "}")
-    println(s"""{"metric":"advisor_sweep","mode":${JsonOut.q(mode)},"queries":$qs,"sf":${JsonOut.q(d)}}""")
-    val rs = all.map { case (k, v) =>
-      JsonOut.q(k) + ":" + v.map(t => f"$t%.3f").mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    System.err.println(s"""{"reps":$rs}""")
-    spark.stop()
+    try {
+      val r = Run(spark, d, mode, names, reps)
+      val setup = layout(r)
+      try action(r, setup) finally setup.release()
+    } finally spark.stop()
   }
 
   /** This query's redirects under the denorm+routing composition: the

@@ -12,6 +12,13 @@ import Shared.cents
   * rollups) whose plan rewrites must keep the raw-table answer. */
 object LayoutGates {
 
+  /** Per-order quantity cents over 150 units — the plain and the
+    * sorted bucketed per-order rollups answer it. */
+  private val perOrderQtyOracle =
+    """SELECT l_orderkey AS b_orderkey,
+      |  CAST(SUM(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) AS b_qty_cents
+      |FROM lineitem GROUP BY 1 HAVING b_qty_cents > 15000""".stripMargin
+
   val gates: Seq[Gate] = Seq(
     // ---- partition / exchange (reference §2.5) -------------------------
     Gate("partition_modulo_shards", { (s, d) =>
@@ -64,9 +71,7 @@ object LayoutGates {
         .agg(sum(round(col("l_quantity") * 100).cast("long")).as("b_qty_cents"))
         .filter(col("b_qty_cents") > 150L * 100)
         .select(col("b_orderkey"), col("b_qty_cents"))
-    }, """SELECT l_orderkey AS b_orderkey,
-         |  CAST(SUM(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) AS b_qty_cents
-         |FROM lineitem GROUP BY 1 HAVING b_qty_cents > 15000""".stripMargin),
+    }, perOrderQtyOracle),
     Gate("agg_bucketed_sortstream", { (s, d) =>
       // the STREAMING upgrade of agg_bucketed_pergroup: lineitem
       // bucketed AND sorted on l_orderkey at write time, one file per
@@ -82,9 +87,7 @@ object LayoutGates {
         .agg(sum(round(col("l_quantity") * 100).cast("long")).as("b_qty_cents"))
         .filter(col("b_qty_cents") > 150L * 100)
         .select(col("b_orderkey"), col("b_qty_cents"))
-    }, """SELECT l_orderkey AS b_orderkey,
-         |  CAST(SUM(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) AS b_qty_cents
-         |FROM lineitem GROUP BY 1 HAVING b_qty_cents > 15000""".stripMargin),
+    }, perOrderQtyOracle),
     Gate("layout_advisor_agg", { (s, d) =>
       // layout selection as product, not hand-staging: the
       // LayoutAdvisor derives (lineitem, l_orderkey, pruned columns,

@@ -132,7 +132,6 @@ object RelationalGates {
       // so per-order revenue is reduced first and joined to the
       // segment-filtered orders after — the join probes order-grained
       // rows, not line-grained (4× less at TPC-H line fan-out).
-      val cts = (n: String) => round(col(n) * 100).cast("long")
       val bldgOrders = o.join(broadcast(c), o("o_custkey") === c("c_custkey"), "left_semi")
       // runtime bloom semi-reduction on the fact side: Spark's own
       // InjectRuntimeFilter rejects this shape (the selective predicate
@@ -148,7 +147,7 @@ object RelationalGates {
       // raw rows first so the aggregate's first pass actually reduces
       // (operators.Aggregates scaladoc has the measured trade-off)
       val revPerOrder = operators.Aggregates.byShuffledKey(lBldg, col("l_orderkey"))
-        .agg((sum(cts("l_extendedprice") * (lit(100L) - cts("l_discount")))
+        .agg((sum(cents("l_extendedprice") * (lit(100L) - cents("l_discount")))
           .cast(DoubleType) / 10000.0).as("revenue"))
       revPerOrder.join(bldgOrders, col("l_orderkey") === col("o_orderkey"))
         .select(col("l_orderkey"), col("revenue"))
@@ -210,8 +209,7 @@ object RelationalGates {
       val l = Tables.lineitem(s, d)
       // integer-cents accumulation; the /10000.0 on each sum mirrors the
       // oracle's per-sum decimal→double cast before the share division
-      val cts = (n: String) => round(col(n) * 100).cast("long")
-      val revE4 = cts("l_extendedprice") * (lit(100L) - cts("l_discount"))
+      val revE4 = cents("l_extendedprice") * (lit(100L) - cents("l_discount"))
       l.join(broadcast(p), l("l_partkey") === p("p_partkey"))
         .agg(((sum(when(col("p_type") === "PROMO", revE4).otherwise(lit(0L)))
           .cast(DoubleType) / 10000.0) * 100.0
@@ -230,14 +228,12 @@ object RelationalGates {
         Tables.events(s, d).select(col("event_id"), col("user_id")),
         "user_id", Tables.embeddings(s, d), "vec_id", Seq("label"),
         broadcastDim = true)
-    }, """SELECT event_id, user_id, label
-         |FROM events LEFT JOIN embeddings ON user_id = vec_id""".stripMargin),
+    }, lookupLabelOracle),
     Gate("lookup_dedup_join", { (s, d) =>
       EmbeddingLookup.lookupDedup(
         Tables.events(s, d).select(col("event_id"), col("user_id")),
         "user_id", Tables.embeddings(s, d), "vec_id", Seq("label"))
-    }, """SELECT event_id, user_id, label
-         |FROM events LEFT JOIN embeddings ON user_id = vec_id""".stripMargin),
+    }, lookupLabelOracle),
     Gate("lookup_cache_miss", { (s, d) =>
       val cache = Tables.embeddings(s, d).filter(col("vec_id") < 50)
       val (_, misses) = EmbeddingLookup.cacheSplit(
@@ -300,13 +296,12 @@ object RelationalGates {
       val ordersAsia = Tables.orders(s, d)
         .join(custAsia.select(col("c_custkey"), col("c_nationkey"), col("n_name")),
           col("o_custkey") === col("c_custkey"))
-      val cts = (n: String) => round(col(n) * 100).cast("long")
       Tables.lineitem(s, d)
         .join(ordersAsia.hint("shuffle_hash"), col("l_orderkey") === col("o_orderkey"))
         .join(broadcast(Tables.supplier(s, d)),
           col("l_suppkey") === col("s_suppkey") && col("c_nationkey") === col("s_nationkey"))
         .groupBy(col("n_name"))
-        .agg((sum(cts("l_extendedprice") * (lit(100L) - cts("l_discount")))
+        .agg((sum(cents("l_extendedprice") * (lit(100L) - cents("l_discount")))
           .cast(DoubleType) / 10000.0).as("revenue"))
         .orderBy(col("revenue").desc)
     }, """SELECT n_name,

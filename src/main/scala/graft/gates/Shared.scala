@@ -34,7 +34,13 @@ object Shared {
     * rows per group; ANSI mode throws beyond it rather than wrapping.
     * It is the expression [[graft.plans.RewriteStoredCents.moneyIdiom]]
     * matches, so a stored-cents layout serves it. */
-  private[gates] def cents(c: String): Column = round(col(c) * 100).cast("long")
+  private[graft] def cents(c: String): Column = round(col(c) * 100).cast("long")
+
+  /** Every event's label through a LEFT lookup on the embeddings table —
+    * the batch lookup joins and the streaming enrichment gate answer it. */
+  private[gates] val lookupLabelOracle: String =
+    """SELECT event_id, user_id, label
+      |FROM events LEFT JOIN embeddings ON user_id = vec_id""".stripMargin
 
   /** Quality-score SQL expression over a `t(doc_id, toks)` CTE —
     * mirrors TextFunctions.qualityScore; shared by the score and

@@ -19,6 +19,24 @@ object StreamGates {
   private def drain(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
     try q.processAllAvailable() finally q.stop()
 
+  /** Per-user 30-min-gap session bounds (gap-inclusive: a new session
+    * starts at diff > 1800 s) — the batch, sorted-kernel and streaming
+    * session gates all answer it. */
+  private val sessionBoundsOracle =
+    """WITH e AS (SELECT user_id, event_id,
+      |  CAST(floor(epoch_ms(ts)/1000) AS BIGINT) AS tsec FROM events),
+      |s AS (SELECT user_id, event_id, tsec,
+      |  CASE WHEN lag(tsec) OVER w IS NULL OR tsec - lag(tsec) OVER w > 1800
+      |       THEN 1 ELSE 0 END AS is_new
+      |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tsec, event_id)),
+      |g AS (SELECT user_id, tsec,
+      |  SUM(is_new) OVER (PARTITION BY user_id ORDER BY tsec, event_id
+      |    ROWS UNBOUNDED PRECEDING) AS sess
+      |  FROM s)
+      |SELECT user_id, MIN(tsec) AS session_start, MAX(tsec) + 1800 AS session_end,
+      |  CAST(COUNT(*) AS BIGINT) AS n
+      |FROM g GROUP BY user_id, sess""".stripMargin
+
   val gates: Seq[Gate] = Seq(
     Gate("stream_sliding_counts", { (s, d) =>
       // sliding event-time windows (1h window, 30m slide): each event
@@ -66,19 +84,7 @@ object StreamGates {
         .select(col("user_id"),
           col("session_window.start").cast("long").as("session_start"),
           col("session_window.end").cast("long").as("session_end"), col("n"))
-    }, """WITH e AS (SELECT user_id, event_id,
-         |  CAST(floor(epoch_ms(ts)/1000) AS BIGINT) AS tsec FROM events),
-         |s AS (SELECT user_id, event_id, tsec,
-         |  CASE WHEN lag(tsec) OVER w IS NULL OR tsec - lag(tsec) OVER w > 1800
-         |       THEN 1 ELSE 0 END AS is_new
-         |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tsec, event_id)),
-         |g AS (SELECT user_id, tsec,
-         |  SUM(is_new) OVER (PARTITION BY user_id ORDER BY tsec, event_id
-         |    ROWS UNBOUNDED PRECEDING) AS sess
-         |  FROM s)
-         |SELECT user_id, MIN(tsec) AS session_start, MAX(tsec) + 1800 AS session_end,
-         |  CAST(COUNT(*) AS BIGINT) AS n
-         |FROM g GROUP BY user_id, sess""".stripMargin),
+    }, sessionBoundsOracle),
     Gate("sessionize_bounds_sorted", { (s, d) =>
       // the sorted-kernel batch path for session bounds: one narrow
       // (key, ts) exchange + one in-partition sort + a streaming
@@ -88,19 +94,7 @@ object StreamGates {
       Sessionize.sessionBoundsSorted(Tables.events(s, d),
         col("user_id"), col("ts").cast("long"), gapSeconds = 1800L)
         .withColumnRenamed("key", "user_id")
-    }, """WITH e AS (SELECT user_id, event_id,
-         |  CAST(floor(epoch_ms(ts)/1000) AS BIGINT) AS tsec FROM events),
-         |s AS (SELECT user_id, event_id, tsec,
-         |  CASE WHEN lag(tsec) OVER w IS NULL OR tsec - lag(tsec) OVER w > 1800
-         |       THEN 1 ELSE 0 END AS is_new
-         |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tsec, event_id)),
-         |g AS (SELECT user_id, tsec,
-         |  SUM(is_new) OVER (PARTITION BY user_id ORDER BY tsec, event_id
-         |    ROWS UNBOUNDED PRECEDING) AS sess
-         |  FROM s)
-         |SELECT user_id, MIN(tsec) AS session_start, MAX(tsec) + 1800 AS session_end,
-         |  CAST(COUNT(*) AS BIGINT) AS n
-         |FROM g GROUP BY user_id, sess""".stripMargin),
+    }, sessionBoundsOracle),
     // ---- streaming-shaped windowed aggregation (reference §2.11) -------
     Gate("stream_window_counts", { (s, d) =>
       StreamingOps.windowedCounts(Tables.events(s, d), "1 hour")
@@ -267,19 +261,7 @@ object StreamGates {
         drain(q)
       } finally s.conf.set("spark.sql.shuffle.partitions", prev)
       s.table(name)
-    }, """WITH e AS (SELECT user_id, event_id,
-         |  CAST(floor(epoch_ms(ts)/1000) AS BIGINT) AS tsec FROM events),
-         |s AS (SELECT user_id, event_id, tsec,
-         |  CASE WHEN lag(tsec) OVER w IS NULL OR tsec - lag(tsec) OVER w > 1800
-         |       THEN 1 ELSE 0 END AS is_new
-         |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tsec, event_id)),
-         |g AS (SELECT user_id, tsec,
-         |  SUM(is_new) OVER (PARTITION BY user_id ORDER BY tsec, event_id
-         |    ROWS UNBOUNDED PRECEDING) AS sess
-         |  FROM s)
-         |SELECT user_id, MIN(tsec) AS session_start, MAX(tsec) + 1800 AS session_end,
-         |  CAST(COUNT(*) AS BIGINT) AS n
-         |FROM g GROUP BY user_id, sess""".stripMargin),
+    }, sessionBoundsOracle),
     Gate("stream_metric_auc", { (s, d) =>
       // the §2.7 thresholded-AUC Aggregator under a REAL 2-micro-batch
       // file stream in complete mode: the 402-long confusion-matrix
@@ -397,7 +379,6 @@ object StreamGates {
         drain(q)
       } finally s.conf.set("spark.sql.shuffle.partitions", prev)
       s.table(name)
-    }, """SELECT event_id, user_id, label
-         |FROM events LEFT JOIN embeddings ON user_id = vec_id""".stripMargin),
+    }, lookupLabelOracle),
   )
 }

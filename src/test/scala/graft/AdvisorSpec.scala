@@ -632,11 +632,7 @@ class AdvisorSpec extends GraftSpec {
       .write.parquet(dir.resolve("t.parquet").toString)
     val path = graft.plans.MaterializedJoins.leafPath(
       spark.read.parquet(dir.resolve("t.parquet").toString))
-    spark.sql("DROP TABLE IF EXISTS adv_explain_k")
-    spark.sql("DROP TABLE IF EXISTS adv_explain_c")
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    GateFixtures.deleteRecursively(java.nio.file.Paths.get(wh, "adv_explain_k"))
-    GateFixtures.deleteRecursively(java.nio.file.Paths.get(wh, "adv_explain_c"))
+    Seq("adv_explain_k", "adv_explain_c").foreach(graft.sources.TabularWriter.clearStale(spark, _))
     LayoutAdvisor.stage(spark,
       LayoutAdvisor.LayoutSpec(path, "t", "k", 4, Seq("k", "v"), 1), "adv_explain_k")
     LayoutAdvisor.stage(spark,
@@ -679,11 +675,7 @@ class AdvisorSpec extends GraftSpec {
     val path = graft.plans.MaterializedJoins.leafPath(
       spark.read.parquet(dir.resolve("t.parquet").toString))
     val spec = LayoutAdvisor.LayoutSpec(path, "t", "k", 4, Seq("k", "c", "v"), 1)
-    spark.sql("DROP TABLE IF EXISTS adv_fresh_a")
-    spark.sql("DROP TABLE IF EXISTS adv_fresh_b")
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    GateFixtures.deleteRecursively(java.nio.file.Paths.get(wh, "adv_fresh_a"))
-    GateFixtures.deleteRecursively(java.nio.file.Paths.get(wh, "adv_fresh_b"))
+    Seq("adv_fresh_a", "adv_fresh_b").foreach(graft.sources.TabularWriter.clearStale(spark, _))
     LayoutAdvisor.stage(spark, spec, "adv_fresh_a")
     LayoutAdvisor.stage(spark, spec, "adv_fresh_b")
     try {

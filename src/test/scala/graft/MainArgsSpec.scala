@@ -43,4 +43,35 @@ class MainArgsSpec extends GraftSpec {
     assert(rejected(BenchOne.main(Array(" metric_mrr , ,", sf, "0")))._1.contains("reps"))
     assert(rejected(BenchOne.main(Array(" , ", sf)))._1.contains("empty query list"))
   }
+
+  test("BenchBig rejects an unknown name before running any query") {
+    val (msg, printed) = rejected(BenchBig.main(Array(sf, "metric_mrr,no_such_query", "1")))
+    assert(msg.contains("no_such_query"), msg)
+    assert(printed.isEmpty, printed)
+  }
+
+  test("BenchBig rejects reps < 1 before running any query") {
+    val (msg, printed) = rejected(BenchBig.main(Array(sf, "metric_mrr", "0")))
+    assert(msg.contains("reps"), msg)
+    assert(printed.isEmpty, printed)
+  }
+
+  test("ProbeAdvisorSweep rejects an unknown mode before staging anything") {
+    val (msg, printed) = rejected(ProbeAdvisorSweep.main(Array(sf, "1", "chek")))
+    assert(msg.contains("chek"), msg)
+    assert(printed.isEmpty, printed)
+  }
+
+  test("ProbeAdvisorSweep rejects an unknown name before staging anything") {
+    val (msg, printed) = rejected(
+      ProbeAdvisorSweep.main(Array(sf, "1", "check", "q3_shipping_priority,no_such_query")))
+    assert(msg.contains("no_such_query"), msg)
+    assert(printed.isEmpty, printed)
+  }
+
+  test("ProbeAdvisorSweep rejects reps < 1 before staging anything") {
+    val (msg, printed) = rejected(ProbeAdvisorSweep.main(Array(sf, "0", "flat")))
+    assert(msg.contains("reps"), msg)
+    assert(printed.isEmpty, printed)
+  }
 }

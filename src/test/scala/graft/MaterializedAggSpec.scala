@@ -19,9 +19,7 @@ class MaterializedAggSpec extends GraftSpec {
     * measures and the conditional count from the queries themselves. */
   private lazy val meta: MaterializedAggs.Meta = {
     val name = "maspec_rollup"
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    GateFixtures.deleteRecursively(java.nio.file.Paths.get(wh, name))
-    if (spark.catalog.tableExists(name)) spark.sql(s"DROP TABLE `$name`")
+    graft.sources.TabularWriter.clearStale(spark, name)
     val spec = advisedSpec
     val m = MaterializedAggs.stageRollup(spark, spec, name)
     MaterializedAggs.deregister(name) // each test scopes its own registration
@@ -164,9 +162,7 @@ class MaterializedAggSpec extends GraftSpec {
     val specs = LayoutAdvisor.adviseAggRollups(Seq(perPart), minHits = 1)
     assert(specs.size === 1 && specs.head.keys == Seq("l_partkey"), s"$specs")
     val name = "maspec_perpart"
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    GateFixtures.deleteRecursively(java.nio.file.Paths.get(wh, name))
-    if (spark.catalog.tableExists(name)) spark.sql(s"DROP TABLE `$name`")
+    graft.sources.TabularWriter.clearStale(spark, name)
     val m = MaterializedAggs.stageRollup(spark, specs.head, name)
     MaterializedAggs.deregister(name)
     def q = li.join(broadcast(Tables.part(spark, sf)
@@ -236,9 +232,7 @@ class MaterializedAggSpec extends GraftSpec {
       .agg(sum(cents("l_quantity")).as("qty"))
     val spec = LayoutAdvisor.adviseAggRollups(Seq(corpusQ), minHits = 1).head
     val name = "maspec_fresh"
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    GateFixtures.deleteRecursively(java.nio.file.Paths.get(wh, name))
-    if (spark.catalog.tableExists(name)) spark.sql(s"DROP TABLE `$name`")
+    graft.sources.TabularWriter.clearStale(spark, name)
     val m = MaterializedAggs.stageRollup(spark, spec, name)
     MaterializedAggs.register(m)
     try {
@@ -256,15 +250,14 @@ class MaterializedAggSpec extends GraftSpec {
       // attach over the drifted base must refuse loudly
       intercept[IllegalArgumentException] {
         MaterializedAggs.attachRollup(spark, spec, name + "2",
-          java.nio.file.Paths.get(wh, name).toString)
+          java.nio.file.Paths.get(graft.plans.TableStats.warehouseOf(spark), name).toString)
       }
     } finally MaterializedAggs.deregister(name)
   }
 
   test("attachRollup restores the registration from the sidecar") {
     val staged = meta // ensure staged
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    val src = java.nio.file.Paths.get(wh, staged.catalogTable)
+    val src = java.nio.file.Paths.get(graft.plans.TableStats.warehouseOf(spark), staged.catalogTable)
     val aside = java.nio.file.Files.createTempDirectory("maspec_attach")
     sys.addShutdownHook(GateFixtures.deleteRecursively(aside))
     java.nio.file.Files.walk(src).forEach { p =>
@@ -349,11 +342,9 @@ class MaterializedAggSpec extends GraftSpec {
     val q6k = specs.find(_.keys == Seq("l_discount", "l_quantity"))
     assert(q1k.isDefined && q6k.isDefined,
       s"advisor must fold predicate columns into composite keys: $specs")
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     Seq(q1k.get -> "maspec_q1keys", q6k.get -> "maspec_q6keys").map {
       case (spec, name) =>
-        GateFixtures.deleteRecursively(java.nio.file.Paths.get(wh, name))
-        if (spark.catalog.tableExists(name)) spark.sql(s"DROP TABLE `$name`")
+        graft.sources.TabularWriter.clearStale(spark, name)
         val m = MaterializedAggs.stageRollup(spark, spec, name)
         MaterializedAggs.deregister(name)
         m
@@ -432,9 +423,7 @@ class MaterializedAggSpec extends GraftSpec {
     assert(specs.size === 1 &&
       specs.head.keys == Seq("l_returnflag", "l_linestatus"), s"$specs")
     val name = "maspec_avg2"
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    GateFixtures.deleteRecursively(java.nio.file.Paths.get(wh, name))
-    if (spark.catalog.tableExists(name)) spark.sql(s"DROP TABLE `$name`")
+    graft.sources.TabularWriter.clearStale(spark, name)
     val m = MaterializedAggs.stageRollup(spark, specs.head, name)
     MaterializedAggs.deregister(name)
     // exact grain: avg serves as a stored FINAL value
@@ -463,11 +452,8 @@ class MaterializedAggSpec extends GraftSpec {
         max(cents("l_extendedprice")).as("mx"))
     val spec = LayoutAdvisor.adviseAggRollups(Seq(corpusQ), minHits = 1).head
     val name = "maspec_refresh"
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    for (n <- Seq(name, name + "__refreshing", name + "__prerefresh")) {
-      if (spark.catalog.tableExists(n)) spark.sql(s"DROP TABLE `$n`")
-      GateFixtures.deleteRecursively(java.nio.file.Paths.get(wh, n))
-    }
+    Seq(name, name + "__refreshing", name + "__prerefresh")
+      .foreach(graft.sources.TabularWriter.clearStale(spark, _))
     val m = MaterializedAggs.stageRollup(spark, spec, name)
     MaterializedAggs.deregister(name)
     // fresh base → refresh is a no-op
@@ -493,8 +479,7 @@ class MaterializedAggSpec extends GraftSpec {
       .agg(avg(col("l_quantity")).as("a"))
     val avgSpec = LayoutAdvisor.adviseAggRollups(Seq(avgQ), minHits = 1).head
     val avgName = "maspec_refresh_avg"
-    if (spark.catalog.tableExists(avgName)) spark.sql(s"DROP TABLE `$avgName`")
-    GateFixtures.deleteRecursively(java.nio.file.Paths.get(wh, avgName))
+    graft.sources.TabularWriter.clearStale(spark, avgName)
     val avgMeta = MaterializedAggs.stageRollup(spark, avgSpec, avgName)
     MaterializedAggs.deregister(avgName)
     Tables.lineitem(spark, sf).limit(100).write.mode("append").parquet(base)
@@ -508,7 +493,7 @@ class MaterializedAggSpec extends GraftSpec {
     // to delete comes from the refreshed sidecar's own inventory
     // (deleting an arbitrary parquet file could hit a post-refresh
     // delta file, which IS still append-only growth)
-    val sidecar = java.nio.file.Paths.get(wh, name,
+    val sidecar = java.nio.file.Paths.get(graft.plans.TableStats.warehouseOf(spark), name,
       MaterializedAggs.RollupSidecar)
     val stagedLine = java.nio.file.Files.readAllLines(sidecar)
       .toArray.map(_.toString).collectFirst {
@@ -601,9 +586,7 @@ class MaterializedAggSpec extends GraftSpec {
     assert(specs.size === 1 && specs.head.keys ==
       Seq("l_returnflag", "l_linestatus", "l_discount"), s"$specs")
     val name = "maspec_dec"
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    GateFixtures.deleteRecursively(java.nio.file.Paths.get(wh, name))
-    if (spark.catalog.tableExists(name)) spark.sql(s"DROP TABLE `$name`")
+    graft.sources.TabularWriter.clearStale(spark, name)
     val m = MaterializedAggs.stageRollup(spark, specs.head, name)
     MaterializedAggs.deregister(name)
     withMeta(m) {

@@ -19,9 +19,7 @@ class MaterializedJoinSpec extends GraftSpec {
     * l_orderkey, carrying stored cents for the money columns. */
   private lazy val meta: Meta = {
     val name = "mjspec_denorm"
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    GateFixtures.deleteRecursively(java.nio.file.Paths.get(wh, name))
-    if (spark.catalog.tableExists(name)) spark.sql(s"DROP TABLE `$name`")
+    graft.sources.TabularWriter.clearStale(spark, name)
     val spec = LayoutAdvisor.DenormSpec(
       fact = "lineitem", factPath = liPath,
       dims = Seq(
@@ -269,9 +267,7 @@ class MaterializedJoinSpec extends GraftSpec {
 
   test("stageDenorm declines a stored-cents column whose derived name collides (round-12)") {
     val name = "mjspec_collide"
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    GateFixtures.deleteRecursively(java.nio.file.Paths.get(wh, name))
-    if (spark.catalog.tableExists(name)) spark.sql(s"DROP TABLE `$name`")
+    graft.sources.TabularWriter.clearStale(spark, name)
     // fabricate a base table that carries BOTH x and a real x_cents
     val basePath = java.nio.file.Files.createTempDirectory("mjspec_collide").toString
     sys.addShutdownHook(GateFixtures.deleteRecursively(java.nio.file.Paths.get(basePath)))
@@ -294,10 +290,7 @@ class MaterializedJoinSpec extends GraftSpec {
     // cents for x over the same fact
     val derived = name + "_derived"
     val bucketed = name + "_bucketed"
-    for (t <- Seq(derived, bucketed)) {
-      GateFixtures.deleteRecursively(java.nio.file.Paths.get(wh, t))
-      if (spark.catalog.tableExists(t)) spark.sql(s"DROP TABLE `$t`")
-    }
+    Seq(derived, bucketed).foreach(graft.sources.TabularWriter.clearStale(spark, _))
     LayoutAdvisor.stageDerived(spark, LayoutAdvisor.DerivedSpec(
       fPath, "f", Seq("x"), sortCol = None, numFiles = 1, hits = 1), derived)
     LayoutAdvisor.stageWithDerived(spark, LayoutAdvisor.LayoutSpec(
@@ -400,9 +393,7 @@ class MaterializedJoinSpec extends GraftSpec {
       columns = Seq("fk", "dk_ref", "v", "dk", "dv"),
       bucketKey = Some("fk"), buckets = 4, centsCols = Nil, hits = 1)
     val name = "mjspec_fresh"
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    GateFixtures.deleteRecursively(java.nio.file.Paths.get(wh, name))
-    if (spark.catalog.tableExists(name)) spark.sql(s"DROP TABLE `$name`")
+    graft.sources.TabularWriter.clearStale(spark, name)
     val m = MaterializedJoins.stageDenorm(spark, spec, name)
     assert(m.fingerprints.keySet === Set(fPath, dPath),
       s"stage must fingerprint every member: ${m.fingerprints}")
@@ -427,22 +418,20 @@ class MaterializedJoinSpec extends GraftSpec {
       // recorded in the sidecar no longer describe these files)
       intercept[IllegalArgumentException] {
         MaterializedJoins.attachDenorm(spark, spec, name + "2",
-          java.nio.file.Paths.get(wh, name).toString)
+          java.nio.file.Paths.get(graft.plans.TableStats.warehouseOf(spark), name).toString)
       }
     } finally MaterializedJoins.deregister(name)
   }
 
   test("attachDenorm restores the registration from the sidecar") {
     val name = "mjspec_attach"
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     val spec = LayoutAdvisor.DenormSpec(
       fact = "lineitem", factPath = liPath,
       dims = Seq(LayoutAdvisor.DenormDim(
         "orders", oPath, "lineitem", "l_orderkey", "o_orderkey")),
       columns = Seq("l_orderkey", "l_quantity", "o_orderkey", "o_orderpriority"),
       bucketKey = Some("l_orderkey"), buckets = 4, centsCols = Nil, hits = 1)
-    GateFixtures.deleteRecursively(java.nio.file.Paths.get(wh, name))
-    if (spark.catalog.tableExists(name)) spark.sql(s"DROP TABLE `$name`")
+    graft.sources.TabularWriter.clearStale(spark, name)
     val staged = MaterializedJoins.stageDenorm(spark, spec, name)
     MaterializedJoins.deregister(name)
     // a fresh JVM = empty catalog, files intact: copy the staged files
@@ -450,7 +439,7 @@ class MaterializedJoinSpec extends GraftSpec {
     // re-attach from the copy under a new name
     val aside = java.nio.file.Files.createTempDirectory("mjspec_attach")
     sys.addShutdownHook(GateFixtures.deleteRecursively(aside))
-    val src = java.nio.file.Paths.get(wh, name)
+    val src = java.nio.file.Paths.get(graft.plans.TableStats.warehouseOf(spark), name)
     java.nio.file.Files.walk(src).forEach { p =>
       val t = aside.resolve(src.relativize(p).toString)
       if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(t)

@@ -430,9 +430,7 @@ class OperatorsSpec extends GraftSpec {
     // bloom vs 2.2-4.0 s without on the routed layouts) — the operator
     // must decline itself, exactly like Aggregates.byShuffledKey
     val name = "bloomaware_fact"
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    GateFixtures.deleteRecursively(java.nio.file.Paths.get(wh, name))
-    if (spark.catalog.tableExists(name)) spark.sql(s"DROP TABLE `$name`")
+    graft.sources.TabularWriter.clearStale(spark, name)
     graft.sources.TabularWriter.toBucketedTable(
       (0L until 5000L).map(i => (i, i % 997L)).toDF("row_id", "k"),
       name, "k", buckets = 4, sorted = true)

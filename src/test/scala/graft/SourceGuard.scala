@@ -2,16 +2,17 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-/** Grep over `src/main` for the guard specs that keep one concern in
+/** Grep over the sources for the guard specs that keep one concern in
   * one file ([[SchemaReadsSpec]], [[StagingLifecycleSpec]]). */
 object SourceGuard {
 
   private val comment = "^\\s*(//|\\*|/\\*)".r
 
-  /** `path:line: text` of every non-comment line under `src/main`
-    * containing `needle`, outside the files named in `allowed`. */
-  def hits(needle: String, allowed: Set[String]): List[String] = {
-    val root = java.nio.file.Paths.get("src", "main")
+  /** `path:line: text` of every non-comment line under `root` (by
+    * default `src/main`) containing `needle`, outside the files named
+    * in `allowed`. */
+  def hits(needle: String, allowed: Set[String],
+      root: java.nio.file.Path = java.nio.file.Paths.get("src", "main")): List[String] = {
     require(java.nio.file.Files.isDirectory(root), s"$root not found")
     val stream = java.nio.file.Files.walk(root)
     try {

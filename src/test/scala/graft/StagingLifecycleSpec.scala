@@ -20,4 +20,10 @@ class StagingLifecycleSpec extends AnyFunSuite {
       Set("TableStats.scala", "GraftSession.scala", "EagerAggregation.scala"))
     assert(found.isEmpty, found.mkString("\n"))
   }
+
+  test("specs under src/test reach the warehouse through TableStats.warehouseOf or TabularWriter.clearStale") {
+    val found = SourceGuard.hits("spark.sql.warehouse.dir", Set("StagingLifecycleSpec.scala"),
+      java.nio.file.Paths.get("src", "test"))
+    assert(found.isEmpty, found.mkString("\n"))
+  }
 }

@@ -60,12 +60,11 @@ object BenchBig {
         case "headline" => Headline
         case "llm" => Llm
         case "rel" => Rel
-        case s => s.split(",").toSeq
+        case s => SparkEntry.parseNames(s)
       }
       else Headline
     val reps = if (args.length > 2) args(2).toInt else 3
     require(reps >= 1, s"reps must be at least 1, got $reps")
-    SparkEntry.requireKnown(names)
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     try {
       val best = bestOf(names, reps)(n => timeReduced(spark)(SparkEntry.queries(n)(spark, dir)))
@@ -75,8 +74,8 @@ object BenchBig {
 
   /** Seconds to build `df` and reduce its full output engine-side to one
     * `sum(xxhash64(row))` row into the `noop` sink, followed by UNTIMED
-    * session hygiene: the llm/rel lists include localCheckpoint-ing
-    * queries (clustering, pagerank, IVF, tf-idf) whose checkpoint blocks
+    * session hygiene: the llm/rel lists include lineage-cutting
+    * queries (clustering, pagerank, IVF, tf-idf) whose cut blocks
     * would otherwise accumulate across ~190 executions at 50-200x data
     * scale and steal unified memory from late-alphabet measurements (the
     * exact distortion GraftSession.clearSessionState documents). */

@@ -16,12 +16,10 @@ import org.apache.spark.sql.SparkSession
 object BenchOne {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: BenchOne <name,name,...> [sfDir] [reps]")
-    val names = args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    require(names.nonEmpty, "empty query list")
+    val names = SparkEntry.parseNames(args(0))
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
     require(reps >= 1, s"reps must be at least 1, got $reps")
-    SparkEntry.requireKnown(names)
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
 
     def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =

@@ -173,11 +173,10 @@ object ProbeAdvisorSweep {
     val d = args.headOption.getOrElse("benchdata/x200")
     val reps = if (args.length > 1) args(1).toInt else 1
     val mode = if (args.length > 2) args(2) else "layout"
-    val names = if (args.length > 3) args(3).split(",").toSeq else BenchBig.Rel
+    val names = if (args.length > 3) SparkEntry.parseNames(args(3)) else BenchBig.Rel
     require(reps >= 1, s"reps must be at least 1, got $reps")
     val (layout, action) = Modes.getOrElse(mode, throw new IllegalArgumentException(
       s"unknown mode $mode (one of ${Modes.keys.toSeq.sorted.mkString(", ")})"))
-    SparkEntry.requireKnown(names)
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     try {
       val r = Run(spark, d, mode, names, reps)

@@ -35,4 +35,14 @@ object SparkEntry {
     val unknown = names.filterNot(queries.contains).toSeq.sorted
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
   }
+
+  /** The names of a comma-separated list, trimmed, empty ones dropped;
+    * fails on an empty list or (see [[requireKnown]]) an unknown name.
+    * Every dev main reads its name list through here. */
+  def parseNames(list: String): Seq[String] = {
+    val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    require(names.nonEmpty, "empty query list")
+    requireKnown(names)
+    names
+  }
 }

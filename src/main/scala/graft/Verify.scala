@@ -36,11 +36,7 @@ object Verify {
       "usage: Verify <sfDir> <outDir> [name,name,...]")
     val sfDir = args(0)
     val outDir = args(1)
-    val only = args.lift(2).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      require(names.nonEmpty, "empty query list")
-      SparkEntry.requireKnown(names)
-    }
+    val only = args.lift(2).map(SparkEntry.parseNames(_).toSet)
     def wanted(name: String): Boolean = only.forall(_.contains(name))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.local(cpus)

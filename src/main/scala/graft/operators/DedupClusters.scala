@@ -23,11 +23,10 @@ import org.apache.spark.sql.functions._
   * big cluster would make `collect_set` OOM): the per-node minimum is a
   * map-side-combinable `min` aggregate joined back to the edge list, so
   * skewed neighborhoods stay spilled-and-streamed and AQE can split
-  * them. Lineage is cut every round with an eager `localCheckpoint`
+  * them. Lineage is cut every round with [[Materialize.truncate]]
   * (iterative plans otherwise grow superlinearly and re-execute the
-  * whole prefix each action); for multi-hour cluster jobs prefer
-  * `sparkContext.setCheckpointDir` + `.checkpoint()` durability — the
-  * structure is identical.
+  * whole prefix each action); its scaladoc states what a lost executor
+  * does to the cut and how a checkpoint directory makes it durable.
   */
 object DedupClusters {
 
@@ -43,15 +42,14 @@ object DedupClusters {
     */
   def connectedComponents(pairs: DataFrame, a: Column, b: Column,
       maxIter: Int = 50): DataFrame = {
-    // ONE lazily-checkpointed canonical pair frame feeds both the node
-    // set and the edge set: the first signature action below
-    // materializes the whole setup in a single job (eager per-frame
-    // checkpoints would burn one fixed-cost job each before the loop
+    // ONE cut canonical pair frame feeds both the node set and the
+    // edge set: on the default (lazy) path the first signature action
+    // below materializes the whole setup in a single job (eager
+    // per-frame cuts would burn one fixed-cost job each before the loop
     // even starts, and `nodes` would otherwise re-run the full
     // upstream pair-detection pipeline at the final join)
-    val canon = pairs
-      .select(least(a, b).cast("long").as("u"), greatest(a, b).cast("long").as("v"))
-      .localCheckpoint(false)
+    val canon = Materialize.truncate(pairs
+      .select(least(a, b).cast("long").as("u"), greatest(a, b).cast("long").as("v")))
 
     // all ids, incl. nodes whose only edge is a self-loop (u == v rows
     // survive in `canon`, dropped only from the edge set)
@@ -59,20 +57,17 @@ object DedupClusters {
       .union(canon.select(col("v").as("id")))
       .distinct()
 
-    var edges = canon
-      .where(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(false)
+    var edges = Materialize.truncate(canon.where(col("u") =!= col("v")).distinct())
 
     var prev = signature(edges)
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
-      // LAZY checkpoint: the fused signature right below is the round's
-      // single materializing action (an eager checkpoint would run a
-      // second, redundant job per round just to cache the same
-      // partitions)
-      edges = smallStar(largeStar(edges)).localCheckpoint(false)
+      // per-round cut; on the default (lazy) path the fused signature
+      // right below is the round's single materializing action (an
+      // eager cut would run a second, redundant job per round just to
+      // cache the same partitions)
+      edges = Materialize.truncate(smallStar(largeStar(edges)))
       val sig = signature(edges)
       converged = sig == prev
       prev = sig

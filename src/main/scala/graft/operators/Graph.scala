@@ -31,16 +31,10 @@ object Graph {
     * standard market-basket constraint — the reference's workloads cap
     * the analogous per-user history the same way).
     *
-    * The returned frame is backed by a `localCheckpoint` of the
-    * canonical half-edge set (see body): its lineage is TRUNCATED, so
-    * it cannot be recomputed after the blocks are dropped — callers
-    * must not hold it across `GraftSession.clearSessionState` (which
-    * unpersists every persistent RDD) and, on a cluster, a lost
-    * executor fails the consumer instead of recomputing
-    * (pageRankNano's scaladoc documents the same trade; long-lived
-    * cluster jobs should re-derive edges or use `setCheckpointDir` +
-    * `.checkpoint()`). Each query in the engine's mains rebuilds its
-    * frames per run, so the fragility is bounded to one invocation. */
+    * The returned frame reads the canonical half-edge set through a
+    * lineage cut (see body): [[Materialize.truncate]] states when its
+    * rows can be lost (across `GraftSession.clearSessionState`, or with
+    * an executor) and how a checkpoint directory makes them durable. */
   def coOccurrenceEdges(df: DataFrame, basket: Column, item: Column): DataFrame =
     // ONE exchange by basket (shuffle-first: a collect_set partial over
     // spread high-cardinality baskets can't reduce — Aggregates
@@ -66,10 +60,8 @@ object Graph {
         .select(explode(col("its")).as("src"), col("its"))
         .select(col("src"), explode(col("its")).as("dst"))
         .filter(col("src") < col("dst"))
-      // the deduped half is localCheckpoint'ed (lazy=false only defers
-      // the FINAL result stage under AQE: localCheckpoint calls
-      // executedPlan.execute(), which materializes every upstream
-      // shuffle stage eagerly at construction — building the edges
+      // the deduped half is cut (under AQE the cut materializes every
+      // upstream shuffle stage at construction — building the edges
       // frame, even for explain-only paths, already runs the basket
       // aggregate and dedup shuffles): the union below
       // reads it twice (direct + mirrored) and downstream consumers
@@ -79,12 +71,11 @@ object Graph {
       // aggregate ran once PER CONSUMER STAGE (event-log measured at
       // sf0.1: two identical shuffle-read-2.4M → emit-364k stages per
       // execution, the two dominant stages of the whole query). The
-      // checkpoint caches the smallest frame in the pipeline (the
+      // cut holds the smallest frame in the pipeline (the
       // canonical half-edge set, |E|/2 rows — at 100 TB the exploded
       // pair set is ~2× bigger and the basket relation bigger still),
       // so the dedup runs exactly once per run.
-      val half = pairs.repartition(col("src"), col("dst")).distinct()
-        .localCheckpoint(false)
+      val half = Materialize.truncate(pairs.repartition(col("src"), col("dst")).distinct())
       half.union(half.select(col("dst").as("src"), col("src").as("dst")))
     }
 
@@ -97,23 +88,21 @@ object Graph {
     *
     * Iteration mechanics, same discipline as
     * [[DedupClusters.connectedComponents]]: the (src, dst, deg) frame
-    * is LAZILY localCheckpoint'ed once — an edge derivation like
+    * is cut once ([[Materialize.truncate]]) — an edge derivation like
     * [[coOccurrenceEdges]] is a multi-hundred-million-row self-join
     * that would otherwise re-execute inside EVERY sweep's plan (the
     * measured cost at x200 was 2× the whole query) — and the rank
     * frontier is checkpointed every `checkpointEvery` sweeps, cutting
     * the superlinear lineage growth driver-loop iteration always
-    * produces. Per-sweep frontier checkpoints are NOT free: each one
+    * produces. Per-sweep frontier cuts are NOT free: each one
     * materializes + caches the node-sized frame and breaks the unrolled
     * plan into synchronous stages (measured ~30% of the whole 3-sweep
     * query at sf0.1 AND x200), while a handful of unrolled sweeps is
     * exactly what Catalyst handles well — so shallow runs (iters <
     * checkpointEvery) run as ONE plan over the checkpointed edge frame
-    * and only deep convergence loops pay the periodic cut. Checkpointed
-    * blocks are released by the ContextCleaner when the frames go out
-    * of scope (no session-lifetime persist leak); multi-hour
-    * convergence jobs should prefer `setCheckpointDir` + `.checkpoint()`
-    * durability, structure identical. */
+    * and only deep convergence loops pay the periodic cut.
+    * [[Materialize.truncate]] states the cut's storage, executor-loss
+    * and cleanup contract. */
   def pageRankNano(edges: DataFrame, iters: Int,
       dampNano: Long = 850000000L, checkpointEvery: Int = 5): DataFrame = {
     require(iters >= 1 && dampNano >= 0 && dampNano <= 1000000000L,
@@ -121,7 +110,7 @@ object Graph {
     require(checkpointEvery >= 1, s"pageRankNano: checkpointEvery >= 1, got $checkpointEvery")
     val teleport = 1000000000L - dampNano
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    val ej = edges.join(deg, "src").localCheckpoint(false) // (src, dst, deg), built once
+    val ej = Materialize.truncate(edges.join(deg, "src")) // (src, dst, deg), built once
     val init = ej.select(col("src").as("id"), lit(1000000000L).as("rank")).distinct()
     (1 to iters).foldLeft(init) { (rank, i) =>
       val nxt = ej.join(rank, ej("src") === rank("id"))
@@ -131,7 +120,7 @@ object Graph {
           (lit(teleport) +
             expr(s"(s div 1000000000) * $dampNano") +
             expr(s"((s % 1000000000) * $dampNano) div 1000000000")).as("rank"))
-      if (i % checkpointEvery == 0 && i < iters) nxt.localCheckpoint(false) else nxt
+      if (i % checkpointEvery == 0 && i < iters) Materialize.truncate(nxt) else nxt
     }
   }
 }

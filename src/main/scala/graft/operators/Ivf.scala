@@ -94,22 +94,12 @@ object Ivf {
     * Clusters that attracted no vectors report 0. */
   def clusterSummary(corpus: DataFrame, id: Column, vec: Column,
       k: Int, iters: Int, scale: Double): DataFrame = {
-    // lazily localCheckpoint: kmeans re-reads this frame iters+1 times
-    // (init + every Lloyd sweep) and the occupancy count once more — an
-    // expensive upstream pipeline would otherwise re-execute per sweep.
-    // KNOWN TRADE (round-13 audit): localCheckpoint truncates lineage,
-    // so on a cluster a lost executor FAILS the query instead of
-    // recomputing the blocks; each engine main rebuilds its frames per
-    // run, bounding the fragility to one invocation. The lineage-safe
-    // alternative — persist(MEMORY_AND_DISK) — was A/B'd both ways:
-    // within noise at sf0.1 but 30-60% SLOWER at x50 (ivf_kmeans 3.90
-    // -> 5.15 s, ann_topk_ivf 4.24 -> 5.73, ann_topk_pq 1.98 -> 3.20
-    // mins of 3): the columnar InMemoryRelation encode/decode of the
-    // array<long>/array<double> vector columns grows with the data
-    // while localCheckpoint stores raw rows. Reverted; long-lived
-    // cluster jobs should use setCheckpointDir + .checkpoint() for
-    // durability (structure identical). OPTIMIZATION_r13.md §6.
-    val q = quantized(corpus, id, vec, scale).localCheckpoint(false)
+    // cut: kmeans re-reads this frame iters+1 times (init + every
+    // Lloyd sweep) and the occupancy count once more — an expensive
+    // upstream pipeline would otherwise re-execute per sweep.
+    // Materialize.truncate documents the executor-loss contract and why
+    // persist was rejected for these vector frames.
+    val q = Materialize.truncate(quantized(corpus, id, vec, scale))
     val cents = kmeans(q, k, iters)
     val spark = corpus.sparkSession
     import spark.implicits._
@@ -129,9 +119,9 @@ object Ivf {
     * scanned, never collected. */
   def topK(queries: DataFrame, corpus: DataFrame, k: Int,
       nClusters: Int, iters: Int, nprobe: Int, scale: Double): DataFrame = {
-    // lazily localCheckpoint — see clusterSummary for the measured
-    // persist trade (30-60% slower at x50) and the executor-loss note
-    val cq = quantized(corpus, col("id"), col("vec"), scale).localCheckpoint(false)
+    // cut: kmeans re-reads it per sweep (see clusterSummary and
+    // Materialize.truncate)
+    val cq = Materialize.truncate(quantized(corpus, col("id"), col("vec"), scale))
     val cents = kmeans(cq, nClusters, iters)
     val c = Ann.withNorm(cq.select(col("id").as("n_id"), col("vec").as("cv"),
       nearestCentroid(col("qv"), cents).as("cid")), "cv", "__cn")
@@ -160,9 +150,9 @@ object Ivf {
   def semanticPrune(corpus: DataFrame, threshold: Double,
       k: Int, iters: Int, scale: Double): DataFrame = {
     import graft.functions.VectorFunctions.dot
-    // lazily localCheckpoint — see clusterSummary for the measured
-    // persist trade (30-60% slower at x50) and the executor-loss note
-    val cq = quantized(corpus, col("id"), col("vec"), scale).localCheckpoint(false)
+    // cut: kmeans re-reads it per sweep (see clusterSummary and
+    // Materialize.truncate)
+    val cq = Materialize.truncate(quantized(corpus, col("id"), col("vec"), scale))
     val cents = kmeans(cq, k, iters)
     val asg = cq.select(col("id"), col("vec"),
       nearestCentroid(col("qv"), cents).as("cluster_id"))

@@ -121,12 +121,11 @@ object Pq {
       m: Int, ksub: Int, iters: Int, scale: Double, dim: Int): DataFrame = {
     require(dim % m == 0, s"pq: dim $dim not divisible by m=$m")
     val dsub = dim / m
-    // lazily localCheckpoint (the Ivf.clusterSummary discipline): train
-    // re-reads this frame iters+1 times and the occupancy count once
-    // more; see clusterSummary for the measured persist trade (the
-    // lineage-safe variant is 30-60% slower at x50) and the
-    // executor-loss fragility note
-    val sq = subQuantized(corpus, id, vec, m, dsub, scale).localCheckpoint(false)
+    // cut (the Ivf.clusterSummary discipline): train re-reads this
+    // frame iters+1 times and the occupancy count once more;
+    // Materialize.truncate documents the executor-loss contract and
+    // the rejected persist trade
+    val sq = Materialize.truncate(subQuantized(corpus, id, vec, m, dsub, scale))
     val books = train(sq, m, ksub, iters)
     val counts = sq.select(col("sub").cast("long").as("sub"),
         nearestCode(col("sub"), col("sv"), books).as("cluster_id"))
@@ -152,8 +151,9 @@ object Pq {
       m: Int, ksub: Int, iters: Int, scale: Double, dim: Int): DataFrame = {
     require(dim % m == 0, s"pq: dim $dim not divisible by m=$m")
     val dsub = dim / m
-    // lazily localCheckpoint — see codebookSummary
-    val sq = subQuantized(corpus, col("id"), col("vec"), m, dsub, scale).localCheckpoint(false)
+    // cut: train re-reads it per sweep (see codebookSummary and
+    // Materialize.truncate)
+    val sq = Materialize.truncate(subQuantized(corpus, col("id"), col("vec"), m, dsub, scale))
     val books = train(sq, m, ksub, iters)
     val c = encode(corpus, col("id"), col("vec"), books, m, dsub, scale)
       .select(col("id").as("n_id"), col("codes"))

@@ -76,19 +76,19 @@ object SeqPack {
     val wIn = Window.partitionBy(col("bkt")).orderBy(col("k"))
     val inBucket = bucketed.withColumn("cumIn",
       coalesce(sum(col("n_tokens")).over(wIn.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-    // bucket totals: map-side-combinable groupBy (no sort), then a LAZY
-    // localCheckpoint before the offsets theta-join. The checkpoint is a
+    // bucket totals: map-side-combinable groupBy (no sort), then a cut
+    // (Materialize.truncate) before the offsets theta-join. The cut is a
     // hard plan barrier: without it the self-join inside bucketOffsets
     // duplicates this whole subtree, and column pruning rewrites the
     // bkt-only side into its OWN full scan+tokenize pass (a third scan
     // of the corpus, measured at x200: 1.77 s → 1.45 s with the
-    // barrier + the key-only stats scan). The checkpointed state is
+    // barrier + the key-only stats scan). The cut frame is
     // ≤`buckets` rows by construction — bounded regardless of corpus
     // size. The remaining shape (2 scans + 1 bkt shuffle) is the
     // scale-out optimum short of an extra full key shuffle: scans
     // parallelize freely on a cluster, a third shuffle would not.
-    val bktTotals = bucketed.groupBy(col("bkt")).agg(sum(col("n_tokens")).as("bktTok"))
-      .localCheckpoint(false)
+    val bktTotals = Materialize.truncate(
+      bucketed.groupBy(col("bkt")).agg(sum(col("n_tokens")).as("bktTok")))
     val offsets = Buckets.bucketOffsets(bktTotals, "bkt", "bktTok", "bktOffset")
     inBucket.join(broadcast(offsets), "bkt")
       .withColumn("tokens_before", col("bktOffset") + col("cumIn"))

@@ -161,16 +161,15 @@ object TermStats {
       .collect().flatMap(r => Option(r.getString(0))).sorted.toSeq
     require(terms.nonEmpty,
       "bm25TopK: queries must carry at least one non-null term")
-    val tfq = base
+    // feeds BOTH the df aggregate and the scoring join; the cut keeps
+    // the corpus scan single (df materializes it)
+    val tfq = Materialize.truncate(base
       .select(col("doc_id"),
         TextFunctions.tokenCount(col("__text")).cast("long").as("dl"),
         explode(graft.functions.expressions.GraftExpressions
           .term_set_counts(TextFunctions.tokenize(col("__text")), terms)).as("tc"))
       .select(col("doc_id"), col("dl"), col("tc.term").as("term"),
-        col("tc.tf").cast("long").as("tf"))
-      // feeds BOTH the df aggregate and the scoring join; the lazy
-      // checkpoint keeps the corpus scan single (df materializes it)
-      .localCheckpoint(false)
+        col("tc.tf").cast("long").as("tf")))
     val dfq = tfq.groupBy("term").agg(count(lit(1)).as("df"))
     val stats = base.agg(count(lit(1)).as("__n"),
       sum(TextFunctions.tokenCount(col("__text")).cast("long")).as("__sdl"))

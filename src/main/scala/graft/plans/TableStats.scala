@@ -166,6 +166,15 @@ object TableStats {
   /** Drop every cached entry (tests; cross-process refresh). */
   def invalidateCache(): Unit = cache.clear()
 
+  /** Delete the record of every file read under `df` and drop the
+    * cache: a spec that needs unmeasured tables creates that state. */
+  private[graft] def forget(spark: SparkSession, df: DataFrame): Unit = {
+    val wh = warehouseOf(spark)
+    df.queryExecution.analyzed.collectLeaves()
+      .collect { case FileLeaf(_, _, key) => Files.deleteIfExists(fileFor(wh, key)) }
+    invalidateCache()
+  }
+
   private def persist(warehouse: String, stats: Stats): Unit = {
     val f = fileFor(warehouse, stats.key)
     Files.createDirectories(f.getParent)

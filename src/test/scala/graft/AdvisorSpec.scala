@@ -94,6 +94,8 @@ class AdvisorSpec extends GraftSpec {
 
   test("advise: benefit signal discounts hits behind selective filters; minBenefitFraction declines staging") {
     val li = Tables.lineitem(spark, sf)
+    // the selectivity constants apply only while no measured NDV exists
+    graft.plans.TableStats.forget(spark, li)
     def rollup(d: org.apache.spark.sql.DataFrame) =
       d.groupBy(col("l_orderkey")).agg(sum(col("l_quantity")).as("q"))
     // full-table aggregate: the whole table crosses the exchange

@@ -124,4 +124,13 @@ class ClusterSpec extends GraftSpec {
       n = 3, k = 16, bands = 4, threshold = 0.5).count()
     assert(residual === 0L)
   }
+
+  test("durable cut: with a checkpoint dir set, the same rows read from reliable checkpoints") {
+    // in a child JVM: a checkpoint dir cannot be unset, and later suites
+    // must keep the default path
+    val (results, out) = MaterializeChild.run("durable", "local[2]")
+    val expected = Map("durable-rows" -> "equal",
+      "default-plan" -> "local", "durable-plan" -> "reliable")
+    assert(results === expected, out.linesIterator.toSeq.takeRight(80).mkString("\n"))
+  }
 }

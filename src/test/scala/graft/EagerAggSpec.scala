@@ -295,6 +295,8 @@ class EagerAggSpec extends GraftSpec {
   test("declared unique keys decline provably-useless fires (q12's shape)") {
     val li = Tables.lineitem(spark, sf)
     val o = Tables.orders(spark, sf)
+    // the declared conf decides only while no measured stats exist
+    Seq(li, o).foreach(graft.plans.TableStats.forget(spark, _))
     // q12 shape: grouping on the left, agg input on the right, pre-agg
     // key = o_orderkey — declared unique in GraftSession, so every
     // group is a singleton and the fire is pure cost → must decline

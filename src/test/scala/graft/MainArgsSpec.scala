@@ -42,12 +42,25 @@ class MainArgsSpec extends GraftSpec {
     // the padded name is known once trimmed, so reps is what fails
     assert(rejected(BenchOne.main(Array(" metric_mrr , ,", sf, "0")))._1.contains("reps"))
     assert(rejected(BenchOne.main(Array(" , ", sf)))._1.contains("empty query list"))
+    // BenchBig and the sweep parse the same way: only the unknown name
+    // is reported, the padded known one got past the check
+    for (main <- Seq[String => Unit](
+        names => BenchBig.main(Array(sf, names, "1")),
+        names => ProbeAdvisorSweep.main(Array(sf, "1", "check", names)))) {
+      val (msg, printed) = rejected(main(" metric_mrr , ,no_such_query"))
+      assert(msg.endsWith("unknown queries: no_such_query"), msg)
+      assert(printed.isEmpty, printed)
+      assert(rejected(main(" , "))._1.contains("empty query list"))
+    }
   }
 
   test("BenchBig rejects an unknown name before running any query") {
     val (msg, printed) = rejected(BenchBig.main(Array(sf, "metric_mrr,no_such_query", "1")))
     assert(msg.contains("no_such_query"), msg)
     assert(printed.isEmpty, printed)
+    // the preset lists (BenchBig's and the sweep's default) are checked
+    // here; only an explicit list is checked at run time
+    SparkEntry.requireKnown(BenchBig.Headline ++ BenchBig.Llm ++ BenchBig.Rel)
   }
 
   test("BenchBig rejects reps < 1 before running any query") {

@@ -46,7 +46,28 @@ object Materialize {
     *    `spark.cleaner.referenceTracking.cleanCheckpoints` says (off by
     *    default: they outlive the session).
     */
-  def truncate(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
-    else df.localCheckpoint(false)
+  def truncate(df: DataFrame): DataFrame = {
+    val sc = df.sparkSession.sparkContext
+    val durable = sc.getCheckpointDir.isDefined
+    // Spark names an RDD's creation site after the first frame outside
+    // Spark, which would be this file for every cut: name the caller's
+    // line instead (what `graft.Explain` and the Spark UI show for the
+    // cut), and restore the caller's own call site afterwards
+    val caller = Thread.currentThread.getStackTrace.toSeq
+      .dropWhile(!_.getClassName.startsWith(Self))
+      .dropWhile(_.getClassName.startsWith(Self))
+    val saved = Seq(ShortSite, LongSite).map(k => k -> sc.getLocalProperty(k))
+    caller.headOption.foreach { f =>
+      sc.setLocalProperty(ShortSite,
+        s"${if (durable) "checkpoint" else "localCheckpoint"} at ${f.getFileName}:${f.getLineNumber}")
+      sc.setLocalProperty(LongSite, caller.take(20).mkString("\n"))
+    }
+    try if (durable) df.checkpoint(true) else df.localCheckpoint(false)
+    finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+  }
+
+  private val Self = getClass.getName.stripSuffix("$")
+  // the local properties SparkContext.getCallSite prefers to the stack
+  private val ShortSite = "callSite.short"
+  private val LongSite = "callSite.long"
 }

@@ -68,11 +68,12 @@ object Freshness {
     entries.sorted
   }
 
-  /** Inventory lines of a parquet read of `path` (same strings the
-    * fingerprint hashes — `sha1(lines.mkString("\n")) == ofPath`). */
-  def entriesOfPath(spark: SparkSession, path: String): Seq[String] =
-    singleIndex(FileSchemas.read(spark, path.split(',').toIndexedSeq)).map(entriesOfIndex)
-      .getOrElse(sys.error(s"Freshness.entriesOfPath($path): no single file scan"))
+  /** Inventory lines of the single file scan under `df`'s analyzed
+    * plan (same strings the fingerprint hashes —
+    * `sha1(lines.mkString("\n")) == ofLeaf(df)`). */
+  def entriesOfLeaf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    singleIndex(df).map(entriesOfIndex)
+      .getOrElse(sys.error("Freshness.entriesOfLeaf: no single file scan"))
 
   /** The index of the one file scan under `df`'s analyzed plan, if one. */
   private def singleIndex(df: org.apache.spark.sql.DataFrame): Option[FileIndex] =
@@ -85,7 +86,7 @@ object Freshness {
   def ofIndex(idx: FileIndex): String =
     sha1(entriesOfIndex(idx).mkString("\n"))
 
-  /** Fingerprint of an [[entriesOfIndex]]/[[entriesOfPath]] inventory. */
+  /** Fingerprint of an [[entriesOfIndex]]/[[entriesOfLeaf]] inventory. */
   def ofEntries(entries: Seq[String]): String =
     sha1(entries.sorted.mkString("\n"))
 

@@ -181,19 +181,19 @@ object MaterializedAggs extends LayoutRegistry {
       name: String): Meta = withRuleOff(spark) {
     import org.apache.spark.sql.functions.{col, expr}
     val fact = FileSchemas.read(spark, spec.factPath.split(',').toIndexedSeq)
-    val inventory = Freshness.entriesOfPath(spark, spec.factPath)
+    val inventory = Freshness.entriesOfLeaf(fact)
     val fp = Freshness.ofEntries(inventory)
     val aggs = spec.measures.map(m => expr(m.agg).as(m.name))
     require(aggs.nonEmpty, s"stageRollup($name): no measures advised")
     require(spec.keys.nonEmpty, s"stageRollup($name): no keys advised")
     val rolled = fact.groupBy(spec.keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
-    graft.sources.TabularWriter.toBucketedTable(
-      rolled, name, spec.keys.head, spec.buckets, sorted = true)
-    // stats as product: rowCount + per-column NDV of the rollup keys
-    // (a single key is unique by construction — the measurement
-    // proves it to EagerAggregation; composite key columns measure
-    // low individually and claim nothing)
-    TableStats.analyze(spark, spark.table(name), name, spec.keys)
+    // stats as product, measured by the staging write itself: rowCount +
+    // per-column NDV of the rollup keys (a single key is unique by
+    // construction — the measurement proves it to EagerAggregation;
+    // composite key columns measure low individually and claim nothing)
+    TableStats.recordWrite(spark, rolled, name, spec.keys)(
+      graft.sources.TabularWriter.toBucketedTable(_, name, spec.keys.head, spec.buckets,
+        sorted = true))
     val meta = Meta(name, spec.fact, spec.factPath,
       spec.keys.map(_.toLowerCase), spec.measures, fp)
     Freshness.writeSidecar(spark, name, RollupSidecar, sidecarBody(meta, inventory))
@@ -239,6 +239,23 @@ object MaterializedAggs extends LayoutRegistry {
     * any non-append drift (a staged file missing or resized — the
     * delta is then not well-defined).
     *
+    * One co-partitioned pass: only the delta moves. Its raw rows are
+    * repartitioned on the staged bucket column into the staged bucket
+    * count before their per-key aggregate, so they land in the hash
+    * partitioning the staged rollup's bucketed scan already reports
+    * (pinned on by `TabularWriter.withBucketedScan`). The union of the
+    * two then reports that partitioning too
+    * (`spark.sql.unionOutputPartitioning`, on by default), which
+    * satisfies the merge aggregate's clustering on all keys (the bucket
+    * column is the first key) and `toBucketedTable`'s own repartition:
+    * the plan is one shuffle of the delta's rows and one task per
+    * bucket that merges, sorts and writes it. The rollup's
+    * stats come from that write ([[TableStats.recordWrite]]), not from
+    * a re-scan. Driver cost per refresh: one listing of the fact (its
+    * schema from `FileSchemas`), the frames' analysis — which also
+    * classifies every measure's merge ([[mergeKinds]]) — and the swap's
+    * two renames and drop.
+    *
     * The swap is [[graft.sources.TabularWriter.swap]]'s rename-aside
     * (`__refreshing`/`__prerefresh`): every crash window keeps both
     * copies on disk, and the post-swap window before the new sidecar
@@ -247,6 +264,7 @@ object MaterializedAggs extends LayoutRegistry {
     * a half-refreshed table. Returns (and registers) the refreshed
     * Meta; a no-op when the base is unchanged. */
   def refreshRollup(spark: SparkSession, meta: Meta): Meta = {
+    import graft.sources.TabularWriter
     import org.apache.spark.sql.functions.{col, expr, max, min, sum}
     val ident = org.apache.spark.sql.catalyst.TableIdentifier(meta.catalogTable)
     val cat = spark.sessionState.catalog.getTableMetadata(ident)
@@ -256,81 +274,88 @@ object MaterializedAggs extends LayoutRegistry {
     require(staged.nonEmpty,
       s"refreshRollup(${meta.catalogTable}): sidecar records no file " +
         "inventory (pre-refresh staging) — re-stage")
-    val live = Freshness.entriesOfPath(spark, meta.factPath)
+    val factDf = FileSchemas.read(spark, meta.factPath.split(',').toIndexedSeq)
+    val live = Freshness.entriesOfLeaf(factDf)
     if (staged.toSet == live.toSet) return meta // fresh — no-op
     val missing = staged.toSet -- live.toSet
     require(missing.isEmpty,
       s"refreshRollup(${meta.catalogTable}): base files changed or " +
         s"disappeared (${missing.take(3).mkString("; ")}) — growth is not " +
         "append-only, re-stage")
+    val spec = cat.bucketSpec.getOrElse(sys.error(
+      s"refreshRollup(${meta.catalogTable}): not a bucketed table"))
+    val bucketCol = spec.bucketColumnNames.head
     // the merge plans below must not be served by a registered rollup
     withRuleOff(spark) {
-      val factDf = FileSchemas.read(spark, meta.factPath.split(',').toIndexedSeq)
-      val kinds: Seq[(Measure, String)] = meta.measures.map { ms =>
-        ms -> mergeKind(factDf, ms.agg).getOrElse(
-          throw new IllegalArgumentException(
-            s"refreshRollup(${meta.catalogTable}): measure ${ms.name} = " +
-              s"${ms.agg} does not merge (distinct or non-decomposable) — re-stage"))
-      }
       val deltaFiles = live.filterNot(staged.toSet)
         .map(l => l.substring(0, l.lastIndexOf(' ')))
       val deltaAggs = meta.measures.map(ms => expr(ms.agg).as(ms.name))
       val delta = spark.read.schema(factDf.schema)
         .parquet(deltaFiles.toIndexedSeq: _*)
+        .repartition(spec.numBuckets, col(bucketCol))
         .groupBy(meta.keys.map(col): _*).agg(deltaAggs.head, deltaAggs.tail: _*)
-      val old = spark.table(meta.catalogTable)
-      val orderedCols = old.columns.toSeq.map(col)
-      val mergeExprs = kinds.map { case (ms, k) =>
-        val storedType = old.schema(ms.name).dataType
-        (k match {
-          // a re-sum widens (decimals) — cast back to the stored type,
-          // bit-exact by the same argument as the coarser-grain serve
-          case "sum" => sum(col(ms.name)).cast(storedType)
-          case "min" => min(col(ms.name))
-          case "max" => max(col(ms.name))
-        }).as(ms.name)
+      val kinds = meta.measures.zip(mergeKinds(delta, meta.measures)).map {
+        case (ms, k) => ms -> k.getOrElse(throw new IllegalArgumentException(
+          s"refreshRollup(${meta.catalogTable}): measure ${ms.name} = " +
+            s"${ms.agg} does not merge (distinct or non-decomposable) — re-stage"))
       }
-      val merged = old.unionByName(delta.select(orderedCols: _*))
-        .groupBy(meta.keys.map(col): _*)
-        .agg(mergeExprs.head, mergeExprs.tail: _*)
-        .select(orderedCols: _*)
-      val spec = cat.bucketSpec.getOrElse(sys.error(
-        s"refreshRollup(${meta.catalogTable}): not a bucketed table"))
-      graft.sources.TabularWriter.swap(spark, meta.catalogTable,
-          "__refreshing", "__prerefresh") { tmp =>
-        graft.sources.TabularWriter.toBucketedTable(
-          merged, tmp, spec.bucketColumnNames.head, spec.numBuckets, sorted = true)
+      TabularWriter.withBucketedScan(spark) {
+        val old = spark.table(meta.catalogTable)
+        val orderedCols = old.columns.toSeq.map(col)
+        val mergeExprs = kinds.map { case (ms, k) =>
+          val storedType = old.schema(ms.name).dataType
+          (k match {
+            // a re-sum widens (decimals) — cast back to the stored type,
+            // bit-exact by the same argument as the coarser-grain serve
+            case "sum" => sum(col(ms.name)).cast(storedType)
+            case "min" => min(col(ms.name))
+            case "max" => max(col(ms.name))
+          }).as(ms.name)
+        }
+        val merged = old.unionByName(delta.select(orderedCols: _*))
+          .groupBy(meta.keys.map(col): _*)
+          .agg(mergeExprs.head, mergeExprs.tail: _*)
+          .select(orderedCols: _*)
+        TableStats.recordWrite(spark, merged, meta.catalogTable, meta.keys) { m =>
+          TabularWriter.swap(spark, meta.catalogTable, "__refreshing", "__prerefresh") {
+            TabularWriter.toBucketedTable(m, _, bucketCol, spec.numBuckets, sorted = true)
+          }
+        }
       }
       val fresh = meta.copy(fingerprint = Freshness.ofEntries(live))
       Freshness.writeSidecar(spark, meta.catalogTable, RollupSidecar,
         sidecarBody(fresh, live))
-      TableStats.analyze(spark, spark.table(meta.catalogTable),
-        meta.catalogTable, meta.keys)
       RewriteMaterializedAgg.invalidate(meta.catalogTable)
       register(fresh)
       fresh
     }
   }
 
-  /** How a staged measure's per-key partials MERGE across delta
-    * batches: sum/count (filtered or not — the filter applies inside
-    * each partial) merge by sum, min/max by themselves; distinct and
-    * everything else do not merge. */
-  private def mergeKind(fact: org.apache.spark.sql.DataFrame,
-      agg: String): Option[String] = {
+  /** How each staged measure's per-key partials MERGE across delta
+    * batches, read off the delta aggregate's analyzed plan (no extra
+    * analysis or optimizer pass): sum/count (filtered or not — the
+    * filter applies inside each partial) merge by sum, min/max by
+    * themselves; distinct and everything else do not merge. A
+    * runtime-replaceable aggregate (`count_if`, `bool_and`…) is judged
+    * by the aggregate the optimizer replaces it with. */
+  private def mergeKinds(delta: org.apache.spark.sql.DataFrame,
+      measures: Seq[Measure]): Seq[Option[String]] = {
     import org.apache.spark.sql.catalyst.expressions.aggregate.{Count, Max, Min, Sum}
-    val qe = fact.groupBy()
-      .agg(org.apache.spark.sql.functions.expr(agg).as("__m")).queryExecution
-    qe.optimizedPlan.collectFirst { case ag: Aggregate => ag }.flatMap { ag =>
-      val aes = ag.aggregateExpressions.flatMap(_.collect {
-        case ae: AggregateExpression => ae
-      })
-      if (aes.size != 1 || aes.head.isDistinct) None
-      else aes.head.aggregateFunction match {
-        case _: Sum | _: Count => Some("sum")
-        case _: Min => Some("min")
-        case _: Max => Some("max")
-        case _ => None
+    def kind(f: Expression): Option[String] = f match {
+      case _: Sum | _: Count => Some("sum")
+      case _: Min => Some("min")
+      case _: Max => Some("max")
+      case r: RuntimeReplaceableAggregate => kind(r.replacement)
+      case _ => None
+    }
+    val byName = delta.queryExecution.analyzed.collectFirst { case ag: Aggregate => ag }
+      .toSeq.flatMap(_.aggregateExpressions).collect { case al: Alias => al.name -> al }.toMap
+    measures.map { ms =>
+      byName.get(ms.name).flatMap { al =>
+        al.collect { case ae: AggregateExpression => ae } match {
+          case Seq(ae) if !ae.isDistinct => kind(ae.aggregateFunction)
+          case _ => None
+        }
       }
     }
   }

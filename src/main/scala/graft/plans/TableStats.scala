@@ -37,7 +37,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Staleness contract: stats only tune optimizer choices — a stale
   * NDV can cost performance, never correctness (EagerAggregation's
   * rewrite is exact whenever it fires; the advisor only ranks).
-  * Re-[[analyze]] after a bulk append to restore measurement.
+  * Re-[[analyze]] after a bulk append to restore measurement. Staged
+  * rollups never go stale this way: staging and every refresh record
+  * the rollup's stats from their own write ([[recordWrite]]).
   *
   * Reference analog: the reference hand-tunes its shard counts and
   * fusion choices per pipeline (sharding.py:168-205 fixes the shard
@@ -97,14 +99,48 @@ object TableStats {
     * under `key` and returns the measurement. */
   def analyze(spark: SparkSession, df: DataFrame, key: String,
       cols: Seq[String]): Stats = {
+    val (present, aggs) = measures(df, cols)
+    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+    record(spark, key, present, row.getAs[Long], df)
+  }
+
+  /** Write `df` through `write` (which must leave catalog table `table`
+    * holding exactly `df`'s rows) and record `table`'s stats from that
+    * same pass: the written frame carries an `Observation` of
+    * [[analyze]]'s aggregates, read once `write` has returned
+    * (`Observation.get` blocks until the write's metrics arrive). The
+    * record equals what [[analyze]] over the written table records —
+    * the row count is exact, HLL++ registers do not depend on row order
+    * or partitioning, and the fingerprint is taken of the table's files
+    * after `write` — without a second scan of what was just written.
+    * Staged rollups record their stats here. */
+  def recordWrite(spark: SparkSession, df: DataFrame, table: String,
+      cols: Seq[String])(write: DataFrame => Unit): Stats = {
+    val (present, aggs) = measures(df, cols)
+    val obs = org.apache.spark.sql.Observation()
+    write(df.observe(obs, aggs.head, aggs.tail: _*))
+    val row = obs.get
+    record(spark, table, present, row(_).asInstanceOf[Long], spark.table(table))
+  }
+
+  /** The stats aggregates over `df`, named [[RowsCol]] (exact row
+    * count) and after each column of `cols` present in the frame
+    * (HLL++ NDV; the present columns are returned first). */
+  private def measures(df: DataFrame, cols: Seq[String]) = {
     import org.apache.spark.sql.functions.{approx_count_distinct, col, count, lit}
     val present = cols.distinct.filter(df.columns.contains)
-    val aggs = count(lit(1L)).as("_graft_rows") +:
-      present.map(c => approx_count_distinct(col(c)).as(c))
-    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    val stats = Stats(key, row.getLong(0),
-      present.zipWithIndex.map { case (c, i) => c -> row.getLong(i + 1) }.toMap,
-      fingerprint = Freshness.ofLeaf(df))
+    (present, count(lit(1L)).as(RowsCol) +:
+      present.map(c => approx_count_distinct(col(c)).as(c)))
+  }
+
+  private val RowsCol = "_graft_rows"
+
+  /** Persist the [[measures]] values (`value` by name) under `key`,
+    * fingerprinted by the file scan under `measured`. */
+  private def record(spark: SparkSession, key: String, present: Seq[String],
+      value: String => Long, measured: DataFrame): Stats = {
+    val stats = Stats(key, value(RowsCol), present.map(c => c -> value(c)).toMap,
+      fingerprint = Freshness.ofLeaf(measured))
     persist(warehouseOf(spark), stats)
     stats
   }

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.StructType
   * kept JVM-wide and a later read of the same files supplies it — the
   * metadata half of a catalog, never the data.
   *
-  *  - Key: format, paths, reader options, and the session's explicitly
+  *  - Key: format, qualified paths, reader options, and the session's explicitly
   *    set confs that change what inference returns (see [[InferenceConfs]]).
   *  - Validation: the SHA-1 of the sorted `path length mtime` lines of
   *    every file under the roots — one Hadoop `listStatus` per directory,
@@ -63,13 +63,13 @@ object FileSchemas {
   def read(spark: SparkSession, paths: Seq[String], format: String = "parquet",
       options: Map[String, String] = Map.empty): DataFrame = {
     val reader = spark.read.format(format).options(options)
-    digest(spark, paths, options) match {
+    listed(spark, paths, options) match {
       case None => reader.load(paths: _*)
-      case Some(d) =>
+      case Some((roots, d)) =>
         val confs = spark.sessionState.conf.getAllConfs.filter { case (k, _) =>
           InferenceConfs.exists(k.startsWith)
         }
-        val key = Key(format, paths, options, confs)
+        val key = Key(format, roots, options, confs)
         Option(schemas.get(key)) match {
           case Some(Entry(`d`, schema)) => reader.schema(schema).load(paths: _*)
           case _ =>
@@ -85,7 +85,14 @@ object FileSchemas {
     * listed. One Hadoop listing per directory, no Spark job — also the cheap
     * "did the base change" check of [[graft.Tables]]' redirect guard. */
   def digest(spark: SparkSession, paths: Seq[String],
-      options: Map[String, String] = Map.empty): Option[String] = {
+      options: Map[String, String] = Map.empty): Option[String] =
+    listed(spark, paths, options).map(_._2)
+
+  /** The fully qualified roots (`/x` and `file:/x` are one key, so a
+    * layout's qualified base path and a user's plain one share an entry)
+    * and the [[digest]] of the files under them. */
+  private def listed(spark: SparkSession, paths: Seq[String],
+      options: Map[String, String]): Option[(Seq[String], String)] = {
     if (paths.isEmpty || paths.exists(_.exists("{}[]*?\\".contains(_)))) return None
     val conf = spark.sessionState.newHadoopConfWithOptions(options)
     // plain `listStatus`, not `listFiles`: its LocatedFileStatus also
@@ -96,13 +103,15 @@ object FileSchemas {
         if (st.isDirectory) listing(fs, st.getPath)
         else Seq(s"${st.getPath} ${st.getLen} ${st.getModificationTime}")
       }
-    val lines = try paths.flatMap { p =>
+    val roots = try paths.map { p =>
         val root = new Path(p)
-        listing(root.getFileSystem(conf), root)
+        val fs = root.getFileSystem(conf)
+        fs.makeQualified(root).toString -> listing(fs, root)
       }
       catch { case _: java.io.FileNotFoundException => Nil }
+    val lines = roots.flatMap(_._2)
     if (lines.isEmpty) None
-    else Some(java.security.MessageDigest.getInstance("SHA-1")
+    else Some(roots.map(_._1) -> java.security.MessageDigest.getInstance("SHA-1")
       .digest(lines.sorted.mkString("\n").getBytes("UTF-8")).map("%02x".format(_)).mkString)
   }
 }

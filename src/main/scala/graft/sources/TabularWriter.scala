@@ -141,23 +141,30 @@ object TabularWriter {
   def compactBuckets(spark: SparkSession, table: String): Unit = {
     val spec = bucketSpecOf(spark, table)
     val key = spec.bucketColumnNames.head
+    // one task per bucket merging that bucket's files: a single pass,
+    // ZERO exchange — compaction costs IO, not a shuffle
     swap(spark, table, "__compacting", "__precompact") { tmp =>
-      // Force the BUCKETED scan for the rewrite. A V1 write declares no
-      // distribution requirement, so DisableUnnecessaryBucketedScan would
-      // plan a per-FILE scan — while the repartition inside
-      // toBucketedTable is simultaneously elided because the logical
-      // relation reports the matching hash partitioning — and each
-      // file-task would write its own per-bucket file: the compaction
-      // would REPRODUCE the multi-file state it exists to fix (observed,
-      // not hypothetical). With the bucketed scan pinned on, the plan is
-      // one task per bucket merging that bucket's files: a single pass,
-      // ZERO exchange — compaction costs IO, not a shuffle.
-      val auto = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-      val prev = spark.conf.get(auto)
-      spark.conf.set(auto, "false")
-      try toBucketedTable(spark.table(table), tmp, key, spec.numBuckets, sorted = true)
-      finally spark.conf.set(auto, prev)
+      withBucketedScan(spark)(
+        toBucketedTable(spark.table(table), tmp, key, spec.numBuckets, sorted = true))
     }
+  }
+
+  /** Run `body` with every bucketed table read as a BUCKETED scan (one
+    * task per bucket), restoring the session's setting afterwards. A
+    * V1 write declares no distribution requirement, so
+    * DisableUnnecessaryBucketedScan would plan a per-FILE scan of a
+    * table being rewritten into its own bucketing — while the
+    * repartition inside [[toBucketedTable]] is elided because the
+    * relation reports the matching hash partitioning — and each
+    * file-task would write its own per-bucket file: a compaction would
+    * REPRODUCE the multi-file state it exists to fix (observed, not
+    * hypothetical), and a rollup refresh's merge would lose the
+    * partitioning its exchange-free aggregate relies on. */
+  private[graft] def withBucketedScan[T](spark: SparkSession)(body: => T): T = {
+    val auto = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+    val prev = spark.conf.get(auto)
+    spark.conf.set(auto, "false")
+    try body finally spark.conf.set(auto, prev)
   }
 
   /** Replace catalog table `table` in place with what `write` creates

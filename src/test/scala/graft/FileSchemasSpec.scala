@@ -123,6 +123,8 @@ class FileSchemasSpec extends GraftSpec {
       .write.mode("append").parquet(dir)
     assert(jobsDuring(s)(FileSchemas.read(s, Seq(dir))) === 1)
     assert(jobsDuring(s)(FileSchemas.read(s, Seq(dir))) === 0)
+    // the qualified path (a staged layout's base identity) is the same entry
+    assert(jobsDuring(s)(FileSchemas.read(s, Seq("file:" + dir))) === 0)
     assert(FileSchemas.read(s, Seq(dir)).count() === 60L)
   }
 

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 import graft.plans.{FileLeaf, LayoutAdvisor, MaterializedAggs}
@@ -57,6 +59,39 @@ class MaterializedAggSpec extends GraftSpec {
     assert(s0.measures.exists(_.cond.isDefined),
       s"the EXISTS probe must record a conditional count: ${s0.measures}")
     s0
+  }
+
+  /** Data files directly under `dir`, as the scans list them. */
+  private def dataFiles(dir: String): Set[String] =
+    new java.io.File(dir).listFiles().map(_.getPath)
+      .filter(p => p.endsWith(".parquet")).toSet
+
+  private def collectPlan[T](p: SparkPlan)(pf: PartialFunction[SparkPlan, T]): Seq[T] =
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}.collect(p)(pf)
+
+  /** `body`'s result and the executed plan of every file write it ran
+    * (as a QueryExecutionListener sees them: after the write). */
+  private def writePlansDuring[T](body: => T): (T, Seq[SparkPlan]) = {
+    import scala.jdk.CollectionConverters._
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val out = try body finally {
+      // listener events arrive asynchronously: a marker query's event
+      // is delivered after every event posted before it
+      spark.range(1).collect()
+      val deadline = System.nanoTime() + 10000000000L
+      while (!seen.asScala.exists(collectPlan(_) {
+          case r: org.apache.spark.sql.execution.RangeExec => r }.nonEmpty) &&
+        System.nanoTime() < deadline) Thread.sleep(20)
+      spark.listenerManager.unregister(listener)
+    }
+    (out, seen.asScala.toSeq.filter(p => collectPlan(p) {
+      case w: org.apache.spark.sql.execution.datasources.WriteFilesExec => w }.nonEmpty))
   }
 
   private def rows(df: DataFrame): Seq[Seq[Any]] =
@@ -460,13 +495,34 @@ class MaterializedAggSpec extends GraftSpec {
     assert(MaterializedAggs.refreshRollup(spark, m) === m)
     MaterializedAggs.deregister(name)
     // APPEND: overlapping keys get merged partials, new keys appear
+    val baseFiles = dataFiles(base)
     Tables.lineitem(spark, sf).limit(800).write.mode("append").parquet(base)
+    val deltaFiles = dataFiles(base) -- baseFiles
     spark.catalog.refreshByPath(base)
     withMeta(m)(assert(!MaterializedAggs.fired(corpusQ, name),
       "stale rollup must decline before the refresh"))
-    val fresh = MaterializedAggs.refreshRollup(spark, m) // registers
+    val (fresh, writes) = writePlansDuring(MaterializedAggs.refreshRollup(spark, m)) // registers
     try {
       assert(fresh.fingerprint !== m.fingerprint)
+      // one co-partitioned pass: the merge write shuffles only the
+      // delta, and reads the staged rollup as a bucketed scan
+      assert(writes.size === 1, s"one write expected, got:\n${writes.mkString("\n\n")}")
+      val plan = writes.head
+      val shuffles = collectPlan(plan) { case e: ShuffleExchangeExec => e }
+      assert(shuffles.size === 1, s"only the delta may shuffle:\n$plan")
+      val shuffled = collectPlan(shuffles.head) { case f: FileSourceScanExec => f }
+        .flatMap(_.relation.location.inputFiles).map(f => new java.net.URI(f).getPath).toSet
+      assert(shuffled === deltaFiles, s"the shuffle must read exactly the delta files:\n$plan")
+      val staged = collectPlan(plan) {
+        case f: FileSourceScanExec if f.tableIdentifier.exists(_.table == name) => f
+      }
+      assert(staged.size === 1 && staged.head.bucketedScan,
+        s"the staged rollup must be read as a bucketed scan:\n$plan")
+      // the stats recorded from that write are what a re-scan measures
+      val recorded = graft.plans.TableStats.lookup(graft.plans.TableStats.warehouseOf(spark), name)
+      val measured = graft.plans.TableStats.analyze(spark, spark.table(name), name, m.keys)
+      assert(recorded === Some(measured))
+      assert(measured.fingerprint.isDefined && measured.ndv.keySet === m.keys.toSet)
       assert(MaterializedAggs.fired(corpusQ, name),
         s"refreshed rollup must serve:\n${corpusQ.queryExecution.optimizedPlan}")
       val served = rows(corpusQ)
@@ -505,6 +561,53 @@ class MaterializedAggSpec extends GraftSpec {
     intercept[IllegalArgumentException] {
       MaterializedAggs.refreshRollup(spark, fresh)
     }
+  }
+
+  test("incremental refresh: a composite-key rollup with a conditional count merges its delta") {
+    val dir = java.nio.file.Files.createTempDirectory("maspec_refresh_composite")
+    sys.addShutdownHook(GateFixtures.deleteRecursively(dir))
+    val base = dir.resolve("fact").toString
+    Tables.lineitem(spark, sf).limit(500).write.mode("overwrite").parquet(base)
+    import spark.implicits._
+    val flags = Seq(("R", "F"), ("A", "F"), ("N", "O"), ("N", "F")).toDF("rf", "ls")
+    def fact = spark.read.parquet(base)
+    // the exact-grain aggregate and the semi probe share the two keys
+    // (in the probe's order): one rollup carrying sum, count and
+    // count_if(l_quantity > 25)
+    def perFlags = fact.groupBy(col("l_linestatus"), col("l_returnflag"))
+      .agg(sum(cents("l_quantity")).as("qty"), count(lit(1)).as("n"))
+    def probe = flags.join(fact.filter(col("l_quantity") > 25)
+        .select(col("l_returnflag"), col("l_linestatus")),
+      col("rf") === col("l_returnflag") && col("ls") === col("l_linestatus"), "left_semi")
+    val spec = LayoutAdvisor.adviseAggRollups(Seq(perFlags, probe), minHits = 1)
+      .find(s => s.keys.size == 2 && s.measures.size == 3 &&
+        s.measures.exists(_.agg.startsWith("count_if(")))
+      .getOrElse(fail("expected a composite-key rollup with a conditional count"))
+    val name = "maspec_refresh_composite"
+    Seq(name, name + "__refreshing", name + "__prerefresh")
+      .foreach(graft.sources.TabularWriter.clearStale(spark, _))
+    val m = MaterializedAggs.stageRollup(spark, spec, name)
+    MaterializedAggs.deregister(name)
+    Tables.lineitem(spark, sf).limit(800).write.mode("append").parquet(base)
+    spark.catalog.refreshByPath(base)
+    val fresh = MaterializedAggs.refreshRollup(spark, m)
+    try {
+      assert(fresh.fingerprint !== m.fingerprint)
+      // the merged rollup equals the same aggregate over the grown base
+      MaterializedAggs.deregister(name)
+      val aggs = spec.measures.map(ms => expr(ms.agg).as(ms.name))
+      val direct = fact.groupBy(spec.keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+      assert(rows(spark.table(name).select(direct.columns.map(col): _*)) === rows(direct))
+      // and every read it serves equals the rewrite-off recompute
+      Seq(perFlags, probe).foreach { q =>
+        val served = withMeta(fresh) {
+          assert(MaterializedAggs.fired(q, name),
+            s"refreshed rollup must serve:\n${q.queryExecution.optimizedPlan}")
+          rows(q)
+        }
+        assert(served === rows(q))
+      }
+    } finally MaterializedAggs.deregister(name)
   }
 
   test("refreshRollup crash window: both copies survive, the rewrite declines, the aside copy restores") {

@@ -14,6 +14,18 @@ class StagingLifecycleSpec extends AnyFunSuite {
     assert(found.isEmpty, found.mkString("\n"))
   }
 
+  test("the bucketed-scan pin is set only by TabularWriter.withBucketedScan under src/main") {
+    val found = SourceGuard.hits("spark.sql.sources.bucketing.autoBucketedScan.enabled", Set.empty)
+    val helper = SourceGuard.hits("def withBucketedScan", Set.empty)
+    def line(hit: String) = hit.split(":")(1).toInt
+    // one use, in TabularWriter, on the first line of the helper's body
+    assert(found.size === 1 && helper.size === 1 &&
+      found.head.startsWith(helper.head.split(":").head) &&
+      helper.head.contains("TabularWriter.scala") &&
+      line(found.head) === line(helper.head) + 1,
+      (found ++ helper).mkString("\n"))
+  }
+
   test("spark.sql.warehouse.dir is read only by TableStats.warehouseOf (set by GraftSession)") {
     // EagerAggregation is an optimizer rule that holds only a SQLConf
     val found = SourceGuard.hits("spark.sql.warehouse.dir",

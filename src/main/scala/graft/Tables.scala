@@ -22,37 +22,21 @@ object Tables {
   def clearRedirects(): Unit = redirects.clear()
 
   /** Freshness guard on the serving path (round-12): a staged layout
-    * records its base path+fingerprint in a `_graft_base` sidecar
-    * (graft.plans.Freshness); the first time a (dir, table, layout)
-    * triple is served, the recorded base is re-fingerprinted and a
-    * drifted base THROWS instead of silently serving pre-append rows —
-    * re-stage is the recovery. A verified triple keeps the base's
-    * listing digest (`FileSchemas.digest`, one listing, no job) and is
-    * verified again whenever that digest changes, so an append after
-    * the first serve is caught too. Layouts without the sidecar
+    * records its base path+fingerprint in a `_graft_base` sidecar, and
+    * every serve re-fingerprints that base (`Freshness.verifyBaseAt`:
+    * one listing, no job). A drifted base — appended to, or a file
+    * rewritten in place — THROWS instead of silently serving stale
+    * rows; re-stage is the recovery. Layouts without the sidecar
     * (fixtures, pre-round-12 files) are unchecked by contract. */
-  private val verifiedRedirects = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String), Option[(Seq[String], Option[String])]]()
-
   private def verifyRedirect(spark: SparkSession, sfDir: String, name: String,
       table: String): Unit = {
-    val seen = verifiedRedirects.get((sfDir, name, table))
-    if (seen != null && seen.forall { case (base, d) =>
-        graft.sources.FileSchemas.digest(spark, base) == d }) return
     val loc = java.nio.file.Paths.get(spark.sessionState.catalog.getTableMetadata(
       org.apache.spark.sql.catalyst.TableIdentifier(table)).location.getPath)
-    // digest first: a change between it and the check leaves a stale
-    // digest, which the next serve re-verifies
-    val base = graft.plans.Freshness.readBaseAt(loc).map { case (p, _) =>
-      val roots = p.split(',').toIndexedSeq
-      roots -> graft.sources.FileSchemas.digest(spark, roots)
-    }
     if (!graft.plans.Freshness.verifyBaseAt(spark, loc))
       throw new IllegalStateException(
         s"Tables.redirect($sfDir, $name -> $table): base data drifted since " +
           "the layout was staged — re-stage the layout (serving it would " +
-          "silently return pre-append rows)")
-    verifiedRedirects.put((sfDir, name, table), base)
+          "silently return stale rows)")
   }
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {

@@ -129,11 +129,11 @@ object EagerAggregation extends Rule[LogicalPlan] with PredicateHelper {
         // base files than the live leaf is ignored — the grown table's
         // uniqueness may have flipped either way; fall back to the
         // declared conf (records without a fingerprint — aliased staged
-        // tables, pre-round-12 files — stay advisory-unchecked)
-        val liveFp = file.map(f => Freshness.ofIndex(f._2.location))
+        // tables, pre-round-12 files — stay advisory-unchecked). The
+        // live leaf is hashed only when a record carries a fingerprint.
         val measured = identities.flatMap(id => TableStats.lookup(wh, id))
-          .headOption.filter(st => st.fingerprint.isEmpty ||
-            liveFp.isEmpty || st.fingerprint == liveFp)
+          .headOption.filter(st => st.fingerprint.forall(fp =>
+            file.forall(f => Freshness.ofIndex(f._2.location) == fp)))
         measured match {
           case Some(st) if keyNames.exists(c => st.ndv.contains(c)) =>
             // measurement decides both ways: a measured NON-unique key

@@ -1093,9 +1093,7 @@ object LayoutAdvisor {
       case al: Alias => al.child
       case other => other
     }
-    def measureName(sql: String): String = "m_" +
-      java.security.MessageDigest.getInstance("SHA-1")
-        .digest(sql.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(10)
+    def measureName(sql: String): String = "m_" + FileSchemas.sha1(sql).take(10)
 
     corpus.foreach { df =>
       val plan = df.queryExecution.optimizedPlan

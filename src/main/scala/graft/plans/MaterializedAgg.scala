@@ -127,14 +127,14 @@ object MaterializedAggs extends LayoutRegistry {
     * fresh JVM needs to re-[[attachRollup]] without re-aggregating. */
   val RollupSidecar = "_graft_rollup"
 
-  private def sidecarBody(meta: Meta, files: Seq[String]): String = {
+  private def sidecarBody(meta: Meta, files: Seq[FileSchemas.Entry]): String = {
     val measureLines = meta.measures.map(m =>
       (Seq("measure", m.name, m.agg) ++ m.cond.map(c => Seq("cond", c))
         .getOrElse(Nil)).mkString("\t"))
     // the base-file INVENTORY behind the fingerprint — what
     // [[refreshRollup]] diffs against the live listing to find the
-    // appended delta (tab-prefixed; `path len` exactly as hashed)
-    val fileLines = files.map(f => s"file\t$f")
+    // appended delta (tab-prefixed `Entry.line`s, exactly as hashed)
+    val fileLines = files.map(_.line).sorted.map(l => s"file\t$l")
     (Seq(
       s"fact ${meta.fact} ${meta.factPath}",
       s"key ${meta.keys.mkString(",")}",
@@ -181,8 +181,9 @@ object MaterializedAggs extends LayoutRegistry {
       name: String): Meta = withRuleOff(spark) {
     import org.apache.spark.sql.functions.{col, expr}
     val fact = FileSchemas.read(spark, spec.factPath.split(',').toIndexedSeq)
-    val inventory = Freshness.entriesOfLeaf(fact)
-    val fp = Freshness.ofEntries(inventory)
+    val inventory = Freshness.leafEntries(fact).getOrElse(
+      sys.error(s"stageRollup($name): ${spec.factPath} is not one file scan"))
+    val fp = FileSchemas.fingerprint(inventory)
     val aggs = spec.measures.map(m => expr(m.agg).as(m.name))
     require(aggs.nonEmpty, s"stageRollup($name): no measures advised")
     require(spec.keys.nonEmpty, s"stageRollup($name): no keys advised")
@@ -236,7 +237,7 @@ object MaterializedAggs extends LayoutRegistry {
     * merge by +, min/max by themselves — the same decomposition the
     * coarser-grain serve exploits. A distinct or non-decomposable
     * measure refuses loudly (full re-stage is the recovery), as does
-    * any non-append drift (a staged file missing or resized — the
+    * any non-append drift (a staged file missing, resized or rewritten — the
     * delta is then not well-defined).
     *
     * One co-partitioned pass: only the delta moves. Its raw rows are
@@ -268,27 +269,29 @@ object MaterializedAggs extends LayoutRegistry {
     import org.apache.spark.sql.functions.{col, expr, max, min, sum}
     val ident = org.apache.spark.sql.catalyst.TableIdentifier(meta.catalogTable)
     val cat = spark.sessionState.catalog.getTableMetadata(ident)
-    // the staged base-file inventory (absent in pre-refresh sidecars)
+    // the staged base-file inventory (absent in pre-refresh sidecars,
+    // unparsed in sidecars written before entries carried an mtime)
     val staged = Freshness.readSidecar(cat.location.getPath, RollupSidecar)
-      .getOrElse(Nil).collect { case l if l.startsWith("file\t") => l.stripPrefix("file\t") }
+      .getOrElse(Nil).filter(_.startsWith("file\t"))
+      .flatMap(l => FileSchemas.Entry.parse(l.stripPrefix("file\t"))).toSet
     require(staged.nonEmpty,
       s"refreshRollup(${meta.catalogTable}): sidecar records no file " +
-        "inventory (pre-refresh staging) — re-stage")
+        "inventory — re-stage")
     val factDf = FileSchemas.read(spark, meta.factPath.split(',').toIndexedSeq)
-    val live = Freshness.entriesOfLeaf(factDf)
-    if (staged.toSet == live.toSet) return meta // fresh — no-op
-    val missing = staged.toSet -- live.toSet
+    val live = Freshness.leafEntries(factDf).getOrElse(sys.error(
+      s"refreshRollup(${meta.catalogTable}): ${meta.factPath} is not one file scan"))
+    if (staged == live.toSet) return meta // fresh — no-op
+    val missing = staged -- live
     require(missing.isEmpty,
       s"refreshRollup(${meta.catalogTable}): base files changed or " +
-        s"disappeared (${missing.take(3).mkString("; ")}) — growth is not " +
+        s"disappeared (${missing.take(3).map(_.line).mkString("; ")}) — growth is not " +
         "append-only, re-stage")
     val spec = cat.bucketSpec.getOrElse(sys.error(
       s"refreshRollup(${meta.catalogTable}): not a bucketed table"))
     val bucketCol = spec.bucketColumnNames.head
     // the merge plans below must not be served by a registered rollup
     withRuleOff(spark) {
-      val deltaFiles = live.filterNot(staged.toSet)
-        .map(l => l.substring(0, l.lastIndexOf(' ')))
+      val deltaFiles = live.filterNot(staged).map(_.path)
       val deltaAggs = meta.measures.map(ms => expr(ms.agg).as(ms.name))
       val delta = spark.read.schema(factDf.schema)
         .parquet(deltaFiles.toIndexedSeq: _*)
@@ -322,7 +325,7 @@ object MaterializedAggs extends LayoutRegistry {
           }
         }
       }
-      val fresh = meta.copy(fingerprint = Freshness.ofEntries(live))
+      val fresh = meta.copy(fingerprint = FileSchemas.fingerprint(live))
       Freshness.writeSidecar(spark, meta.catalogTable, RollupSidecar,
         sidecarBody(fresh, live))
       RewriteMaterializedAgg.invalidate(meta.catalogTable)
@@ -427,9 +430,7 @@ object MaterializedAggs extends LayoutRegistry {
         nameOf(a.exprId.id) match {
           case Some(n) =>
             val name = n.toLowerCase
-            val id = java.nio.ByteBuffer.wrap(
-              java.security.MessageDigest.getInstance("SHA-1")
-                .digest(name.getBytes("UTF-8"))).getLong.abs
+            val id = java.nio.ByteBuffer.wrap(FileSchemas.sha1Bytes(name)).getLong.abs
             AttributeReference(name, a.dataType, nullable = true)(exprId = ExprId(id))
           case None => ok = false; a
         }

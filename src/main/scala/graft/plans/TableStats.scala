@@ -37,7 +37,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Staleness contract: stats only tune optimizer choices — a stale
   * NDV can cost performance, never correctness (EagerAggregation's
   * rewrite is exact whenever it fires; the advisor only ranks).
-  * Re-[[analyze]] after a bulk append to restore measurement. Staged
+  * Re-[[analyze]] after a bulk append to restore measurement
+  * ([[analyzePathIfMissing]] does so by itself). Staged
   * rollups never go stale this way: staging and every refresh record
   * the rollup's stats from their own write ([[recordWrite]]).
   *
@@ -83,11 +84,8 @@ object TableStats {
   private def dirFor(warehouse: String): Path =
     Paths.get(warehouse.stripPrefix("file:"), "_graft_stats")
 
-  private def fileFor(warehouse: String, key: String): Path = {
-    val digest = java.security.MessageDigest.getInstance("SHA-1")
-      .digest(norm(key).getBytes(UTF_8)).map("%02x".format(_)).mkString
-    dirFor(warehouse).resolve(s"$digest.stats")
-  }
+  private def fileFor(warehouse: String, key: String): Path =
+    dirFor(warehouse).resolve(s"${FileSchemas.sha1(norm(key))}.stats")
 
   /** Warehouse dir of a live session (runtime value is file-qualified). */
   def warehouseOf(spark: SparkSession): String =
@@ -140,19 +138,23 @@ object TableStats {
   private def record(spark: SparkSession, key: String, present: Seq[String],
       value: String => Long, measured: DataFrame): Stats = {
     val stats = Stats(key, value(RowsCol), present.map(c => c -> value(c)).toMap,
-      fingerprint = Freshness.ofLeaf(measured))
+      fingerprint = Freshness.leafEntries(measured).map(FileSchemas.fingerprint))
     persist(warehouseOf(spark), stats)
     stats
   }
 
   /** [[analyze]] a parquet read of `path` (comma-joined roots — the
-    * advisor's table identity) unless the registry already holds it;
-    * `refresh` forces re-measurement. Columns missing from an existing
-    * record trigger re-analysis so callers can widen the column set. */
+    * advisor's table identity) unless the registry already holds it for
+    * the files now under `path`; `refresh` forces re-measurement.
+    * Columns missing from an existing record trigger re-analysis so
+    * callers can widen the column set, and a record whose fingerprint
+    * no longer matches (the files changed, or an older build recorded
+    * it) is measured again over the same columns. */
   def analyzePathIfMissing(spark: SparkSession, path: String,
       cols: Seq[String], refresh: Boolean = false): Stats = {
     val existing = if (refresh) None else lookup(warehouseOf(spark), path)
-    existing.filter(st => cols.forall(st.ndv.contains)).getOrElse {
+    existing.filter(st => st.fingerprint.forall(_ == Freshness.ofPath(spark, path)) &&
+      cols.forall(st.ndv.contains)).getOrElse {
       val merged = existing.map(_.ndv.keys.toSeq).getOrElse(Nil) ++ cols
       analyze(spark, FileSchemas.read(spark, path.split(',').toIndexedSeq),
         path, merged.distinct)

@@ -280,15 +280,13 @@ object TabularWriter {
       s"$table is not a bucketed table (use toBucketedTable to create one)"))
   }
 
-  /** Bucket id of every data file directly under `loc` (one listing;
-    * ids parsed from the writer's `part-NNNNN-<uuid>_<bucketId>.c000…`
-    * naming, `_`/`.`-prefixed entries skipped like the scan skips them). */
+  /** Bucket id of every data file of the [[FileSchemas.inventory]] of
+    * `loc` (ids parsed from the writer's `part-NNNNN-<uuid>_<bucketId>.c000…`
+    * naming; sidecars and markers are not in the inventory). */
   private def bucketIds(spark: SparkSession, loc: Path): Seq[Int] = {
     val bucketId = "_(\\d{5})\\.".r
-    loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(loc).toSeq.map(_.getPath.getName)
-      .filter(n => !n.startsWith("_") && !n.startsWith("."))
-      .flatMap(n => bucketId.findFirstMatchIn(n).map(_.group(1).toInt))
+    FileSchemas.inventory(spark, Seq(loc.toString)).toSeq.flatMap(_.entries)
+      .flatMap(e => bucketId.findFirstMatchIn(new Path(e.path).getName).map(_.group(1).toInt))
   }
 
   /** Asserts every bucket of `table` is one data file — the physical
@@ -373,35 +371,11 @@ object TabularWriter {
   def compact(spark: SparkSession, srcDir: String, dstDir: String,
       targetBytes: Long = 128L * 1024 * 1024, shuffle: Boolean = false,
       compression: String = "snappy"): Unit = {
-    val fs = new Path(srcDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // qualify src so the ancestor walk below can actually STOP at it:
-    // listFiles returns fully-qualified paths, and an unqualified src
-    // never equals them — the walk would run to the filesystem root and
-    // a '_'/'.'-named ancestor (a staging dir, a CI workdir) would mark
-    // EVERY file invisible, silently coalescing the dataset to one file
-    val src = fs.makeQualified(new Path(srcDir))
-    // RECURSIVE listing: partitioned trees keep their data files in
-    // subdirectories — a top-level listing would see only directories,
-    // compute bytes=0 and collapse the whole dataset into one file.
-    // Mirror the scan's visibility rules on EVERY path component below
-    // src (not just the basename): files under _temporary/.hidden trees
-    // (stale failed-write leftovers) are invisible to spark.read, so
-    // counting them would size the rewrite from phantom data.
-    def visible(p: Path): Boolean = {
-      var cur = p
-      while (cur != null && cur != src) {
-        val n = cur.getName
-        if (n.startsWith("_") || n.startsWith(".")) return false
-        cur = cur.getParent
-      }
-      true
-    }
-    var bytes = 0L
-    val it = fs.listFiles(src, true)
-    while (it.hasNext) {
-      val st = it.next()
-      if (visible(st.getPath)) bytes += st.getLen
-    }
+    // sized from the files the scan reads: the inventory walks
+    // partitioned subdirectories and skips `_temporary`/hidden leftovers
+    // of failed writes, which would size the rewrite from phantom data
+    val bytes = FileSchemas.inventory(spark, Seq(srcDir))
+      .fold(0L)(_.entries.map(_.len).sum)
     val files = math.max(1, ((bytes + targetBytes - 1) / targetBytes).toInt)
     val df = FileSchemas.read(spark, Seq(srcDir))
     // coalesce can only REDUCE partition count; when the target exceeds

@@ -705,4 +705,56 @@ class AdvisorSpec extends GraftSpec {
       spark.sql("DROP TABLE IF EXISTS adv_fresh_b")
     }
   }
+
+  test("a same-length rewrite of a base file is drift: redirect, rollup serve and refresh refuse") {
+    import spark.implicits._
+    import graft.plans.MaterializedAggs
+    import java.nio.file.{Files, Path, StandardCopyOption}
+    val dir = Files.createTempDirectory("adv_rewrite")
+    sys.addShutdownHook(GateFixtures.deleteRecursively(dir))
+    val base = dir.resolve("t.parquet").toString
+    // uncompressed, dictionary-off ints: the same row count writes the
+    // same file length whatever the values
+    def writeInts(path: String, from: Int): Path = {
+      (from until from + 200).map(i => (i, i % 7)).toDF("k", "c").coalesce(1).write
+        .option("compression", "none").option("parquet.enable.dictionary", "false")
+        .parquet(path)
+      val files = Files.list(java.nio.file.Paths.get(path))
+      try files.filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
+      finally files.close()
+    }
+    def crcOf(f: Path): Path = f.resolveSibling(s".${f.getFileName}.crc")
+    val file = writeInts(base, 0)
+    val path = graft.plans.MaterializedJoins.leafPath(spark.read.parquet(base))
+    val (layout, rollup) = ("adv_rewrite_t", "adv_rewrite_rollup")
+    Seq(layout, rollup, rollup + "__refreshing", rollup + "__prerefresh")
+      .foreach(graft.sources.TabularWriter.clearStale(spark, _))
+    LayoutAdvisor.stage(spark, LayoutAdvisor.LayoutSpec(path, "t", "k", 4, Seq("k", "c"), 1), layout)
+    def q = spark.read.parquet(base).groupBy(col("c")).agg(sum(col("k")).as("s"))
+    val meta = MaterializedAggs.stageRollup(spark,
+      LayoutAdvisor.adviseAggRollups(Seq(q), minHits = 1).head, rollup)
+    try {
+      Tables.redirect(dir.toString, "t", layout)
+      assert(Tables(spark, dir.toString, "t").count() === 200L)
+      assert(MaterializedAggs.fired(q, rollup), "the fresh rollup must serve")
+      // same name, same length, other values, later mtime
+      val other = writeInts(dir.resolve("other").toString, 1000)
+      assert(Files.size(other) === Files.size(file))
+      val mtime = Files.getLastModifiedTime(file).toMillis
+      Files.copy(other, file, StandardCopyOption.REPLACE_EXISTING)
+      Files.copy(crcOf(other), crcOf(file), StandardCopyOption.REPLACE_EXISTING)
+      Files.setLastModifiedTime(file, java.nio.file.attribute.FileTime.fromMillis(mtime + 10000))
+      spark.catalog.refreshByPath(base)
+      val e = intercept[IllegalStateException](Tables(spark, dir.toString, "t"))
+      assert(e.getMessage.contains("drifted"), e.getMessage)
+      assert(!MaterializedAggs.fired(q, rollup),
+        s"a rollup of the old bytes must not serve:\n${q.queryExecution.optimizedPlan}")
+      val refused = intercept[IllegalArgumentException](MaterializedAggs.refreshRollup(spark, meta))
+      assert(refused.getMessage.contains("append-only"), refused.getMessage)
+    } finally {
+      Tables.clearRedirects()
+      MaterializedAggs.deregister(rollup)
+      Seq(layout, rollup).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    }
+  }
 }

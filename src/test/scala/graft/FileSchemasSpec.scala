@@ -5,7 +5,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampType}
-import java.nio.file.Files
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
 
 /** The listing-validated schema cache behind every parquet/ORC read:
   * a repeat read of unchanged files runs no Spark job, and whatever it
@@ -126,6 +127,53 @@ class FileSchemasSpec extends GraftSpec {
     // the qualified path (a staged layout's base identity) is the same entry
     assert(jobsDuring(s)(FileSchemas.read(s, Seq("file:" + dir))) === 0)
     assert(FileSchemas.read(s, Seq(dir)).count() === 60L)
+  }
+
+  test("the listing inventory equals the inventory of the FileIndex a read builds") {
+    val s = session
+    import s.implicits._
+    // `.`- and `_`-prefixed ancestors: the hidden-name rule applies only below a root
+    val root = tempDir("fs_inventory") + "/.work/_staging/t"
+    (1L to 40L).map(i => (i, i * 2.0, i % 2)).toDF("id", "v", "k")
+      .write.partitionBy("k").parquet(root)
+    Files.write(Paths.get(root, "_graft_base"), "base - -\n".getBytes("UTF-8"))
+    val walk = Files.walk(Paths.get(root))
+    val names = try walk.iterator().asScala.map(_.getFileName.toString).toSet finally walk.close()
+    assert(Set("_SUCCESS", "_graft_base", "k=1").subsetOf(names) &&
+      names.exists(_.endsWith(".crc")), names)
+    val listed = FileSchemas.inventory(s, Seq(root)).get
+    val index = FileSchemas.read(s, Seq(root)).queryExecution.analyzed
+      .collectFirst { case graft.plans.FileLeaf(_, fs, _) => fs.location }.get
+    assert(listed.entries.nonEmpty)
+    assert(listed.entries.sortBy(_.line) === FileSchemas.entriesOf(index).sortBy(_.line))
+    assert(listed.fingerprint === graft.plans.Freshness.ofIndex(index))
+  }
+
+  test("a marker, a checksum or a sidecar keeps the hit; a changed _common_metadata misses") {
+    val s = session
+    import s.implicits._
+    val dir = tempDir("fs_hidden") + "/t"
+    (1L to 50L).map(i => (i, i * 2.0)).toDF("k", "v").coalesce(1).write.parquet(dir)
+    FileSchemas.read(s, Seq(dir))
+    Seq("_SUCCESS", ".part-extra.parquet.crc", "_graft_rollup").foreach { n =>
+      Files.write(Paths.get(dir, n), s"$n rewritten\n".getBytes("UTF-8"))
+      assert(jobsDuring(s)(FileSchemas.read(s, Seq(dir))) === 0, n)
+    }
+    // inference reads `_common_metadata` before any data footer
+    def commonMetadataFrom(src: String): Unit = {
+      val files = Files.list(Paths.get(src))
+      val part = try files.filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
+        finally files.close()
+      Files.copy(part, Paths.get(dir, "_common_metadata"), StandardCopyOption.REPLACE_EXISTING)
+    }
+    commonMetadataFrom(dir)
+    assert(jobsDuring(s)(FileSchemas.read(s, Seq(dir))) === 1)
+    assert(jobsDuring(s)(FileSchemas.read(s, Seq(dir))) === 0)
+    val other = tempDir("fs_common") + "/o"
+    Seq((1L, 1.0, "x")).toDF("k", "v", "w").coalesce(1).write.parquet(other)
+    commonMetadataFrom(other)
+    assert(jobsDuring(s)(FileSchemas.read(s, Seq(dir))) === 1)
+    assert(FileSchemas.read(s, Seq(dir)).schema === s.read.parquet(dir).schema)
   }
 
   /** One parquet file of `id` and `ts` longs written with the raw

@@ -551,12 +551,11 @@ class MaterializedAggSpec extends GraftSpec {
     // delta file, which IS still append-only growth)
     val sidecar = java.nio.file.Paths.get(graft.plans.TableStats.warehouseOf(spark), name,
       MaterializedAggs.RollupSidecar)
-    val stagedLine = java.nio.file.Files.readAllLines(sidecar)
+    val stagedFile = java.nio.file.Files.readAllLines(sidecar)
       .toArray.map(_.toString).collectFirst {
         case l if l.startsWith("file\t") => l.stripPrefix("file\t")
-      }.get
-    java.nio.file.Files.delete(java.nio.file.Paths.get(
-      stagedLine.substring(0, stagedLine.lastIndexOf(' '))))
+      }.flatMap(graft.sources.FileSchemas.Entry.parse).get
+    java.nio.file.Files.delete(java.nio.file.Paths.get(new java.net.URI(stagedFile.path)))
     spark.catalog.refreshByPath(base)
     intercept[IllegalArgumentException] {
       MaterializedAggs.refreshRollup(spark, fresh)

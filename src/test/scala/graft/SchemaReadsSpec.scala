@@ -5,11 +5,19 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Every footer-schema read goes through `sources.FileSchemas`: a
   * direct `read.parquet(` pays one schema-inference job per call, so a
   * new read path must show up here as a failing spec, not quietly bring
-  * per-read inference back. */
+  * per-read inference back. The same file owns the one file inventory:
+  * a second content hash or a hand-written hidden-file rule is a second
+  * answer to "which files, and have they changed?". */
 class SchemaReadsSpec extends AnyFunSuite {
 
   test("no read.parquet( outside FileSchemas.scala under src/main") {
     val found = SourceGuard.hits("read.parquet(", Set("FileSchemas.scala"))
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("SHA-1 and the hidden-file rule live only in FileSchemas.scala under src/main") {
+    val found = Seq("MessageDigest.getInstance", "startsWith(\"_\")", "startsWith(\".\")")
+      .flatMap(SourceGuard.hits(_, Set("FileSchemas.scala")))
     assert(found.isEmpty, found.mkString("\n"))
   }
 }

@@ -136,6 +136,20 @@ class TableStatsSpec extends GraftSpec {
     } finally GateFixtures.deleteRecursively(root)
   }
 
+  test("analyzePathIfMissing measures a record of other files again") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("ts_stale")
+    try {
+      val dir = root.resolve("t.parquet").toString
+      (1L to 50L).map(i => (i, i % 3)).toDF("id", "c").write.parquet(dir)
+      assert(TableStats.analyzePathIfMissing(spark, dir, Seq("id", "c")).rowCount === 50L)
+      (51L to 80L).map(i => (i, i % 3)).toDF("id", "c").write.mode("append").parquet(dir)
+      val again = TableStats.analyzePathIfMissing(spark, dir, Seq("id"))
+      assert(again.rowCount === 80L && again.ndv.keySet === Set("id", "c"), again)
+      assert(again.fingerprint === Some(graft.plans.Freshness.ofPath(spark, dir)))
+    } finally GateFixtures.deleteRecursively(root)
+  }
+
   test("advisor selectivity uses 1/NDV for measured equality and |list|/NDV for IN") {
     import org.apache.spark.sql.catalyst.dsl.expressions._
     import org.apache.spark.sql.catalyst.expressions.{EqualTo, In, Literal}

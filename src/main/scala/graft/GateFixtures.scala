@@ -382,9 +382,9 @@ private[graft] object GateFixtures {
       graft.plans.MaterializedJoins.stageDenorm(s, spec, n)
       graft.plans.MaterializedJoins.deregister(n) // gates scope their own
     }
-    // the sidecar is the Meta's durable form — works for both the
+    // the layout record is the Meta's durable form — works for both the
     // fresh staging above and the memoized same-JVM re-entry
-    graft.plans.MaterializedJoins.metaFromSidecar(name, warehousePath(s, name))._1
+    graft.plans.MaterializedJoins.recorded(name, warehousePath(s, name))
   }
 
   /** MATERIALIZED AGGREGATE rollup for the layout_agg_* gates (round-12
@@ -419,7 +419,7 @@ private[graft] object GateFixtures {
       graft.plans.MaterializedAggs.stageRollup(s, spec, n)
       graft.plans.MaterializedAggs.deregister(n) // gates scope their own
     }
-    graft.plans.MaterializedAggs.metaFromSidecar(name, warehousePath(s, name))
+    graft.plans.MaterializedAggs.recorded(name, warehousePath(s, name))
   }
 
   /** COMPOSITE-KEY rollups for the layout_agg_reagg/filtergrain gates
@@ -460,7 +460,7 @@ private[graft] object GateFixtures {
           specs.find(_.keys == keys).get, n)
         graft.plans.MaterializedAggs.deregister(n) // gates scope their own
       }
-      graft.plans.MaterializedAggs.metaFromSidecar(name, warehousePath(s, name))
+      graft.plans.MaterializedAggs.recorded(name, warehousePath(s, name))
     }
   }
 

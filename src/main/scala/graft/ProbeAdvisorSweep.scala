@@ -356,12 +356,13 @@ object ProbeAdvisorSweep {
     * A layout already `present` in this session is returned as is.
     * Otherwise, when a previous JVM's staging is on disk at `t`'s
     * warehouse location (the in-memory catalog forgot it, the files
-    * live on), `attach` re-registers it — each kind's attach checks its
-    * own sidecars against THIS session's advice and base data, and
-    * throws IllegalArgumentException on any mismatch (a drifted
-    * advice, a base that grew, a sidecar staged before a line existed).
-    * Everything else clears the stale table and location and stages
-    * from scratch: re-staging is the one recovery. */
+    * live on), `attach` re-registers it — every kind's attach is
+    * [[graft.plans.Freshness.attach]], which checks the layout record
+    * against THIS session's advice and base data and throws
+    * IllegalArgumentException on any mismatch (a drifted advice, a base
+    * that grew, no record or a malformed line); the refusal's whole
+    * message is printed. Everything else clears the stale table and
+    * location and stages from scratch: re-staging is the one recovery. */
   private def stageOrAttach[A](spark: org.apache.spark.sql.SparkSession, t: String,
       present: => Option[A])(attach: String => A)(stage: => A): A = present.getOrElse {
     val loc = java.nio.file.Paths.get(graft.plans.TableStats.warehouseOf(spark), t)
@@ -376,7 +377,7 @@ object ProbeAdvisorSweep {
           Some(a)
         } catch {
           case e: IllegalArgumentException =>
-            println(s"[advise] $t sidecar mismatch (${e.getMessage.take(80)}…) — re-staging")
+            println(s"[advise] $t not attached: ${e.getMessage}")
             None
         }
       } else None

@@ -21,22 +21,22 @@ object Tables {
     redirects.put((sfDir, name), table)
   def clearRedirects(): Unit = redirects.clear()
 
-  /** Freshness guard on the serving path (round-12): a staged layout
-    * records its base path+fingerprint in a `_graft_base` sidecar, and
-    * every serve re-fingerprints that base (`Freshness.verifyBaseAt`:
-    * one listing, no job). A drifted base — appended to, or a file
-    * rewritten in place — THROWS instead of silently serving stale
-    * rows; re-stage is the recovery. Layouts without the sidecar
-    * (fixtures, pre-round-12 files) are unchecked by contract. */
+  /** Freshness guard on the serving path: a staged layout's record
+    * ([[graft.plans.Freshness.RecordFile]]) holds one `base <path>
+    * <fingerprint>` line per member, and every serve re-fingerprints
+    * those bases (`Freshness.drift`: one listing per member, no job).
+    * A drifted base — appended to, or a file rewritten in place —
+    * THROWS instead of silently serving stale rows; re-stage is the
+    * recovery. Tables without a record (fixtures, layouts staged before
+    * the record existed) are unchecked by contract. */
   private def verifyRedirect(spark: SparkSession, sfDir: String, name: String,
       table: String): Unit = {
-    val loc = java.nio.file.Paths.get(spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table)).location.getPath)
-    if (!graft.plans.Freshness.verifyBaseAt(spark, loc))
-      throw new IllegalStateException(
-        s"Tables.redirect($sfDir, $name -> $table): base data drifted since " +
-          "the layout was staged — re-stage the layout (serving it would " +
-          "silently return stale rows)")
+    val loc = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(table)).location.getPath
+    graft.plans.Freshness.read(loc).flatMap(graft.plans.Freshness.drift(spark, _)).foreach { d =>
+      throw new IllegalStateException(s"Tables.redirect($sfDir, $name -> $table): $d " +
+        "— re-stage the layout (serving it would silently return stale rows)")
+    }
   }
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 /** A file-scan leaf with its table identity: the comma-joined list of
   * its read roots. A relation composed from several directories is ONE
   * table — keying it by `rootPaths.head` would advise, stage or match a
-  * fraction of the data. Every advisor walk, rewrite rule and sidecar
+  * fraction of the data. Every advisor walk, rewrite rule and record
   * that keys a file read by table matches through here, so the rule
   * lives in one place. */
 object FileLeaf {

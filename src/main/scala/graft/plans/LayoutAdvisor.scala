@@ -609,40 +609,28 @@ object LayoutAdvisor {
   val CentsHitWeight = 0.1
 
   /** Stage one advised layout as catalog table `name` (parquet read of
-    * spec.path → exactly spec.columns → bucketed+sorted on spec.key).
-    * The write is the only shuffle this table's per-key query class
-    * ever pays. */
-  def stage(spark: SparkSession, spec: LayoutSpec, name: String): Unit = {
-    import org.apache.spark.sql.functions.col
-    // spec.path is the comma-joined root list of the advised relation:
-    // a multi-directory table stages ALL its roots, not just the first
-    graft.sources.TabularWriter.toBucketedTable(
-      FileSchemas.read(spark, spec.path.split(',').toIndexedSeq)
-        .select(spec.columns.map(col): _*),
-      name, spec.key, spec.buckets, sorted = true)
-    Freshness.writeBase(spark, name, spec.path)
-  }
+    * spec.path → exactly spec.columns → bucketed+sorted on spec.key):
+    * [[stageWithDerived]] without cents. The write is the only shuffle
+    * this table's per-key query class ever pays. */
+  def stage(spark: SparkSession, spec: LayoutSpec, name: String): Unit =
+    stageWithDerived(spark, spec, Nil, name)
+
+  /** The identity lines of a bucketed projection's record: base path,
+    * key and bucket count, carried columns, requested cents. */
+  private def bucketedIdentity(spec: LayoutSpec, cents: Seq[String]): Seq[Seq[String]] = Seq(
+    Seq("source", spec.path), Seq("key", spec.key, spec.buckets.toString),
+    Seq("columns", spec.columns.mkString(",")),
+    Seq("cents", cents.filter(spec.columns.contains).sorted.mkString(",")))
 
   /** Re-register an already-[[stage]]d / [[stageWithDerived]] layout at
-    * `path` as external catalog table `name` (fresh-JVM path). Requires
-    * the `_graft_buckets` sidecar (nothing else proves the hash key;
-    * [[graft.sources.TabularWriter.attach]] checks count and key against
-    * `spec`), a fresh `_graft_base`, and the `finite` line when `cents`
-    * is non-empty (table properties live in the catalog, not the files).
-    * Any refusal is an IllegalArgumentException: re-stage. */
+    * `path` as external catalog table `name` (fresh-JVM path) through
+    * [[Freshness.attach]]: the record must match `spec` and `cents`,
+    * and the stored cents marked are the ones staging kept. Any
+    * refusal is an IllegalArgumentException: re-stage. */
   def attach(spark: SparkSession, spec: LayoutSpec, cents: Seq[String],
-      name: String, path: String): Unit = {
-    val sidecar = graft.sources.TabularWriter.BucketSidecar
-    require(java.nio.file.Files.exists(java.nio.file.Paths.get(path, sidecar)),
-      s"attach($name): no $sidecar under $path — re-stage")
-    require(Freshness.verifyBaseAt(spark, java.nio.file.Paths.get(path)),
-      s"attach($name): base data drifted since staging — re-stage")
-    val finite = readFiniteSidecar(path)
-    require(cents.isEmpty || finite.isDefined,
-      s"attach($name): no finite audit recorded for cents — re-stage")
-    graft.sources.TabularWriter.attach(spark, name, path, spec.key, spec.buckets)
-    if (cents.nonEmpty) markDerived(spark, name, cents, finite.get)
-  }
+      name: String, path: String): Unit =
+    Freshness.attach(spark, name, path, bucketedIdentity(spec, cents),
+      Some(spec.key -> spec.buckets))(_ => ())
 
   /** One recommended SORT-clustered layout: rewrite `columns` of the
     * table read at `paths`, clustered on `sortCols` — one column →
@@ -767,17 +755,13 @@ object LayoutAdvisor {
     }.sortBy(s => (-s.hits, s.table))
   }
 
-  /** Sidecar a [[stageDerived]] projection writes beside its files,
-    * recording what the projection physically IS — the cents source
-    * columns and the clustering column — so a fresh JVM re-attaches
-    * the already-written files ONLY when this session's advice still
-    * matches (the same drift discipline as the bucketed
-    * `_graft_buckets` sidecar: nothing else in the files proves which
-    * expression the stored longs were computed with). */
-  val DerivedSidecar = "_graft_derived"
-
-  private def derivedSidecarLines(spec: DerivedSpec): Seq[String] =
-    Seq(s"sort ${spec.sortCol.getOrElse("-")}", s"cols ${spec.sourceCols.sorted.mkString(",")}")
+  /** The identity lines of a derived-cents projection's record: what
+    * the projection physically IS — base path, clustering column and
+    * cents source columns (nothing in the files proves which expression
+    * the stored longs were computed with). */
+  private def derivedIdentity(spec: DerivedSpec): Seq[Seq[String]] = Seq(
+    Seq("source", spec.path), Seq("sort", spec.sortCol.getOrElse("-")),
+    Seq("cents", spec.sourceCols.sorted.mkString(",")))
 
   /** Stage one derived-cents projection as catalog table `name`: the
     * FULL source schema plus `<col>_cents` longs computed with the
@@ -795,34 +779,18 @@ object LayoutAdvisor {
       }
       shaped.write.mode("overwrite").saveAsTable(name)
     }
-    Freshness.writeSidecar(spark, name, DerivedSidecar,
-      (derivedSidecarLines(spec) :+ s"finite ${finite.sorted.mkString(",")}")
-        .mkString("", "\n", "\n"))
-    Freshness.writeBase(spark, name, spec.path)
+    Freshness.write(spark, name, derivedIdentity(spec), Seq(Freshness.finite(finite)),
+      Seq(Freshness.base(spec.path, base)))
   }
 
   /** Re-register already-[[stageDerived]] files as external catalog
-    * table `name` (fresh-JVM path — the local stand-in for a
-    * persistent metastore, like [[graft.sources.TabularWriter.attach]]
-    * for bucketed layouts). Requires the sidecar to match `spec`:
-    * attaching files whose stored cents or clustering drifted from
-    * this session's advice would silently serve the wrong projection. */
+    * table `name` (fresh-JVM path) through [[Freshness.attach]]: the
+    * record must match `spec` — attaching files whose stored cents or
+    * clustering drifted from this session's advice would silently serve
+    * the wrong projection. */
   def attachDerived(spark: SparkSession, spec: DerivedSpec, name: String,
-      path: String): Unit = {
-    require(Freshness.readSidecar(path, DerivedSidecar)
-        .exists(_.startsWith(derivedSidecarLines(spec))),
-      s"attachDerived($name): sidecar $DerivedSidecar under $path missing or " +
-        "advice drifted — re-stage")
-    require(Freshness.verifyBaseAt(spark, java.nio.file.Paths.get(path)),
-      s"attachDerived($name): base data drifted since staging — re-stage")
-    val schema = FileSchemas.read(spark, Seq(path)).schema.toDDL
-    spark.sql(s"CREATE TABLE `$name` ($schema) USING parquet LOCATION '$path'")
-    // what was STAGED is what the sidecar's finite line says (the
-    // stage-time audit is physical — it was measured over these files,
-    // and only verified-finite columns got cents stored at all)
-    val finite = readFiniteSidecar(path).getOrElse(Nil)
-    if (finite.nonEmpty) markDerived(spark, name, finite, finite)
-  }
+      path: String): Unit =
+    Freshness.attach(spark, name, path, derivedIdentity(spec), None)(_ => ())
 
   /** Stage a BUCKETED advice that also CARRIES stored cents columns —
     * the composition of the two layout answers: the bucket key removes
@@ -835,18 +803,16 @@ object LayoutAdvisor {
   def stageWithDerived(spark: SparkSession, spec: LayoutSpec,
       derivedCols: Seq[String], name: String): Unit = {
     import org.apache.spark.sql.functions.col
+    // spec.path is the comma-joined root list of the advised relation:
+    // a multi-directory table stages ALL its roots, not just the first
     val base = FileSchemas.read(spark, spec.path.split(',').toIndexedSeq)
-      .select(spec.columns.map(col): _*)
-    val cents = derivedCols.filter(spec.columns.contains)
-    val keep = stageCents(spark, name, base, cents) { withCents =>
+    val finite = stageCents(spark, name, base.select(spec.columns.map(col): _*),
+        derivedCols.filter(spec.columns.contains)) { withCents =>
       graft.sources.TabularWriter.toBucketedTable(
         withCents, name, spec.key, spec.buckets, sorted = true)
     }
-    // the finite audit, for [[attach]]'s re-mark (written even when it
-    // declined every column); `_graft_buckets` owns the layout identity
-    if (cents.nonEmpty) Freshness.writeSidecar(spark, name, DerivedSidecar,
-      s"sort -\ncols -\nfinite ${keep.sorted.mkString(",")}\n")
-    Freshness.writeBase(spark, name, spec.path)
+    Freshness.write(spark, name, bucketedIdentity(spec, derivedCols),
+      Seq(Freshness.finite(finite)), Seq(Freshness.base(spec.path, base)))
   }
 
   /** The one stored-cents staging path every cents stager shares
@@ -895,15 +861,6 @@ object LayoutAdvisor {
       case (c, i) if row.isNullAt(i) || row.getInt(i) == 0 => c
     }
   }
-
-  /** Read a [[DerivedSidecar]]'s finite line at `path` (None when the
-    * sidecar or line is absent — e.g. files staged before the audit
-    * existed, which then re-stage). */
-  private def readFiniteSidecar(path: String): Option[Seq[String]] =
-    Freshness.readSidecar(path, DerivedSidecar).flatMap(_.collectFirst {
-      case l if l.startsWith("finite ") => l.stripPrefix("finite ")
-        .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    })
 
   /** Set both [[RewriteStoredCents]] properties on `table`: `cents`
     * names the source columns whose stored `<col>_cents` the rule treats

@@ -123,57 +123,44 @@ object MaterializedAggs extends LayoutRegistry {
     RewriteMaterializedAgg.invalidate(catalogTable)
   }
 
-  /** Sidecar written beside a staged rollup's files — everything a
-    * fresh JVM needs to re-[[attachRollup]] without re-aggregating. */
-  val RollupSidecar = "_graft_rollup"
+  /** The identity lines of a rollup's record: fact, keys (lowercase)
+    * and the measure set, sorted by name. */
+  private def identity(fact: String, factPath: String, keys: Seq[String],
+      measures: Seq[Measure]): Seq[Seq[String]] =
+    Seq(Seq("fact", fact, factPath), Seq("keys", keys.mkString(","))) ++
+      measures.sortBy(_.name).map(m => Seq("measure", m.name, m.agg, m.cond.getOrElse("")))
 
-  private def sidecarBody(meta: Meta, files: Seq[FileSchemas.Entry]): String = {
-    val measureLines = meta.measures.map(m =>
-      (Seq("measure", m.name, m.agg) ++ m.cond.map(c => Seq("cond", c))
-        .getOrElse(Nil)).mkString("\t"))
-    // the base-file INVENTORY behind the fingerprint — what
-    // [[refreshRollup]] diffs against the live listing to find the
-    // appended delta (tab-prefixed `Entry.line`s, exactly as hashed)
-    val fileLines = files.map(_.line).sorted.map(l => s"file\t$l")
-    (Seq(
-      s"fact ${meta.fact} ${meta.factPath}",
-      s"key ${meta.keys.mkString(",")}",
-      s"fp ${meta.fingerprint}") ++ measureLines ++ fileLines)
-      .mkString("", "\n", "\n")
+  /** The [[Meta]] a rollup's record describes. */
+  private def metaOf(catalogTable: String, rec: Freshness.Record): Meta = {
+    val fact = rec.one("fact", 2)
+    Meta(catalogTable, fact(0), fact(1), rec.list("keys"),
+      rec.all("measure", 3).map(f => Measure(f(0), f(1), Some(f(2)).filter(_.nonEmpty))),
+      rec.one("base", 2)(1))
   }
 
-  /** Parse a staged rollup's sidecar at `path` into the [[Meta]] it
-    * records (no registration, no validation — the durable Meta form
-    * for same-JVM memoized fixtures; [[attachRollup]] adds the drift
-    * and freshness guards). */
-  def metaFromSidecar(catalogTable: String, path: String): Meta = {
-    val lines = Freshness.readSidecar(path, RollupSidecar).getOrElse(
-      throw new IllegalArgumentException(
-        s"rollup sidecar ${java.nio.file.Paths.get(path, RollupSidecar)} missing — re-stage"))
-      .filter(_.nonEmpty)
-    def line(prefix: String): String = lines.collectFirst {
-      case l if l.startsWith(prefix + " ") => l.stripPrefix(prefix + " ")
-    }.getOrElse(throw new IllegalArgumentException(
-      s"rollup sidecar missing '$prefix' line — re-stage"))
-    val factLine = line("fact").split("\\s+")
-    val measures = lines.filter(_.startsWith("measure\t")).map { l =>
-      l.split("\t") match {
-        case Array(_, name, agg) => Measure(name, agg, None)
-        case Array(_, name, agg, "cond", c) => Measure(name, agg, Some(c))
-        case other => throw new IllegalArgumentException(
-          s"malformed measure line '${other.mkString("\t")}' — re-stage")
-      }
-    }
-    Meta(catalogTable, factLine(0), factLine(1),
-      line("key").split(",").toSeq.filter(_.nonEmpty), measures, line("fp"))
-  }
+  /** Write the record of rollup `name` over the fact files `files` —
+    * the base-file INVENTORY behind the fingerprint, which
+    * [[refreshRollup]] diffs against the live listing to find the
+    * appended delta — and return the [[Meta]] it describes. */
+  private def record(spark: SparkSession, name: String, fact: String, factPath: String,
+      keys: Seq[String], measures: Seq[Measure], files: Seq[FileSchemas.Entry]): Meta =
+    metaOf(name, Freshness.write(spark, name, identity(fact, factPath, keys, measures),
+      Freshness.finite(Nil) +: files.map(_.line).sorted.map(l => Seq("file", l)),
+      Seq(factPath -> FileSchemas.fingerprint(files))))
+
+  /** The [[Meta]] recorded beside the staged rollup at `path` (no
+    * registration, no validation — the durable Meta form for same-JVM
+    * memoized fixtures; [[attachRollup]] adds the drift and freshness
+    * guards). */
+  def recorded(catalogTable: String, path: String): Meta =
+    metaOf(catalogTable, Freshness.recordAt(path))
 
   /** Stage `spec` as bucketed catalog table `name`: ONE aggregate over
     * the fact (`GROUP BY key` with every advised measure), written
     * bucketed+sorted on the key, base fingerprinted, stats measured
     * (the rollup's key is unique BY CONSTRUCTION — recording it lets
     * [[EagerAggregation]]'s measured decline skip useless pre-aggs over
-    * the rollup), sidecar written, meta registered. The rewrite is
+    * the rollup), record written, meta registered. The rewrite is
     * disabled during the staging write — the staging query is itself an
     * aggregate over the fact and a previously registered overlapping
     * rollup must not serve it. */
@@ -183,7 +170,6 @@ object MaterializedAggs extends LayoutRegistry {
     val fact = FileSchemas.read(spark, spec.factPath.split(',').toIndexedSeq)
     val inventory = Freshness.leafEntries(fact).getOrElse(
       sys.error(s"stageRollup($name): ${spec.factPath} is not one file scan"))
-    val fp = FileSchemas.fingerprint(inventory)
     val aggs = spec.measures.map(m => expr(m.agg).as(m.name))
     require(aggs.nonEmpty, s"stageRollup($name): no measures advised")
     require(spec.keys.nonEmpty, s"stageRollup($name): no keys advised")
@@ -195,34 +181,25 @@ object MaterializedAggs extends LayoutRegistry {
     TableStats.recordWrite(spark, rolled, name, spec.keys)(
       graft.sources.TabularWriter.toBucketedTable(_, name, spec.keys.head, spec.buckets,
         sorted = true))
-    val meta = Meta(name, spec.fact, spec.factPath,
-      spec.keys.map(_.toLowerCase), spec.measures, fp)
-    Freshness.writeSidecar(spark, name, RollupSidecar, sidecarBody(meta, inventory))
+    val meta = record(spark, name, spec.fact, spec.factPath,
+      spec.keys.map(_.toLowerCase), spec.measures, inventory)
     register(meta)
     meta
   }
 
   /** Fresh-JVM re-attach of an already-staged rollup at `path` as
-    * catalog table `name`: the sidecar must match this session's spec
-    * (fact path, key, measure set) AND the fact's LIVE fingerprint must
-    * equal the staged one — a base table that grew since staging would
-    * be silently served stale per-key values. Refusal is loud;
-    * re-stage is the recovery. */
+    * catalog table `name` through [[Freshness.attach]]: the record must
+    * match this session's spec (fact path, keys, measure set) AND the
+    * fact's LIVE fingerprint must equal the staged one — a base table
+    * that grew since staging would be silently served stale per-key
+    * values. Refusal is loud; re-stage is the recovery. */
   def attachRollup(spark: SparkSession, spec: LayoutAdvisor.RollupSpec,
       name: String, path: String): Meta = {
-    val recorded = metaFromSidecar(name, path)
-    require(recorded.fact == spec.fact && recorded.factPath == spec.factPath &&
-      recorded.keys == spec.keys.map(_.toLowerCase) &&
-      recorded.measures.toSet == spec.measures.toSet,
-      s"attachRollup($name): sidecar does not match this session's advice — re-stage")
-    val live = Freshness.ofPath(spark, spec.factPath)
-    require(live == recorded.fingerprint,
-      s"attachRollup($name): base data at ${spec.factPath} drifted since " +
-        s"staging (staged=${recorded.fingerprint} live=$live) — re-stage")
-    graft.sources.TabularWriter.attach(spark, name, path, spec.keys.head, spec.buckets)
+    val meta = Freshness.attach(spark, name, path,
+      identity(spec.fact, spec.factPath, spec.keys.map(_.toLowerCase), spec.measures),
+      Some(spec.keys.head -> spec.buckets))(metaOf(name, _))
     if (TableStats.lookup(TableStats.warehouseOf(spark), name).isEmpty)
       TableStats.analyze(spark, spark.table(name), name, spec.keys)
-    val meta = recorded.copy(catalogTable = name)
     register(meta)
     meta
   }
@@ -259,7 +236,7 @@ object MaterializedAggs extends LayoutRegistry {
     *
     * The swap is [[graft.sources.TabularWriter.swap]]'s rename-aside
     * (`__refreshing`/`__prerefresh`): every crash window keeps both
-    * copies on disk, and the post-swap window before the new sidecar
+    * copies on disk, and the post-swap window before the new record
     * lands is safe by construction — the registered fingerprint no longer
     * matches the live base, so the rewrite declines rather than serve
     * a half-refreshed table. Returns (and registers) the refreshed
@@ -269,13 +246,11 @@ object MaterializedAggs extends LayoutRegistry {
     import org.apache.spark.sql.functions.{col, expr, max, min, sum}
     val ident = org.apache.spark.sql.catalyst.TableIdentifier(meta.catalogTable)
     val cat = spark.sessionState.catalog.getTableMetadata(ident)
-    // the staged base-file inventory (absent in pre-refresh sidecars,
-    // unparsed in sidecars written before entries carried an mtime)
-    val staged = Freshness.readSidecar(cat.location.getPath, RollupSidecar)
-      .getOrElse(Nil).filter(_.startsWith("file\t"))
-      .flatMap(l => FileSchemas.Entry.parse(l.stripPrefix("file\t"))).toSet
+    // the staged base-file inventory (absent without a record)
+    val staged = Freshness.read(cat.location.getPath).toSeq.flatMap(_.all("file", 1))
+      .flatMap(f => FileSchemas.Entry.parse(f.head)).toSet
     require(staged.nonEmpty,
-      s"refreshRollup(${meta.catalogTable}): sidecar records no file " +
+      s"refreshRollup(${meta.catalogTable}): no layout record of its file " +
         "inventory — re-stage")
     val factDf = FileSchemas.read(spark, meta.factPath.split(',').toIndexedSeq)
     val live = Freshness.leafEntries(factDf).getOrElse(sys.error(
@@ -325,9 +300,8 @@ object MaterializedAggs extends LayoutRegistry {
           }
         }
       }
-      val fresh = meta.copy(fingerprint = FileSchemas.fingerprint(live))
-      Freshness.writeSidecar(spark, meta.catalogTable, RollupSidecar,
-        sidecarBody(fresh, live))
+      val fresh = record(spark, meta.catalogTable, meta.fact, meta.factPath,
+        meta.keys, meta.measures, live)
       RewriteMaterializedAgg.invalidate(meta.catalogTable)
       register(fresh)
       fresh

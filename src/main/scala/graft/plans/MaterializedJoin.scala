@@ -85,10 +85,11 @@ object MaterializedJoins extends LayoutRegistry {
     * `cents` whose stage-time finiteness audit passed (the DECIMAL
     * idiom's precondition — [[RewriteStoredCents.FiniteProperty]]). */
   /** `fingerprints` = member path → [[Freshness]] fingerprint of that
-    * base table AT STAGE TIME. The rewrite re-checks the members present
-    * in each query against the live FileIndex and declines on drift;
-    * [[attachDenorm]] checks ALL members (including dims the queries
-    * omit — their lossless audits rot with the data). Empty map =
+    * base table AT STAGE TIME (the record's base lines). The rewrite
+    * re-checks the members present in each query against the live
+    * FileIndex and declines on drift; [[attachDenorm]] checks ALL
+    * members (including dims the queries omit — their lossless audits
+    * rot with the data). Empty map =
     * unrecorded (hand-built test metas) — unchecked by contract. */
   case class Meta(catalogTable: String, fact: String, factPath: String,
       dims: Seq[DimMeta], columns: Set[String], cents: Set[String],
@@ -103,23 +104,34 @@ object MaterializedJoins extends LayoutRegistry {
     df.queryExecution.optimizedPlan.collectFirst { case FileLeaf(_, _, path) => path }
       .getOrElse(sys.error("MaterializedJoins.leafPath: no file scan in plan"))
 
-  /** Sidecar written beside a staged denorm's files: everything a fresh
-    * JVM needs to re-[[attachDenorm]] and re-[[register]] without
-    * re-running the join or the audits. */
-  val DenormSidecar = "_graft_denorm"
-
-  private def sidecarBody(spec: LayoutAdvisor.DenormSpec, meta: Meta): String = {
-    val dimLines = meta.dims.map(d =>
-      s"dim ${d.table} ${d.path} ${d.parentTable} ${d.parentKey} ${d.dimKey} ${d.lossless}")
-    val fpLines = meta.fingerprints.toSeq.sortBy(_._1).map { case (p, h) => s"fp $p $h" }
-    (Seq(
-      s"fact ${spec.fact} ${spec.factPath}",
-      s"bucket ${spec.bucketKey.getOrElse("-")} ${spec.buckets}",
-      s"columns ${meta.columns.toSeq.sorted.mkString(",")}",
-      s"cents ${meta.cents.toSeq.sorted.mkString(",")}",
-      s"finite ${meta.finite.toSeq.sorted.mkString(",")}") ++ dimLines ++ fpLines)
-      .mkString("", "\n", "\n")
+  /** The identity lines of a denorm's record: fact, bucketing,
+    * carried columns, requested cents and the dim chain, in order. */
+  private def identity(spec: LayoutAdvisor.DenormSpec): Seq[Seq[String]] = {
+    val carried = spec.columns.map(_.toLowerCase)
+    Seq(Seq("fact", spec.fact, spec.factPath),
+      Seq("bucket", spec.bucketKey.getOrElse("-"), spec.buckets.toString),
+      Seq("columns", carried.sorted.mkString(",")),
+      Seq("cents", spec.centsCols.map(_.toLowerCase).filter(carried.contains).sorted
+        .mkString(","))) ++
+      spec.dims.map(d => Seq("dim", d.table, d.path, d.parentTable, d.parentKey, d.dimKey))
   }
+
+  /** The [[Meta]] a denorm's record describes: the identity lines, the
+    * `finite` and `lossless` audits and one fingerprint per member. */
+  private def metaOf(catalogTable: String, rec: Freshness.Record): Meta = {
+    val fact = rec.one("fact", 2)
+    val lossless = rec.list("lossless").toSet
+    val finite = rec.list("finite").toSet
+    Meta(catalogTable, fact(0), fact(1),
+      rec.all("dim", 5).map(f => DimMeta(f(0), f(1), f(2), f(3), f(4), lossless(f(0)))),
+      rec.list("columns").toSet, finite, finite, rec.bases.toMap)
+  }
+
+  /** The [[Meta]] recorded beside the staged denorm at `path` (no
+    * registration, no validation — [[attachDenorm]] adds the
+    * advice-drift and freshness guards). */
+  def recorded(catalogTable: String, path: String): Meta =
+    metaOf(catalogTable, Freshness.recordAt(path))
 
   /** Stage `spec` as bucketed catalog table `name`: run the inner
     * equi-join chain over the base paths, carry exactly the advised
@@ -185,86 +197,29 @@ object MaterializedJoins extends LayoutRegistry {
         case None => withCents.write.mode("overwrite").saveAsTable(name)
       }
     }
-    // freshness: fingerprint every member's base files AS STAGED —
-    // the audits and the join itself are only valid for these bytes
-    val fps = (Seq(spec.factPath) ++ spec.dims.map(_.path)).distinct
-      .map(p => p -> Freshness.ofPath(spark, p)).toMap
-    val meta = Meta(name, spec.fact, spec.factPath, audited,
-      carried.toSet, finite.toSet, finite.toSet, fps)
-    Freshness.writeSidecar(spark, name, DenormSidecar, sidecarBody(spec, meta))
+    // freshness: every member's base files AS STAGED — the audits and
+    // the join itself are only valid for these bytes
+    val meta = metaOf(name, Freshness.write(spark, name, identity(spec),
+      Seq(Freshness.finite(finite),
+        Seq("lossless", audited.filter(_.lossless).map(_.table).mkString(","))),
+      (Seq(spec.fact -> spec.factPath) ++ spec.dims.map(d => d.table -> d.path))
+        .map { case (t, p) => Freshness.base(p, tables(t)) }.distinct))
     register(meta)
     meta
   }
 
-  /** Parse a staged denorm's sidecar at `path` into the [[Meta]] it
-    * records, plus the bucket key it was staged with (`-` = none). No
-    * registration, no validation — [[attachDenorm]] adds the
-    * advice-drift and freshness guards. */
-  def metaFromSidecar(catalogTable: String, path: String): (Meta, String) = {
-    def bad(what: String) = new IllegalArgumentException(
-      s"$catalogTable: denorm sidecar $what — re-stage")
-    val lines = Freshness.readSidecar(path, DenormSidecar).getOrElse(
-      throw bad(s"${java.nio.file.Paths.get(path, DenormSidecar)} missing"))
-    def line(prefix: String): String = lines.collectFirst {
-      case l if l.startsWith(prefix + " ") => l.stripPrefix(prefix + " ")
-    }.getOrElse(throw bad(s"missing '$prefix' line"))
-    def csv(s: String): Set[String] =
-      s.split(",").map(_.trim).filter(_.nonEmpty).toSet
-    def fields(prefix: String): Seq[Array[String]] = lines
-      .filter(_.startsWith(prefix + " ")).map(_.stripPrefix(prefix + " ").split("\\s+"))
-    val factLine = line("fact").split("\\s+")
-    if (factLine.length != 2) throw bad(s"malformed fact line '${line("fact")}'")
-    val dims = fields("dim").map {
-      case Array(t, p, pt, pk, dk, ll) => DimMeta(t, p, pt, pk, dk, ll.toBoolean)
-      case other => throw bad(s"malformed dim line '${other.mkString(" ")}'")
-    }
-    val fps = fields("fp").map {
-      case Array(p, h) => p -> h
-      case other => throw bad(s"malformed fp line '${other.mkString(" ")}'")
-    }.toMap
-    (Meta(catalogTable, factLine(0), factLine(1), dims, csv(line("columns")),
-      csv(line("cents")), csv(line("finite")), fps),
-      line("bucket").split("\\s+")(0))
-  }
-
   /** Fresh-JVM re-attach of already-staged denorm files at `path` as
-    * catalog table `name` (the local stand-in for a persistent
-    * metastore): the sidecar must prove the files were staged from the
-    * SAME spec — fact path, dim chain and bucket key — or we re-stage
-    * rather than silently serve a drifted projection. Returns the
-    * re-registered [[Meta]]. */
+    * catalog table `name` through [[Freshness.attach]]: the record must
+    * prove the files were staged from the SAME spec — fact path, dim
+    * chain, bucketing, carried columns and cents — from base files that
+    * are still the bytes of EVERY member (an omitted dim's lossless
+    * audit rots with its data too), or we re-stage rather than
+    * silently serve a drifted projection. Returns the re-registered
+    * [[Meta]]. */
   def attachDenorm(spark: SparkSession, spec: LayoutAdvisor.DenormSpec,
       name: String, path: String): Meta = {
-    val (meta, bucketKey) = metaFromSidecar(name, path)
-    require(meta.fact == spec.fact && meta.factPath == spec.factPath &&
-      bucketKey == spec.bucketKey.getOrElse("-") &&
-      meta.dims.map(d => (d.table, d.path, d.parentTable, d.parentKey, d.dimKey)) ==
-        spec.dims.map(d => (d.table, d.path, d.parentTable, d.parentKey, d.dimKey)),
-      s"attachDenorm($name): sidecar does not match this session's advice — re-stage")
-    // FRESHNESS: every member's base files must still be the bytes the
-    // layout (and its lossless audits) were staged from — a base table
-    // that grew since staging would be silently served pre-append rows.
-    // ALL members are checked here (the rewrite can only re-check the
-    // ones present in a query; an omitted dim's audit rots invisibly).
-    (Seq(spec.factPath) ++ spec.dims.map(_.path)).distinct.foreach { p =>
-      meta.fingerprints.get(p).foreach { staged =>
-        val live = Freshness.ofPath(spark, p)
-        require(live == staged,
-          s"attachDenorm($name): base data at $p drifted since staging " +
-            s"(staged=$staged live=$live) — re-stage")
-      }
-    }
-    spec.bucketKey match {
-      case Some(k) =>
-        graft.sources.TabularWriter.attach(spark, name, path, k, spec.buckets)
-      case None =>
-        val schema = FileSchemas.read(spark, Seq(path)).schema.toDDL
-        spark.sql(s"CREATE TABLE `$name` ($schema) USING parquet LOCATION '$path'")
-    }
-    if (meta.finite.nonEmpty) {
-      val finite = meta.finite.toSeq.sorted
-      LayoutAdvisor.markDerived(spark, name, finite, finite)
-    }
+    val meta = Freshness.attach(spark, name, path, identity(spec),
+      spec.bucketKey.map(_ -> spec.buckets))(metaOf(name, _))
     register(meta)
     meta
   }

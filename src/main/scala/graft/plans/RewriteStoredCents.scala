@@ -67,7 +67,7 @@ object RewriteStoredCents extends Rule[LogicalPlan] {
     * itself would throw on NaN), so in practice this property equals
     * [[Property]] — kept separate as the explicit marker the decimal
     * rewrite checks, and so a legacy table staged before the audit
-    * existed (sidecar without a `finite` line) can never fire it. */
+    * existed (no `finite` audit recorded) can never fire it. */
   val FiniteProperty = "graft.derived.cents.finite"
 
   private def isHundred(l: Literal): Boolean = l.value match {

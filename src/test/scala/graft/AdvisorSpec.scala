@@ -757,4 +757,61 @@ class AdvisorSpec extends GraftSpec {
       Seq(layout, rollup).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
   }
+
+  test("attach and attachDerived: a roundtrip serves the staged rows; drifted advice or base refuses") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("adv_attach")
+    sys.addShutdownHook(GateFixtures.deleteRecursively(dir))
+    def write(t: String, mode: String, ids: Seq[Long]): String = {
+      val p = dir.resolve(t).toString
+      ids.map(i => (i, i % 7, i * 0.25)).toDF("k", "c", "v").write.mode(mode).parquet(p)
+      graft.plans.MaterializedJoins.leafPath(spark.read.parquet(p))
+    }
+    val path = write("t.parquet", "overwrite", 1L to 200L)
+    val spec = LayoutAdvisor.LayoutSpec(path, "t", "k", 4, Seq("k", "c", "v"), 1)
+    val dspec = LayoutAdvisor.DerivedSpec(path, "t", Seq("v"), Some("c"), 2, 1)
+    val (bucketed, derived) = ("adv_attach_b", "adv_attach_d")
+    Seq(bucketed, derived).foreach(graft.sources.TabularWriter.clearStale(spark, _))
+    LayoutAdvisor.stageWithDerived(spark, spec, Seq("v"), bucketed)
+    LayoutAdvisor.stageDerived(spark, dspec, derived)
+    val (bAside, dAside) = (copyAside(bucketed).toString, copyAside(derived).toString)
+    def fresh(t: String): String = {
+      if (spark.catalog.tableExists(t)) spark.sql(s"DROP TABLE `$t`")
+      t
+    }
+    def refuses(t: String)(attach: String => Unit): String = {
+      val e = intercept[IllegalArgumentException](attach(fresh(t)))
+      assert(!spark.catalog.tableExists(t))
+      e.getMessage
+    }
+    // advice that no longer describes the files: other carried columns,
+    // another base path (a copy of the same rows)
+    val other = write("other.parquet", "overwrite", 1L to 200L)
+    assert(refuses("adv_attach_b2")(LayoutAdvisor.attach(spark,
+      spec.copy(columns = Seq("k", "v")), Seq("v"), _, bAside)).contains("advice"))
+    assert(refuses("adv_attach_d2")(LayoutAdvisor.attachDerived(spark,
+      dspec.copy(path = other), _, dAside)).contains("advice"))
+    // bucketed files without the writer's bucketing proof
+    val unproven = copyAside(bucketed)
+    java.nio.file.Files.delete(unproven.resolve(graft.sources.TabularWriter.BucketSidecar))
+    assert(refuses("adv_attach_b2")(LayoutAdvisor.attach(spark, spec, Seq("v"), _,
+      unproven.toString)).contains(graft.sources.TabularWriter.BucketSidecar))
+    // the roundtrip: the staged rows and stored-cents marks
+    LayoutAdvisor.attach(spark, spec, Seq("v"), fresh("adv_attach_b2"), bAside)
+    LayoutAdvisor.attachDerived(spark, dspec, fresh("adv_attach_d2"), dAside)
+    def rows(t: String) = spark.table(t).collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    for ((staged, again) <- Seq(bucketed -> "adv_attach_b2", derived -> "adv_attach_d2")) {
+      assert(rows(again) === rows(staged) && rows(again).size === 200)
+      val props = spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(again)).properties
+      assert(props.get(graft.plans.RewriteStoredCents.Property) === Some("v"), props)
+    }
+    // an appended base refuses both
+    write("t.parquet", "append", 201L to 220L)
+    assert(refuses("adv_attach_b3")(
+      LayoutAdvisor.attach(spark, spec, Seq("v"), _, bAside)).contains("drifted"))
+    assert(refuses("adv_attach_d3")(
+      LayoutAdvisor.attachDerived(spark, dspec, _, dAside)).contains("drifted"))
+    Seq("adv_attach_b2", "adv_attach_d2").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
 }

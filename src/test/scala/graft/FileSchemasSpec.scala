@@ -136,10 +136,10 @@ class FileSchemasSpec extends GraftSpec {
     val root = tempDir("fs_inventory") + "/.work/_staging/t"
     (1L to 40L).map(i => (i, i * 2.0, i % 2)).toDF("id", "v", "k")
       .write.partitionBy("k").parquet(root)
-    Files.write(Paths.get(root, "_graft_base"), "base - -\n".getBytes("UTF-8"))
+    Files.write(Paths.get(root, "_graft_layout"), "base\t-\t-\n".getBytes("UTF-8"))
     val walk = Files.walk(Paths.get(root))
     val names = try walk.iterator().asScala.map(_.getFileName.toString).toSet finally walk.close()
-    assert(Set("_SUCCESS", "_graft_base", "k=1").subsetOf(names) &&
+    assert(Set("_SUCCESS", "_graft_layout", "k=1").subsetOf(names) &&
       names.exists(_.endsWith(".crc")), names)
     val listed = FileSchemas.inventory(s, Seq(root)).get
     val index = FileSchemas.read(s, Seq(root)).queryExecution.analyzed
@@ -155,7 +155,7 @@ class FileSchemasSpec extends GraftSpec {
     val dir = tempDir("fs_hidden") + "/t"
     (1L to 50L).map(i => (i, i * 2.0)).toDF("k", "v").coalesce(1).write.parquet(dir)
     FileSchemas.read(s, Seq(dir))
-    Seq("_SUCCESS", ".part-extra.parquet.crc", "_graft_rollup").foreach { n =>
+    Seq("_SUCCESS", ".part-extra.parquet.crc", "_graft_layout").foreach { n =>
       Files.write(Paths.get(dir, n), s"$n rewritten\n".getBytes("UTF-8"))
       assert(jobsDuring(s)(FileSchemas.read(s, Seq(dir))) === 0, n)
     }

@@ -292,21 +292,13 @@ class MaterializedAggSpec extends GraftSpec {
 
   test("attachRollup restores the registration from the sidecar") {
     val staged = meta // ensure staged
-    val src = java.nio.file.Paths.get(graft.plans.TableStats.warehouseOf(spark), staged.catalogTable)
-    val aside = java.nio.file.Files.createTempDirectory("maspec_attach")
-    sys.addShutdownHook(GateFixtures.deleteRecursively(aside))
-    java.nio.file.Files.walk(src).forEach { p =>
-      val t = aside.resolve(src.relativize(p).toString)
-      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(t)
-      else java.nio.file.Files.copy(p, t,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
+    val aside = copyAside(staged.catalogTable)
     val name2 = staged.catalogTable + "2"
     if (spark.catalog.tableExists(name2)) spark.sql(s"DROP TABLE `$name2`")
-    // a corrupt sidecar (a mangled measure line) fails with the same
+    // a corrupt record (a mangled measure line) fails with the same
     // re-stage diagnostic as the other validations; restoring the
-    // sidecar restores attach
-    val sidecar = aside.resolve(MaterializedAggs.RollupSidecar)
+    // record restores attach
+    val sidecar = aside.resolve(graft.plans.Freshness.RecordFile)
     val saved = new String(java.nio.file.Files.readAllBytes(sidecar), "UTF-8")
     try {
       val junk = saved.split("\n").toSeq
@@ -546,11 +538,11 @@ class MaterializedAggSpec extends GraftSpec {
     assert(avgRes.isRight, s"avg refresh must refuse; got $avgRes " +
       s"(measures=${avgMeta.measures})")
     // non-append drift (a STAGED file disappeared) refuses — the file
-    // to delete comes from the refreshed sidecar's own inventory
+    // to delete comes from the refreshed record's own inventory
     // (deleting an arbitrary parquet file could hit a post-refresh
     // delta file, which IS still append-only growth)
     val sidecar = java.nio.file.Paths.get(graft.plans.TableStats.warehouseOf(spark), name,
-      MaterializedAggs.RollupSidecar)
+      graft.plans.Freshness.RecordFile)
     val stagedFile = java.nio.file.Files.readAllLines(sidecar)
       .toArray.map(_.toString).collectFirst {
         case l if l.startsWith("file\t") => l.stripPrefix("file\t")

@@ -291,11 +291,27 @@ class MaterializedJoinSpec extends GraftSpec {
     val derived = name + "_derived"
     val bucketed = name + "_bucketed"
     Seq(derived, bucketed).foreach(graft.sources.TabularWriter.clearStale(spark, _))
-    LayoutAdvisor.stageDerived(spark, LayoutAdvisor.DerivedSpec(
-      fPath, "f", Seq("x"), sortCol = None, numFiles = 1, hits = 1), derived)
-    LayoutAdvisor.stageWithDerived(spark, LayoutAdvisor.LayoutSpec(
-      fPath, "f", "k", 4, Seq("k", "x", "x_cents"), hits = 1), Seq("x"), bucketed)
-    for (t <- Seq(name, derived, bucketed)) {
+    val derivedSpec = LayoutAdvisor.DerivedSpec(
+      fPath, "f", Seq("x"), sortCol = None, numFiles = 1, hits = 1)
+    val bucketedSpec = LayoutAdvisor.LayoutSpec(
+      fPath, "f", "k", 4, Seq("k", "x", "x_cents"), hits = 1)
+    LayoutAdvisor.stageDerived(spark, derivedSpec, derived)
+    LayoutAdvisor.stageWithDerived(spark, bucketedSpec, Seq("x"), bucketed)
+    // re-attached from copies of their files (a fresh JVM's catalog),
+    // each layout marks the cents its staging KEPT — none — not the
+    // cents its advice asks for
+    val reattached = Seq[(String, String => Unit)](
+      name -> (p => MaterializedJoins.attachDenorm(spark, spec, name + "_again", p)),
+      derived -> (p => LayoutAdvisor.attachDerived(spark, derivedSpec, derived + "_again", p)),
+      bucketed -> (p => LayoutAdvisor.attach(spark, bucketedSpec, Seq("x"), bucketed + "_again", p)))
+      .map { case (t, attach) =>
+        val again = t + "_again"
+        if (spark.catalog.tableExists(again)) spark.sql(s"DROP TABLE `$again`")
+        attach(copyAside(t).toString)
+        MaterializedJoins.deregister(again)
+        again
+      }
+    for (t <- Seq(name, derived, bucketed) ++ reattached) {
       val props = spark.sessionState.catalog.getTableMetadata(
         org.apache.spark.sql.catalyst.TableIdentifier(t)).properties
       assert(!props.contains(graft.plans.RewriteStoredCents.Property),
@@ -304,6 +320,10 @@ class MaterializedJoinSpec extends GraftSpec {
       val served = spark.table(t).select(col("k"), col("x_cents"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(served(5L) === 5000L, s"$t: real x_cents must not be overwritten: $served")
+      // and the money idiom over x computes from x itself
+      val idiom = spark.table(t).filter(col("k") === 5L)
+        .select(round(col("x") * 100).cast("long")).head().getLong(0)
+      assert(idiom === 525L, s"$t: cast(round(x*100) as bigint) must read x, not x_cents")
     }
   }
 
@@ -437,25 +457,17 @@ class MaterializedJoinSpec extends GraftSpec {
     // a fresh JVM = empty catalog, files intact: copy the staged files
     // aside (DROP TABLE on a managed table would delete them) and
     // re-attach from the copy under a new name
-    val aside = java.nio.file.Files.createTempDirectory("mjspec_attach")
-    sys.addShutdownHook(GateFixtures.deleteRecursively(aside))
-    val src = java.nio.file.Paths.get(graft.plans.TableStats.warehouseOf(spark), name)
-    java.nio.file.Files.walk(src).forEach { p =>
-      val t = aside.resolve(src.relativize(p).toString)
-      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(t)
-      else java.nio.file.Files.copy(p, t,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
+    val aside = copyAside(name)
     if (spark.catalog.tableExists(name + "2")) spark.sql(s"DROP TABLE `${name}2`")
-    // a corrupt sidecar (a dropped line, a mangled dim line) fails with
+    // a corrupt record (a dropped line, a mangled dim line) fails with
     // the same re-stage diagnostic as the other validations; restoring
-    // the sidecar restores attach
-    val sidecar = aside.resolve(MaterializedJoins.DenormSidecar)
+    // the record restores attach
+    val sidecar = aside.resolve(graft.plans.Freshness.RecordFile)
     val saved = new String(java.nio.file.Files.readAllBytes(sidecar), "UTF-8")
     try {
       val lines = saved.split("\n").toSeq
-      for (junk <- Seq(lines.filterNot(_.startsWith("finite ")),
-          lines.map(l => if (l.startsWith("dim ")) "dim orders l_orderkey" else l))) {
+      for (junk <- Seq(lines.filterNot(_.startsWith("finite\t")),
+          lines.map(l => if (l.startsWith("dim\t")) "dim\torders\tl_orderkey" else l))) {
         java.nio.file.Files.write(sidecar, junk.mkString("", "\n", "\n").getBytes("UTF-8"))
         val e = intercept[IllegalArgumentException] {
           MaterializedJoins.attachDenorm(spark, spec, name + "2", aside.toString)

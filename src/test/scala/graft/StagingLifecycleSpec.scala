@@ -4,9 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** How a staged catalog table is created, replaced and re-attached
   * lives in `sources.TabularWriter` (the rename-aside swap, the
-  * stale-location clear). A second hand-written swap or warehouse-path
-  * computation must show up here as a failing spec, not as one more
-  * copy of the lifecycle. */
+  * stale-location clear) and `plans.Freshness` (the layout record and
+  * the one attach). A second hand-written swap, warehouse-path
+  * computation or layout sidecar must show up here as a failing spec,
+  * not as one more copy of the lifecycle. */
 class StagingLifecycleSpec extends AnyFunSuite {
 
   test("RENAME TO appears only in TabularWriter.scala under src/main") {
@@ -30,6 +31,17 @@ class StagingLifecycleSpec extends AnyFunSuite {
     // EagerAggregation is an optimizer rule that holds only a SQLConf
     val found = SourceGuard.hits("spark.sql.warehouse.dir",
       Set("TableStats.scala", "GraftSession.scala", "EagerAggregation.scala"))
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("layout records are read and written only in Freshness.scala under src/main") {
+    // a second sidecar name, hand-written sidecar I/O or a direct read
+    // of the record file is a second record format; TabularWriter's `_graft_buckets` (the writer's own
+    // bucketing proof) and TableStats' `_graft_stats` are not layout records
+    val found = SourceGuard.hits("\"_graft_", Set("Freshness.scala", "TabularWriter.scala",
+      "TableStats.scala")) ++
+      SourceGuard.hits("Sidecar(", Set("Freshness.scala", "TabularWriter.scala")) ++
+      SourceGuard.hits("RecordFile", Set("Freshness.scala"))
     assert(found.isEmpty, found.mkString("\n"))
   }
 

@@ -15,6 +15,8 @@ import graft.gates.Shared.cents
   * by a JVM shutdown hook.
   */
 private[graft] object GateFixtures {
+  /** JVM-wide: fixture dirs are plain files outside any catalog, so
+    * every session on any context reads them. */
   private val staged = new ConcurrentHashMap[String, String]()
 
   /** Returns the fixture directory for `kind` over `dataDir`, invoking
@@ -344,8 +346,8 @@ private[graft] object GateFixtures {
     * pre-joined projection with audited lossless dims and stored cents.
     * Memoized per (catalog, dir) like every bucketed fixture; the
     * returned Meta is registered per GATE QUERY via
-    * MaterializedJoins.withRegistered (a process-wide registration
-    * would silently rewrite every other gate over these base paths). */
+    * MaterializedJoins.withRegistered (a lasting registration would
+    * silently rewrite every other gate over these base paths). */
   def denormStar(s: org.apache.spark.sql.SparkSession, d: String)
       : graft.plans.MaterializedJoins.Meta = {
     import org.apache.spark.sql.functions.{col, count, lit, sum}
@@ -380,7 +382,7 @@ private[graft] object GateFixtures {
     }
     val name = bucketedTable(s, d, "dn_star") { n =>
       graft.plans.MaterializedJoins.stageDenorm(s, spec, n)
-      graft.plans.MaterializedJoins.deregister(n) // gates scope their own
+      graft.plans.MaterializedJoins.deregister(s, n) // gates scope their own
     }
     // the layout record is the Meta's durable form — works for both the
     // fresh staging above and the memoized same-JVM re-entry
@@ -417,7 +419,7 @@ private[graft] object GateFixtures {
     }
     val name = bucketedTable(s, d, "ar_rollup") { n =>
       graft.plans.MaterializedAggs.stageRollup(s, spec, n)
-      graft.plans.MaterializedAggs.deregister(n) // gates scope their own
+      graft.plans.MaterializedAggs.deregister(s, n) // gates scope their own
     }
     graft.plans.MaterializedAggs.recorded(name, warehousePath(s, name))
   }
@@ -458,7 +460,7 @@ private[graft] object GateFixtures {
       val name = bucketedTable(s, d, base) { n =>
         graft.plans.MaterializedAggs.stageRollup(s,
           specs.find(_.keys == keys).get, n)
-        graft.plans.MaterializedAggs.deregister(n) // gates scope their own
+        graft.plans.MaterializedAggs.deregister(s, n) // gates scope their own
       }
       graft.plans.MaterializedAggs.recorded(name, warehousePath(s, name))
     }

@@ -20,14 +20,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // FIRST among the engine's optimizer rules: the materialized-join
     // match wants the join subtree as authored (pruned by the standard
     // batch, but not yet reshaped by EagerAggregation)
-    e.injectOptimizerRule(_ => graft.plans.RewriteMaterializedJoin)
+    e.injectOptimizerRule(graft.plans.RewriteMaterializedJoin(_))
     // after the join rewrite (aggregate shapes are matched as
     // authored), before EagerAggregation (whose inserted semi-probe
     // DISTINCT the rollup's key-set form also serves — the two rules
     // compose in either firing order)
-    e.injectOptimizerRule(_ => graft.plans.RewriteMaterializedAgg)
+    e.injectOptimizerRule(graft.plans.RewriteMaterializedAgg(_))
     e.injectOptimizerRule(_ => graft.plans.CollapseIdempotent)
-    e.injectOptimizerRule(_ => graft.plans.EagerAggregation)
+    e.injectOptimizerRule(graft.plans.EagerAggregation(_))
     // post-hoc resolution, NOT optimizer: must run before ColumnPruning
     // hides the stored column (see the rule's scaladoc)
     e.injectPostHocResolutionRule(_ => graft.plans.RewriteStoredCents)

@@ -32,49 +32,49 @@ object ProbeAdvisorSweep {
     * redirects on its flat plan; `metas`/`rollups` are the materialized
     * tables registered for the whole run, which the flat control steps
     * out of. */
-  private[graft] final case class Setup(d: String,
+  private[graft] final case class Setup(spark: SparkSession, d: String,
       routes: String => Map[String, String],
       metas: Seq[MaterializedJoins.Meta] = Nil,
       rollups: Seq[MaterializedAggs.Meta] = Nil) {
     def routeAll(names: Seq[String]): Map[String, Map[String, String]] =
-      names.map { n => Tables.clearRedirects(); n -> routes(n) }.toMap
+      names.map { n => Tables.clearRedirects(spark); n -> routes(n) }.toMap
 
     def serve(redirects: Map[String, String]): Unit = {
-      Tables.clearRedirects()
-      redirects.foreach { case (t, ct) => Tables.redirect(d, t, ct) }
+      Tables.clearRedirects(spark)
+      redirects.foreach { case (t, ct) => Tables.redirect(spark, d, t, ct) }
     }
 
     /** No redirects and nothing of this setup registered. */
     def release(): Unit = {
-      Tables.clearRedirects()
-      metas.foreach(m => MaterializedJoins.deregister(m.catalogTable))
-      rollups.foreach(m => MaterializedAggs.deregister(m.catalogTable))
+      Tables.clearRedirects(spark)
+      metas.foreach(m => MaterializedJoins.deregister(spark, m.catalogTable))
+      rollups.foreach(m => MaterializedAggs.deregister(spark, m.catalogTable))
     }
 
     /** `body` over the flat tables, then re-register. */
     def flat[A](body: => A): A = {
       release()
       try body finally {
-        metas.foreach(MaterializedJoins.register)
-        rollups.foreach(MaterializedAggs.register)
+        metas.foreach(MaterializedJoins.register(spark, _))
+        rollups.foreach(MaterializedAggs.register(spark, _))
       }
     }
   }
 
   /** `flat`: nothing staged (the A/B control in the same harness). */
-  private def flatLayout(r: Run): Setup = Setup(r.d, _ => Map.empty)
+  private def flatLayout(r: Run): Setup = Setup(r.spark, r.d, _ => Map.empty)
 
   /** `advised`: [[ensureAdvised]]'s redirects, the same for every query. */
   private def advisedLayout(r: Run): Setup = {
     val redirects = ensureAdvised(r.spark, r.d).toMap
-    Setup(r.d, _ => redirects)
+    Setup(r.spark, r.d, _ => redirects)
   }
 
   /** `routed`: one projection per hot key staged; each query's
     * redirects come from ITS OWN flat plan (LayoutAdvisor.routeAll). */
   private def routedLayout(r: Run): Setup = {
     val staged = ensureProjections(r.spark, r.d)
-    Setup(r.d, { n =>
+    Setup(r.spark, r.d, { n =>
       val routes = LayoutAdvisor.routeAll(SparkEntry.queries(n)(r.spark, r.d), staged)
       println(s"[route] $n -> ${routes.map { case (t, c) => s"$t=$c" }.mkString(" ")}")
       routes
@@ -89,7 +89,7 @@ object ProbeAdvisorSweep {
     val staged = ensureProjections(r.spark, r.d)
     val metas = ensureDenorm(r.spark, r.d)
     val rollups = ensureRollups(r.spark, r.d)
-    Setup(r.d, denormAwareRoutes(r.spark, r.d, _, staged, metas, rollups), metas, rollups)
+    Setup(r.spark, r.d, denormAwareRoutes(r.spark, r.d, _, staged, metas, rollups), metas, rollups)
   }
 
   /** Time every query over the setup (the [[BenchBig]] loop); print one
@@ -145,8 +145,9 @@ object ProbeAdvisorSweep {
   private def rollupAb(r: Run, s: Setup): Unit = {
     val reps = math.max(r.reps, 2)
     val on = timed(r, s, reps).toMap
-    s.rollups.foreach(m => MaterializedAggs.deregister(m.catalogTable))
-    val off = try timed(r, s, reps).toMap finally s.rollups.foreach(MaterializedAggs.register)
+    s.rollups.foreach(m => MaterializedAggs.deregister(r.spark, m.catalogTable))
+    val off = try timed(r, s, reps).toMap
+      finally s.rollups.foreach(MaterializedAggs.register(r.spark, _))
     val qs = r.names.map(n => JsonOut.q(n) +
       s""":{"on":${on(n)},"off":${off(n)}}""").mkString("{", ",", "}")
     println(s"""{"metric":"rollup_ab","queries":$qs,"sf":${JsonOut.q(r.d)}}""")
@@ -178,10 +179,10 @@ object ProbeAdvisorSweep {
     val (layout, action) = Modes.getOrElse(mode, throw new IllegalArgumentException(
       s"unknown mode $mode (one of ${Modes.keys.toSeq.sorted.mkString(", ")})"))
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    // stopping the context also ends every registration and redirect
     try {
       val r = Run(spark, d, mode, names, reps)
-      val setup = layout(r)
-      try action(r, setup) finally setup.release()
+      action(r, layout(r))
     } finally spark.stop()
   }
 
@@ -212,13 +213,13 @@ object ProbeAdvisorSweep {
   }
 
   /** Advise, stage (or fresh-JVM re-attach) and REGISTER the corpus's
-    * materialized-join projections. Registration is process-wide and
-    * stays live — this is the product mode where
+    * materialized-join projections. Registration stays live in this
+    * Spark context — this is the product mode where
     * [[graft.plans.RewriteMaterializedJoin]] serves every query whose
     * join subtree the staged star subsumes. */
   def ensureDenorm(spark: org.apache.spark.sql.SparkSession, d: String)
       : Seq[graft.plans.MaterializedJoins.Meta] = {
-    Tables.clearRedirects()
+    Tables.clearRedirects(spark)
     val corpus = BenchBig.Rel.map(n => SparkEntry.queries(n)(spark, d))
     val specs = graft.plans.LayoutAdvisor.adviseDenormalized(corpus,
       targetBucketBytes = 64L << 20, minHits = 2)
@@ -228,7 +229,7 @@ object ProbeAdvisorSweep {
       println(s"[advise] denorm ${spec.fact} + ${spec.dims.map(_.table).mkString("+")} " +
         s"bucket=${spec.bucketKey.getOrElse("-")}/${spec.buckets} " +
         s"cols=${spec.columns.size} cents=${spec.centsCols.mkString(",")} hits=${spec.hits}")
-      stageOrAttach(spark, t, graft.plans.MaterializedJoins.all.find(_.catalogTable == t))(
+      stageOrAttach(spark, t, graft.plans.MaterializedJoins.all(spark).find(_.catalogTable == t))(
         graft.plans.MaterializedJoins.attachDenorm(spark, spec, t, _)) {
         val m = graft.plans.MaterializedJoins.stageDenorm(spark, spec, t)
         println(s"[advise] $t lossless=${m.dims.map(dd => s"${dd.table}:${dd.lossless}").mkString(",")}")
@@ -247,7 +248,7 @@ object ProbeAdvisorSweep {
     * single-query key amortizes immediately. */
   def ensureRollups(spark: org.apache.spark.sql.SparkSession, d: String)
       : Seq[graft.plans.MaterializedAggs.Meta] = {
-    Tables.clearRedirects()
+    Tables.clearRedirects(spark)
     val corpus = BenchBig.Rel.map(n => SparkEntry.queries(n)(spark, d))
     val specs = graft.plans.LayoutAdvisor.adviseAggRollups(corpus,
       targetBucketBytes = 64L << 20, minHits = 1)
@@ -256,7 +257,7 @@ object ProbeAdvisorSweep {
       val t = s"adv_rollup_${spec.fact}_${spec.keys.mkString("_")}$tag"
       println(s"[advise] rollup ${spec.fact}.(${spec.keys.mkString(",")}) buckets=${spec.buckets} " +
         s"hits=${spec.hits} measures=${spec.measures.map(_.name).mkString(",")}")
-      stageOrAttach(spark, t, graft.plans.MaterializedAggs.all.find(_.catalogTable == t))(
+      stageOrAttach(spark, t, graft.plans.MaterializedAggs.all(spark).find(_.catalogTable == t))(
         graft.plans.MaterializedAggs.attachRollup(spark, spec, t, _))(
         graft.plans.MaterializedAggs.stageRollup(spark, spec, t))
     }
@@ -270,7 +271,7 @@ object ProbeAdvisorSweep {
     * does not pay for a whole-table rewrite. */
   def ensureAdvised(spark: org.apache.spark.sql.SparkSession, d: String)
       : Seq[(String, String)] = {
-    Tables.clearRedirects()
+    Tables.clearRedirects(spark)
     val corpus = BenchBig.Rel.map(n => SparkEntry.queries(n)(spark, d))
     val specs = graft.plans.LayoutAdvisor.advise(corpus,
       targetBucketBytes = 64L << 20, minHits = 2)
@@ -290,7 +291,7 @@ object ProbeAdvisorSweep {
       val t = s"adv_sweep_${spec.table}$tag"
       val cents = derived.getOrElse(spec.table, Nil).filter(spec.columns.contains)
       ensureBucketed(spark, spec, cents, t)
-      Tables.redirect(d, spec.table, t)
+      Tables.redirect(spark, d, spec.table, t)
       spec.table -> t
     }
   }
@@ -325,7 +326,7 @@ object ProbeAdvisorSweep {
     * routing is per-query by construction. */
   def ensureProjections(spark: org.apache.spark.sql.SparkSession, d: String)
       : Seq[graft.plans.LayoutAdvisor.Projection] = {
-    Tables.clearRedirects()
+    Tables.clearRedirects(spark)
     val corpus = BenchBig.Rel.map(n => SparkEntry.queries(n)(spark, d))
     val specs = graft.plans.LayoutAdvisor.adviseProjections(corpus,
       perTable = 2, targetBucketBytes = 64L << 20, minHits = 2)

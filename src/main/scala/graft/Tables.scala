@@ -14,12 +14,12 @@ object Tables {
     * stand-in for a catalog that resolves logical table names to
     * physical layouts at cluster scale. Empty by default: gates and
     * Verify always read the flat driver data unless a probe/session
-    * explicitly installs redirects. */
-  private val redirects =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-  def redirect(sfDir: String, name: String, table: String): Unit =
-    redirects.put((sfDir, name), table)
-  def clearRedirects(): Unit = redirects.clear()
+    * explicitly installs redirects. Redirects live in `spark`'s
+    * [[graft.plans.LayoutState]]: a session on another Spark context
+    * does not see them. */
+  def redirect(spark: SparkSession, sfDir: String, name: String, table: String): Unit =
+    graft.plans.LayoutState(spark).redirects.put((sfDir, name), table)
+  def clearRedirects(spark: SparkSession): Unit = graft.plans.LayoutState(spark).redirects.clear()
 
   /** Freshness guard on the serving path: a staged layout's record
     * ([[graft.plans.Freshness.RecordFile]]) holds one `base <path>
@@ -40,16 +40,16 @@ object Tables {
   }
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val redirected = redirects.get((sfDir, name))
-    if (redirected != null) verifyRedirect(spark, sfDir, name, redirected)
+    val redirected = Option(graft.plans.LayoutState(spark).redirects.get((sfDir, name)))
+    redirected.foreach(verifyRedirect(spark, sfDir, name, _))
     // redirected layouts get the SAME normalization as the flat path:
     // a layout staged from a raw parquet read (stage/stageSorted read
     // the base files directly) carries the un-normalized schema,
     // and serving it raw would silently hand a query long nanos where
     // the flat path hands TimestampType (both transforms below are
     // no-ops on already-normalized schemas)
-    val raw = if (redirected != null) spark.table(redirected)
-      else graft.sources.FileSchemas.read(spark, Seq(s"$sfDir/$name.parquet"))
+    val raw = redirected.map(spark.table)
+      .getOrElse(graft.sources.FileSchemas.read(spark, Seq(s"$sfDir/$name.parquet")))
     // TIMESTAMP(NANOS) columns arrive as long nanos (nanosAsLong); convert
     // to TimestampType at µs precision — identical to DuckDB's ns→µs
     // truncation, keeping oracle parity. `div` (integer division —

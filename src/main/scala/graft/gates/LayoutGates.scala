@@ -187,7 +187,7 @@ object LayoutGates {
       // mis-joined by the substitution hash-fails. Reference analog:
       // prep_3_merge.py:41-48 (the reference pre-joins at prep time).
       val meta = GateFixtures.denormStar(s, d)
-      graft.plans.MaterializedJoins.withRegistered(Seq(meta)) {
+      graft.plans.MaterializedJoins.withRegistered(s, Seq(meta)) {
         val df = Tables.lineitem(s, d).filter(col("l_returnflag") === "R")
           .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
           .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
@@ -225,7 +225,7 @@ object LayoutGates {
       val meta = GateFixtures.denormStar(s, d)
       require(meta.dims.forall(_.lossless),
         s"layout_denorm_subset: dims must audit lossless: ${meta.dims}")
-      graft.plans.MaterializedJoins.withRegistered(Seq(meta)) {
+      graft.plans.MaterializedJoins.withRegistered(s, Seq(meta)) {
         val df = Tables.lineitem(s, d)
           .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
           .filter(col("l_quantity") > 25)
@@ -258,7 +258,7 @@ object LayoutGates {
       // prep_2_bahavior.py:50-53 (the reference materializes its
       // groupby aggregate at prep time and every stage consumes it).
       val meta = GateFixtures.aggRollup(s, d)
-      graft.plans.MaterializedAggs.withRegistered(Seq(meta)) {
+      graft.plans.MaterializedAggs.withRegistered(s, Seq(meta)) {
         val df = Tables.lineitem(s, d)
           .groupBy(col("l_orderkey").as("ar_orderkey"))
           .agg(sum(cents("l_quantity")).as("ar_qty_cents"),
@@ -288,7 +288,7 @@ object LayoutGates {
       // oracle EXISTS over the raw tables pins exactness (a key
       // wrongly included or excluded from the set hash-fails).
       val meta = GateFixtures.aggRollup(s, d)
-      graft.plans.MaterializedAggs.withRegistered(Seq(meta)) {
+      graft.plans.MaterializedAggs.withRegistered(s, Seq(meta)) {
         val df = Tables.orders(s, d)
           .join(Tables.lineitem(s, d).filter(col("l_returnflag") === "R")
               .select(col("l_orderkey")),
@@ -318,7 +318,7 @@ object LayoutGates {
       // over the RAW table pins exactness (a partial double-counted or
       // a group dropped by the predicate re-application hash-fails).
       val metas = GateFixtures.aggReagg(s, d)
-      graft.plans.MaterializedAggs.withRegistered(metas) {
+      graft.plans.MaterializedAggs.withRegistered(s, metas) {
         val df = Tables.lineitem(s, d)
           .filter(col("l_discount") <= 0.04)
           .groupBy(col("l_returnflag").as("rg_flag"),
@@ -345,7 +345,7 @@ object LayoutGates {
       // advice-time corpus (any key-column predicate re-applies, seen
       // or not). Oracle over the raw table pins exactness.
       val metas = GateFixtures.aggReagg(s, d)
-      graft.plans.MaterializedAggs.withRegistered(metas) {
+      graft.plans.MaterializedAggs.withRegistered(s, metas) {
         val df = Tables.lineitem(s, d)
           .filter(col("l_discount").between(0.02, 0.04) && col("l_quantity") < 20)
           .agg((sum(cents("l_extendedprice") * cents("l_discount"))

@@ -45,7 +45,6 @@ import Shared._
 object RelationalGates {
 
   private val D12 = DecimalType(12, 2)
-  private def dec(c: String): Column = col(c).cast(D12)
   /** Σ extendedprice·(1−discount) in 1e-4 dollar units. */
   private def revCentsE4: Column =
     sum(cents("l_extendedprice") * (lit(100L) - cents("l_discount")))

@@ -19,6 +19,20 @@ object StreamGates {
   private def drain(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
     try q.processAllAvailable() finally q.stop()
 
+  /** Write `part` as the one file `<target>/<name>.parquet`, modified
+    * `age` ms ago: FileStreamSource schedules files by modification
+    * time, so staggered ages fix the order the micro-batches see. */
+  private def stageAged(part: DataFrame, target: String, name: String, age: Long): Unit = {
+    val tmp = target + "_" + name
+    part.coalesce(1).write.mode("overwrite").parquet(tmp)
+    val src = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
+    val dst = new java.io.File(target, name + ".parquet")
+    dst.getParentFile.mkdirs()
+    java.nio.file.Files.move(src.toPath, dst.toPath)
+    dst.setLastModified(System.currentTimeMillis() - age)
+    GateFixtures.deleteRecursively(new java.io.File(tmp).toPath)
+  }
+
   /** Per-user 30-min-gap session bounds (gap-inclusive: a new session
     * starts at diff > 1800 s) — the batch, sorted-kernel and streaming
     * session gates all answer it. */
@@ -109,21 +123,9 @@ object StreamGates {
       // files -> 2 micro-batches (bucket state must carry across).
       val dir = GateFixtures.dir("stream_lsh", d) { target =>
         val docs = Tables.documents(s, d).select("doc_id", "text")
-        def stage(part: DataFrame, name: String, age: Long): Unit = {
-          val tmp = target + "_" + name
-          part.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val src = new java.io.File(tmp).listFiles()
-            .find(_.getName.endsWith(".parquet")).get
-          val dst = new java.io.File(target, name + ".parquet")
-          dst.getParentFile.mkdirs()
-          java.nio.file.Files.move(src.toPath, dst.toPath)
-          // arrival order must equal doc_id order: FileStreamSource
-          // schedules by modification time, so age the first half more
-          dst.setLastModified(System.currentTimeMillis() - age)
-          GateFixtures.deleteRecursively(new java.io.File(tmp).toPath)
-        }
-        stage(docs.where(col("doc_id") < 250), "b0", 120000L)
-        stage(docs.where(col("doc_id") >= 250), "b1", 60000L)
+        // arrival order must equal doc_id order: age the first half more
+        stageAged(docs.where(col("doc_id") < 250), target, "b0", 120000L)
+        stageAged(docs.where(col("doc_id") >= 250), target, "b1", 60000L)
       }
       val schema = FileSchemas.read(s, Seq(dir)).schema
       val name = "gate_lsh_dedup_" + math.abs(dir.hashCode)
@@ -180,19 +182,8 @@ object StreamGates {
       val dir = GateFixtures.dir("stream_ups", d) { target =>
         val e = Tables.events(s, d).select(col("event_id"), col("user_id"), col("value"))
         val mid = e.agg(max(col("event_id"))).head.getLong(0) / 2
-        def stage(part: DataFrame, name: String, age: Long): Unit = {
-          val tmp = target + "_" + name
-          part.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val src = new java.io.File(tmp).listFiles()
-            .find(_.getName.endsWith(".parquet")).get
-          val dst = new java.io.File(target, name + ".parquet")
-          dst.getParentFile.mkdirs()
-          java.nio.file.Files.move(src.toPath, dst.toPath)
-          dst.setLastModified(System.currentTimeMillis() - age)
-          GateFixtures.deleteRecursively(new java.io.File(tmp).toPath)
-        }
-        stage(e.filter(col("event_id") <= mid), "b0", 120000L)
-        stage(e.filter(col("event_id") > mid), "b1", 60000L)
+        stageAged(e.filter(col("event_id") <= mid), target, "b0", 120000L)
+        stageAged(e.filter(col("event_id") > mid), target, "b1", 60000L)
       }
       val schema = FileSchemas.read(s, Seq(dir)).schema
       val snap = java.nio.file.Files.createTempDirectory("graft_snap").toString

@@ -84,7 +84,7 @@ object BloomReduce {
     // a 30M-row scan. Still fires on flat facts with no rollup.
     val rollupServed = Aggregates.leafColumnsOf(fact, Seq(factKey)).exists {
       case (graft.plans.FileLeaf(_, _, path), leafName) =>
-        graft.plans.MaterializedAggs.all.exists(m =>
+        graft.plans.MaterializedAggs.all(fact.sparkSession).exists(m =>
           m.factPath == path && m.keys == Seq(leafName))
       case _ => false
     }

@@ -79,7 +79,8 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, NumericTyp
   * SURVEY §2.5); expressed Spark-first the same bytes-on-the-wire
   * argument becomes a logical-plan rewrite.
   */
-object EagerAggregation extends Rule[LogicalPlan] with PredicateHelper {
+case class EagerAggregation(spark: org.apache.spark.sql.SparkSession) extends Rule[LogicalPlan]
+    with PredicateHelper {
 
   private val FLAG = "spark.graft.eagerAggregation.enabled"
   private val UNIQUE = "spark.graft.eagerAggregation.uniqueKeys"
@@ -124,7 +125,7 @@ object EagerAggregation extends Rule[LogicalPlan] with PredicateHelper {
         val keyNames = keys.map(_.name).toSet
         val file = FileLeaf.unapply(lr)
         val identities = lr.catalogTable.map(_.identifier.table).toSeq ++ file.map(_._3)
-        val wh = conf.getConfString("spark.sql.warehouse.dir", "")
+        val wh = TableStats.warehouseOf(spark)
         // freshness (round-12): a measurement recorded over DIFFERENT
         // base files than the live leaf is ignored — the grown table's
         // uniqueness may have flipped either way; fall back to the

@@ -193,17 +193,15 @@ object Freshness {
     m
   }
 
-  private val warned = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** True iff the live `idx` matches `expected`; on the first mismatch
-    * per `tag` prints one warning naming the recovery (re-stage). An
-    * empty `expected` means "unrecorded" (hand-built test metas) and
-    * passes — the stagers always record. */
-  def check(tag: String, expected: String, idx: FileIndex): Boolean = {
+    * per `tag` in `spark`'s [[LayoutState]] prints one warning naming
+    * the recovery (re-stage). An empty `expected` means "unrecorded"
+    * (hand-built test metas) and passes — the stagers always record. */
+  def check(spark: SparkSession, tag: String, expected: String, idx: FileIndex): Boolean = {
     if (expected.isEmpty) return true
     val live = ofIndex(idx)
     val ok = live == expected
-    if (!ok && warned.add(tag)) System.err.println(
+    if (!ok && LayoutState(spark).warned.add(tag)) System.err.println(
       s"[freshness] $tag: base data drifted since staging " +
         s"(staged=$expected live=$live) — declining; re-stage to recover")
     ok

@@ -278,7 +278,7 @@ object LayoutAdvisor {
     * self-joins take the first occurrence (the signal feeds a
     * stage/don't-stage threshold, not an exact cost model). */
   private def reachFraction(n: LogicalPlan, leafPath: String,
-      ndvOf: String => Option[Long] = _ => None): Option[Double] = n match {
+      ndvOf: String => Option[Long]): Option[Double] = n match {
     case FileLeaf(_, _, path) if path == leafPath => Some(1.0)
     case f: Filter => reachFraction(f.child, leafPath, ndvOf)
       .map(_ * selectivity(f.condition, ndvOf))
@@ -1169,7 +1169,7 @@ object LayoutAdvisor {
             }
           }
         }
-        case j @ Join(_, right, org.apache.spark.sql.catalyst.plans.LeftSemi |
+        case Join(_, right, org.apache.spark.sql.catalyst.plans.LeftSemi |
             org.apache.spark.sql.catalyst.plans.LeftAnti, Some(cond), _)
             if cond.deterministic =>
           siteOf(right).foreach { case (peeled, path) =>

@@ -98,7 +98,7 @@ import org.apache.spark.sql.types.LongType
   * like every staged layout: base fingerprints at stage time, verified
   * at attach and at every rewrite, loud decline on drift.
   */
-object MaterializedAggs extends LayoutRegistry {
+object MaterializedAggs extends LayoutRegistry with PredicateHelper {
 
   /** One staged measure: column `name` of the rollup holds `agg`
     * (aggregate-function SQL over the fact schema) evaluated per key.
@@ -117,10 +117,24 @@ object MaterializedAggs extends LayoutRegistry {
   protected def tableOf(meta: Meta): String = meta.catalogTable
   protected val flag = "spark.graft.materializedAgg.enabled"
 
-  /** Deregistering also drops the rewrite's parsed-measure cache. */
-  override def deregister(catalogTable: String): Unit = {
-    super.deregister(catalogTable)
-    RewriteMaterializedAgg.invalidate(catalogTable)
+  /** A rollup's measures as [[RewriteMaterializedAgg]] matches them,
+    * parsed once per registration ([[Registered]]): `plain` maps a
+    * canonical aggregate expression to its measure column; `conds` pairs
+    * normalized conjunct SETS with their conditional-count column. */
+  private[plans] final case class Parsed(plain: Map[Expression, String],
+      conds: Seq[(Set[Expression], String)])
+
+  /** True while a measure parse is in flight on this thread. The parse
+    * itself runs optimizer passes (a GLOBAL aggregate per measure, a
+    * filter per condition) and the coarser-grain serve (shape 1b)
+    * matches global aggregates — without this guard the rule would
+    * re-enter its own parse (stack overflow), and WORSE, a sibling
+    * registered rollup could SERVE the parse's aggregate, leaving the
+    * measure normalized over rollup column names that can never match
+    * a query. The whole rule no-ops during a parse. JVM-wide by nature:
+    * it marks a thread, whichever session or context runs on it. */
+  private[plans] val inParse = new ThreadLocal[java.lang.Boolean] {
+    override def initialValue(): java.lang.Boolean = java.lang.Boolean.FALSE
   }
 
   /** The identity lines of a rollup's record: fact, keys (lowercase)
@@ -131,7 +145,7 @@ object MaterializedAggs extends LayoutRegistry {
       measures.sortBy(_.name).map(m => Seq("measure", m.name, m.agg, m.cond.getOrElse("")))
 
   /** The [[Meta]] a rollup's record describes. */
-  private def metaOf(catalogTable: String, rec: Freshness.Record): Meta = {
+  protected def metaOf(catalogTable: String, rec: Freshness.Record): Meta = {
     val fact = rec.one("fact", 2)
     Meta(catalogTable, fact(0), fact(1), rec.list("keys"),
       rec.all("measure", 3).map(f => Measure(f(0), f(1), Some(f(2)).filter(_.nonEmpty))),
@@ -147,13 +161,6 @@ object MaterializedAggs extends LayoutRegistry {
     metaOf(name, Freshness.write(spark, name, identity(fact, factPath, keys, measures),
       Freshness.finite(Nil) +: files.map(_.line).sorted.map(l => Seq("file", l)),
       Seq(factPath -> FileSchemas.fingerprint(files))))
-
-  /** The [[Meta]] recorded beside the staged rollup at `path` (no
-    * registration, no validation — the durable Meta form for same-JVM
-    * memoized fixtures; [[attachRollup]] adds the drift and freshness
-    * guards). */
-  def recorded(catalogTable: String, path: String): Meta =
-    metaOf(catalogTable, Freshness.recordAt(path))
 
   /** Stage `spec` as bucketed catalog table `name`: ONE aggregate over
     * the fact (`GROUP BY key` with every advised measure), written
@@ -183,7 +190,7 @@ object MaterializedAggs extends LayoutRegistry {
         sorted = true))
     val meta = record(spark, name, spec.fact, spec.factPath,
       spec.keys.map(_.toLowerCase), spec.measures, inventory)
-    register(meta)
+    register(spark, meta)
     meta
   }
 
@@ -200,7 +207,7 @@ object MaterializedAggs extends LayoutRegistry {
       Some(spec.keys.head -> spec.buckets))(metaOf(name, _))
     if (TableStats.lookup(TableStats.warehouseOf(spark), name).isEmpty)
       TableStats.analyze(spark, spark.table(name), name, spec.keys)
-    register(meta)
+    register(spark, meta)
     meta
   }
 
@@ -302,8 +309,7 @@ object MaterializedAggs extends LayoutRegistry {
       }
       val fresh = record(spark, meta.catalogTable, meta.fact, meta.factPath,
         meta.keys, meta.measures, live)
-      RewriteMaterializedAgg.invalidate(meta.catalogTable)
-      register(fresh)
+      register(spark, fresh)
       fresh
     }
   }
@@ -366,6 +372,11 @@ object MaterializedAggs extends LayoutRegistry {
       filters: Seq[Expression], subst: Map[Long, Expression]) {
     lazy val nameOf: Map[Long, String] =
       leaf.output.map(a => a.exprId.id -> a.name.toLowerCase).toMap
+    /** The column of `keys` that `e` reads as a bare leaf attribute. */
+    def keyOf(e: Expression, keys: Set[String]): Option[String] = e match {
+      case a: AttributeReference => nameOf.get(a.exprId.id).filter(keys.contains)
+      case _ => None
+    }
     def index: org.apache.spark.sql.execution.datasources.FileIndex =
       leaf.relation.asInstanceOf[HadoopFsRelation].location
   }
@@ -382,7 +393,7 @@ object MaterializedAggs extends LayoutRegistry {
         }
         walk(prj.child)
       case f: Filter if f.condition.deterministic =>
-        filters ++= PredicateHelperShim.split(f.condition)
+        filters ++= splitConjunctivePredicates(f.condition)
         walk(f.child)
       case r: RepartitionOperation => walk(r.child)
       case s: Sort => walk(s.child)
@@ -420,125 +431,87 @@ object MaterializedAggs extends LayoutRegistry {
     }.sql
 }
 
-/** PredicateHelper's splitConjunctivePredicates as a static shim (the
-  * trait method is protected; both MaterializedAggs and the advisor
-  * need it outside a Rule). */
-private[plans] object PredicateHelperShim
-    extends org.apache.spark.sql.catalyst.expressions.PredicateHelper {
-  def split(e: Expression): Seq[Expression] = splitConjunctivePredicates(e)
-}
-
 /** The optimizer rule serving [[MaterializedAggs]] registrations. See
   * the companion's scaladoc for the exactness contract. Injected after
   * [[RewriteMaterializedJoin]] and before [[EagerAggregation]]: the
   * aggregate shapes are matched as authored, and the key-set form also
   * matches the DISTINCT pre-aggregate EagerAggregation inserts below
   * semi/anti joins (so the two rules compose in either firing order). */
-object RewriteMaterializedAgg extends Rule[LogicalPlan] with PredicateHelper {
+case class RewriteMaterializedAgg(spark: SparkSession) extends Rule[LogicalPlan] with PredicateHelper {
 
   import MaterializedAggs._
 
-  /** Parsed + optimized + normalized staged measures, cached per
-    * catalog table (parsing costs an analyzer run; the registry is
-    * stable between stagings). `plain` maps canonical aggregate
-    * expression → measure column; `conds` pairs normalized conjunct
-    * SETS with their conditional-count column. */
-  private case class Parsed(plain: Map[Expression, String],
-      conds: Seq[(Set[Expression], String)])
-
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, Parsed]()
-
-  private[plans] def invalidate(catalogTable: String): Unit =
-    cache.remove(catalogTable)
-
-  /** True while a measure parse is in flight on this thread. The parse
-    * itself runs optimizer passes (a GLOBAL aggregate per measure, a
-    * filter per condition) and the coarser-grain serve (shape 1b)
-    * matches global aggregates — without this guard the rule would
-    * re-enter its own parse (stack overflow), and WORSE, a sibling
-    * registered rollup could SERVE the parse's aggregate, leaving the
-    * measure normalized over rollup column names that can never match
-    * a query. The whole rule no-ops during a parse. */
-  private val inParse = new ThreadLocal[java.lang.Boolean] {
-    override def initialValue(): java.lang.Boolean = java.lang.Boolean.FALSE
-  }
-
-  private def parsed(spark: SparkSession, m: Meta): Option[Parsed] = {
-    Option(cache.get(m.catalogTable)).orElse {
-      if (inParse.get()) return None
-      inParse.set(java.lang.Boolean.TRUE)
-      try {
-        val df = FileSchemas.read(spark, m.factPath.split(',').toIndexedSeq)
-        val leafName: Map[Long, String] = df.queryExecution.analyzed.collect {
+  /** `r`'s measures, parsed + optimized + normalized on first use and
+    * kept with the registration (parsing costs an analyzer run). */
+  private def parsed(r: Registered[Meta]): Parsed = r.parsed.getOrElse {
+    val m = r.meta
+    inParse.set(java.lang.Boolean.TRUE)
+    val p = try {
+      val df = FileSchemas.read(spark, m.factPath.split(',').toIndexedSeq)
+      val leafName: Map[Long, String] = df.queryExecution.analyzed.collect {
+        case lr: LogicalRelation => lr.output
+      }.flatten.map(a => a.exprId.id -> a.name.toLowerCase).toMap
+      // measures parse through the OPTIMIZED plan so constant folding
+      // and cast simplification shape them exactly like the query
+      // side's optimized expressions they must equal
+      val plain = m.measures.filter(_.cond.isEmpty).flatMap { ms =>
+        val qe = df.groupBy().agg(
+          org.apache.spark.sql.functions.expr(ms.agg).as("__m"))
+          .queryExecution
+        val nameAt: Map[Long, String] = qe.optimizedPlan.collect {
           case lr: LogicalRelation => lr.output
         }.flatten.map(a => a.exprId.id -> a.name.toLowerCase).toMap
-        // measures parse through the OPTIMIZED plan so constant folding
-        // and cast simplification shape them exactly like the query
-        // side's optimized expressions they must equal
-        val plain = m.measures.filter(_.cond.isEmpty).flatMap { ms =>
-          val qe = df.groupBy().agg(
-            org.apache.spark.sql.functions.expr(ms.agg).as("__m"))
-            .queryExecution
-          val nameAt: Map[Long, String] = qe.optimizedPlan.collect {
-            case lr: LogicalRelation => lr.output
-          }.flatten.map(a => a.exprId.id -> a.name.toLowerCase).toMap
-          qe.optimizedPlan.collectFirst { case ag: Aggregate => ag } match {
-            case Some(ag) =>
-              val aes = ag.aggregateExpressions.flatMap(_.collect {
-                case ae: AggregateExpression => ae
-              })
-              if (aes.size != 1) None
-              else normalize(aes.head, nameAt.get).map(_ -> ms.name)
-            case None => None
-          }
-        }.toMap
-        val conds = m.measures.flatMap { ms =>
-          ms.cond.flatMap { c =>
-            val cond = df.filter(org.apache.spark.sql.functions.expr(c))
-              .queryExecution.optimizedPlan.collectFirst {
-                case f: Filter => f.condition
-              }
-            cond.flatMap { e =>
-              val nameAt = leafName // filter keeps the same read's attrs? re-resolve:
-              val norm = PredicateHelperShim.split(e)
-                .map(cj => normalize(cj, id => nameAt.get(id)))
-              if (norm.forall(_.isDefined)) Some(norm.flatten.toSet -> ms.name)
-              else None
+        qe.optimizedPlan.collectFirst { case ag: Aggregate => ag } match {
+          case Some(ag) =>
+            val aes = ag.aggregateExpressions.flatMap(_.collect {
+              case ae: AggregateExpression => ae
+            })
+            if (aes.size != 1) None
+            else normalize(aes.head, nameAt.get).map(_ -> ms.name)
+          case None => None
+        }
+      }.toMap
+      val conds = m.measures.flatMap { ms =>
+        ms.cond.flatMap { c =>
+          val cond = df.filter(org.apache.spark.sql.functions.expr(c))
+            .queryExecution.optimizedPlan.collectFirst {
+              case f: Filter => f.condition
             }
+          cond.flatMap { e =>
+            val norm = splitConjunctivePredicates(e)
+              .map(cj => normalize(cj, id => leafName.get(id)))
+            if (norm.forall(_.isDefined)) Some(norm.flatten.toSet -> ms.name)
+            else None
           }
         }
-        val p = Parsed(plain, conds)
-        cache.put(m.catalogTable, p)
-        Some(p)
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[rollup] ${m.catalogTable}: measure parse failed " +
-            s"(${e.getMessage.take(120)}) — rollup unusable this session")
-          cache.put(m.catalogTable, Parsed(Map.empty, Nil))
-          Some(Parsed(Map.empty, Nil))
-      } finally inParse.set(java.lang.Boolean.FALSE)
-    }
+      }
+      Parsed(plain, conds)
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[rollup] ${m.catalogTable}: measure parse failed " +
+          s"(${e.getMessage.take(120)}) — rollup unusable until registered again")
+        Parsed(Map.empty, Nil)
+    } finally inParse.set(java.lang.Boolean.FALSE)
+    r.parsed = Some(p)
+    p
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    val metas = MaterializedAggs.all
-    if (metas.isEmpty || !MaterializedAggs.enabled(conf) || inParse.get())
+    val registered = MaterializedAggs.registered(spark)
+    if (registered.isEmpty || !MaterializedAggs.enabled(conf) || inParse.get())
       return plan
-    val spark = SparkSession.getActiveSession.getOrElse(return plan)
     plan.transformDown {
       case agg: Aggregate =>
-        metas.view.flatMap(m => tryServe(spark, agg, m)).headOption.getOrElse(agg)
+        registered.view.flatMap(tryServe(agg, _)).headOption.getOrElse(agg)
       case j @ Join(_, _, org.apache.spark.sql.catalyst.plans.LeftSemi |
           org.apache.spark.sql.catalyst.plans.LeftAnti, Some(_), _) =>
-        metas.view.flatMap(m => trySemiServe(spark, j, m)).headOption.getOrElse(j)
+        registered.view.flatMap(trySemiServe(j, _)).headOption.getOrElse(j)
     }
   }
 
   /** The rollup's scan + lowercase-name attribute map, or None when the
     * catalog no longer has the table. */
-  private def scanOf(spark: SparkSession, m: Meta)
-      : Option[(LogicalPlan, Map[String, Attribute])] = {
+  private def scanOf(m: Meta): Option[(LogicalPlan, Map[String, Attribute])] = {
     if (!spark.catalog.tableExists(m.catalogTable)) return None
     val scan = EliminateSubqueryAliases(
       spark.table(m.catalogTable).queryExecution.analyzed)
@@ -589,19 +562,12 @@ object RewriteMaterializedAgg extends Rule[LogicalPlan] with PredicateHelper {
 
   /** Serve `agg` from rollup `m` (shapes 1/1b of the contract, plus
     * the DISTINCT-over-filtered-fact variant of shape 2). */
-  private def tryServe(spark: SparkSession, agg: Aggregate, m: Meta)
-      : Option[LogicalPlan] = {
-    val peeled = peelFact(agg.child).getOrElse(return None)
-    if (peeled.path != m.factPath) return None
-    if (!Freshness.check(s"${m.catalogTable}:${m.factPath}", m.fingerprint,
-      peeled.index)) return None
+  private def tryServe(agg: Aggregate, r: Registered[Meta]): Option[LogicalPlan] = {
+    val m = r.meta
+    val peeled = servedFact(agg.child, m).getOrElse(return None)
     val nameOf = peeled.nameOf
     val keySet = m.keys.toSet
-    def keyNameOf(e: Expression): Option[String] = e match {
-      case a: AttributeReference =>
-        nameOf.get(a.exprId.id).filter(keySet.contains)
-      case _ => None
-    }
+    def keyNameOf(e: Expression): Option[String] = peeled.keyOf(e, keySet)
     def isKeyAttr(e: Expression): Boolean = keyNameOf(e).isDefined
     // grouping ALIASES (groupBy(col("k").as("x"))) bind new exprIds the
     // output references — they join the substitution map like Project
@@ -615,25 +581,18 @@ object RewriteMaterializedAgg extends Rule[LogicalPlan] with PredicateHelper {
     if (!groupings.forall(isKeyAttr)) return None
     val groupNames = groupings.flatMap(keyNameOf)
 
-    val p = parsed(spark, m).getOrElse(return None)
+    val p = parsed(r)
     val (keyOnly, rest) = splitKeyFilters(peeledG, keySet)
 
-    def mapKeyAttrs(e: Expression, byName: Map[String, Attribute]): Expression =
-      e.transform {
-        case a: AttributeReference if isKeyAttr(a) =>
-          byName(nameOf(a.exprId.id))
-      }
-    def applyKeyFilters(scan: LogicalPlan,
-        byName: Map[String, Attribute]): LogicalPlan =
-      if (keyOnly.isEmpty) scan
-      else Filter(keyOnly.map(mapKeyAttrs(_, byName)).reduce(And), scan)
+    def applyKeyFilters(scan: LogicalPlan, byName: Map[String, Attribute]) =
+      keyFiltered(scan, byName, keyOnly, peeled, keySet)
 
     if (rest.isEmpty) {
       // shapes 1/1b: match every AggregateExpression against a staged
       // measure. Key-only filters drop whole GROUPS (key columns are
       // constant per group), so re-applying them on the rollup's key
       // columns is exact.
-      val (scan, byName) = scanOf(spark, m).getOrElse(return None)
+      val (scan, byName) = scanOf(m).getOrElse(return None)
       if (!m.keys.forall(byName.contains)) return None
       val inlinedOut = agg.aggregateExpressions.map(ne => ne -> inline(ne, subst))
       val aes = inlinedOut.flatMap(_._2.collect { case ae: AggregateExpression => ae })
@@ -705,7 +664,7 @@ object RewriteMaterializedAgg extends Rule[LogicalPlan] with PredicateHelper {
       val outs = agg.aggregateExpressions.map(ne => inline(stripAlias(ne), subst))
       if (!outs.forall(isKeyAttr)) return None
       if (outs.flatMap(keyNameOf).toSet != keySet) return None
-      keySetScan(spark, m, p, peeledG, rest).map { case (scan, byName) =>
+      keySetScan(m, p, peeledG, rest).map { case (scan, byName) =>
         Project(agg.aggregateExpressions.map { ne =>
           val n = keyNameOf(inline(stripAlias(ne), subst)).get
           Alias(byName(n), ne.name)(exprId = ne.exprId)
@@ -713,6 +672,22 @@ object RewriteMaterializedAgg extends Rule[LogicalPlan] with PredicateHelper {
       }
     }
   }
+
+  /** The fact leaf under `p` when it is `m`'s fact, read from the files
+    * `m` was staged from (a drifted base declines with one warning). */
+  private def servedFact(p: LogicalPlan, m: Meta): Option[PeeledFact] =
+    peelFact(p).filter(pf => pf.path == m.factPath && Freshness.check(spark,
+      s"${m.catalogTable}:${m.factPath}", m.fingerprint, pf.index))
+
+  /** `scan` under the key-only conjuncts `keyOnly`, their key attributes
+    * mapped onto the rollup's columns `byName`. */
+  private def keyFiltered(scan: LogicalPlan, byName: Map[String, Attribute],
+      keyOnly: Seq[Expression], peeled: PeeledFact, keys: Set[String]): LogicalPlan =
+    if (keyOnly.isEmpty) scan
+    else Filter(keyOnly.map(_.transform {
+      case a: AttributeReference if peeled.keyOf(a, keys).isDefined =>
+        byName(peeled.nameOf(a.exprId.id))
+    }).reduce(And), scan)
 
   private def stripAlias(e: Expression): Expression = e match {
     case al: Alias => al.child
@@ -722,8 +697,7 @@ object RewriteMaterializedAgg extends Rule[LogicalPlan] with PredicateHelper {
   /** `Filter(count_if(f) > 0, rollup)` when the (inlined, key-only-
     * stripped) conjunct set `rest` matches a staged condition — the
     * qualifying KEY SET. */
-  private def keySetScan(spark: SparkSession, m: Meta, p: Parsed,
-      peeled: PeeledFact, rest: Seq[Expression])
+  private def keySetScan(m: Meta, p: Parsed, peeled: PeeledFact, rest: Seq[Expression])
       : Option[(LogicalPlan, Map[String, Attribute])] = {
     if (rest.isEmpty) return None
     val norm = rest.map(cj => normalize(cj, peeled.nameOf.get))
@@ -732,7 +706,7 @@ object RewriteMaterializedAgg extends Rule[LogicalPlan] with PredicateHelper {
     val condCol = p.conds.collectFirst {
       case (set, name) if set == normSet => name
     }.getOrElse(return None)
-    val (scan, byName) = scanOf(spark, m).getOrElse(return None)
+    val (scan, byName) = scanOf(m).getOrElse(return None)
     if (!m.keys.forall(byName.contains)) return None
     byName.get(condCol.toLowerCase).map(cnt =>
       (Filter(GreaterThan(cnt, Literal(0L, LongType)), scan), byName))
@@ -742,39 +716,25 @@ object RewriteMaterializedAgg extends Rule[LogicalPlan] with PredicateHelper {
     * qualifying key set. Probe columns may be any SUBSET of a composite
     * key: the projected key set then carries duplicates, which
     * semi/anti join semantics tolerate (they only test existence). */
-  private def trySemiServe(spark: SparkSession, j: Join, m: Meta)
-      : Option[LogicalPlan] = {
+  private def trySemiServe(j: Join, r: Registered[Meta]): Option[LogicalPlan] = {
+    val m = r.meta
     val cond = j.condition.getOrElse(return None)
     if (!cond.deterministic) return None
-    val peeled = peelFact(j.right).getOrElse(return None)
-    if (peeled.path != m.factPath) return None
-    if (!Freshness.check(s"${m.catalogTable}:${m.factPath}", m.fingerprint,
-      peeled.index)) return None
+    val peeled = servedFact(j.right, m).getOrElse(return None)
     // every probe-side attribute the condition reads must be A key
     // column (at probe grain the key set is all the join consumes)
     val rightRefs = cond.references.toSeq.filter(j.right.outputSet.contains)
     if (rightRefs.isEmpty) return None
-    val nameOf = peeled.nameOf
     val keySet = m.keys.toSet
-    def keyNameOf(e: Expression): Option[String] = e match {
-      case a: AttributeReference =>
-        nameOf.get(a.exprId.id).filter(keySet.contains)
-      case _ => None
-    }
-    def isKeyAttr(e: Expression): Boolean = keyNameOf(e).isDefined
     val refKey: Map[Attribute, String] = rightRefs.map(a =>
-      a -> keyNameOf(inline(a, peeled.subst)).getOrElse(return None)).toMap
-    val p = parsed(spark, m).getOrElse(return None)
+      a -> peeled.keyOf(inline(a, peeled.subst), keySet).getOrElse(return None)).toMap
+    val p = parsed(r)
     val (keyOnly, rest) = splitKeyFilters(peeled, keySet)
-    keySetScan(spark, m, p, peeled, rest).map { case (scan, byName) =>
+    keySetScan(m, p, peeled, rest).map { case (scan, byName) =>
       // key-only probe filters (inferred isnotnull(key), user key
       // bounds) re-apply on the rollup keys — exact, keys survive
       // grouping verbatim
-      val filtered = if (keyOnly.isEmpty) scan
-      else Filter(keyOnly.map(_.transform {
-        case a: AttributeReference if isKeyAttr(a) =>
-          byName(nameOf(a.exprId.id))
-      }).reduce(And), scan)
+      val filtered = keyFiltered(scan, byName, keyOnly, peeled, keySet)
       // expose the original right-side exprIds the condition references;
       // the probe-side hint described the FLAT fact read and is dropped
       // (the rollup probes at key grain — let the planner pick the
@@ -786,3 +746,4 @@ object RewriteMaterializedAgg extends Rule[LogicalPlan] with PredicateHelper {
     }
   }
 }
+

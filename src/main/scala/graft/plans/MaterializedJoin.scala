@@ -83,14 +83,14 @@ object MaterializedJoins extends LayoutRegistry {
     * lowercase base columns carried; `cents` = lowercase source columns
     * with a stored `<col>_cents` sibling; `finite` = the subset of
     * `cents` whose stage-time finiteness audit passed (the DECIMAL
-    * idiom's precondition — [[RewriteStoredCents.FiniteProperty]]). */
-  /** `fingerprints` = member path → [[Freshness]] fingerprint of that
+    * idiom's precondition — [[RewriteStoredCents.FiniteProperty]]).
+    * `fingerprints` = member path → [[Freshness]] fingerprint of that
     * base table AT STAGE TIME (the record's base lines). The rewrite
     * re-checks the members present in each query against the live
     * FileIndex and declines on drift; [[attachDenorm]] checks ALL
     * members (including dims the queries omit — their lossless audits
-    * rot with the data). Empty map =
-    * unrecorded (hand-built test metas) — unchecked by contract. */
+    * rot with the data). Empty map = unrecorded (hand-built test
+    * metas) — unchecked by contract. */
   case class Meta(catalogTable: String, fact: String, factPath: String,
       dims: Seq[DimMeta], columns: Set[String], cents: Set[String],
       finite: Set[String], fingerprints: Map[String, String] = Map.empty)
@@ -118,7 +118,7 @@ object MaterializedJoins extends LayoutRegistry {
 
   /** The [[Meta]] a denorm's record describes: the identity lines, the
     * `finite` and `lossless` audits and one fingerprint per member. */
-  private def metaOf(catalogTable: String, rec: Freshness.Record): Meta = {
+  protected def metaOf(catalogTable: String, rec: Freshness.Record): Meta = {
     val fact = rec.one("fact", 2)
     val lossless = rec.list("lossless").toSet
     val finite = rec.list("finite").toSet
@@ -126,12 +126,6 @@ object MaterializedJoins extends LayoutRegistry {
       rec.all("dim", 5).map(f => DimMeta(f(0), f(1), f(2), f(3), f(4), lossless(f(0)))),
       rec.list("columns").toSet, finite, finite, rec.bases.toMap)
   }
-
-  /** The [[Meta]] recorded beside the staged denorm at `path` (no
-    * registration, no validation — [[attachDenorm]] adds the
-    * advice-drift and freshness guards). */
-  def recorded(catalogTable: String, path: String): Meta =
-    metaOf(catalogTable, Freshness.recordAt(path))
 
   /** Stage `spec` as bucketed catalog table `name`: run the inner
     * equi-join chain over the base paths, carry exactly the advised
@@ -204,7 +198,7 @@ object MaterializedJoins extends LayoutRegistry {
         Seq("lossless", audited.filter(_.lossless).map(_.table).mkString(","))),
       (Seq(spec.fact -> spec.factPath) ++ spec.dims.map(d => d.table -> d.path))
         .map { case (t, p) => Freshness.base(p, tables(t)) }.distinct))
-    register(meta)
+    register(spark, meta)
     meta
   }
 
@@ -220,68 +214,8 @@ object MaterializedJoins extends LayoutRegistry {
       name: String, path: String): Meta = {
     val meta = Freshness.attach(spark, name, path, identity(spec),
       spec.bucketKey.map(_ -> spec.buckets))(metaOf(name, _))
-    register(meta)
+    register(spark, meta)
     meta
-  }
-}
-
-/** What every staged-layout kind ([[MaterializedJoins]],
-  * [[MaterializedAggs]]) shares: the process-wide registry of the
-  * tables its rewrite may serve, keyed by catalog table, and the
-  * session flag that switches that rewrite off. */
-private[plans] trait LayoutRegistry {
-  type Meta
-  protected def tableOf(meta: Meta): String
-  protected def flag: String
-
-  private val registry =
-    new java.util.concurrent.ConcurrentHashMap[String, Meta]()
-
-  def register(meta: Meta): Unit = registry.put(tableOf(meta), meta)
-  def deregister(catalogTable: String): Unit = registry.remove(catalogTable)
-  def all: Seq[Meta] = {
-    import scala.jdk.CollectionConverters._
-    registry.values.asScala.toSeq.sortBy(tableOf)
-  }
-
-  private[plans] def enabled(conf: org.apache.spark.sql.internal.SQLConf): Boolean =
-    conf.getConfString(flag, "true") == "true"
-
-  /** Scoped registration for gate closures: register, build (and
-    * FORCE-OPTIMIZE — the plan must be rewritten while the metas are
-    * live; QueryExecution caches the optimized plan, so later execution
-    * keeps the rewrite), deregister. Gates run inside multi-query mains
-    * (Verify, Bench) where a process-wide registration would silently
-    * rewrite every OTHER query over the same base paths. */
-  def withRegistered(metas: Seq[Meta])(
-      build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    metas.foreach(register)
-    try {
-      val df = build
-      df.queryExecution.optimizedPlan // force while registered
-      df
-    } finally metas.foreach(m => deregister(tableOf(m)))
-  }
-
-  /** True iff `df`'s optimized plan reads catalog table `catalogTable`
-    * — the "did the rewrite fire" probe gates and specs pin on. */
-  def fired(df: org.apache.spark.sql.DataFrame, catalogTable: String): Boolean =
-    df.queryExecution.optimizedPlan.collectFirst {
-      case lr: LogicalRelation
-          if lr.catalogTable.exists(_.identifier.table == catalogTable) => lr
-    }.nonEmpty
-
-  /** Run a staging write with this kind's rewrite switched off: the
-    * staging query is itself a shape the rewrite serves, and a
-    * previously registered overlapping layout must not serve it. */
-  protected def withRuleOff[T](spark: SparkSession)(body: => T): T = {
-    val saved = spark.conf.getOption(flag)
-    spark.conf.set(flag, "false")
-    try body
-    finally saved match {
-      case Some(v) => spark.conf.set(flag, v)
-      case None => spark.conf.unset(flag)
-    }
   }
 }
 
@@ -289,12 +223,11 @@ private[plans] trait LayoutRegistry {
   * the companion's scaladoc for the exactness contract. Injected FIRST
   * among the engine's optimizer rules (before [[EagerAggregation]]) so
   * the join subtree is matched before any other rewrite reshapes it. */
-object RewriteMaterializedJoin extends Rule[LogicalPlan] with PredicateHelper {
+case class RewriteMaterializedJoin(spark: SparkSession) extends Rule[LogicalPlan] with PredicateHelper {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    val metas = MaterializedJoins.all
+    val metas = MaterializedJoins.all(spark)
     if (metas.isEmpty || !MaterializedJoins.enabled(conf)) return plan
-    val spark = SparkSession.getActiveSession.getOrElse(return plan)
     // original source-attr exprId -> (stored cents attr, finite) across
     // every substitution this pass makes — consumed by the ancestors'
     // money-idiom rewrite below
@@ -302,7 +235,7 @@ object RewriteMaterializedJoin extends Rule[LogicalPlan] with PredicateHelper {
     var fired = false
     val substituted = plan.transformDown {
       case j @ Join(_, _, Inner, _, _) =>
-        tryRewrite(spark, j, metas, centsMap) match {
+        tryRewrite(j, metas, centsMap) match {
           case Some(n) => fired = true; n
           case None => j
         }
@@ -431,8 +364,7 @@ object RewriteMaterializedJoin extends Rule[LogicalPlan] with PredicateHelper {
 
   /** Attempt to serve the flattened join region from one registered
     * meta; metas are tried best-coverage-first. */
-  private def tryRewrite(spark: SparkSession, j: Join,
-      metas: Seq[MaterializedJoins.Meta],
+  private def tryRewrite(j: Join, metas: Seq[MaterializedJoins.Meta],
       centsMap: scala.collection.mutable.Map[Long, (Attribute, Boolean)])
       : Option[LogicalPlan] = {
     val (inputs, conds) = flatten(j)
@@ -460,7 +392,7 @@ object RewriteMaterializedJoin extends Rule[LogicalPlan] with PredicateHelper {
       .sortBy { case (m, _, inc) => (-inc.size, m.catalogTable) }
       .view
       .flatMap { case (m, fi, inc) =>
-        rebuild(spark, m, fi, inc, peeled, conds, centsMap)
+        rebuild(m, fi, inc, peeled, conds, centsMap)
       }
       .headOption
   }
@@ -499,8 +431,8 @@ object RewriteMaterializedJoin extends Rule[LogicalPlan] with PredicateHelper {
 
   // -------------------------------------------------------- rebuilding
 
-  private def rebuild(spark: SparkSession, m: MaterializedJoins.Meta,
-      factIdx: Int, inc: Seq[(MaterializedJoins.DimMeta, Int, Expression)],
+  private def rebuild(m: MaterializedJoins.Meta, factIdx: Int,
+      inc: Seq[(MaterializedJoins.DimMeta, Int, Expression)],
       peeled: Seq[Peeled], conds: Seq[Expression],
       centsMap: scala.collection.mutable.Map[Long, (Attribute, Boolean)])
       : Option[LogicalPlan] = {
@@ -511,7 +443,7 @@ object RewriteMaterializedJoin extends Rule[LogicalPlan] with PredicateHelper {
     // the layout was staged from (the leaf's own FileIndex is in hand —
     // no extra filesystem call); drift declines loudly, once per table
     if (!replaced.forall(p => (p.path, p.leafIndex) match {
-      case (Some(path), Some(idx)) => Freshness.check(
+      case (Some(path), Some(idx)) => Freshness.check(spark,
         s"${m.catalogTable}:$path", m.fingerprints.getOrElse(path, ""), idx)
       case _ => true
     })) return None

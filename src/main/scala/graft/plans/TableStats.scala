@@ -71,6 +71,8 @@ object TableStats {
       ndv.get(col).filter(_ > 0).map(n => math.min(1.0, 1.0 / n.toDouble))
   }
 
+  /** JVM-wide: it mirrors the record files, keyed by warehouse and
+    * identity, which outlive any one context. */
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[(String, String), Option[Stats]]()
 
@@ -173,7 +175,7 @@ object TableStats {
   /** Lookup by identity: in-process cache, then the registry file.
     * Negative results are cached too — [[analyze]]/[[alias]] update the
     * cache, so a same-process write is always visible; a DIFFERENT
-    * process's later write shows up next session (documented: stats
+    * process's later write shows up in the next JVM (documented: stats
     * are advisory, never load-bearing for correctness). */
   def lookup(warehouse: String, key: String): Option[Stats] =
     cache.computeIfAbsent((warehouse.stripPrefix("file:"), norm(key)), { _ =>

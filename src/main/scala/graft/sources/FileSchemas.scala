@@ -145,6 +145,9 @@ object FileSchemas {
 
   private final case class Cached(fingerprint: String, schema: StructType)
 
+  /** JVM-wide: an entry describes files, keyed by their roots and the
+    * inference confs and checked against their fingerprint, so it holds
+    * for any session on any context. */
   private val schemas = new java.util.concurrent.ConcurrentHashMap[Key, Cached]()
 
   /** `spark.read.format(format).options(options).load(paths)`, with the

@@ -349,7 +349,7 @@ object TfRecordSource {
       f.defaultValue))
     val rows = spark.sparkContext
       .binaryFiles(paths.mkString(","))
-      .flatMap { case (path, pds) =>
+      .flatMap { case (_, pds) =>
         def open(): java.io.InputStream = {
           val raw = new BufferedInputStream(pds.open())
           raw.mark(2)

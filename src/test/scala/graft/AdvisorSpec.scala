@@ -356,12 +356,12 @@ class AdvisorSpec extends GraftSpec {
       // routed result == flat result through the actual redirect machinery
       val q = or.groupBy(col("o_custkey")).agg(count(lit(1)).as("n"))
       val flat = q.collect().map(_.toString).sorted.toSeq
-      Tables.redirect(sf, "orders", byCust("orders"))
+      Tables.redirect(spark, sf, "orders", byCust("orders"))
       try {
         val routed = Tables.orders(spark, sf).groupBy(col("o_custkey"))
           .agg(count(lit(1)).as("n")).collect().map(_.toString).sorted.toSeq
         assert(routed === flat)
-      } finally Tables.clearRedirects()
+      } finally Tables.clearRedirects(spark)
     } finally {
       spark.sql("DROP TABLE IF EXISTS route_ok")
       spark.sql("DROP TABLE IF EXISTS route_ck")
@@ -610,14 +610,14 @@ class AdvisorSpec extends GraftSpec {
       val flat = or.where(col("o_orderdate") >= lit("1997-01-01"))
         .groupBy(col("o_orderpriority")).agg(count(lit(1)).as("n"))
         .collect().map(_.toString).sorted.toSeq
-      Tables.redirect(sf, "orders", "ra_sorted")
+      Tables.redirect(spark, sf, "orders", "ra_sorted")
       try {
         val routed = Tables.orders(spark, sf)
           .where(col("o_orderdate") >= lit("1997-01-01"))
           .groupBy(col("o_orderpriority")).agg(count(lit(1)).as("n"))
           .collect().map(_.toString).sorted.toSeq
         assert(routed === flat)
-      } finally Tables.clearRedirects()
+      } finally Tables.clearRedirects(spark)
       GateFixtures.deleteRecursively(sortedDir)
     } finally {
       spark.sql("DROP TABLE IF EXISTS ra_sorted")
@@ -682,25 +682,25 @@ class AdvisorSpec extends GraftSpec {
     LayoutAdvisor.stage(spark, spec, "adv_fresh_b")
     try {
       // fresh base: redirect serves (one-time verification per triple)
-      Tables.redirect(dir.toString, "t", "adv_fresh_a")
+      Tables.redirect(spark, dir.toString, "t", "adv_fresh_a")
       assert(Tables(spark, dir.toString, "t").count() === 300L)
-      Tables.clearRedirects()
+      Tables.clearRedirects(spark)
       // grow the base; an UNVERIFIED triple must now refuse loudly
       (301L to 350L).map(i => (i, i % 9, i * 2.0)).toDF("k", "c", "v")
         .write.mode("append").parquet(dir.resolve("t.parquet").toString)
-      Tables.redirect(dir.toString, "t", "adv_fresh_b")
+      Tables.redirect(spark, dir.toString, "t", "adv_fresh_b")
       val e = intercept[IllegalStateException] {
         Tables(spark, dir.toString, "t").count()
       }
       assert(e.getMessage.contains("drifted"), e.getMessage)
       // the triple verified before the append must refuse as well
-      Tables.redirect(dir.toString, "t", "adv_fresh_a")
+      Tables.redirect(spark, dir.toString, "t", "adv_fresh_a")
       val again = intercept[IllegalStateException] {
         Tables(spark, dir.toString, "t").count()
       }
       assert(again.getMessage.contains("drifted"), again.getMessage)
     } finally {
-      Tables.clearRedirects()
+      Tables.clearRedirects(spark)
       spark.sql("DROP TABLE IF EXISTS adv_fresh_a")
       spark.sql("DROP TABLE IF EXISTS adv_fresh_b")
     }
@@ -734,7 +734,7 @@ class AdvisorSpec extends GraftSpec {
     val meta = MaterializedAggs.stageRollup(spark,
       LayoutAdvisor.adviseAggRollups(Seq(q), minHits = 1).head, rollup)
     try {
-      Tables.redirect(dir.toString, "t", layout)
+      Tables.redirect(spark, dir.toString, "t", layout)
       assert(Tables(spark, dir.toString, "t").count() === 200L)
       assert(MaterializedAggs.fired(q, rollup), "the fresh rollup must serve")
       // same name, same length, other values, later mtime
@@ -752,8 +752,8 @@ class AdvisorSpec extends GraftSpec {
       val refused = intercept[IllegalArgumentException](MaterializedAggs.refreshRollup(spark, meta))
       assert(refused.getMessage.contains("append-only"), refused.getMessage)
     } finally {
-      Tables.clearRedirects()
-      MaterializedAggs.deregister(rollup)
+      Tables.clearRedirects(spark)
+      MaterializedAggs.deregister(spark, rollup)
       Seq(layout, rollup).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
   }

@@ -237,7 +237,7 @@ class BucketingSpec extends GraftSpec {
     try {
       val li = Tables.lineitem(spark, sf).select(col("l_orderkey"), col("l_quantity"))
       TabularWriter.toBucketedTable(li, "rd_lineitem", "l_orderkey", buckets = 4)
-      Tables.redirect(sf, "lineitem", "rd_lineitem")
+      Tables.redirect(spark, sf, "lineitem", "rd_lineitem")
       try {
         // the resolver now serves the staged layout: narrow schema,
         // co-located per-key plans, same values
@@ -245,7 +245,7 @@ class BucketingSpec extends GraftSpec {
         assert(got.columns.toSet === Set("l_orderkey", "l_quantity"))
         val agg = got.groupBy("l_orderkey").agg(count(lit(1)).as("n"))
         assert(!agg.queryExecution.executedPlan.toString.contains("Exchange"))
-      } finally Tables.clearRedirects()
+      } finally Tables.clearRedirects(spark)
       assert(Tables.lineitem(spark, sf).columns.length > 2,
         "clearRedirects must restore the flat read")
     } finally spark.sql("DROP TABLE IF EXISTS rd_lineitem")

@@ -352,6 +352,6 @@ class EagerAggSpec extends GraftSpec {
     // the suite session is built withExtensions(GraftExtensions); a
     // q13-shaped plan firing (asserted above) plus the flag round-trip
     // here pins that the injection point stays wired
-    assert(EagerAggregation.ruleName.contains("EagerAggregation"))
+    assert(EagerAggregation(spark).ruleName.contains("EagerAggregation"))
   }
 }

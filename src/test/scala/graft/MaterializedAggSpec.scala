@@ -24,7 +24,7 @@ class MaterializedAggSpec extends GraftSpec {
     graft.sources.TabularWriter.clearStale(spark, name)
     val spec = advisedSpec
     val m = MaterializedAggs.stageRollup(spark, spec, name)
-    MaterializedAggs.deregister(name) // each test scopes its own registration
+    MaterializedAggs.deregister(spark, name) // each test scopes its own registration
     m
   }
 
@@ -98,8 +98,8 @@ class MaterializedAggSpec extends GraftSpec {
     df.collect().map(_.toSeq.toIndexedSeq).toIndexedSeq.sortBy(_.mkString("|"))
 
   private def withMeta[T](m: MaterializedAggs.Meta)(f: => T): T = {
-    MaterializedAggs.register(m)
-    try f finally MaterializedAggs.deregister(m.catalogTable)
+    MaterializedAggs.register(spark, m)
+    try f finally MaterializedAggs.deregister(spark, m.catalogTable)
   }
 
   private def fired(df: DataFrame): Boolean =
@@ -199,7 +199,7 @@ class MaterializedAggSpec extends GraftSpec {
     val name = "maspec_perpart"
     graft.sources.TabularWriter.clearStale(spark, name)
     val m = MaterializedAggs.stageRollup(spark, specs.head, name)
-    MaterializedAggs.deregister(name)
+    MaterializedAggs.deregister(spark, name)
     def q = li.join(broadcast(Tables.part(spark, sf)
         .filter(col("p_brand") === "Brand#23")),
         col("l_partkey") === col("p_partkey"))
@@ -207,14 +207,14 @@ class MaterializedAggSpec extends GraftSpec {
       .filter(col("l_quantity") < lit(0.2) * col("avg_qty"))
       .agg((sum(cents("l_extendedprice")).cast(DoubleType) / 100.0 / 7.0)
         .as("avg_yearly"))
-    val on = { MaterializedAggs.register(m)
+    val on = { MaterializedAggs.register(spark, m)
       try {
         val df = q
         assert(MaterializedAggs.fired(df, name),
           s"per-part rollup must serve the decorrelated subquery:\n" +
             df.queryExecution.optimizedPlan)
         rows(df)
-      } finally MaterializedAggs.deregister(name) }
+      } finally MaterializedAggs.deregister(spark, name) }
     assert(on === rows(q))
   }
 
@@ -262,14 +262,13 @@ class MaterializedAggSpec extends GraftSpec {
     sys.addShutdownHook(GateFixtures.deleteRecursively(dir))
     val base = dir.resolve("fact").toString
     Tables.lineitem(spark, sf).limit(500).write.mode("overwrite").parquet(base)
-    val factPath = graft.plans.MaterializedJoins.leafPath(spark.read.parquet(base))
     def corpusQ = spark.read.parquet(base).groupBy(col("l_orderkey"))
       .agg(sum(cents("l_quantity")).as("qty"))
     val spec = LayoutAdvisor.adviseAggRollups(Seq(corpusQ), minHits = 1).head
     val name = "maspec_fresh"
     graft.sources.TabularWriter.clearStale(spark, name)
     val m = MaterializedAggs.stageRollup(spark, spec, name)
-    MaterializedAggs.register(m)
+    MaterializedAggs.register(spark, m)
     try {
       assert(MaterializedAggs.fired(corpusQ, name), "fresh base must serve")
       // APPEND to the base — the staged per-key sums are now stale
@@ -280,14 +279,14 @@ class MaterializedAggSpec extends GraftSpec {
         s"drifted base must decline:\n${drifted.queryExecution.optimizedPlan}")
       // and the correct (recomputed) result flows — 600 rows' worth
       val served = rows(drifted)
-      MaterializedAggs.deregister(name)
+      MaterializedAggs.deregister(spark, name)
       assert(served === rows(corpusQ), "declined rewrite must equal flat result")
       // attach over the drifted base must refuse loudly
       intercept[IllegalArgumentException] {
         MaterializedAggs.attachRollup(spark, spec, name + "2",
           java.nio.file.Paths.get(graft.plans.TableStats.warehouseOf(spark), name).toString)
       }
-    } finally MaterializedAggs.deregister(name)
+    } finally MaterializedAggs.deregister(spark, name)
   }
 
   test("attachRollup restores the registration from the sidecar") {
@@ -312,7 +311,7 @@ class MaterializedAggSpec extends GraftSpec {
     } finally java.nio.file.Files.write(sidecar, saved.getBytes("UTF-8"))
     val attached = MaterializedAggs.attachRollup(
       spark, advisedSpec, name2, aside.toString)
-    MaterializedAggs.deregister(name2)
+    MaterializedAggs.deregister(spark, name2)
     assert(attached === staged.copy(catalogTable = name2))
     // drifted spec (different key) must refuse
     val drifted = advisedSpec.copy(keys = Seq("l_suppkey"))
@@ -373,14 +372,14 @@ class MaterializedAggSpec extends GraftSpec {
       case (spec, name) =>
         graft.sources.TabularWriter.clearStale(spark, name)
         val m = MaterializedAggs.stageRollup(spark, spec, name)
-        MaterializedAggs.deregister(name)
+        MaterializedAggs.deregister(spark, name)
         m
     }
   }
 
   private def withMetas[T](ms: Seq[MaterializedAggs.Meta])(f: => T): T = {
-    ms.foreach(MaterializedAggs.register)
-    try f finally ms.foreach(m => MaterializedAggs.deregister(m.catalogTable))
+    ms.foreach(MaterializedAggs.register(spark, _))
+    try f finally ms.foreach(m => MaterializedAggs.deregister(spark, m.catalogTable))
   }
 
   test("q1 shape: subset grouping re-aggregates stored partials (round-12b)") {
@@ -452,7 +451,7 @@ class MaterializedAggSpec extends GraftSpec {
     val name = "maspec_avg2"
     graft.sources.TabularWriter.clearStale(spark, name)
     val m = MaterializedAggs.stageRollup(spark, specs.head, name)
-    MaterializedAggs.deregister(name)
+    MaterializedAggs.deregister(spark, name)
     // exact grain: avg serves as a stored FINAL value
     withMeta(m)(assert(MaterializedAggs.fired(fullGrain, name),
       s"exact-grain avg must serve:\n${fullGrain.queryExecution.optimizedPlan}"))
@@ -482,10 +481,10 @@ class MaterializedAggSpec extends GraftSpec {
     Seq(name, name + "__refreshing", name + "__prerefresh")
       .foreach(graft.sources.TabularWriter.clearStale(spark, _))
     val m = MaterializedAggs.stageRollup(spark, spec, name)
-    MaterializedAggs.deregister(name)
+    MaterializedAggs.deregister(spark, name)
     // fresh base → refresh is a no-op
     assert(MaterializedAggs.refreshRollup(spark, m) === m)
-    MaterializedAggs.deregister(name)
+    MaterializedAggs.deregister(spark, name)
     // APPEND: overlapping keys get merged partials, new keys appear
     val baseFiles = dataFiles(base)
     Tables.lineitem(spark, sf).limit(800).write.mode("append").parquet(base)
@@ -518,10 +517,10 @@ class MaterializedAggSpec extends GraftSpec {
       assert(MaterializedAggs.fired(corpusQ, name),
         s"refreshed rollup must serve:\n${corpusQ.queryExecution.optimizedPlan}")
       val served = rows(corpusQ)
-      MaterializedAggs.deregister(name)
+      MaterializedAggs.deregister(spark, name)
       assert(served === rows(corpusQ),
         "delta-merged rollup must equal the direct result over the grown base")
-    } finally MaterializedAggs.deregister(name)
+    } finally MaterializedAggs.deregister(spark, name)
     // a non-mergeable measure (avg stored as a FINAL value) refuses
     def avgQ = spark.read.parquet(base).groupBy(col("l_orderkey"))
       .agg(avg(col("l_quantity")).as("a"))
@@ -529,12 +528,12 @@ class MaterializedAggSpec extends GraftSpec {
     val avgName = "maspec_refresh_avg"
     graft.sources.TabularWriter.clearStale(spark, avgName)
     val avgMeta = MaterializedAggs.stageRollup(spark, avgSpec, avgName)
-    MaterializedAggs.deregister(avgName)
+    MaterializedAggs.deregister(spark, avgName)
     Tables.lineitem(spark, sf).limit(100).write.mode("append").parquet(base)
     spark.catalog.refreshByPath(base)
     val avgRes = try Left(MaterializedAggs.refreshRollup(spark, avgMeta))
       catch { case e: IllegalArgumentException => Right(e.getMessage) }
-    MaterializedAggs.deregister(avgName)
+    MaterializedAggs.deregister(spark, avgName)
     assert(avgRes.isRight, s"avg refresh must refuse; got $avgRes " +
       s"(measures=${avgMeta.measures})")
     // non-append drift (a STAGED file disappeared) refuses — the file
@@ -578,14 +577,14 @@ class MaterializedAggSpec extends GraftSpec {
     Seq(name, name + "__refreshing", name + "__prerefresh")
       .foreach(graft.sources.TabularWriter.clearStale(spark, _))
     val m = MaterializedAggs.stageRollup(spark, spec, name)
-    MaterializedAggs.deregister(name)
+    MaterializedAggs.deregister(spark, name)
     Tables.lineitem(spark, sf).limit(800).write.mode("append").parquet(base)
     spark.catalog.refreshByPath(base)
     val fresh = MaterializedAggs.refreshRollup(spark, m)
     try {
       assert(fresh.fingerprint !== m.fingerprint)
       // the merged rollup equals the same aggregate over the grown base
-      MaterializedAggs.deregister(name)
+      MaterializedAggs.deregister(spark, name)
       val aggs = spec.measures.map(ms => expr(ms.agg).as(ms.name))
       val direct = fact.groupBy(spec.keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
       assert(rows(spark.table(name).select(direct.columns.map(col): _*)) === rows(direct))
@@ -598,7 +597,7 @@ class MaterializedAggSpec extends GraftSpec {
         }
         assert(served === rows(q))
       }
-    } finally MaterializedAggs.deregister(name)
+    } finally MaterializedAggs.deregister(spark, name)
   }
 
   test("refreshRollup crash window: both copies survive, the rewrite declines, the aside copy restores") {
@@ -614,7 +613,7 @@ class MaterializedAggSpec extends GraftSpec {
     val names = Seq(name, name + "__refreshing", name + "__prerefresh")
     names.foreach(TabularWriter.clearStale(spark, _))
     val m = MaterializedAggs.stageRollup(spark, spec, name)
-    MaterializedAggs.deregister(name)
+    MaterializedAggs.deregister(spark, name)
     val before = rows(spark.table(name))
     Tables.lineitem(spark, sf).limit(800).write.mode("append").parquet(base)
     spark.catalog.refreshByPath(base)
@@ -639,7 +638,7 @@ class MaterializedAggSpec extends GraftSpec {
         "the restored pre-refresh rollup is still stale and must decline"))
     } finally {
       TabularWriter.compactCrashHook = () => ()
-      MaterializedAggs.deregister(name)
+      MaterializedAggs.deregister(spark, name)
       names.foreach(TabularWriter.clearStale(spark, _))
     }
   }
@@ -682,7 +681,7 @@ class MaterializedAggSpec extends GraftSpec {
     val name = "maspec_dec"
     graft.sources.TabularWriter.clearStale(spark, name)
     val m = MaterializedAggs.stageRollup(spark, specs.head, name)
-    MaterializedAggs.deregister(name)
+    MaterializedAggs.deregister(spark, name)
     withMeta(m) {
       assert(MaterializedAggs.fired(q1dec, name),
         s"decimal re-sum must serve:\n${q1dec.queryExecution.optimizedPlan}")

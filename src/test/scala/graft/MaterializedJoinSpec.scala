@@ -32,7 +32,7 @@ class MaterializedJoinSpec extends GraftSpec {
       bucketKey = Some("l_orderkey"), buckets = 4,
       centsCols = Seq("l_extendedprice", "l_discount"), hits = 1)
     val m = MaterializedJoins.stageDenorm(spark, spec, name)
-    MaterializedJoins.deregister(name) // each test scopes its own registration
+    MaterializedJoins.deregister(spark, name) // each test scopes its own registration
     m
   }
 
@@ -40,8 +40,8 @@ class MaterializedJoinSpec extends GraftSpec {
     df.collect().map(_.toSeq.toIndexedSeq).toIndexedSeq.sortBy(_.mkString("|"))
 
   private def withMeta[T](m: Meta)(f: => T): T = {
-    MaterializedJoins.register(m)
-    try f finally MaterializedJoins.deregister(m.catalogTable)
+    MaterializedJoins.register(spark, m)
+    try f finally MaterializedJoins.deregister(spark, m.catalogTable)
   }
 
   private def fired(df: DataFrame): Boolean =
@@ -284,7 +284,7 @@ class MaterializedJoinSpec extends GraftSpec {
       columns = Seq("k", "x", "x_cents", "dk", "dv"),
       bucketKey = None, buckets = 4, centsCols = Seq("x"), hits = 1)
     val m = MaterializedJoins.stageDenorm(spark, spec, name)
-    MaterializedJoins.deregister(name)
+    MaterializedJoins.deregister(spark, name)
     assert(m.cents.isEmpty, "x must be declined — x_cents is a real column")
     // the other two cents stagers share the decline: neither stages
     // cents for x over the same fact
@@ -308,7 +308,7 @@ class MaterializedJoinSpec extends GraftSpec {
         val again = t + "_again"
         if (spark.catalog.tableExists(again)) spark.sql(s"DROP TABLE `$again`")
         attach(copyAside(t).toString)
-        MaterializedJoins.deregister(again)
+        MaterializedJoins.deregister(spark, again)
         again
       }
     for (t <- Seq(name, derived, bucketed) ++ reattached) {
@@ -420,7 +420,7 @@ class MaterializedJoinSpec extends GraftSpec {
     def q = spark.read.parquet(fDir)
       .join(spark.read.parquet(dDir), col("dk_ref") === col("dk"))
       .groupBy(col("dv")).agg(sum(col("v")).as("s"))
-    MaterializedJoins.register(m)
+    MaterializedJoins.register(spark, m)
     try {
       assert(MaterializedJoins.fired(q, name), "fresh bases must serve")
       // grow the FACT — staged rows are now a strict subset
@@ -432,7 +432,7 @@ class MaterializedJoinSpec extends GraftSpec {
         s"drifted fact must decline:\n${drifted.queryExecution.optimizedPlan}")
       // the flat (correct, 500-row-based) result flows either way
       val served = drifted.collect().map(_.toSeq).sortBy(_.mkString("|"))
-      MaterializedJoins.deregister(name)
+      MaterializedJoins.deregister(spark, name)
       assert(served === q.collect().map(_.toSeq).sortBy(_.mkString("|")))
       // attach over the drifted base must refuse loudly (the audits
       // recorded in the sidecar no longer describe these files)
@@ -440,7 +440,7 @@ class MaterializedJoinSpec extends GraftSpec {
         MaterializedJoins.attachDenorm(spark, spec, name + "2",
           java.nio.file.Paths.get(graft.plans.TableStats.warehouseOf(spark), name).toString)
       }
-    } finally MaterializedJoins.deregister(name)
+    } finally MaterializedJoins.deregister(spark, name)
   }
 
   test("attachDenorm restores the registration from the sidecar") {
@@ -453,7 +453,7 @@ class MaterializedJoinSpec extends GraftSpec {
       bucketKey = Some("l_orderkey"), buckets = 4, centsCols = Nil, hits = 1)
     graft.sources.TabularWriter.clearStale(spark, name)
     val staged = MaterializedJoins.stageDenorm(spark, spec, name)
-    MaterializedJoins.deregister(name)
+    MaterializedJoins.deregister(spark, name)
     // a fresh JVM = empty catalog, files intact: copy the staged files
     // aside (DROP TABLE on a managed table would delete them) and
     // re-attach from the copy under a new name
@@ -478,7 +478,7 @@ class MaterializedJoinSpec extends GraftSpec {
     } finally java.nio.file.Files.write(sidecar, saved.getBytes("UTF-8"))
     val attached = MaterializedJoins.attachDenorm(
       spark, spec, name + "2", aside.toString)
-    MaterializedJoins.deregister(name + "2")
+    MaterializedJoins.deregister(spark, name + "2")
     assert(attached === staged.copy(catalogTable = name + "2"))
     // drifted spec must refuse
     val drifted = spec.copy(dims = spec.dims.map(_.copy(parentKey = "l_partkey")))

@@ -482,7 +482,7 @@ class OperatorsSpec extends GraftSpec {
     val meta = graft.plans.MaterializedAggs.Meta(
       "bloomrollup_t", "f", path, Seq("k"),
       Seq(graft.plans.MaterializedAggs.Measure("m1", "count(1)")))
-    graft.plans.MaterializedAggs.register(meta)
+    graft.plans.MaterializedAggs.register(spark, meta)
     try {
       assert(!BloomReduce.semiReduce(fact, col("k"), keys, col("kk"))
         .queryExecution.executedPlan.toString.contains("might_contain"),
@@ -490,7 +490,7 @@ class OperatorsSpec extends GraftSpec {
       // a rollup on a DIFFERENT key does not decline
       assert(BloomReduce.semiReduce(fact, col("row_id"), keys, col("kk"))
         .queryExecution.executedPlan.toString.contains("might_contain"))
-    } finally graft.plans.MaterializedAggs.deregister("bloomrollup_t")
+    } finally graft.plans.MaterializedAggs.deregister(spark, "bloomrollup_t")
     // registry empty again: the bloom fires as before
     assert(BloomReduce.semiReduce(fact, col("k"), keys, col("kk"))
       .queryExecution.executedPlan.toString.contains("might_contain"))

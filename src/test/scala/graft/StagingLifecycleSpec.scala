@@ -28,9 +28,8 @@ class StagingLifecycleSpec extends AnyFunSuite {
   }
 
   test("spark.sql.warehouse.dir is read only by TableStats.warehouseOf (set by GraftSession)") {
-    // EagerAggregation is an optimizer rule that holds only a SQLConf
     val found = SourceGuard.hits("spark.sql.warehouse.dir",
-      Set("TableStats.scala", "GraftSession.scala", "EagerAggregation.scala"))
+      Set("TableStats.scala", "GraftSession.scala"))
     assert(found.isEmpty, found.mkString("\n"))
   }
 

@@ -386,7 +386,7 @@ private[graft] object GateFixtures {
     }
     // the layout record is the Meta's durable form — works for both the
     // fresh staging above and the memoized same-JVM re-entry
-    graft.plans.MaterializedJoins.recorded(name, warehousePath(s, name))
+    graft.plans.MaterializedJoins.recorded(s, name)
   }
 
   /** MATERIALIZED AGGREGATE rollup for the layout_agg_* gates (round-12
@@ -421,7 +421,7 @@ private[graft] object GateFixtures {
       graft.plans.MaterializedAggs.stageRollup(s, spec, n)
       graft.plans.MaterializedAggs.deregister(s, n) // gates scope their own
     }
-    graft.plans.MaterializedAggs.recorded(name, warehousePath(s, name))
+    graft.plans.MaterializedAggs.recorded(s, name)
   }
 
   /** COMPOSITE-KEY rollups for the layout_agg_reagg/filtergrain gates
@@ -462,7 +462,7 @@ private[graft] object GateFixtures {
           specs.find(_.keys == keys).get, n)
         graft.plans.MaterializedAggs.deregister(s, n) // gates scope their own
       }
-      graft.plans.MaterializedAggs.recorded(name, warehousePath(s, name))
+      graft.plans.MaterializedAggs.recorded(s, name)
     }
   }
 
@@ -487,10 +487,6 @@ private[graft] object GateFixtures {
     }
     name
   }
-
-  /** Where catalog table `name`'s files live in the warehouse. */
-  private def warehousePath(s: org.apache.spark.sql.SparkSession, name: String): String =
-    java.nio.file.Paths.get(graft.plans.TableStats.warehouseOf(s), name).toString
 
   private[graft] def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {

@@ -307,7 +307,7 @@ object ProbeAdvisorSweep {
       // both the flat path and (via the alias) the staged catalog table
       val stats = graft.plans.TableStats.analyzePathIfMissing(
         spark, spec.path, spec.key +: spec.columns)
-      graft.plans.TableStats.alias(graft.plans.TableStats.warehouseOf(spark), stats, t)
+      graft.plans.TableStats.alias(spark, stats, t)
       println(s"[stats] ${spec.table}: rows=${stats.rowCount} " +
         stats.ndv.toSeq.sortBy(_._1).map { case (c, n) => s"$c=$n" }.mkString(" "))
       stageOrAttach(spark, t, None)(
@@ -366,12 +366,12 @@ object ProbeAdvisorSweep {
     * location and stages from scratch: re-staging is the one recovery. */
   private def stageOrAttach[A](spark: org.apache.spark.sql.SparkSession, t: String,
       present: => Option[A])(attach: String => A)(stage: => A): A = present.getOrElse {
-    val loc = java.nio.file.Paths.get(graft.plans.TableStats.warehouseOf(spark), t)
+    val loc = graft.sources.GraftFiles.locationOf(spark, t)
     val t0 = System.nanoTime()
     def secs = (System.nanoTime() - t0) / 1e9
     val attached =
-      if (java.nio.file.Files.exists(loc.resolve("_SUCCESS")) &&
-          !spark.catalog.tableExists(t)) {
+      if (!spark.catalog.tableExists(t) && graft.sources.GraftFiles.exists(spark,
+          new org.apache.hadoop.fs.Path(loc, "_SUCCESS"))) {
         try {
           val a = attach(loc.toString)
           println(f"[advise] attached $t ($secs%.1f s)")

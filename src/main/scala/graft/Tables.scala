@@ -31,9 +31,8 @@ object Tables {
     * the record existed) are unchecked by contract. */
   private def verifyRedirect(spark: SparkSession, sfDir: String, name: String,
       table: String): Unit = {
-    val loc = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table)).location.getPath
-    graft.plans.Freshness.read(loc).flatMap(graft.plans.Freshness.drift(spark, _)).foreach { d =>
+    val rec = graft.plans.Freshness.read(spark, graft.sources.GraftFiles.locationOf(spark, table).toString)
+    rec.flatMap(graft.plans.Freshness.drift(spark, _)).foreach { d =>
       throw new IllegalStateException(s"Tables.redirect($sfDir, $name -> $table): $d " +
         "— re-stage the layout (serving it would silently return stale rows)")
     }

@@ -125,14 +125,13 @@ case class EagerAggregation(spark: org.apache.spark.sql.SparkSession) extends Ru
         val keyNames = keys.map(_.name).toSet
         val file = FileLeaf.unapply(lr)
         val identities = lr.catalogTable.map(_.identifier.table).toSeq ++ file.map(_._3)
-        val wh = TableStats.warehouseOf(spark)
         // freshness (round-12): a measurement recorded over DIFFERENT
         // base files than the live leaf is ignored — the grown table's
         // uniqueness may have flipped either way; fall back to the
         // declared conf (records without a fingerprint — aliased staged
         // tables, pre-round-12 files — stay advisory-unchecked). The
         // live leaf is hashed only when a record carries a fingerprint.
-        val measured = identities.flatMap(id => TableStats.lookup(wh, id))
+        val measured = identities.flatMap(id => TableStats.lookup(spark, id))
           .headOption.filter(st => st.fingerprint.forall(fp =>
             file.forall(f => Freshness.ofIndex(f._2.location) == fp)))
         measured match {

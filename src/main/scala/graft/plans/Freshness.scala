@@ -1,8 +1,9 @@
 package graft.plans
 
-import graft.sources.FileSchemas
-import java.nio.file.{Files, Paths}
+import graft.sources.{FileSchemas, GraftFiles}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.CatalogTableType
 import org.apache.spark.sql.execution.datasources.FileIndex
 
 /** BASE-DATA freshness policy for staged layouts, and the one layout
@@ -15,8 +16,9 @@ import org.apache.spark.sql.execution.datasources.FileIndex
   * A staged layout (bucketed projection, derived-cents table,
   * materialized join, aggregate rollup) is a PHYSICAL copy of its base
   * tables at stage time. Its record ([[RecordFile]], one per layout,
-  * tab-separated fields, the first naming the line's kind) has three
-  * parts:
+  * tab-separated fields, the first naming the line's kind; read and
+  * written at the table's qualified location through
+  * [[graft.sources.GraftFiles]]) has three parts:
   *  - IDENTITY lines, built from the advice by one function per kind
   *    that both the kind's stager and its attach call, so a drifted
   *    advice refuses to attach;
@@ -105,7 +107,7 @@ object Freshness {
   }
 
   private def malformed(dir: String, kind: String) = new IllegalArgumentException(
-    s"layout record ${Paths.get(dir, RecordFile)}: missing or malformed '$kind' line " +
+    s"layout record ${new Path(dir, RecordFile)}: missing or malformed '$kind' line " +
       "— re-stage")
 
   /** The `finite` audit line: the columns whose stored cents passed the
@@ -118,31 +120,28 @@ object Freshness {
     path -> FileSchemas.fingerprint(leafEntries(df).getOrElse(
       sys.error(s"Freshness.base: $path is not one file scan")))
 
-  /** Write catalog table `table`'s record beside its files: `identity`
+  /** Write catalog table `table`'s record beside its files (at
+    * [[GraftFiles.locationOf]], through [[GraftFiles.write]]): `identity`
     * first (in order — [[attach]] compares it as a prefix), then
     * `audit`, then one base line per member. Returns the record. */
   def write(spark: SparkSession, table: String, identity: Seq[Seq[String]],
       audit: Seq[Seq[String]], bases: Seq[(String, String)]): Record = {
-    val dir = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table)).location.getPath
-    val rec = Record(dir, identity ++ audit ++ bases.map { case (p, h) => Seq("base", p, h) })
-    Files.write(Paths.get(dir, RecordFile),
-      rec.lines.map(_.mkString("\t")).mkString("", "\n", "\n").getBytes("UTF-8"))
+    val dir = GraftFiles.locationOf(spark, table)
+    val rec = Record(dir.toString, identity ++ audit ++ bases.map { case (p, h) => Seq("base", p, h) })
+    GraftFiles.write(spark, new Path(dir, RecordFile),
+      rec.lines.map(_.mkString("\t")).mkString("", "\n", "\n"))
     rec
   }
 
   /** The record beside the files at `dir` (None when it has none:
     * fixture tables, layouts staged before the record existed). */
-  def read(dir: String): Option[Record] = {
-    val f = Paths.get(dir, RecordFile)
-    if (!Files.exists(f)) None
-    else Some(Record(dir, new String(Files.readAllBytes(f), "UTF-8")
-      .split("\n").toSeq.filter(_.nonEmpty).map(_.split("\t", -1).toSeq)))
-  }
+  def read(spark: SparkSession, dir: String): Option[Record] =
+    GraftFiles.read(spark, new Path(dir, RecordFile)).map(text => Record(dir,
+      text.split("\n").toSeq.filter(_.nonEmpty).map(_.split("\t", -1).toSeq)))
 
   /** The record at `dir`; its absence is the re-stage diagnostic. */
-  def recordAt(dir: String): Record = read(dir).getOrElse(throw new IllegalArgumentException(
-    s"no layout record ${Paths.get(dir, RecordFile)} — re-stage"))
+  def recordAt(spark: SparkSession, dir: String): Record = read(spark, dir).getOrElse(
+    throw new IllegalArgumentException(s"no layout record ${new Path(dir, RecordFile)} — re-stage"))
 
   /** The first base line whose live files differ from staging, as a
     * message (None when every member still matches): one listing per
@@ -160,10 +159,12 @@ object Freshness {
     *     advice's;
     *  2. every base line must still fingerprint as staged;
     *  3. the files are registered: [[graft.sources.TabularWriter.attach]]
-    *     when `bucket` (key, count) is set — its `_graft_buckets` must be
-    *     there, nothing else proves the hash key — the one
-    *     `CREATE TABLE … LOCATION` otherwise;
-    *  4. the RECORDED `finite` columns are marked as stored cents
+    *     when `bucket` (key, count) is set — it refuses files without
+    *     their `_graft_buckets`, nothing else proves the hash key — the
+    *     one `CREATE TABLE … LOCATION` otherwise;
+    *  4. files at `name`'s own warehouse location are registered
+    *     MANAGED, as staging left them, so a swap moves them;
+    *  5. the RECORDED `finite` columns are marked as stored cents
     *     ([[LayoutAdvisor.markDerived]]; table properties live in the
     *     catalog, not the files).
     * `meta` builds the kind's registration from the record before any
@@ -171,7 +172,7 @@ object Freshness {
     * naming re-stage, the recovery. */
   def attach[A](spark: SparkSession, name: String, path: String,
       identity: Seq[Seq[String]], bucket: Option[(String, Int)])(meta: Record => A): A = {
-    val rec = recordAt(path)
+    val rec = recordAt(spark, path)
     require(rec.lines.startsWith(identity),
       s"attach($name): the layout record under $path does not match this " +
         "session's advice — re-stage")
@@ -181,14 +182,15 @@ object Freshness {
     val m = meta(rec)
     bucket match {
       case Some((key, buckets)) =>
-        val sidecar = graft.sources.TabularWriter.BucketSidecar
-        require(Files.exists(Paths.get(path, sidecar)),
-          s"attach($name): no $sidecar under $path — re-stage")
         graft.sources.TabularWriter.attach(spark, name, path, key, buckets)
       case None =>
         val schema = FileSchemas.read(spark, Seq(path)).schema.toDDL
         spark.sql(s"CREATE TABLE `$name` ($schema) USING parquet LOCATION '$path'")
     }
+    val catalog = spark.sessionState.catalog
+    val t = catalog.getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(name))
+    if (new Path(t.location) == new Path(catalog.defaultTablePath(t.identifier)))
+      catalog.alterTable(t.copy(tableType = CatalogTableType.MANAGED))
     if (cents.nonEmpty) LayoutAdvisor.markDerived(spark, name, cents, cents)
     m
   }

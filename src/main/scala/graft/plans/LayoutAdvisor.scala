@@ -267,10 +267,8 @@ object LayoutAdvisor {
     * column until someone has [[TableStats.analyze]]d that identity
     * (the advisor sweep does at stage time). */
   private def ndvResolver(spark: org.apache.spark.sql.SparkSession,
-      path: String): String => Option[Long] = {
-    val wh = TableStats.warehouseOf(spark)
-    name => TableStats.lookup(wh, path).flatMap(_.ndv.get(name))
-  }
+      path: String): String => Option[Long] =
+    name => TableStats.lookup(spark, path).flatMap(_.ndv.get(name))
 
   /** Estimated fraction of the rows of the leaf at `leafPath` that
     * reach `n`: the product of [[selectivity]] over every Filter
@@ -1196,7 +1194,7 @@ object LayoutAdvisor {
         // keys pass: the rollup stays correct either way, only cost
         // varies)
         if (ndvResolver(spark, path)(keys.head).exists { ndv =>
-          val rows = TableStats.lookup(TableStats.warehouseOf(spark), path)
+          val rows = TableStats.lookup(spark, path)
             .map(_.rowCount).getOrElse(0L)
           rows > 0 && ndv.toDouble >= 0.9 * rows
         }) None else Some(spec)

@@ -48,10 +48,10 @@ private[plans] trait LayoutRegistry {
   protected def flag: String
   protected def metaOf(catalogTable: String, rec: Freshness.Record): Meta
 
-  /** The [[Meta]] recorded beside the layout staged at `path`, neither
+  /** The [[Meta]] recorded beside `catalogTable`'s files, neither
     * registered nor validated (the kind's attach adds those guards). */
-  def recorded(catalogTable: String, path: String): Meta =
-    metaOf(catalogTable, Freshness.recordAt(path))
+  def recorded(spark: SparkSession, catalogTable: String): Meta = metaOf(catalogTable,
+    Freshness.recordAt(spark, graft.sources.GraftFiles.locationOf(spark, catalogTable).toString))
 
   def register(spark: SparkSession, meta: Meta): Unit =
     LayoutState(spark).layouts.put((this, tableOf(meta)), new Registered(meta))

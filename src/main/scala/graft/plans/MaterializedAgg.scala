@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.sources.FileSchemas
+import graft.sources.{FileSchemas, GraftFiles}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.EliminateSubqueryAliases
 import org.apache.spark.sql.catalyst.expressions._
@@ -205,7 +205,7 @@ object MaterializedAggs extends LayoutRegistry with PredicateHelper {
     val meta = Freshness.attach(spark, name, path,
       identity(spec.fact, spec.factPath, spec.keys.map(_.toLowerCase), spec.measures),
       Some(spec.keys.head -> spec.buckets))(metaOf(name, _))
-    if (TableStats.lookup(TableStats.warehouseOf(spark), name).isEmpty)
+    if (TableStats.lookup(spark, name).isEmpty)
       TableStats.analyze(spark, spark.table(name), name, spec.keys)
     register(spark, meta)
     meta
@@ -254,7 +254,8 @@ object MaterializedAggs extends LayoutRegistry with PredicateHelper {
     val ident = org.apache.spark.sql.catalyst.TableIdentifier(meta.catalogTable)
     val cat = spark.sessionState.catalog.getTableMetadata(ident)
     // the staged base-file inventory (absent without a record)
-    val staged = Freshness.read(cat.location.getPath).toSeq.flatMap(_.all("file", 1))
+    val staged = Freshness.read(spark, GraftFiles.locationOf(spark, meta.catalogTable).toString)
+      .toSeq.flatMap(_.all("file", 1))
       .flatMap(f => FileSchemas.Entry.parse(f.head)).toSet
     require(staged.nonEmpty,
       s"refreshRollup(${meta.catalogTable}): no layout record of its file " +

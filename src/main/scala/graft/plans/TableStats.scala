@@ -1,9 +1,7 @@
 package graft.plans
 
-import graft.sources.FileSchemas
-import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, Paths}
-
+import graft.sources.{FileSchemas, GraftFiles}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Table statistics as PRODUCT: (rowCount, per-column NDV) measured
@@ -27,8 +25,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * One aggregate pass per table, O(|cols| × sketch) driver state.
   *
   * Persistence is one small text file per analyzed identity under
-  * `<warehouse>/_graft_stats/` — the local-mode stand-in for a
-  * metastore's ANALYZE TABLE output, exactly like
+  * `<warehouse>/_graft_stats/`, read and written through
+  * [[graft.sources.GraftFiles]] on the warehouse's own filesystem —
+  * the local-mode stand-in for a metastore's ANALYZE TABLE output, as
   * [[graft.sources.TabularWriter.attach]] stands in for its table
   * registry. An identity is either a read PATH (comma-joined roots,
   * the advisor's table key) or a staged CATALOG TABLE name
@@ -82,12 +81,10 @@ object TableStats {
   private def norm(key: String): String =
     key.split(',').map(_.stripPrefix("file:")).mkString(",")
 
-  /** The stats registry dir under `warehouse` (created on demand). */
-  private def dirFor(warehouse: String): Path =
-    Paths.get(warehouse.stripPrefix("file:"), "_graft_stats")
-
-  private def fileFor(warehouse: String, key: String): Path =
-    dirFor(warehouse).resolve(s"${FileSchemas.sha1(norm(key))}.stats")
+  /** `key`'s record under the session warehouse's qualified location
+    * (the runtime value, `file:` kept; the dir is created on demand). */
+  private def fileFor(spark: SparkSession, key: String): Path = new Path(
+    spark.conf.get("spark.sql.warehouse.dir"), s"_graft_stats/${FileSchemas.sha1(norm(key))}.stats")
 
   /** Warehouse dir of a live session (runtime value is file-qualified). */
   def warehouseOf(spark: SparkSession): String =
@@ -141,7 +138,7 @@ object TableStats {
       value: String => Long, measured: DataFrame): Stats = {
     val stats = Stats(key, value(RowsCol), present.map(c => c -> value(c)).toMap,
       fingerprint = Freshness.leafEntries(measured).map(FileSchemas.fingerprint))
-    persist(warehouseOf(spark), stats)
+    persist(spark, stats)
     stats
   }
 
@@ -154,7 +151,7 @@ object TableStats {
     * it) is measured again over the same columns. */
   def analyzePathIfMissing(spark: SparkSession, path: String,
       cols: Seq[String], refresh: Boolean = false): Stats = {
-    val existing = if (refresh) None else lookup(warehouseOf(spark), path)
+    val existing = if (refresh) None else lookup(spark, path)
     existing.filter(st => st.fingerprint.forall(_ == Freshness.ofPath(spark, path)) &&
       cols.forall(st.ndv.contains)).getOrElse {
       val merged = existing.map(_.ndv.keys.toSeq).getOrElse(Nil) ++ cols
@@ -169,37 +166,28 @@ object TableStats {
     * aliased identity's own files are different bytes (the staged
     * copy) — an aliased record stays advisory-unchecked, exactly the
     * pre-round-12 contract. */
-  def alias(warehouse: String, stats: Stats, asKey: String): Unit =
-    persist(warehouse, stats.copy(key = asKey, fingerprint = None))
+  def alias(spark: SparkSession, stats: Stats, asKey: String): Unit =
+    persist(spark, stats.copy(key = asKey, fingerprint = None))
 
   /** Lookup by identity: in-process cache, then the registry file.
     * Negative results are cached too — [[analyze]]/[[alias]] update the
     * cache, so a same-process write is always visible; a DIFFERENT
     * process's later write shows up in the next JVM (documented: stats
-    * are advisory, never load-bearing for correctness). */
-  def lookup(warehouse: String, key: String): Option[Stats] =
-    cache.computeIfAbsent((warehouse.stripPrefix("file:"), norm(key)), { _ =>
-      val f = fileFor(warehouse, key)
-      if (!Files.exists(f)) None
-      else {
-        val lines = new String(Files.readAllBytes(f), UTF_8)
-          .split("\n").map(_.trim).filter(_.nonEmpty)
-        // format: `key <id>` / `rows <n>` / `ndv <col> <n>`...; a
-        // corrupt file is treated as absent (advisory data)
-        val kv = lines.map(_.split(" ", 2)).collect {
-          case Array(k, v) => (k, v)
-        }
-        val rows = kv.collectFirst {
-          case ("rows", v) if v.forall(_.isDigit) => v.toLong
-        }
-        rows.map { r =>
-          val ndv = kv.collect {
-            case ("ndv", v) => v.split(" ")
-          }.collect {
-            case Array(c, n) if n.forall(_.isDigit) => c -> n.toLong
-          }.toMap
-          Stats(key, r, ndv, kv.collectFirst { case ("fp", v) => v })
-        }
+    * are advisory, never load-bearing for correctness). Runs inside the
+    * optimizer ([[EagerAggregation]]), so a file that cannot be read (a
+    * failed checksum included) counts as absent, never fails the query. */
+  def lookup(spark: SparkSession, key: String): Option[Stats] =
+    cache.computeIfAbsent((warehouseOf(spark), norm(key)), { _ =>
+      val text = try GraftFiles.read(spark, fileFor(spark, key))
+        catch { case _: java.io.IOException => None }
+      // format: `key <id>` / `rows <n>` / `fp <hash>` / `ndv <col> <n>`...;
+      // a corrupt file is treated as absent (advisory data)
+      val kv = text.toSeq.flatMap(_.split("\n")).map(_.trim.split(" ", 2))
+        .collect { case Array(k, v) => (k, v) }
+      kv.collectFirst { case ("rows", v) if v.forall(_.isDigit) => v.toLong }.map { rows =>
+        val ndv = kv.collect { case ("ndv", v) => v.split(" ") }
+          .collect { case Array(c, n) if n.forall(_.isDigit) => c -> n.toLong }.toMap
+        Stats(key, rows, ndv, kv.collectFirst { case ("fp", v) => v })
       }
     })
 
@@ -209,20 +197,17 @@ object TableStats {
   /** Delete the record of every file read under `df` and drop the
     * cache: a spec that needs unmeasured tables creates that state. */
   private[graft] def forget(spark: SparkSession, df: DataFrame): Unit = {
-    val wh = warehouseOf(spark)
     df.queryExecution.analyzed.collectLeaves()
-      .collect { case FileLeaf(_, _, key) => Files.deleteIfExists(fileFor(wh, key)) }
+      .collect { case FileLeaf(_, _, key) => GraftFiles.delete(spark, fileFor(spark, key)) }
     invalidateCache()
   }
 
-  private def persist(warehouse: String, stats: Stats): Unit = {
-    val f = fileFor(warehouse, stats.key)
-    Files.createDirectories(f.getParent)
+  private def persist(spark: SparkSession, stats: Stats): Unit = {
     val body = (Seq(s"key ${stats.key}", s"rows ${stats.rowCount}") ++
       stats.fingerprint.map(f => s"fp $f").toSeq ++
       stats.ndv.toSeq.sortBy(_._1).map { case (c, n) => s"ndv $c $n" })
       .mkString("", "\n", "\n")
-    Files.write(f, body.getBytes(UTF_8))
-    cache.put((warehouse.stripPrefix("file:"), norm(stats.key)), Some(stats))
+    GraftFiles.write(spark, fileFor(spark, stats.key), body)
+    cache.put((warehouseOf(spark), norm(stats.key)), Some(stats))
   }
 }

@@ -75,20 +75,11 @@ object TabularWriter {
     // count and the KEY travel with the files (empty trailing buckets
     // write no file, so the file list alone cannot prove the staged
     // count; nothing in the files proves the hash key at all)
-    writeBucketSidecar(df.sparkSession, table, buckets, key)
+    GraftFiles.write(df.sparkSession, new Path(GraftFiles.locationOf(df.sparkSession, table),
+      BucketSidecar), s"$buckets $key")
   }
 
   private[graft] val BucketSidecar = "_graft_buckets"
-
-  private def writeBucketSidecar(spark: SparkSession, table: String,
-      buckets: Int, key: String): Unit = {
-    import org.apache.spark.sql.catalyst.TableIdentifier
-    val loc = new Path(spark.sessionState.catalog
-      .getTableMetadata(TableIdentifier(table)).location)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new Path(loc, BucketSidecar), true)
-    try out.write(s"$buckets $key".getBytes("UTF-8")) finally out.close()
-  }
 
   /** Append rows to an existing bucketed table created by
     * [[toBucketedTable]], preserving the bucket spec (validated against
@@ -180,7 +171,15 @@ object TabularWriter {
     * the original; the new copy under `<table><tmpSuffix>` can be
     * dropped or swapped in by hand, and the next swap clears it anyway.
     * [[compactCrashHook]] fires in that window — BucketingSpec
-    * (compaction) and MaterializedAggSpec (refresh) prove the recovery. */
+    * (compaction) and MaterializedAggSpec (refresh) prove the recovery.
+    * On an object store `RENAME TO` is copy-then-delete, so each rename
+    * is a crash window that can leave part of a copy at `table`'s
+    * location. A refreshed rollup's layout record refuses every such
+    * state on attach: the new copy has none until the swap returns, the
+    * original's no longer matches its grown base (StagingLifecycleSpec
+    * shows `no layout record` after a crash between the renames). A
+    * compaction's copies carry only `_graft_buckets`, which cannot tell
+    * a partial copy: re-stage after such a crash. */
   private[graft] def swap(spark: SparkSession, table: String, tmpSuffix: String,
       asideSuffix: String)(write: String => Unit): Unit = {
     val (tmp, aside) = (table + tmpSuffix, table + asideSuffix)
@@ -202,11 +201,8 @@ object TabularWriter {
     * and CREATE / saveAsTable refuse a location a previous JVM or a
     * crashed swap left behind. */
   private[graft] def clearStale(spark: SparkSession, table: String): Unit = {
-    import org.apache.spark.sql.catalyst.TableIdentifier
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    val loc = new Path(spark.sessionState.catalog.defaultTablePath(TableIdentifier(table)))
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
+    GraftFiles.delete(spark, GraftFiles.locationOf(spark, table))
   }
 
   /** Register ALREADY-STAGED bucketed data (written by a previous
@@ -221,49 +217,34 @@ object TabularWriter {
     * footers. */
   def attach(spark: SparkSession, table: String, path: String, key: String,
       buckets: Int, sorted: Boolean = true): Unit = {
-    // validate the DECLARED bucket count against the files' own bucket
-    // ids BEFORE registering: Spark trusts the declared spec, so
-    // attaching 32-bucket files as a 16-bucket table would make every
-    // co-located join/aggregate skip its exchange over rows that are
-    // NOT where the spec claims — silently wrong results, not an error
-    // (concrete trigger: re-deriving advice under a different
-    // parallelism floor and attaching the old files with the new count)
-    val loc = new Path(path)
-    val pfs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids = bucketIds(spark, loc)
-    require(ids.nonEmpty,
-      s"attach($table): no bucketed data files under $path")
+    // Spark trusts the DECLARED spec: a wrong count or key makes every
+    // co-located plan skip its exchange over misplaced rows — silent
+    // corruption. The files' bucket ids bound the count; only the
+    // writer's sidecar proves it AND the key (empty trailing buckets
+    // write no file, no file records the key): files without it refuse.
+    val ids = bucketIds(spark, new Path(path))
+    require(ids.nonEmpty, s"attach($table): no bucketed data files under $path")
     require(ids.max < buckets,
       s"attach($table): declared $buckets buckets but files carry bucket id " +
         s"${ids.max} — the location was staged with a different bucket count; " +
         "attach with the ORIGINAL count (bucket membership is physical)")
-    // the writer's sidecar proves the exact staged count AND key (file
-    // ids alone cannot: empty trailing buckets write no file, so an
-    // OVER-declared count could slip through — and NOTHING in the files
-    // records which column they were hashed on, so a wrong declared key
-    // would be pure silent corruption)
-    val sidecar = new Path(loc, BucketSidecar)
-    if (pfs.exists(sidecar)) {
-      val in = pfs.open(sidecar)
-      val raw = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .mkString.trim finally in.close()
-      val tokens = raw.split("\\s+")
-      // a truncated/corrupt sidecar gets the same explanatory failure
-      // as every other attach diagnostic, not a bare NumberFormatException
-      // (`"".split` yields Array(""), so head exists but is not a count)
-      require(tokens.head.nonEmpty && tokens.head.forall(_.isDigit),
-        s"attach($table): sidecar $sidecar is corrupt — expected " +
-          s"`<bucketCount> <key>`, found `$raw`; re-stage the layout " +
-          "(toBucketedTable rewrites the sidecar)")
-      val staged = tokens.head.toInt
-      require(staged == buckets,
-        s"attach($table): declared $buckets buckets but $path was staged " +
-          s"with $staged (sidecar $BucketSidecar) — attach with the staged count")
-      if (tokens.length > 1) require(tokens(1).equalsIgnoreCase(key),
-        s"attach($table): declared bucket key `$key` but $path was staged " +
-          s"hashed on `${tokens(1)}` (sidecar $BucketSidecar) — bucket " +
-          "membership is physical; attach with the staged key")
+    val sidecar = new Path(path, BucketSidecar)
+    val raw = GraftFiles.read(spark, sidecar).getOrElse(throw new IllegalArgumentException(
+      s"attach($table): no $BucketSidecar under $path — nothing proves its bucket " +
+        "count and key; re-stage the layout (toBucketedTable writes the sidecar)")).trim
+    val (staged, stagedKey) = raw.split("\\s+") match {
+      case Array(n, k) if n.forall(_.isDigit) => (n.toInt, k)
+      case _ => throw new IllegalArgumentException(s"attach($table): sidecar $sidecar is " +
+        s"corrupt — expected `<bucketCount> <key>`, found `$raw`; re-stage the layout " +
+        "(toBucketedTable rewrites the sidecar)")
     }
+    require(staged == buckets,
+      s"attach($table): declared $buckets buckets but $path was staged " +
+        s"with $staged (sidecar $BucketSidecar) — attach with the staged count")
+    require(stagedKey.equalsIgnoreCase(key),
+      s"attach($table): declared bucket key `$key` but $path was staged " +
+        s"hashed on `$stagedKey` (sidecar $BucketSidecar) — bucket " +
+        "membership is physical; attach with the staged key")
     val schema = FileSchemas.read(spark, Seq(path)).schema.toDDL
     val sortClause = if (sorted) s"SORTED BY (`$key` ASC) " else ""
     spark.sql(
@@ -292,9 +273,7 @@ object TabularWriter {
   /** Asserts every bucket of `table` is one data file — the physical
     * precondition for the scan to report its per-bucket sort order. */
   private[graft] def assertOneFilePerBucket(spark: SparkSession, table: String): Unit = {
-    import org.apache.spark.sql.catalyst.TableIdentifier
-    val ids = bucketIds(spark, new Path(spark.sessionState.catalog
-      .getTableMetadata(TableIdentifier(table)).location))
+    val ids = bucketIds(spark, GraftFiles.locationOf(spark, table))
     val dup = ids.groupBy(identity).collect { case (id, fs) if fs.length > 1 => id }
     require(dup.isEmpty,
       s"toBucketedTable($table): bucket(s) ${dup.toSeq.sorted.mkString(",")} have " +

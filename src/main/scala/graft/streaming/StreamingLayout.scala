@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.sources.TabularWriter
+import graft.sources.{GraftFiles, TabularWriter}
 
 /** Continuous ingest into a bucketed layout.
   *
@@ -80,11 +80,9 @@ object StreamingLayout {
       commitDir: String, compactEvery: Int): Unit = {
     val spark = batch.sparkSession
     val marker = new Path(commitDir, f"batch-$batchId%020d")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
+    if (!GraftFiles.exists(spark, marker)) {
       if (!batch.isEmpty) TabularWriter.appendToBucketedTable(batch, table)
-      fs.mkdirs(marker.getParent)
-      fs.create(marker, true).close()
+      GraftFiles.write(spark, marker, "")
     }
     if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
       TabularWriter.compactBuckets(spark, table)

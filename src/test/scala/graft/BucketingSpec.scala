@@ -193,8 +193,7 @@ class BucketingSpec extends GraftSpec {
       // different declared count would make every co-located plan skip
       // its exchange over rows that are not where the spec claims —
       // silently wrong results. Both directions must fail loudly:
-      // under-declared is caught by the files' own bucket ids,
-      // over-declared by the writer's _graft_buckets sidecar.
+      // the writer's _graft_buckets sidecar proves the staged count.
       for (wrong <- Seq(2, 8)) {
         val e = intercept[IllegalArgumentException] {
           TabularWriter.attach(spark, "att_wrong", loc, "l_orderkey", buckets = wrong)
@@ -222,6 +221,16 @@ class BucketingSpec extends GraftSpec {
             e.getMessage.contains("re-stage"), e.getMessage)
           spark.sql("DROP TABLE IF EXISTS att_corrupt")
         }
+      } finally java.nio.file.Files.write(sidecarPath, saved)
+      // no sidecar at all: nothing proves the count or the key, so an
+      // over-declared count would slip through — refused, naming it
+      java.nio.file.Files.delete(sidecarPath)
+      try {
+        val e = intercept[IllegalArgumentException] {
+          TabularWriter.attach(spark, "att_corrupt", loc, "l_orderkey", buckets = 8)
+        }
+        assert(e.getMessage.contains(TabularWriter.BucketSidecar), e.getMessage)
+        assert(!spark.catalog.tableExists("att_corrupt"))
       } finally java.nio.file.Files.write(sidecarPath, saved)
       TabularWriter.attach(spark, "att_ext", loc, "l_orderkey", buckets = 4)
     } finally {

@@ -1,12 +1,10 @@
 package graft
 
-import java.io.File
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{ConcurrentHashMap, TimeUnit}
 
 import graft.operators.{DedupClusters, Graph}
 import org.apache.spark.SparkContext
-import org.apache.spark.launcher.JavaModuleOptions
 import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
@@ -21,9 +19,10 @@ import scala.jdk.CollectionConverters._
   * (`GraftSession.local` is getOrCreate). [[run]] launches [[main]] in a
   * child JVM; each check prints one `RESULT <name> <verdict>` line. */
 object MaterializeChild {
+  import ChildJvm.report
 
-  /** Runs `mode` on `master` in a child JVM on this JVM's classpath,
-    * in a temporary working directory (where Spark's default warehouse
+  /** Runs `mode` on `master` in a child JVM ([[ChildJvm]]), in a
+    * temporary working directory (where Spark's default warehouse
     * lands) with a temporary checkpoint directory and SPARK_HOME, all
     * deleted afterwards. Returns the RESULT verdicts by name and the
     * child's whole output, for the failure message. */
@@ -37,25 +36,10 @@ object MaterializeChild {
     try {
       Files.createSymbolicLink(jars, Paths.get(
         classOf[SparkContext].getProtectionDomain.getCodeSource.getLocation.toURI).getParent)
-      val log = tmp.resolve("child.log")
-      val cp = System.getProperty("java.class.path").split(File.pathSeparator)
-        .map(Paths.get(_).toAbsolutePath.toString).mkString(File.pathSeparator)
-      val cmd = Seq(Paths.get(System.getProperty("java.home"), "bin", "java").toString) ++
-        JavaModuleOptions.defaultModuleOptionArray() ++
-        Seq("-Xmx1g", "-cp", cp, "graft.MaterializeChild", mode, master,
-          tmp.resolve("checkpoints").toString)
-      val pb = new ProcessBuilder(cmd: _*).directory(tmp.toFile)
-        .redirectErrorStream(true).redirectOutput(log.toFile)
-      pb.environment().put("SPARK_HOME", home.toString)
-      pb.environment().put("SPARK_SCALA_VERSION", scala.util.Properties.versionNumberString
-        .split('.').take(2).mkString("."))
-      val p = pb.start()
-      if (!p.waitFor(10, TimeUnit.MINUTES)) { p.destroyForcibly(); p.waitFor() }
-      val out = Files.readString(log)
-      val results = out.linesIterator.map(_.split(" ", 3)).collect {
-        case Array("RESULT", name, verdict) => name -> verdict
-      }.toMap
-      (results, out)
+      ChildJvm.run("graft.MaterializeChild",
+        Seq(mode, master, tmp.resolve("checkpoints").toString), tmp,
+        Map("SPARK_HOME" -> home.toString, "SPARK_SCALA_VERSION" ->
+          scala.util.Properties.versionNumberString.split('.').take(2).mkString(".")))
     } finally {
       Files.deleteIfExists(jars) // the link only, never the jars it points to
       GateFixtures.deleteRecursively(tmp)
@@ -75,8 +59,6 @@ object MaterializeChild {
       case "loss" => loss(spark, checkpointDir)
     } finally spark.stop()
   }
-
-  private def report(name: String, verdict: String): Unit = println(s"RESULT $name $verdict")
 
   /** Chains of 50 ids, so the component of `id` is `id - id % 50`. */
   private def components(spark: SparkSession): DataFrame =

@@ -303,6 +303,8 @@ class MaterializedAggSpec extends GraftSpec {
       val junk = saved.split("\n").toSeq
         .map(l => if (l.startsWith("measure\t")) "measure\tm_broken" else l)
       java.nio.file.Files.write(sidecar, junk.mkString("", "\n", "\n").getBytes("UTF-8"))
+      // written behind Hadoop's back: drop the .crc the local FS would check
+      java.nio.file.Files.deleteIfExists(sidecar.resolveSibling(s".${sidecar.getFileName}.crc"))
       val e = intercept[IllegalArgumentException] {
         MaterializedAggs.attachRollup(spark, advisedSpec, name2, aside.toString)
       }
@@ -321,8 +323,7 @@ class MaterializedAggSpec extends GraftSpec {
   }
 
   test("stats: the rollup's key is recorded ≈unique, blocking useless pre-aggs") {
-    val wh = graft.plans.TableStats.warehouseOf(spark)
-    val st = graft.plans.TableStats.lookup(wh, meta.catalogTable)
+    val st = graft.plans.TableStats.lookup(spark, meta.catalogTable)
     assert(st.exists(_.uniqueish(meta.keys.head)),
       s"stageRollup must record key uniqueness: $st")
   }
@@ -510,7 +511,7 @@ class MaterializedAggSpec extends GraftSpec {
       assert(staged.size === 1 && staged.head.bucketedScan,
         s"the staged rollup must be read as a bucketed scan:\n$plan")
       // the stats recorded from that write are what a re-scan measures
-      val recorded = graft.plans.TableStats.lookup(graft.plans.TableStats.warehouseOf(spark), name)
+      val recorded = graft.plans.TableStats.lookup(spark, name)
       val measured = graft.plans.TableStats.analyze(spark, spark.table(name), name, m.keys)
       assert(recorded === Some(measured))
       assert(measured.fingerprint.isDefined && measured.ndv.keySet === m.keys.toSet)

@@ -469,6 +469,8 @@ class MaterializedJoinSpec extends GraftSpec {
       for (junk <- Seq(lines.filterNot(_.startsWith("finite\t")),
           lines.map(l => if (l.startsWith("dim\t")) "dim\torders\tl_orderkey" else l))) {
         java.nio.file.Files.write(sidecar, junk.mkString("", "\n", "\n").getBytes("UTF-8"))
+        // written behind Hadoop's back: drop the .crc the local FS would check
+        java.nio.file.Files.deleteIfExists(sidecar.resolveSibling(s".${sidecar.getFileName}.crc"))
         val e = intercept[IllegalArgumentException] {
           MaterializedJoins.attachDenorm(spark, spec, name + "2", aside.toString)
         }

@@ -363,20 +363,7 @@ class GraftObjectStoreFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getScheme: String = "graftoss"
   override def getUri: java.net.URI = java.net.URI.create("graftoss:///")
 
-  override def rename(src: Path, dst: Path): Boolean = {
-    GraftObjectStoreFs.renames.incrementAndGet()
-    if (!exists(src)) return false
-    val st = getFileStatus(src)
-    if (st.isDirectory) {
-      if (exists(dst) && getFileStatus(dst).isFile) return false
-      mkdirs(dst)
-      val ok = listStatus(src).forall(s => rename(s.getPath, new Path(dst, s.getPath.getName)))
-      ok && delete(src, true)
-    } else {
-      org.apache.hadoop.fs.FileUtil.copy(this, src, this, dst,
-        /*deleteSource=*/ true, /*overwrite=*/ true, getConf)
-    }
-  }
+  override def rename(src: Path, dst: Path): Boolean = GraftObjectStoreFs.rename(this, src, dst)
 
   override def append(f: Path, bufferSize: Int,
       progress: org.apache.hadoop.util.Progressable): org.apache.hadoop.fs.FSDataOutputStream =
@@ -384,5 +371,23 @@ class GraftObjectStoreFs extends org.apache.hadoop.fs.RawLocalFileSystem {
 }
 
 object GraftObjectStoreFs {
+  import org.apache.hadoop.fs.{FileSystem, Path}
+
   val renames = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** `fs.rename` as an object store does it: a file is copied and then
+    * deleted, a directory renamed one contained object at a time. */
+  def rename(fs: FileSystem, src: Path, dst: Path): Boolean = {
+    renames.incrementAndGet()
+    if (!fs.exists(src)) return false
+    if (fs.getFileStatus(src).isDirectory) {
+      if (fs.exists(dst) && fs.getFileStatus(dst).isFile) return false
+      fs.mkdirs(dst)
+      val ok = fs.listStatus(src).forall(s => fs.rename(s.getPath, new Path(dst, s.getPath.getName)))
+      ok && fs.delete(src, true)
+    } else {
+      org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst,
+        /*deleteSource=*/ true, /*overwrite=*/ true, fs.getConf)
+    }
+  }
 }

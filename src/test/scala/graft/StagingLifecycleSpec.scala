@@ -4,10 +4,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** How a staged catalog table is created, replaced and re-attached
   * lives in `sources.TabularWriter` (the rename-aside swap, the
-  * stale-location clear) and `plans.Freshness` (the layout record and
-  * the one attach). A second hand-written swap, warehouse-path
-  * computation or layout sidecar must show up here as a failing spec,
-  * not as one more copy of the lifecycle. */
+  * stale-location clear), `sources.GraftFiles` (a table's location and
+  * graft's own small files there) and `plans.Freshness` (the layout
+  * record and the one attach). A second hand-written swap,
+  * warehouse-path computation or layout sidecar must show up here as a
+  * failing spec, not as one more copy of the lifecycle; and the
+  * lifecycle must run with the warehouse off local disk. */
 class StagingLifecycleSpec extends AnyFunSuite {
 
   test("RENAME TO appears only in TabularWriter.scala under src/main") {
@@ -48,5 +50,64 @@ class StagingLifecycleSpec extends AnyFunSuite {
     val found = SourceGuard.hits("spark.sql.warehouse.dir", Set("StagingLifecycleSpec.scala"),
       java.nio.file.Paths.get("src", "test"))
     assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("graft's own files go through Hadoop FS: no java.nio.file under plans/ or sources/") {
+    val found = Seq("plans", "sources").flatMap(d => SourceGuard.hits("java.nio.file", Set.empty,
+      java.nio.file.Paths.get("src", "main", "scala", "graft", d)))
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("a table location keeps its scheme: location.getPath appears nowhere under src/main") {
+    val found = SourceGuard.hits("location.getPath", Set.empty)
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  /** Stages a bucketed projection and a rollup in one child JVM and
+    * attaches, appends to, refreshes, compacts and crash-recovers them
+    * in a second ([[LifecycleChild]]), with the base data and the
+    * warehouse on `fs`, a [[GraftRootedFs]] stored under a temporary
+    * root. */
+  private def offLocalDisk(fs: Class[_ <: GraftRootedFs]): Unit = {
+    import java.nio.file.{Files, Paths}
+    val tmp = Files.createTempDirectory("graft_offlocal")
+    try {
+      val (store, work) = (Files.createDirectory(tmp.resolve("store")),
+        Files.createDirectory(tmp.resolve("work")))
+      // the top directory on the test FS: its local namesake must stay absent
+      val top = "/" + tmp.getFileName
+      val scheme = GraftRootedFs.Scheme
+      val conf = Seq(s"spark.hadoop.fs.$scheme.impl=${fs.getName}",
+        s"spark.hadoop.fs.$scheme.root=$store",
+        s"spark.sql.warehouse.dir=$scheme:$top/warehouse").mkString(";")
+      def step(name: String, expected: (String, String)*): Unit = {
+        val (results, out) = ChildJvm.run("graft.LifecycleChild",
+          Seq(name, s"$scheme:$top/fact"), work, Map("SPARK_GRAFT_CONF" -> conf))
+        withClue(out.linesIterator.filterNot(l => l.contains(" WARN ") || l.trim.startsWith("at "))
+            .toSeq.takeRight(40)
+            .mkString("\n", "\n", "\n")) {
+          assert(results === expected.toMap)
+        }
+      }
+      step("stage", "staged" -> "ok")
+      step("serve", "stats" -> "read", "attached" -> "equal", "refreshed" -> "equal",
+        "bucketed" -> "equal", "crash" -> "crashed", "crash-attach" -> "refused",
+        "recovered" -> "equal")
+      // everything landed under the FS's own root: nothing at the local
+      // path of the same name, nothing relative to the working directory
+      assert(!Files.exists(Paths.get(top)), s"$top written on local disk")
+      assert(work.toFile.list().isEmpty, work.toFile.list().mkString(", "))
+      for (f <- Seq("warehouse/_graft_stats", "warehouse/lc_rollup/_graft_layout",
+          "warehouse/lc_bucketed/_graft_buckets"))
+        assert(Files.exists(store.resolve(top.drop(1)).resolve(f)), f)
+    } finally GateFixtures.deleteRecursively(tmp)
+  }
+
+  test("the staging lifecycle runs with the warehouse off local disk (atomic rename)") {
+    offLocalDisk(classOf[GraftRootedFs])
+  }
+
+  test("the staging lifecycle runs with the warehouse off local disk (copy-then-delete rename)") {
+    offLocalDisk(classOf[GraftRootedObjectStoreFs])
   }
 }

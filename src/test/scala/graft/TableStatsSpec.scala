@@ -30,12 +30,11 @@ class TableStatsSpec extends GraftSpec {
       // the registry file survives an in-process cache flush (the
       // fresh-JVM persistence path)
       TableStats.invalidateCache()
-      val wh = TableStats.warehouseOf(spark)
-      val back = TableStats.lookup(wh, dir)
+      val back = TableStats.lookup(spark, dir)
       assert(back === Some(st.copy(key = dir)))
       // alias: the staged-table identity carries the same measurement
-      TableStats.alias(wh, st, "ts_spec_alias")
-      assert(TableStats.lookup(wh, "ts_spec_alias").exists(_.rowCount === 2000L))
+      TableStats.alias(spark, st, "ts_spec_alias")
+      assert(TableStats.lookup(spark, "ts_spec_alias").exists(_.rowCount === 2000L))
       // analyzePathIfMissing: cached identity is NOT re-scanned, but a
       // widened column set is
       val again = TableStats.analyzePathIfMissing(spark, dir, Seq("uid"))
@@ -56,8 +55,10 @@ class TableStatsSpec extends GraftSpec {
     val f = dir.resolve(s"$digest.stats")
     try {
       java.nio.file.Files.write(f, "rows not-a-number\nndv broken".getBytes("UTF-8"))
+      // written behind Hadoop's back: drop any .crc the local FS would check
+      java.nio.file.Files.deleteIfExists(dir.resolve(s".$digest.stats.crc"))
       TableStats.invalidateCache()
-      assert(TableStats.lookup(wh, key) === None)
+      assert(TableStats.lookup(spark, key) === None)
     } finally {
       java.nio.file.Files.deleteIfExists(f)
       TableStats.invalidateCache()
@@ -122,16 +123,15 @@ class TableStatsSpec extends GraftSpec {
     try {
       val dir = root.resolve("t.parquet").toString
       (1L to 50L).map(i => (i, i % 3)).toDF("id", "c").write.parquet(dir)
-      val wh = TableStats.warehouseOf(spark)
       val st = TableStats.analyze(spark, spark.read.parquet(dir), dir, Seq("id"))
       assert(st.fingerprint.nonEmpty, "path analyze must fingerprint")
       TableStats.invalidateCache()
-      assert(TableStats.lookup(wh, dir).flatMap(_.fingerprint) === st.fingerprint,
+      assert(TableStats.lookup(spark, dir).flatMap(_.fingerprint) === st.fingerprint,
         "fingerprint must persist through the registry file")
       assert(st.fingerprint ===
         Some(graft.plans.Freshness.ofPath(spark, dir)), "fp = live inventory")
-      TableStats.alias(wh, st, "ts_fp_alias")
-      assert(TableStats.lookup(wh, "ts_fp_alias").exists(_.fingerprint.isEmpty),
+      TableStats.alias(spark, st, "ts_fp_alias")
+      assert(TableStats.lookup(spark, "ts_fp_alias").exists(_.fingerprint.isEmpty),
         "an aliased (staged-copy) identity must stay unchecked")
     } finally GateFixtures.deleteRecursively(root)
   }

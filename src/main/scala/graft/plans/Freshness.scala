@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.datasources.FileIndex
   * layout records about its advice and its base, how a fresh JVM
   * re-attaches it, and when a live base refuses it. Which files make up
   * a base, and its fingerprint, are [[graft.sources.FileSchemas]]' one
-  * inventory.
+  * answer, listed by Spark's own file index.
   *
   * A staged layout (bucketed projection, derived-cents table,
   * materialized join, aggregate rollup) is a PHYSICAL copy of its base
@@ -58,25 +58,15 @@ import org.apache.spark.sql.execution.datasources.FileIndex
   */
 object Freshness {
 
-  /** Inventory entries of the single file scan under `df`'s analyzed
-    * plan, from its FileIndex (None when the plan has no or several
-    * file leaves). */
-  def leafEntries(df: DataFrame): Option[Seq[FileSchemas.Entry]] =
-    df.queryExecution.analyzed.collect { case FileLeaf(_, fs, _) => fs.location } match {
-      case Seq(loc) => Some(FileSchemas.entriesOf(loc))
-      case _ => None
-    }
-
   /** Fingerprint of a live FileIndex. */
   def ofIndex(idx: FileIndex): String = FileSchemas.fingerprint(FileSchemas.entriesOf(idx))
 
   /** Fingerprint of the files under `path` (comma-joined roots — the
-    * path of a layout record's base line): one listing, no job. A missing
-    * base fingerprints as the empty file set, which matches no
-    * recorded base. */
+    * path of a layout record's base line): one listing, no job below
+    * Spark's parallel-listing threshold. A missing base fingerprints as
+    * the empty file set, which matches no recorded base. */
   def ofPath(spark: SparkSession, path: String): String =
-    FileSchemas.fingerprint(FileSchemas.inventory(spark, path.split(',').toIndexedSeq)
-      .toSeq.flatMap(_.entries))
+    FileSchemas.fingerprint(FileSchemas.list(spark, path.split(',').toIndexedSeq))
 
   /** The record file a staged layout writes beside its files. */
   val RecordFile = "_graft_layout"
@@ -117,7 +107,7 @@ object Freshness {
   /** The `base` entry of member `path` as the staging frame `df` read
     * it: the fingerprint of its scan's FileIndex, not a second listing. */
   def base(path: String, df: DataFrame): (String, String) =
-    path -> FileSchemas.fingerprint(leafEntries(df).getOrElse(
+    path -> FileSchemas.fingerprint(FileSchemas.leafEntries(df).getOrElse(
       sys.error(s"Freshness.base: $path is not one file scan")))
 
   /** Write catalog table `table`'s record beside its files (at

@@ -18,8 +18,13 @@ import org.apache.spark.sql.SparkSession
 private[graft] final class LayoutState {
   /** (data dir, table name) → the staged catalog table serving it. */
   val redirects = new ConcurrentHashMap[(String, String), String]()
-  /** (kind, catalog table) → its registration. */
-  private[plans] val layouts = new ConcurrentHashMap[(LayoutRegistry, String), Registered[_]]()
+  /** (kind, catalog table) → its registered meta. */
+  private[plans] val layouts = new ConcurrentHashMap[(LayoutRegistry, String), Any]()
+  /** Rollup catalog table → the meta last parsed for it and its parsed
+    * measures ([[RewriteMaterializedAgg]]), kept across registrations
+    * while the meta is equal (a refresh's new fingerprint re-parses). */
+  private[plans] val parsed =
+    new ConcurrentHashMap[String, (MaterializedAggs.Meta, MaterializedAggs.Parsed)]()
   /** Tags whose freshness decline was already logged. */
   private[plans] val warned = ConcurrentHashMap.newKeySet[String]()
 }
@@ -30,12 +35,6 @@ private[graft] object LayoutState {
 
   def apply(spark: SparkSession): LayoutState =
     states.computeIfAbsent(spark.sparkContext, _ => new LayoutState)
-}
-
-/** One registration of `meta`, with a rollup's measures once
-  * [[RewriteMaterializedAgg]] parsed them (a refresh re-registers). */
-private[plans] final class Registered[M](val meta: M) {
-  @volatile var parsed: Option[MaterializedAggs.Parsed] = None
 }
 
 /** What every staged-layout kind ([[MaterializedJoins]],
@@ -54,18 +53,17 @@ private[plans] trait LayoutRegistry {
     Freshness.recordAt(spark, graft.sources.GraftFiles.locationOf(spark, catalogTable).toString))
 
   def register(spark: SparkSession, meta: Meta): Unit =
-    LayoutState(spark).layouts.put((this, tableOf(meta)), new Registered(meta))
+    LayoutState(spark).layouts.put((this, tableOf(meta)), meta)
   def deregister(spark: SparkSession, catalogTable: String): Unit =
     LayoutState(spark).layouts.remove((this, catalogTable))
 
   /** This kind's registrations in `spark`'s state, by catalog table. */
-  private[plans] def registered(spark: SparkSession): Seq[Registered[Meta]] = {
+  def all(spark: SparkSession): Seq[Meta] = {
     import scala.jdk.CollectionConverters._
     LayoutState(spark).layouts.asScala.toSeq.collect {
-      case ((kind, _), r) if kind eq this => r.asInstanceOf[Registered[Meta]]
-    }.sortBy(r => tableOf(r.meta))
+      case ((kind, _), m) if kind eq this => m.asInstanceOf[Meta]
+    }.sortBy(tableOf)
   }
-  def all(spark: SparkSession): Seq[Meta] = registered(spark).map(_.meta)
 
   private[plans] def enabled(conf: org.apache.spark.sql.internal.SQLConf): Boolean =
     conf.getConfString(flag, "true") == "true"

@@ -118,7 +118,7 @@ object MaterializedAggs extends LayoutRegistry with PredicateHelper {
   protected val flag = "spark.graft.materializedAgg.enabled"
 
   /** A rollup's measures as [[RewriteMaterializedAgg]] matches them,
-    * parsed once per registration ([[Registered]]): `plain` maps a
+    * parsed once per meta ([[LayoutState]]): `plain` maps a
     * canonical aggregate expression to its measure column; `conds` pairs
     * normalized conjunct SETS with their conditional-count column. */
   private[plans] final case class Parsed(plain: Map[Expression, String],
@@ -175,7 +175,7 @@ object MaterializedAggs extends LayoutRegistry with PredicateHelper {
       name: String): Meta = withRuleOff(spark) {
     import org.apache.spark.sql.functions.{col, expr}
     val fact = FileSchemas.read(spark, spec.factPath.split(',').toIndexedSeq)
-    val inventory = Freshness.leafEntries(fact).getOrElse(
+    val inventory = FileSchemas.leafEntries(fact).getOrElse(
       sys.error(s"stageRollup($name): ${spec.factPath} is not one file scan"))
     val aggs = spec.measures.map(m => expr(m.agg).as(m.name))
     require(aggs.nonEmpty, s"stageRollup($name): no measures advised")
@@ -261,7 +261,7 @@ object MaterializedAggs extends LayoutRegistry with PredicateHelper {
       s"refreshRollup(${meta.catalogTable}): no layout record of its file " +
         "inventory — re-stage")
     val factDf = FileSchemas.read(spark, meta.factPath.split(',').toIndexedSeq)
-    val live = Freshness.leafEntries(factDf).getOrElse(sys.error(
+    val live = FileSchemas.leafEntries(factDf).getOrElse(sys.error(
       s"refreshRollup(${meta.catalogTable}): ${meta.factPath} is not one file scan"))
     if (staged == live.toSet) return meta // fresh — no-op
     val missing = staged -- live
@@ -442,10 +442,11 @@ case class RewriteMaterializedAgg(spark: SparkSession) extends Rule[LogicalPlan]
 
   import MaterializedAggs._
 
-  /** `r`'s measures, parsed + optimized + normalized on first use and
-    * kept with the registration (parsing costs an analyzer run). */
-  private def parsed(r: Registered[Meta]): Parsed = r.parsed.getOrElse {
-    val m = r.meta
+  /** `m`'s measures, parsed + optimized + normalized on first use and
+    * kept in the context's [[LayoutState]] while the table's meta is
+    * equal (parsing costs analyzer and optimizer runs). */
+  private def parsed(m: Meta): Parsed = Option(LayoutState(spark).parsed.get(m.catalogTable))
+      .collect { case (`m`, p) => p }.getOrElse {
     inParse.set(java.lang.Boolean.TRUE)
     val p = try {
       val df = FileSchemas.read(spark, m.factPath.split(',').toIndexedSeq)
@@ -490,15 +491,15 @@ case class RewriteMaterializedAgg(spark: SparkSession) extends Rule[LogicalPlan]
     } catch {
       case scala.util.control.NonFatal(e) =>
         System.err.println(s"[rollup] ${m.catalogTable}: measure parse failed " +
-          s"(${e.getMessage.take(120)}) — rollup unusable until registered again")
+          s"(${e.getMessage.take(120)}) — rollup unusable until its meta changes")
         Parsed(Map.empty, Nil)
     } finally inParse.set(java.lang.Boolean.FALSE)
-    r.parsed = Some(p)
+    LayoutState(spark).parsed.put(m.catalogTable, (m, p))
     p
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    val registered = MaterializedAggs.registered(spark)
+    val registered = MaterializedAggs.all(spark)
     if (registered.isEmpty || !MaterializedAggs.enabled(conf) || inParse.get())
       return plan
     plan.transformDown {
@@ -563,8 +564,7 @@ case class RewriteMaterializedAgg(spark: SparkSession) extends Rule[LogicalPlan]
 
   /** Serve `agg` from rollup `m` (shapes 1/1b of the contract, plus
     * the DISTINCT-over-filtered-fact variant of shape 2). */
-  private def tryServe(agg: Aggregate, r: Registered[Meta]): Option[LogicalPlan] = {
-    val m = r.meta
+  private def tryServe(agg: Aggregate, m: Meta): Option[LogicalPlan] = {
     val peeled = servedFact(agg.child, m).getOrElse(return None)
     val nameOf = peeled.nameOf
     val keySet = m.keys.toSet
@@ -582,7 +582,7 @@ case class RewriteMaterializedAgg(spark: SparkSession) extends Rule[LogicalPlan]
     if (!groupings.forall(isKeyAttr)) return None
     val groupNames = groupings.flatMap(keyNameOf)
 
-    val p = parsed(r)
+    val p = parsed(m)
     val (keyOnly, rest) = splitKeyFilters(peeledG, keySet)
 
     def applyKeyFilters(scan: LogicalPlan, byName: Map[String, Attribute]) =
@@ -717,8 +717,7 @@ case class RewriteMaterializedAgg(spark: SparkSession) extends Rule[LogicalPlan]
     * qualifying key set. Probe columns may be any SUBSET of a composite
     * key: the projected key set then carries duplicates, which
     * semi/anti join semantics tolerate (they only test existence). */
-  private def trySemiServe(j: Join, r: Registered[Meta]): Option[LogicalPlan] = {
-    val m = r.meta
+  private def trySemiServe(j: Join, m: Meta): Option[LogicalPlan] = {
     val cond = j.condition.getOrElse(return None)
     if (!cond.deterministic) return None
     val peeled = servedFact(j.right, m).getOrElse(return None)
@@ -729,7 +728,7 @@ case class RewriteMaterializedAgg(spark: SparkSession) extends Rule[LogicalPlan]
     val keySet = m.keys.toSet
     val refKey: Map[Attribute, String] = rightRefs.map(a =>
       a -> peeled.keyOf(inline(a, peeled.subst), keySet).getOrElse(return None)).toMap
-    val p = parsed(r)
+    val p = parsed(m)
     val (keyOnly, rest) = splitKeyFilters(peeled, keySet)
     keySetScan(m, p, peeled, rest).map { case (scan, byName) =>
       // key-only probe filters (inferred isnotnull(key), user key

@@ -8,7 +8,6 @@ import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, JoinHint, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.LogicalRelation
-import org.apache.spark.sql.types.LongType
 
 /** MATERIALIZED JOIN PROJECTIONS — the pre-joined (denormalized) star
   * as a staged layout, served by an exact optimizer rewrite.
@@ -512,9 +511,10 @@ case class RewriteMaterializedJoin(spark: SparkSession) extends Rule[LogicalPlan
 
   /** Rewrite `cast(round(x*100) as bigint)` / `cast(x as decimal(p,2))`
     * over substituted source attributes to the carried stored-cents
-    * attributes — the same shared matchers [[RewriteStoredCents]] uses
-    * (that rule runs at post-hoc resolution and never sees this plan
-    * shape). Pure-column pruning Projects between the new scan and the
+    * attributes through [[RewriteStoredCents.rewriteMoney]], the rule's
+    * own rewrite (the rule runs at post-hoc resolution and never sees
+    * this plan shape), tracking which cents attributes it used.
+    * Pure-column pruning Projects between the new scan and the
     * idiom are widened to forward the cents attribute; if any usage
     * still fails to resolve (an unexpected blocker), the whole cents
     * pass is abandoned and the join substitution alone is kept. */
@@ -522,23 +522,9 @@ case class RewriteMaterializedJoin(spark: SparkSession) extends Rule[LogicalPlan
       centsMap: Map[Long, (Attribute, Boolean)]): LogicalPlan = {
     if (centsMap.isEmpty) return plan
     val used = scala.collection.mutable.Set.empty[Attribute]
-    val rewritten = plan.transformUp {
-      case n if n.children.nonEmpty =>
-        n.transformExpressionsUp {
-          case c: Cast if c.dataType == LongType =>
-            RewriteStoredCents.centsIdiom(c)
-              .flatMap(a => centsMap.get(a.exprId.id))
-              .map { case (cents, _) => used += cents; cents }
-              .getOrElse(c)
-          case c: Cast =>
-            RewriteStoredCents.decimalIdiom(c)
-              .flatMap { case (a, p) =>
-                centsMap.get(a.exprId.id).collect {
-                  case (cents, true) => used += cents; MakeDecimal(cents, p, 2)
-                }
-              }
-              .getOrElse(c)
-        }
+    val rewritten = RewriteStoredCents.rewriteMoney(plan, centsMap) { (_, cents) =>
+      used += cents
+      true
     }
     if (used.isEmpty) return plan
     val widened = rewritten.transformUp {

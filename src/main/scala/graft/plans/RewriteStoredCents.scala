@@ -143,11 +143,34 @@ object RewriteStoredCents extends Rule[LogicalPlan] {
   private[plans] def moneyIdiom(e: Expression): Option[AttributeReference] =
     centsIdiom(e).orElse(decimalIdiom(e).map(_._1))
 
+  /** Rewrite every money idiom in `plan` over an attribute `stored` maps
+    * (by exprId) to its stored cents attribute and finite flag: the
+    * long-cents idiom to the cents attribute, the decimal idiom to
+    * `MakeDecimal(cents, p, 2)` when the column is finite. `keep(n,
+    * cents)` decides each rewrite at node `n`. */
+  private[plans] def rewriteMoney(plan: LogicalPlan, stored: Map[Long, (Attribute, Boolean)])(
+      keep: (LogicalPlan, Attribute) => Boolean): LogicalPlan =
+    plan.transformUp {
+      case n if n.children.nonEmpty =>
+        def cents(a: AttributeReference, finiteOnly: Boolean): Option[Attribute] =
+          stored.get(a.exprId.id).collect {
+            case (c, finite) if (finite || !finiteOnly) && keep(n, c) => c
+          }
+        n.transformExpressionsUp {
+          case c: Cast if c.dataType == LongType =>
+            centsIdiom(c).flatMap(cents(_, finiteOnly = false)).getOrElse(c)
+          case c: Cast =>
+            decimalIdiom(c).flatMap { case (a, p) =>
+              cents(a, finiteOnly = true).map(MakeDecimal(_, p, 2))
+            }.getOrElse(c)
+        }
+    }
+
   override def apply(plan: LogicalPlan): LogicalPlan = {
     // source-attribute exprId -> stored cents attribute, over marked
-    // relations only; finite = the subset verified NaN-free at stage
-    // time (the decimal idiom's precondition)
-    val marks: Seq[(Long, Attribute, Boolean)] = plan.collect {
+    // relations only; finite = verified NaN-free at stage time (the
+    // decimal idiom's precondition)
+    val stored: Map[Long, (Attribute, Boolean)] = plan.collect {
       case lr: LogicalRelation =>
         lr.catalogTable.toSeq.flatMap { ct =>
           val srcs = ct.properties.get(Property).toSeq
@@ -159,32 +182,11 @@ object RewriteStoredCents extends Rule[LogicalPlan] {
             for {
               src <- byName.get(s)
               cents <- byName.get(s + "_cents") if cents.dataType == LongType
-            } yield (src.exprId.id, cents, finite(s))
+            } yield src.exprId.id -> (cents, finite(s))
           }
         }
-    }.flatten
-    val centsFor: Map[Long, Attribute] = marks.map(m => m._1 -> m._2).toMap
-    val finiteIds: Set[Long] = marks.collect { case (id, _, true) => id }.toSet
-    if (centsFor.isEmpty) return plan
-    plan.transformUp {
-      case n if n.children.nonEmpty =>
-        val inScope = n.children.flatMap(_.output).map(_.exprId.id).toSet
-        n.transformExpressionsUp {
-          case c: Cast if c.dataType == LongType =>
-            centsIdiom(c)
-              .flatMap(a => centsFor.get(a.exprId.id))
-              .filter(cents => inScope(cents.exprId.id))
-              .getOrElse(c)
-          case c: Cast =>
-            decimalIdiom(c)
-              .filter { case (a, _) => finiteIds(a.exprId.id) }
-              .flatMap { case (a, p) =>
-                centsFor.get(a.exprId.id)
-                  .filter(cents => inScope(cents.exprId.id))
-                  .map(cents => MakeDecimal(cents, p, 2))
-              }
-              .getOrElse(c)
-        }
-    }
+    }.flatten.toMap
+    if (stored.isEmpty) return plan
+    rewriteMoney(plan, stored)((n, cents) => n.children.exists(_.outputSet.contains(cents)))
   }
 }

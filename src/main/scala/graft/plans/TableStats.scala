@@ -137,7 +137,7 @@ object TableStats {
   private def record(spark: SparkSession, key: String, present: Seq[String],
       value: String => Long, measured: DataFrame): Stats = {
     val stats = Stats(key, value(RowsCol), present.map(c => c -> value(c)).toMap,
-      fingerprint = Freshness.leafEntries(measured).map(FileSchemas.fingerprint))
+      fingerprint = FileSchemas.leafEntries(measured).map(FileSchemas.fingerprint))
     persist(spark, stats)
     stats
   }
@@ -147,16 +147,18 @@ object TableStats {
     * the files now under `path`; `refresh` forces re-measurement.
     * Columns missing from an existing record trigger re-analysis so
     * callers can widen the column set, and a record whose fingerprint
-    * no longer matches (the files changed, or an older build recorded
-    * it) is measured again over the same columns. */
+    * no longer matches the read's own index (the files changed, or an
+    * older build recorded it) is measured again over the same columns
+    * by that read: one listing either way. */
   def analyzePathIfMissing(spark: SparkSession, path: String,
       cols: Seq[String], refresh: Boolean = false): Stats = {
+    lazy val df = FileSchemas.read(spark, path.split(',').toIndexedSeq)
+    lazy val live = FileSchemas.leafEntries(df).map(FileSchemas.fingerprint)
     val existing = if (refresh) None else lookup(spark, path)
-    existing.filter(st => st.fingerprint.forall(_ == Freshness.ofPath(spark, path)) &&
-      cols.forall(st.ndv.contains)).getOrElse {
+    existing.filter(st => cols.forall(st.ndv.contains) &&
+      st.fingerprint.forall(fp => live.contains(fp))).getOrElse {
       val merged = existing.map(_.ndv.keys.toSeq).getOrElse(Nil) ++ cols
-      analyze(spark, FileSchemas.read(spark, path.split(',').toIndexedSeq),
-        path, merged.distinct)
+      analyze(spark, df, path, merged.distinct)
     }
   }
 

@@ -1,31 +1,30 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.{FileIndex, PartitioningAwareFileIndex}
-import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation,
+  InMemoryFileIndex, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.types.StructType
 
-/** The engine's one file inventory — which files make up a dataset and
-  * whether they changed — and the schema-inferred Parquet/ORC scans
-  * built on it, with the inference paid once per file set: every
-  * footer-schema read in the engine goes through [[read]].
+/** The engine's one answer to "which files make up a dataset, and did
+  * they change?", and the schema-inferred Parquet/ORC scans built on it,
+  * with the inference paid once per file set: every footer-schema read
+  * in the engine goes through [[read]].
   *
-  * The inventory ([[inventory]], [[entriesOf]], [[fingerprint]]):
+  * Spark's own file index is the only lister. A read's entries are
+  * those of the `InMemoryFileIndex` its relation holds ([[entriesOf]],
+  * no filesystem call); a caller that only lists gets them from a new
+  * index over the qualified roots ([[list]]). Either way a file set is
+  * what Spark would scan:
   *
-  *  - One recursive Hadoop `listStatus` per root, no Spark job. It keeps
-  *    exactly the entries Spark's file index keeps: a listed name Spark
-  *    skips (`Bridge.hiddenName` — `_`/`.`-prefixed names other than
-  *    `_metadata`, `_common_metadata` and `_k=v` directories, and
-  *    `._COPYING_` leftovers) is dropped with everything under it. The
-  *    rule applies only to entries below a root, never to the root's
-  *    own ancestors, so a dataset under `.bench_data/` or a `_staging`
-  *    directory is listed in full. `_SUCCESS`, `.crc` files and graft's
-  *    own `_graft_*` sidecars are therefore not part of a file set.
+  *  - Spark's hidden-name rule applies below each root, never to the
+  *    root's own ancestors, so a dataset under `.bench_data/` or a
+  *    `_staging` directory is listed in full. `_SUCCESS`, `.crc` files
+  *    and graft's own `_graft_*` sidecars are not part of a file set.
+  *  - A missing root lists as the empty set (Spark's index logs a WARN
+  *    for it); above `spark.sql.sources.parallelPartitionDiscovery.threshold`
+  *    directories the index lists in parallel, as it does for a scan.
   *  - Each [[Entry]] is a qualified path, a length and an mtime.
-  *    [[entriesOf]] builds the same entries from a live `FileIndex`'s
-  *    statuses, so a rewrite rule can check a plan's leaf without a
-  *    filesystem call.
   *  - The [[fingerprint]] is the SHA-1 of the sorted `path length mtime`
   *    lines. The mtime is in it: a file rewritten in place under the
   *    same name at the same length is a different file set. Fingerprints
@@ -44,23 +43,26 @@ import org.apache.spark.sql.types.StructType
   *    layout's qualified base path and a user's plain one share an
   *    entry), reader options, and the session's explicitly set confs
   *    that change what inference returns (see [[InferenceConfs]]).
-  *  - Validation: the inventory's fingerprint. Writing a marker, a
-  *    checksum or a sidecar beside the files keeps the hit; a changed
-  *    `_common_metadata` (which inference reads first) misses.
-  *  - Hit: the read with the schema supplied (no job). Miss: the
-  *    uncached read, whose schema replaces the key's entry, so the map
-  *    grows with the number of distinct reads, not with appends.
-  *  - A missing root, an empty listing or a glob path is read uncached
-  *    and stores nothing, so every error stays Spark's own.
-  *
-  * The listing is taken BEFORE the uncached read: files that change
-  * between the two leave a stale fingerprint beside a fresher schema,
-  * which the next read's listing misses on.
+  *  - Order: with an entry for the key, the frame is built first with
+  *    its schema supplied (no job), and the entries of the index Spark
+  *    listed for it are fingerprinted. Equal to the entry's: that frame
+  *    is the read, one listing in all. Different, or the build threw:
+  *    the uncached read. Writing a marker, a checksum or a sidecar
+  *    beside the files keeps the hit; a changed `_common_metadata`
+  *    (which inference reads first) misses.
+  *  - The uncached read's schema replaces the key's entry, with the
+  *    fingerprint of the very index inference ran over, so files that
+  *    change during a read cannot leave a stale fingerprint beside a
+  *    fresher schema. The map grows with the number of distinct reads,
+  *    not with appends.
+  *  - A glob path is read uncached, and a read that lists no file stores
+  *    nothing, so every error stays Spark's own.
   *
   * Reference analog: the interactive-session reuse of *Incremental
   * Based Framework for Efficient Top-K Similarity Search in Interactive
   * Data Analysis Sessions* (EDBT 2020, PAPERS.md) — work a session has
-  * done is reused by its later queries instead of recomputed.
+  * done is reused by its later queries instead of recomputed; here the
+  * listing the scan makes anyway is the one the cache checks.
   */
 object FileSchemas {
 
@@ -83,43 +85,36 @@ object FileSchemas {
       Entry(st.getPath.toString, st.getLen, st.getModificationTime)
   }
 
-  /** A file set: its fully qualified roots and the entries under them. */
-  final case class Inventory(roots: Seq[String], entries: Seq[Entry]) {
-    def fingerprint: String = FileSchemas.fingerprint(entries)
+  /** `paths` qualified on their own filesystems (no filesystem call). */
+  private def qualified(spark: SparkSession, paths: Seq[String],
+      options: Map[String, String]): Seq[Path] = {
+    val conf = spark.sessionState.newHadoopConfWithOptions(options)
+    paths.map { p => val root = new Path(p); root.getFileSystem(conf).makeQualified(root) }
   }
 
-  /** The inventory of `paths`: one `listStatus` per directory below each
-    * root, Spark's hidden-name rule applied below the roots. None when a
-    * path is a glob or a root is missing. */
-  def inventory(spark: SparkSession, paths: Seq[String],
-      options: Map[String, String] = Map.empty): Option[Inventory] = {
-    if (paths.exists(_.exists("{}[]*?\\".contains(_)))) return None
-    val conf = spark.sessionState.newHadoopConfWithOptions(options)
-    // plain `listStatus`, not `listFiles`: its LocatedFileStatus also
-    // loads permissions and block locations, which costs a call per
-    // file and fails on filesystems that wrap the local one
-    def walk(fs: FileSystem, dir: Path): Seq[Entry] =
-      fs.listStatus(dir).toSeq.filterNot(st => Bridge.hiddenName(st.getPath.getName))
-        .flatMap(st => if (st.isDirectory) walk(fs, st.getPath) else Seq(Entry.of(st)))
-    try {
-      val listed = paths.map { p =>
-        val root = new Path(p)
-        val fs = root.getFileSystem(conf)
-        val qualified = fs.makeQualified(root)
-        qualified.toString -> walk(fs, qualified)
-      }
-      Some(Inventory(listed.map(_._1), listed.flatMap(_._2)))
-    } catch { case _: java.io.FileNotFoundException => None }
-  }
+  /** The entries under `paths`, listed by a new Spark file index over
+    * the qualified roots (empty for a missing root or a glob). */
+  def list(spark: SparkSession, paths: Seq[String],
+      options: Map[String, String] = Map.empty): Seq[Entry] =
+    new InMemoryFileIndex(spark, qualified(spark, paths, options), options, None)
+      .allFiles().map(Entry.of)
 
   /** The entries of a live `FileIndex` — for Spark's own indexes, from
     * the statuses it already holds (no filesystem call); any other index
     * lists its root paths. */
   def entriesOf(idx: FileIndex): Seq[Entry] = idx match {
     case p: PartitioningAwareFileIndex => p.allFiles().map(Entry.of)
-    case other => inventory(SparkSession.active, other.rootPaths.map(_.toString))
-      .toSeq.flatMap(_.entries)
+    case other => list(SparkSession.active, other.rootPaths.map(_.toString))
   }
+
+  /** Entries of the single file scan under `df`'s analyzed plan, from its
+    * index (None when the plan has no or several file scans). */
+  def leafEntries(df: DataFrame): Option[Seq[Entry]] =
+    df.queryExecution.analyzed.collect { case lr: LogicalRelation => lr.relation }
+      .collect { case fs: HadoopFsRelation => fs.location } match {
+      case Seq(loc) => Some(entriesOf(loc))
+      case _ => None
+    }
 
   /** SHA-1 of the sorted `path length mtime` lines of `entries`. */
   def fingerprint(entries: Seq[Entry]): String = sha1(entries.map(_.line).sorted.mkString("\n"))
@@ -151,26 +146,28 @@ object FileSchemas {
   private val schemas = new java.util.concurrent.ConcurrentHashMap[Key, Cached]()
 
   /** `spark.read.format(format).options(options).load(paths)`, with the
-    * schema supplied from the cache when the files under `paths` are
-    * listed exactly as when it was inferred. */
+    * schema supplied from the cache when the index Spark lists for the
+    * read holds exactly the files it was inferred from. */
   def read(spark: SparkSession, paths: Seq[String], format: String = "parquet",
       options: Map[String, String] = Map.empty): DataFrame = {
-    val reader = spark.read.format(format).options(options)
-    inventory(spark, paths, options).filter(_.entries.nonEmpty) match {
-      case None => reader.load(paths: _*)
-      case Some(inv) =>
-        val confs = spark.sessionState.conf.getAllConfs.filter { case (k, _) =>
-          InferenceConfs.exists(k.startsWith)
-        }
-        val key = Key(format, inv.roots, options, confs)
-        val fp = inv.fingerprint
-        Option(schemas.get(key)) match {
-          case Some(Cached(`fp`, schema)) => reader.schema(schema).load(paths: _*)
-          case _ =>
-            val df = reader.load(paths: _*)
-            schemas.put(key, Cached(fp, df.schema))
-            df
-        }
+    // a new reader each time: `schema` sets it on the reader it is called on
+    def reader = spark.read.format(format).options(options)
+    if (paths.exists(_.exists("{}[]*?\\".contains(_)))) return reader.load(paths: _*)
+    val confs = spark.sessionState.conf.getAllConfs.filter { case (k, _) =>
+      InferenceConfs.exists(k.startsWith)
+    }
+    val key = Key(format, qualified(spark, paths, options).map(_.toString), options, confs)
+    val hit = Option(schemas.get(key)).flatMap { cached =>
+      try {
+        val df = reader.schema(cached.schema).load(paths: _*)
+        Option.when(leafEntries(df).map(fingerprint).contains(cached.fingerprint))(df)
+      } catch { case scala.util.control.NonFatal(_) => None }
+    }
+    hit.getOrElse {
+      val df = reader.load(paths: _*)
+      leafEntries(df).filter(_.nonEmpty)
+        .foreach(es => schemas.put(key, Cached(fingerprint(es), df.schema)))
+      df
     }
   }
 }

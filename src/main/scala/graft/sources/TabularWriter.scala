@@ -261,12 +261,12 @@ object TabularWriter {
       s"$table is not a bucketed table (use toBucketedTable to create one)"))
   }
 
-  /** Bucket id of every data file of the [[FileSchemas.inventory]] of
+  /** Bucket id of every data file [[FileSchemas.list]] finds under
     * `loc` (ids parsed from the writer's `part-NNNNN-<uuid>_<bucketId>.c000…`
-    * naming; sidecars and markers are not in the inventory). */
+    * naming; sidecars and markers are not in a file set). */
   private def bucketIds(spark: SparkSession, loc: Path): Seq[Int] = {
     val bucketId = "_(\\d{5})\\.".r
-    FileSchemas.inventory(spark, Seq(loc.toString)).toSeq.flatMap(_.entries)
+    FileSchemas.list(spark, Seq(loc.toString))
       .flatMap(e => bucketId.findFirstMatchIn(new Path(e.path).getName).map(_.group(1).toInt))
   }
 
@@ -350,13 +350,13 @@ object TabularWriter {
   def compact(spark: SparkSession, srcDir: String, dstDir: String,
       targetBytes: Long = 128L * 1024 * 1024, shuffle: Boolean = false,
       compression: String = "snappy"): Unit = {
-    // sized from the files the scan reads: the inventory walks
-    // partitioned subdirectories and skips `_temporary`/hidden leftovers
-    // of failed writes, which would size the rewrite from phantom data
-    val bytes = FileSchemas.inventory(spark, Seq(srcDir))
-      .fold(0L)(_.entries.map(_.len).sum)
-    val files = math.max(1, ((bytes + targetBytes - 1) / targetBytes).toInt)
+    // sized from the files the scan reads, from its own index: Spark's
+    // listing walks partitioned subdirectories and skips
+    // `_temporary`/hidden leftovers of failed writes, which would size
+    // the rewrite from phantom data
     val df = FileSchemas.read(spark, Seq(srcDir))
+    val bytes = FileSchemas.leafEntries(df).getOrElse(Nil).map(_.len).sum
+    val files = math.max(1, ((bytes + targetBytes - 1) / targetBytes).toInt)
     // coalesce can only REDUCE partition count; when the target exceeds
     // what the scan yields (few huge input files), fall through to a
     // repartition or the "~targetBytes-sized" contract silently becomes

@@ -22,10 +22,4 @@ object Bridge {
       Some(u.nameParts.last)
     case _ => None
   }
-
-  /** Spark's own file-index rule for a listed name it skips: `_`- and
-    * `.`-prefixed names (except `_metadata`, `_common_metadata` and
-    * `_k=v` partition directories) and `._COPYING_` leftovers. */
-  def hiddenName(name: String): Boolean =
-    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
 }

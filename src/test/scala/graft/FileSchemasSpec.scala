@@ -4,7 +4,7 @@ import graft.sources.{FileSchemas, TabularReader}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, TimestampType}
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
@@ -141,12 +141,56 @@ class FileSchemasSpec extends GraftSpec {
     val names = try walk.iterator().asScala.map(_.getFileName.toString).toSet finally walk.close()
     assert(Set("_SUCCESS", "_graft_layout", "k=1").subsetOf(names) &&
       names.exists(_.endsWith(".crc")), names)
-    val listed = FileSchemas.inventory(s, Seq(root)).get
+    val listed = FileSchemas.list(s, Seq(root))
     val index = FileSchemas.read(s, Seq(root)).queryExecution.analyzed
       .collectFirst { case graft.plans.FileLeaf(_, fs, _) => fs.location }.get
-    assert(listed.entries.nonEmpty)
-    assert(listed.entries.sortBy(_.line) === FileSchemas.entriesOf(index).sortBy(_.line))
-    assert(listed.fingerprint === graft.plans.Freshness.ofIndex(index))
+    assert(listed.nonEmpty)
+    assert(listed.forall(e => new org.apache.hadoop.fs.Path(e.path).getName.startsWith("part-")),
+      listed)
+    assert(listed.sortBy(_.line) === FileSchemas.entriesOf(index).sortBy(_.line))
+    assert(FileSchemas.fingerprint(listed) === graft.plans.Freshness.ofIndex(index))
+  }
+
+  test("a hit read, a compaction and a stale stats check list a partitioned directory once") {
+    val s = session
+    import s.implicits._
+    s.sparkContext.hadoopConfiguration.set("fs.graftfs.impl", classOf[GraftTestFs].getName)
+    val dir = "graftfs:" + tempDir("fs_listings") + "/t"
+    def write(ids: Seq[Long], mode: String): Unit = ids.map(i => (i, i * 2.0, i % 4))
+      .toDF("id", "v", "k").write.mode(mode).partitionBy("k").parquet(dir)
+    write(1L to 40L, "error")
+    val dirs = 5 // the root and k=0..3
+    def listings(body: => Unit): Long = {
+      val before = GraftTestFs.listings.get()
+      body
+      GraftTestFs.listings.get() - before
+    }
+    FileSchemas.read(s, Seq(dir))
+    assert(listings(FileSchemas.read(s, Seq(dir))) === dirs, "hit read")
+    // the compacted copy goes to the local filesystem, which is not counted
+    assert(listings(graft.sources.TabularWriter.compact(s, dir, tempDir("fs_compacted") + "/c"))
+      === dirs, "compact")
+    graft.plans.TableStats.analyzePathIfMissing(s, dir, Seq("id"))
+    write(41L to 48L, "append")
+    FileSchemas.read(s, Seq(dir)) // the schema entry follows the append; the stats do not
+    val stale = graft.plans.TableStats.lookup(s, dir).get
+    val fresh = listings {
+      assert(graft.plans.TableStats.analyzePathIfMissing(s, dir, Seq("id")).rowCount === 48L)
+    }
+    assert(stale.rowCount === 40L)
+    assert(fresh === dirs, "stale analyzePathIfMissing")
+  }
+
+  test("a partition value that no longer fits the cached type reads as the uncached read") {
+    val s = session
+    import s.implicits._
+    val dir = tempDir("fs_partition_type") + "/t"
+    (1L to 20L).map(i => (i, i * 2.0, i % 2 + 1)).toDF("id", "v", "k")
+      .write.partitionBy("k").parquet(dir)
+    assert(FileSchemas.read(s, Seq(dir)).schema("k").dataType === IntegerType)
+    Seq((21L, 42.0)).toDF("id", "v").write.parquet(dir + "/k=abc")
+    assertSameAsUncached(FileSchemas.read(s, Seq(dir)), s.read.parquet(dir))
+    assert(FileSchemas.read(s, Seq(dir)).schema("k").dataType === StringType)
   }
 
   test("a marker, a checksum or a sidecar keeps the hit; a changed _common_metadata misses") {
@@ -234,9 +278,19 @@ class FileSchemasSpec extends GraftSpec {
 
   test("a missing path and an empty directory fail exactly as spark.read.parquet") {
     val s = session
+    import s.implicits._
     val missing = tempDir("fs_missing") + "/nope"
     val empty = tempDir("fs_empty")
-    Seq(missing, empty).foreach { p =>
+    // directories read once (so the cache holds an entry), then emptied or removed
+    val Seq(emptied, removed) = Seq("fs_emptied", "fs_removed").map { n =>
+      val d = tempDir(n) + "/t"
+      Seq((1L, 2.0)).toDF("k", "v").write.parquet(d)
+      assert(FileSchemas.read(s, Seq(d)).count() === 1L)
+      GateFixtures.deleteRecursively(Paths.get(d))
+      d
+    }
+    Files.createDirectory(Paths.get(emptied))
+    Seq(missing, empty, emptied, removed).foreach { p =>
       val expected = intercept[Exception](s.read.parquet(p))
       val got = intercept[Exception](FileSchemas.read(s, Seq(p)))
       assert(got.getClass === expected.getClass)

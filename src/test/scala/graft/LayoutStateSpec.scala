@@ -112,6 +112,37 @@ class LayoutStateSpec extends GraftSpec {
     } finally release(s)
   }
 
+  test("two withRegistered builds of an equal meta parse the rollup's measures once") {
+    val s = GraftSession.local("4")
+    val d = data(s)
+    val meta = stage(s, d)
+    // the measure parse optimizes one global `__m` aggregate per measure
+    val parses = new java.util.concurrent.atomic.AtomicInteger()
+    val countParses = new org.apache.spark.sql.catalyst.rules.Rule[
+        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
+      def apply(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) = {
+        if (plan.output.map(_.name) == Seq("__m")) parses.incrementAndGet()
+        plan
+      }
+    }
+    val extra = s.experimental.extraOptimizations
+    s.experimental.extraOptimizations = extra :+ countParses
+    try {
+      MaterializedAggs.deregister(s, Rollup)
+      def build(): Int = {
+        parses.set(0)
+        val q = MaterializedAggs.withRegistered(s, Seq(meta))(perKey(s, d))
+        assert(readsTable(q, Rollup))
+        parses.get()
+      }
+      assert(build() > 0, "the first build parses")
+      assert(build() === 0, "the second build of an equal meta parses again")
+    } finally {
+      s.experimental.extraOptimizations = extra
+      release(s)
+    }
+  }
+
   test("no rule under plans/ looks up the active session") {
     val found = SourceGuard.hits("getActiveSession", Set.empty,
       Paths.get("src", "main", "scala", "graft", "plans"))

@@ -350,6 +350,16 @@ class SourcesSpec extends GraftSpec {
 class GraftTestFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getScheme: String = "graftfs"
   override def getUri: java.net.URI = java.net.URI.create("graftfs:///")
+
+  override def listStatus(f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    GraftTestFs.listings.incrementAndGet()
+    super.listStatus(f)
+  }
+}
+
+object GraftTestFs {
+  /** `listStatus` calls on any `graftfs:` path, JVM-wide. */
+  val listings = new java.util.concurrent.atomic.AtomicLong(0L)
 }
 
 /** Object-store SEMANTICS over local disk: rename is never atomic —

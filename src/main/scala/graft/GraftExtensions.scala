@@ -1,15 +1,17 @@
 package graft
 
-import graft.functions.expressions.{DotProduct, PolyHash}
+import graft.functions.expressions.{GraftExpressions, NativeKernel}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.graftbridge.Bridge.{column, expression}
 
-/** SparkSessionExtensions registration: exposes the engine's native
-  * expressions to SQL (`SELECT graft_dot(a, b)`, `graft_poly_hash(s)`)
-  * and injects the engine's optimizer pass
-  * ([[graft.plans.CollapseIdempotent]]) — together the analog of the
-  * reference's custom-op registration + graph-rewriting surface
+/** SparkSessionExtensions registration: exposes two of the engine's
+  * native kernels to SQL (`SELECT graft_dot(a, b)`, `graft_poly_hash(s)`)
+  * and injects the engine's plan rewrites (the materialized join and
+  * aggregate rewrites, eager aggregation, stored-cents resolution) —
+  * together the analog of the reference's custom-op registration +
+  * graph-rewriting surface
   * (reference: hybridbackend/tensorflow/framework/view.py OperationLike,
   * framework/rewriting.py GraphRewriting; SURVEY §2.12). Activate with
   * `SparkSession.builder().withExtensions(new GraftExtensions)` or
@@ -26,7 +28,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // DISTINCT the rollup's key-set form also serves — the two rules
     // compose in either firing order)
     e.injectOptimizerRule(graft.plans.RewriteMaterializedAgg(_))
-    e.injectOptimizerRule(_ => graft.plans.CollapseIdempotent)
     e.injectOptimizerRule(graft.plans.EagerAggregation(_))
     // post-hoc resolution, NOT optimizer: must run before ColumnPruning
     // hides the stored column (see the rule's scaladoc)
@@ -36,11 +37,17 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         s"$name requires exactly $n argument(s), got ${args.length}")
     e.injectFunction((
       FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (args: Seq[Expression]) => { arity("graft_dot", 2)(args); DotProduct(args(0), args(1)) }))
+      new ExpressionInfo(classOf[NativeKernel].getName, "graft_dot"),
+      (args: Seq[Expression]) => {
+        arity("graft_dot", 2)(args)
+        expression(GraftExpressions.dot_product(column(args(0)), column(args(1))))
+      }))
     e.injectFunction((
       FunctionIdentifier("graft_poly_hash"),
-      new ExpressionInfo(classOf[PolyHash].getName, "graft_poly_hash"),
-      (args: Seq[Expression]) => { arity("graft_poly_hash", 1)(args); PolyHash(args.head) }))
+      new ExpressionInfo(classOf[NativeKernel].getName, "graft_poly_hash"),
+      (args: Seq[Expression]) => {
+        arity("graft_poly_hash", 1)(args)
+        expression(GraftExpressions.poly_hash(column(args.head)))
+      }))
   }
 }

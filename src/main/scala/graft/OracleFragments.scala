@@ -11,7 +11,7 @@ import graft.operators.NearDup
 object OracleFragments {
 
   /** Polynomial char hash of a string-valued SQL expression; `mult`
-    * selects the hash family (mirrors PolyHash's multiplier). */
+    * selects the hash family (mirrors poly_hash's multiplier). */
   def polyHashSql(e: String, mult: Long = 31L): String =
     s"""list_reduce(list_prepend(CAST(0 AS BIGINT),
        |  list_transform(list_filter(string_to_array($e,''), c -> len(c) > 0),
@@ -195,7 +195,7 @@ object OracleFragments {
        |  list_transform(list_zip($a, $b), z -> (z[1]-z[2])*(z[1]-z[2]))), (p,x) -> p+x)""".stripMargin
 
   /** Integer-grid quantization CTE (name: iq) — floor(v[i]*scale) per
-    * dim, mirroring expressions.QuantizeVec. Expects the `e` CTE from
+    * dim, mirroring expressions.GraftExpressions.quantize_vec. Expects the `e` CTE from
     * [[vectorCtes]]. */
   def quantizeCte(scale: Double): String =
     s"""iq AS (SELECT vec_id, list_transform(v, x -> CAST(floor(x * $scale) AS BIGINT)) AS q

@@ -23,7 +23,7 @@ object TextFunctions {
   def tokenize(text: Column): Column = split(text, " ")
 
   /** `size(tokenize(text))` without materializing the token array —
-    * native byte-scan kernel ([[expressions.TokenCount]]); identical
+    * native byte-scan kernel ([[expressions.GraftExpressions.token_count]]); identical
     * value for every input (EquivalenceSpec). */
   def tokenCount(text: Column): Column = expressions.GraftExpressions.token_count(text)
 
@@ -33,7 +33,7 @@ object TextFunctions {
 
   /** Corpus text scrub in one native pass: NFC normalization, C0/DEL
     * controls → space, space-run collapse, trim
-    * ([[expressions.CleanText]]). */
+    * ([[expressions.GraftExpressions.clean_text]]). */
   def cleanText(text: Column): Column = expressions.GraftExpressions.clean_text(text)
 
   /** Characters of a string as an array, with the zero-width artifacts
@@ -43,7 +43,7 @@ object TextFunctions {
   /** Polynomial rolling hash over the characters of a string:
     * fold(h = (h*31 + codepoint) mod P). Deterministic, order-sensitive —
     * the document-fingerprinting primitive. Native codegen'd expression
-    * ([[expressions.PolyHash]]); [[polyHashHof]] is the equivalent
+    * ([[expressions.GraftExpressions.poly_hash]]); [[polyHashHof]] is the equivalent
     * built-in formulation kept as its semantic spec. */
   def polyHash(s: Column): Column = expressions.GraftExpressions.poly_hash(s)
 
@@ -85,7 +85,7 @@ object TextFunctions {
 
   /** Quality score in [0,1]: type-token ratio + stopword presence +
     * length saturation. Fixed formula, scalar per row, engine-portable.
-    * Native one-pass byte-scan kernel ([[expressions.QualityScore]]);
+    * Native one-pass byte-scan kernel ([[expressions.GraftExpressions.quality_score]]);
     * [[qualityScoreCols]] is the column formulation kept as its
     * bit-identical semantic spec (EquivalenceSpec fuzz). */
   def qualityScore(text: Column): Column =
@@ -105,7 +105,7 @@ object TextFunctions {
     * corpus is synthetic English-ish text, so this mostly asserts the
     * deterministic plumbing; real language ID would swap in per-language
     * marker sets here. Native byte-scan marker counter
-    * ([[expressions.StopwordCount]] — the filter-HOF it replaces is
+    * ([[expressions.GraftExpressions.stopword_count]] — the filter-HOF it replaces is
     * interpreted per element); [[languageIdCols]] is its spec. */
   def languageId(text: Column): Column =
     when(expressions.GraftExpressions.stopword_count(text, StopwordsEn) > 0,
@@ -155,7 +155,7 @@ object TextFunctions {
   val Ipv4Re = "([0-9]{1,3}\\.){3}[0-9]{1,3}"
   val PhoneRe = "\\+?\\(?[0-9][0-9()./ -]{6,}[0-9]"
 
-  /** Native byte-scanner kernel ([[expressions.RedactPii]]); the regex
+  /** Native byte-scanner kernel ([[expressions.GraftExpressions.redact_pii]]); the regex
     * chain [[redactPiiRegex]] is its semantic spec (EquivalenceSpec
     * fuzz-verifies bit-identity). */
   def redactPii(text: Column): Column = expressions.GraftExpressions.redact_pii(text)
@@ -189,7 +189,7 @@ object TextFunctions {
     * hashing, bucket arithmetic, exact integer accumulation, the
     * sigmoid at the end — is the real scoring path. Row-local, zero
     * shuffle, one native byte-scan-ish pass per doc
-    * ([[expressions.LinearLogit]]); [[classifierLogitCols]] is the
+    * ([[expressions.GraftExpressions.linear_logit]]); [[classifierLogitCols]] is the
     * built-in column formulation kept as its bit-identical spec. */
   def classifierLogitMilli(text: Column, buckets: Int): Column =
     expressions.GraftExpressions.linear_logit(tokenize(text), buckets)

@@ -13,7 +13,7 @@ object VectorFunctions {
   /** Cast an array<float> to array<double> for stable arithmetic. */
   def toDouble(v: Column): Column = transform(v, _.cast("double"))
 
-  /** Native codegen'd dot product ([[expressions.DotProduct]]); same
+  /** Native codegen'd dot product ([[expressions.GraftExpressions.dot_product]]); same
     * left-to-right accumulation as the HOF fold it replaces. */
   def dot(a: Column, b: Column): Column =
     expressions.GraftExpressions.dot_product(a, b)

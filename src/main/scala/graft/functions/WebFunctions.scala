@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * upstream step).
   *
   * Scale design: [[host]] and [[normalizeUrl]] are native byte-scan
-  * kernels ([[graft.functions.expressions.UrlHost]]/[[graft.functions.expressions.UrlNormalize]])
+  * kernels ([[graft.functions.expressions.GraftExpressions.url_host]]/[[graft.functions.expressions.GraftExpressions.url_normalize]])
   * — ONE codegen'd call each. The original regexp-Column chains (kept
   * below as `hostCols`/`normalizeUrlCols` for the equivalence spec)
   * duplicated into union branches and window-sort stages until the

@@ -312,7 +312,7 @@ object VecUtil {
   def interleaveBits(x: Long, y: Long): Long =
     spread31(x) | (spread31(y) << 1)
 
-  /** [[gramHashes]] boxed for the PositionalShingleHashes expression. */
+  /** [[gramHashes]] boxed for the positional_shingle_hashes expression. */
   def positionalShingleHashes(tokens: ArrayData, n: Int): ArrayData = {
     val hs = gramHashes(tokens, n)
     if (hs == null) null

@@ -370,7 +370,7 @@ object TextGates {
       val merges = operators.Bpe.train(docs, col("text"), numMerges = 40)
       // STAGED projections so the encode kernel runs ONCE per row: the
       // old single-projection form referenced `toks` three times
-      // (detok, and size twice) and Catalyst inlined the BpeEncode call
+      // (detok, and size twice) and Catalyst inlined the bpe_encode call
       // into every use — the gate measured 3× the encode cost (31.8 vs
       // 11.4 s at x200; PERF.md "Round-8: regression scorecard").
       // Multi-referenced non-cheap aliases survive CollapseProject

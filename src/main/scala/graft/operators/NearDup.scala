@@ -143,7 +143,7 @@ object NearDup {
   /** MinHash signatures from raw token arrays: (doc_id, m0..m{k-1}) —
     * min over n-gram shingles of (a_i * polyHash(shingle) + b_i) mod P
     * per permutation, computed by the fused native kernel
-    * ([[graft.functions.expressions.MinHashSigs]]): one codegen'd pass
+    * ([[graft.functions.expressions.GraftExpressions.minhash_sigs]]): one codegen'd pass
     * per doc, no shingle strings materialized, NO shuffle. Docs with
     * fewer than n tokens yield no signature (kernel returns null) —
     * same doc set as the shingle-set formulation. */
@@ -389,7 +389,7 @@ object NearDup {
     * vary.
     *
     * Computed entirely row-locally by the native codegen'd
-    * [[graft.functions.expressions.SimHash60]] kernel — a narrow map
+    * [[graft.functions.expressions.GraftExpressions.sim_hash60]] kernel — a narrow map
     * over (doc, token-array), NO explode and NO shuffle: per-doc state
     * is one long. The aggregate formulation ([[simHashAgg]]) is kept as
     * the semantic spec; EquivalenceSpec asserts bit-identity. */
@@ -454,7 +454,7 @@ object NearDup {
     *
     * Scale design — no suffix array, three relational passes that all
     * scale out: (1) positional gram hashes computed row-locally by the
-    * codegen'd [[graft.functions.expressions.PositionalShingleHashes]]
+    * codegen'd [[graft.functions.expressions.GraftExpressions.positional_shingle_hashes]]
     * kernel, then one posexplode; (2) cross-doc grams found with a
     * map-side-combinable min/max-doc aggregate on the 8-byte hash (NOT
     * countDistinct — min(doc)!=max(doc) detects "≥2 distinct docs"
@@ -512,7 +512,7 @@ object NearDup {
     * island-id prefix sum, both partitioned by doc), islands collect to
     * one sorted per-doc interval list (row-local size — the same order
     * as the token array itself), and the codegen'd
-    * [[graft.functions.expressions.ExciseSpans]] kernel rebuilds the
+    * [[graft.functions.expressions.GraftExpressions.excise_spans]] kernel rebuilds the
     * text in one merge-scan. Docs with nothing to excise pass through
     * untouched via the left join's null arm.
     */
@@ -566,7 +566,7 @@ object NearDup {
     * an empty clean_text, letting callers decide its fate.
     *
     * Scale design: occurrences are exploded once and exchanged by the
-    * 8-byte [[graft.functions.expressions.PolyHash]] of the line (never
+    * 8-byte [[graft.functions.expressions.GraftExpressions.poly_hash]] of the line (never
     * the line text as key); cross-doc sharing is the same streamed
     * min/max-doc window trick as [[duplicatedSpans]] (min(doc) ≠
     * max(doc) ⇔ ≥2 distinct holders — mergeable state, no

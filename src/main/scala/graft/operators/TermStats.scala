@@ -80,7 +80,7 @@ object TermStats {
     * unusual text.
     *
     * Parity/scale design: bigrams travel as mod-P hashes from the
-    * row-local [[graft.functions.expressions.BigramHashPairs]] kernel
+    * row-local [[graft.functions.expressions.GraftExpressions.bigram_hash_pairs]] kernel
     * (no gram strings, no token-level joins); each occurrence's log
     * probability is rounded to integer nano-logs
     * (round(ln(p) * 1e9) as BIGINT, the [[tfIdfTopTerms]] libm-parity

@@ -361,7 +361,7 @@ object TabularReader {
     * (and REJECTS when the file carries the FLOAT16 logical annotation —
     * `[PARQUET_TYPE_ILLEGAL]`, documented in [[TypedParquet]]); a binary
     * file column declared FloatType is decoded as little-endian IEEE
-    * half via the native codegen'd [[graft.functions.expressions.HalfToFloat]]
+    * half via the native codegen'd [[graft.functions.expressions.GraftExpressions.half_to_float]]
     * (reference: hybridbackend/common/arrow.cc:48-73). */
   private def isHalfLayout(file: DataType, declared: DataType): Boolean = (file, declared) match {
     case (BinaryType, FloatType) => true

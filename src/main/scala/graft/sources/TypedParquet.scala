@@ -83,7 +83,7 @@ object TypedParquet {
     * SourcesSpec — so the readable layout (and the default here) is the
     * unannotated FLBA(2) form, which Spark surfaces as binary and
     * [[graft.sources.TabularReader]] decodes via the float16 dtype
-    * mapping ([[graft.functions.expressions.HalfToFloat]]). */
+    * mapping ([[graft.functions.expressions.GraftExpressions.half_to_float]]). */
   def writeFloat16(path: String, n: Long, halfOf: Long => Float, annotate: Boolean = false): Unit = {
     val withId = Types.buildMessage().required(INT64).named("id")
     val half = withId.required(FIXED_LEN_BYTE_ARRAY).length(2)
